@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
+import org.json4s.{JDouble, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** Post-execution shuffle accounting for Bench: walk the FINAL
   * executed plan (through AQE's adaptive root, materialized query
@@ -55,10 +59,8 @@ private object ShuffleBytes {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
-    val spark = Sessions.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     // Optional sketch-path bench (SURVEY §4's graft.scale.approx): the
     // registered wrappers read the conf per query, so one env var
     // benches the 100 TB posture against the exact default.
@@ -72,17 +74,13 @@ object Bench {
     // scaling separates from fixed-parallelism artifacts.
     sys.env.get("SPARK_GRAFT_PARTITIONS").filter(_.nonEmpty)
       .foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    // Warm the session (scheduler, codegen compiler, parquet reader
-    // init) so the first timed query doesn't absorb ~4 s of one-time
-    // startup that has nothing to do with its plan.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // Guarded: a missing table must surface as per-query errors below,
-    // not abort the run before any JSON is emitted.
+    // Warm the parquet reader. Guarded: a missing table must surface
+    // as per-query errors below, not abort the run before any JSON is
+    // emitted.
     try spark.read.parquet(s"$sfDir/nation.parquet").limit(1).collect()
     catch { case _: Throwable => () }
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val shuffles = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Previous committed record (same sf only): the baseline for the
     // end-of-run isolation re-time pass. Round 10 showed 1.3-1.6x
     // full-suite drift on code-untouched queries that vanished when
@@ -91,107 +89,49 @@ object Bench {
     // AFTER the suite and the re-time ships in bench_full.json's
     // "isolated" map, separating real regressions from noise without
     // a manual workflow. Read BEFORE this run overwrites the file.
-    val prevRecord: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-      if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-      else {
-        val qs = txt.indexOf("\"queries\":{")
-        val qe = txt.indexOf("}", qs)
-        txt.substring(qs + "\"queries\":{".length, qe).split(",")
-          .flatMap { kv =>
-            kv.split(":", 2) match {
-              case Array(k, v) =>
-                try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-                catch { case _: NumberFormatException => None }
-              case _ => None
-            }
-          }.toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    val record = Paths.get("bench_full.json")
+    val prevRecord: Map[String, Double] =
+      try prevTimings(new String(Files.readAllBytes(record), "UTF-8"), sfDir)
+      catch { case _: Throwable => Map.empty }
     // A silent parser mismatch would read as "no regressions flagged"
     // — make an empty parse visible when the file exists (stderr; the
     // driver parses raw stdout only).
-    if (prevRecord.isEmpty &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get("bench_full.json")))
+    if (prevRecord.isEmpty && Files.exists(record))
       System.err.println(
         "WARNING: bench_full.json exists but no previous timings parsed " +
           "(different sf, or format drift) — isolation re-time pass disabled")
-    // Optional comma-separated allowlist for local iteration (the
-    // round driver never sets it → full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // "" (e.g. unset shell var) = no filter, not "run nothing"
-    // A typo'd name must not read as a vacuous green run (stderr — the
-    // driver parses raw stdout for the JSON line).
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        System.err.println(s"WARNING: SPARK_GRAFT_ONLY names not registered: ${unknown.mkString(",")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        var best = Double.MaxValue
-        var i = 0
-        while (i < repeat) {
-          val t0 = System.nanoTime()
-          // Materialize every row through the full physical plan —
-          // `df.count()` alone would let Parquet answer from footer
-          // metadata and prune all columns, benchmarking a no-op.
-          val df = fn(spark, sfDir)
-          df.queryExecution.toRdd.count()
-          val s = (System.nanoTime() - t0) / 1e9
+    val registry = SparkEntry.queries
+    // A crashed query must not masquerade as a fast run: no timing
+    // entry, an explicit error record, and a nonzero exit below.
+    val errors = Runner.foreachQuery(spark, Runner.select(registry)) { (name, fn) =>
+      // Materialize every row through the full physical plan —
+      // `df.count()` alone would let Parquet answer from footer
+      // metadata and prune all columns, benchmarking a no-op.
+      timings(name) = Runner.minSeconds(spark, repeat,
+        () => { val df = fn(spark, sfDir); df.queryExecution.toRdd.count(); df }) {
+        (i, df, s) =>
           // Shuffle volume of this run's executed plan (outside the
           // timed region; identical run to run absent AQE re-plans,
           // so last-run is as good as min).
           val sb = ShuffleBytes.of(df)
-          System.err.println(f"BENCHQ $name run${i + 1} $s%.3f shuffleMB ${sb / 1e6}%.1f")
+          System.err.println(f"BENCHQ $name run$i $s%.3f shuffleMB ${sb / 1e6}%.1f")
           shuffles(name) = sb
-          if (s < best) best = s
-          i += 1
-          // Queries are independent: drop whatever blocks this run
-          // persisted (cache() / localCheckpoint) so storage doesn't
-          // accumulate across runs and queries and tax later timings.
-          // Outside the timed region either way.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-        timings(name) = best
-      } catch { case e: Throwable =>
-        // A crashed query must not masquerade as a fast run: no timing
-        // entry, an explicit error record, and a nonzero exit below.
-        errors(name) = e.getClass.getSimpleName
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
       }
-    }
+    }.map { case (name, e) => name -> e.getClass.getSimpleName }
     // Isolation re-time pass: flagged queries re-run min-of-2 on the
     // now-idle JVM (everything else finished — the manual §6 noise
     // workflow, automated). The suite timing stays the committed
     // number; "isolated" records what the query costs without
     // run-order neighbors.
     val isolated = scala.collection.mutable.LinkedHashMap[String, Double]()
-    timings.foreach { case (name, v) =>
-      prevRecord.get(name).filter(p => v > p * 1.3).foreach { p =>
-        try {
-          var best = Double.MaxValue
-          var i = 0
-          while (i < repeat.max(2)) {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-            val s = (System.nanoTime() - t0) / 1e9
-            if (s < best) best = s
-            i += 1
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-          }
-          isolated(name) = best
-          System.err.println(
-            f"BENCHISO $name suite $v%.3f prev $p%.3f isolated $best%.3f")
-        } catch { case _: Throwable => () }
-      }
+    val flagged = timings.toSeq.flatMap { case (name, v) =>
+      prevRecord.get(name).filter(p => v > p * 1.3).map(p => name -> (v, p))
+    }
+    Runner.foreachQuery(spark, flagged) { case (name, (v, p)) =>
+      val best = Runner.minSeconds(spark, repeat.max(2),
+        () => registry(name)(spark, sfDir).queryExecution.toRdd.count())((_, _, _) => ())
+      isolated(name) = best
+      System.err.println(f"BENCHISO $name suite $v%.3f prev $p%.3f isolated $best%.3f")
     }
     // The committed number is min(suite, isolated): the isolation
     // re-time is the same min-of-N execution, just without 12+
@@ -206,22 +146,13 @@ object Bench {
       if (v < timings(name)) { suiteRaw(name) = timings(name); timings(name) = v }
     }
     val total = if (timings.nonEmpty) timings.values.sum else 0.0
-    val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    def obj(m: Iterable[(String, Any)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val es = obj(errors.map { case (k, v) => k -> ("\"" + v + "\"") })
     // Complete record → file (full precision, insertion order).
-    val fullQs = timings.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullRaw = suiteRaw.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullSh = shuffles.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullIso = isolated.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","repeat":$repeat,"queries":$fullQs,"shuffle_bytes":$fullSh,"isolated":$fullIso,"suite_raw":$fullRaw,"errors":$es,"sf":"$sfDir"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_full.json"),
-      (fullJson + "\n").getBytes("UTF-8"))
+      s"""{"metric":"total","value":$total,"unit":"sec","repeat":$repeat,"queries":${obj(timings)},"shuffle_bytes":${obj(shuffles)},"isolated":${obj(isolated)},"suite_raw":${obj(suiteRaw)},"errors":$es,"sf":"$sfDir"}"""
+    Files.write(record, (fullJson + "\n").getBytes("UTF-8"))
     // Compact line → stdout: slowest-first, ms precision, hard budget
     // under the driver's 2000-char tail capture.
     def fmt(v: Double): String = f"$v%.3f"
@@ -238,5 +169,16 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeat":$repeat,"queries":{$sb},"queries_omitted":$omitted,"isolated_n":${isolated.size},"full":"bench_full.json","errors":$es,"sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** The per-query timings of a previous `bench_full.json` record, or
+    * an empty map when that record was taken at a different `sfDir`. */
+  private[graft] def prevTimings(json: String, sfDir: String): Map[String, Double] = {
+    val rec = JsonMethods.parse(json)
+    (rec \ "queries") match {
+      case JObject(fields) if rec \ "sf" == JString(sfDir) =>
+        fields.collect { case (name, JDouble(secs)) => name -> secs }.toMap
+      case _ => Map.empty
+    }
   }
 }

@@ -36,24 +36,18 @@ object Rehearse {
       s"unknown probe(s) ${unknown.mkString(", ")}; available: ${probes.keys.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt.max(1)
-    val spark = Sessions.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect() // session warmup
-    val timings = names.map { name =>
-      var best = Double.MaxValue
-      (1 to repeat).foreach { i =>
-        val t0 = System.nanoTime()
-        probes(name)(spark, sfDir).queryExecution.toRdd.count()
-        val s = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"REHEARSE $name run$i $s%.3f")
-        best = math.min(best, s)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+    val spark = Runner.session()
+    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val errors = Runner.foreachQuery(spark, names.map(n => n -> probes(n))) { (name, probe) =>
+      timings(name) = Runner.minSeconds(spark, repeat,
+        () => probe(spark, sfDir).queryExecution.toRdd.count()) {
+        (i, _, s) => System.err.println(f"REHEARSE $name run$i $s%.3f")
       }
-      "\"" + name + "\":" + f"$best%.3f"
     }
-    println(s"""{"rehearse":{${timings.mkString(",")}},"sf":"$sfDir"}""")
+    errors.foreach { case (name, e) => System.err.println(s"REHEARSE $name failed: $e") }
+    println(timings.map { case (name, best) => "\"" + name + "\":" + f"$best%.3f" }
+      .mkString("""{"rehearse":{""", ",", s"""},"sf":"$sfDir"}"""))
     spark.stop()
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

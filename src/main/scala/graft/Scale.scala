@@ -135,6 +135,16 @@ object Scale {
     (array(offs.map(lit(_)).toIndexedSeq: _*), acc)
   }
 
+  /** [[twoPhaseRank]] reads each row's within-bucket index off
+    * monotonically_increasing_id's low 33 bits: a bucket of 2^33 rows
+    * or more would carry into the partition bits and corrupt ranks
+    * silently, so refuse it by name before any rank is built. */
+  private[graft] def checkRowIndexFits(perBucket: Array[(Int, Long)]): Unit =
+    perBucket.find(_._2 >= (1L << 33)).foreach { case (b, n) =>
+      throw new IllegalStateException(s"twoPhaseRank: bucket $b holds $n rows, " +
+        "past the 2^33-row index field of monotonically_increasing_id; raise `buckets`")
+    }
+
   /** Global dense row_number (1-based, column `__rank`) by the total
     * order `order`, without a single-partition window. Returns the
     * ranked frame (input columns + `__rank`) and the total row count
@@ -146,6 +156,7 @@ object Scale {
       if (buckets > 0) buckets else defaultBuckets(df), snapshotInput)
     val counts = b.groupBy(col("__bkt")).agg(count(lit(1)).as("__c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)) // ≤ buckets rows
+    checkRowIndexFits(counts)
     val (offArr, total) = offsetsOf(counts)
     // Partition == bucket on the frozen frame (__bkt IS the partition
     // id), so the within-bucket row number needs NO re-shuffle: the

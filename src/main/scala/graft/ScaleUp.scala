@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicates a testdata directory N×
@@ -57,9 +57,7 @@ object ScaleUp {
       }
     val n = nStr.toInt
     require(n >= 1, s"replicas must be >= 1, got $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
     def stride(t: String, key: String): Long =
@@ -119,13 +117,6 @@ object ScaleUp {
   }
 }
 
-/** Skew-corner generator for the stratified-sampling rehearsal:
-  * rewrites a documents table so ONE language dominates (default 90%
-  * of docs become 'en', deterministically by doc_id hash) — the
-  * distribution where a plain per-stratum window funnels ~the whole
-  * corpus through one task and the grouped two-phase rank
-  * ([[Scale.groupedTwoPhaseRank]]) keeps full parallelism. Usage:
-  * `runMain graft.SkewLang <inDir> <outDir> [dominantPct]`. */
 /** Skew-corner generator for the gram-keyed rehearsals (r17): plants
   * ONE shared 16-token run at the end of a fraction of documents
   * (default 30%, deterministically by doc_id hash), so the planted
@@ -142,9 +133,7 @@ object SkewGram {
     val outDir = args(1)
     val pct = args.lift(2).map(_.toInt).getOrElse(30)
     require(pct > 0 && pct <= 100, s"plantPct in (0,100], got $pct")
-    val spark = Sessions.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     val planted = (1 to 16).map(i => s"plantedboiler$i").mkString(" ")
     spark.read.parquet(s"$inDir/documents.parquet")
       .withColumn("text",
@@ -158,15 +147,20 @@ object SkewGram {
   }
 }
 
+/** Skew-corner generator for the stratified-sampling rehearsal:
+  * rewrites a documents table so ONE language dominates (default 90%
+  * of docs become 'en', deterministically by doc_id hash) — the
+  * distribution where a plain per-stratum window funnels ~the whole
+  * corpus through one task and the grouped two-phase rank
+  * ([[Scale.groupedTwoPhaseRank]]) keeps full parallelism. Usage:
+  * `runMain graft.SkewLang <inDir> <outDir> [dominantPct]`. */
 object SkewLang {
   def main(args: Array[String]): Unit = {
     val inDir = args(0)
     val outDir = args(1)
     val pct = args.lift(2).map(_.toInt).getOrElse(90)
     require(pct > 0 && pct <= 100, s"dominantPct in (0,100], got $pct")
-    val spark = Sessions.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     spark.read.parquet(s"$inDir/documents.parquet")
       .withColumn("lang",
         when(pmod(xxhash64(col("doc_id")), lit(100)) < pct, lit("en"))

@@ -1,34 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated allowlist for local iteration (the
-    // round driver never sets it → full dump). Same contract as Bench.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        System.err.println(s"WARNING: SPARK_GRAFT_ONLY names not registered: ${unknown.mkString(",")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    Runner.foreachQuery(spark, Runner.select(SparkEntry.queries)) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach { case (name, e) => System.err.println(s"[verify] $name failed: ${e.getMessage}") }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }

@@ -87,13 +87,6 @@ object TextF {
       .cast("double") / nullif(size(toks).cast("double"), lit(0.0))
   }
 
-  /** Mean token length in characters. */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-      nullif(size(toks).cast("double"), lit(0.0))
-  }
-
   /** round(x, 4) as floor(x·1e4 + 0.5)/1e4 — pure IEEE ops, identical
     * on every engine. Built-in round()s disagree when x sits exactly
     * on a half-way double: Spark's BigDecimal HALF_UP reads the full

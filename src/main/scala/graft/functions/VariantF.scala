@@ -17,47 +17,26 @@ import org.apache.spark.sql.functions._
   */
 object VariantF {
 
-  /** get_int semantics (save_CSV.py:73-87): integerValue, else
-    * microsValue, else decimalValue (parsed as float then truncated
-    * toward zero), else `value`, else 0.
-    */
-  def getIntVariant(mv: Column): Column = coalesce(
-    get_json_object(mv, "$.integerValue").cast("long"),
-    get_json_object(mv, "$.microsValue").cast("long"),
-    // int(float(x)) in Python truncates toward zero; cast double->long
-    // in Spark does too.
-    get_json_object(mv, "$.decimalValue").cast("double").cast("long"),
-    get_json_object(mv, "$.value").cast("double").cast("long"),
-    lit(0L)
-  )
-
-  /** get_float semantics (save_CSV.py:89-101): doubleValue, else
-    * decimalValue, else `value`, else 0.0. */
-  def getFloatVariant(mv: Column): Column = coalesce(
-    get_json_object(mv, "$.doubleValue").cast("double"),
-    get_json_object(mv, "$.decimalValue").cast("double"),
-    get_json_object(mv, "$.value").cast("double"),
-    lit(0.0)
-  )
-
   /** Extract a named key's variant object from a dims/metrics JSON map
     * column, e.g. `variantField(col("metricValues"), "CLICKS")`. */
   def variantField(mapJson: Column, key: String): Column =
     get_json_object(mapJson, s"$$.$key")
 
-  /** Parse a variant payload ONCE into a typed struct. Each
-    * `get_json_object` call above re-parses the JSON string (one
-    * Jackson parse per extracted key per row); in a hot path parse
-    * with this and run the fallback chains over struct fields —
-    * materialize the struct in its own projection so it isn't inlined
-    * per consumer. */
+  /** Parse a variant payload ONCE into a typed struct. A
+    * `get_json_object` per key would re-parse the JSON string (one
+    * Jackson parse per extracted key per row); parse with this and run
+    * the fallback chains over struct fields — materialize the struct
+    * in its own projection so it isn't inlined per consumer. */
   def parseVariant(mv: Column): Column =
     from_json(mv, org.apache.spark.sql.types.StructType(
       Seq("integerValue", "microsValue", "decimalValue", "doubleValue", "value")
         .map(org.apache.spark.sql.types.StructField(_,
           org.apache.spark.sql.types.StringType))))
 
-  /** get_int fallback chain over a [[parseVariant]] struct. */
+  /** get_int semantics (save_CSV.py:73-87) over a [[parseVariant]]
+    * struct: integerValue, else microsValue, else decimalValue (parsed
+    * as float then truncated toward zero — Python's int(float(x)) and
+    * Spark's double->long cast both truncate), else `value`, else 0. */
   def getIntFromStruct(v: Column): Column = coalesce(
     v.getField("integerValue").cast("long"),
     v.getField("microsValue").cast("long"),
@@ -65,7 +44,8 @@ object VariantF {
     v.getField("value").cast("double").cast("long"),
     lit(0L))
 
-  /** get_float fallback chain over a [[parseVariant]] struct. */
+  /** get_float semantics (save_CSV.py:89-101) over a [[parseVariant]]
+    * struct: doubleValue, else decimalValue, else `value`, else 0.0. */
   def getFloatFromStruct(v: Column): Column = coalesce(
     v.getField("doubleValue").cast("double"),
     v.getField("decimalValue").cast("double"),

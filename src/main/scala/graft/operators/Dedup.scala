@@ -120,9 +120,6 @@ object Dedup {
       .select(col("doc_id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
   }
 
-  def bandedSignatures(spark: SparkSession, dir: String): DataFrame =
-    bandedSignaturesOf(Tables.documents(spark, dir))
-
   /** One-pass LSH clustering: docs sharing any band bucket take the
     * bucket's min doc_id as cluster id; singletons keep their own id.
     * Shuffles on (band, band_hash) then doc_id only. The bucket min is

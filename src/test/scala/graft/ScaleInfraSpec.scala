@@ -191,6 +191,13 @@ class ScaleInfraSpec extends AnyFunSuite with SparkFixture {
       Seq(col("v"), col("id"))).collect().isEmpty)
   }
 
+  test("twoPhaseRank refuses a bucket that reaches the 2^33-row index field") {
+    Scale.checkRowIndexFits(Array(0 -> 5L, 1 -> ((1L << 33) - 1)))
+    val e = intercept[IllegalStateException](
+      Scale.checkRowIndexFits(Array(0 -> 1L, 3 -> (1L << 33))))
+    assert(e.getMessage.contains("bucket 3") && e.getMessage.contains("2^33"))
+  }
+
   test("two-phase helpers survive empty and constant-key inputs") {
     val empty = Seq.empty[(Long, Double)].toDF("id", "v")
     val (er, en) = Scale.twoPhaseRank(empty, Seq(col("v"), col("id")))
