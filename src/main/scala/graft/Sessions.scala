@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * it.
   *
   * On a multi-executor cluster, iterative operators whose lineage is
-  * TRUNCATED each round — pagerank / personalizedPagerank (Graph),
-  * Components.connectedComponents, Tokenizer.bpeMergesOf — lose the
+  * TRUNCATED each round — the Graph.integerPagerank users, every
+  * operators.Fixpoint.iterate loop, Tokenizer.bpeMergesOf — lose the
   * recompute path when an executor holding a block dies: past
   * iterations can't be replayed from a truncated lineage, and the job
   * fails over to a full restart. At cluster scale either (a) set

@@ -21,18 +21,9 @@ import graft.sources.Tables
   * [[graft.Sessions]]' checkpoint policy). Rounds are bounded by
   * the graph diameter, which for near-dup clusters is tiny; `maxIter`
   * is a runaway guard, and convergence is detected distributedly (a
-  * 1-row count of changed labels per round).
+  * 1-row count of changed labels per round — the [[Fixpoint]] loop).
   */
 object Components {
-
-  /** Frees a localCheckpoint's persisted blocks (Dataset.unpersist
-    * only talks to the cache manager, which never held them —
-    * checkpoint storage hangs off the LogicalRDD's rdd). Shared with
-    * the other fixpoint-loop operators (Tokenizer's BPE trainer). */
-  private[operators] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** @param edges (a, b) undirected pairs; ids must be non-null
     * @param nodes (id) — every node that must appear in the output,
@@ -46,53 +37,31 @@ object Components {
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
                           maxIter: Int = 25): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    // Lazy checkpoints ([[graft.Sessions]]' policy): round 1's fused
-    // materialize-and-count job computes these on first use — the old
-    // eager form paid two up-front scheduling floors per closure.
+    // Lazy checkpoint ([[graft.Sessions]]' policy): round 1's fused
+    // materialize-and-count job computes it on first use.
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .localCheckpoint(false)
-    var checkpointed = nodes.select(col("id"), col("id").as("component"))
-      .localCheckpoint(false)
-    var labels = checkpointed
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    val run = Fixpoint.iterate(
+        nodes.select(col("id"), col("id").as("component")), maxIter) { (labels, _) =>
       val neighborMin = sym
         .join(labels.select(col("id").as("b"), col("component").as("nlbl")), "b")
         .groupBy(col("a").as("id")).agg(min("nlbl").as("nmin"))
-      // LAZY checkpoint + ONE aggregate action: the count of changed
-      // labels materializes (and persists) the round's blocks AND
-      // answers convergence in the same job — the old eager
-      // checkpoint-then-probe shape paid two scheduling floors per
-      // round for the same information (r18 optimization round;
-      // VERDICT r17's "fuse the convergence check into the
-      // materialization action").
-      val next = labels.join(neighborMin, Seq("id"), "left")
+      labels.select("id", "component").join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nmin"), col("component")))
             .as("component"),
           (col("nmin") < col("component")).as("changed"))
-        .localCheckpoint(false)
-      converged = next.agg(count(when(col("changed"), lit(1))).as("nc"))
-        .first().getLong(0) == 0L
-      // The new checkpoint supersedes the old one — free its blocks
-      // now instead of waiting for the ContextCleaner's GC cycle
-      // (GraphX's Pregel loop unpersists the same way).
-      freeCheckpoint(checkpointed)
-      checkpointed = next
-      labels = next.select("id", "component")
-      iter += 1
     }
-    if (!converged)
+    if (!run.converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — graph " +
           "diameter exceeds the bound; raise maxIter")
     // The final labels read from the last checkpoint only (truncated
     // lineage), so the edge list's blocks can go too.
-    freeCheckpoint(sym)
-    labels
+    Fixpoint.freeCheckpoint(sym)
+    run.state.select("id", "component")
   }
 
   /** Near-dup clusters with TRANSITIVE closure: components over the

@@ -134,7 +134,7 @@ object CorpusReleasePipeline {
       Sinks.writeJsonl(
         funnel.toDF().coalesce(1).orderBy("ord"), manifestPath)
       RunResult(funnel, splitCounts, nSeqs, s"$outDir/release", manifestPath)
-    } finally checkpoints.foreach(Components.freeCheckpoint)
+    } finally checkpoints.foreach(Fixpoint.freeCheckpoint)
   }
 
   /** The pipeline as a REGISTERED query (round-16, VERDICT r15 #6):

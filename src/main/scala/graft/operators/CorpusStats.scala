@@ -1963,8 +1963,9 @@ object CorpusStats {
   /** TextRank keyword extraction (Mihalcea-Tarau '04): PageRank over
     * the word co-occurrence graph — [[skipgramPairsOf]] builds the
     * edges (±`window` token pairs on the STOPWORD-FILTERED sequence,
-    * the TextRank convention), [[graft.operators.Graph.pagerankOf]]'s
-    * exact-integer damped iteration ranks them, top-k publish. The
+    * the TextRank convention), the exact-integer damped iteration
+    * [[graft.operators.Graph.pagerankOf]] runs
+    * ([[Graph.integerPagerank]]) ranks them, top-k publish. The
     * corpus-level sibling of [[tfidfTopTermsOf]]: tf-idf scores a
     * term by its own counts; TextRank scores it by the COMPANY it
     * keeps — a term bridging many frequent contexts outranks a
@@ -1986,7 +1987,6 @@ object CorpusStats {
                          k: Int = 20): DataFrame = {
     require(window >= 1 && iterations > 0 && k > 0,
       s"need window/iterations/k positive, got $window/$iterations/$k")
-    val scale = 1000000000000L
     val stop = graft.operators.TextAnalysis.Stopwords
     val toks = docs
       .select(filter(TextF.tokens(col("text")),
@@ -2010,41 +2010,13 @@ object CorpusStats {
         col("cp").as("w"))
       .union(pairs.select(col("w2").as("src"), col("w1").as("dst"),
         col("cp").as("w")))
-    val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-    val edgeOut = edges.join(outw, "src").localCheckpoint(false)
+    val edgeOut = Graph.withOutWeight(edges)
     val nodes = edgeOut.select(col("src").as("token")).distinct()
       .localCheckpoint(false) // symmetric edges: every node is a src
-    val nDf = nodes.agg(count(lit(1)).as("nn")) // 1 row
-    // Loop-invariant teleport hoisted onto one checkpointed base frame
-    // ([[graft.operators.Graph.pagerankOf]]'s r18 shape — one
-    // broadcast job total instead of one per iteration).
-    val base = nodes.crossJoin(broadcast(nDf))
-      .select(col("token"),
-        expr(s"(15 * ${scale}L) div (100 * nn)").as("tele"),
-        expr(s"${scale}L div nn").as("rq"))
-      .localCheckpoint(false)
-    var rank = base.select(col("token"), col("rq"))
-    for (_ <- 1 to iterations) {
-      val inflow = rank
-        .join(edgeOut, rank("token") === edgeOut("src"))
-        .select(col("dst"), expr("CAST((CAST(rq AS DECIMAL(38,0)) * w) div ow AS BIGINT)")
-          .as("contrib"))
-        .groupBy("dst")
-        .agg(sum("contrib").as("inflow"))
-      rank = base
-        .join(inflow, col("token") === col("dst"), "left")
-        .select(col("token"), col("tele"),
-          coalesce(col("inflow"), lit(0L)).as("infl"))
-        .select(col("token"),
-          (col("tele") + expr("(85 * infl) div 100")).as("rq"))
-        .localCheckpoint(false)
-    }
-    rank
+    Graph.integerPagerank(edgeOut, Graph.uniformBase(nodes), iterations)
       .orderBy(col("rq").desc, col("token"))
       .limit(k)
-      .select(col("token"), col("rq"),
-        (floor(col("rq").cast("double") / lit(1e12) * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("score"))
+      .select(col("token"), col("rq"), Graph.massShare(col("rq")).as("score"))
   }
 
   def textrankKeywords(spark: SparkSession, dir: String): DataFrame =

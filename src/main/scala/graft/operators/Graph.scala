@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,6 +13,17 @@ import graft.sources.Tables
   * lives in [[Components]]; this adds centrality (global and
   * seed-personalized PageRank), structure (degree/strength/reciprocity
   * profiles), and clustering (oriented triangle counts).
+  *
+  * Three shared pieces carry every operator here:
+  *  - [[transitions]], the one fact→edge pass: (item, src) for
+  *    consecutive events per user. Each caller adds its own filter
+  *    (the simple-graph operators drop self-transitions) and its own
+  *    group/distinct step.
+  *  - [[integerPagerank]], the one exact-integer PageRank loop
+  *    (PageRank, personalized PageRank, [[CorpusStats]]' TextRank).
+  *  - [[Fixpoint.iterate]], the one run-to-convergence loop (the
+  *    [[Components]] closure, the diameter sweeps, pivot SCC reaches).
+  *    Fixed-count loops stay plain `for` loops over their kernels.
   *
   * Scale design (100 TB): the fact table collapses to a weighted edge
   * list FIRST (one user-keyed window + one map-side-combinable edge
@@ -41,79 +52,114 @@ object Graph {
 
   val Scale: Long = 1000000000000L // 1e12: rank mass granularity
 
-  /** `iterations` rounds of damped PageRank over the item-transition
-    * graph; returns (item, rq, pr) where `rq` is the exact integer
-    * mass and pr = rq/1e12 rounded half-up to 6 dp. Lineage cuts are
-    * lazy localCheckpoints (see the measured experiment below and
-    * [[graft.Sessions]]' checkpoint-durability policy for the
-    * cluster-scale trade). */
-  def pagerankOf(events: DataFrame, iterations: Int = 10): DataFrame = {
-    require(iterations > 0, s"iterations must be positive, got $iterations")
+  /** (item, src) for every pair of consecutive events of one user,
+    * ordered by (ts, event_id): `item` is the event's `props.k` (0
+    * when absent), `src` the previous event's. Self-transitions
+    * (src = item) are kept. Column order is the window's own, so the
+    * projection adds nothing to the plans of the callers. */
+  private def transitions(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
+    events
       .select(col("user_id"),
         coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
           .as("item"),
         unix_micros(col("ts")).as("us"), col("event_id"))
       .withColumn("src", lag("item", 1).over(byUser))
       .filter(col("src").isNotNull)
-      .groupBy(col("src"), col("item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-    // The static per-iteration frame: (src, dst, w, ow), materialized
-    // once — every iteration re-reads it instead of re-planning the
-    // fact scan.
-    val edgeOut = edges.join(outw, "src").localCheckpoint(false)
-    val nodes = edgeOut.select(col("src").as("item"))
-      .union(edgeOut.select(col("dst").as("item")))
-      .distinct()
+      .select(col("item"), col("src"))
+  }
+
+  /** The static PageRank edge frame: (src, dst, w) plus each source's
+    * total out-weight `ow`, materialized once — every iteration
+    * re-reads it instead of re-planning the fact scan. */
+  private[operators] def withOutWeight(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy("src").agg(sum("w").as("ow")), "src")
       .localCheckpoint(false)
+
+  /** The classic base frame (key, tele, rq₀) over a node frame whose
+    * first column is the key: teleport (15·Scale) div (100·N) and
+    * start mass Scale div N for every node. The teleport is
+    * LOOP-INVARIANT, so it is computed once here instead of
+    * re-broadcasting N inside every iteration (r18 optimization round —
+    * each in-loop broadcast was its own driver collect job at
+    * DataFrame-construction time). */
+  private[operators] def uniformBase(nodes: DataFrame): DataFrame = {
     val nDf = nodes.agg(count(lit(1)).as("nn")) // 1 row by construction
-    // The teleport term (15·Scale) div (100·nn) is LOOP-INVARIANT:
-    // compute it once per node on a checkpointed base frame instead of
-    // re-broadcasting nDf inside every iteration (r18 optimization
-    // round — each in-loop broadcast(nDf) was its own driver collect
-    // job at DataFrame-construction time, `iterations` scheduling
-    // floors for a constant). Same integers, one broadcast total.
-    val base = nodes.crossJoin(broadcast(nDf))
-      .select(col("item"), expr(s"(15 * $Scale) div (100 * nn)").as("tele"),
+    nodes.crossJoin(broadcast(nDf))
+      .select(col(nodes.columns.head),
+        expr(s"(15 * $Scale) div (100 * nn)").as("tele"),
         expr(s"$Scale div nn").as("rq"))
       .localCheckpoint(false)
-    var rank = base.select(col("item"), col("rq"))
-    for (_ <- 1 to iterations) {
+  }
+
+  /** The one integer-PageRank kernel: `iterations` damped rounds over
+    * `edgeOut` (src, dst, w, ow) from `base` (key, tele, rq₀), each
+    * rq′ = tele + (85·Σ (rq·w) div ow) div 100. Returns (key, rq). */
+  private[operators] def integerPagerank(edgeOut: DataFrame, base: DataFrame,
+                                         iterations: Int): DataFrame = {
+    val key = base.columns.head
+    (1 to iterations).foldLeft(base.select(col(key), col("rq"))) { (rank, _) =>
       val inflow = rank
-        .join(edgeOut, rank("item") === edgeOut("src"))
+        .join(edgeOut, rank(key) === edgeOut("src"))
         .select(col("dst"), expr("CAST((CAST(rq AS DECIMAL(38,0)) * w) div ow AS BIGINT)")
           .as("contrib"))
         .groupBy("dst")
         .agg(sum("contrib").as("inflow"))
-      rank = base
-        .join(inflow, col("item") === col("dst"), "left")
-        .select(col("item"), col("tele"),
+      base
+        .join(inflow, col(key) === col("dst"), "left")
+        .select(col(key), col("tele"),
           coalesce(col("inflow"), lit(0L)).as("infl"))
-        .select(col("item"),
+        .select(col(key),
           (col("tele") + expr("(85 * infl) div 100")).as("rq"))
         // LAZY checkpoints: one job, lineage truncated at materialize.
         // Eager per-iteration checkpoints measured WORSE (8.1 s vs
         // 6.6 s at sf0.1) — ten scheduling floors beat ten plan reuses.
         .localCheckpoint(false)
     }
-    rank.select(col("item"), col("rq"),
-      (floor(col("rq").cast("double") / lit(1e12) * lit(1e6) + lit(0.5))
-        / lit(1e6)).as("pr"))
+  }
+
+  /** Integer rank mass rq rendered as rq/1e12 rounded half-up to 6 dp. */
+  private[operators] def massShare(rq: Column): Column =
+    floor(rq.cast("double") / lit(1e12) * lit(1e6) + lit(0.5)) / lit(1e6)
+
+  /** [[integerPagerank]] over the weighted item-transition graph from
+    * the base frame `base(nodes)`; returns (item, rq, pr). */
+  private def transitionPagerank(events: DataFrame, iterations: Int)
+                                (base: DataFrame => DataFrame): DataFrame = {
+    val edgeOut = withOutWeight(transitions(events)
+      .groupBy(col("src"), col("item").as("dst"))
+      .agg(count(lit(1)).as("w")))
+    val nodes = edgeOut.select(col("src").as("item"))
+      .union(edgeOut.select(col("dst").as("item")))
+      .distinct()
+      .localCheckpoint(false)
+    integerPagerank(edgeOut, base(nodes), iterations)
+      .select(col("item"), col("rq"), massShare(col("rq")).as("pr"))
       .orderBy("item")
+  }
+
+  /** `iterations` rounds of damped PageRank over the item-transition
+    * graph ([[integerPagerank]] from the uniform base); returns (item,
+    * rq, pr) where `rq` is the exact integer mass and pr = rq/1e12
+    * rounded half-up to 6 dp. Lineage cuts are lazy localCheckpoints
+    * (see the measured experiment in the kernel and
+    * [[graft.Sessions]]' checkpoint-durability policy for the
+    * cluster-scale trade). */
+  def pagerankOf(events: DataFrame, iterations: Int = 10): DataFrame = {
+    require(iterations > 0, s"iterations must be positive, got $iterations")
+    transitionPagerank(events, iterations)(uniformBase)
   }
 
   def pagerank(spark: SparkSession, dir: String): DataFrame =
     pagerankOf(Tables.events(spark, dir))
 
-  /** Personalized PageRank: [[pagerankOf]]'s exact-integer iteration
-    * with the TELEPORT mass restricted to a seed set (items with id <
-    * `seedBound`) — rank becomes "proximity to the seeds" instead of
-    * global centrality, the random-walk-with-restart behind
-    * item-to-item recommendation ("customers who touch THESE items
-    * navigate to…"). Arithmetic change is exactly one term: the base
-    * is (15·Scale) div (100·|S|) for seeds and ZERO elsewhere; every
+  /** Personalized PageRank: [[pagerankOf]] with the TELEPORT mass
+    * restricted to a seed set (items with id < `seedBound`) — rank
+    * becomes "proximity to the seeds" instead of global centrality,
+    * the random-walk-with-restart behind item-to-item recommendation
+    * ("customers who touch THESE items navigate to…"). Only the base
+    * frame differs: (15·Scale) div (100·|S|) teleport and Scale div
+    * |S| start mass for seeds, ZERO elsewhere; every
     * determinism/shape argument of [[pagerankOf]] carries over
     * verbatim. Non-seed sinks still accumulate walk mass; unreachable
     * nodes decay to exactly 0 (integer floor).
@@ -122,55 +168,17 @@ object Graph {
                              iterations: Int = 10): DataFrame = {
     require(iterations > 0 && seedBound > 0,
       s"need positive iterations/seedBound, got $iterations/$seedBound")
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull)
-      .groupBy(col("src"), col("item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-    val edgeOut = edges.join(outw, "src").localCheckpoint(false)
-    val nodes = edgeOut.select(col("src").as("item"))
-      .union(edgeOut.select(col("dst").as("item")))
-      .distinct()
-      .localCheckpoint(false)
-    val nSeed = nodes.filter(col("item") < seedBound)
-      .agg(count(lit(1)).as("ns")) // 1 row by construction
-    // Seed-restricted teleport is LOOP-INVARIANT ([[pagerankOf]]'s r18
-    // hoist): one checkpointed (item, tele, rq₀) base frame replaces
-    // the per-iteration broadcast(nSeed) crossJoin — same integers,
-    // one broadcast job instead of `iterations`+1.
-    val base = nodes.crossJoin(broadcast(nSeed))
-      .select(col("item"),
-        when(col("item") < seedBound,
-          expr(s"(15 * $Scale) div (100 * ns)")).otherwise(lit(0L)).as("tele"),
-        when(col("item") < seedBound, expr(s"$Scale div ns"))
-          .otherwise(lit(0L)).as("rq"))
-      .localCheckpoint(false)
-    var rank = base.select(col("item"), col("rq"))
-    for (_ <- 1 to iterations) {
-      val inflow = rank
-        .join(edgeOut, rank("item") === edgeOut("src"))
-        .select(col("dst"), expr("CAST((CAST(rq AS DECIMAL(38,0)) * w) div ow AS BIGINT)")
-          .as("contrib"))
-        .groupBy("dst")
-        .agg(sum("contrib").as("inflow"))
-      rank = base
-        .join(inflow, col("item") === col("dst"), "left")
-        .select(col("item"), col("tele"),
-          coalesce(col("inflow"), lit(0L)).as("infl"))
+    transitionPagerank(events, iterations) { nodes =>
+      val nSeed = nodes.filter(col("item") < seedBound)
+        .agg(count(lit(1)).as("ns")) // 1 row by construction
+      nodes.crossJoin(broadcast(nSeed))
         .select(col("item"),
-          (col("tele") + expr("(85 * infl) div 100")).as("rq"))
+          when(col("item") < seedBound,
+            expr(s"(15 * $Scale) div (100 * ns)")).otherwise(lit(0L)).as("tele"),
+          when(col("item") < seedBound, expr(s"$Scale div ns"))
+            .otherwise(lit(0L)).as("rq"))
         .localCheckpoint(false)
     }
-    rank.select(col("item"), col("rq"),
-      (floor(col("rq").cast("double") / lit(1e12) * lit(1e6) + lit(0.5))
-        / lit(1e6)).as("pr"))
-      .orderBy("item")
   }
 
   def personalizedPagerank(spark: SparkSession, dir: String): DataFrame =
@@ -186,14 +194,7 @@ object Graph {
     * node can be source-only or sink-only and must still report.
     */
   def graphDegreesOf(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull)
+    val edges = transitions(events)
       .groupBy(col("src"), col("item").as("dst"))
       .agg(count(lit(1)).as("w"))
       .localCheckpoint(false) // out agg + in agg + both reciprocity sides
@@ -333,14 +334,7 @@ object Graph {
     */
   def hitsOf(events: DataFrame, iterations: Int = 2): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull)
+    val edges = transitions(events)
       .groupBy(col("src"), col("item").as("dst"))
       .agg(count(lit(1)).as("w"))
       .localCheckpoint(false) // static frame, every half-iteration re-reads
@@ -406,18 +400,12 @@ object Graph {
     * per iteration (the PageRank loop's contract).
     */
   def lpaCommunitiesOf(events: DataFrame, iterations: Int = 2): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val directed = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+    val und = transitions(events)
+      .filter(col("src") =!= col("item"))
       .groupBy(least(col("src"), col("item")).as("a"),
         greatest(col("src"), col("item")).as("b"))
       .agg(count(lit(1)).as("w"))
-    lpaCommunitiesFromEdges(directed, iterations)
+    lpaCommunitiesFromEdges(und, iterations)
   }
 
   /** [[lpaCommunitiesOf]] from a pre-built weighted undirected edge
@@ -425,13 +413,13 @@ object Graph {
     * ([[modularityOf]], which needs it for the Q arithmetic anyway)
     * shares ONE fact scan instead of rebuilding the lag pass (r18
     * optimization round; within-one-query reuse, not cross-run
-    * caching). Identical label walk: the edge derivation here is
-    * textually the one [[lpaCommunitiesOf]] inlined. */
-  private[operators] def lpaCommunitiesFromEdges(directed: DataFrame,
+    * caching). Identical label walk: both callers derive `und` the
+    * same way from [[transitions]]. */
+  private[operators] def lpaCommunitiesFromEdges(und: DataFrame,
                                                  iterations: Int): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
-    val adj = directed.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .union(directed.select(col("b").as("u"), col("a").as("v"), col("w")))
+    val adj = und.select(col("a").as("u"), col("b").as("v"), col("w"))
+      .union(und.select(col("b").as("u"), col("a").as("v"), col("w")))
       .localCheckpoint(false) // static per-iteration frame
     var labels = adj.select(col("u").as("item")).distinct()
       .select(col("item"), col("item").as("label"))
@@ -482,22 +470,19 @@ object Graph {
     * mistake decayed scores for missing data.
     *
     * Shape: one user-keyed lag pass → the vocab-bounded weighted
-    * edge frame (checkpointed once); per iteration one rank⋈adj
-    * equijoin + one bounded aggregate + a 1-row max broadcast. */
+    * edge frame and its distinct node set (each checkpointed once;
+    * the start vector is one row per node by construction); per
+    * iteration one rank⋈adj equijoin + one bounded aggregate + a
+    * 1-row max broadcast. */
   def eigenvectorCentralityOf(events: DataFrame,
                               iterations: Int = 12): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val und = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+    val und = transitions(events)
+      .filter(col("src") =!= col("item"))
       .groupBy(least(col("src"), col("item")).as("a"),
         greatest(col("src"), col("item")).as("b"))
       .agg(count(lit(1)).as("w"))
+      .localCheckpoint(false) // both adjacency halves + the node set
     val bothDirs = und.select(col("a").as("u"), col("b").as("v"), col("w"))
       .union(und.select(col("b").as("u"), col("a").as("v"), col("w")))
     // The +I shift folds into a UNIT SELF-LOOP edge (w = 1) on the
@@ -507,16 +492,11 @@ object Graph {
     // join back to the rank frame — one extra shuffle × `iterations` —
     // disappears with bit-identical output. No (u,u) collision: the
     // edge derivation above drops self-transitions (src =!= item).
-    val nodes = bothDirs.select(col("u")).distinct()
+    val nodes = bothDirs.select(col("u")).distinct().localCheckpoint(false)
     val adj = bothDirs
       .union(nodes.select(col("u"), col("u").as("v"), lit(1L).as("w")))
       .localCheckpoint(false) // static per-iteration frame
-    // u = v rows ARE the node set (real edges dropped self-transitions
-    // above) — initialize rank off the checkpointed frame, not a
-    // second fact derivation.
-    var rank = adj.filter(col("u") === col("v"))
-      .select(col("u").as("item"), lit(1000000L).as("rq"))
-      .localCheckpoint(false)
+    var rank = nodes.select(col("u").as("item"), lit(1000000L).as("rq"))
     for (_ <- 1 to iterations) {
       val inflow = rank
         .join(adj, rank("item") === adj("v"))
@@ -541,19 +521,12 @@ object Graph {
     * dropped) every structural operator here shares — ONE derivation
     * ([[triangleCountOf]]'s, factored) so k-core, assortativity and
     * triangles can never disagree on what "the graph" is. */
-  private def undirectedEdges(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+  private def undirectedEdges(events: DataFrame): DataFrame =
+    transitions(events)
+      .filter(col("src") =!= col("item"))
       .select(least(col("src"), col("item")).as("a"),
         greatest(col("src"), col("item")).as("b"))
       .distinct()
-  }
 
   /** k-core decomposition (Seidman '83) at a fixed `k`: the maximal
     * subgraph where every surviving node keeps ≥ k distinct surviving
@@ -710,22 +683,16 @@ object Graph {
     * LPA itself re-runs inside (2 bounded iterations); at 100 TB the
     * label frame would be cached from the row-205 run instead. */
   def modularityOf(events: DataFrame, iterations: Int = 2): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val und = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+    val und = transitions(events)
+      .filter(col("src") =!= col("item"))
       .groupBy(least(col("src"), col("item")).as("a"),
         greatest(col("src"), col("item")).as("b"))
       .agg(count(lit(1)).as("w"))
       .localCheckpoint(false)
     // LPA walks the SAME weighted edge frame Q's arithmetic reads —
     // share the checkpoint instead of re-running the fact scan + lag
-    // window inside [[lpaCommunitiesOf]] (r18; derivations are
-    // textually identical, so the labels cannot differ).
+    // window inside [[lpaCommunitiesOf]] (r18; both derive it the same
+    // way from [[transitions]], so the labels cannot differ).
     val labels = lpaCommunitiesFromEdges(und, iterations)
     val m = und.agg(sum("w").as("m")) // 1 row
     val wIn = und
@@ -1097,6 +1064,23 @@ object Graph {
   def hubAblation(spark: SparkSession, dir: String): DataFrame =
     hubAblationOf(Tables.events(spark, dir))
 
+  /** Breadth-first sweep over `adj` (u, v) from `seed` (item) on the
+    * [[Fixpoint]] loop. The state is (item, dist, changed): round h
+    * adds the unreached neighbors of the last frontier (the changed
+    * rows) at dist h, so first-visit distance = BFS distance, and the
+    * sweep converges on the first round that adds nothing. */
+  private def bfs(adj: DataFrame, seed: DataFrame, maxIter: Int): Fixpoint.Result =
+    Fixpoint.iterate(seed.select(col("item"), lit(0L).as("dist"),
+        lit(true).as("changed")), maxIter) { (reached, h) =>
+      val next = adj
+        .join(reached.filter(col("changed")).select(col("item").as("u")), "u")
+        .select(col("v").as("item")).distinct()
+        .join(reached.select("item"), Seq("item"), "left_anti")
+      reached.select(col("item"), col("dist"), lit(false).as("changed"))
+        .union(next.select(col("item"), lit(h.toLong).as("dist"),
+          lit(true).as("changed")))
+    }
+
   /** Graph diameter estimate by DOUBLE-SWEEP BFS (Magnien-Latapy-
     * Habib '09 — the standard cheap lower bound: BFS from a
     * max-degree seed, then BFS again from the farthest node found;
@@ -1105,54 +1089,45 @@ object Graph {
     * catalog" scalar [[khopReachOf]]'s fixed-3-hop rings can't give,
     * and the sanity bound for every "k-hop covers everything" claim.
     *
-    * Each sweep is the [[khopReachOf]] frontier loop (distinct next
-    * frontier, left-anti against reached, lazy checkpoints) carrying
-    * first-visit distance = BFS distance; `maxIter` guards the loop
-    * the way [[itemGraphComponentsOf]]'s closure does, and both
-    * seeds break ties totally (degree DESC then id; distance DESC
-    * then id). Unreached components simply don't appear —
-    * `n_reached` beside [[itemGraphComponentsOf]]'s node count
-    * exposes that.
+    * Each sweep is [[bfs]] on the [[Fixpoint]] loop, and both seeds
+    * break ties totally (degree DESC then id; distance DESC then id).
+    * Unreached components simply don't appear — `n_reached` beside
+    * [[itemGraphComponentsOf]]'s node count exposes that.
+    *
+    * @throws IllegalStateException if a sweep finds a node more than
+    *         `maxIter` hops from its seed — a truncated sweep would
+    *         under-read the diameter silently. An eccentricity of
+    *         exactly `maxIter` passes (the sweep runs one more round to
+    *         see that nothing is left), matching the oracle's
+    *         `dist < 20` recursion step, which still admits dist = 20.
     *
     * Shape: per-iteration work is one vocab-bounded adjacency join;
-    * iteration count = the eccentricity itself (tiny on any
-    * small-world catalog). The oracle runs the same two sweeps as
-    * depth-capped recursive UNION CTEs folded by MIN(dist). */
+    * iteration count = the eccentricity + 1 (tiny on any small-world
+    * catalog). The oracle runs the same two sweeps as depth-capped
+    * recursive UNION CTEs folded by MIN(dist). */
   def diameterEstimateOf(events: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val und = undirectedEdges(events).localCheckpoint(false)
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint(false)
-    def bfs(seed: DataFrame): DataFrame = {
-      var reached = seed.withColumn("dist", lit(0L)).localCheckpoint(false)
-      var frontier = reached
-      var h = 0L
-      var done = false
-      while (!done && h < maxIter) {
-        h += 1
-        val next = adj.join(frontier.select(col("item").as("u")), "u")
-          .select(col("v").as("item")).distinct()
-          .join(reached.select("item"), Seq("item"), "left_anti")
-          .withColumn("dist", lit(h))
-          .localCheckpoint(false)
-        if (next.isEmpty) done = true
-        else {
-          reached = reached.union(next).localCheckpoint(false)
-          frontier = next
-        }
-      }
-      reached
+    def sweep(seed: DataFrame): DataFrame = {
+      val run = bfs(adj, seed, maxIter + 1)
+      if (!run.converged)
+        throw new IllegalStateException(
+          s"diameterEstimate: a node lies more than $maxIter hops from the " +
+            "sweep seed; raise maxIter")
+      run.state.select("item", "dist")
     }
     val seed1 = adj.groupBy("u").agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("u")).limit(1)
       .select(col("u").as("item"))
       .localCheckpoint(false)
-    val r1 = bfs(seed1)
+    val r1 = sweep(seed1)
     val far = r1.orderBy(col("dist").desc, col("item")).limit(1)
       .select(col("item"))
       .localCheckpoint(false)
-    val r2 = bfs(far)
+    val r2 = sweep(far)
     seed1.select(col("item").as("start_node"))
       .crossJoin(broadcast(
         r1.agg(max("dist").as("ecc_start"), count(lit(1)).as("n_reached"))))
@@ -1172,53 +1147,32 @@ object Graph {
     * '00); ONE round from a max-out-degree pivot already answers the
     * question that matters — how much of the catalog is mutually
     * navigable — as SCC(pivot) = forward-reach(pivot) ∩
-    * backward-reach(pivot), two [[diameterEstimateOf]] BFS loops (the
-    * second on the REVERSED adjacency).
+    * backward-reach(pivot), two [[bfs]] sweeps (the second on the
+    * REVERSED adjacency).
     *
     * Shape: directed distinct edges off one lag pass; per-iteration
     * work is the vocab-bounded adjacency join, iterated to FIXPOINT
-    * (isEmpty-driven exit — the reach set is monotone and bounded by
-    * the item vocabulary, so the loop terminates in ≤ |V| sweeps;
-    * the oracle's recursive CTEs are likewise uncapped, so a reach
-    * chain longer than any fixed hop budget can't diverge the two
-    * sides — [[diameterEstimateOf]] keeps its cap because ITS oracle
-    * mirrors it with `dist < 20`); the intersection is a semi-join
-    * of two reach frames; exact-ppm share against the node count.
+    * with no round cap — the reach set is monotone and bounded by the
+    * item vocabulary, so the loop terminates in ≤ |V| + 1 rounds; the
+    * oracle's recursive CTEs are likewise uncapped, so a reach chain
+    * longer than any fixed hop budget can't diverge the two sides
+    * ([[diameterEstimateOf]] keeps its cap because ITS oracle mirrors
+    * it with `dist < 20`); the intersection is a semi-join of two
+    * reach frames; exact-ppm share against the node count.
     * Oracle: two recursive reachability CTEs (UNION dedup on the
     * node alone — reach sets are monotone, the closure terminates)
     * intersected. */
   def pivotSccOf(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+    val edges = transitions(events)
+      .filter(col("src") =!= col("item"))
       .select(col("src").as("u"), col("item").as("v"))
       .distinct()
       .localCheckpoint(false)
     val nodes = edges.select(col("u").as("item"))
       .union(edges.select(col("v").as("item"))).distinct()
       .localCheckpoint(false)
-    def reach(adj: DataFrame, seed: DataFrame): DataFrame = {
-      var reached = seed.localCheckpoint(false)
-      var frontier = reached
-      var done = false
-      while (!done) {
-        val next = adj.join(frontier.select(col("item").as("u")), "u")
-          .select(col("v").as("item")).distinct()
-          .join(reached, Seq("item"), "left_anti")
-          .localCheckpoint(false)
-        if (next.isEmpty) done = true
-        else {
-          reached = reached.union(next).localCheckpoint(false)
-          frontier = next
-        }
-      }
-      reached
-    }
+    def reach(adj: DataFrame, seed: DataFrame): DataFrame =
+      bfs(adj, seed, Int.MaxValue).state.select("item")
     val pivot = edges.groupBy("u").agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("u")).limit(1)
       .select(col("u").as("item"))
@@ -1252,14 +1206,8 @@ object Graph {
     * self-semi-join on the reversed key (vocab-bounded), a 1-row
     * readout. */
   def reciprocityOf(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
+    val edges = transitions(events)
+      .filter(col("src") =!= col("item"))
       .select(col("src").as("u"), col("item").as("v"))
       .distinct()
       .localCheckpoint(false) // both legs of the ratio read it
@@ -1293,22 +1241,16 @@ object Graph {
     * (the documented bound; a denser graph errors loudly, never
     * wraps).
     *
-    * Shape: [[pagerankOf]]'s loop posture — the DISTINCT edge frame
-    * and node frame checkpoint once; each of the 6 iterations is
-    * one bounded equijoin + aggregate on the ≤|items|² edge frame;
-    * the accumulator rides the node frame. */
+    * Shape: a fixed-count loop like [[integerPagerank]]'s — the
+    * DISTINCT [[transitions]] edge frame (self-transitions kept) and
+    * the node frame checkpoint once; each of the 6 iterations is one
+    * bounded equijoin + aggregate on the ≤|items|² edge frame; the
+    * accumulator rides the node frame. */
   def katzCentralityOf(events: DataFrame, iterations: Int = 6): DataFrame = {
     require(iterations >= 1 && iterations <= 12,
       s"iterations in [1,12], got $iterations")
     val dec = "decimal(38,0)"
-    val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val edges = events
-      .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .withColumn("src", lag("item", 1).over(byUser))
-      .filter(col("src").isNotNull)
+    val edges = transitions(events)
       .select(col("src"), col("item").as("dst"))
       .distinct()
       .localCheckpoint(false)

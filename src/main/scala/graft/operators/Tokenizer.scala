@@ -21,7 +21,7 @@ import graft.sources.Tables
   * map-side-combinable sum → a ONE-ROW argmax to the driver (the same
   * bounded-scalar contract as the Bloom bitset) → a map-side fold
   * applying the merge greedily left-to-right. The evolving symbol
-  * table localCheckpoints per iteration (the Components fixpoint-loop
+  * table localCheckpoints per iteration (the [[Fixpoint]] loop's
   * precedent) so plan depth stays constant; durability trade-off at
   * cluster scale: [[graft.Sessions]]' checkpoint policy.
   *
@@ -78,12 +78,12 @@ object Tokenizer {
               .otherwise(concat(acc, array(x)))).as("syms"),
           col("freq"))
           .localCheckpoint() // EAGER: the parent's blocks free next line
-        Components.freeCheckpoint(words)
+        Fixpoint.freeCheckpoint(words)
         words = next
       }
       i += 1
     }
-    Components.freeCheckpoint(words)
+    Fixpoint.freeCheckpoint(words)
     import spark.implicits._
     rules.toSeq.toDF("rank", "left", "right", "merged_count")
       .select(col("rank"), col("left"), col("right"),

@@ -33,6 +33,20 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     assert(got.values.forall(_ == 1L), s"all chain nodes reach min 1: $got")
   }
 
+  test("a bound too small for the chain throws by name instead of splitting it") {
+    // Path 1..20 takes 19 relabeling rounds plus one that changes
+    // nothing: 20 rounds converge, 19 must refuse to return labels.
+    val chain = (1L until 20L).map(i => (i, i + 1))
+    assert(Components.connectedComponents(chain.toDF("a", "b"),
+      (1L to 20L).toDF("id"), maxIter = 20).count() == 20L)
+    val e = intercept[IllegalStateException] {
+      Components.connectedComponents(chain.toDF("a", "b"),
+        (1L to 20L).toDF("id"), maxIter = 19)
+    }
+    assert(e.getMessage.contains("connectedComponents") &&
+      e.getMessage.contains("19 rounds"), e.getMessage)
+  }
+
   test("a cycle plus a pendant edge forms one component") {
     val got = cc(Seq((2L, 3L), (3L, 4L), (4L, 2L), (4L, 9L)), Seq(2L, 3L, 4L, 9L))
     assert(got.values.toSet == Set(2L))

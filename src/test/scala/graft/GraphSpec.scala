@@ -345,6 +345,24 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       r.getLong(4)) == ((2L, 3L, 5L, 5L, 4L)), s"got $r")
   }
 
+  test("diameter estimate: an eccentricity of exactly maxIter still succeeds") {
+    // The same path: the second sweep's eccentricity is 4, the cap.
+    val Array(r) = Graph.diameterEstimateOf(stream(1L, 2L, 3L, 4L, 5L),
+      maxIter = 4).collect()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4)) == ((2L, 3L, 5L, 5L, 4L)), s"got $r")
+  }
+
+  test("diameter estimate: a node past maxIter hops throws by name, never truncates") {
+    // The second sweep from 5 needs 4 hops to reach 1; a cap of 3
+    // would under-read the diameter as 3.
+    val e = intercept[IllegalStateException] {
+      Graph.diameterEstimateOf(stream(1L, 2L, 3L, 4L, 5L), maxIter = 3)
+    }
+    assert(e.getMessage.contains("diameterEstimate") &&
+      e.getMessage.contains("3 hops"), e.getMessage)
+  }
+
   test("pivot scc: a cycle with a one-way tail reads forward 4, backward 3, scc 3") {
     // user 1 walks the 1→2→3→1 cycle; user 2 adds the one-way 3→4.
     // Out-degrees: 3 has 2 → pivot. fwd(3) = {1,2,3,4}, bwd(3) =
@@ -404,5 +422,116 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val a = Graph.eigenvectorCentralityOf(ev, iterations = 4).collect().toSeq
     val b = Graph.eigenvectorCentralityOf(ev, iterations = 4).collect().toSeq
     assert(a == b)
+  }
+
+  test("katz_centrality: hand-traced path and cycle walk counts") {
+    // path 1→2→3: into-2 = one 1-walk (32); into-3 = one 1-walk +
+    // one 2-walk (32 + 16 = 48); into-1 = none.
+    val path = Graph.katzCentralityOf(stream(1L, 2L, 3L))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(path == Map(1L -> 0L, 2L -> 32L, 3L -> 48L), s"$path")
+    // 2-cycle: exactly one k-walk into each node for every k ≤ 6 →
+    // 32+16+8+4+2+1 = 63, katz = 63/64.
+    val cyc = Graph.katzCentralityOf(stream(1L, 2L, 1L))
+      .collect()
+    assert(cyc.forall(_.getLong(1) == 63L), s"${cyc.mkString(";")}")
+    assert(cyc.forall(_.getDouble(2) == 0.984375), s"${cyc.mkString(";")}")
+  }
+
+  test("katz centrality at non-default iterations normalizes by 2^iterations") {
+    // chain 1→2→3 (one user, three items in sequence): with α = 1/2
+    // and 3 iterations, acc·2³ = (0, 4, 6) ⇒ katz = (0, 0.5, 0.75).
+    // The pre-r17 code divided by the iterations=6 constant 64 and
+    // mislabeled the integer column katz_x64.
+    val events = Seq(
+      (1L, 1L, "click", "2024-01-01 10:00:00", """{"k":1}"""),
+      (2L, 1L, "click", "2024-01-01 10:01:00", """{"k":2}"""),
+      (3L, 1L, "click", "2024-01-01 10:02:00", """{"k":3}"""))
+      .toDF("event_id", "user_id", "event_type", "t", "props")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("props"))
+    val out = Graph.katzCentralityOf(events, iterations = 3)
+    assert(out.columns.toSeq == Seq("item", "katz_x8", "katz"),
+      s"integer column must be labeled by the actual scale: ${out.columns.toSeq}")
+    val rows = out.collect().map(r =>
+      r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(rows(1L) == ((0L, 0.0)) && rows(2L) == ((4L, 0.5)) &&
+      rows(3L) == ((6L, 0.75)), s"${rows.toSeq.sortBy(_._1)}")
+  }
+
+  // ---- eigenvector centrality: the +I bipartite guard and the
+  // ---- global-max normalization, property-tested on the exact
+  // ---- fixtures the scaladoc argues about
+
+  /** Three users each walk leaf→center: a 3-leaf star, unit weights. */
+  private def starEvents = streams(1L -> Seq(1L, 0L), 2L -> Seq(2L, 0L),
+    3L -> Seq(3L, 0L))
+
+  test("eigenvector: a star converges to the sqrt(3) ratio instead of oscillating") {
+    // A star is bipartite: raw power iteration flips between
+    // center-heavy and leaf-heavy states with period 2. With the +I
+    // shift the dominant eigenvalue of A+I is 1+sqrt(3) and the
+    // leaf/center ratio converges to 1/sqrt(3) = 0.577350…
+    val out = Graph.eigenvectorCentralityOf(starEvents).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out(0L) == 1000000L, s"argmax holds exactly 1e6: $out")
+    assert(out(1L) == out(2L) && out(2L) == out(3L),
+      s"symmetric leaves must tie exactly: $out")
+    assert(out(1L) >= 577340L && out(1L) <= 577360L,
+      s"leaves at 1e6/sqrt(3) = 577350 within the integer dither: $out")
+    // no period-2 oscillation: one more iteration moves nothing more
+    // than the +-2 ppm integer dither (unguarded iteration would swing
+    // leaves by ~1e5 between consecutive iterations)
+    val out13 = Graph.eigenvectorCentralityOf(starEvents, iterations = 13)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    out.foreach { case (item, rq) =>
+      assert(math.abs(rq - out13(item)) <= 2L,
+        s"item $item: $rq vs ${out13(item)} — oscillation survived the +I guard")
+    }
+  }
+
+  test("eigenvector: a disconnected minor component decays under the GLOBAL max") {
+    // star (dominant, lambda = 1+sqrt(3)) + a separate 2-node edge
+    // (lambda = 2): the pair's mass shrinks by ~2/2.732 per iteration
+    // and reads ~17e3 ppm after 12 — decayed scores, not missing rows.
+    val ev = streams(1L -> Seq(1L, 0L), 2L -> Seq(2L, 0L), 3L -> Seq(3L, 0L),
+      4L -> Seq(10L, 11L))
+    val out = Graph.eigenvectorCentralityOf(ev).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out.keySet == Set(0L, 1L, 2L, 3L, 10L, 11L),
+      s"minor-component nodes must still report: $out")
+    assert(out(0L) == 1000000L, "the global argmax is the star center")
+    assert(out(1L) >= 577340L && out(1L) <= 577360L,
+      s"the dominant component is unperturbed by the minor one: $out")
+    assert(out(10L) == out(11L), s"symmetric pair must tie: $out")
+    assert(out(10L) > 0L && out(10L) < 60000L,
+      s"pair must decay well below the leaves, not vanish: $out")
+  }
+
+  test("eigenvector: determinism across runs on the mixed fixture") {
+    val ev = streams(1L -> Seq(1L, 0L, 2L, 0L), 4L -> Seq(10L, 11L, 10L))
+    val a = Graph.eigenvectorCentralityOf(ev).collect().toSeq
+    val b = Graph.eigenvectorCentralityOf(ev).collect().toSeq
+    assert(a == b)
+  }
+
+  // ---- hub ablation: k >= the whole node set, and the star readout
+
+  test("hub ablation: k beyond the node count removes everything; NULL giant, no crash") {
+    val out = Graph.hubAblationOf(streams(1L -> Seq(1L, 2L)), k = 3).collect()
+    assert(out.length == 1)
+    val r = out.head
+    assert(r.getLong(0) == 2L && r.getLong(1) == 2L && r.getLong(2) == 2L,
+      s"n_nodes=2, both removed, giant_before=2: $r")
+    assert(r.isNullAt(3) && r.isNullAt(4),
+      s"empty survivor graph reads NULL giant_after/retained_ppm: $r")
+  }
+
+  test("hub ablation: removing a star's center shatters the giant to singletons") {
+    val out = Graph.hubAblationOf(starEvents, k = 1).collect().head
+    assert(out.getLong(0) == 4L && out.getLong(1) == 1L)
+    assert(out.getLong(2) == 4L, "giant before = the whole star")
+    assert(out.getLong(3) == 1L, "after: three isolated leaves, giant = 1")
+    assert(out.getLong(4) == 250000L, s"retained_ppm = 1e6/4: $out")
   }
 }

@@ -659,28 +659,7 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     assert(!ne.getBoolean(7), s"a 10-unit lift is not equivalence: $ne")
   }
 
-  // ---- fifth tranche: Katz, n-gram novelty, the acquisition curve ----
-
-  private def walk(items: Long*): DataFrame =
-    items.zipWithIndex.map { case (k, i) =>
-      (i.toLong, 1L, f"2024-01-01 00:00:$i%02d", s"""{"k": $k}""")
-    }.toDF("event_id", "user_id", "s", "props")
-      .select(col("event_id"), col("user_id"),
-        to_timestamp(col("s")).as("ts"), col("props"))
-
-  test("katz_centrality: hand-traced path and cycle walk counts") {
-    // path 1→2→3: into-2 = one 1-walk (32); into-3 = one 1-walk +
-    // one 2-walk (32 + 16 = 48); into-1 = none.
-    val path = graft.operators.Graph.katzCentralityOf(walk(1L, 2L, 3L))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(path == Map(1L -> 0L, 2L -> 32L, 3L -> 48L), s"$path")
-    // 2-cycle: exactly one k-walk into each node for every k ≤ 6 →
-    // 32+16+8+4+2+1 = 63, katz = 63/64.
-    val cyc = graft.operators.Graph.katzCentralityOf(walk(1L, 2L, 1L))
-      .collect()
-    assert(cyc.forall(_.getLong(1) == 63L), s"${cyc.mkString(";")}")
-    assert(cyc.forall(_.getDouble(2) == 0.984375), s"${cyc.mkString(";")}")
-  }
+  // ---- fifth tranche: n-gram novelty, the acquisition curve ----
 
   test("ngram_novelty: the first holder claims the gram, repeats claim nothing") {
     val docs = Seq(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Corpus, EventAnalytics, Graph, TextAnalysis}
+import graft.operators.{Corpus, EventAnalytics, TextAnalysis}
 import graft.sources.Tables
 
 /** Round-17 adversarial audit: behavioral pins for the two parameter
@@ -41,27 +41,6 @@ class Round17TrancheSpec extends AnyFunSuite with SparkFixture {
       (f"2024-01-$i%02d 00:00:00", if (i % 2 == 0) 4 else 2)))
     val o12 = EventAnalytics.ljungBoxOf(long, maxLag = 12).collect()(0)
     assert(o12.getLong(2) == 12L && !o12.isNullAt(4), s"df=12 gates: $o12")
-  }
-
-  test("katz centrality at non-default iterations normalizes by 2^iterations") {
-    // chain 1→2→3 (one user, three items in sequence): with α = 1/2
-    // and 3 iterations, acc·2³ = (0, 4, 6) ⇒ katz = (0, 0.5, 0.75).
-    // The pre-r17 code divided by the iterations=6 constant 64 and
-    // mislabeled the integer column katz_x64.
-    val events = Seq(
-      (1L, 1L, "click", "2024-01-01 10:00:00", """{"k":1}"""),
-      (2L, 1L, "click", "2024-01-01 10:01:00", """{"k":2}"""),
-      (3L, 1L, "click", "2024-01-01 10:02:00", """{"k":3}"""))
-      .toDF("event_id", "user_id", "event_type", "t", "props")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("props"))
-    val out = Graph.katzCentralityOf(events, iterations = 3)
-    assert(out.columns.toSeq == Seq("item", "katz_x8", "katz"),
-      s"integer column must be labeled by the actual scale: ${out.columns.toSeq}")
-    val rows = out.collect().map(r =>
-      r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(rows(1L) == ((0L, 0.0)) && rows(2L) == ((4L, 0.5)) &&
-      rows(3L) == ((6L, 0.75)), s"${rows.toSeq.sortBy(_._1)}")
   }
 
   test("sketch twins return empty frames on an empty corpus, never an error") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CorpusStats, EventAnalytics, Graph, Robust, TextAnalysis}
+import graft.operators.{CorpusStats, EventAnalytics, Robust, TextAnalysis}
 
 /** Adversarial edge-case audit of the round-14 operator tranche — the
   * pass that caught int-width/regex/short-span bugs in every earlier
@@ -17,98 +17,12 @@ import graft.operators.{CorpusStats, EventAnalytics, Graph, Robust, TextAnalysis
 class TrancheAuditSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  /** Each (user, items…) walks its items in order, one event/second. */
-  private def walks(users: (Long, Seq[Long])*): DataFrame =
-    users.flatMap { case (u, items) =>
-      items.zipWithIndex.map { case (k, i) => (u, i, k) }
-    }.zipWithIndex.map { case ((u, i, k), id) =>
-      (id.toLong, u, f"2024-01-01 00:00:$i%02d", s"""{"k": $k}""")
-    }.toDF("event_id", "user_id", "s", "props")
-      .select(col("event_id"), col("user_id"),
-        to_timestamp(col("s")).as("ts"), col("props"))
-
   private def valued(rows: (String, String, Double)*): DataFrame =
     rows.zipWithIndex.map { case ((et, t, v), i) =>
       (i.toLong, i.toLong, et, t, v)
     }.toDF("event_id", "user_id", "event_type", "t", "value")
       .select(col("event_id"), col("user_id"), col("event_type"),
         to_timestamp(col("t")).as("ts"), col("value"))
-
-  // ---- eigenvector centrality: the +I bipartite guard and the
-  // ---- global-max normalization, property-tested on the exact
-  // ---- fixtures the scaladoc argues about
-
-  /** Three users each walk leaf→center: a 3-leaf star, unit weights. */
-  private def starEvents = walks(1L -> Seq(1L, 0L), 2L -> Seq(2L, 0L),
-    3L -> Seq(3L, 0L))
-
-  test("eigenvector: a star converges to the sqrt(3) ratio instead of oscillating") {
-    // A star is bipartite: raw power iteration flips between
-    // center-heavy and leaf-heavy states with period 2. With the +I
-    // shift the dominant eigenvalue of A+I is 1+sqrt(3) and the
-    // leaf/center ratio converges to 1/sqrt(3) = 0.577350…
-    val out = Graph.eigenvectorCentralityOf(starEvents).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out(0L) == 1000000L, s"argmax holds exactly 1e6: $out")
-    assert(out(1L) == out(2L) && out(2L) == out(3L),
-      s"symmetric leaves must tie exactly: $out")
-    assert(out(1L) >= 577340L && out(1L) <= 577360L,
-      s"leaves at 1e6/sqrt(3) = 577350 within the integer dither: $out")
-    // no period-2 oscillation: one more iteration moves nothing more
-    // than the +-2 ppm integer dither (unguarded iteration would swing
-    // leaves by ~1e5 between consecutive iterations)
-    val out13 = Graph.eigenvectorCentralityOf(starEvents, iterations = 13)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out.foreach { case (item, rq) =>
-      assert(math.abs(rq - out13(item)) <= 2L,
-        s"item $item: $rq vs ${out13(item)} — oscillation survived the +I guard")
-    }
-  }
-
-  test("eigenvector: a disconnected minor component decays under the GLOBAL max") {
-    // star (dominant, lambda = 1+sqrt(3)) + a separate 2-node edge
-    // (lambda = 2): the pair's mass shrinks by ~2/2.732 per iteration
-    // and reads ~17e3 ppm after 12 — decayed scores, not missing rows.
-    val ev = walks(1L -> Seq(1L, 0L), 2L -> Seq(2L, 0L), 3L -> Seq(3L, 0L),
-      4L -> Seq(10L, 11L))
-    val out = Graph.eigenvectorCentralityOf(ev).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.keySet == Set(0L, 1L, 2L, 3L, 10L, 11L),
-      s"minor-component nodes must still report: $out")
-    assert(out(0L) == 1000000L, "the global argmax is the star center")
-    assert(out(1L) >= 577340L && out(1L) <= 577360L,
-      s"the dominant component is unperturbed by the minor one: $out")
-    assert(out(10L) == out(11L), s"symmetric pair must tie: $out")
-    assert(out(10L) > 0L && out(10L) < 60000L,
-      s"pair must decay well below the leaves, not vanish: $out")
-  }
-
-  test("eigenvector: determinism across runs on the mixed fixture") {
-    val ev = walks(1L -> Seq(1L, 0L, 2L, 0L), 4L -> Seq(10L, 11L, 10L))
-    val a = Graph.eigenvectorCentralityOf(ev).collect().toSeq
-    val b = Graph.eigenvectorCentralityOf(ev).collect().toSeq
-    assert(a == b)
-  }
-
-  // ---- hub ablation: k >= the whole node set, and the star readout
-
-  test("hub ablation: k beyond the node count removes everything; NULL giant, no crash") {
-    val out = Graph.hubAblationOf(walks(1L -> Seq(1L, 2L)), k = 3).collect()
-    assert(out.length == 1)
-    val r = out.head
-    assert(r.getLong(0) == 2L && r.getLong(1) == 2L && r.getLong(2) == 2L,
-      s"n_nodes=2, both removed, giant_before=2: $r")
-    assert(r.isNullAt(3) && r.isNullAt(4),
-      s"empty survivor graph reads NULL giant_after/retained_ppm: $r")
-  }
-
-  test("hub ablation: removing a star's center shatters the giant to singletons") {
-    val out = Graph.hubAblationOf(starEvents, k = 1).collect().head
-    assert(out.getLong(0) == 4L && out.getLong(1) == 1L)
-    assert(out.getLong(2) == 4L, "giant before = the whole star")
-    assert(out.getLong(3) == 1L, "after: three isolated leaves, giant = 1")
-    assert(out.getLong(4) == 250000L, s"retained_ppm = 1e6/4: $out")
-  }
 
   // ---- PRF retrieval: empty feedback set, all-banned expansion,
   // ---- and the vocabulary-mismatch fix actually firing
