@@ -61,11 +61,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
     val spark = Runner.session()
-    // Optional sketch-path bench (SURVEY §4's graft.scale.approx): the
-    // registered wrappers read the conf per query, so one env var
-    // benches the 100 TB posture against the exact default.
-    if (sys.env.get("SPARK_GRAFT_APPROX").exists(_.toBoolean))
-      spark.conf.set(Scale.ApproxKey, "true")
     // Optional shuffle-partition override for scale rehearsals: the
     // default (= cpus) is sized for sf0.1; a ×100 corpus through 32
     // partitions means ~100× per-task state (spill + GC, not plan

@@ -1,25 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The `graft.scale.approx` switch. `false` (default): exact
-  * distinct counts / full-buffer percentile grids — the verification
-  * contract every oracle hashes against. `true`: the documented
+/** Scale helpers the operators share: the under-parallelized-input
+  * guard and the two-phase global-order decompositions. The 100 TB
   * sketch swaps (HLL distinct counts, mergeable percentile sketches)
-  * — the defaults a 100 TB run flips on, trading a bounded estimate
-  * error for fixed-size aggregation state and, where the exact path
-  * self-joins on a gram key, for eliminating that join entirely.
-  * Read per query from the session conf so a pipeline can flip it at
-  * runtime without re-registering anything; ScaleApproxSpec bounds
-  * each swap against its exact twin on the sf0.01 corpus.
+  * are each operator's own `approx` parameter — default `false`, the
+  * exact verification contract every oracle hashes against; the
+  * registered `*_approx` twins build the same operators with
+  * `approx = true`, and ScaleApproxSpec bounds each swap against its
+  * exact twin on the sf0.01 corpus.
   */
 object Scale {
-  val ApproxKey = "graft.scale.approx"
-
-  def approx(spark: SparkSession): Boolean =
-    spark.conf.getOption(ApproxKey).exists(_.toBoolean)
 
   /** Under-parallelized-input guard (r17 optimization round; a
     * blanket loader-level spread was measured net-negative and
@@ -44,22 +38,6 @@ object Scale {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 >= target) df
     else df.repartition(target, key: _*)
-  }
-
-  /** Build with the approx flag forced ON, restoring the session's
-    * prior setting afterwards — the registered `*_approx` twins use
-    * this so the 100 TB sketch path is driver-value-checked without
-    * the caller owning session state. Sound because the exact/sketch
-    * branch is taken at DataFrame-CONSTRUCTION time (the wrappers
-    * read the conf while building the plan, not at execution). */
-  def withApprox[A](spark: SparkSession)(build: => A): A = {
-    val prev = spark.conf.getOption(ApproxKey)
-    spark.conf.set(ApproxKey, "true")
-    try build
-    finally prev match {
-      case Some(v) => spark.conf.set(ApproxKey, v)
-      case None => spark.conf.unset(ApproxKey)
-    }
   }
 
   // ---------------------------------------------------------------

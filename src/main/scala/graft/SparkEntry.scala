@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §2 + §5.
   *
@@ -304,15 +305,15 @@ object SparkEntry {
     "incremental_rollup" -> (Warehouse.incrementalRollup(_, _)),
     "dedup_cascade"     -> (Dedup.dedupCascade(_, _)),
     // Round-10: the 100 TB sketch defaults, driver-value-checked —
-    // the same operators with graft.scale.approx forced on at plan
-    // build (pinned-frame oracles: sketches hash-stably reproduce on
-    // a fixed corpus because HLL/quantile merges are order-blind)
+    // the same operators built with `approx = true` (pinned-frame
+    // oracles: sketches hash-stably reproduce on a fixed corpus
+    // because HLL/quantile merges are order-blind)
     "dup_matrix_approx" ->
-      ((s, d) => Scale.withApprox(s)(Dedup.dupMatrix(s, d))),
+      ((s, d) => Dedup.dupMatrixOf(Tables.documents(s, d), approx = true)),
     "ngram_diversity_approx" ->
-      ((s, d) => Scale.withApprox(s)(CorpusStats.distinctNgramDiversity(s, d))),
+      ((s, d) => CorpusStats.distinctNgramDiversityOf(Tables.documents(s, d), approx = true)),
     "quantile_normalize_approx" ->
-      ((s, d) => Scale.withApprox(s)(CorpusStats.quantileNormalize(s, d))),
+      ((s, d) => CorpusStats.quantileNormalizeOf(Tables.documents(s, d), approx = true)),
     // Round-10: CCNet-style normalized exact dedup (SURVEY row 15's
     // normalization-hardened sibling)
     "dedup_normalized"  -> (Dedup.dedupNormalized(_, _)),
@@ -645,15 +646,15 @@ object SparkEntry {
     "breusch_pagan"     -> (EventAnalytics.breuschPagan(_, _)),
     "arrival_quality_mix" -> (CorpusStats.arrivalQualityMix(_, _)),
     // Round-17: sketch twins for the round-14+ exact-distinct gram
-    // heavies (VERDICT r16 #3) — graft.scale.approx forced on at
-    // plan build, pinned-frame oracles (HLL merges and the 1/4
-    // key-space hash-samples are order-blind/deterministic)
+    // heavies (VERDICT r16 #3) — built with `approx = true`,
+    // pinned-frame oracles (HLL merges and the 1/4 key-space
+    // hash-samples are order-blind/deterministic)
     "source_overlap_matrix_approx" ->
-      ((s, d) => Scale.withApprox(s)(Corpus.sourceOverlapMatrix(s, d))),
+      ((s, d) => Corpus.sourceOverlapMatrixOf(Tables.documents(s, d), approx = true)),
     "sentence_dedup_approx" ->
-      ((s, d) => Scale.withApprox(s)(Corpus.sentenceDedup(s, d))),
+      ((s, d) => Corpus.sentenceDedupOf(Tables.documents(s, d), approx = true)),
     "winnow_fingerprints_approx" ->
-      ((s, d) => Scale.withApprox(s)(TextAnalysis.winnowFingerprints(s, d))),
+      ((s, d) => TextAnalysis.winnowFingerprintsOf(Tables.documents(s, d), approx = true)),
     // Round-17 second tranche: experiment integrity (aggregate-vs-
     // strata contradiction, cluster-robust ratio-metric CI), the
     // cross-series lead-lag read, and the inventory service-level plan

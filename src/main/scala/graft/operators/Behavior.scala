@@ -28,30 +28,36 @@ object Behavior {
     * monotonically, so the chain is three small hash aggregates, not a
     * per-user sort. Timestamps compare as exact integer microseconds.
     */
-  def funnelStepsOf(events: DataFrame): DataFrame = {
+  def funnelStepsOf(events: DataFrame): DataFrame =
+    funnelOf(events, t => col("us") > col(t))
+
+  /** The ordered three-step funnel, where a step-k event counts when
+    * `after(t)` holds against the previous step's time column `t`:
+    * chained user-keyed min-aggregates, then per-step reach and the
+    * conversion vs step 1. The conversion is floor-form rounded
+    * (cf. TextF.round4HalfUp) so a halfway double rounds identically
+    * in every engine; base = 0 (no step-1 events at all) is pinned to
+    * 0.0 — unguarded, Spark's 0/0 is NaN while SQL engines yield
+    * NULL, and floor(NaN) masks it as a bogus 0 anyway. base comes
+    * from a window over the SAME 3-row frame — re-filtering `rows`
+    * would embed the whole three-aggregate funnel DAG a second time
+    * in the plan. */
+  private def funnelOf(events: DataFrame, after: String => Column): DataFrame = {
     val e = events.select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("us"))
     val v = e.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("us").as("t1"))
     val c = e.filter(col("event_type") === "click")
-      .join(v, "user_id").filter(col("us") > col("t1"))
+      .join(v, "user_id").filter(after("t1"))
       .groupBy("user_id").agg(min("us").as("t2"))
     val p = e.filter(col("event_type") === "purchase")
-      .join(c, "user_id").filter(col("us") > col("t2"))
+      .join(c, "user_id").filter(after("t2"))
       .groupBy("user_id").agg(min("us").as("t3"))
-    val counts = Seq(
-      ("view", 1, v), ("click", 2, c), ("purchase", 3, p))
+    val counts = Seq(("view", 1, v), ("click", 2, c), ("purchase", 3, p))
     val rows = counts.map { case (name, ord, df) =>
       df.agg(count(lit(1)).as("users"))
         .select(lit(name).as("step"), lit(ord).as("ord"), col("users"))
     }.reduce(_.unionAll(_))
-    // conversion vs step 1; floor-form rounding (cf. TextF.round4HalfUp)
-    // so a halfway double rounds identically in every engine. base = 0
-    // (no step-1 events at all) is pinned to 0.0 — unguarded, Spark's
-    // 0/0 is NaN while SQL engines yield NULL, and floor(NaN) masks it
-    // as a bogus 0 anyway. base comes from a window over the SAME
-    // 3-row frame — re-filtering `rows` would embed the whole
-    // three-aggregate funnel DAG a second time in the plan.
     val whole = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
     rows
@@ -87,32 +93,7 @@ object Behavior {
   def funnelWindowedOf(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
     require(windowMinutes > 0, s"windowMinutes must be positive, got $windowMinutes")
     val w = windowMinutes.toLong * 60L * 1000000L
-    val e = events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("us"))
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("us").as("t1"))
-    val c = e.filter(col("event_type") === "click")
-      .join(v, "user_id")
-      .filter(col("us") > col("t1") && col("us") <= col("t1") + w)
-      .groupBy("user_id").agg(min("us").as("t2"))
-    val p = e.filter(col("event_type") === "purchase")
-      .join(c, "user_id")
-      .filter(col("us") > col("t2") && col("us") <= col("t2") + w)
-      .groupBy("user_id").agg(min("us").as("t3"))
-    val counts = Seq(("view", 1, v), ("click", 2, c), ("purchase", 3, p))
-    val rows = counts.map { case (name, ord, df) =>
-      df.agg(count(lit(1)).as("users"))
-        .select(lit(name).as("step"), lit(ord).as("ord"), col("users"))
-    }.reduce(_.unionAll(_))
-    val whole = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    rows
-      .withColumn("base", max(when(col("ord") === 1, col("users"))).over(whole))
-      .select(col("step"), col("ord"), col("users"),
-        when(col("base") === 0, lit(0.0)).otherwise(
-          floor(col("users").cast("double") / col("base").cast("double") * 100 * 100 + 0.5) / 100)
-          .as("conv_pct"))
-      .orderBy("ord")
+    funnelOf(events, t => col("us") > col(t) && col("us") <= col(t) + w)
   }
 
   def funnelWindowed(spark: SparkSession, dir: String): DataFrame =
@@ -583,34 +564,40 @@ object Behavior {
   def dormancySpells(spark: SparkSession, dir: String): DataFrame =
     dormancySpellsOf(Tables.events(spark, dir))
 
-  /** χ² contingency table for event-type × time-of-week association
-    * (the EDA pass behind "does behavior depend on the day"). The
-    * time-of-week bucket is PURE ARITHMETIC — `days-since-epoch % 7`
-    * (truncating %, same convention both engine- and oracle-side) — not a calendar dayofweek() whose week-start convention
-    * differs between engines; the bucket is a category, so the phase
-    * is irrelevant. Expected counts and per-cell contributions
-    * `(O−E)²/E` are plain IEEE arithmetic on exact integer totals
-    * (row·col products stay far under 2^53), rounded floor-form at
-    * the edge. ONE count aggregate scans the facts; the row/col/grand
-    * margins are windows over the resulting |types × 7| cell frame —
-    * a separate aggregate per margin would re-plan (and re-scan) the
-    * fact aggregate once per consumer, Catalyst has no cross-branch
-    * CSE.
-    */
-  def chi2ContingencyOf(events: DataFrame): DataFrame = {
-    val cells = events
+  /** The event-type × time-of-week count cells `o`. The bucket is
+    * PURE ARITHMETIC — `days-since-epoch % 7` (truncating %, the same
+    * convention engine- and oracle-side) — not a calendar dayofweek()
+    * whose week-start convention differs between engines; the bucket
+    * is a category, so the phase is irrelevant. */
+  private def towCells(events: DataFrame): DataFrame =
+    events
       .select(col("event_type"),
         (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
           .as("tow"))
       .groupBy("event_type", "tow").agg(count(lit(1)).as("o"))
-    val byRow = Window.partitionBy("event_type")
-    val byCol = Window.partitionBy("tow")
-    val whole = Window.partitionBy()
-    val e = col("rt").cast("double") * col("ct").cast("double") / col("n").cast("double")
+
+  /** The row (`rt`), column (`ct`) and grand (`n`) margins of the
+    * cells as windows over the bounded |types × 7| frame — a separate
+    * aggregate per margin would re-plan (and re-scan) the fact
+    * aggregate once per consumer; Catalyst has no cross-branch CSE. */
+  private def withMargins(cells: DataFrame): DataFrame =
     cells
-      .withColumn("rt", sum("o").over(byRow))
-      .withColumn("ct", sum("o").over(byCol))
-      .withColumn("n", sum("o").over(whole))
+      .withColumn("rt", sum("o").over(Window.partitionBy("event_type")))
+      .withColumn("ct", sum("o").over(Window.partitionBy("tow")))
+      .withColumn("n", sum("o").over(Window.partitionBy()))
+
+  /** χ² contingency table for event-type × time-of-week association
+    * (the EDA pass behind "does behavior depend on the day"), over
+    * the arithmetic time-of-week buckets of `towCells`. Expected
+    * counts and per-cell contributions `(O−E)²/E` are plain IEEE
+    * arithmetic on exact integer totals (row·col products stay far
+    * under 2^53), rounded floor-form at the edge. ONE count aggregate
+    * scans the facts; the row/col/grand margins are windows over the
+    * resulting |types × 7| cell frame (`withMargins`).
+    */
+  def chi2ContingencyOf(events: DataFrame): DataFrame = {
+    val e = col("rt").cast("double") * col("ct").cast("double") / col("n").cast("double")
+    withMargins(towCells(events))
       .select(col("event_type"), col("tow"), col("o"),
         graft.functions.TextF.round4HalfUp(e).as("e"),
         graft.functions.TextF.round4HalfUp(
@@ -635,23 +622,12 @@ object Behavior {
     * single-row/column tables null out via the nullif'd denominator
     * rather than dividing by zero. */
   def chi2ResidualsOf(events: DataFrame): DataFrame = {
-    val cells = events
-      .select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
-          .as("tow"))
-      .groupBy("event_type", "tow").agg(count(lit(1)).as("o"))
-    val byRow = Window.partitionBy("event_type")
-    val byCol = Window.partitionBy("tow")
-    val whole = Window.partitionBy()
     val n = col("n").cast("double")
     val e = col("rt").cast("double") * col("ct").cast("double") / n
     val resid = (col("o").cast("double") - e) /
       nullif(sqrt(e * (lit(1.0) - col("rt").cast("double") / n) *
         (lit(1.0) - col("ct").cast("double") / n)), lit(0.0))
-    cells
-      .withColumn("rt", sum("o").over(byRow))
-      .withColumn("ct", sum("o").over(byCol))
-      .withColumn("n", sum("o").over(whole))
+    withMargins(towCells(events))
       .select(col("event_type"), col("tow"), col("o"),
         graft.functions.TextF.round4HalfUp(e).as("e"),
         graft.functions.TextF.round4HalfUp(resid).as("adj_residual"),
@@ -662,18 +638,89 @@ object Behavior {
   def chi2Residuals(spark: SparkSession, dir: String): DataFrame =
     chi2ResidualsOf(Tables.events(spark, dir))
 
-  /** The three-arm deterministic assignment [[anovaFOf]] uses —
-    * exposed so specs can plant per-arm effects without reproducing
-    * the hash expression. */
-  def arm3(userId: Column): Column =
+  /** The one experiment-arm assignment: the first 32 bits of
+    * md5("ab:" ‖ user id), mod `arms` — engine-portable (both engines
+    * implement md5 bit-identically), so every arm-split read here and
+    * its oracle agree on each user's arm. */
+  private def armOf(userId: Column, arms: Long): Column =
     pmod(conv(substring(md5(concat(lit("ab:"),
-      userId.cast("string"))), 1, 8), 16, 10).cast("long"), lit(3L))
+      userId.cast("string"))), 1, 8), 16, 10).cast("long"), lit(arms))
 
-  /** The two-arm twin ([[abTestOf]] / [[didReadoutOf]] /
-    * [[qiniCurveOf]]'s assignment), exposed for the same reason. */
-  def arm2(userId: Column): Column =
-    pmod(conv(substring(md5(concat(lit("ab:"),
-      userId.cast("string"))), 1, 8), 16, 10).cast("long"), lit(2L))
+  /** The three-arm assignment [[anovaFOf]] uses — exposed so specs can
+    * plant per-arm effects without reproducing the hash expression. */
+  def arm3(userId: Column): Column = armOf(userId, 3L)
+
+  /** The two-arm assignment ([[abTestOf]] / [[didReadoutOf]] /
+    * [[qiniCurveOf]]'s), exposed for the same reason. */
+  def arm2(userId: Column): Column = armOf(userId, 2L)
+
+  /** A value on the exact micro grid: round-half-up to 1e-6, as a long. */
+  private[operators] def micro(v: Column): Column =
+    floor(v * 1e6 + lit(0.5)).cast("long")
+
+  /** (event_type, vq, arm): each event's micro-grid value beside its
+    * user's arm under the `arms`-way `armOf` split. */
+  private[operators] def armValues(events: DataFrame, arms: Long): DataFrame =
+    events.select(col("event_type"), micro(col("value")).as("vq"),
+      armOf(col("user_id"), arms).as("arm"))
+
+  private val Dec = "decimal(38,0)"
+
+  /** n, Σv and Σv² of column `v` per `keys` group. The sums ride
+    * decimal(38,0): v² on the micro grid crosses int64 the way
+    * [[Robust.corrMatrixOf]] documents. */
+  private def moments(frame: DataFrame, keys: Seq[String],
+                      v: String): DataFrame =
+    frame.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), sum(col(v).cast(Dec)).as("s"),
+        sum(expr(s"CAST($v AS $Dec) * $v")).as("ss"))
+
+  /** The cells of a pivot on column `by`: level i, suffix "i". */
+  private[operators] def levels(by: String, k: Int): Seq[(String, Column)] =
+    (0 until k).map(i => i.toString -> (col(by) === i))
+
+  /** Column `c` of the row in one pivot cell — the conditional
+    * aggregate that pivots to a FIXED cell order, so a later double
+    * combination runs in one deterministic sequence on both engines. */
+  private[operators] def cellMax(c: String, cell: Column): Column =
+    max(when(cell, col(c)))
+
+  /** One row per `keys`: for each of `values` (outer) and each cell
+    * (inner), the column `value ‖ suffix`. */
+  private[operators] def pivot(frame: DataFrame, keys: Seq[String],
+                               cells: Seq[(String, Column)],
+                               values: String*): DataFrame = {
+    val picks = for (v <- values; (sfx, cell) <- cells)
+      yield cellMax(v, cell).as(v + sfx)
+    frame.groupBy(keys.map(col): _*).agg(picks.head, picks.tail: _*)
+  }
+
+  /** One-way F per event type across three arms, from per-(type, arm)
+    * n/s/ss: pivoted to fixed arm order, F = (SSB/2) / (SSW/(N−3)) as
+    * one double sequence (three s²/n terms, two subtractions, one
+    * division), published as `stat` beside the F(2, ∞) = 2.9957
+    * α = 0.05 verdict. Types missing an arm, or with N ≤ 3, drop; zero
+    * within-arm variance nulls the statistic via the nullif'd
+    * denominator. */
+  private def threeArmF(perArm: DataFrame, stat: String): DataFrame = {
+    val wide = pivot(perArm, Seq("event_type"), levels("arm", 3), "n", "s", "ss")
+      .filter(col("n0").isNotNull && col("n1").isNotNull && col("n2").isNotNull)
+    def d(c: Column) = c.cast("double")
+    val bigN = col("n0") + col("n1") + col("n2")
+    val sb = d(col("s0")) * d(col("s0")) / d(col("n0")) +
+      d(col("s1")) * d(col("s1")) / d(col("n1")) +
+      d(col("s2")) * d(col("s2")) / d(col("n2"))
+    val sTot = d(col("s0") + col("s1") + col("s2"))
+    val ssb = sb - sTot * sTot / d(bigN)
+    val ssw = d(col("ss0") + col("ss1") + col("ss2")) - sb
+    val f = (ssb / lit(2.0)) / nullif(ssw / d(bigN - 3), lit(0.0))
+    wide
+      .filter(bigN > 3)
+      .select(col("event_type"), col("n0"), col("n1"), col("n2"),
+        graft.functions.TextF.round6HalfUp(f).as(stat),
+        (f > lit(2.9957)).as("significant"))
+      .orderBy("event_type")
+  }
 
   /** One-way ANOVA F per event type across a THREE-arm deterministic
     * assignment (md5 mod 3 — [[abTestOf]]'s two-arm split generalized;
@@ -695,37 +742,9 @@ object Behavior {
     * Shape: ONE map-combinable fact aggregate keyed by
     * (type, arm) — k·|types| rows; everything after is arithmetic on
     * that bounded frame. */
-  def anovaFOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val e = events.select(col("event_type"),
-      floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-      arm3(col("user_id")).as("arm"))
-    val perArm = e.groupBy("event_type", "arm")
-      .agg(count(lit(1)).as("n"),
-        sum(col("vq").cast(dec)).as("s"),
-        sum(expr(s"CAST(vq AS $dec) * vq")).as("ss"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"), pick("n", 2).as("n2"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"), pick("s", 2).as("s2"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"), pick("ss", 2).as("ss2"))
-      .filter(col("n0").isNotNull && col("n1").isNotNull && col("n2").isNotNull)
-    def d(c: Column) = c.cast("double")
-    val bigN = col("n0") + col("n1") + col("n2")
-    val sb = d(col("s0")) * d(col("s0")) / d(col("n0")) +
-      d(col("s1")) * d(col("s1")) / d(col("n1")) +
-      d(col("s2")) * d(col("s2")) / d(col("n2"))
-    val sTot = d(col("s0") + col("s1") + col("s2"))
-    val ssb = sb - sTot * sTot / d(bigN)
-    val ssw = d(col("ss0") + col("ss1") + col("ss2")) - sb
-    val f = (ssb / lit(2.0)) / nullif(ssw / d(bigN - 3), lit(0.0))
-    wide
-      .filter(bigN > 3)
-      .select(col("event_type"), col("n0"), col("n1"), col("n2"),
-        graft.functions.TextF.round6HalfUp(f).as("f_stat"),
-        (f > lit(2.9957)).as("significant"))
-      .orderBy("event_type")
-  }
+  def anovaFOf(events: DataFrame): DataFrame =
+    threeArmF(moments(armValues(events, 3L), Seq("event_type", "arm"), "vq"),
+      "f_stat")
 
   def anovaF(spark: SparkSession, dir: String): DataFrame =
     anovaFOf(Tables.events(spark, dir))
@@ -743,18 +762,15 @@ object Behavior {
     * Exactness: medians are LOWER medians off the (type, arm, value)
     * micro-grid cumsum (rank (n+1) div 2 — both engines truncate
     * nonneg identically; no interpolation, so z = |v − m| stays an
-    * exact integer); z-moments per arm ride decimal(38,0); the final
-    * double combination mirrors [[anovaFOf]] textually.
+    * exact integer); z-moments per arm ride decimal(38,0); the F
+    * chain is [[anovaFOf]]'s own (the shared `threeArmF`).
     *
     * Shape: one (type, arm, value) map-combinable grid count — the
     * only fact-sized shuffle ([[Robust.ksTestOf]]'s vocabulary
     * argument); median, z-moments, pivot and F all ride the bounded
     * grid. */
   def brownForsytheOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val grid = events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        arm3(col("user_id")).as("arm"))
+    val grid = armValues(events, 3L)
       .groupBy("event_type", "arm", "vq")
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(false) // the median pass and the z-moments both read it
@@ -771,29 +787,9 @@ object Behavior {
         abs(col("vq") - col("m")).as("z"), col("c"))
       .groupBy("event_type", "arm")
       .agg(sum("c").as("n"),
-        sum(expr(s"CAST(z AS $dec) * c")).as("s"),
-        sum(expr(s"CAST(z AS $dec) * z * c")).as("ss"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"), pick("n", 2).as("n2"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"), pick("s", 2).as("s2"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"), pick("ss", 2).as("ss2"))
-      .filter(col("n0").isNotNull && col("n1").isNotNull && col("n2").isNotNull)
-    def d(c: Column) = c.cast("double")
-    val bigN = col("n0") + col("n1") + col("n2")
-    val sb = d(col("s0")) * d(col("s0")) / d(col("n0")) +
-      d(col("s1")) * d(col("s1")) / d(col("n1")) +
-      d(col("s2")) * d(col("s2")) / d(col("n2"))
-    val sTot = d(col("s0") + col("s1") + col("s2"))
-    val ssb = sb - sTot * sTot / d(bigN)
-    val ssw = d(col("ss0") + col("ss1") + col("ss2")) - sb
-    val w = (ssb / lit(2.0)) / nullif(ssw / d(bigN - 3), lit(0.0))
-    wide
-      .filter(bigN > 3)
-      .select(col("event_type"), col("n0"), col("n1"), col("n2"),
-        graft.functions.TextF.round6HalfUp(w).as("w_stat"),
-        (w > lit(2.9957)).as("significant"))
-      .orderBy("event_type")
+        sum(expr(s"CAST(z AS $Dec) * c")).as("s"),
+        sum(expr(s"CAST(z AS $Dec) * z * c")).as("ss"))
+    threeArmF(perArm, "w_stat")
   }
 
   def brownForsythe(spark: SparkSession, dir: String): DataFrame =
@@ -832,6 +828,31 @@ object Behavior {
   def conversionLatency(spark: SparkSession, dir: String): DataFrame =
     conversionLatencyOf(Tables.events(spark, dir))
 
+  /** Distinct (user, item) baskets, item = props.k (0 when absent). */
+  private def baskets(events: DataFrame): DataFrame =
+    events.select(col("user_id"),
+      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
+        .as("item"))
+      .distinct()
+
+  /** Unordered item pairs (item_a < item_b) co-occurring in at least
+    * `minSupport` baskets — `c12` users, counted by one user-keyed
+    * basket self-join (quadratic in basket size, never in users) —
+    * beside each item's own basket count `c1a` / `c1b` (the per-item
+    * frame feeds both joins, so it is materialized once). */
+  private def pairSupport(items: DataFrame, minSupport: Long): DataFrame = {
+    val pairs = items.select(col("user_id"), col("item").as("item_a"))
+      .join(items.select(col("user_id"), col("item").as("item_b")), Seq("user_id"))
+      .filter(col("item_a") < col("item_b"))
+      .groupBy("item_a", "item_b").agg(count(lit(1)).as("c12"))
+      .filter(col("c12") >= minSupport)
+    val c1 = items.groupBy("item").agg(count(lit(1)).as("c1"))
+      .localCheckpoint(false)
+    pairs
+      .join(c1.select(col("item").as("item_a"), col("c1").as("c1a")), "item_a")
+      .join(c1.select(col("item").as("item_b"), col("c1").as("c1b")), "item_b")
+  }
+
   /** Item co-occurrence affinity ("users who touched A also touched
     * B"): 2-itemset support over per-user distinct item baskets, with
     * lift against the independent-items baseline — the market-basket
@@ -849,27 +870,14 @@ object Behavior {
   def itemAffinityOf(events: DataFrame, minSupport: Long = 5,
                      k: Int = 50): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val items = events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
-      .distinct()
-      .localCheckpoint(false)
+    val items = baskets(events).localCheckpoint(false)
     val users = items.agg(countDistinct("user_id").as("n_users")) // 1 row
-    val pairs = items.select(col("user_id"), col("item").as("item_a"))
-      .join(items.select(col("user_id"), col("item").as("item_b")), Seq("user_id"))
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b").agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minSupport)
-    val c1 = items.groupBy("item").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(false)
     val lift = round(
       (col("c12").cast("double") / col("n_users").cast("double")) /
         ((col("c1a").cast("double") / col("n_users").cast("double")) *
           (col("c1b").cast("double") / col("n_users").cast("double"))),
       4)
-    pairs
-      .join(c1.select(col("item").as("item_a"), col("c1").as("c1a")), "item_a")
-      .join(c1.select(col("item").as("item_b"), col("c1").as("c1b")), "item_b")
+    pairSupport(items, minSupport)
       .crossJoin(broadcast(users)) // 1 row by construction
       .select(col("item_a"), col("item_b"), col("c12"), lift.as("lift"))
       .orderBy(col("c12").desc, col("lift").desc, col("item_a"), col("item_b"))
@@ -913,10 +921,7 @@ object Behavior {
     // (thread-dump verified: 1 RUNNABLE worker, 31 idle). Re-spread
     // the small frame to the session's parallelism before it becomes
     // the expansion's probe side; the round-robin shuffle is 36 k rows.
-    val items = events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
-      .distinct()
+    val items = baskets(events)
       .repartition(events.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint(false) // four consumers (three legs + pairs)
     val freqPairs = items.select(col("user_id"), col("item").as("pa"))
@@ -1059,21 +1064,7 @@ object Behavior {
   def itemCosineOf(events: DataFrame, minSupport: Long = 5,
                    topN: Int = 3): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
-    val items = events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
-      .distinct()
-      .localCheckpoint(false)
-    val pairs = items.select(col("user_id"), col("item").as("item_a"))
-      .join(items.select(col("user_id"), col("item").as("item_b")), Seq("user_id"))
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b").agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minSupport)
-    val c1 = items.groupBy("item").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(false)
-    val scored = pairs
-      .join(c1.select(col("item").as("item_a"), col("c1").as("c1a")), "item_a")
-      .join(c1.select(col("item").as("item_b"), col("c1").as("c1b")), "item_b")
+    val scored = pairSupport(baskets(events).localCheckpoint(false), minSupport)
       .select(col("item_a"), col("item_b"), col("c12"),
         graft.functions.TextF.round6HalfUp(col("c12").cast("double")
           / (sqrt(col("c1a").cast("double")) * sqrt(col("c1b").cast("double"))))
@@ -1210,6 +1201,29 @@ object Behavior {
   def negativeSamples(spark: SparkSession, dir: String): DataFrame =
     negativeSamplesOf(Tables.events(spark, dir))
 
+  /** The A/B conversion fold [[abTestOf]] and [[powerMdeOf]] read: a
+    * user converts when they purchase ON THE REPORT DAY (the corpus
+    * max date, a 1-row broadcast), then ONE 1-row conditional
+    * aggregate gives n0, n1, conv0, conv1 over the [[arm2]] split. */
+  private def reportDayArms(events: DataFrame): DataFrame = {
+    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    events
+      .select(col("user_id"), to_date(col("ts")).as("day"),
+        col("event_type"))
+      .crossJoin(broadcast(maxDay)) // 1 row by construction
+      .select(col("user_id"),
+        when(col("event_type") === "purchase" &&
+          col("day") === col("report_date"), 1L).otherwise(0L).as("p"))
+      .groupBy("user_id")
+      .agg(max("p").as("converted"))
+      .select(col("converted"), arm2(col("user_id")).as("arm"))
+      .agg(
+        sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n0"),
+        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n1"),
+        sum(when(col("arm") === 0L, col("converted")).otherwise(0L)).as("conv0"),
+        sum(when(col("arm") === 1L, col("converted")).otherwise(0L)).as("conv1"))
+  }
+
   /** Two-proportion z-test A/B readout: users hash into two arms
     * (md5-prefix parity — the engine-portable assignment every other
     * hash draw here uses), conversion = at least one purchase ON THE
@@ -1227,28 +1241,10 @@ object Behavior {
     * conversion), ONE conditional 1-row aggregate over both arms —
     * no other join anywhere. */
   def abTestOf(events: DataFrame): DataFrame = {
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
-    val users = events
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        col("event_type"))
-      .crossJoin(broadcast(maxDay)) // 1 row by construction
-      .select(col("user_id"),
-        when(col("event_type") === "purchase" &&
-          col("day") === col("report_date"), 1L).otherwise(0L).as("p"))
-      .groupBy("user_id")
-      .agg(max("p").as("converted"))
-      .select(col("converted"),
-        pmod(conv(substring(md5(concat(lit("ab:"),
-          col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-          lit(2L)).as("arm"))
     val r4 = graft.functions.TextF.round4HalfUp _
     val pPool = (col("conv0") + col("conv1")).cast("double") /
       (col("n0") + col("n1")).cast("double")
-    users.agg(
-        sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("arm") === 0L, col("converted")).otherwise(0L)).as("conv0"),
-        sum(when(col("arm") === 1L, col("converted")).otherwise(0L)).as("conv1"))
+    reportDayArms(events)
       .select(col("n0"), col("n1"), col("conv0"), col("conv1"),
         r4(col("conv0").cast("double")
           / nullif(col("n0").cast("double"), lit(0.0))).as("p0"),
@@ -1282,30 +1278,13 @@ object Behavior {
     * satisfies; p̄ ∈ {0, 1} (no variance) nulls via try_divide-style
     * guards.
     *
-    * Shape: EXACTLY the [[abTestOf]] fold — 1-row report-date
-    * broadcast, ONE user aggregate, ONE 1-row conditional aggregate;
-    * the MDE chain is map-side arithmetic on that single row. */
+    * Shape: [[abTestOf]]'s own fold (the shared `reportDayArms`) —
+    * 1-row report-date broadcast, ONE user aggregate, ONE 1-row
+    * conditional aggregate; the MDE chain is map-side arithmetic on
+    * that single row. */
   def powerMdeOf(events: DataFrame): DataFrame = {
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
-    val users = events
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        col("event_type"))
-      .crossJoin(broadcast(maxDay)) // 1 row by construction
-      .select(col("user_id"),
-        when(col("event_type") === "purchase" &&
-          col("day") === col("report_date"), 1L).otherwise(0L).as("p"))
-      .groupBy("user_id")
-      .agg(max("p").as("converted"))
-      .select(col("converted"),
-        pmod(conv(substring(md5(concat(lit("ab:"),
-          col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-          lit(2L)).as("arm"))
     val r6 = graft.functions.TextF.round6HalfUp _
-    users.agg(
-        sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("arm") === 0L, col("converted")).otherwise(0L)).as("conv0"),
-        sum(when(col("arm") === 1L, col("converted")).otherwise(0L)).as("conv1"))
+    reportDayArms(events)
       .filter(col("n0") > 0 && col("n1") > 0)
       .select(col("n0"), col("n1"), col("conv0"), col("conv1"),
         r6(expr(
@@ -1417,6 +1396,26 @@ object Behavior {
   def mantelHaenszel(spark: SparkSession, dir: String): DataFrame =
     mantelHaenszelOf(Tables.events(spark, dir))
 
+  /** The two-arm mean/variance chain [[welchTestOf]] and
+    * [[tostEquivalenceOf]] share: per-(type, arm) micro-grid
+    * n/Σv/Σv² pivoted to fixed arm order, arms with n ≤ 1 dropped,
+    * then per arm the mean m and the sample variance v as ONE
+    * deterministic double sequence, textually identical in the
+    * oracles. */
+  private def twoArmMeanVar(events: DataFrame): DataFrame =
+    pivot(moments(armValues(events, 2L), Seq("event_type", "arm"), "vq"),
+        Seq("event_type"), levels("arm", 2), "n", "s", "ss")
+      .filter(col("n0") > 1 && col("n1") > 1)
+      .selectExpr("event_type", "n0", "n1",
+        "CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS m0",
+        "CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS m1",
+        """(CAST(ss0 AS DOUBLE)
+          | - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE))
+          |/ CAST(n0 - 1 AS DOUBLE)""".stripMargin + " AS v0",
+        """(CAST(ss1 AS DOUBLE)
+          | - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
+          |/ CAST(n1 - 1 AS DOUBLE)""".stripMargin + " AS v1")
+
   /** Welch's unequal-variance t-test + Cohen's d per event type over
     * the two-arm md5 assignment — the CONTINUOUS-value A/B readout
     * beside [[abTestOf]] (proportions) and
@@ -1443,29 +1442,7 @@ object Behavior {
     * Shape: ONE map-combinable fact aggregate keyed by (type, arm);
     * everything after is arithmetic on the 2·|types| frame. */
   def welchTestOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val perArm = events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        arm2(col("user_id")).as("arm"))
-      .groupBy("event_type", "arm")
-      .agg(count(lit(1)).as("n"),
-        sum(col("vq").cast(dec)).as("s"),
-        sum(expr(s"CAST(vq AS $dec) * vq")).as("ss"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"))
-      .filter(col("n0") > 1 && col("n1") > 1)
-    val calc = wide.selectExpr("event_type", "n0", "n1",
-      "CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS m0",
-      "CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS m1",
-      """(CAST(ss0 AS DOUBLE)
-        | - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE))
-        |/ CAST(n0 - 1 AS DOUBLE)""".stripMargin + " AS v0",
-      """(CAST(ss1 AS DOUBLE)
-        | - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-        |/ CAST(n1 - 1 AS DOUBLE)""".stripMargin + " AS v1")
+    val calc = twoArmMeanVar(events)
       .withColumn("se2", expr(
         "v0 / CAST(n0 AS DOUBLE) + v1 / CAST(n1 AS DOUBLE)"))
     calc.select(col("event_type"), col("n0"), col("n1"),
@@ -1503,41 +1480,19 @@ object Behavior {
     * NOT evidence of equivalence, only absence of evidence): margin
     * δ = 10% of |control mean|, z_lower = (Δ̄ + δ)/SE and z_upper =
     * (δ − Δ̄)/SE on [[welchTestOf]]'s exact moment machinery
-    * (integer micro-grid n/Σv/Σv² per arm, fixed arm order, ONE
-    * double chain), equivalent iff BOTH exceed 1.644854 (one-sided
-    * 5% — the fixed-literal rule).
+    * (the shared `twoArmMeanVar`: integer micro-grid n/Σv/Σv² per
+    * arm, fixed arm order, ONE double chain), equivalent iff BOTH
+    * exceed 1.644854 (one-sided 5% — the fixed-literal rule).
     *
     * Degenerate contract: arms need n ≥ 2; a zero control mean
     * makes δ = 0 (equivalence then demands Δ̄ exactly inside ±0) and
     * zero-variance pairs null the z's via NULLIF — never a
     * fabricated verdict.
     *
-    * Shape: EXACTLY the welch fold — ONE map-combinable (type, arm)
-    * fact aggregate, arithmetic on the ≤|types| frame after. */
+    * Shape: the welch fold — ONE map-combinable (type, arm) fact
+    * aggregate, arithmetic on the ≤|types| frame after. */
   def tostEquivalenceOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val perArm = events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        arm2(col("user_id")).as("arm"))
-      .groupBy("event_type", "arm")
-      .agg(count(lit(1)).as("n"),
-        sum(col("vq").cast(dec)).as("s"),
-        sum(expr(s"CAST(vq AS $dec) * vq")).as("ss"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"))
-      .filter(col("n0") > 1 && col("n1") > 1)
-    val calc = wide.selectExpr("event_type", "n0", "n1",
-      "CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS m0",
-      "CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS m1",
-      """(CAST(ss0 AS DOUBLE)
-        | - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE))
-        |/ CAST(n0 - 1 AS DOUBLE)""".stripMargin + " AS v0",
-      """(CAST(ss1 AS DOUBLE)
-        | - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-        |/ CAST(n1 - 1 AS DOUBLE)""".stripMargin + " AS v1")
+    val calc = twoArmMeanVar(events)
       .withColumn("se", expr(
         "sqrt(v0 / CAST(n0 AS DOUBLE) + v1 / CAST(n1 AS DOUBLE))"))
       .withColumn("delta", expr("abs(m0) * 0.1"))
@@ -1634,10 +1589,7 @@ object Behavior {
       .select(arm3(col("user_id")).as("arm"), col("conv"))
       .groupBy("arm")
       .agg(count(lit(1)).as("n"), sum("conv").as("r"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy()
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"), pick("n", 2).as("n2"),
-        pick("r", 0).as("r0"), pick("r", 1).as("r1"), pick("r", 2).as("r2"))
+    val wide = pivot(perArm, Nil, levels("arm", 3), "n", "r")
       .filter(col("n0").isNotNull && col("n1").isNotNull && col("n2").isNotNull)
       .withColumn("nn", col("n0") + col("n1") + col("n2"))
       .withColumn("rr", col("r0") + col("r1") + col("r2"))
@@ -1806,22 +1758,7 @@ object Behavior {
                          k: Int = 50): DataFrame = {
     require(k > 0 && minSupport >= 1,
       s"need k > 0 and minSupport >= 1, got $k/$minSupport")
-    val items = events.select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
-      .distinct()
-      .localCheckpoint(false)
-    val pairs = items.select(col("user_id"), col("item").as("item_a"))
-      .join(items.select(col("user_id"), col("item").as("item_b")),
-        Seq("user_id"))
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b").agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minSupport)
-    val c1 = items.groupBy("item").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(false)
-    pairs
-      .join(c1.select(col("item").as("item_a"), col("c1").as("c1a")), "item_a")
-      .join(c1.select(col("item").as("item_b"), col("c1").as("c1b")), "item_b")
+    pairSupport(baskets(events).localCheckpoint(false), minSupport)
       .select(col("item_a"), col("item_b"), col("c12"),
         col("c1a"), col("c1b"),
         expr("CAST((c12 * 1000000) div c1a AS BIGINT)").as("conf_ab_ppm"),
@@ -1855,30 +1792,19 @@ object Behavior {
     * grain, one 4-cell aggregate after — nothing else touches
     * facts. */
   def didReadoutOf(events: DataFrame, splitDay: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val perUserPeriod = events
       .select(col("user_id"),
         floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
         when(col("ts") < lit(splitDay).cast("timestamp"), 0).otherwise(1)
           .as("period"),
-        pmod(conv(substring(md5(concat(lit("ab:"),
-          col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-          lit(2L)).as("arm"))
+        arm2(col("user_id")).as("arm"))
       .groupBy("user_id", "arm", "period")
       .agg(floor(sum("qv").cast("double") / count(lit(1)).cast("double")
         / 1000.0 + 0.5).cast("long").as("q")) // per-user period mean, milli grid
-    val cells = perUserPeriod.groupBy("arm", "period")
-      .agg(count(lit(1)).as("n"), sum(col("q").cast(dec)).as("s"),
-        sum(expr(s"CAST(q AS $dec) * q")).as("ss"))
-    def pick(c: String, a: Int, p: Int) =
-      max(when(col("arm") === a && col("period") === p, col(c)))
-    val wide = cells.agg(
-      pick("n", 0, 0).as("n00"), pick("n", 0, 1).as("n01"),
-      pick("n", 1, 0).as("n10"), pick("n", 1, 1).as("n11"),
-      pick("s", 0, 0).as("s00"), pick("s", 0, 1).as("s01"),
-      pick("s", 1, 0).as("s10"), pick("s", 1, 1).as("s11"),
-      pick("ss", 0, 0).as("ss00"), pick("ss", 0, 1).as("ss01"),
-      pick("ss", 1, 0).as("ss10"), pick("ss", 1, 1).as("ss11"))
+    val armPeriod = for (a <- 0 to 1; p <- 0 to 1)
+      yield s"$a$p" -> (col("arm") === a && col("period") === p)
+    val wide = pivot(moments(perUserPeriod, Seq("arm", "period"), "q"), Nil,
+        armPeriod, "n", "s", "ss")
       .filter(col("n00").isNotNull && col("n01").isNotNull &&
         col("n10").isNotNull && col("n11").isNotNull)
     def d(c: Column) = c.cast("double")
@@ -1906,6 +1832,27 @@ object Behavior {
 
   def didReadout(spark: SparkSession, dir: String): DataFrame =
     didReadoutOf(Tables.events(spark, dir), "2024-01-16")
+
+  /** Per user, the micro-grid value sum and event count before
+    * (`pre_*`) and from (`post_*`) `splitDay` on — only users active
+    * in BOTH periods, since a pre/post read needs a covariate and an
+    * outcome. [[stratifiedAteOf]] and [[cupedAdjustOf]] start here. */
+  private def prePostUsers(events: DataFrame, splitDay: String): DataFrame =
+    events
+      .select(col("user_id"), micro(col("value")).as("qv"),
+        (col("ts") < lit(splitDay).cast("timestamp")).as("pre"))
+      .groupBy("user_id")
+      .agg(sum(when(col("pre"), col("qv"))).as("pre_sum"),
+        count(when(col("pre"), lit(1))).as("pre_n"),
+        sum(when(!col("pre"), col("qv"))).as("post_sum"),
+        count(when(!col("pre"), lit(1))).as("post_n"))
+      .filter(col("pre_n") > 0 && col("post_n") > 0)
+
+  /** A per-user mean of micro-grid values `s` over `n` events, on the
+    * milli grid (one division, floor-form half-up). */
+  private def milliMean(s: String, n: String): Column =
+    floor(col(s).cast("double") / col(n).cast("double") / 1000.0 + 0.5)
+      .cast("long")
 
   /** Qini uplift curve (Radcliffe '07 — the targeting read behind
     * every uplift model: if we treated only the top-scored users,
@@ -1935,12 +1882,8 @@ object Behavior {
         max(when(col("conv"), 1L).otherwise(0L)).as("converted"))
       .filter(col("pre_n") > 0) // score needs a pre-period
       .select(col("user_id"),
-        floor(col("pre_sum").cast("double") / col("pre_n").cast("double")
-          / 1000.0 + 0.5).cast("long").as("score"),
-        col("converted"),
-        pmod(conv(substring(md5(concat(lit("ab:"),
-          col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-          lit(2L)).as("arm"))
+        milliMean("pre_sum", "pre_n").as("score"),
+        col("converted"), arm2(col("user_id")).as("arm"))
     val (ranked, total) = graft.Scale.twoPhaseRank(perUser,
       Seq(col("score").desc, col("user_id")))
     val deciles = ranked
@@ -1999,23 +1942,9 @@ object Behavior {
                       strata: Int = 10): DataFrame = {
     require(strata >= 2, s"strata must be >= 2, got $strata")
     val dec = "decimal(38,0)"
-    val perUser = events
-      .select(col("user_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
-        (col("ts") < lit(splitDay).cast("timestamp")).as("pre"))
-      .groupBy("user_id")
-      .agg(sum(when(col("pre"), col("qv"))).as("pre_sum"),
-        count(when(col("pre"), lit(1))).as("pre_n"),
-        sum(when(!col("pre"), col("qv"))).as("post_sum"),
-        count(when(!col("pre"), lit(1))).as("post_n"))
-      // the estimate needs BOTH a covariate and an outcome
-      .filter(col("pre_n") > 0 && col("post_n") > 0)
-      .select(col("user_id"),
-        floor(col("pre_sum").cast("double") / col("pre_n").cast("double")
-          / 1000.0 + 0.5).cast("long").as("score"),
-        floor(col("post_sum").cast("double") / col("post_n").cast("double")
-          / 1000.0 + 0.5).cast("long").as("y"),
-        arm2(col("user_id")).as("arm"))
+    val perUser = prePostUsers(events, splitDay)
+      .select(col("user_id"), milliMean("pre_sum", "pre_n").as("score"),
+        milliMean("post_sum", "post_n").as("y"), arm2(col("user_id")).as("arm"))
     val (ranked, total) = graft.Scale.twoPhaseRank(perUser,
       Seq(col("score").desc, col("user_id")))
     val cells = ranked
@@ -2194,20 +2123,9 @@ object Behavior {
     * drop (no covariate ⇒ nothing to adjust).
     */
   def cupedAdjustOf(events: DataFrame, splitDay: String): DataFrame = {
-    val users = events
-      .select(col("user_id"), floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
-        (col("ts") < lit(splitDay).cast("timestamp")).as("pre"))
-      .groupBy("user_id")
-      .agg(sum(when(col("pre"), col("qv"))).as("pre_sum"),
-        count(when(col("pre"), lit(1))).as("pre_n"),
-        sum(when(!col("pre"), col("qv"))).as("post_sum"),
-        count(when(!col("pre"), lit(1))).as("post_n"))
-      .filter(col("pre_n") > 0 && col("post_n") > 0)
-      .select(col("user_id"),
-        floor(col("pre_sum").cast("double") / col("pre_n").cast("double")
-          / 1000.0 + 0.5).cast("long").as("qx"),
-        floor(col("post_sum").cast("double") / col("post_n").cast("double")
-          / 1000.0 + 0.5).cast("long").as("qy"))
+    val users = prePostUsers(events, splitDay)
+      .select(col("user_id"), milliMean("pre_sum", "pre_n").as("qx"),
+        milliMean("post_sum", "post_n").as("qy"))
     val all = Window.partitionBy(lit(1))
     val arms = users
       .groupBy((col("user_id") % 2).as("arm"))
@@ -2239,6 +2157,27 @@ object Behavior {
   def cupedAdjust(spark: SparkSession, dir: String): DataFrame =
     cupedAdjustOf(Tables.events(spark, dir), "2024-01-16")
 
+  /** Per user, the lifetime in days between first and last event
+    * (`duration`) and the right-censoring flag: a user still active
+    * within `censorDays` of the corpus report date (a 1-row broadcast)
+    * is `censored` = 1. One map-combinable user aggregate — the
+    * survival reads' only fact-sized shuffle. */
+  private def lifetimes(events: DataFrame, censorDays: Int): DataFrame = {
+    require(censorDays > 0, s"censorDays must be positive, got $censorDays")
+    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    events
+      .select(col("user_id"), to_date(col("ts")).as("day"))
+      .crossJoin(broadcast(maxDay)) // 1 row by construction
+      .groupBy("user_id")
+      .agg(min("day").as("first_day"), max("day").as("last_day"),
+        first("report_date").as("report_date"))
+      .select(col("user_id"),
+        datediff(col("last_day"), col("first_day")).cast("long")
+          .as("duration"),
+        when(datediff(col("report_date"), col("last_day")) < censorDays, 1L)
+          .otherwise(0L).as("censored"))
+  }
+
   /** Kaplan-Meier life table for user churn — the survival-analysis
     * view of retention (cf. [[cohortRetentionOf]], which reports
     * per-cohort return RATES; this reports the hazard structure of
@@ -2262,19 +2201,7 @@ object Behavior {
     * so the unpartitioned reverse-cumulative window is bounded by the
     * calendar, not the data. */
   def churnLifetableOf(events: DataFrame, censorDays: Int = 7): DataFrame = {
-    require(censorDays > 0, s"censorDays must be positive, got $censorDays")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
-    val durations = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .crossJoin(broadcast(maxDay)) // 1 row by construction
-      .groupBy("user_id")
-      .agg(min("day").as("first_day"), max("day").as("last_day"),
-        first("report_date").as("report_date"))
-      .select(
-        datediff(col("last_day"), col("first_day")).cast("long")
-          .as("duration"),
-        when(datediff(col("report_date"), col("last_day")) < censorDays, 1L)
-          .otherwise(0L).as("censored"))
+    val durations = lifetimes(events, censorDays)
     val byDur = durations.groupBy("duration")
       .agg(sum(lit(1L) - col("censored")).as("n_churned"),
         sum(col("censored")).as("n_censored"))
@@ -2351,20 +2278,8 @@ object Behavior {
     * bounded duration window, one global sum. No fact-scale window,
     * nothing driver-side. */
   def logrankTestOf(events: DataFrame, censorDays: Int = 7): DataFrame = {
-    require(censorDays > 0, s"censorDays must be positive, got $censorDays")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
-    val durations = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .crossJoin(broadcast(maxDay)) // 1 row by construction
-      .groupBy("user_id")
-      .agg(min("day").as("first_day"), max("day").as("last_day"),
-        first("report_date").as("report_date"))
-      .select(
-        datediff(col("last_day"), col("first_day")).cast("long")
-          .as("duration"),
-        when(datediff(col("report_date"), col("last_day")) < censorDays, 1L)
-          .otherwise(0L).as("censored"),
-        arm2(col("user_id")).as("arm"))
+    val durations = lifetimes(events, censorDays)
+      .withColumn("arm", arm2(col("user_id")))
     val byDur = durations.groupBy("duration")
       .agg(
         sum(when(col("arm") === 0L, lit(1L) - col("censored"))
@@ -2437,19 +2352,8 @@ object Behavior {
                  horizonDays: Int = 28): DataFrame = {
     require(censorDays > 0 && horizonDays > 0,
       s"need positive censorDays/horizonDays, got $censorDays/$horizonDays")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
-    val durations = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .crossJoin(broadcast(maxDay)) // 1 row by construction
-      .groupBy("user_id")
-      .agg(min("day").as("first_day"), max("day").as("last_day"),
-        first("report_date").as("report_date"))
-      .select(
-        datediff(col("last_day"), col("first_day")).cast("long")
-          .as("duration"),
-        when(datediff(col("report_date"), col("last_day")) < censorDays, 1L)
-          .otherwise(0L).as("censored"),
-        arm2(col("user_id")).as("arm"))
+    val durations = lifetimes(events, censorDays)
+      .withColumn("arm", arm2(col("user_id")))
     val byDur = durations.groupBy("arm", "duration")
       .agg(sum(lit(1L) - col("censored")).as("d"), count(lit(1)).as("t"))
     val riskW = Window.partitionBy("arm").orderBy(col("duration"))
@@ -2561,11 +2465,7 @@ object Behavior {
     * Shape: one map-side-combinable (type, tow) count (bounded cells),
     * two bounded window passes for margins, one 1-row fold. */
   def cramersVOf(events: DataFrame): DataFrame = {
-    val cells = events
-      .select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
-          .as("tow"))
-      .groupBy("event_type", "tow").agg(count(lit(1)).as("o"))
+    val cells = towCells(events)
     val rt = cells.groupBy("event_type").agg(sum("o").as("rt"))
     val ct = cells.groupBy("tow").agg(sum("o").as("ct"))
     // The COMPLETE margin grid, not just observed cells: a zero cell
@@ -2601,6 +2501,51 @@ object Behavior {
   def cramersV(spark: SparkSession, dir: String): DataFrame =
     cramersVOf(Tables.events(spark, dir))
 
+  /** The touch window the positional attribution models share:
+    * purchases (pid, tp, micro-grid qv) and the purchase ⋈ click pairs
+    * on user_id whose click lands STRICTLY before the purchase and
+    * within `windowDays` of it (the funnel convention). */
+  private def touchWindow(events: DataFrame,
+                          windowDays: Int): (DataFrame, DataFrame) = {
+    require(windowDays > 0, s"windowDays must be positive, got $windowDays")
+    val wUs = windowDays.toLong * 86400L * 1000000L
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id"), unix_micros(col("ts")).as("tc"),
+        col("event_id").as("click_id"),
+        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
+          .as("item"))
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id"), unix_micros(col("ts")).as("tp"),
+        col("event_id").as("pid"), micro(col("value")).as("qv"))
+    (purchases, purchases.join(clicks, Seq("user_id"))
+      .filter(col("tc") < col("tp") && col("tc") >= col("tp") - wUs))
+  }
+
+  /** The per-item attribution report over touches carrying an integer
+    * micro `share`: touches, purchases and attributed dollars per item,
+    * plus the explicit item −1 (UNATTRIBUTED) row for purchases with no
+    * in-window touch — a silent drop would make the report lie about
+    * totals. */
+  private def attributionReport(purchases: DataFrame,
+                                touches: DataFrame): DataFrame = {
+    val attributed = touches
+      .groupBy("item")
+      .agg(count(lit(1)).as("n_touches"),
+        countDistinct(col("pid")).as("n_purchases"),
+        sum("share").as("micros"))
+    val unattributed = purchases
+      .join(touches.select(col("pid")).distinct(), Seq("pid"), "left_anti")
+      .agg(count(lit(1)).as("n_purchases"), sum("qv").as("micros"))
+      .select(lit(-1L).as("item"), lit(0L).as("n_touches"),
+        col("n_purchases"), coalesce(col("micros"), lit(0L)).as("micros"))
+    attributed.select(col("item"), col("n_touches"), col("n_purchases"),
+        col("micros"))
+      .unionByName(unattributed.filter(col("n_purchases") > 0))
+      .select(col("item"), col("n_touches"), col("n_purchases"),
+        graft.functions.TextF.microsTo4dp(col("micros")).as("attributed_usd"))
+      .orderBy("item")
+  }
+
   /** Linear multi-touch revenue attribution — the ads-measurement
     * counterpart of [[AsofJoin]]'s last-touch: each purchase's value
     * splits EQUALLY over the user's clicks in the preceding
@@ -2623,20 +2568,9 @@ object Behavior {
     * cardinality — no skew ceiling); the item rollup is
     * map-combinable. */
   def linearAttributionOf(events: DataFrame, windowDays: Int = 3): DataFrame = {
-    require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val wUs = windowDays.toLong * 86400L * 1000000L
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), unix_micros(col("ts")).as("tc"),
-        col("event_id").as("click_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")).as("tp"),
-        col("event_id").as("pid"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("qv"))
+    val (purchases, inWindow) = touchWindow(events, windowDays)
     val byPurchase = Window.partitionBy("pid")
-    val touches = purchases.join(clicks, Seq("user_id"))
-      .filter(col("tc") < col("tp") && col("tc") >= col("tp") - wUs)
+    val touches = inWindow
       .withColumn("n", count(lit(1)).over(byPurchase))
       .withColumn("rk", row_number().over(
         byPurchase.orderBy(col("tc"), col("click_id"))))
@@ -2644,22 +2578,7 @@ object Behavior {
         (expr("abs(qv) div n") +
           when(col("rk") <= expr("abs(qv) % n"), 1L).otherwise(0L)) *
           when(col("qv") < 0, -1L).otherwise(1L))
-    val attributed = touches
-      .groupBy("item")
-      .agg(count(lit(1)).as("n_touches"),
-        countDistinct(col("pid")).as("n_purchases"),
-        sum("share").as("micros"))
-    val unattributed = purchases
-      .join(touches.select(col("pid")).distinct(), Seq("pid"), "left_anti")
-      .agg(count(lit(1)).as("n_purchases"), sum("qv").as("micros"))
-      .select(lit(-1L).as("item"), lit(0L).as("n_touches"),
-        col("n_purchases"), coalesce(col("micros"), lit(0L)).as("micros"))
-    attributed.select(col("item"), col("n_touches"), col("n_purchases"),
-        col("micros"))
-      .unionByName(unattributed.filter(col("n_purchases") > 0))
-      .select(col("item"), col("n_touches"), col("n_purchases"),
-        graft.functions.TextF.microsTo4dp(col("micros")).as("attributed_usd"))
-      .orderBy("item")
+    attributionReport(purchases, touches)
   }
 
   /** Time-decay multi-touch attribution — the third positional model
@@ -2686,20 +2605,9 @@ object Behavior {
     * (both sides pre-filtered map-side), per-purchase windows over
     * the ≤ window-sized touch frame, one item aggregate. */
   def decayAttributionOf(events: DataFrame, windowDays: Int = 3): DataFrame = {
-    require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val wUs = windowDays.toLong * 86400L * 1000000L
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), unix_micros(col("ts")).as("tc"),
-        col("event_id").as("click_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")).as("tp"),
-        col("event_id").as("pid"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("qv"))
+    val (purchases, inWindow) = touchWindow(events, windowDays)
     val byPurchase = Window.partitionBy("pid")
-    val touches = purchases.join(clicks, Seq("user_id"))
-      .filter(col("tc") < col("tp") && col("tc") >= col("tp") - wUs)
+    val touches = inWindow
       .withColumn("age", expr("(tp - tc) div 86400000000"))
       .withColumn("w", expr(
         s"shiftleft(CAST(1 AS BIGINT), CAST($windowDays - age AS INT))"))
@@ -2711,22 +2619,7 @@ object Behavior {
       .withColumn("share",
         (col("base") + when(col("rk") <= col("rem"), 1L).otherwise(0L)) *
           when(col("qv") < 0, -1L).otherwise(1L))
-    val attributed = touches
-      .groupBy("item")
-      .agg(count(lit(1)).as("n_touches"),
-        countDistinct(col("pid")).as("n_purchases"),
-        sum("share").as("micros"))
-    val unattributed = purchases
-      .join(touches.select(col("pid")).distinct(), Seq("pid"), "left_anti")
-      .agg(count(lit(1)).as("n_purchases"), sum("qv").as("micros"))
-      .select(lit(-1L).as("item"), lit(0L).as("n_touches"),
-        col("n_purchases"), coalesce(col("micros"), lit(0L)).as("micros"))
-    attributed.select(col("item"), col("n_touches"), col("n_purchases"),
-        col("micros"))
-      .unionByName(unattributed.filter(col("n_purchases") > 0))
-      .select(col("item"), col("n_touches"), col("n_purchases"),
-        graft.functions.TextF.microsTo4dp(col("micros")).as("attributed_usd"))
-      .orderBy("item")
+    attributionReport(purchases, touches)
   }
 
   def decayAttribution(spark: SparkSession, dir: String): DataFrame =
@@ -2860,10 +2753,7 @@ object Behavior {
     */
   def funnelByArmOf(events: DataFrame): DataFrame = {
     val e = events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("us"),
-      pmod(conv(substring(md5(concat(lit("ab:"),
-        col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-        lit(2L)).as("arm"))
+      unix_micros(col("ts")).as("us"), arm2(col("user_id")).as("arm"))
     val v = e.filter(col("event_type") === "view")
       .groupBy("arm", "user_id").agg(min("us").as("t1"))
     val c = e.filter(col("event_type") === "click")
@@ -2960,22 +2850,14 @@ object Behavior {
     * map-combinable moment aggregate, then arithmetic on the bounded
     * |types| frame. */
   def mdePowerOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val per = events
       .select(col("event_type"), col("user_id"),
         floor(col("value") * 1e6 + 0.5).cast("long").as("vq"))
       .groupBy("event_type", "user_id")
       .agg(sum("vq").as("uv"))
       .withColumn("arm", arm2(col("user_id")))
-    val perArm = per.groupBy("event_type", "arm")
-      .agg(count(lit(1)).as("n"),
-        sum(col("uv").cast(dec)).as("s"),
-        sum(expr(s"CAST(uv AS $dec) * uv")).as("ss"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = perArm.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"))
+    val wide = pivot(moments(per, Seq("event_type", "arm"), "uv"),
+        Seq("event_type"), levels("arm", 2), "n", "s", "ss")
       .filter(col("n0") > 1 && col("n1") > 1)
     def d(c: Column) = c.cast("double")
     def variance(s: Column, ss: Column, n: Column): Column =
@@ -3026,12 +2908,12 @@ object Behavior {
         floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
       .groupBy("event_type", "dow", "arm")
       .agg(count(lit(1)).as("n"), sum(col("vq").cast(dec)).as("s"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
+    val Seq(a0, a1) = levels("arm", 2).map(_._2)
     val strata = cell.groupBy("event_type", "dow")
-      .agg(coalesce(pick("n", 0), lit(0L)).as("n0"),
-        coalesce(pick("n", 1), lit(0L)).as("n1"),
-        coalesce(pick("s", 0), lit(0L).cast(dec)).as("s0"),
-        coalesce(pick("s", 1), lit(0L).cast(dec)).as("s1"))
+      .agg(coalesce(cellMax("n", a0), lit(0L)).as("n0"),
+        coalesce(cellMax("n", a1), lit(0L)).as("n1"),
+        coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("s0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("s1"))
       .withColumn("cmp", col("n0") > 0 && col("n1") > 0)
       // integer-exact mean-difference sign: m1 > m0 ⇔ s1·n0 > s0·n1
       .withColumn("sgn", expr(
@@ -3166,23 +3048,16 @@ object Behavior {
   def aaCalibrationOf(events: DataFrame, cells: Int = 32): DataFrame = {
     require(cells >= 4 && cells <= 256 && cells % 2 == 0,
       s"cells even in [4,256], got $cells")
-    val dec = "decimal(38,0)"
-    val per = events
+    val byCell = events
       .select(col("event_type"),
         (conv(substring(md5(concat(lit("aa:"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long")
           % cells).as("cell"),
         floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
-      .groupBy("event_type", "cell")
-      .agg(count(lit(1)).as("n"), sum(col("vq").cast(dec)).as("s"),
-        sum(expr(s"CAST(vq AS $dec) * vq")).as("ss"))
+    val per = moments(byCell, Seq("event_type", "cell"), "vq")
       .withColumn("pair", expr("cell div 2"))
       .withColumn("par", expr("cell % 2"))
-    def pick(c: String, p: Int) = max(when(col("par") === p, col(c)))
-    val z = per.groupBy("event_type", "pair")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"),
-        pick("s", 0).as("s0"), pick("s", 1).as("s1"),
-        pick("ss", 0).as("ss0"), pick("ss", 1).as("ss1"))
+    val z = pivot(per, Seq("event_type", "pair"), levels("par", 2), "n", "s", "ss")
       .filter(col("n0") > 1 && col("n1") > 1)
       .withColumn("zq", floor(abs(expr(
         """(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
@@ -3242,27 +3117,25 @@ object Behavior {
       arm2(col("user_id")).as("arm"),
       floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
     val pop = base.select("user_id", "arm").distinct()
-    val popW = pop.groupBy("arm").agg(count(lit(1)).as("np"))
-      .agg(max(when(col("arm") === 0, col("np"))).as("np0"),
-        max(when(col("arm") === 1, col("np"))).as("np1")) // 1 row
+    val arms = levels("arm", 2)
+    val popW = pivot(pop.groupBy("arm").agg(count(lit(1)).as("np")),
+      Nil, arms, "np") // 1 row
     val trig = base.filter(col("event_type") === triggerType)
       .select("user_id").distinct()
-    val trigW = pop.join(trig, "user_id").groupBy("arm")
-      .agg(count(lit(1)).as("nt"))
-      .agg(max(when(col("arm") === 0, col("nt"))).as("nt0"),
-        max(when(col("arm") === 1, col("nt"))).as("nt1")) // 1 row
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
+    val trigW = pivot(pop.join(trig, "user_id").groupBy("arm")
+      .agg(count(lit(1)).as("nt")), Nil, arms, "nt") // 1 row
+    val Seq(a0, a1) = arms.map(_._2)
     val sums = base.groupBy("event_type", "arm")
       .agg(sum(col("vq").cast(dec)).as("s"))
       .groupBy("event_type")
-      .agg(coalesce(pick("s", 0), lit(0L).cast(dec)).as("s0"),
-        coalesce(pick("s", 1), lit(0L).cast(dec)).as("s1"))
+      .agg(coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("s0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("s1"))
     val trigSums = base.join(trig, "user_id")
       .groupBy("event_type", "arm")
       .agg(sum(col("vq").cast(dec)).as("s"))
       .groupBy("event_type")
-      .agg(coalesce(pick("s", 0), lit(0L).cast(dec)).as("st0"),
-        coalesce(pick("s", 1), lit(0L).cast(dec)).as("st1"))
+      .agg(coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("st0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("st1"))
     val r6 = graft.functions.TextF.round6HalfUp _
     sums.join(trigSums, Seq("event_type"), "left")
       .crossJoin(broadcast(popW)).crossJoin(broadcast(trigW))

@@ -1026,7 +1026,7 @@ object Corpus {
       .orderBy("source")
   }
 
-  /** The graft.scale.approx path of [[sentenceDedupOf]]: the exact
+  /** The `approx = true` path of [[sentenceDedupOf]]: the exact
     * form shuffles every distinct sentence of the corpus as a 32-byte
     * md5 key — fact-scale distinct state. The sketch twin splits the
     * two published masses by what each actually needs: the DISTINCT
@@ -1069,8 +1069,7 @@ object Corpus {
   }
 
   def sentenceDedup(spark: SparkSession, dir: String): DataFrame =
-    sentenceDedupOf(Tables.documents(spark, dir),
-      approx = graft.Scale.approx(spark))
+    sentenceDedupOf(Tables.documents(spark, dir))
 
   /** Pairwise 8-gram overlap matrix between sources — the provenance
     * read that names WHO shares content with WHOM
@@ -1121,7 +1120,7 @@ object Corpus {
       .orderBy("source_a", "source_b")
   }
 
-  /** The graft.scale.approx path of [[sourceOverlapMatrixOf]] — the
+  /** The `approx = true` path of [[sourceOverlapMatrixOf]] — the
     * r16 ×100 rehearsal's 51× leader, because the exact path's
     * distinct (gram, source) aggregate shuffles every distinct gram
     * of a 100 TB corpus. The sketch twin is [[graft.operators.Dedup]]
@@ -1169,8 +1168,7 @@ object Corpus {
   }
 
   def sourceOverlapMatrix(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapMatrixOf(Tables.documents(spark, dir),
-      approx = graft.Scale.approx(spark))
+    sourceOverlapMatrixOf(Tables.documents(spark, dir))
 
   /** Train/val/test split leakage audit — the MEASUREMENT of what
     * [[trainSplitOf]]'s doc-keyed hash deliberately permits and

@@ -1183,7 +1183,7 @@ object CorpusStats {
     val scored = docs.select(col("doc_id"), col("source"),
       floor(q * 1e4 + 0.5).cast("long").as("qq"))
     val fractions = (0 to 100).map(_ / 100.0)
-    // The graft.scale.approx swap: the full-buffer exact percentile
+    // The `approx = true` swap: the full-buffer exact percentile
     // (Θ(rows) on one reducer) becomes the fixed-size mergeable
     // quantile sketch (earnings_percentiles_approx's machinery) —
     // same 1-row grid, same broadcast join shape downstream.
@@ -1213,8 +1213,7 @@ object CorpusStats {
   }
 
   def quantileNormalize(spark: SparkSession, dir: String): DataFrame =
-    quantileNormalizeOf(Tables.documents(spark, dir),
-      graft.Scale.approx(spark))
+    quantileNormalizeOf(Tables.documents(spark, dir))
 
   /** Distinct-n diversity per source — the type/token ratio
     * generalized to n-grams (n = 1, 2, 3): ‖distinct n-grams‖ /
@@ -1276,7 +1275,7 @@ object CorpusStats {
       else docs
       in.select(col("source"), lit(n).as("n"), explode(g).as("g"))
     }
-    // The graft.scale.approx swap: HLL (rsd 2%) replaces the exact
+    // The `approx = true` swap: HLL (rsd 2%) replaces the exact
     // distinct — fixed-size per-group state, no second shuffle of the
     // gram stream for dedup. ScaleApproxSpec bands it vs exact.
     val distinctGrams =
@@ -1294,8 +1293,7 @@ object CorpusStats {
   }
 
   def distinctNgramDiversity(spark: SparkSession, dir: String): DataFrame =
-    distinctNgramDiversityOf(Tables.documents(spark, dir),
-      graft.Scale.approx(spark))
+    distinctNgramDiversityOf(Tables.documents(spark, dir))
 
   /** Language-concentration (Herfindahl) profile per source: HHI =
     * Σ(n_lang/n)² over the source's document language shares — 1.0 =

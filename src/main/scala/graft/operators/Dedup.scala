@@ -502,7 +502,7 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
-  /** The graft.scale.approx path of [[dupMatrixOf]] — and the shape
+  /** The `approx = true` path of [[dupMatrixOf]] — and the shape
     * that actually changes the 100 TB plan, not just a buffer size:
     * each source folds its gram-hash stream into ONE Datasketches HLL
     * sketch (map-side combinable, kilobytes per source), and shared
@@ -551,8 +551,7 @@ object Dedup {
   }
 
   def dupMatrix(spark: SparkSession, dir: String): DataFrame =
-    dupMatrixOf(Tables.documents(spark, dir),
-      approx = graft.Scale.approx(spark))
+    dupMatrixOf(Tables.documents(spark, dir))
 
   /** LSH recall audit: what fraction of the TRUE (exact-Jaccard ≥ t)
     * near-dup pairs does the banded-MinHash candidate path recover —

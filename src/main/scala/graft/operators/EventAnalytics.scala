@@ -242,11 +242,7 @@ object EventAnalytics {
     */
   def ewmaSmoothOf(events: DataFrame, horizon: Int = 14): DataFrame = {
     require(horizon > 0 && horizon < 32, s"horizon in (0,32), got $horizon")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    val daily = Robust.dailyRevenue(events, "qrev")
       // |types × days| rows, two consumers (fan-out + join-back):
       // materialize once or the fact aggregate re-plans per branch
       .localCheckpoint(false)
@@ -291,11 +287,7 @@ object EventAnalytics {
     */
   def seasonalProfileOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type")
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    Robust.dailyRevenue(events, "qrev")
       .select(col("event_type"),
         (datediff(col("day"), lit("1970-01-01").cast("date")) % 7).as("dow"),
         col("qrev"))
@@ -382,11 +374,7 @@ object EventAnalytics {
       col("qrev").cast("double") /
         ((col("dow_sum") - col("qrev")).cast("double")
           / (col("n_dow") - 1L).cast("double")))
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    Robust.dailyRevenue(events, "qrev")
       .withColumn("dow",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .withColumn("dow_sum", sum("qrev").over(byDow))
@@ -526,11 +514,7 @@ object EventAnalytics {
     require(baseline > 0 && h > 0, s"need positive baseline/h, got $baseline/$h")
     val byType = Window.partitionBy("event_type").orderBy("day")
     val cum = byType.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    val daily = Robust.dailyRevenue(events, "qrev")
       .withColumn("rn", row_number().over(byType))
       .withColumn("mu0", floor(
         sum(when(col("rn") <= baseline, col("qrev"))).over(

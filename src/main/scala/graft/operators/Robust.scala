@@ -23,6 +23,39 @@ object Robust {
 
   private def round4(c: Column): Column = TextF.round4HalfUp(c)
 
+  /** The daily micro-revenue series per event type: Σ of each event's
+    * value on the micro grid (`Behavior.micro`), per (event_type, day),
+    * published as column `as`. One map-combinable aggregate; the frame
+    * is bounded by types × calendar days. */
+  private[operators] def dailyRevenue(events: DataFrame, as: String): DataFrame =
+    events
+      .select(col("event_type"), to_date(col("ts")).as("day"),
+        Behavior.micro(col("value")).as("qv"))
+      .groupBy("event_type", "day").agg(sum("qv").as(as))
+
+  /** Every ordered pair of days (day < bday) of one event type's daily
+    * series `v`, restricted to days sharing each `stratum` column; the
+    * later day's columns carry a `b` prefix (bt, bday, bv, b‹stratum›).
+    * Bounded by the calendar (≤ days² per type), never by row count. */
+  private def seriesPairs(daily: DataFrame, stratum: String*): DataFrame = {
+    val b = daily.select(Seq(col("event_type").as("bt")) ++
+      stratum.map(c => col(c).as("b" + c)) ++
+      Seq(col("day").as("bday"), col("v").as("bv")): _*)
+    val same = stratum.foldLeft(col("event_type") === col("bt"))(
+      (on, c) => on && col(c) === col("b" + c))
+    daily.join(b, same && col("day") < col("bday"))
+  }
+
+  /** Mann–Kendall's S = Σ sgn(v_later − v_earlier) and the pair count
+    * per event type over `seriesPairs`. */
+  private def pairSigns(pairs: DataFrame): DataFrame =
+    pairs
+      .select(col("event_type"),
+        when(col("bv") > col("v"), 1L)
+          .when(col("bv") < col("v"), -1L).otherwise(0L).as("sg"))
+      .groupBy("event_type")
+      .agg(sum("sg").as("s"), count(lit(1)).as("n_pairs"))
+
   /** Median/MAD outlier flagging per event type: |x - med| >
     * k · 1.4826 · MAD (the normal-consistency constant). Median and
     * MAD are rounded to 4 dp BEFORE the comparison, so the flag
@@ -145,11 +178,7 @@ object Robust {
     */
   def rollingMedianOf(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    val daily = dailyRevenue(events, "qrev")
       .withColumn("dayi", datediff(col("day"), lit("1970-01-01").cast("date")))
     val w = Window.partitionBy("event_type").orderBy(col("dayi"))
       .rangeBetween(-(windowDays - 1).toLong, Window.currentRow)
@@ -280,15 +309,9 @@ object Robust {
     * ≤ ~6.7M pairs per group), never by row count; the fact scan
     * collapses to (group, day) first, map-side combinable. */
   def theilSenTrendOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day").agg(sum("qv").as("v"))
+    val daily = dailyRevenue(events, "v")
       .localCheckpoint(false) // both self-join sides (keyed differently)
-    val b = daily.select(col("event_type").as("bt"),
-      col("day").as("bday"), col("v").as("bv"))
-    daily
-      .join(b, col("event_type") === col("bt") && col("day") < col("bday"))
+    seriesPairs(daily)
       .select(col("event_type"),
         ((col("bv") - col("v")).cast("double") /
           datediff(col("bday"), col("day")).cast("double")).as("slope"))
@@ -322,23 +345,13 @@ object Robust {
     * row entirely (pinned by TrancheAuditSpec).
     *
     * Shape: the [[theilSenTrendOf]] (type, day) aggregate + its
-    * calendar-bounded pair self-join; ties come off a (type, value)
-    * fold of the SAME daily frame. */
+    * calendar-bounded pair self-join (the shared `dailyRevenue` and
+    * `seriesPairs`); ties come off a (type, value) fold of the SAME
+    * daily frame. */
   def mannKendallOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day").agg(sum("qv").as("v"))
+    val daily = dailyRevenue(events, "v")
       .localCheckpoint(false) // pair join (both sides), T count, tie fold
-    val b = daily.select(col("event_type").as("bt"),
-      col("day").as("bday"), col("v").as("bv"))
-    val sAgg = daily
-      .join(b, col("event_type") === col("bt") && col("day") < col("bday"))
-      .select(col("event_type"),
-        when(col("bv") > col("v"), 1L)
-          .when(col("bv") < col("v"), -1L).otherwise(0L).as("sg"))
-      .groupBy("event_type")
-      .agg(sum("sg").as("s"), count(lit(1)).as("n_pairs"))
+    val sAgg = pairSigns(seriesPairs(daily))
     val tAgg = daily.groupBy("event_type").agg(count(lit(1)).as("t_days"))
     val ties = daily.groupBy("event_type", "v")
       .agg(count(lit(1)).as("t"))
@@ -382,24 +395,12 @@ object Robust {
     * weekday) — ≤ 1/7 of plain MK's pair mass — everything
     * calendar-bounded. */
   def seasonalMkOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day").agg(sum("qv").as("v"))
+    val daily = dailyRevenue(events, "v")
       .select(col("event_type"), col("day"), col("v"),
         pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(7))
           .as("dow"))
       .localCheckpoint(false) // pair join (both sides) + strata folds
-    val b = daily.select(col("event_type").as("bt"), col("dow").as("bw"),
-      col("day").as("bday"), col("v").as("bv"))
-    val sAgg = daily
-      .join(b, col("event_type") === col("bt") && col("dow") === col("bw")
-        && col("day") < col("bday"))
-      .select(col("event_type"),
-        when(col("bv") > col("v"), 1L)
-          .when(col("bv") < col("v"), -1L).otherwise(0L).as("sg"))
-      .groupBy("event_type")
-      .agg(sum("sg").as("s"), count(lit(1)).as("n_pairs"))
+    val sAgg = pairSigns(seriesPairs(daily, "dow"))
     val strata = daily.groupBy("event_type", "dow")
       .agg(count(lit(1)).as("tg"))
       .groupBy("event_type")
@@ -749,6 +750,24 @@ object Robust {
   def discountElasticity(spark: SparkSession, dir: String): DataFrame =
     discountElasticityOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 
+  /** The split-day value grid [[ksTestOf]] and [[wassersteinDriftOf]]
+    * read: per (type, micro-grid value) the counts before (`ca_bin`)
+    * and from (`cb_bin`) `splitDay`, and both empirical CDFs as integer
+    * cumulative counts `ca`/`cb` over the distinct-value frame. One
+    * map-combinable (type, value) count; the cumsum window rides the
+    * bounded frame. */
+  private def splitDayEcdf(events: DataFrame, splitDay: String): DataFrame = {
+    val cumW = Window.partitionBy("event_type").orderBy("vq")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events.select(col("event_type"), Behavior.micro(col("value")).as("vq"),
+        (col("ts") < lit(splitDay).cast("timestamp")).as("in_a"))
+      .groupBy("event_type", "vq")
+      .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("ca_bin"),
+        sum(when(!col("in_a"), 1L).otherwise(0L)).as("cb_bin"))
+      .withColumn("ca", sum("ca_bin").over(cumW))
+      .withColumn("cb", sum("cb_bin").over(cumW))
+  }
+
   /** Two-sample Kolmogorov–Smirnov test per event type between the
     * two calendar periods — [[distributionDriftOf]]'s binless sibling
     * (TVD on shared bins answers "how much mass moved"; KS's
@@ -768,17 +787,8 @@ object Robust {
     * per-type fold. Type-keyed throughout (§4 salting applies if one
     * type dominates). */
   def ksTestOf(events: DataFrame, splitDay: String = "2024-01-16"): DataFrame = {
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val byType = Window.partitionBy("event_type")
-    events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        (col("ts") < lit(splitDay).cast("timestamp")).as("in_a"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("ca_bin"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("cb_bin"))
-      .withColumn("ca", sum("ca_bin").over(cumW))
-      .withColumn("cb", sum("cb_bin").over(cumW))
+    splitDayEcdf(events, splitDay)
       .withColumn("na", sum("ca_bin").over(byType))
       .withColumn("nb", sum("cb_bin").over(byType))
       .filter(col("na") > 0 && col("nb") > 0)
@@ -833,18 +843,9 @@ object Robust {
   def wassersteinDriftOf(events: DataFrame,
                          splitDay: String = "2024-01-16"): DataFrame = {
     val dec = "decimal(38,0)"
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val leadW = Window.partitionBy("event_type").orderBy("vq")
     val byType = Window.partitionBy("event_type")
-    events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        (col("ts") < lit(splitDay).cast("timestamp")).as("in_a"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("ca_bin"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("cb_bin"))
-      .withColumn("ca", sum("ca_bin").over(cumW))
-      .withColumn("cb", sum("cb_bin").over(cumW))
+    splitDayEcdf(events, splitDay)
       .withColumn("gap", lead("vq", 1).over(leadW) - col("vq"))
       .withColumn("na", sum("ca_bin").over(byType))
       .withColumn("nb", sum("cb_bin").over(byType))
@@ -885,10 +886,7 @@ object Robust {
     * Shape: one (type, day) fact aggregate; median, signs, the lag
     * pass and the fold all ride the bounded daily frame. */
   def runsTestOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day").agg(sum("qv").as("v"))
+    val daily = dailyRevenue(events, "v")
       .localCheckpoint(false) // median pass + sign pass both read it
     val cumW = Window.partitionBy("event_type").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -944,6 +942,26 @@ object Robust {
   def runsTest(spark: SparkSession, dir: String): DataFrame =
     runsTestOf(Tables.events(spark, dir))
 
+  /** The two-arm rank grid [[mannWhitneyOf]] and [[cliffsDeltaOf]]
+    * read: per (type, micro-grid value) the arm counts c0/c1, the
+    * arm-0 count strictly `below0` the value (one bounded cumulative
+    * window — ties count half downstream via c0), and the arm totals
+    * n0/n1; types missing an arm drop. Sized by the value vocabulary,
+    * not by rows ([[ksTestOf]]'s argument). */
+  private def twoArmRanks(events: DataFrame): DataFrame = {
+    val cumW = Window.partitionBy("event_type").orderBy("vq")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val byType = Window.partitionBy("event_type")
+    Behavior.armValues(events, 2L)
+      .groupBy("event_type", "vq")
+      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
+        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"))
+      .withColumn("below0", sum("c0").over(cumW) - col("c0"))
+      .withColumn("n0", sum("c0").over(byType))
+      .withColumn("n1", sum("c1").over(byType))
+      .filter(col("n0") > 0 && col("n1") > 0)
+  }
+
   /** Mann-Whitney U (Wilcoxon rank-sum) A/B readout per event type —
     * the nonparametric sibling of [[graft.operators.Behavior
     * .abTestOf]]'s proportion z-test: arms split by the SAME
@@ -966,21 +984,7 @@ object Robust {
     */
   def mannWhitneyOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byType = Window.partitionBy("event_type")
-    events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        pmod(conv(substring(md5(concat(lit("ab:"),
-          col("user_id").cast("string"))), 1, 8), 16, 10).cast("long"),
-          lit(2L)).as("arm"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"))
-      .withColumn("below0", sum("c0").over(cumW) - col("c0"))
-      .withColumn("n0", sum("c0").over(byType))
-      .withColumn("n1", sum("c1").over(byType))
-      .filter(col("n0") > 0 && col("n1") > 0)
+    twoArmRanks(events)
       .groupBy("event_type", "n0", "n1")
       .agg(
         sum(expr(s"CAST(c1 AS $dec) * (2 * below0 + c0)")).as("u2"),
@@ -1005,6 +1009,35 @@ object Robust {
 
   def mannWhitney(spark: SparkSession, dir: String): DataFrame =
     mannWhitneyOf(Tables.events(spark, dir))
+
+  /** The three-arm rank-sum frame [[kruskalWallisOf]] and
+    * [[dunnPosthocOf]] read: per-(type, value) arm counts on the micro
+    * grid, the cumulative `below` count via one bounded window, and
+    * each distinct value's DOUBLED midrank 2·below + t + 1, so per-arm
+    * rank sums r0..r2 ride decimal(38,0) with no halves; beside them
+    * the arm sizes n0..n2, N = nn and the tie term Σ(t³−t) = tcub.
+    * Types missing an arm, or with N ≤ 3, drop. */
+  private def threeArmRankSums(events: DataFrame): DataFrame = {
+    val dec = "decimal(38,0)"
+    val cumW = Window.partitionBy("event_type").orderBy("vq")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    Behavior.armValues(events, 3L)
+      .groupBy("event_type", "vq")
+      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
+        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"),
+        sum(when(col("arm") === 2L, 1L).otherwise(0L)).as("c2"))
+      .withColumn("ct", col("c0") + col("c1") + col("c2"))
+      .withColumn("below", sum("ct").over(cumW) - col("ct"))
+      .groupBy("event_type")
+      .agg(sum("c0").as("n0"), sum("c1").as("n1"), sum("c2").as("n2"),
+        sum(expr(s"CAST(c0 AS $dec) * (2 * below + ct + 1)")).as("r0"),
+        sum(expr(s"CAST(c1 AS $dec) * (2 * below + ct + 1)")).as("r1"),
+        sum(expr(s"CAST(c2 AS $dec) * (2 * below + ct + 1)")).as("r2"),
+        sum(expr(s"CAST(ct AS $dec) * ct * ct - ct")).as("tcub"))
+      .filter(col("n0") > 0 && col("n1") > 0 && col("n2") > 0)
+      .withColumn("nn", col("n0") + col("n1") + col("n2"))
+      .filter(col("nn") > 3)
+  }
 
   /** Kruskal–Wallis H per event type across the THREE-arm md5
     * assignment — [[mannWhitneyOf]]'s k-sample generalization and
@@ -1034,27 +1067,7 @@ object Robust {
     * grid; the cumulative window and the final fold ride that
     * bounded frame — nothing fact-scale past the first shuffle. */
   def kruskalWallisOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val grid = events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        graft.operators.Behavior.arm3(col("user_id")).as("arm"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("arm") === 2L, 1L).otherwise(0L)).as("c2"))
-      .withColumn("ct", col("c0") + col("c1") + col("c2"))
-      .withColumn("below", sum("ct").over(cumW) - col("ct"))
-    val agg = grid.groupBy("event_type")
-      .agg(sum("c0").as("n0"), sum("c1").as("n1"), sum("c2").as("n2"),
-        sum(expr(s"CAST(c0 AS $dec) * (2 * below + ct + 1)")).as("r0"),
-        sum(expr(s"CAST(c1 AS $dec) * (2 * below + ct + 1)")).as("r1"),
-        sum(expr(s"CAST(c2 AS $dec) * (2 * below + ct + 1)")).as("r2"),
-        sum(expr(s"CAST(ct AS $dec) * ct * ct - ct")).as("tcub"))
-      .filter(col("n0") > 0 && col("n1") > 0 && col("n2") > 0)
-      .withColumn("nn", col("n0") + col("n1") + col("n2"))
-      .filter(col("nn") > 3)
+    val agg = threeArmRankSums(events)
     agg.select(col("event_type"), col("n0"), col("n1"), col("n2"),
         TextF.round6HalfUp(expr(
           """(3.0 * (CAST(r0 AS DOUBLE) * CAST(r0 AS DOUBLE) / CAST(n0 AS DOUBLE)
@@ -1277,10 +1290,7 @@ object Robust {
   def yuenTestOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
     val byGroup = Window.partitionBy("event_type", "arm")
-    val grid = events
-      .select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        graft.operators.Behavior.arm2(col("user_id")).as("arm"))
+    val grid = Behavior.armValues(events, 2L)
       .groupBy("event_type", "arm", "vq").agg(count(lit(1)).as("c"))
       .withColumn("b", sum("c").over(byGroup.orderBy("vq")) - col("c"))
       .withColumn("n", sum("c").over(byGroup))
@@ -1300,14 +1310,11 @@ object Robust {
         expr(s"ts + CAST(g AS $dec) * lo + CAST(g AS $dec) * hi"))
       .withColumn("sw2",
         expr(s"ts2 + CAST(g AS $dec) * lo * lo + CAST(g AS $dec) * hi * hi"))
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    val wide = agg.groupBy("event_type")
-      .agg(pick("n", 0).as("n0"), pick("h", 0).as("h0"),
-        pick("ts", 0).as("ts0"), pick("sw", 0).as("sw0"),
-        pick("sw2", 0).as("sw20"),
-        pick("n", 1).as("n1"), pick("h", 1).as("h1"),
-        pick("ts", 1).as("ts1"), pick("sw", 1).as("sw1"),
-        pick("sw2", 1).as("sw21"))
+    // arm-major column order, unlike `Behavior.pivot`'s value-major
+    val picks = for ((a, arm) <- Behavior.levels("arm", 2);
+                     c <- Seq("n", "h", "ts", "sw", "sw2"))
+      yield Behavior.cellMax(c, arm).as(c + a)
+    val wide = agg.groupBy("event_type").agg(picks.head, picks.tail: _*)
       .filter(col("h0") > 1 && col("h1") > 1)
     val d0 = """(CAST(sw20 AS DOUBLE)
         | - CAST(sw0 AS DOUBLE) * CAST(sw0 AS DOUBLE) / CAST(n0 AS DOUBLE))
@@ -1401,24 +1408,12 @@ object Robust {
     * < 0.33 small, < 0.474 medium, else large), applied to the
     * ROUNDED δ so the label is grid-stable cross-engine.
     *
-    * Shape: identical to [[mannWhitneyOf]] — the (type, vq) grid
-    * aggregate absorbs fact mass map-side; windows ride the bounded
-    * value-grid frame. */
+    * Shape: [[mannWhitneyOf]]'s own rank grid (the shared
+    * `twoArmRanks`) — the (type, vq) grid aggregate absorbs fact mass
+    * map-side; windows ride the bounded value-grid frame. */
   def cliffsDeltaOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byType = Window.partitionBy("event_type")
-    events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        Behavior.arm2(col("user_id")).as("arm"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"))
-      .withColumn("below0", sum("c0").over(cumW) - col("c0"))
-      .withColumn("n0", sum("c0").over(byType))
-      .withColumn("n1", sum("c1").over(byType))
-      .filter(col("n0") > 0 && col("n1") > 0)
+    twoArmRanks(events)
       .groupBy("event_type", "n0", "n1")
       .agg(sum(expr(s"CAST(c1 AS $dec) * (2 * below0 + c0)")).as("u2"))
       .select(col("event_type"), col("n0"), col("n1"),
@@ -1631,38 +1626,18 @@ object Robust {
     * Σ(t³−t)/(12(N−1)), significance at |z| > 2.393980 = Φ⁻¹(1 −
     * 0.05/6) (two-sided α = 0.05 over m = 3 pairs).
     *
-    * Integer-exact machinery is EXACTLY the KW fold (same value
-    * grid, same doubled midranks, same per-arm decimal(38,0) rank
-    * sums — R̄ halves only inside the final double chain); the pair
-    * fan-out is a 3-element explode on the ≤|types| aggregated
-    * frame. An all-tied type nulls σ² → z NULL → not significant
-    * (try_divide, the KW contract).
+    * Integer-exact machinery is the KW fold itself (the shared
+    * `threeArmRankSums`: value grid, doubled midranks, per-arm
+    * decimal(38,0) rank sums — R̄ halves only inside the final double
+    * chain); the pair fan-out is a 3-element explode on the ≤|types|
+    * aggregated frame. An all-tied type nulls σ² → z NULL → not
+    * significant (try_divide, the KW contract).
     *
     * Shape: ONE map-combinable fact aggregate to the (type, value)
     * grid; everything after — cumulative window, fold, pair explode,
     * z chains — rides bounded frames. */
   def dunnPosthocOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val cumW = Window.partitionBy("event_type").orderBy("vq")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val grid = events.select(col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
-        graft.operators.Behavior.arm3(col("user_id")).as("arm"))
-      .groupBy("event_type", "vq")
-      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("arm") === 2L, 1L).otherwise(0L)).as("c2"))
-      .withColumn("ct", col("c0") + col("c1") + col("c2"))
-      .withColumn("below", sum("ct").over(cumW) - col("ct"))
-    val agg = grid.groupBy("event_type")
-      .agg(sum("c0").as("n0"), sum("c1").as("n1"), sum("c2").as("n2"),
-        sum(expr(s"CAST(c0 AS $dec) * (2 * below + ct + 1)")).as("r0"),
-        sum(expr(s"CAST(c1 AS $dec) * (2 * below + ct + 1)")).as("r1"),
-        sum(expr(s"CAST(c2 AS $dec) * (2 * below + ct + 1)")).as("r2"),
-        sum(expr(s"CAST(ct AS $dec) * ct * ct - ct")).as("tcub"))
-      .filter(col("n0") > 0 && col("n1") > 0 && col("n2") > 0)
-      .withColumn("nn", col("n0") + col("n1") + col("n2"))
-      .filter(col("nn") > 3)
+    val agg = threeArmRankSums(events)
     val r6 = TextF.round6HalfUp _
     val r4 = TextF.round4HalfUp _
     // 3-pair fan-out on the ≤|types| frame: (a, b) ∈ {01, 02, 12}
@@ -1706,6 +1681,22 @@ object Robust {
   def dunnPosthoc(spark: SparkSession, dir: String): DataFrame =
     dunnPosthocOf(Tables.events(spark, dir))
 
+  /** The day-paired differences [[wilcoxonSignedRankOf]] and
+    * [[signTestOf]] test: per day, d = rev_A − rev_B on the exact cent
+    * grid. ONE (day) fact aggregate; the frame is calendar-bounded. */
+  private def dayPairedDiffs(events: DataFrame, typeA: String,
+                             typeB: String): DataFrame =
+    events
+      .filter(col("event_type").isin(typeA, typeB))
+      .select(to_date(col("ts")).as("day"), col("event_type"),
+        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+      .groupBy("day")
+      .agg(sum(when(col("event_type") === typeA, col("vc"))
+        .otherwise(0L)).as("ra"),
+        sum(when(col("event_type") === typeB, col("vc"))
+          .otherwise(0L)).as("rb"))
+      .select((col("ra") - col("rb")).as("d"))
+
   /** Wilcoxon signed-rank test on the DAY-PAIRED daily revenues of
     * two event types (Wilcoxon '45 — the PAIRED continuous member
     * the test family lacked: mannwhitney compares two independent
@@ -1733,16 +1724,7 @@ object Robust {
   def wilcoxonSignedRankOf(events: DataFrame, typeA: String = "purchase",
       typeB: String = "view"): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(to_date(col("ts")).as("day"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("day")
-      .agg(sum(when(col("event_type") === typeA, col("vc"))
-        .otherwise(0L)).as("ra"),
-        sum(when(col("event_type") === typeB, col("vc"))
-          .otherwise(0L)).as("rb"))
-      .select((col("ra") - col("rb")).as("d"))
+    val daily = dayPairedDiffs(events, typeA, typeB)
       .filter(col("d") =!= 0L)
     val cumW = Window.orderBy("ad")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1818,12 +1800,10 @@ object Robust {
         col("cum") >= expr("(q * n + 99) div 100"))
       .groupBy("event_type", "arm", "q")
       .agg(min("vq").as("v"), max("n").as("n"))
-    // arm pivot by conditional aggregate (the mdePower pick pattern)
-    // — an arm self-join would re-plan the whole grid subtree twice
-    def pick(c: String, a: Int) = max(when(col("arm") === a, col(c)))
-    picks.groupBy("event_type", "q")
-      .agg(pick("n", 0).as("n0"), pick("n", 1).as("n1"),
-        pick("v", 0).as("v0"), pick("v", 1).as("v1"))
+    // arm pivot by conditional aggregate — an arm self-join would
+    // re-plan the whole grid subtree twice
+    Behavior.pivot(picks, Seq("event_type", "q"), Behavior.levels("arm", 2),
+        "n", "v")
       .filter(col("v0").isNotNull && col("v1").isNotNull)
       .select(col("event_type"), col("q"), col("n0"), col("n1"),
         col("v0"), col("v1"), (col("v1") - col("v0")).as("lift_micro"))
@@ -1851,16 +1831,7 @@ object Robust {
     * global aggregate over the calendar-bounded day frame. */
   def signTestOf(events: DataFrame, typeA: String = "purchase",
       typeB: String = "view"): DataFrame = {
-    val daily = events
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(to_date(col("ts")).as("day"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("day")
-      .agg(sum(when(col("event_type") === typeA, col("vc"))
-        .otherwise(0L)).as("ra"),
-        sum(when(col("event_type") === typeB, col("vc"))
-          .otherwise(0L)).as("rb"))
-      .select((col("ra") - col("rb")).as("d"))
+    val daily = dayPairedDiffs(events, typeA, typeB)
     daily.agg(
         sum(when(col("d") > 0L, 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("d") < 0L, 1L).otherwise(0L)).as("n_neg"),
@@ -1977,11 +1948,7 @@ object Robust {
     * scans twice), one bounded per-type fold. */
   def coxStuartOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type").orderBy("day")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
-      .groupBy("event_type", "day")
-      .agg(sum("qv").as("qrev"))
+    val daily = dailyRevenue(events, "qrev")
       .withColumn("rn", row_number().over(byType))
       .withColumn("nn", count(lit(1)).over(Window.partitionBy("event_type")))
       // c = ⌈n/2⌉ = (n+1) div 2: first half rn ≤ n div 2 (odd middle

@@ -177,7 +177,7 @@ object TextAnalysis {
     val bySource = perDoc.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_grams").as("n_grams"),
         sum(size(col("prints"))).as("n_prints"))
-    // The graft.scale.approx swap (sentenceDedupSketchOf's recipe):
+    // The `approx = true` swap (sentenceDedupSketchOf's recipe):
     // the exact path shuffles every distinct print as a 32-char md5
     // string. Sketch twin: distinct-print mass folds into a fixed
     // HLL per source (rsd 2%, no distinct shuffle); shared-print
@@ -215,8 +215,7 @@ object TextAnalysis {
   }
 
   def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
-    winnowFingerprintsOf(Tables.documents(spark, dir),
-      approx = graft.Scale.approx(spark))
+    winnowFingerprintsOf(Tables.documents(spark, dir))
 
   /** The composite corpus-cleaning pass an LLM-data pipeline runs
     * before training: quality threshold + length band + language

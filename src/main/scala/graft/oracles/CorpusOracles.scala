@@ -1369,7 +1369,7 @@ private[graft] object CorpusOracles {
         |    - 15.59) * 1e4 + 0.5) / 1e4 AS fk_grade
         |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
 
-    // Round-17 pinned frames: the graft.scale.approx sketch paths of
+    // Round-17 pinned frames: the `approx = true` sketch paths of
     // the round-14+ exact-distinct gram heavies (VERDICT r16 #3).
     // HLL register maxima are order-blind and the shared/dup masses
     // ride a deterministic 1/4 hash-sample of the key space, so each

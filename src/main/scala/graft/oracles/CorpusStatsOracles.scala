@@ -833,7 +833,7 @@ private[graft] object CorpusStatsOracles {
         |    * 1e4 + 0.5) / 1e4 AS ttr
         |FROM u GROUP BY source, n ORDER BY source, n""".stripMargin,
 
-    // Round-10 pinned frames: the graft.scale.approx sketch paths,
+    // Round-10 pinned frames: the `approx = true` sketch paths,
     // driver-value-checked. HLL++/quantile-summary merges are
     // order-blind, so both reproduce bit-stably on the fixed sf0.01
     // corpus; ScaleApproxSpec bands each against its exact twin.

@@ -610,7 +610,7 @@ private[graft] object DedupOracles {
         |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(simhash AS BIGINT) AS simhash, CAST(cluster_id AS BIGINT) AS cluster_id
         |FROM r""".stripMargin,
 
-    // Round-10 pinned frame: the graft.scale.approx sketch path of
+    // Round-10 pinned frame: the `approx = true` sketch path of
     // dup_matrix (per-source HLL + pairwise inclusion-exclusion; the
     // per-gram self-join is GONE — PlanSpec pins that). Datasketches
     // HLL register maxima are order-blind, so the estimate reproduces

@@ -38,9 +38,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * phantom empty token wherever Java `split("\\s+", -1)` emits one —
   * so consumers whose DuckDB oracles tokenize with
   * `regexp_split_to_array(trim(text), '\s+')` agree with the engine
-  * on EVERY input, not just corpora without tab/newline-edged text
-  * (r18, ADVICE r17; property-tested against the real split in
-  * KernelPropertySpec).
+  * on every input without a vertical tab, not just corpora without
+  * tab/newline-edged text (r18, ADVICE r17; property-tested against
+  * the real split in KernelPropertySpec).
+  *
+  * Whitespace is Java's `\s` — space, \t, \n, \x0B, \f, \r — the
+  * class Spark's `split` uses, so the Java convention wins: \x0B
+  * (vertical tab) separates tokens here and in `split`. DuckDB's RE2
+  * `\s` differs on that one byte (it does not match \x0B), so an
+  * oracle that tokenizes with RE2 disagrees on text containing \x0B.
   *
   * `prime <= 0` skips the modulus: the raw xxhash64 (seed 42) value is
   * emitted, byte-identical to `xxhash64(shingle_string)` — required

@@ -1524,4 +1524,25 @@ class BehaviorSpec extends AnyFunSuite with SparkFixture {
     assert(v.getDouble(4) == 0.0 && v.getDouble(5) == 0.0 && v.isNullAt(6),
       s"0/0 dilution must be NULL, never NaN: $v")
   }
+
+  test("one-arm-only event types drop from simpson/jackknife/aa, never divide by zero") {
+    // user 3 is arm 1, user 4 arm 0 (md5-resolved below) — build a
+    // type whose every event sits on ONE arm
+    val arm = spark.range(1, 50).select(col("id"),
+        graft.operators.Behavior.arm2(col("id")).as("a"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val oneArm = arm.collect { case (u, 0L) => u }.take(3).toSeq
+    val ev = oneArm.zipWithIndex.map { case (u, i) =>
+      (i.toLong, u, "solo", "2024-01-01 10:00:00", 1.0) }
+      .toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    assert(graft.operators.Behavior.simpsonReversalOf(ev).isEmpty,
+      "no opposite arm -> no aggregate comparison -> no row")
+    val jk = graft.operators.Behavior.jackknifeRatioSeOf(ev).collect()
+    assert(jk.length == 1 && jk.head.getDouble(3) == 1.0,
+      s"jackknife ignores arms entirely: ${jk.toSeq}")
+    assert(graft.operators.Behavior.aaCalibrationOf(ev).isEmpty,
+      "three users cannot fill a cell pair with n>1 on both sides")
+  }
 }

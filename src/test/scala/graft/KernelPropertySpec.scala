@@ -51,7 +51,7 @@ class KernelPropertySpec extends AnyFunSuite {
       n <- Gen.choose(0, 80)
       chunks <- Gen.listOfN(n, Gen.frequency(
         6 -> Gen.alphaNumChar.map(_.toString),
-        3 -> Gen.oneOf(" ", "  ", "\t", "\n", "\f", "\r", ""),
+        3 -> Gen.oneOf(" ", "  ", "\t", "\n", "\f", "\r", "\u000b"),
         2 -> Gen.oneOf("é", "ß", "中", "٣", "Ⅷ", "½", "!", "@", "-", "'"),
         1 -> Gen.const("𐐀"))) // Deseret long I (letter, astral)
     } yield chunks.mkString
@@ -125,7 +125,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val expr = ShingleHashes(null, 3, Dedup.P)
     val strict = ShingleHashes(null, 3, Dedup.P, strict = true)
     def toks(s: String): Seq[String] =
-      s.split("[ \t\n\r\f]+").filter(_.nonEmpty).toSeq
+      s.split("[ \t\n\r\f\\x0B]+").filter(_.nonEmpty).toSeq
     // Reference applies the SAME hash-then-mod before counting, so a
     // (rare) residue collision mod P can't fail the property spuriously.
     def refHash(shingle: String): Long = {
@@ -158,7 +158,7 @@ class KernelPropertySpec extends AnyFunSuite {
     // token edge on tab/newline-edged text that ADVICE r17 flagged).
     def splitToks(s: String): Seq[String] = {
       val t = s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
-      t.split("[ \t\n\f\r]+", -1).toSeq
+      t.split("[ \t\n\\x0B\f\r]+", -1).toSeq
     }
     def refHash(shingle: String): Long = {
       val b = shingle.getBytes("UTF-8")
@@ -167,9 +167,9 @@ class KernelPropertySpec extends AnyFunSuite {
     }
     // Bias the generator toward the whitespace edges under test.
     val edgeGen: Gen[String] = for {
-      pre <- Gen.oneOf("", "\t", "\n", " \t", "", " ")
+      pre <- Gen.oneOf("", "\t", "\n", " \t", "\u000b", " ")
       mid <- textGen
-      post <- Gen.oneOf("", "\t", "\r\n", "  ", "\f", " \n ")
+      post <- Gen.oneOf("", "\t", "\r\n", "  ", "\f", " \n ", "\u000b ")
     } yield pre + mid + post
     val compat = ShingleHashes(null, 3, 0L, strict = false, dedup = false,
       splitCompat = true)

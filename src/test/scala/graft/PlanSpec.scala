@@ -453,9 +453,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
             .ENSURE_REQUIREMENTS => e }.length
       finally spark.conf.set(k, prev)
     }
-    // The registered wrapper must force the flag during build and
-    // RESTORE the session's prior state afterwards.
-    val before = spark.conf.getOption(Scale.ApproxKey)
     // dup_matrix_approx: the exact path's per-gram equi-self-join is
     // gone — no shuffled join anywhere; sketch pairing is hll_union
     // over a broadcast cross of the |sources|-row frame.
@@ -502,8 +499,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(explicitExchanges(viaRegistry("ngram_diversity_approx")) <= 1 &&
       explicitExchanges(CorpusStats.distinctNgramDiversity(spark, Sf)) <= 1,
       "ngram_diversity family: at most the one spreadInput repartition")
-    assert(spark.conf.getOption(Scale.ApproxKey) == before,
-      "withApprox must restore the session flag")
   }
 
   test("round-8 final tranche: only 1-row bounds broadcasts cross, everything else equijoins") {

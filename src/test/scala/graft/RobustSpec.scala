@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, to_timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Robust
@@ -685,5 +686,85 @@ class RobustSpec extends AnyFunSuite with SparkFixture {
     // flat: S = 0 and the single 5-way tie cancels the whole
     // variance polynomial → z undefined, never 0
     assert(out("flat") == ((5L, 0L, null, null)), s"got $out")
+  }
+
+  // ---- drift, randomness and trend tests on tiny hand-built series:
+  // hand-computed values, or the documented degradation (no row, NULL
+  // readout) on degenerate input — never an exception
+
+  private def valued(rows: (String, String, Double)*): DataFrame =
+    rows.zipWithIndex.map { case ((et, t, v), i) =>
+      (i.toLong, i.toLong, et, t, v)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+
+  test("wasserstein: W1({1,2},{2,3}) = 1.0 exactly; one-sided types drop; identical = 0") {
+    val ev = valued(
+      ("click", "2024-01-10 10:00:00", 1.0), ("click", "2024-01-10 11:00:00", 2.0),
+      ("click", "2024-01-20 10:00:00", 2.0), ("click", "2024-01-20 11:00:00", 3.0),
+      ("view", "2024-01-10 10:00:00", 5.0), // period A only → dropped
+      ("buy", "2024-01-10 10:00:00", 7.0), ("buy", "2024-01-20 10:00:00", 7.0))
+    val out = Robust.wassersteinDriftOf(ev).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+      .toMap
+    assert(out.keySet == Set("click", "buy"),
+      s"a type with an empty side has no drift to price: $out")
+    assert(out("click") == ((2L, 2L, 1.0)), s"unit shift of every point: $out")
+    assert(out("buy") == ((1L, 1L, 0.0)), s"identical distributions: $out")
+  }
+
+  test("runs test: a series entirely AT its median drops every sign — no row, no crash") {
+    val rows = (1 to 3).map(d => ("click", f"2024-01-0$d%d 10:00:00", 5.0))
+    assert(Robust.runsTestOf(valued(rows: _*)).isEmpty)
+  }
+
+  test("runs test: a 2-day series nulls z (zero variance), never divides") {
+    val ev = valued(("click", "2024-01-01 10:00:00", 1.0),
+      ("click", "2024-01-02 10:00:00", 2.0))
+    val r = Robust.runsTestOf(ev).collect().head
+    assert(r.getLong(1) == 1L && r.getLong(2) == 0L && r.getLong(3) == 1L,
+      s"one sign above the lower median, the median day drops: $r")
+    assert(r.isNullAt(4) && r.isNullAt(5),
+      s"z and the verdict must be NULL on a degenerate series: $r")
+  }
+
+  test("runs test: hand-computed z on a 6-day series with a median tie dropped") {
+    // daily totals 1,3,2,3,1,3 → lower median 2 (dropped); signs
+    // -,+,+,-,+ → runs 4, n+=3, n-=2, E=3.4, Var=0.84,
+    // z = 0.6/sqrt(0.84) = 0.654654… → 0.6547 on the 1e-4 grid.
+    val vals = Seq(1.0, 3.0, 2.0, 3.0, 1.0, 3.0)
+    val rows = vals.zipWithIndex.map { case (v, i) =>
+      ("click", f"2024-01-0${i + 1}%d 10:00:00", v)
+    }
+    val r = Robust.runsTestOf(valued(rows: _*)).collect().head
+    assert(r.getLong(1) == 3L && r.getLong(2) == 2L && r.getLong(3) == 4L,
+      s"n_pos/n_neg/runs: $r")
+    assert(math.abs(r.getDouble(4) - 0.6547) < 1e-9, s"z: $r")
+    assert(!r.getBoolean(5))
+  }
+
+  test("mann-kendall: a fully-tied series nulls z; a 1-day type drops its row") {
+    val rows = (1 to 5).map(d => ("click", f"2024-01-0$d%d 10:00:00", 2.0)) :+
+      (("view", "2024-01-03 10:00:00", 9.0)) // single day → no pair
+    val out = Robust.mannKendallOf(valued(rows: _*)).collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(out.keySet == Set("click"),
+      s"a 1-day series has no pair — the type drops, it doesn't NULL: $out")
+    val c = out("click")
+    assert(c.getLong(2) == 0L && c.isNullAt(3) && c.isNullAt(4),
+      s"fully tied → S=0, variance 0, NULL z and verdict: $c")
+  }
+
+  test("seasonal mann-kendall: a one-week series has no same-weekday pair — row drops") {
+    val rows = (1 to 7).map(d => ("click", f"2024-01-0$d%d 10:00:00", d.toDouble))
+    assert(Robust.seasonalMkOf(valued(rows: _*)).isEmpty,
+      "7 distinct weekdays, 1 day each: zero within-stratum pairs")
+    // two weeks of a strictly rising series: every stratum has its
+    // pair and the trend reads through the weekly cycle
+    val rows2 = (1 to 14).map(d => ("click", f"2024-01-$d%02d 10:00:00", d.toDouble))
+    val r = Robust.seasonalMkOf(valued(rows2: _*)).collect().head
+    assert(r.getLong(1) == 14L && r.getLong(2) == 7L && r.getLong(3) == 7L,
+      s"T=14, 7 strata, S = 7 concordant pairs: $r")
   }
 }

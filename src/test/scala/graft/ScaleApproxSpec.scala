@@ -7,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CorpusStats, Dedup}
 import graft.sources.Tables
 
-/** The graft.scale.approx contract: every sketch swap must (a) agree
-  * with its exact twin within a stated band on the sf0.01 corpus, and
-  * (b) actually produce the cheaper plan shape it promises — fixed
-  * state for the distinct/percentile swaps, and for the dup matrix
-  * the DISAPPEARANCE of the per-gram equi-join. */
+/** The sketch-path (`approx = true`) contract: every sketch swap must
+  * (a) agree with its exact twin within a stated band on the sf0.01
+  * corpus, and (b) actually produce the cheaper plan shape it promises
+  * — fixed state for the distinct/percentile swaps, and for the dup
+  * matrix the DISAPPEARANCE of the per-gram equi-join. */
 class ScaleApproxSpec extends AnyFunSuite with SparkFixture {
   private val Dir = "/root/testdata/sf0.01"
   private def docs = Tables.documents(spark, Dir)
@@ -224,21 +224,7 @@ class ScaleApproxSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("flag: registered wrappers read graft.scale.approx from the session") {
-    spark.conf.set(Scale.ApproxKey, "true")
-    try {
-      val analyzed = Seq(
-        Dedup.dupMatrix(spark, Dir),
-        CorpusStats.distinctNgramDiversity(spark, Dir),
-        CorpusStats.quantileNormalize(spark, Dir))
-        .map(_.queryExecution.analyzed.toString)
-      // (the sketch AGGREGATE hides behind the localCheckpoint's
-      // LogicalRDD — the pairing stage is the visible witness)
-      assert(analyzed(0).contains("hll_union"))
-      assert(analyzed(1).contains("approx_count_distinct"))
-      assert(analyzed(2).contains("approx_percentile"))
-    } finally spark.conf.unset(Scale.ApproxKey)
-    // default stays the exact verification contract
+  test("default: the registered exact wrappers build the exact path") {
     assert(!Dedup.dupMatrix(spark, Dir)
       .queryExecution.analyzed.toString.contains("hll_union"))
   }

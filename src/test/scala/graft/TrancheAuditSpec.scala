@@ -52,23 +52,6 @@ class TrancheAuditSpec extends AnyFunSuite with SparkFixture {
     assert(!got.contains(3L), s"doc 3 shares no term with the expanded query: $got")
   }
 
-  // ---- Wasserstein drift: hand-computed mass, one-sided drop, zero case
-
-  test("wasserstein: W1({1,2},{2,3}) = 1.0 exactly; one-sided types drop; identical = 0") {
-    val ev = valued(
-      ("click", "2024-01-10 10:00:00", 1.0), ("click", "2024-01-10 11:00:00", 2.0),
-      ("click", "2024-01-20 10:00:00", 2.0), ("click", "2024-01-20 11:00:00", 3.0),
-      ("view", "2024-01-10 10:00:00", 5.0), // period A only → dropped
-      ("buy", "2024-01-10 10:00:00", 7.0), ("buy", "2024-01-20 10:00:00", 7.0))
-    val out = Robust.wassersteinDriftOf(ev).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
-      .toMap
-    assert(out.keySet == Set("click", "buy"),
-      s"a type with an empty side has no drift to price: $out")
-    assert(out("click") == ((2L, 2L, 1.0)), s"unit shift of every point: $out")
-    assert(out("buy") == ((1L, 1L, 0.0)), s"identical distributions: $out")
-  }
-
   // ---- Pettitt: hand-computed level shift, tie-heavy, single-day
 
   test("pettitt: a clean level shift lands K=16 at the boundary day, below significance") {
@@ -99,38 +82,6 @@ class TrancheAuditSpec extends AnyFunSuite with SparkFixture {
     assert(EventAnalytics.pettittChangepointOf(ev).isEmpty)
   }
 
-  // ---- runs test: tie-heavy series, n=2, and a hand-computed z
-
-  test("runs test: a series entirely AT its median drops every sign — no row, no crash") {
-    val rows = (1 to 3).map(d => ("click", f"2024-01-0$d%d 10:00:00", 5.0))
-    assert(Robust.runsTestOf(valued(rows: _*)).isEmpty)
-  }
-
-  test("runs test: a 2-day series nulls z (zero variance), never divides") {
-    val ev = valued(("click", "2024-01-01 10:00:00", 1.0),
-      ("click", "2024-01-02 10:00:00", 2.0))
-    val r = Robust.runsTestOf(ev).collect().head
-    assert(r.getLong(1) == 1L && r.getLong(2) == 0L && r.getLong(3) == 1L,
-      s"one sign above the lower median, the median day drops: $r")
-    assert(r.isNullAt(4) && r.isNullAt(5),
-      s"z and the verdict must be NULL on a degenerate series: $r")
-  }
-
-  test("runs test: hand-computed z on a 6-day series with a median tie dropped") {
-    // daily totals 1,3,2,3,1,3 → lower median 2 (dropped); signs
-    // -,+,+,-,+ → runs 4, n+=3, n-=2, E=3.4, Var=0.84,
-    // z = 0.6/sqrt(0.84) = 0.654654… → 0.6547 on the 1e-4 grid.
-    val vals = Seq(1.0, 3.0, 2.0, 3.0, 1.0, 3.0)
-    val rows = vals.zipWithIndex.map { case (v, i) =>
-      ("click", f"2024-01-0${i + 1}%d 10:00:00", v)
-    }
-    val r = Robust.runsTestOf(valued(rows: _*)).collect().head
-    assert(r.getLong(1) == 3L && r.getLong(2) == 2L && r.getLong(3) == 4L,
-      s"n_pos/n_neg/runs: $r")
-    assert(math.abs(r.getDouble(4) - 0.6547) < 1e-9, s"z: $r")
-    assert(!r.getBoolean(5))
-  }
-
   // ---- code-switch: the minEvidence boundary and the unmatched source
 
   test("code-switch: total-best == minEvidence is mixed; one foreign word is not") {
@@ -151,32 +102,6 @@ class TrancheAuditSpec extends AnyFunSuite with SparkFixture {
     assert(b.getLong(1) == 1L && b.getLong(2) == 0L && b.getLong(3) == 0L)
     assert(b.isNullAt(4) && b.isNullAt(5),
       s"an unmatched source reads NULL shares, never a 0-division: $b")
-  }
-
-  // ---- Mann-Kendall (plain + seasonal): degenerate series
-
-  test("mann-kendall: a fully-tied series nulls z; a 1-day type drops its row") {
-    val rows = (1 to 5).map(d => ("click", f"2024-01-0$d%d 10:00:00", 2.0)) :+
-      (("view", "2024-01-03 10:00:00", 9.0)) // single day → no pair
-    val out = Robust.mannKendallOf(valued(rows: _*)).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(out.keySet == Set("click"),
-      s"a 1-day series has no pair — the type drops, it doesn't NULL: $out")
-    val c = out("click")
-    assert(c.getLong(2) == 0L && c.isNullAt(3) && c.isNullAt(4),
-      s"fully tied → S=0, variance 0, NULL z and verdict: $c")
-  }
-
-  test("seasonal mann-kendall: a one-week series has no same-weekday pair — row drops") {
-    val rows = (1 to 7).map(d => ("click", f"2024-01-0$d%d 10:00:00", d.toDouble))
-    assert(Robust.seasonalMkOf(valued(rows: _*)).isEmpty,
-      "7 distinct weekdays, 1 day each: zero within-stratum pairs")
-    // two weeks of a strictly rising series: every stratum has its
-    // pair and the trend reads through the weekly cycle
-    val rows2 = (1 to 14).map(d => ("click", f"2024-01-$d%02d 10:00:00", d.toDouble))
-    val r = Robust.seasonalMkOf(valued(rows2: _*)).collect().head
-    assert(r.getLong(1) == 14L && r.getLong(2) == 7L && r.getLong(3) == 7L,
-      s"T=14, 7 strata, S = 7 concordant pairs: $r")
   }
 
   // ---- SBC demand classes: the single-demand-day CV²=0 convention
