@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * Every lineage cut in this library is `localCheckpoint(eager =
   * false)` — blocks live on executor local storage, lazily
   * materialized by the consuming job. That is the measured-fastest
-  * choice in this single-JVM deployment (Graph.pagerank's documented
+  * choice in this single-JVM deployment (Graph.pagerankOf's documented
   * experiment: lazy-local 6.6 s vs eager 8.1 s at sf0.1), and the
   * right DEFAULT everywhere the checkpoint only cuts plan-growth:
   * losing a block merely recomputes the (still short) lineage above

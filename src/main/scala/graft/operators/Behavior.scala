@@ -69,9 +69,6 @@ object Behavior {
       .orderBy("ord")
   }
 
-  def funnelSteps(spark: SparkSession, dir: String): DataFrame =
-    funnelStepsOf(Tables.events(spark, dir))
-
   /** Conversion-window funnel — [[funnelStepsOf]] with a deadline:
     * step k counts only when it lands strictly after step k−1 AND
     * within `windowMinutes` of it (the attribution-window semantics
@@ -96,9 +93,6 @@ object Behavior {
     funnelOf(events, t => col("us") > col(t) && col("us") <= col(t) + w)
   }
 
-  def funnelWindowed(spark: SparkSession, dir: String): DataFrame =
-    funnelWindowedOf(Tables.events(spark, dir))
-
   /** Cohort retention: users are cohorted by their first active day;
     * for offsets 0..7 count how many of each cohort were active again
     * exactly `offset` days later. Activity is de-duplicated to
@@ -120,9 +114,6 @@ object Behavior {
       .orderBy("cohort_day", "day_offset")
   }
 
-  def cohortRetention(spark: SparkSession, dir: String): DataFrame =
-    cohortRetentionOf(Tables.events(spark, dir))
-
   /** Cohort LTV curve: cumulative revenue per cohort user by account
     * age — [[cohortRetentionOf]] asks "who comes back", this asks
     * "what are they worth by day N", the payback-period read that
@@ -141,7 +132,7 @@ object Behavior {
     require(maxOffset >= 0, s"maxOffset must be >= 0, got $maxOffset")
     val aged = events
       .select(col("user_id"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("qv"))
+        micro(col("value")).as("qv"))
       .withColumn("cohort_day", min("day").over(Window.partitionBy("user_id")))
       .withColumn("age", datediff(col("day"), col("cohort_day")))
       .filter(col("age").between(0, maxOffset))
@@ -161,9 +152,6 @@ object Behavior {
       .orderBy("cohort_day", "age")
   }
 
-  def cohortLtv(spark: SparkSession, dir: String): DataFrame =
-    cohortLtvOf(Tables.events(spark, dir))
-
   /** Day × event-type pivot: one row per day, one value column per
     * event type (the AdMob-style wide report; save_CSV.py:104-189
     * emits the long form this pivots). Event types are an explicit
@@ -175,7 +163,7 @@ object Behavior {
   def pivotReportOf(events: DataFrame,
                     types: Seq[String] = Seq("click", "error", "purchase", "signup", "view")): DataFrame = {
     val q = events.select(to_date(col("ts")).as("day"), col("event_type"),
-      floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+      micro(col("value")).as("qv"))
     val wide = q.groupBy("day").pivot("event_type", types).agg(sum(col("qv")))
     val filled = types.foldLeft(wide) { (df, t) =>
       df.withColumn(t,
@@ -183,9 +171,6 @@ object Behavior {
     }
     filled.orderBy("day")
   }
-
-  def pivotReport(spark: SparkSession, dir: String): DataFrame =
-    pivotReportOf(Tables.events(spark, dir))
 
   /** First-order event-transition matrix: counts and row-normalized
     * probabilities of (previous event type → event type) per user
@@ -209,9 +194,6 @@ object Behavior {
           col("n").cast("double") / col("row_total").cast("double")).as("p"))
       .orderBy("prev_type", "event_type")
   }
-
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame =
-    eventTransitionsOf(Tables.events(spark, dir))
 
   /** Markov next-event prediction backtest — does yesterday's
     * transition matrix actually predict tomorrow's behavior, the
@@ -262,9 +244,6 @@ object Behavior {
         expr("(n_baseline * 1000000) div n_test_pairs").as("baseline_ppm"),
         (col("n_correct") > col("n_baseline")).as("beats_marginal"))
   }
-
-  def markovAccuracy(spark: SparkSession, dir: String): DataFrame =
-    markovAccuracyOf(Tables.events(spark, dir))
 
   /** Markov-chain (removal-effect) attribution (Anderl et al. '14 —
     * the data-driven alternative to rows 33/271's positional models:
@@ -375,9 +354,6 @@ object Behavior {
       .orderBy("channel")
   }
 
-  def markovAttribution(spark: SparkSession, dir: String): DataFrame =
-    markovAttributionOf(Tables.events(spark, dir))
-
   /** Exact Shapley-value attribution (Shapley '53 via the simplified
     * coalition game of Dalessandro '12 — the method behind Google's
     * data-driven attribution; the FOURTH model closing the family:
@@ -470,9 +446,6 @@ object Behavior {
       .orderBy("channel")
   }
 
-  def shapleyAttribution(spark: SparkSession, dir: String): DataFrame =
-    shapleyAttributionOf(Tables.events(spark, dir))
-
   /** Daily growth accounting (the Social Capital DAU decomposition —
     * the STRUCTURE behind a flat DAU line that rows 74/280/293 each
     * read one slice of): every active user-day is exactly one of
@@ -530,9 +503,6 @@ object Behavior {
       .orderBy("day")
   }
 
-  def growthAccounting(spark: SparkSession, dir: String): DataFrame =
-    growthAccountingOf(Tables.events(spark, dir))
-
   /** Dormancy-spell distribution — how long do users sleep before
     * [[growthAccountingOf]]'s `resurrected` brings them back? The
     * day-grain gap histogram (gap ≥ 2 days between consecutive
@@ -560,9 +530,6 @@ object Behavior {
           .as("share_ppm"))
       .orderBy("gap_days")
   }
-
-  def dormancySpells(spark: SparkSession, dir: String): DataFrame =
-    dormancySpellsOf(Tables.events(spark, dir))
 
   /** The event-type × time-of-week count cells `o`. The bucket is
     * PURE ARITHMETIC — `days-since-epoch % 7` (truncating %, the same
@@ -606,9 +573,6 @@ object Behavior {
       .orderBy("event_type", "tow")
   }
 
-  def chi2Contingency(spark: SparkSession, dir: String): DataFrame =
-    chi2ContingencyOf(Tables.events(spark, dir))
-
   /** Standardized (adjusted, Haberman '73) residuals of the
     * event-type × time-of-week table — [[chi2ContingencyOf]] reports
     * per-cell χ² contributions; the ADJUSTED residual
@@ -635,9 +599,6 @@ object Behavior {
       .orderBy("event_type", "tow")
   }
 
-  def chi2Residuals(spark: SparkSession, dir: String): DataFrame =
-    chi2ResidualsOf(Tables.events(spark, dir))
-
   /** The one experiment-arm assignment: the first 32 bits of
     * md5("ab:" ‖ user id), mod `arms` — engine-portable (both engines
     * implement md5 bit-identically), so every arm-split read here and
@@ -657,6 +618,11 @@ object Behavior {
   /** A value on the exact micro grid: round-half-up to 1e-6, as a long. */
   private[operators] def micro(v: Column): Column =
     floor(v * 1e6 + lit(0.5)).cast("long")
+
+  /** The report day (the last event day) as a 1-row broadcastable
+    * frame, so no driver collect is needed. */
+  private[operators] def reportDate(events: DataFrame): DataFrame =
+    events.agg(max(to_date(col("ts"))).as("report_date"))
 
   /** (event_type, vq, arm): each event's micro-grid value beside its
     * user's arm under the `arms`-way `armOf` split. */
@@ -746,9 +712,6 @@ object Behavior {
     threeArmF(moments(armValues(events, 3L), Seq("event_type", "arm"), "vq"),
       "f_stat")
 
-  def anovaF(spark: SparkSession, dir: String): DataFrame =
-    anovaFOf(Tables.events(spark, dir))
-
   /** Brown–Forsythe variance-homogeneity test per event type across
     * the [[arm3]] assignment — the pre-check [[anovaFOf]] silently
     * assumes (ANOVA compares MEANS under equal variances; when one
@@ -792,9 +755,6 @@ object Behavior {
     threeArmF(perArm, "w_stat")
   }
 
-  def brownForsythe(spark: SparkSession, dir: String): DataFrame =
-    brownForsytheOf(Tables.events(spark, dir))
-
   /** Conversion-latency distribution: for each user's FIRST view and
     * first purchase STRICTLY after it (the funnel pairing of
     * [[funnelStepsOf]], two chained min-aggregates — never a per-user
@@ -824,9 +784,6 @@ object Behavior {
           expr("percentile(delay_us, 0.9)") / lit(1e6)).as("p90_sec"))
       .orderBy("view_day")
   }
-
-  def conversionLatency(spark: SparkSession, dir: String): DataFrame =
-    conversionLatencyOf(Tables.events(spark, dir))
 
   /** Distinct (user, item) baskets, item = props.k (0 when absent). */
   private def baskets(events: DataFrame): DataFrame =
@@ -972,9 +929,6 @@ object Behavior {
       .limit(kTop)
   }
 
-  def aprioriTriples(spark: SparkSession, dir: String): DataFrame =
-    aprioriTriplesOf(Tables.events(spark, dir))
-
   /** Frequent 3-itemsets via Spark ML's FP-Growth (Han '00; the
     * PFP-parallelized conditional-tree miner MLlib ships) — the
     * DENSE-basket scale path [[aprioriTriplesOf]]'s scaladoc points
@@ -1041,13 +995,6 @@ object Behavior {
       .limit(kTop)
   }
 
-  def fpgrowthTriples(spark: SparkSession, dir: String): DataFrame =
-    fpgrowthTriplesOf(
-      Tables.events(spark, dir).filter(col("event_type") === "purchase"))
-
-  def itemAffinity(spark: SparkSession, dir: String): DataFrame =
-    itemAffinityOf(Tables.events(spark, dir))
-
   /** Item-to-item cosine neighbors from co-occurrence — the classic
     * "customers also touch" scorer (cos = c₁₂/√(c₁·c₂) over binary
     * user-item vectors; [[itemAffinityOf]]'s lift flags SURPRISING
@@ -1079,9 +1026,6 @@ object Behavior {
       .orderBy("item", "rank")
   }
 
-  def itemCosine(spark: SparkSession, dir: String): DataFrame =
-    itemCosineOf(Tables.events(spark, dir))
-
   /** Lorenz concentration curve of revenue over users: per user-decile
     * (poorest→richest by total revenue, (revenue, user_id) tiebreak),
     * the decile's revenue share and the running cumulative share —
@@ -1101,7 +1045,7 @@ object Behavior {
   def lorenzCurveOf(events: DataFrame): DataFrame = {
     val perUser = events
       .select(col("user_id"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("qv"))
+        micro(col("value")).as("qv"))
       .groupBy("user_id").agg(sum("qv").as("rev"))
     val (ranked, total) = graft.Scale.twoPhaseRank(perUser,
       Seq(col("rev"), col("user_id")))
@@ -1122,9 +1066,6 @@ object Behavior {
           .as("cum_share_ppm"))
       .orderBy("decile")
   }
-
-  def lorenzCurve(spark: SparkSession, dir: String): DataFrame =
-    lorenzCurveOf(Tables.events(spark, dir))
 
   /** Deterministic negative sampling for recommendation training: per
     * user, `k` items the user NEVER interacted with, pseudo-randomly
@@ -1198,15 +1139,12 @@ object Behavior {
     out.orderBy("user_id", "rank")
   }
 
-  def negativeSamples(spark: SparkSession, dir: String): DataFrame =
-    negativeSamplesOf(Tables.events(spark, dir))
-
   /** The A/B conversion fold [[abTestOf]] and [[powerMdeOf]] read: a
     * user converts when they purchase ON THE REPORT DAY (the corpus
     * max date, a 1-row broadcast), then ONE 1-row conditional
     * aggregate gives n0, n1, conv0, conv1 over the [[arm2]] split. */
   private def reportDayArms(events: DataFrame): DataFrame = {
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     events
       .select(col("user_id"), to_date(col("ts")).as("day"),
         col("event_type"))
@@ -1260,9 +1198,6 @@ object Behavior {
             lit(0.0))).as("z"))
   }
 
-  def abTest(spark: SparkSession, dir: String): DataFrame =
-    abTestOf(Tables.events(spark, dir))
-
   /** Minimum-detectable-effect design readout for the running A/B
     * (the experiment-DESIGN number every "the test read flat" debrief
     * needs before concluding anything: at these arm sizes and this
@@ -1306,9 +1241,6 @@ object Behavior {
           .otherwise(col("observed_diff") > col("mde")))
   }
 
-  def powerMde(spark: SparkSession, dir: String): DataFrame =
-    powerMdeOf(Tables.events(spark, dir))
-
 
   /** Cochran–Mantel–Haenszel stratified 2×2 test + MH common odds
     * ratio — the Simpson's-paradox-proof A/B readout the experiment
@@ -1335,7 +1267,7 @@ object Behavior {
   def mantelHaenszelOf(events: DataFrame, cut1: Long = 62,
                        cut2: Long = 70): DataFrame = {
     require(cut1 < cut2, s"need cut1 < cut2, got $cut1/$cut2")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     val users = events
       .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
@@ -1392,9 +1324,6 @@ object Behavior {
         when(col("chi2_mh").isNull, lit(false))
           .otherwise(col("chi2_mh") > 3.841459))
   }
-
-  def mantelHaenszel(spark: SparkSession, dir: String): DataFrame =
-    mantelHaenszelOf(Tables.events(spark, dir))
 
   /** The two-arm mean/variance chain [[welchTestOf]] and
     * [[tostEquivalenceOf]] share: per-(type, arm) micro-grid
@@ -1468,9 +1397,6 @@ object Behavior {
       .orderBy("event_type")
   }
 
-  def welchTest(spark: SparkSession, dir: String): DataFrame =
-    welchTestOf(Tables.events(spark, dir))
-
   /** TOST equivalence test per event type (Schuirmann '87 two
     * one-sided tests — the question every OTHER test in the shelf
     * cannot answer: not "did the treatment move the metric?" but
@@ -1508,9 +1434,6 @@ object Behavior {
             col("z_upper") > 1.644854))
       .orderBy("event_type")
   }
-
-  def tostEquivalence(spark: SparkSession, dir: String): DataFrame =
-    tostEquivalenceOf(Tables.events(spark, dir))
 
   /** Two-sample Poisson rate test per event type — the COUNT-metric
     * A/B readout ([[abTestOf]] tests a per-user proportion,
@@ -1561,9 +1484,6 @@ object Behavior {
       .orderBy("event_type")
   }
 
-  def poissonRateTest(spark: SparkSession, dir: String): DataFrame =
-    poissonRateTestOf(Tables.events(spark, dir))
-
   /** Cochran-Armitage trend test across the THREE ordered arms — the
     * dose-response read ([[anovaFOf]] asks "do the arms differ";
     * this asks "does conversion move MONOTONICALLY with treatment
@@ -1609,9 +1529,6 @@ object Behavior {
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 1.96))
   }
 
-  def cochranArmitage(spark: SparkSession, dir: String): DataFrame =
-    cochranArmitageOf(Tables.events(spark, dir))
-
   /** Repeat-purchase latency per first-purchase month — the
     * retention-economics gap [[conversionLatencyOf]] (view→first
     * purchase) doesn't cover: how long until a NEW customer buys
@@ -1648,9 +1565,6 @@ object Behavior {
           expr("percentile(gap_us, 0.9)") / lit(86400e6)).as("p90_days"))
       .orderBy("month")
   }
-
-  def repeatPurchaseLatency(spark: SparkSession, dir: String): DataFrame =
-    repeatPurchaseLatencyOf(Tables.events(spark, dir))
 
   /** Funnel STAGE latency decomposition — [[conversionLatencyOf]]
     * prices the whole view→purchase span; this splits it at the
@@ -1693,9 +1607,6 @@ object Behavior {
       .orderBy("stage")
   }
 
-  def funnelStageLatency(spark: SparkSession, dir: String): DataFrame =
-    funnelStageLatencyOf(Tables.events(spark, dir))
-
   /** Gateway items — which item a user touches FIRST, and how often
     * that first touch becomes a customer ([[entryConversionOf]] asks
     * this of the entry event TYPE; merchandising needs it per ITEM:
@@ -1734,9 +1645,6 @@ object Behavior {
       .orderBy("item")
   }
 
-  def gatewayItems(spark: SparkSession, dir: String): DataFrame =
-    gatewayItemsOf(Tables.events(spark, dir))
-
   /** Association RULES with directional confidence — the actionable
     * form of [[itemAffinityOf]]'s symmetric pairs (lift says the
     * pair co-occurs beyond chance; a merchandiser places the
@@ -1767,9 +1675,6 @@ object Behavior {
       .limit(k)
   }
 
-  def associationRules(spark: SparkSession, dir: String): DataFrame =
-    associationRulesOf(Tables.events(spark, dir))
-
   /** Difference-in-differences readout (the panel-data causal read
     * [[abTestOf]] and [[cupedAdjustOf]] sit beside: when treatment
     * started at `splitDay`, the treated arm's pre→post change MINUS
@@ -1794,7 +1699,7 @@ object Behavior {
   def didReadoutOf(events: DataFrame, splitDay: String): DataFrame = {
     val perUserPeriod = events
       .select(col("user_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
+        micro(col("value")).as("qv"),
         when(col("ts") < lit(splitDay).cast("timestamp"), 0).otherwise(1)
           .as("period"),
         arm2(col("user_id")).as("arm"))
@@ -1829,9 +1734,6 @@ object Behavior {
         r4(did).as("did"),
         r4(did / nullif(se, lit(0.0))).as("z"))
   }
-
-  def didReadout(spark: SparkSession, dir: String): DataFrame =
-    didReadoutOf(Tables.events(spark, dir), "2024-01-16")
 
   /** Per user, the micro-grid value sum and event count before
     * (`pre_*`) and from (`post_*`) `splitDay` on — only users active
@@ -1872,7 +1774,7 @@ object Behavior {
   def qiniCurveOf(events: DataFrame, splitDay: String): DataFrame = {
     val perUser = events
       .select(col("user_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
+        micro(col("value")).as("qv"),
         (col("ts") < lit(splitDay).cast("timestamp")).as("pre"),
         (col("event_type") === "purchase" &&
           col("ts") >= lit(splitDay).cast("timestamp")).as("conv"))
@@ -1911,9 +1813,6 @@ object Behavior {
             / nullif(col("nc").cast("double"), lit(0.0)))).as("qini"))
       .orderBy("decile")
   }
-
-  def qiniCurve(spark: SparkSession, dir: String): DataFrame =
-    qiniCurveOf(Tables.events(spark, dir), "2024-01-16")
 
   /** Propensity-stratified ATE (subclassification, Cochran'68 /
     * Rosenbaum-Rubin'83): the causal point estimate on a CONTINUOUS
@@ -1978,9 +1877,6 @@ object Behavior {
       .orderBy("stratum")
   }
 
-  def stratifiedAte(spark: SparkSession, dir: String): DataFrame =
-    stratifiedAteOf(Tables.events(spark, dir), "2024-01-16")
-
   /** RFM segmentation — the classic CRM feature triple: per user,
     * recency (days since last event, vs the corpus report date),
     * frequency (event count), monetary (micro-exact value sum), each
@@ -2009,10 +1905,10 @@ object Behavior {
     * users instead of funnelling the user frame through one task
     * three times. */
   def rfmSegmentsOf(events: DataFrame): DataFrame = {
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     val per = events
       .select(col("user_id"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        micro(col("value")).as("qv"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
       .groupBy("user_id")
       .agg(max("day").as("last_day"), count(lit(1)).as("frequency"),
@@ -2052,9 +1948,6 @@ object Behavior {
       .orderBy("user_id")
   }
 
-  def rfmSegments(spark: SparkSession, dir: String): DataFrame =
-    rfmSegmentsOf(Tables.events(spark, dir))
-
   /** Exponential-decay engagement score per user — the recency-weighted
     * activity feature every ranking/churn model starts from: each
     * event contributes value · 2^(−age_days), ages beyond `horizon`
@@ -2080,10 +1973,10 @@ object Behavior {
     * the bound. */
   def decayedEngagementOf(events: DataFrame, horizon: Int = 20): DataFrame = {
     require(horizon > 0 && horizon < 60, s"horizon in (0,60), got $horizon")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     events
       .select(col("user_id"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        micro(col("value")).as("qv"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
       .withColumn("age", datediff(col("report_date"), col("day")))
       .filter(col("age") <= horizon)
@@ -2097,9 +1990,6 @@ object Behavior {
           .as("score"))
       .orderBy("user_id")
   }
-
-  def decayedEngagement(spark: SparkSession, dir: String): DataFrame =
-    decayedEngagementOf(Tables.events(spark, dir))
 
   /** CUPED variance reduction (Deng et al. '13) for an A/B readout:
     * each user's PRE-period mean value is the covariate; the
@@ -2154,9 +2044,6 @@ object Behavior {
       .orderBy("arm")
   }
 
-  def cupedAdjust(spark: SparkSession, dir: String): DataFrame =
-    cupedAdjustOf(Tables.events(spark, dir), "2024-01-16")
-
   /** Per user, the lifetime in days between first and last event
     * (`duration`) and the right-censoring flag: a user still active
     * within `censorDays` of the corpus report date (a 1-row broadcast)
@@ -2164,7 +2051,7 @@ object Behavior {
     * survival reads' only fact-sized shuffle. */
   private def lifetimes(events: DataFrame, censorDays: Int): DataFrame = {
     require(censorDays > 0, s"censorDays must be positive, got $censorDays")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
@@ -2221,9 +2108,6 @@ object Behavior {
       .orderBy("duration")
   }
 
-  def churnLifetable(spark: SparkSession, dir: String): DataFrame =
-    churnLifetableOf(Tables.events(spark, dir))
-
   /** Nelson–Aalen cumulative hazard over [[churnLifetableOf]]'s risk
     * sets: H(t) = Σ_{tᵢ ≤ t} dᵢ/nᵢ — the survival curve's additive
     * dual (KM multiplies survival factors; NA sums hazard mass, the
@@ -2250,9 +2134,6 @@ object Behavior {
           .as("cum_hazard"))
       .orderBy("duration")
   }
-
-  def nelsonAalen(spark: SparkSession, dir: String): DataFrame =
-    nelsonAalenOf(Tables.events(spark, dir))
 
   /** Log-rank (Mantel-Cox) test of churn-survival equality between the
     * two md5-parity experiment arms — the survival A/B readout beside
@@ -2318,9 +2199,6 @@ object Behavior {
         r4(dd(col("sq")) / lit(1e9) /
           nullif(sqrt(dd(col("vq")) / lit(1e9)), lit(0.0))).as("z"))
   }
-
-  def logrankTest(spark: SparkSession, dir: String): DataFrame =
-    logrankTestOf(Tables.events(spark, dir))
 
   /** Restricted mean survival time (RMST) per md5-parity arm — the
     * EFFECT SIZE the survival A/B family was missing ([[logrankTestOf]]
@@ -2395,9 +2273,6 @@ object Behavior {
       .orderBy("arm")
   }
 
-  def rmstArms(spark: SparkSession, dir: String): DataFrame =
-    rmstArmsOf(Tables.events(spark, dir))
-
   /** Early-spend → lifetime-value signal strength: the Pearson r
     * between each user's revenue in their own first `earlyDays` days
     * and their revenue AFTER it — the one number that says whether
@@ -2417,7 +2292,7 @@ object Behavior {
     require(earlyDays > 0, s"earlyDays must be positive, got $earlyDays")
     val dec = "decimal(38,0)"
     val e = events.select(col("user_id"), to_date(col("ts")).as("day"),
-      floor(col("value") * 1e6 + 0.5).cast("long").as("vq"))
+      micro(col("value")).as("vq"))
     val firstDay = e.groupBy("user_id").agg(min("day").as("first_day"))
     val per = e.join(firstDay, Seq("user_id"))
       .groupBy("user_id")
@@ -2441,9 +2316,6 @@ object Behavior {
       graft.functions.TextF.round4HalfUp(
         d(num) / nullif(sqrt(d(dx)) * sqrt(d(dy)), lit(0.0))).as("r"))
   }
-
-  def ltvEarlySignal(spark: SparkSession, dir: String): DataFrame =
-    ltvEarlySignalOf(Tables.events(spark, dir))
 
   /** Cramér's V over the event-type × time-of-week contingency table —
     * [[chi2ContingencyOf]]'s one-number summary (that query reports
@@ -2497,9 +2369,6 @@ object Behavior {
               (least(col("n_types"), col("n_tows")) - 1).cast("double"))))
           .as("cramers_v"))
   }
-
-  def cramersV(spark: SparkSession, dir: String): DataFrame =
-    cramersVOf(Tables.events(spark, dir))
 
   /** The touch window the positional attribution models share:
     * purchases (pid, tp, micro-grid qv) and the purchase ⋈ click pairs
@@ -2622,12 +2491,6 @@ object Behavior {
     attributionReport(purchases, touches)
   }
 
-  def decayAttribution(spark: SparkSession, dir: String): DataFrame =
-    decayAttributionOf(Tables.events(spark, dir))
-
-  def linearAttribution(spark: SparkSession, dir: String): DataFrame =
-    linearAttributionOf(Tables.events(spark, dir))
-
   /** Day-over-day audience overlap: Jaccard between consecutive days'
     * active-user SETS plus the retained share — the daily-churn read
     * behind [[cohortRetentionOf]]'s cohort triangles (cohorts answer
@@ -2665,9 +2528,6 @@ object Behavior {
       .orderBy("day")
   }
 
-  def audienceOverlap(spark: SparkSession, dir: String): DataFrame =
-    audienceOverlapOf(Tables.events(spark, dir))
-
   /** Audience growth curve — cumulative distinct users by FIRST-seen
     * day (the "total users ever" line every dashboard draws;
     * [[audienceOverlapOf]] reads day-over-day churn, this reads
@@ -2698,9 +2558,6 @@ object Behavior {
       .orderBy("day")
   }
 
-  def userGrowth(spark: SparkSession, dir: String): DataFrame =
-    userGrowthOf(Tables.events(spark, dir))
-
   /** Trending items (exponentially decayed interaction counts, top-k):
     * [[decayedEngagementOf]]'s integer-exact λ=½ machinery keyed by
     * ITEM — each interaction weighs 2^(−age) and the top-k by decayed
@@ -2714,7 +2571,7 @@ object Behavior {
                       k: Int = 20): DataFrame = {
     require(horizon > 0 && horizon < 60, s"horizon in (0,60), got $horizon")
     require(k > 0, s"k must be positive, got $k")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = reportDate(events)
     val top = events
       .select(to_date(col("ts")).as("day"),
         coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
@@ -2736,9 +2593,6 @@ object Behavior {
           .as("score"))
       .orderBy("rank")
   }
-
-  def trendingItems(spark: SparkSession, dir: String): DataFrame =
-    trendingItemsOf(Tables.events(spark, dir))
 
   /** Funnel split by experiment arm — the A/B read on the FUNNEL
     * ([[abTestOf]] tests one conversion event; treatments usually
@@ -2790,9 +2644,6 @@ object Behavior {
       .orderBy("ord")
   }
 
-  def funnelByArm(spark: SparkSession, dir: String): DataFrame =
-    funnelByArmOf(Tables.events(spark, dir))
-
   /** Sample-ratio-mismatch (SRM) guardrail — the FIRST check every
     * experiment readout runs before anyone looks at a metric: under
     * the 50/50 [[arm2]] assignment the per-arm user counts should be
@@ -2825,9 +2676,6 @@ object Behavior {
       .orderBy("event_type")
   }
 
-  def srmCheck(spark: SparkSession, dir: String): DataFrame =
-    srmCheckOf(Tables.events(spark, dir))
-
   /** Minimum detectable effect / power sizing — the question asked
     * BEFORE the experiment ships ([[abTestOf]] answers after): with
     * the users and per-user value variance this event type actually
@@ -2852,7 +2700,7 @@ object Behavior {
   def mdePowerOf(events: DataFrame): DataFrame = {
     val per = events
       .select(col("event_type"), col("user_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("vq"))
+        micro(col("value")).as("vq"))
       .groupBy("event_type", "user_id")
       .agg(sum("vq").as("uv"))
       .withColumn("arm", arm2(col("user_id")))
@@ -2872,9 +2720,6 @@ object Behavior {
           nullif(d(col("s0")) / d(col("n0")), lit(0.0))).as("mde_rel"))
       .orderBy("event_type")
   }
-
-  def mdePower(spark: SparkSession, dir: String): DataFrame =
-    mdePowerOf(Tables.events(spark, dir))
 
   /** Simpson's-paradox audit per event type (Simpson '51 / the
     * Bickel-Berkeley read): does the AGGREGATE arm difference point
@@ -2905,7 +2750,7 @@ object Behavior {
         (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
           .as("dow"),
         arm2(col("user_id")).as("arm"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+        micro(col("value")).as("vq"))
       .groupBy("event_type", "dow", "arm")
       .agg(count(lit(1)).as("n"), sum(col("vq").cast(dec)).as("s"))
     val Seq(a0, a1) = levels("arm", 2).map(_._2)
@@ -2949,9 +2794,6 @@ object Behavior {
       .orderBy("event_type")
   }
 
-  def simpsonReversal(spark: SparkSession, dir: String): DataFrame =
-    simpsonReversalOf(Tables.events(spark, dir))
-
   /** Delete-one-group jackknife SE for the ratio metric "mean value
     * per active user" per event type (Quenouille/Tukey; the
     * cluster-robust experiment readout): user-level metrics are
@@ -2983,7 +2825,7 @@ object Behavior {
         (conv(substring(md5(concat(lit("jk:"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long")
           % buckets).as("b"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+        micro(col("value")).as("vq"))
       .groupBy("event_type", "b")
       .agg(countDistinct("user_id").as("u"), sum(col("vq").cast(dec)).as("s"))
     // NO checkpoint although three consumers reference this frame:
@@ -3024,9 +2866,6 @@ object Behavior {
       .orderBy("event_type")
   }
 
-  def jackknifeRatioSe(spark: SparkSession, dir: String): DataFrame =
-    jackknifeRatioSeOf(Tables.events(spark, dir))
-
   /** A/A calibration battery per event type (the experiment-platform
     * hygiene run BEFORE trusting any A/B readout: split users into
     * `cells` md5 cells, pair them into cells/2 disjoint NULL
@@ -3053,13 +2892,13 @@ object Behavior {
         (conv(substring(md5(concat(lit("aa:"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long")
           % cells).as("cell"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+        micro(col("value")).as("vq"))
     val per = moments(byCell, Seq("event_type", "cell"), "vq")
       .withColumn("pair", expr("cell div 2"))
       .withColumn("par", expr("cell % 2"))
     val z = pivot(per, Seq("event_type", "pair"), levels("par", 2), "n", "s", "ss")
       .filter(col("n0") > 1 && col("n1") > 1)
-      .withColumn("zq", floor(abs(expr(
+      .withColumn("zq", micro(abs(expr(
         """(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
           | - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE))
           |/ NULLIF(sqrt(
@@ -3069,7 +2908,7 @@ object Behavior {
           | + (CAST(ss1 AS DOUBLE)
           |    - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
           |   / CAST(n1 - 1 AS DOUBLE) / CAST(n1 AS DOUBLE)), 0.0)"""
-          .stripMargin)) * 1e6 + lit(0.5)).cast("long"))
+          .stripMargin))))
       .filter(col("zq").isNotNull)
     z.groupBy("event_type")
       .agg(count(lit(1)).as("n_tests"),
@@ -3082,9 +2921,6 @@ object Behavior {
         (col("mzq").cast("double") / lit(1e6)).as("max_abs_z"))
       .orderBy("event_type")
   }
-
-  def aaCalibration(spark: SparkSession, dir: String): DataFrame =
-    aaCalibrationOf(Tables.events(spark, dir))
 
   /** Trigger-dilution readout (Deng/Microsoft's triggered-analysis
     * discipline): an ITT effect measured over EVERYONE is diluted by
@@ -3115,7 +2951,7 @@ object Behavior {
     val dec = "decimal(38,0)"
     val base = events.select(col("event_type"), col("user_id"),
       arm2(col("user_id")).as("arm"),
-      floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+      micro(col("value")).as("vq"))
     val pop = base.select("user_id", "arm").distinct()
     val arms = levels("arm", 2)
     val popW = pivot(pop.groupBy("arm").agg(count(lit(1)).as("np")),
@@ -3165,7 +3001,4 @@ object Behavior {
           nullif(col("ate_trig_raw"), lit(0.0))).as("dilution_ratio"))
       .orderBy("event_type")
   }
-
-  def triggerDilution(spark: SparkSession, dir: String): DataFrame =
-    triggerDilutionOf(Tables.events(spark, dir))
 }

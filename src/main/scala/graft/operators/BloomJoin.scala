@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Explicit Bloom-filter runtime pre-filter for selective semi-joins —
   * the declarative analog of Spark's own runtime row-level filtering
   * (Catalyst injects BloomFilterAggregate under
@@ -109,10 +107,7 @@ object BloomJoin {
       .orderBy("l_returnflag")
   }
 
-  def urgentRevenue(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    urgentRevenueOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir))
-
-  /** Bloom-filter calibration audit — [[HeavyHitters.countMinErr]]'s
+  /** Bloom-filter calibration audit — [[HeavyHitters.countMinErrOf]]'s
     * sibling for THIS operator's sketch: build the bitset over the
     * urgent order keys exactly as [[preFilter]] does, then probe it
     * with every key known NOT to be a member (non-urgent orders —
@@ -128,7 +123,7 @@ object BloomJoin {
     * codegen predicate as production.
     *
     * Pinned-frame oracle: positions come from Spark-native xxhash64
-    * (not SQL-replicable — the [[graft.operators.Dedup.lshPrecision]]
+    * (not SQL-replicable — the [[graft.operators.Dedup.lshPrecisionOf]]
     * convention); BloomJoinSpec pins the zero-FN contract and the
     * fill/FPR algebra on hand-built keys. */
   def bloomFprOf(orders: DataFrame, bits: Int = 1 << 17,
@@ -154,7 +149,4 @@ object BloomJoin {
         col("n_negatives"), col("n_false_pos"),
         expr("(n_false_pos * 1000000) div n_negatives").as("fpr_ppm"))
   }
-
-  def bloomFpr(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    bloomFprOf(Tables.orders(spark, dir))
 }

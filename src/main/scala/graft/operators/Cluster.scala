@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorF
-import graft.sources.Tables
 
 /** Embedding clustering — the semantic-grouping pass a training-data
   * pipeline runs for topic balancing, semantic dedup cells, and
@@ -96,9 +95,6 @@ object Cluster {
       .select(col("vec_id"), col("cluster"), col("cs").as("sim"))
       .orderBy("vec_id")
 
-  def kmeansEmbed(spark: SparkSession, dir: String): DataFrame =
-    kmeansEmbedOf(Tables.embeddings(spark, dir))
-
   /** Per-label cluster-quality report: each label's centroid
     * (element-wise quantized mean — same order-independent machinery
     * as [[recenter]]) and its members' cosine cohesion (count, mean,
@@ -121,7 +117,7 @@ object Cluster {
       .filter(col("cs").isNotNull)
       .groupBy("label")
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("cs") * 1e6 + 0.5).cast("long")).as("qsum"),
+        sum(Behavior.micro(col("cs"))).as("qsum"),
         min("cs").as("min_cos"))
       .select(col("label"), col("n"),
         graft.functions.TextF.round4HalfUp(
@@ -129,9 +125,6 @@ object Cluster {
         col("min_cos"))
       .orderBy("label")
   }
-
-  def labelCentroids(spark: SparkSession, dir: String): DataFrame =
-    labelCentroidsOf(Tables.embeddings(spark, dir))
 
   /** k-center greedy coreset selection (Gonzalez '85 farthest-point
     * traversal; the Sener-Savarese '18 active-learning coreset): pick
@@ -159,7 +152,7 @@ object Cluster {
     val vecs = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     def d6(a: Column, b: Column): Column =
-      lit(1000000L) - floor(VectorF.cosineSim(a, b) * 1e6 + lit(0.5)).cast("long")
+      lit(1000000L) - Behavior.micro(VectorF.cosineSim(a, b))
     val seedRow = vecs.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
       .localCheckpoint(false) // 1 row; two consumers (output + distances)
@@ -186,9 +179,6 @@ object Cluster {
     }
     out.orderBy("sel_order")
   }
-
-  def kCenterSelect(spark: SparkSession, dir: String): DataFrame =
-    kCenterSelectOf(Tables.embeddings(spark, dir))
 
   /** SemDeDup (Abbas'23): semantic dedup scoped to k-means cells —
     * pairwise cosine runs only WITHIN a cluster, so candidate pairs are
@@ -224,13 +214,10 @@ object Cluster {
       .orderBy("vec_id")
   }
 
-  def semDedup(spark: SparkSession, dir: String): DataFrame =
-    semDedupOf(Tables.embeddings(spark, dir))
-
   /** Embedding outliers vs the OWN-label centroid: members whose
     * cosine-to-centroid falls more than `k` MADs below the label's
     * median — the cheap linear screen for mislabeled or degenerate
-    * vectors ([[graft.operators.Similarity.labelNoise]]'s kNN audit is
+    * vectors ([[graft.operators.Similarity.labelNoiseOf]]'s kNN audit is
     * the thorough-but-quadratic sibling; this one is two bounded
     * aggregates and touches every vector exactly twice).
     *
@@ -265,9 +252,6 @@ object Cluster {
         (col("mad") / 1e6).as("label_mad"))
       .orderBy("vec_id")
   }
-
-  def centroidOutliers(spark: SparkSession, dir: String): DataFrame =
-    centroidOutliersOf(Tables.embeddings(spark, dir))
 
   /** Simplified (centroid-based / "medoid-free") silhouette per
     * cluster over [[kmeansEmbedOf]]'s final assignment — the standard
@@ -314,8 +298,8 @@ object Cluster {
         (lit(1.0) - col("ac")).as("a"), (lit(1.0) - col("bc")).as("b"))
       .select(col("cluster"),
         when(greatest(col("a"), col("b")) === 0.0, lit(0L))
-          .otherwise(floor((col("b") - col("a"))
-            / greatest(col("a"), col("b")) * 1e6 + 0.5).cast("long"))
+          .otherwise(Behavior.micro((col("b") - col("a"))
+            / greatest(col("a"), col("b"))))
           .as("sq"))
     perVec.groupBy("cluster")
       .agg(count(lit(1)).as("n"), sum("sq").as("ssum"), min("sq").as("smin"))
@@ -326,9 +310,6 @@ object Cluster {
         (col("smin").cast("double") / 1e6).as("min_silhouette"))
       .orderBy("cluster")
   }
-
-  def silhouette(spark: SparkSession, dir: String): DataFrame =
-    silhouetteOf(Tables.embeddings(spark, dir))
 
   /** Pairwise centroid-separation matrix over [[kmeansEmbedOf]]'s
     * final centroids: cosine between every unordered centroid pair —
@@ -358,9 +339,6 @@ object Cluster {
         round(VectorF.cosineSim(col("ea"), col("eb")), 6).as("cosine"))
       .orderBy("c_a", "c_b")
   }
-
-  def centroidSeparation(spark: SparkSession, dir: String): DataFrame =
-    centroidSeparationOf(Tables.embeddings(spark, dir))
 
   /** Davies–Bouldin validity per cluster over [[kmeansEmbedOf]]'s
     * final geometry — the scatter-over-separation read that completes
@@ -403,7 +381,7 @@ object Cluster {
       .filter(col("rn") === 1)
     val si = own.groupBy(col("c_id").as("cluster"))
       .agg(count(lit(1)).as("n"),
-        sum(floor((lit(1.0) - col("cs")) * 1e6 + 0.5).cast("long")).as("ssum"))
+        sum(Behavior.micro(lit(1.0) - col("cs"))).as("ssum"))
       .select(col("cluster"), col("n"),
         (col("ssum").cast("double") / 1e6 / col("n").cast("double")).as("s"))
     val pairs = cents.select(col("c_id").as("ci"), col("c_emb").as("ei"))
@@ -428,9 +406,6 @@ object Cluster {
         graft.functions.TextF.round6HalfUp(col("ratio")).as("db_term"))
       .orderBy("cluster")
   }
-
-  def daviesBouldin(spark: SparkSession, dir: String): DataFrame =
-    daviesBouldinOf(Tables.embeddings(spark, dir))
 
   /** Topic labels for the embedding clusters: the top keyness terms of
     * each kmeans cell's documents vs the rest of the corpus — the
@@ -480,9 +455,6 @@ object Cluster {
       .orderBy("cluster", "rank")
   }
 
-  def clusterTopics(spark: SparkSession, dir: String): DataFrame =
-    clusterTopicsOf(Tables.embeddings(spark, dir), Tables.documents(spark, dir))
-
   /** Embedding drift monitor per label: cosine between the label's
     * centroid over the OLD vintage and over the NEW one — the
     * model-ops gate before an embedding refresh ships (a label whose
@@ -526,9 +498,6 @@ object Cluster {
       .orderBy("label")
   }
 
-  def embeddingDrift(spark: SparkSession, dir: String): DataFrame =
-    embeddingDriftOf(Tables.embeddings(spark, dir))
-
   /** Embedding isotropy audit — the "has the space collapsed" gate
     * (Ethayarajh '19; Mu & Viswanath '18's all-but-the-top
     * motivation) run BEFORE any cosine-based operator here is
@@ -561,12 +530,12 @@ object Cluster {
     val scored = vecs.crossJoin(broadcast(mu)) // 1 row by construction
       .select(
         round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"),
-        floor(sqrt(d(sq) / 1e9) * 1e6 + 0.5).cast("long").as("normq"),
+        Behavior.micro(sqrt(d(sq) / 1e9)).as("normq"),
         muSq.as("mu_sq"))
     scored.agg(
         count(lit(1)).as("n"),
         count(col("cs")).as("n_scored"),
-        sum(floor(col("cs") * 1e6 + 0.5).cast("long")).as("csum"),
+        sum(Behavior.micro(col("cs"))).as("csum"),
         min("cs").as("min_cos"),
         sum(when(col("cs") < 0.0, 1L).otherwise(0L)).as("nneg"),
         sum("normq").as("nsum"),
@@ -585,9 +554,6 @@ object Cluster {
             / nullif(d(col("nsum")) / 1e6 / d(col("n")), lit(0.0)))
           .as("anisotropy"))
   }
-
-  def isotropyAudit(spark: SparkSession, dir: String): DataFrame =
-    isotropyAuditOf(Tables.embeddings(spark, dir))
 
   /** Hubness audit over the k-means cells (Radovanović '10): in high
     * dimensions a few points ("hubs") appear in a disproportionate
@@ -653,9 +619,6 @@ object Cluster {
       .orderBy("cluster")
   }
 
-  def hubnessAudit(spark: SparkSession, dir: String): DataFrame =
-    hubnessAuditOf(Tables.embeddings(spark, dir))
-
   /** Mutual-kNN (reciprocity) rate per cell over the SAME edge frame
     * as [[hubnessAuditOf]] — the manifold-health twin: in a clean
     * embedding neighborhoods are symmetric (you are your neighbor's
@@ -683,9 +646,6 @@ object Cluster {
           .as("reciprocity_ppm"))
       .orderBy("cluster")
   }
-
-  def mutualKnnRate(spark: SparkSession, dir: String): DataFrame =
-    mutualKnnRateOf(Tables.embeddings(spark, dir))
 
   /** Clustering stability via the Adjusted Rand Index between two
     * k-means runs seeded on DISJOINT seed sets (vectors 0..k−1 vs
@@ -751,9 +711,6 @@ object Cluster {
           .as("ari"))
   }
 
-  def clusterStabilityAri(spark: SparkSession, dir: String): DataFrame =
-    clusterStabilityAriOf(Tables.embeddings(spark, dir))
-
   /** Label purity + Gini impurity per k-means cell — the SUPERVISED
     * cluster-quality read ([[knnClassifyOf]] scores points, the
     * validity trio scores geometry; this asks whether the cells line
@@ -792,7 +749,4 @@ object Cluster {
           .as("gini_ppm"))
       .orderBy("cluster")
   }
-
-  def clusterPurity(spark: SparkSession, dir: String): DataFrame =
-    clusterPurityOf(Tables.embeddings(spark, dir))
 }

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Connected components over a similarity edge list — the transitive
   * closure a real dedup pipeline runs AFTER pair generation: near-dup
@@ -109,9 +107,6 @@ object Components {
         col("n_members"))
       .orderBy("component")
 
-  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
-    dedupComponentsOf(Tables.documents(spark, dir))
-
   /** The PRODUCTION closure path ([[Dedup.dedupCascadeOf]]'s ordering,
     * surfaced as the per-doc assignment): collapse byte-identical
     * docs first (exact sha256 keep-first), run banded pair-gen +
@@ -145,9 +140,6 @@ object Components {
       .select(col("doc_id"), col("component"))
       .orderBy("doc_id")
   }
-
-  def dedupComponentsCascade(spark: SparkSession, dir: String): DataFrame =
-    dedupComponentsCascadeOf(Tables.documents(spark, dir))
 
   /** Dedup selection-bias audit — does keep-first near-dup dedup
     * systematically change corpus quality? Per source: kept (component
@@ -195,9 +187,6 @@ object Components {
       .orderBy("source")
   }
 
-  def dedupQualityBias(spark: SparkSession, dir: String): DataFrame =
-    dedupQualityBiasOf(Tables.documents(spark, dir))
-
   /** Duplicate-cluster size distribution over [[dedupComponentsOf]]'s
     * closure: how many components exist at each size, and how many
     * documents (and removable duplicates) they carry — the power-law
@@ -219,9 +208,6 @@ object Components {
         (col("size") * col("n_components")).as("n_docs"),
         ((col("size") - 1L) * col("n_components")).as("n_removable"))
       .orderBy("size")
-
-  def componentSizeDist(spark: SparkSession, dir: String): DataFrame =
-    componentSizeDistOf(Tables.documents(spark, dir))
 
   /** Cross-SOURCE duplication share over the near-dup closure — the
     * provenance/licensing read the dedup family's audits don't
@@ -255,7 +241,4 @@ object Components {
                 THEN (n_cross_source * 1000000) div n_dup_components
                 ELSE NULL END""").as("cross_share_ppm"))
   }
-
-  def crossSourceDupShare(spark: SparkSession, dir: String): DataFrame =
-    crossSourceDupShareOf(Tables.documents(spark, dir))
 }

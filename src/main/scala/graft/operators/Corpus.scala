@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
-import graft.sources.Tables
 
 /** Corpus-preparation operators a training-data pipeline runs beyond
   * dedup: PII redaction, benchmark decontamination, vocabulary stats,
@@ -65,9 +64,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    piiRedactOf(Tables.documents(spark, dir))
-
   /** Per-source PII incidence report — the governance DASHBOARD over
     * [[piiRedactOf]]'s per-doc transform: how many documents in each
     * source carry each PII class, and the per-doc hit rates, so a
@@ -110,9 +106,6 @@ object Corpus {
       .orderBy("source")
   }
 
-  def piiBySource(spark: SparkSession, dir: String): DataFrame =
-    piiBySourceOf(Tables.documents(spark, dir))
-
   /** Benchmark decontamination: a corpus document is contaminated if it
     * shares any token `n`-gram with a benchmark document (here: the
     * `benchSource` slice of the corpus stands in for the eval set).
@@ -150,9 +143,6 @@ object Corpus {
         (coalesce(col("shared"), lit(0L)) > 0).as("contaminated"))
       .orderBy("doc_id")
   }
-
-  def decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminateOf(Tables.documents(spark, dir))
 
   /** Duplicated-span ("boilerplate") statistics: an n-gram is
     * boilerplate when it occurs in at least `minDocs` distinct
@@ -199,9 +189,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def boilerplateStats(spark: SparkSession, dir: String): DataFrame =
-    boilerplateStatsOf(Tables.documents(spark, dir))
-
   /** The (doc_id, token, tf) frame both vocabulary consumers build on
     * (map-side combinable). */
   def tokenTfOf(docs: DataFrame): DataFrame =
@@ -223,9 +210,6 @@ object Corpus {
     * (map-side combinable), then token → (df, cf). */
   def vocabDfOf(docs: DataFrame, k: Int = 100): DataFrame =
     vocabFromTf(tokenTfOf(docs), k)
-
-  def vocabDf(spark: SparkSession, dir: String): DataFrame =
-    vocabDfOf(Tables.documents(spark, dir))
 
   /** (doc_id, partitionCol, rn, cnt): documents ranked within each
     * partition by (md5(text), doc_id) — the content-keyed order that
@@ -261,9 +245,6 @@ object Corpus {
       .orderBy("lang", "rn")
   }
 
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSampleOf(Tables.documents(spark, dir))
-
   /** Fixed-size token chunking with overlap — the context-window prep
     * step before tokenized training shards are written. Chunks of
     * `window` tokens start every `stride` tokens (stride < window ⇒
@@ -295,9 +276,6 @@ object Corpus {
         md5(concat_ws(" ", col("chunk"))).as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
   }
-
-  def chunkDocs(spark: SparkSession, dir: String): DataFrame =
-    chunkDocsOf(Tables.documents(spark, dir))
 
   /** Content-defined chunking (CDC) report — the storage-dedup
     * chunking ([[chunkDocsOf]] cuts at fixed offsets, so one inserted
@@ -362,9 +340,6 @@ object Corpus {
       .orderBy("source")
   }
 
-  def cdcChunks(spark: SparkSession, dir: String): DataFrame =
-    cdcChunksOf(Tables.documents(spark, dir))
-
   /** Greedy sequence packing (concat-and-split): documents are laid
     * end-to-end in (source, doc_id) order and cut into fixed
     * `budget`-token training sequences; each doc reports the sequence
@@ -385,9 +360,6 @@ object Corpus {
         expr(s"start_off % $budget").as("seq_offset"))
       .orderBy("source", "doc_id")
   }
-
-  def packGreedy(spark: SparkSession, dir: String): DataFrame =
-    packGreedyOf(Tables.documents(spark, dir))
 
   /** Deterministic train/val/test split (~90/5/5) keyed on
     * md5(doc_id:text): content+identity addressed, so re-runs, engine
@@ -422,9 +394,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def kfoldAssign(spark: SparkSession, dir: String): DataFrame =
-    kfoldAssignOf(Tables.documents(spark, dir))
-
   /** Fold-balance audit over [[kfoldAssignOf]]'s assignment — the
     * check a CV harness runs before trusting fold variance (a fold
     * starved of one language reads as model noise): per language,
@@ -455,9 +424,6 @@ object Corpus {
       .orderBy("lang")
   }
 
-  def kfoldBalance(spark: SparkSession, dir: String): DataFrame =
-    kfoldBalanceOf(Tables.documents(spark, dir))
-
   /** Inverse-frequency class weights (the sklearn "balanced" formula
     * with additive smoothing): w_c = N / (K · (n_c + α)) — what a
     * trainer multiplies into the loss so rare languages are not
@@ -477,12 +443,6 @@ object Corpus {
             * (col("n_docs") + lit(alpha)).cast("double"))).as("weight"))
       .orderBy("lang")
   }
-
-  def classWeights(spark: SparkSession, dir: String): DataFrame =
-    classWeightsOf(Tables.documents(spark, dir))
-
-  def trainSplit(spark: SparkSession, dir: String): DataFrame =
-    trainSplitOf(Tables.documents(spark, dir))
 
   /** Weighted corpus mixing: per-source keep fractions (curated
     * sources oversampled relative to bulk crawl — the data-mixture
@@ -505,10 +465,6 @@ object Corpus {
       .orderBy("source", "rn")
   }
 
-  def mixSources(spark: SparkSession, dir: String): DataFrame =
-    mixSourcesOf(Tables.documents(spark, dir),
-      Map("src0" -> 1.0, "src1" -> 0.6), defaultFrac = 0.2)
-
   /** Temperature-balanced mixture design (α = 0.5): sampling weights
     * w_i ∝ √n_i, the standard up-weighting of small sources relative
     * to proportional sampling (multilingual/multi-source pretraining
@@ -523,7 +479,7 @@ object Corpus {
     */
   def sourceTemperatureOf(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
-      .withColumn("qw", floor(sqrt(col("n_docs")) * 1e6 + 0.5).cast("long"))
+      .withColumn("qw", Behavior.micro(sqrt(col("n_docs"))))
     val totals = counts.agg(sum("n_docs").as("total_docs"),
       sum("qw").as("qwsum"))
     counts.crossJoin(totals)
@@ -534,9 +490,6 @@ object Corpus {
           col("qwsum").cast("double")).cast("long").as("target_docs"))
       .orderBy("source")
   }
-
-  def sourceTemperature(spark: SparkSession, dir: String): DataFrame =
-    sourceTemperatureOf(Tables.documents(spark, dir))
 
   /** Duplicated-span REMOVAL (the transform [[boilerplateStatsOf]] only
     * reports): every token position covered by an n-gram that occurs in
@@ -613,9 +566,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def spanDedup(spark: SparkSession, dir: String): DataFrame =
-    spanDedupOf(Tables.documents(spark, dir))
-
   /** Deterministic weighted sampling without replacement (A-Res family,
     * Efraimidis-Spirakis): a document with integer weight w draws w
     * pseudo-uniforms md5(doc_id:i) and keeps the MAX as its sort key —
@@ -645,9 +595,6 @@ object Corpus {
       .limit(k)
   }
 
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    weightedSampleOf(Tables.documents(spark, dir))
-
   /** Group-aware train/val split: the bucket hash is keyed on the
     * GROUP (source), not the document, so every document of a source
     * lands in the same split — the leakage guarantee
@@ -666,9 +613,6 @@ object Corpus {
           .otherwise("test").as("split"))
       .orderBy("doc_id")
   }
-
-  def groupedSplit(spark: SparkSession, dir: String): DataFrame =
-    groupedSplitOf(Tables.documents(spark, dir))
 
   /** Length-bucketed batch assignment — the inference-serving twin of
     * [[packGreedyOf]]: docs of similar token length batch together so
@@ -701,9 +645,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def lengthBatching(spark: SparkSession, dir: String): DataFrame =
-    lengthBatchingOf(Tables.documents(spark, dir))
-
   /** Shared-prefix groups — the KV-cache reuse analysis an inference
     * fleet runs over its corpus: documents whose first `prefixLen`
     * tokens are identical can share one prefix cache entry, saving
@@ -730,9 +671,6 @@ object Corpus {
         ((col("n_docs") - 1) * prefixLen).as("tokens_saved"))
       .orderBy("prefix_key")
   }
-
-  def prefixCacheGroups(spark: SparkSession, dir: String): DataFrame =
-    prefixCacheGroupsOf(Tables.documents(spark, dir))
 
   /** Mixture plan: given a total token `budget`, the per-language
     * sampling fraction that yields a UNIFORM language mix — the
@@ -764,9 +702,6 @@ object Corpus {
           .as("sample_frac"))
       .orderBy("lang")
   }
-
-  def mixturePlan(spark: SparkSession, dir: String): DataFrame =
-    mixturePlanOf(Tables.documents(spark, dir))
 
   /** Water-filling token-budget allocation across sources — the
     * mixture upgrade of [[mixturePlanOf]]: instead of REPORTING the
@@ -813,9 +748,6 @@ object Corpus {
       .orderBy("source")
   }
 
-  def waterfillBudget(spark: SparkSession, dir: String): DataFrame =
-    waterfillBudgetOf(Tables.documents(spark, dir))
-
   /** Token-count histogram on power-of-two buckets (bucket =
     * ⌊log₂ n⌋ + 1 via the BINARY-STRING LENGTH — no libm log): the
     * length-distribution view that sizes [[lengthBatchingOf]]'s
@@ -839,9 +771,6 @@ object Corpus {
         col("max_tokens"))
       .orderBy("bucket")
   }
-
-  def tokenLenHistogram(spark: SparkSession, dir: String): DataFrame =
-    tokenLenHistogramOf(Tables.documents(spark, dir))
 
   /** Padding-waste audit per length bucket — the cost
     * [[lengthBatchingOf]] exists to avoid, MEASURED (the number that
@@ -883,9 +812,6 @@ object Corpus {
     perBucket.unionByName(global).orderBy("bucket")
   }
 
-  def paddingWaste(spark: SparkSession, dir: String): DataFrame =
-    paddingWasteOf(Tables.documents(spark, dir))
-
   /** DSIR-style importance weights for data selection (Xie et al.
     * '23): score every raw document by how target-domain-like its
     * hashed-unigram profile is, so a selection pass can sample raw
@@ -926,9 +852,10 @@ object Corpus {
       sum(when(isT, 1L).otherwise(0L)).as("t_tot"), count(lit(1)).as("r_tot"))
     val ratios = counts.crossJoin(broadcast(totals))
       .select(col("b"),
-        floor((col("ct") + 1L).cast("double") / (col("t_tot") + buckets).cast("double")
-          / ((col("cr") + 1L).cast("double") / (col("r_tot") + buckets).cast("double"))
-          * 1e6 + 0.5).cast("long").as("r6"))
+        Behavior.micro(
+          (col("ct") + 1L).cast("double") / (col("t_tot") + buckets).cast("double")
+            / ((col("cr") + 1L).cast("double") / (col("r_tot") + buckets).cast("double")))
+          .as("r6"))
     toks.join(broadcast(ratios), Seq("b"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum("r6").as("sr"))
@@ -937,10 +864,6 @@ object Corpus {
           / col("n_tokens").cast("double") / 1e6).as("weight"))
       .orderBy("doc_id")
   }
-
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirWeightsOf(Tables.documents(spark, dir),
-      Seq("src0", "src1", "src2", "src3"))
 
   /** Curriculum ordering for training (clean-first scheduling): docs
     * rank by quality DESC — the [[graft.functions.TextF.qualityScore]]
@@ -981,9 +904,6 @@ object Corpus {
         expr(s"rank div $batchSize").as("batch_id"))
       .orderBy("rank")
   }
-
-  def curriculumOrder(spark: SparkSession, dir: String): DataFrame =
-    curriculumOrderOf(Tables.documents(spark, dir))
 
   /** Sentence-level duplication rate per source — the C4-style
     * boilerplate read at SENTENCE granularity ([[boilerplateStatsOf]]
@@ -1067,9 +987,6 @@ object Corpus {
           .as("dup_ppm"))
       .orderBy("source")
   }
-
-  def sentenceDedup(spark: SparkSession, dir: String): DataFrame =
-    sentenceDedupOf(Tables.documents(spark, dir))
 
   /** Pairwise 8-gram overlap matrix between sources — the provenance
     * read that names WHO shares content with WHOM
@@ -1167,9 +1084,6 @@ object Corpus {
       .orderBy("source_a", "source_b")
   }
 
-  def sourceOverlapMatrix(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapMatrixOf(Tables.documents(spark, dir))
-
   /** Train/val/test split leakage audit — the MEASUREMENT of what
     * [[trainSplitOf]]'s doc-keyed hash deliberately permits and
     * [[groupedSplitOf]]'s group key prevents: near-duplicate pairs
@@ -1212,9 +1126,6 @@ object Corpus {
         (col("split_a") =!= col("split_b")).as("cross_split"))
       .orderBy("split_a", "split_b")
   }
-
-  def splitLeakage(spark: SparkSession, dir: String): DataFrame =
-    splitLeakageOf(Tables.documents(spark, dir))
 
   /** Deterministic per-epoch shuffle order for multi-epoch training
     * (the data-ordering contract a trainer needs WITHOUT a stateful
@@ -1263,7 +1174,4 @@ object Corpus {
           .as("mean_disp_ppm"))
       .orderBy("epoch_a", "epoch_b")
   }
-
-  def epochShuffleAudit(spark: SparkSession, dir: String): DataFrame =
-    epochShuffleAuditOf(Tables.documents(spark, dir))
 }

@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
-import graft.sources.Tables
 
 /** Corpus-statistics operators a training-data pipeline runs when
   * weighing and filtering documents: TF-IDF term salience, Gopher-style
@@ -56,9 +55,6 @@ object CorpusStats {
       .orderBy("doc_id", "rank")
   }
 
-  def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopTermsOf(Tables.documents(spark, dir))
-
   /** Gopher-style repetition gate: distinct-token ratio and the
     * fraction of all bigrams taken by the single most frequent bigram.
     * Boilerplate and looped generations score low on the first and
@@ -100,9 +96,6 @@ object CorpusStats {
           col("top_bigram_frac") <= maxTopBigramFrac)
       .orderBy("doc_id")
   }
-
-  def repetitionStats(spark: SparkSession, dir: String): DataFrame =
-    repetitionStatsOf(Tables.documents(spark, dir))
 
   /** Bigram collocation mining by lift: lift(w1,w2) =
     * P(w1 w2) / (P(w1)·P(w2)) over corpus token/bigram totals — the
@@ -156,9 +149,6 @@ object CorpusStats {
       .limit(k)
   }
 
-  def collocations(spark: SparkSession, dir: String): DataFrame =
-    collocationsOf(Tables.documents(spark, dir))
-
   /** Per-language quality gate: keep documents at or above their
     * language's p75 quality score. Exact `percentile` (matches DuckDB
     * `quantile_cont` bit-for-bit after rounding — established by the
@@ -181,9 +171,6 @@ object CorpusStats {
       .select("doc_id", "lang", "quality", "lang_p75")
       .orderBy("doc_id")
   }
-
-  def langQualityGate(spark: SparkSession, dir: String): DataFrame =
-    langQualityGateOf(Tables.documents(spark, dir))
 
   /** Corpus-LM fluency score (the ratio-form analog of a CCNet/KenLM
     * perplexity filter): train a character-trigram unigram model on
@@ -233,9 +220,6 @@ object CorpusStats {
       .orderBy("doc_id")
   }
 
-  def lmQuality(spark: SparkSession, dir: String): DataFrame =
-    lmQualityOf(Tables.documents(spark, dir))
-
   /** Per-document out-of-vocabulary rate against the corpus's own
     * top-k vocabulary (the tokenizer-coverage check run before
     * committing to a vocab size): fraction of token OCCURRENCES not
@@ -263,9 +247,6 @@ object CorpusStats {
           .as("oov_rate"))
       .orderBy("doc_id")
   }
-
-  def oovRate(spark: SparkSession, dir: String): DataFrame =
-    oovRateOf(Tables.documents(spark, dir))
 
   /** The Gopher rule measurements over `col("text")`, shared between
     * [[gopherRulesOf]] (per-doc report) and [[corpusCardOf]] (rollup):
@@ -327,9 +308,6 @@ object CorpusStats {
       .orderBy("doc_id")
   }
 
-  def gopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRulesOf(Tables.documents(spark, dir))
-
   /** Inverted-index construction (the retrieval-side build over a
     * training corpus): per term, document frequency, collection
     * frequency, and the top-`k` postings by term frequency
@@ -360,9 +338,6 @@ object CorpusStats {
       .select("token", "df", "cf", "doc_id", "tf", "rank")
       .orderBy("token", "rank")
   }
-
-  def invertedIndex(spark: SparkSession, dir: String): DataFrame =
-    invertedIndexOf(Tables.documents(spark, dir))
 
   /** BM25 retrieval scoring for a fixed query, odds-form: the term
     * weight keeps Robertson–Spärck Jones' pre-log odds
@@ -404,16 +379,13 @@ object CorpusStats {
     tf.join(lens, "doc_id")
       .crossJoin(broadcast(totals)) // 1 row by construction
       .select(col("doc_id"), col("token"),
-        floor(w * 1e6 + 0.5).cast("long").as("qw"))
+        Behavior.micro(w).as("qw"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"),
         TextF.round4HalfUp(sum("qw").cast("double") / 1e6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
-
-  def bm25Search(spark: SparkSession, dir: String): DataFrame =
-    bm25SearchOf(Tables.documents(spark, dir), Seq("spark", "merge", "window"))
 
   /** Pseudo-relevance-feedback retrieval (Rocchio '71 via the modern
     * RM/PRF recipe): run [[bm25SearchOf]], treat its top-`fDocs`
@@ -464,7 +436,7 @@ object CorpusStats {
           (col("df").cast("double") + 0.5))
       tf.join(lens, "doc_id")
         .crossJoin(broadcast(totals)) // 1 row by construction
-        .select(col("doc_id"), floor(w * 1e6 + 0.5).cast("long").as("qw"))
+        .select(col("doc_id"), Behavior.micro(w).as("qw"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms"),
           TextF.round4HalfUp(sum("qw").cast("double") / 1e6).as("score"))
@@ -498,9 +470,6 @@ object CorpusStats {
     }
     bm25Pass(_.join(broadcast(allTerms), Seq("token"), "left_semi"), k)
   }
-
-  def prfSearch(spark: SparkSession, dir: String): DataFrame =
-    prfSearchOf(Tables.documents(spark, dir))
 
   /** Dataset card per (lang, source) — the one-table summary a corpus
     * release ships: document count, whitespace and BPE-ish token
@@ -538,9 +507,6 @@ object CorpusStats {
       .orderBy("lang", "source")
   }
 
-  def corpusCard(spark: SparkSession, dir: String): DataFrame =
-    corpusCardOf(Tables.documents(spark, dir))
-
   /** Exact ROC AUC of the quality score as a classifier of `lang ==
     * posLang`, per source — "does the quality heuristic separate the
     * target language?" is the calibration question asked before gating
@@ -576,9 +542,6 @@ object CorpusStats {
           * 1e6 + 0.5) / 1e6).as("auc"))
       .orderBy("source")
   }
-
-  def aucQuality(spark: SparkSession, dir: String): DataFrame =
-    aucQualityOf(Tables.documents(spark, dir))
 
   /** Average precision (PR-AUC) of the quality score as a lang
     * classifier, per source — [[aucQualityOf]]'s sibling on the
@@ -626,9 +589,6 @@ object CorpusStats {
           / lit(1e3) + lit(0.5)) / lit(1e6)).as("pr_auc"))
       .orderBy("source")
   }
-
-  def prAuc(spark: SparkSession, dir: String): DataFrame =
-    prAucOf(Tables.documents(spark, dir))
 
   /** Leave-one-source-out corpus ablation — the governance read
     * behind every mixture decision (rows 90/159/173 decide HOW MUCH
@@ -683,9 +643,6 @@ object CorpusStats {
           s" CAST(0 AS $dec)) AS BIGINT)").as("en_share_loo_ppm"))
       .orderBy("source")
   }
-
-  def sourceAblation(spark: SparkSession, dir: String): DataFrame =
-    sourceAblationOf(Tables.documents(spark, dir))
 
   /** CCNet head/middle/tail partitioning (Wenzek '19 §4.3 — the step
     * between row 106's fluency score and a training mix: per
@@ -743,9 +700,6 @@ object CorpusStats {
           + lit(0.5)) / lit(1e4)).as("mean_score"))
       .orderBy("lang", "bucket")
   }
-
-  def ccnetBuckets(spark: SparkSession, dir: String): DataFrame =
-    ccnetBucketsOf(Tables.documents(spark, dir))
 
   /** Pairwise source DISTRIBUTION distance — total variation over the
     * coarsened word partition (top-K corpus words + OTHER): row 154
@@ -810,9 +764,6 @@ object CorpusStats {
       .orderBy("source_a", "source_b")
   }
 
-  def sourceWordTvd(spark: SparkSession, dir: String): DataFrame =
-    sourceWordTvdOf(Tables.documents(spark, dir))
-
   /** Calibration (reliability) curve for the quality score against
     * `lang == posLang`: equal-width score bins over [0, 1], each
     * reporting its doc count, mean score, and observed positive rate —
@@ -841,9 +792,6 @@ object CorpusStats {
           / col("n_docs").cast("double")).as("pos_rate"))
       .orderBy("bin")
   }
-
-  def calibrationCurve(spark: SparkSession, dir: String): DataFrame =
-    calibrationCurveOf(Tables.documents(spark, dir))
 
   /** Murphy decomposition of the Brier score over
     * [[calibrationCurveOf]]'s binned frame — the curve shows WHERE
@@ -887,9 +835,8 @@ object CorpusStats {
     // Each quantized to micros through one fixed-order double chain.
     val a = d(col("qsum")) - d(col("npos")) * 1e4
     val b = d(col("npos")) * d(col("nn")) - d(col("tpos")) * d(col("n"))
-    val relT = floor(a * a / d(col("n")) / 1e8 * 1e6 + lit(0.5)).cast("long")
-    val resT = floor(b * b / d(col("n")) / d(col("nn")) / d(col("nn"))
-      * 1e6 + lit(0.5)).cast("long")
+    val relT = Behavior.micro(a * a / d(col("n")) / 1e8)
+    val resT = Behavior.micro(b * b / d(col("n")) / d(col("nn")) / d(col("nn")))
     val agg = cells.crossJoin(broadcast(totals))
       .select(col("n"), col("nn"), col("tpos"), col("tsqerr"),
         relT.as("rel_t"), resT.as("res_t"))
@@ -906,9 +853,6 @@ object CorpusStats {
       r6(res).as("resolution"), r6(unc).as("uncertainty"),
       r6(brier - (rel - res + unc)).as("within_bin"))
   }
-
-  def brierDecomposition(spark: SparkSession, dir: String): DataFrame =
-    brierDecompositionOf(Tables.documents(spark, dir))
 
   /** Isotonic (PAVA) calibration of the quality score against
     * `lang == posLang` — the FIT the calibration family still lacked:
@@ -978,9 +922,6 @@ object CorpusStats {
       .orderBy("bin")
   }
 
-  def isotonicCalibration(spark: SparkSession, dir: String): DataFrame =
-    isotonicCalibrationOf(Tables.documents(spark, dir))
-
   /** McNemar's paired test between the two quality gates the corpus
     * family already ships — [[gopherRulesOf]]'s rule conjunction vs
     * the quality-score threshold ([[graft.operators.TextAnalysis]]'s
@@ -1029,9 +970,6 @@ object CorpusStats {
           .otherwise(col("chi2_mcnemar") > 3.841459))
   }
 
-  def mcnemarGates(spark: SparkSession, dir: String): DataFrame =
-    mcnemarGatesOf(Tables.documents(spark, dir))
-
   /** Term keyness: which words characterize the `focus` source against
     * the rest of the corpus (the corpus-linguistics comparison behind
     * "what is this source actually about"). Statistic is the add-one
@@ -1070,9 +1008,6 @@ object CorpusStats {
       .limit(k)
   }
 
-  def termKeyness(spark: SparkSession, dir: String): DataFrame =
-    termKeynessOf(Tables.documents(spark, dir))
-
   /** Vocabulary-overlap matrix: Jaccard similarity of the DISTINCT
     * token vocabularies of every source pair — the cheap corpus-level
     * "are these two sources the same kind of text" signal that guides
@@ -1109,9 +1044,6 @@ object CorpusStats {
           .as("jaccard"))
       .orderBy("source_a", "source_b")
   }
-
-  def vocabOverlap(spark: SparkSession, dir: String): DataFrame =
-    vocabOverlapOf(Tables.documents(spark, dir))
 
   /** Quality-threshold retention curve: for each cutoff t ∈ {0.0,
     * 0.1, …, 0.9}, how many documents and tokens survive `quality ≥
@@ -1153,9 +1085,6 @@ object CorpusStats {
           / col("total_tokens").cast("double")).as("token_frac"))
       .orderBy("threshold")
   }
-
-  def qualityRetention(spark: SparkSession, dir: String): DataFrame =
-    qualityRetentionOf(Tables.documents(spark, dir))
 
   /** Cross-source quantile normalization of the quality score — the
     * fix for "source A's quality model runs hot": each document's
@@ -1211,9 +1140,6 @@ object CorpusStats {
           .as("q_norm"))
       .orderBy("doc_id")
   }
-
-  def quantileNormalize(spark: SparkSession, dir: String): DataFrame =
-    quantileNormalizeOf(Tables.documents(spark, dir))
 
   /** Distinct-n diversity per source — the type/token ratio
     * generalized to n-grams (n = 1, 2, 3): ‖distinct n-grams‖ /
@@ -1292,15 +1218,12 @@ object CorpusStats {
       .orderBy("source", "n")
   }
 
-  def distinctNgramDiversity(spark: SparkSession, dir: String): DataFrame =
-    distinctNgramDiversityOf(Tables.documents(spark, dir))
-
   /** Language-concentration (Herfindahl) profile per source: HHI =
     * Σ(n_lang/n)² over the source's document language shares — 1.0 =
     * monolingual, 1/|langs| = uniform mix — plus the dominant
     * language (argmax docs, ties to lexicographically-smallest lang)
     * and its share. The one-number mixture diagnostic behind
-    * [[mixturePlan]]-style per-language balancing: a "web" source at
+    * [[Corpus.mixturePlanOf]]-style per-language balancing: a "web" source at
     * HHI 0.95 is an English crawl wearing a multilingual label, and
     * its per-language quality gates (row 58) are fitting noise for
     * the tail languages. Exact integers until two final divisions
@@ -1328,9 +1251,6 @@ object CorpusStats {
         TextF.round4HalfUp((-col("m.nc")).cast("double")
           / col("n_docs").cast("double")).as("top_share"))
       .orderBy("source")
-
-  def langHhi(spark: SparkSession, dir: String): DataFrame =
-    langHhiOf(Tables.documents(spark, dir))
 
   /** Simpson token-repeat index per source — the EXACT-pair
     * diversity scalar beside [[langHhiOf]] (HHI squares SHARES of
@@ -1373,9 +1293,6 @@ object CorpusStats {
              |  CAST(rep2 AS DOUBLE))""".stripMargin)).as("effective_types"))
       .orderBy("source")
   }
-
-  def simpsonDiversity(spark: SparkSession, dir: String): DataFrame =
-    simpsonDiversityOf(Tables.documents(spark, dir))
 
   /** RAKE keyword extraction (Rose '10 — Rapid Automatic Keyword
     * Extraction): candidate PHRASES are the maximal stopword-free
@@ -1442,9 +1359,6 @@ object CorpusStats {
       .limit(k)
   }
 
-  def rakeKeywords(spark: SparkSession, dir: String): DataFrame =
-    rakeKeywordsOf(Tables.documents(spark, dir))
-
   /** Term burstiness (Church-Gale '95): per-term dispersion of the
     * per-DOCUMENT count — D = var/mean over all N docs with absent
     * docs as real zeros. A Poisson-scattered term reads D ≈ 1
@@ -1485,9 +1399,6 @@ object CorpusStats {
       .orderBy(col("cf").desc, col("token"))
       .limit(k)
   }
-
-  def termBurstiness(spark: SparkSession, dir: String): DataFrame =
-    termBurstinessOf(Tables.documents(spark, dir))
 
   /** Burrows' Delta stylometric distance between sources (Burrows
     * '02 — the authorship-attribution standard): z-normalize each
@@ -1555,9 +1466,6 @@ object CorpusStats {
       .orderBy("source_a", "source_b")
   }
 
-  def burrowsDelta(spark: SparkSession, dir: String): DataFrame =
-    burrowsDeltaOf(Tables.documents(spark, dir))
-
   /** Vocabulary coverage curve: what fraction of all corpus token
     * OCCURRENCES the top-k vocabulary types cover, at k ∈ `ks` — the
     * tokenizer/vocab-sizing read ([[oovRateOf]] fixes ONE k and scores
@@ -1599,9 +1507,6 @@ object CorpusStats {
           / lit(totalTokens.toDouble)).as("coverage"))
       .orderBy("k")
   }
-
-  def coverageCurve(spark: SparkSession, dir: String): DataFrame =
-    coverageCurveOf(Tables.documents(spark, dir))
 
   /** Histogram-based decision-stump split finder — the inner loop of
     * every distributed GBDT/random-forest trainer (XGBoost/LightGBM
@@ -1678,9 +1583,6 @@ object CorpusStats {
           .as("target_rate_right"))
   }
 
-  def bestSplit(spark: SparkSession, dir: String): DataFrame =
-    bestSplitOf(Tables.documents(spark, dir))
-
   /** Pareto frontier (skyline) over (quality, length) — the classic
     * multi-objective dominance operator (Börzsönyi'01): the documents
     * no other document beats on BOTH quality and size, i.e. the
@@ -1696,7 +1598,7 @@ object CorpusStats {
     *
     * Shape: one pruned scan → map-side quality quantization → ONE
     * global sort exchange shared by both windows (same ordering key).
-    * The global window is the honest cost ([[Corpus.curriculumOrder]]'s
+    * The global window is the honest cost ([[Corpus.curriculumOrderOf]]'s
     * note): at 100 TB this becomes range-partition by quality + one
     * boundary-max broadcast pass — the two-phase decomposition
     * documented there; the declarative form is identical per range. */
@@ -1740,9 +1642,6 @@ object CorpusStats {
       .orderBy(col("quality").desc, col("doc_id"))
   }
 
-  def paretoFrontier(spark: SparkSession, dir: String): DataFrame =
-    paretoFrontierOf(Tables.documents(spark, dir))
-
   /** Empirical Heaps-law curve: distinct vocabulary after the first
     * 10%, 20%, … 100% of documents (doc_id order — the corpus's
     * arrival order stand-in) — [[coverageCurveOf]] asks how much a
@@ -1779,9 +1678,6 @@ object CorpusStats {
         col("vocab_size"))
       .orderBy("pct_docs")
   }
-
-  def heapsCurve(spark: SparkSession, dir: String): DataFrame =
-    heapsCurveOf(Tables.documents(spark, dir))
 
   /** Pairwise Hellinger distance between source unigram
     * distributions — the DISTRIBUTIONAL twin of `vocab_overlap`
@@ -1844,9 +1740,6 @@ object CorpusStats {
       .orderBy("source_a", "source_b")
   }
 
-  def hellingerMatrix(spark: SparkSession, dir: String): DataFrame =
-    hellingerMatrixOf(Tables.documents(spark, dir))
-
   /** Zipf rank-frequency slope per source on the DOUBLING grid — the
     * one-number "is this source natural language" read behind
     * `coverage_curve` (a Zipfian corpus reads slope ≈ −1 in log-log;
@@ -1896,9 +1789,6 @@ object CorpusStats {
           .as("intercept"))
       .orderBy("source")
   }
-
-  def zipfSlope(spark: SparkSession, dir: String): DataFrame =
-    zipfSlopeOf(Tables.documents(spark, dir))
 
   /** Skip-gram collocations: unordered token pairs co-occurring
     * within a ±`window` token window, ranked by log-free lift — the
@@ -1954,9 +1844,6 @@ object CorpusStats {
       .orderBy(col("lift").desc, col("cp").desc, col("w1"), col("w2"))
       .limit(k)
   }
-
-  def skipgramPairs(spark: SparkSession, dir: String): DataFrame =
-    skipgramPairsOf(Tables.documents(spark, dir))
 
   /** TextRank keyword extraction (Mihalcea-Tarau '04): PageRank over
     * the word co-occurrence graph — [[skipgramPairsOf]] builds the
@@ -2017,9 +1904,6 @@ object CorpusStats {
       .select(col("token"), col("rq"), Graph.massShare(col("rq")).as("score"))
   }
 
-  def textrankKeywords(spark: SparkSession, dir: String): DataFrame =
-    textrankKeywordsOf(Tables.documents(spark, dir))
-
   /** Tokenizer efficiency per language — the budgeting table behind
     * every multilingual-mix decision ([[corpusCardOf]] counts tokens;
     * this prices them): characters per BPE token (how much TEXT a
@@ -2052,9 +1936,6 @@ object CorpusStats {
           .as("bpe_per_word"))
       .orderBy("lang")
   }
-
-  def tokenizerEfficiency(spark: SparkSession, dir: String): DataFrame =
-    tokenizerEfficiencyOf(Tables.documents(spark, dir))
 
   /** DeLong standard error for [[aucQualityOf]]'s per-source AUC —
     * the error bar the eval family's point estimates were missing
@@ -2124,9 +2005,6 @@ object CorpusStats {
       .orderBy("source")
   }
 
-  def aucDelongSe(spark: SparkSession, dir: String): DataFrame =
-    aucDelongSeOf(Tables.documents(spark, dir))
-
   /** Decile lift table for the quality score as a `posLang` detector —
     * THE practitioner table behind every targeting decision (AUC/PR/
     * Brier say the score works; this says "mail the top 2 deciles,
@@ -2170,9 +2048,6 @@ object CorpusStats {
           .as("capture_ppm"))
       .orderBy("decile")
   }
-
-  def liftTable(spark: SparkSession, dir: String): DataFrame =
-    liftTableOf(Tables.documents(spark, dir))
 
   /** The three corpus gates evaluated in ONE projection — the shared
     * frame [[cochranQGatesOf]] and [[fleissKappaGatesOf]] fold:
@@ -2231,9 +2106,6 @@ object CorpusStats {
           .otherwise(col("q_cochran") > 5.991465))
   }
 
-  def cochranQGates(spark: SparkSession, dir: String): DataFrame =
-    cochranQGatesOf(Tables.documents(spark, dir))
-
   /** Fleiss' kappa across the three corpus gates (Fleiss '71 — the
     * AGREEMENT companion to [[cochranQGatesOf]]'s difference test:
     * Q says whether pass rates differ, κ says how much the gates
@@ -2280,9 +2152,6 @@ object CorpusStats {
           .otherwise(lit("poor")))
   }
 
-  def fleissKappaGates(spark: SparkSession, dir: String): DataFrame =
-    fleissKappaGatesOf(Tables.documents(spark, dir))
-
   /** Arrival-decile quality & source-mix drift (the crawl-health
     * dashboard beside row 462's novelty curve: novelty says whether
     * new data ADDS information, this says whether it's GETTING WORSE
@@ -2320,7 +2189,4 @@ object CorpusStats {
         col("ws_tokens"), col("bpe_tokens"))
       .orderBy("decile", "source")
   }
-
-  def arrivalQualityMix(spark: SparkSession, dir: String): DataFrame =
-    arrivalQualityMixOf(Tables.documents(spark, dir))
 }

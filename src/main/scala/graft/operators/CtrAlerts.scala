@@ -26,10 +26,6 @@ object CtrAlerts {
       when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
       when(col("event_type") === "view", 1L).otherwise(0L).as("is_view"))
 
-  /** Max event day as a 1-row broadcastable frame (no driver collect). */
-  private def reportDate(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).agg(max(to_date(col("ts"))).as("report_date"))
-
   /** Grouped CTR with SAFE_DIVIDE semantics
     * (native_CTR_alerts.py:228-241): clicks/impressions per group. */
   def ctrByGroup(spark: SparkSession, dir: String): DataFrame =
@@ -50,13 +46,9 @@ object CtrAlerts {
     *
     * Shape: one conditional fact aggregate on the bounded item key;
     * the global totals ride a 1-row broadcast crossJoin
-    * ([[reportDate]]'s pattern) — not a second fact scan. Items with
-    * zero impressions still report: the prior's α pseudo-impressions
-    * keep the ratio defined. */
-  def ctrShrunk(spark: SparkSession, dir: String): DataFrame =
-    ctrShrunkOf(Tables.events(spark, dir))
-
-  /** See [[ctrShrunk]]; operates on any events frame. */
+    * ([[Behavior.reportDate]]'s pattern) — not a second fact scan.
+    * Items with zero impressions still report: the prior's α
+    * pseudo-impressions keep the ratio defined. */
   def ctrShrunkOf(events: DataFrame, alpha: Int = 100): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
     val ev = events
@@ -138,9 +130,6 @@ object CtrAlerts {
       .orderBy("item")
   }
 
-  def ctrWilson(spark: SparkSession, dir: String): DataFrame =
-    ctrWilsonOf(Tables.events(spark, dir))
-
   /** The spike detector (native_CTR_alerts.py:226-268): trailing-7-day
     * avg CTR vs report-day CTR per group, |pct_change| > 25, ordered by
     * pct_change DESC. */
@@ -173,7 +162,7 @@ object CtrAlerts {
                            units: Option[Seq[Long]]): DataFrame = {
     val all = dailyCtr(spark, dir)
     val daily = units.fold(all)(u => all.filter(col("user_id").isin(u: _*)))
-    val rd = reportDate(spark, dir)
+    val rd = Behavior.reportDate(Tables.events(spark, dir))
 
     val withRd = daily.crossJoin(broadcast(rd))
 
@@ -219,7 +208,7 @@ object CtrAlerts {
     * (native_CTR_alerts.py:287-294). */
   def distinctUnits(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
-      .crossJoin(broadcast(reportDate(spark, dir)))
+      .crossJoin(broadcast(Behavior.reportDate(Tables.events(spark, dir))))
       .filter(to_date(col("ts")) === col("report_date"))
       .select(col("event_type")).distinct()
       .orderBy("event_type")
@@ -247,10 +236,6 @@ object CtrAlerts {
     * engine-specific sketch internals → rows-only gate + the
     * AlertsSpec ±5%-of-exact bands at every level.
     */
-  def hllRollup(spark: SparkSession, dir: String): DataFrame =
-    hllRollupOf(Tables.events(spark, dir))
-
-  /** See [[hllRollup]]; operates on any events frame. */
   def hllRollupOf(events: DataFrame): DataFrame = {
     val daily = events
       .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
@@ -295,9 +280,6 @@ object CtrAlerts {
         expr("((approx_users - exact_users) * 10000) div exact_users")
           .as("error_bp"))
       .orderBy("event_type")
-
-  def hllErrorAudit(spark: SparkSession, dir: String): DataFrame =
-    hllErrorAuditOf(Tables.events(spark, dir))
 
   /** Per-app alert report formatting (native_CTR_alerts.py:273-322):
     * group alert lines by app into one text blob. Numeric values are

@@ -61,9 +61,6 @@ object Dedup {
         countDistinct(col("raw_hash")).as("n_variants"))
       .orderBy("norm_hash")
 
-  def dedupNormalized(spark: SparkSession, dir: String): DataFrame =
-    dedupNormalizedOf(Tables.documents(spark, dir))
-
   // ---- MinHash + LSH ----------------------------------------------------
   // k hash functions as affine permutations (a*h+b mod p) of one base
   // xxhash64, reduced to 31 bits first so the products stay inside
@@ -140,9 +137,6 @@ object Dedup {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       .orderBy("doc_id")
   }
-
-  def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    dedupMinhashOf(Tables.documents(spark, dir))
 
   /** Candidate pairs from LSH buckets verified with exact token-3-gram
     * Jaccard >= threshold. The self-join runs per-bucket (tiny groups),
@@ -422,13 +416,10 @@ object Dedup {
           .as("cov_union_ppm"))
   }
 
-  def dedupCaptureRecapture(spark: SparkSession, dir: String): DataFrame =
-    dedupCaptureRecaptureOf(Tables.documents(spark, dir))
-
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    dedupSimhashOf(Tables.documents(spark, dir))
-
-  /** See [[dedupSimhash]]; operates on any (doc_id, text) frame. */
+  /** SimHash near-dup clustering over any (doc_id, text) frame: a
+    * 64-bit SimHash per document split into four 16-bit bands; every
+    * document joins the cluster of the smallest doc_id sharing any band
+    * value with it. */
   def dedupSimhashOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Canonicalize like every other near-dup path (NFC + casefold,
@@ -550,9 +541,6 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
-  def dupMatrix(spark: SparkSession, dir: String): DataFrame =
-    dupMatrixOf(Tables.documents(spark, dir))
-
   /** LSH recall audit: what fraction of the TRUE (exact-Jaccard ≥ t)
     * near-dup pairs does the banded-MinHash candidate path recover —
     * the number that justifies (or indicts) the LSH shortcut before a
@@ -592,26 +580,6 @@ object Dedup {
           .as("recall"))
   }
 
-  def lshRecall(spark: SparkSession, dir: String): DataFrame =
-    lshRecallOf(Tables.documents(spark, dir))
-
-  /** The REGISTERED scale path of [[lshRecallOf]]: audit a
-    * deterministic document sample (xxhash64(doc_id) mod s == 0), so
-    * the exact-pair side costs ~1/s² of the full audit while the
-    * recall ratio stays unbiased (content-blind sampling can't favor
-    * pairs banding happens to catch) — this is the query a 100 TB run
-    * executes; the exact variant above remains the verification-scale
-    * contract. A pair survives only when BOTH endpoints sample in
-    * (1/s² survival), so s is a POWER knob, not a constant: pick s
-    * with expected surviving pairs = pair_mass/s² in the thousands.
-    * At 100 TB pair mass is ≥10⁹ and s=8 (the §6 rehearsal setting)
-    * still leaves ~10⁷ pairs; at the 500-doc/25-pair verification
-    * corpus s=2 leaves ~6 — the same mechanism at the scale-matched
-    * rate, which is what this registered query pins. DedupSpec bounds
-    * the sampled estimate against the exact one on the sf0.01 corpus. */
-  def lshRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    lshRecallOf(Tables.documents(spark, dir), sampleOneIn = 2)
-
   /** LSH candidate PRECISION audit — [[lshRecallOf]]'s other half:
     * of the distinct (band, hash)-bucket candidate pairs, what
     * fraction survives the exact-Jaccard verify at `threshold`?
@@ -650,9 +618,6 @@ object Dedup {
           .as("precision"))
   }
 
-  def lshPrecision(spark: SparkSession, dir: String): DataFrame =
-    lshPrecisionOf(Tables.documents(spark, dir))
-
   /** Per-source exact-duplicate rate under [[dedupExact]]'s keep-first
     * (min doc_id per sha256) contract — the per-source quality number
     * behind [[dupMatrixOf]]'s cross-source view: a crawl source with a
@@ -676,9 +641,6 @@ object Dedup {
           .as("dup_rate"))
       .orderBy("source")
   }
-
-  def dedupRateBySource(spark: SparkSession, dir: String): DataFrame =
-    dedupRateBySourceOf(Tables.documents(spark, dir))
 
   /** Staged dedup cascade — cheap-to-expensive, each stage seeing only
     * the previous stage's survivors (how production corpus dedup
@@ -724,9 +686,6 @@ object Dedup {
         col("r.n_removed"), col("r.n_out"))
       .orderBy("ord")
   }
-
-  def dedupCascade(spark: SparkSession, dir: String): DataFrame =
-    dedupCascadeOf(Tables.documents(spark, dir))
 
   /** Exact-substring duplicate spans (the Lee et al. '21 ExactSubstr
     * analog — the sharp end of the span family): every MAXIMAL token
@@ -802,9 +761,6 @@ object Dedup {
       .orderBy("doc_id", "span_start")
   }
 
-  def exactSubstringSpans(spark: SparkSession, dir: String): DataFrame =
-    exactSubstringSpansOf(Tables.documents(spark, dir))
-
   /** Duplicate token-inflation audit (the dedup-ROI read): per source,
     * how many tokens the corpus carries vs how many survive exact
     * dedup — `inflation` = total/unique tokens is the average copy
@@ -836,9 +792,6 @@ object Dedup {
           .as("inflation"))
       .orderBy("source")
   }
-
-  def dupInflation(spark: SparkSession, dir: String): DataFrame =
-    dupInflationOf(Tables.documents(spark, dir))
 
   /** Banding-parameter sweep: the LSH knob curve behind rows 16/217
     * measured in ONE pass. Every (bands, rowsPerBand) factorization of
@@ -886,9 +839,6 @@ object Dedup {
           .as("flagged_docs"))
       .orderBy(col("bands").desc)
   }
-
-  def bandingSweep(spark: SparkSession, dir: String): DataFrame =
-    bandingSweepOf(Tables.documents(spark, dir))
 
   /** Per-doc 8-gram novelty in ARRIVAL order (Lee '21's memorization
     * framing turned into the acquisition read: of this document's
@@ -943,9 +893,6 @@ object Dedup {
           .as("novelty_ppm"))
       .orderBy("doc_id")
 
-  def ngramNovelty(spark: SparkSession, dir: String): DataFrame =
-    ngramNoveltyOf(Tables.documents(spark, dir))
-
   /** The acquisition CURVE over [[ngramNoveltyOf]]'s per-doc frame:
     * novel-gram fraction per arrival DECILE (doc_id axis — the
     * synthetic ids are arrival-dense, the production caller's
@@ -979,7 +926,4 @@ object Dedup {
           .as("novelty_ppm"))
       .orderBy("decile")
   }
-
-  def noveltyCurve(spark: SparkSession, dir: String): DataFrame =
-    noveltyCurveOf(Tables.documents(spark, dir))
 }

@@ -50,9 +50,6 @@ object EventAnalytics {
       .orderBy("user_id", "session_idx")
   }
 
-  def sessionize(spark: SparkSession, dir: String): DataFrame =
-    sessionizeOf(Tables.events(spark, dir))
-
   /** Per-user z-score outliers: events whose value deviates more than
     * `threshold` sample standard deviations from the user's mean. The
     * per-user stats frame has one row PER DISTINCT USER — unbounded at
@@ -75,9 +72,6 @@ object EventAnalytics {
         round(z, 4).as("z"))
       .orderBy("event_id")
   }
-
-  def zscoreOutliers(spark: SparkSession, dir: String): DataFrame =
-    zscoreOutliersOf(Tables.events(spark, dir))
 
   /** Synthetic overlapping campaign windows derived from the event date
     * span: campaign k covers [day0 + 2k, day0 + 2k + 4] (5-day windows
@@ -167,9 +161,6 @@ object EventAnalytics {
       .orderBy("user_id", "day")
   }
 
-  def dailyFill(spark: SparkSession, dir: String): DataFrame =
-    dailyFillOf(Tables.events(spark, dir))
-
   /** Trailing `windowDays`-day distinct-user reach per active day —
     * the sliding-distinct metric a naive per-day self-join makes
     * quadratic. Shape: activity dedupes to (user, day) FIRST (bounded
@@ -194,9 +185,6 @@ object EventAnalytics {
       .orderBy("day")
   }
 
-  def rollingReach(spark: SparkSession, dir: String): DataFrame =
-    rollingReachOf(Tables.events(spark, dir))
-
   /** Per-event trailing time-RANGE aggregates: how many events (and
     * how much quantized value) the same user produced in the preceding
     * `precedingMinutes`, including the current event. RANGE frames
@@ -212,7 +200,7 @@ object EventAnalytics {
     val winUs = precedingMinutes.toLong * 60L * 1000000L
     val ev = events.select(col("event_id"), col("user_id"),
       unix_micros(col("ts")).as("us"),
-      floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+      Behavior.micro(col("value")).as("qv"))
     val w = Window.partitionBy("user_id").orderBy(col("us"))
       .rangeBetween(-winUs, Window.currentRow)
     ev.select(col("event_id"), col("user_id"), col("us"),
@@ -220,9 +208,6 @@ object EventAnalytics {
       graft.functions.TextF.microsTo4dp(sum("qv").over(w)).as("sum_win"))
       .orderBy("event_id")
   }
-
-  def rangeWindow(spark: SparkSession, dir: String): DataFrame =
-    rangeWindowOf(Tables.events(spark, dir))
 
   /** EWMA-smoothed daily revenue per event type (the alert-family
     * smoother next to [[CtrAlerts.ctrSpike]]'s step comparison).
@@ -263,9 +248,6 @@ object EventAnalytics {
       .orderBy("event_type", "day")
   }
 
-  def ewmaSmooth(spark: SparkSession, dir: String): DataFrame =
-    ewmaSmoothOf(Tables.events(spark, dir))
-
   /** Day-of-week seasonality profile per event type: for each weekday,
     * the mean daily revenue and its ratio to the type's overall mean
     * daily revenue (`seasonal_index` > 1 ⇒ that weekday runs hot) —
@@ -305,9 +287,6 @@ object EventAnalytics {
           .as("seasonal_index"))
       .orderBy("event_type", "dow")
   }
-
-  def seasonalProfile(spark: SparkSession, dir: String): DataFrame =
-    seasonalProfileOf(Tables.events(spark, dir))
 
   /** Top event-type 3-step paths within sessions (the sequence-mining
     * report behind "how do users actually navigate"): sessions are
@@ -350,9 +329,6 @@ object EventAnalytics {
       .limit(k)
   }
 
-  def topPaths(spark: SparkSession, dir: String): DataFrame =
-    topPathsOf(Tables.events(spark, dir))
-
   /** Weekday-adjusted revenue anomalies: a day is flagged when its
     * revenue is off by more than `tol` from the LEAVE-ONE-OUT mean of
     * its event type's OTHER same-weekday days — the seasonality-aware
@@ -388,9 +364,6 @@ object EventAnalytics {
       .orderBy("event_type", "day")
   }
 
-  def seasonalOutliers(spark: SparkSession, dir: String): DataFrame =
-    seasonalOutliersOf(Tables.events(spark, dir))
-
   /** Day-over-day change decomposition: Δtotal between the report day
     * and the day before, broken down by event type with each type's
     * share of the change — the "why did revenue move" answer a daily
@@ -403,11 +376,11 @@ object EventAnalytics {
     * 1-row broadcast; Δtotal is a window over the |types|-bounded
     * frame. Exact integers until the two final rounded divisions. */
   def changeContribOf(events: DataFrame): DataFrame = {
-    val rd = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val rd = Behavior.reportDate(events)
     val all = Window.partitionBy(lit(1))
     events
       .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        Behavior.micro(col("value")).as("qv"))
       .crossJoin(broadcast(rd))
       .filter(col("day") >= date_sub(col("report_date"), 1))
       .groupBy("event_type")
@@ -427,9 +400,6 @@ object EventAnalytics {
       .orderBy(abs(col("delta")).desc, col("event_type"))
   }
 
-  def changeContrib(spark: SparkSession, dir: String): DataFrame =
-    changeContribOf(Tables.events(spark, dir))
-
   /** Revenue concentration per event type: the exact Gini coefficient
     * over per-user revenue totals — "do ten whales carry this metric"
     * asked before any per-user average is trusted. Computed on the
@@ -447,7 +417,7 @@ object EventAnalytics {
       .orderBy(col("qu"), col("user_id"))
     events
       .select(col("event_type"), col("user_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        Behavior.micro(col("value")).as("qv"))
       .groupBy("event_type", "user_id")
       .agg(sum("qv").as("qu"))
       .withColumn("i", row_number().over(byType).cast("long"))
@@ -462,9 +432,6 @@ object EventAnalytics {
           .as("gini"))
       .orderBy("event_type")
   }
-
-  def giniConcentration(spark: SparkSession, dir: String): DataFrame =
-    giniConcentrationOf(Tables.events(spark, dir))
 
   /** Rare-category collapse mapping: keep the `keepTop` most frequent
     * item values, map everything else to OTHER — the cardinality cap a
@@ -492,9 +459,6 @@ object EventAnalytics {
           .otherwise(lit("OTHER")).as("encoded"))
       .orderBy("item")
   }
-
-  def categoryCollapse(spark: SparkSession, dir: String): DataFrame =
-    categoryCollapseOf(Tables.events(spark, dir))
 
   /** CUSUM changepoint detection per event type: the first day whose
     * cumulative deviation from the baseline mean exceeds `h` baseline
@@ -534,9 +498,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def cusumChangepoint(spark: SparkSession, dir: String): DataFrame =
-    cusumChangepointOf(Tables.events(spark, dir))
-
   /** Leave-one-out mean-target encoding of the item key against the
     * event value (the feature-engineering step that replaces a
     * high-cardinality categorical with its outcome mean WITHOUT
@@ -555,7 +516,7 @@ object EventAnalytics {
     val ev = events.select(col("event_id"),
       coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
         .as("item"),
-      floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+      Behavior.micro(col("value")).as("qv"))
     val items = ev.groupBy("item")
       .agg(count(lit(1)).as("n"), sum("qv").as("s"))
     val mu = ev.agg(
@@ -570,9 +531,6 @@ object EventAnalytics {
             / (col("n") - 1L + alpha).cast("double") / lit(1e6)).as("enc"))
       .orderBy("event_id")
   }
-
-  def targetEncode(spark: SparkSession, dir: String): DataFrame =
-    targetEncodeOf(Tables.events(spark, dir))
 
   /** Session bounce rate per day — the engagement headline over
     * [[sessionizeOf]]'s sessions (one source of truth for the gap
@@ -593,9 +551,6 @@ object EventAnalytics {
           col("n_bounces").cast("double") / col("n_sessions").cast("double"))
           .as("bounce_rate"))
       .orderBy("day")
-
-  def bounceRate(spark: SparkSession, dir: String): DataFrame =
-    bounceRateOf(Tables.events(spark, dir))
 
   /** Sample autocorrelation of the daily event-count series, lags 1..7
     * per event type — the periodicity probe behind every seasonality
@@ -660,12 +615,9 @@ object EventAnalytics {
       .orderBy("event_type", "lag")
   }
 
-  def acfDaily(spark: SparkSession, dir: String): DataFrame =
-    acfDailyOf(Tables.events(spark, dir))
-
   /** Ljung–Box portmanteau test per event type over lags 1..7 —
     * the OMNIBUS verdict [[acfDailyOf]] describes lag by lag and
-    * [[durbinWatson]] reads only at lag 1 ("is this daily count
+    * [[durbinWatsonOf]] reads only at lag 1 ("is this daily count
     * series white noise at all?" — the residual-independence gate
     * every ±1.96σ forecast band and every i.i.d.-assuming test in
     * the shelf silently leans on): Q = n(n+2) Σ_k r_k²/(n−k) on the
@@ -744,9 +696,6 @@ object EventAnalytics {
     32.670573, 33.924438, 35.172462, 36.415029, 37.652484,
     38.885139, 40.113272, 41.337138, 42.556968, 43.772972)
 
-  def ljungBox(spark: SparkSession, dir: String): DataFrame =
-    ljungBoxOf(Tables.events(spark, dir))
-
   /** Time-based train/embargo/test split with leakage audit — the
     * split a forecasting or uplift model needs where [[Corpus]]'s
     * hash splits would leak the future into training: the last
@@ -769,7 +718,7 @@ object EventAnalytics {
                       embargoDays: Int = 2): DataFrame = {
     require(testDays > 0 && embargoDays >= 0,
       s"testDays > 0, embargoDays >= 0; got $testDays/$embargoDays")
-    val maxDay = events.agg(max(to_date(col("ts"))).as("report_date"))
+    val maxDay = Behavior.reportDate(events)
     val tagged = events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
@@ -790,9 +739,6 @@ object EventAnalytics {
         sum(coalesce(col("in_train"), lit(0L))).as("n_users_in_train"))
       .orderBy("split")
   }
-
-  def temporalSplit(spark: SparkSession, dir: String): DataFrame =
-    temporalSplitOf(Tables.events(spark, dir))
 
   /** Daily-count burstiness (index of dispersion / Fano factor) per
     * event type: D = Var(daily count)/Mean(daily count) over the
@@ -833,9 +779,6 @@ object EventAnalytics {
           .as("dispersion"))
       .orderBy("event_type")
 
-  def burstiness(spark: SparkSession, dir: String): DataFrame =
-    burstinessOf(Tables.events(spark, dir))
-
   /** Inter-arrival-time percentiles per event type: exact p50/p90/p99
     * of the gap between consecutive events of the type, in seconds —
     * [[burstinessOf]]'s time-domain sibling (dispersion says THAT
@@ -875,9 +818,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def interarrivalPercentiles(spark: SparkSession, dir: String): DataFrame =
-    interarrivalPercentilesOf(Tables.events(spark, dir))
-
   /** Split-conformal prediction interval per event type (Vovk's
     * distribution-free coverage, the modern ML-calibration read): fit
     * the trivial predictor (train-side mean) on a deterministic
@@ -899,7 +839,7 @@ object EventAnalytics {
     * coverage pass rides a bounded q̂ broadcast. */
   def conformalIntervalOf(events: DataFrame): DataFrame = {
     val e = events.select(col("event_type"), col("user_id"),
-      floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"),
+      Behavior.micro(col("value")).as("vq"),
       when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
         lit("train")).otherwise(lit("calib")).as("side"))
     val trainMean = e.filter(col("side") === "train")
@@ -934,9 +874,6 @@ object EventAnalytics {
           / col("n_calib").cast("double")).as("coverage"))
       .orderBy("event_type")
   }
-
-  def conformalInterval(spark: SparkSession, dir: String): DataFrame =
-    conformalIntervalOf(Tables.events(spark, dir))
 
   /** Event-time disorder audit per type — the batch measurement that
     * SIZES a streaming watermark ([[interarrivalPercentilesOf]] sizes
@@ -975,9 +912,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def disorderAudit(spark: SparkSession, dir: String): DataFrame =
-    disorderAuditOf(Tables.events(spark, dir))
-
   /** Seasonal-naive forecast backtest per event type: predict each
     * day's count with (a) the same weekday last week (lag-7, the
     * seasonal-naive baseline every real forecast must beat) and (b)
@@ -1014,9 +948,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def forecastBacktest(spark: SparkSession, dir: String): DataFrame =
-    forecastBacktestOf(Tables.events(spark, dir))
-
   /** Return-time distribution: exact p50/p90 of the gap between a
     * user's consecutive SESSIONS (session end → next session start,
     * [[sessionizeOf]]'s 30-minute-gap sessions) — the retention
@@ -1044,9 +975,6 @@ object EventAnalytics {
         graft.functions.TextF.round4HalfUp(
           element_at(col("ps"), 2) / lit(3.6e9)).as("p90_hours"))
   }
-
-  def returnTime(spark: SparkSession, dir: String): DataFrame =
-    returnTimeOf(Tables.events(spark, dir))
 
   /** Peak concurrent sessions per day — the capacity-planning number
     * (provision for the MAX, bill for the mean): every session emits
@@ -1087,9 +1015,6 @@ object EventAnalytics {
         max("running").as("peak_concurrent"))
       .orderBy("day")
   }
-
-  def peakConcurrency(spark: SparkSession, dir: String): DataFrame =
-    peakConcurrencyOf(Tables.events(spark, dir))
 
   /** Time-weighted average (TWAP) concurrency per day —
     * [[peakConcurrencyOf]]'s companion read: peak sizes the worst
@@ -1134,9 +1059,6 @@ object EventAnalytics {
           col("us").cast("double") / lit(86400e6)).as("twap_concurrent"))
       .orderBy("day")
   }
-
-  def twapConcurrency(spark: SparkSession, dir: String): DataFrame =
-    twapConcurrencyOf(Tables.events(spark, dir))
 
   /** Binary-segmentation changepoint (the top-1 split of the classic
     * recursive scheme): per event type, the day boundary that
@@ -1207,9 +1129,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def binarySegmentation(spark: SparkSession, dir: String): DataFrame =
-    binarySegmentationOf(Tables.events(spark, dir))
-
   /** Gap-threshold sensitivity sweep for sessionization: session
     * counts and mean size at gap ∈ {5, 15, 30, 60} minutes — the knee
     * read that justifies (or indicts) row 46's 30-minute convention:
@@ -1247,9 +1166,6 @@ object EventAnalytics {
           / col("n_sessions").cast("double")).as("mean_events_per_session"))
       .orderBy("gap_minutes")
   }
-
-  def sessionSweep(spark: SparkSession, dir: String): DataFrame =
-    sessionSweepOf(Tables.events(spark, dir))
 
   /** Watermark-loss trade-off curve: for allowed lateness w ∈ {1, 5,
     * 30, 120} minutes, the exact count (and ppm) of events a
@@ -1289,9 +1205,6 @@ object EventAnalytics {
         expr("(n_dropped * 1000000) div n_events").as("dropped_ppm"))
       .orderBy("watermark_minutes")
   }
-
-  def watermarkLoss(spark: SparkSession, dir: String): DataFrame =
-    watermarkLossOf(Tables.events(spark, dir))
 
   /** Additive weekday decomposition of the daily revenue series per
     * type — [[seasonalProfileOf]] reports the weekday SHAPE, this
@@ -1349,9 +1262,6 @@ object EventAnalytics {
       .orderBy("event_type", "day")
   }
 
-  def seasonalDecompose(spark: SparkSession, dir: String): DataFrame =
-    seasonalDecomposeOf(Tables.events(spark, dir))
-
   /** Weekday revenue envelope per type — the NORMAL BAND a monitoring
     * dashboard draws under the live line (p10/p50/p90 of daily
     * revenue, conditioned on weekday so Saturday isn't judged against
@@ -1381,9 +1291,6 @@ object EventAnalytics {
         r4(element_at(col("ps"), 3) / 100).as("p90"))
       .orderBy("event_type", "dow")
   }
-
-  def weekdayEnvelope(spark: SparkSession, dir: String): DataFrame =
-    weekdayEnvelopeOf(Tables.events(spark, dir))
 
   /** Session entry-point conversion (landing-page analysis): sessions
     * grouped by their FIRST event's item, with the share that convert
@@ -1422,9 +1329,6 @@ object EventAnalytics {
         expr("(n_converted * 1000000) div n_sessions").as("conv_ppm"))
       .orderBy("entry_item")
   }
-
-  def entryConversion(spark: SparkSession, dir: String): DataFrame =
-    entryConversionOf(Tables.events(spark, dir))
 
   /** Interval-OVERLAP join: sessions × campaign windows weighted by
     * the overlap DURATION — [[intervalJoinOf]] answers "which events
@@ -1557,9 +1461,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def pettittChangepoint(spark: SparkSession, dir: String): DataFrame =
-    pettittChangepointOf(Tables.events(spark, dir))
-
   /** Syntetos–Boylan demand classification per item (SBC '05 — the
     * quadrant chart that DECIDES which forecaster an item gets;
     * [[crostonBacktestOf]] assumes intermittency, this is the gate
@@ -1615,9 +1516,6 @@ object EventAnalytics {
                 |  ELSE 'lumpy' END""".stripMargin).as("demand_class"))
       .orderBy("item")
   }
-
-  def demandClasses(spark: SparkSession, dir: String): DataFrame =
-    demandClassesOf(Tables.events(spark, dir))
 
   private def denseDaily(events: DataFrame, testDays: Int): DataFrame = {
     val daily = events
@@ -1696,9 +1594,6 @@ object EventAnalytics {
         (col("errh") < col("err7")).as("holt_wins"))
       .orderBy("event_type")
   }
-
-  def holtBacktest(spark: SparkSession, dir: String): DataFrame =
-    holtBacktestOf(Tables.events(spark, dir))
 
   /** Holt-Winters ADDITIVE-SEASONAL backtest per type (α = β = γ = ½,
     * weekly m = 7) vs the lag-7 naive — the model that carries BOTH
@@ -1789,9 +1684,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def holtWintersBacktest(spark: SparkSession, dir: String): DataFrame =
-    holtWintersBacktestOf(Tables.events(spark, dir))
-
   /** Croston's method backtest per ITEM — the INTERMITTENT-demand
     * forecaster ([[holtBacktestOf]]/[[holtWintersBacktestOf]] model
     * continuous daily series; an item purchased a handful of days a
@@ -1868,9 +1760,6 @@ object EventAnalytics {
       .orderBy("item")
   }
 
-  def crostonBacktest(spark: SparkSession, dir: String): DataFrame =
-    crostonBacktestOf(Tables.events(spark, dir))
-
   /** Pinball (quantile) loss of lag-7-plus-residual-quantile daily
     * forecasts at q ∈ {0.5, 0.9} — the PROPER score for the quantile
     * bands this repo already ships (`conformal_interval` calibrates a
@@ -1925,9 +1814,6 @@ object EventAnalytics {
       .orderBy("event_type", "q")
   }
 
-  def pinballLoss(spark: SparkSession, dir: String): DataFrame =
-    pinballLossOf(Tables.events(spark, dir))
-
   /** Weekday seasonality STRENGTH per type — the η² effect size the
     * seasonality family was missing (`chi2_contingency` tests counts,
     * `seasonal_profile` reports the shape, `cramers_v` scores the
@@ -1979,9 +1865,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def seasonalStrength(spark: SparkSession, dir: String): DataFrame =
-    seasonalStrengthOf(Tables.events(spark, dir))
-
   /** DAU/MAU stickiness per day (the growth-dashboard headline "what
     * share of the monthly audience shows up daily" — the habit
     * metric [[Behavior.userGrowthOf]]'s flow accounting and
@@ -2013,9 +1896,6 @@ object EventAnalytics {
         expr("(dau * 1000000) div mau").as("stickiness_ppm"))
       .orderBy("day")
   }
-
-  def dauStickiness(spark: SparkSession, dir: String): DataFrame =
-    dauStickinessOf(Tables.events(spark, dir))
 
   /** Revenue momentum streaks per type — the gaps-and-islands read
     * (longest run of up-days, longest run of down-days, run count):
@@ -2053,9 +1933,6 @@ object EventAnalytics {
         count(lit(1)).as("n_runs"))
       .orderBy("event_type")
   }
-
-  def streakStats(spark: SparkSession, dir: String): DataFrame =
-    streakStatsOf(Tables.events(spark, dir))
 
   /** Conversion by session DEPTH — does a longer session actually
     * convert better? ([[sessionizeOf]] builds the sessions,
@@ -2098,9 +1975,6 @@ object EventAnalytics {
       .orderBy("depth_bucket")
   }
 
-  def sessionDepthConversion(spark: SparkSession, dir: String): DataFrame =
-    sessionDepthConversionOf(Tables.events(spark, dir))
-
   /** Power-user curve (the L28 histogram): how many of the window's
     * active users showed up on exactly 1, 2, …, 28 of the last 28
     * days — [[dauStickinessOf]] publishes the MEAN of this
@@ -2131,9 +2005,6 @@ object EventAnalytics {
           .as("user_share_ppm"))
       .orderBy("days_active")
   }
-
-  def powerUserCurve(spark: SparkSession, dir: String): DataFrame =
-    powerUserCurveOf(Tables.events(spark, dir))
 
   /** Within-session funnel — [[graft.operators.Behavior.funnelStepsOf]]
     * chains steps over a user's WHOLE history; a merchandiser's
@@ -2175,9 +2046,6 @@ object EventAnalytics {
           " NULLIF(n_click_sessions, 0) AS BIGINT)").as("conv_ppm"))
   }
 
-  def sessionFunnel(spark: SparkSession, dir: String): DataFrame =
-    sessionFunnelOf(Tables.events(spark, dir))
-
   /** Hour-of-day × day-of-week arrival heatmap — the on-call
     * load-shape dashboard ([[seasonalProfileOf]] reads weekday MEANS
     * per type; capacity planning needs the 168-cell intensity grid:
@@ -2209,9 +2077,6 @@ object EventAnalytics {
           .as("revenue"))
       .orderBy("weekday", "hour_of_day")
   }
-
-  def hourlyHeatmap(spark: SparkSession, dir: String): DataFrame =
-    hourlyHeatmapOf(Tables.events(spark, dir))
 
   /** Durbin–Watson serial-correlation statistic on the daily-revenue
     * residuals of [[seasonalStrengthOf]]'s weekday-mean model (Durbin
@@ -2269,9 +2134,6 @@ object EventAnalytics {
           .otherwise(lit("none")))
       .orderBy("event_type")
   }
-
-  def durbinWatson(spark: SparkSession, dir: String): DataFrame =
-    durbinWatsonOf(Tables.events(spark, dir))
 
   /** Breusch–Pagan heteroscedasticity gate on the weekday-mean model
     * (BP '79 in the Koenker studentized LM form — the THIRD residual
@@ -2335,9 +2197,6 @@ object EventAnalytics {
       .orderBy("event_type")
   }
 
-  def breuschPagan(spark: SparkSession, dir: String): DataFrame =
-    breuschPaganOf(Tables.events(spark, dir))
-
   /** Cross-correlation lead–lag matrix between event-type daily
     * series (the CCF beside [[acfDailyOf]]'s ACF — the cross twin):
     * for every ordered type pair and every lag in [−maxLag, maxLag],
@@ -2398,7 +2257,7 @@ object EventAnalytics {
         | / NULLIF(sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
         |               * CAST(n * syy - sy * sy AS DOUBLE)), 0.0)"""
         .stripMargin))
-      .withColumn("rq", floor(col("r") * 1e6 + lit(0.5)).cast("long"))
+      .withColumn("rq", Behavior.micro(col("r")))
     val best = Window.partitionBy("type_a", "type_b")
     withR
       .withColumn("key", struct(
@@ -2412,9 +2271,6 @@ object EventAnalytics {
         col("is_best"))
       .orderBy("type_a", "type_b", "lag")
   }
-
-  def ccfLeadlag(spark: SparkSession, dir: String): DataFrame =
-    ccfLeadlagOf(Tables.events(spark, dir))
 
   /** Per-user automation (bot) heuristics — the trust-and-safety
     * screen that runs BEFORE any engagement metric is believed: a
@@ -2472,9 +2328,6 @@ object EventAnalytics {
       .orderBy("user_id")
   }
 
-  def botScore(spark: SparkSession, dir: String): DataFrame =
-    botScoreOf(Tables.events(spark, dir))
-
   /** Per-type calendar completeness card (the data-engineering
     * backfill read BEFORE any daily metric is trusted: a 30-day
     * average over 26 observed days is silently 13% low): observed vs
@@ -2505,7 +2358,4 @@ object EventAnalytics {
         col("longest_gap"))
       .orderBy("event_type")
   }
-
-  def gapReport(spark: SparkSession, dir: String): DataFrame =
-    gapReportOf(Tables.events(spark, dir))
 }

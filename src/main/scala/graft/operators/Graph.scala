@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
-import graft.sources.Tables
 
 /** Graph analytics over the item-transition graph mined from the event
   * stream (which item do users touch after which — the navigation
@@ -150,9 +149,6 @@ object Graph {
     transitionPagerank(events, iterations)(uniformBase)
   }
 
-  def pagerank(spark: SparkSession, dir: String): DataFrame =
-    pagerankOf(Tables.events(spark, dir))
-
   /** Personalized PageRank: [[pagerankOf]] with the TELEPORT mass
     * restricted to a seed set (items with id < `seedBound`) — rank
     * becomes "proximity to the seeds" instead of global centrality,
@@ -180,9 +176,6 @@ object Graph {
         .localCheckpoint(false)
     }
   }
-
-  def personalizedPagerank(spark: SparkSession, dir: String): DataFrame =
-    personalizedPagerankOf(Tables.events(spark, dir))
 
   /** Degree/strength profile of the item-transition graph: per item,
     * distinct out/in neighbors, total out/in transition weight, and
@@ -218,9 +211,6 @@ object Graph {
       .orderBy("item")
   }
 
-  def graphDegrees(spark: SparkSession, dir: String): DataFrame =
-    graphDegreesOf(Tables.events(spark, dir))
-
   /** Triangle counting over the UNDIRECTED item graph (clustering
     * structure: items that co-navigate in closed loops are a
     * community, not a chain). The classic distributed shape: edges
@@ -251,9 +241,6 @@ object Graph {
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .orderBy("item")
   }
-
-  def triangleCount(spark: SparkSession, dir: String): DataFrame =
-    triangleCountOf(Tables.events(spark, dir))
 
   /** Link prediction on the order–part bipartite graph by the
     * resource-allocation index (Zhou, Lü & Zhang '09 — the
@@ -302,9 +289,6 @@ object Graph {
         col("part_a"), col("part_b"))
       .limit(k)
   }
-
-  def linkPredict(spark: SparkSession, dir: String): DataFrame =
-    linkPredictOf(Tables.lineitem(spark, dir))
 
   val HitsScale: Long = 1000000000L // 1e9: hub/authority mass granularity
 
@@ -374,9 +358,6 @@ object Graph {
       .orderBy("item")
   }
 
-  def hits(spark: SparkSession, dir: String): DataFrame =
-    hitsOf(Tables.events(spark, dir))
-
   /** Label-propagation communities (Raghavan '07) over the UNDIRECTED
     * item graph — [[Components]] answers "connected at all?", LPA
     * answers "densely interlinked?": labels flow along weighted edges
@@ -437,9 +418,6 @@ object Graph {
     }
     labels.orderBy("item")
   }
-
-  def lpaCommunities(spark: SparkSession, dir: String): DataFrame =
-    lpaCommunitiesOf(Tables.events(spark, dir))
 
   /** Eigenvector centrality (Bonacich '72) over the weighted
     * undirected item graph — the recursive-importance read the
@@ -514,9 +492,6 @@ object Graph {
       .orderBy("item")
   }
 
-  def eigenvectorCentrality(spark: SparkSession, dir: String): DataFrame =
-    eigenvectorCentralityOf(Tables.events(spark, dir))
-
   /** The undirected distinct-neighbor item graph (a < b, self-loops
     * dropped) every structural operator here shares — ONE derivation
     * ([[triangleCountOf]]'s, factored) so k-core, assortativity and
@@ -570,9 +545,6 @@ object Graph {
     deg.select(col("u").as("item"), col("core_degree")).orderBy("item")
   }
 
-  def kcore(spark: SparkSession, dir: String): DataFrame =
-    kcoreOf(Tables.events(spark, dir))
-
   /** Degree assortativity (Newman '02): the Pearson correlation of
     * endpoint degrees over the undirected item graph's edges — r > 0
     * reads "hubs link to hubs" (social-network shape), r < 0 reads
@@ -619,9 +591,6 @@ object Graph {
               * lit(1e6) + lit(0.5)) / lit(1e6)).as("assortativity"))
   }
 
-  def degreeAssortativity(spark: SparkSession, dir: String): DataFrame =
-    degreeAssortativityOf(Tables.events(spark, dir))
-
   /** Local clustering coefficient (Watts-Strogatz '98) per node:
     * C = 2T / (d·(d−1)) with T = closed triangles at the node
     * ([[triangleCountOf]]'s count) and d = distinct-neighbor degree —
@@ -659,9 +628,6 @@ object Graph {
           .as("clustering_coeff"))
       .orderBy("item")
   }
-
-  def clusteringCoeff(spark: SparkSession, dir: String): DataFrame =
-    clusteringCoeffOf(Tables.events(spark, dir))
 
   /** Newman modularity Q of the [[lpaCommunitiesOf]] partition over
     * the weighted undirected item graph — the "did community detection
@@ -718,9 +684,6 @@ object Graph {
           .as("modularity"))
   }
 
-  def modularity(spark: SparkSession, dir: String): DataFrame =
-    modularityOf(Tables.events(spark, dir))
-
   /** k-hop reachability profile from the graph's busiest hub (max
     * distinct-degree item, ties to the smallest id): frontier size and
     * cumulative reach per hop 0..`hops` — the how-small-is-the-world
@@ -768,9 +731,6 @@ object Graph {
     out.orderBy("hop")
   }
 
-  def khopReach(spark: SparkSession, dir: String): DataFrame =
-    khopReachOf(Tables.events(spark, dir))
-
   /** Rich-club profile (Zhou–Mondragón '04): for degree cutoffs k ∈
     * {80, 85, 90} (chosen inside the item graph's 74-92 degree
     * band, where the curve actually moves), the edge density φ(k) = 2·E_k / (n_k·(n_k−1)) among
@@ -805,9 +765,6 @@ object Graph {
             .as("phi"))
     }.reduce(_.union(_)).orderBy("k")
   }
-
-  def richClub(spark: SparkSession, dir: String): DataFrame =
-    richClubOf(Tables.events(spark, dir))
 
   /** Shared K-source depth-bounded BFS over the undirected item graph:
     * sources = the top-`sources` degree hubs (deterministic tiebreak),
@@ -905,9 +862,6 @@ object Graph {
       .orderBy(col("betweenness").desc, col("item"))
   }
 
-  def betweennessSampled(spark: SparkSession, dir: String): DataFrame =
-    betweennessSampledOf(Tables.events(spark, dir))
-
   /** Sampled harmonic centrality (Marchiori-Latora '00 closeness made
     * disconnection-proof; Eppstein-Wang '01 sampling): ĥ(v) =
     * Σ_{s ∈ sample} 1/d(s,v) over the same K hub sources and depth
@@ -933,9 +887,6 @@ object Graph {
           .as("harmonic"))
       .orderBy(col("harmonic").desc, col("item"))
   }
-
-  def harmonicCentrality(spark: SparkSession, dir: String): DataFrame =
-    harmonicCentralityOf(Tables.events(spark, dir))
 
   /** k-truss decomposition (Cohen '08) at fixed k: the maximal
     * subgraph where every surviving EDGE closes ≥ k−2 triangles with
@@ -973,9 +924,6 @@ object Graph {
     support(edges).orderBy("a", "b")
   }
 
-  def ktruss(spark: SparkSession, dir: String): DataFrame =
-    ktrussOf(Tables.events(spark, dir))
-
   /** Connectivity profile of the undirected item graph — the "is the
     * catalog one connected market or several disjoint ones" read
     * every structural row here quietly assumes (PageRank/LPA/k-core
@@ -1003,9 +951,6 @@ object Graph {
         col("giant_size"),
         expr("(giant_size * 1000000) div n_nodes").as("giant_share_ppm"))
   }
-
-  def itemGraphComponents(spark: SparkSession, dir: String): DataFrame =
-    itemGraphComponentsOf(Tables.events(spark, dir))
 
   /** Hub-ablation robustness (Albert-Jeong-Barabási '00's attack
     * tolerance, as a one-row audit): remove the top-`k` degree hubs
@@ -1060,9 +1005,6 @@ object Graph {
         expr("(giant_after * 1000000) div giant_before")
           .as("retained_ppm"))
   }
-
-  def hubAblation(spark: SparkSession, dir: String): DataFrame =
-    hubAblationOf(Tables.events(spark, dir))
 
   /** Breadth-first sweep over `adj` (u, v) from `seed` (item) on the
     * [[Fixpoint]] loop. The state is (item, dist, changed): round h
@@ -1135,9 +1077,6 @@ object Graph {
       .crossJoin(broadcast(r2.agg(max("dist").as("diameter_lb"))))
   }
 
-  def diameterEstimate(spark: SparkSession, dir: String): DataFrame =
-    diameterEstimateOf(Tables.events(spark, dir))
-
   /** Pivot strongly-connected component of the DIRECTED transition
     * graph — every component row so far ([[itemGraphComponentsOf]],
     * the closure family) is UNDIRECTED; navigation is not: A→B
@@ -1191,9 +1130,6 @@ object Graph {
           .as("scc_share_ppm"))
   }
 
-  def pivotScc(spark: SparkSession, dir: String): DataFrame =
-    pivotSccOf(Tables.events(spark, dir))
-
   /** Edge reciprocity of the directed transition graph — the scalar
     * that says whether navigation is a two-way market or a funnel
     * ([[pivotSccOf]] finds the mutually-navigable CORE; this prices
@@ -1220,9 +1156,6 @@ object Graph {
         expr("CAST((n_reciprocal * 1000000) div n_edges AS BIGINT)")
           .as("reciprocity_ppm"))
   }
-
-  def reciprocity(spark: SparkSession, dir: String): DataFrame =
-    reciprocityOf(Tables.events(spark, dir))
 
   /** Truncated Katz centrality (Katz '53) over the UNWEIGHTED
     * directed item-transition graph — the walk-counting middle
@@ -1290,7 +1223,4 @@ object Graph {
           / lit(1e6)).as("katz"))
       .orderBy("item")
   }
-
-  def katzCentrality(spark: SparkSession, dir: String): DataFrame =
-    katzCentralityOf(Tables.events(spark, dir))
 }

@@ -2,13 +2,12 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
-import graft.sources.Tables
 
 /** Misra-Gries frequent-items sketch as a typed [[Aggregator]]: a
   * fixed-size (≤ k entries) mergeable summary with the classic
@@ -160,9 +159,6 @@ object HeavyHitters {
       .orderBy(col("cnt").desc, col("token"))
   }
 
-  def heavyHitters(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersOf(Tables.documents(spark, dir))
-
   /** Count-min error audit: the top `topK` exact tokens with their CMS
     * point estimates and overestimates — the calibration read a team
     * takes BEFORE trusting the sketch for the long tail it cannot
@@ -196,7 +192,4 @@ object HeavyHitters {
         (est - col("exact_cnt")).as("overestimate"))
       .orderBy(col("exact_cnt").desc, col("token"))
   }
-
-  def countMinErr(spark: SparkSession, dir: String): DataFrame =
-    countMinErrOf(Tables.documents(spark, dir))
 }

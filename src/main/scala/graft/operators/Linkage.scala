@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Entity-resolution (record-linkage) operators: fuzzy string matching
   * with blocking — the dedup pass a warehouse runs over DIMENSION
@@ -52,9 +50,6 @@ object Linkage {
       .orderBy("name_a", "name_b")
   }
 
-  def fuzzyMatch(spark: SparkSession, dir: String): DataFrame =
-    fuzzyMatchOf(Tables.part(spark, dir))
-
   /** Entity RESOLUTION on top of [[fuzzyMatchOf]]: the pair list says
     * "these two names look alike"; resolution needs the transitive
     * closure ("typo-A ~ typo-B ~ canonical" is one entity even when
@@ -81,7 +76,4 @@ object Linkage {
       .select(col("name"), col("cluster"), col("cluster_size"), col("n_parts"))
       .orderBy("name")
   }
-
-  def entityClusters(spark: SparkSession, dir: String): DataFrame =
-    entityClustersOf(Tables.part(spark, dir))
 }

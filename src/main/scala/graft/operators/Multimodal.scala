@@ -307,9 +307,6 @@ object Multimodal {
       .orderBy("source")
   }
 
-  def audioClippingAudit(spark: SparkSession, dir: String): DataFrame =
-    audioClippingAuditOf(Tables.documents(spark, dir))
-
   /** 64-bit average-hash (aHash) of a decoded image: 8×8 luminance
     * grid, bit = 1 where the cell's mean outshines the global mean.
     * Entirely integer — luma is the 2R+5G+B octuple, cell-vs-global

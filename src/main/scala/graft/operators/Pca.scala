@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Single-pass moment sketch for PCA: one flat Long array holding
   * [n, Σq (d), Σqqᵀ (d²)] with every component quantized to 1e-6
@@ -144,7 +142,4 @@ object Pca {
       proj(v1).as("pc1"), proj(v2).as("pc2"))
       .orderBy("vec_id")
   }
-
-  def pcaEmbed(spark: SparkSession, dir: String): DataFrame =
-    pcaEmbedOf(Tables.embeddings(spark, dir))
 }

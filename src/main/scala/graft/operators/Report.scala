@@ -192,10 +192,6 @@ object Report {
     * the order key; the aggregate is bounded by the priority
     * vocabulary and combines map-side.
     */
-  def shipLagPercentiles(spark: SparkSession, dir: String): DataFrame =
-    shipLagPercentilesOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir))
-
-  /** See [[shipLagPercentiles]]. */
   def shipLagPercentilesOf(lineitem: DataFrame, orders: DataFrame): DataFrame =
     lineitem.select(col("l_orderkey"), to_date(col("l_shipdate")).as("ship"))
       .join(orders.select(col("o_orderkey"), col("o_orderpriority"),
@@ -249,9 +245,6 @@ object Report {
     * verified sf0.01 dump (sketch register paths are engine-specific
     * — the [[graft.operators.CtrAlerts.hllErrorAuditOf]] convention)
     * and AlertsSpec pins the rank-error band scale-independently. */
-  def quantileSketchErr(spark: SparkSession, dir: String): DataFrame =
-    quantileSketchErrOf(Tables.lineitem(spark, dir))
-
   def quantileSketchErrOf(lineitem: DataFrame): DataFrame =
     lineitem
       .groupBy("l_returnflag")

@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
-import graft.sources.Tables
 
 /** Robust (order-statistic) analytics: MAD-based outlier flagging,
   * per-group decile profiles, winsorized means, and a per-column data
@@ -85,9 +84,6 @@ object Robust {
       .orderBy("event_id")
   }
 
-  def madOutliers(spark: SparkSession, dir: String): DataFrame =
-    madOutliersOf(Tables.events(spark, dir))
-
   /** Per-priority decile profile of order value: ntile(10) within each
     * priority ordered by (price, key) — the unique tiebreak makes the
     * assignment a total order, so decile membership is deterministic.
@@ -105,9 +101,6 @@ object Robust {
         min("o_totalprice").as("lo"), max("o_totalprice").as("hi"))
       .orderBy("o_orderpriority", "decile")
   }
-
-  def valueDeciles(spark: SparkSession, dir: String): DataFrame =
-    valueDecilesOf(Tables.orders(spark, dir))
 
   /** Winsorized mean per priority: clip order values to the group's
     * [p05, p95] (rounded to 4 dp so the clip bounds are cross-engine
@@ -134,9 +127,6 @@ object Robust {
       .orderBy("o_orderpriority")
   }
 
-  def winsorize(spark: SparkSession, dir: String): DataFrame =
-    winsorizeOf(Tables.orders(spark, dir))
-
   /** Per-column profile (row count, null count, exact distinct count).
     * One pruned single-column scan per column rather than one
     * multi-count-distinct pass: Spark plans the latter as an Expand
@@ -156,11 +146,6 @@ object Robust {
           col("n_distinct"))
     }.reduce(_.unionAll(_)).orderBy("column_name")
   }
-
-  def profileColumns(spark: SparkSession, dir: String): DataFrame =
-    profileColumnsOf(Tables.orders(spark, dir),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority"))
 
   /** Trailing `windowDays`-day median of daily revenue per event type
     * — the robust twin of [[EventAnalytics.ewmaSmoothOf]]'s mean-form
@@ -188,9 +173,6 @@ object Robust {
         .as(s"median_${windowDays}d"))
       .orderBy("event_type", "day")
   }
-
-  def rollingMedian(spark: SparkSession, dir: String): DataFrame =
-    rollingMedianOf(Tables.events(spark, dir))
 
   /** Distribution drift between two periods of a metric, per group —
     * the training-data / feature monitor that answers "did `value`
@@ -242,9 +224,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def distributionDrift(spark: SparkSession, dir: String): DataFrame =
-    distributionDriftOf(Tables.events(spark, dir), "2024-01-16")
-
   /** Bootstrap confidence interval for the per-group mean — the error
     * bar a metrics report should carry. `reps` Poisson(1) bootstrap
     * resamples (the large-n limit of sampling n rows with
@@ -277,7 +256,7 @@ object Robust {
       / lit(1e6) * lit(1e6) + lit(0.5)) / lit(1e6)
     events
       .select(col("event_type"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
+        Behavior.micro(col("value")).as("qv"),
         weights.as("ws"))
       .select(col("event_type"), col("qv"), posexplode(col("ws")))
       .groupBy(col("event_type"), col("pos"))
@@ -291,9 +270,6 @@ object Robust {
         round4(expr("percentile(mean6, 0.975)")).as("ci_hi"))
       .orderBy("event_type")
   }
-
-  def bootstrapCi(spark: SparkSession, dir: String): DataFrame =
-    bootstrapCiOf(Tables.events(spark, dir))
 
   /** Theil–Sen robust trend per group: the MEDIAN of all pairwise
     * slopes of the daily-total series — immune to the outlier days
@@ -322,9 +298,6 @@ object Robust {
         signum(col("slope_per_day")).cast("int").as("direction"))
       .orderBy("event_type")
   }
-
-  def theilSenTrend(spark: SparkSession, dir: String): DataFrame =
-    theilSenTrendOf(Tables.events(spark, dir))
 
   /** Mann–Kendall trend test per event type — the SIGNIFICANCE twin
     * of [[theilSenTrendOf]] (Theil–Sen estimates the robust slope;
@@ -371,9 +344,6 @@ object Robust {
           .as("trending"))
       .orderBy("event_type")
   }
-
-  def mannKendall(spark: SparkSession, dir: String): DataFrame =
-    mannKendallOf(Tables.events(spark, dir))
 
   /** Seasonal Mann–Kendall trend test per event type (Hirsch-Slack
     * '84): [[mannKendallOf]] with pairs restricted to the SAME
@@ -425,9 +395,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def seasonalMk(spark: SparkSession, dir: String): DataFrame =
-    seasonalMkOf(Tables.events(spark, dir))
-
   /** Robust (median/IQR) feature scaling of the order-value column,
     * per priority group — the outlier-immune standardization a feature
     * pipeline applies before modeling (z-scores move with every
@@ -457,9 +424,6 @@ object Robust {
       .orderBy("o_orderkey")
   }
 
-  def robustScaler(spark: SparkSession, dir: String): DataFrame =
-    robustScalerOf(Tables.orders(spark, dir))
-
   /** VALUE-weighted median per event type: the event value at which
     * half the revenue MASS sits below — "the typical dollar's event
     * size", which a count-median misrepresents whenever many tiny
@@ -477,7 +441,7 @@ object Robust {
     val cum = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
       .select(col("event_type"), col("event_id"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        Behavior.micro(col("value")).as("qv"))
       .withColumn("total", sum("qv").over(byType))
       .withColumn("cum", sum("qv").over(cum))
       .filter(lit(2L) * col("cum") >= col("total"))
@@ -489,9 +453,6 @@ object Robust {
         TextF.microsTo4dp(col("total")).as("total_value"))
       .orderBy("event_type")
   }
-
-  def weightedMedian(spark: SparkSession, dir: String): DataFrame =
-    weightedMedianOf(Tables.events(spark, dir))
 
   /** Pearson correlation matrix over lineitem's numeric measures
     * (quantity, extended price, discount) — the first look any
@@ -546,9 +507,6 @@ object Robust {
         "AS (x_col, y_col, n, r)")
       .orderBy("x_col", "y_col")
   }
-
-  def corrMatrix(spark: SparkSession, dir: String): DataFrame =
-    corrMatrixOf(Tables.lineitem(spark, dir))
 
   /** Spearman rank-correlation matrix over the same three lineitem
     * measures — [[corrMatrixOf]]'s monotone sibling (Pearson reads
@@ -614,9 +572,6 @@ object Robust {
         "AS (x_col, y_col, n, rho)")
       .orderBy("x_col", "y_col")
   }
-
-  def spearmanMatrix(spark: SparkSession, dir: String): DataFrame =
-    spearmanMatrixOf(Tables.lineitem(spark, dir))
 
   /** Kendall τ-b rank-correlation matrix over lineitem's BOUNDED
     * measures — the third of the correlation triple ([[corrMatrixOf]]
@@ -707,9 +662,6 @@ object Robust {
       .orderBy("x_col", "y_col")
   }
 
-  def kendallMatrix(spark: SparkSession, dir: String): DataFrame =
-    kendallMatrixOf(Tables.lineitem(spark, dir))
-
   /** Discount elasticity screen per part type — [[corrMatrixOf]]'s
     * exact-moment machinery GROUPED by the part-type dimension: does
     * discounting move volume for this category? (A category whose
@@ -746,9 +698,6 @@ object Robust {
           .as("r_discount_qty"))
       .orderBy("p_type")
   }
-
-  def discountElasticity(spark: SparkSession, dir: String): DataFrame =
-    discountElasticityOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 
   /** The split-day value grid [[ksTestOf]] and [[wassersteinDriftOf]]
     * read: per (type, micro-grid value) the counts before (`ca_bin`)
@@ -816,9 +765,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def ksTest(spark: SparkSession, dir: String): DataFrame =
-    ksTestOf(Tables.events(spark, dir))
-
   /** 1-D Wasserstein (earth-mover) drift per event type between the
     * two calendar periods — the THIRD drift lens beside
     * [[ksTestOf]] (max CDF gap: "did it change") and
@@ -862,9 +808,6 @@ object Robust {
             .stripMargin)).as("w1"))
       .orderBy("event_type")
   }
-
-  def wassersteinDrift(spark: SparkSession, dir: String): DataFrame =
-    wassersteinDriftOf(Tables.events(spark, dir))
 
   /** Wald–Wolfowitz runs test per event type on the daily-total
     * series vs its own median — the RANDOMNESS gate under every
@@ -939,9 +882,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def runsTest(spark: SparkSession, dir: String): DataFrame =
-    runsTestOf(Tables.events(spark, dir))
-
   /** The two-arm rank grid [[mannWhitneyOf]] and [[cliffsDeltaOf]]
     * read: per (type, micro-grid value) the arm counts c0/c1, the
     * arm-0 count strictly `below0` the value (one bounded cumulative
@@ -1006,9 +946,6 @@ object Robust {
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 1.96))
       .orderBy("event_type")
   }
-
-  def mannWhitney(spark: SparkSession, dir: String): DataFrame =
-    mannWhitneyOf(Tables.events(spark, dir))
 
   /** The three-arm rank-sum frame [[kruskalWallisOf]] and
     * [[dunnPosthocOf]] read: per-(type, value) arm counts on the micro
@@ -1083,9 +1020,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def kruskalWallis(spark: SparkSession, dir: String): DataFrame =
-    kruskalWallisOf(Tables.events(spark, dir))
-
   /** Jonckheere–Terpstra ordered-alternative trend test: does
     * l_quantity rise (or fall) MONOTONICALLY across the ordered
     * discount ladder? [[kruskalWallisOf]] asks "do the groups differ
@@ -1157,9 +1091,6 @@ object Robust {
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 1.96))
   }
 
-  def jonckheereTrend(spark: SparkSession, dir: String): DataFrame =
-    jonckheereTrendOf(Tables.lineitem(spark, dir))
-
   /** Friedman test over day-blocked daily revenue by event type — the
     * BLOCKED twin of [[kruskalWallisOf]] (KW pools all observations
     * as if exchangeable; Friedman ranks WITHIN each day, so the huge
@@ -1184,7 +1115,7 @@ object Robust {
     val dec = "decimal(38,0)"
     val daily = events
       .select(to_date(col("ts")).as("day"), col("event_type"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+        Behavior.micro(col("value")).as("vq"))
       .groupBy("day", "event_type").agg(sum("vq").as("v"))
       .localCheckpoint(false) // dense cross reads it thrice
     val dense = daily.select("day").distinct()
@@ -1236,9 +1167,6 @@ object Robust {
       .drop("crit")
   }
 
-  def friedmanTest(spark: SparkSession, dir: String): DataFrame =
-    friedmanTestOf(Tables.events(spark, dir))
-
   /** Kendall's W coefficient of concordance — [[friedmanTestOf]]'s
     * EFFECT SIZE (W = Q/(b(k−1)), the ties-corrected identity): the
     * Friedman Q says whether the day-blocks agree on a type ordering
@@ -1264,11 +1192,8 @@ object Robust {
           .otherwise(lit("weak")))
   }
 
-  def kendallW(spark: SparkSession, dir: String): DataFrame =
-    kendallWOf(Tables.events(spark, dir))
-
   /** Yuen's trimmed-mean two-sample test per event type (Yuen '74 —
-    * the ROBUST twin of [[welchTest]]: one whale in either arm drags
+    * the ROBUST twin of [[Behavior.welchTestOf]]: one whale in either arm drags
     * a mean-based t anywhere it likes; Yuen compares 20%-trimmed
     * means with winsorized variances, so the middle 60% decides and
     * heavy tails cost power instead of validity). Trimming is BY
@@ -1343,9 +1268,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def yuenTest(spark: SparkSession, dir: String): DataFrame =
-    yuenTestOf(Tables.events(spark, dir))
-
   /** Index-of-dispersion (Fisher) Poisson check on daily event counts
     * per type — the distributional sanity gate the rate family lacked:
     * [[graft.operators.EventAnalytics]]'s Poisson rate test COMPARES
@@ -1393,9 +1315,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def overdispersionCheck(spark: SparkSession, dir: String): DataFrame =
-    overdispersionCheckOf(Tables.events(spark, dir))
-
   /** Cliff's delta effect SIZE per event type — [[mannWhitneyOf]]
     * answers "is the arm difference real?"; this answers "is it
     * BIG?": δ = P(treat > ctrl) − P(ctrl > treat), the ordinal
@@ -1428,9 +1347,6 @@ object Robust {
           .otherwise("large"))
       .orderBy("event_type")
   }
-
-  def cliffsDelta(spark: SparkSession, dir: String): DataFrame =
-    cliffsDeltaOf(Tables.events(spark, dir))
 
   /** Trailing 7-day rolling correlation between the click and
     * purchase daily-count series — [[corrMatrixOf]]'s time-series
@@ -1470,9 +1386,6 @@ object Robust {
           .as("rolling_r"))
       .orderBy("day")
   }
-
-  def rollingCorr(spark: SparkSession, dir: String): DataFrame =
-    rollingCorrOf(Tables.events(spark, dir))
 
   /** Distribution-free confidence interval for the per-type median
     * (binomial order-statistic bounds, normal approximation z =
@@ -1525,9 +1438,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def medianCi(spark: SparkSession, dir: String): DataFrame =
-    medianCiOf(Tables.events(spark, dir))
-
   /** Hodges–Lehmann pseudo-median of the per-type DAILY revenue
     * series (the median of all Walsh averages (vᵢ+vⱼ)/2, i ≤ j — the
     * location estimator behind the Wilcoxon signed-rank CI: ~95%
@@ -1575,9 +1485,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def hodgesLehmann(spark: SparkSession, dir: String): DataFrame =
-    hodgesLehmannOf(Tables.events(spark, dir))
-
   /** Daily-revenue Value-at-Risk and expected shortfall per type —
     * the worst-day planning read (VaR₉₅ = the 5th-percentile daily
     * total by LOWER nearest-rank; CVaR = the mean of the days at or
@@ -1613,9 +1520,6 @@ object Robust {
         expr("CAST(tail_sum div n_tail AS BIGINT)").as("cvar_cents"))
       .orderBy("event_type")
   }
-
-  def revenueVar(spark: SparkSession, dir: String): DataFrame =
-    revenueVarOf(Tables.events(spark, dir))
 
   /** Dunn's post-hoc pairwise test after [[kruskalWallisOf]] (Dunn
     * '64 — KW's H says the three arms differ SOMEWHERE; Dunn says
@@ -1677,9 +1581,6 @@ object Robust {
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 2.393980))
       .orderBy("event_type", "arm_a", "arm_b")
   }
-
-  def dunnPosthoc(spark: SparkSession, dir: String): DataFrame =
-    dunnPosthocOf(Tables.events(spark, dir))
 
   /** The day-paired differences [[wilcoxonSignedRankOf]] and
     * [[signTestOf]] test: per day, d = rev_A − rev_B on the exact cent
@@ -1756,9 +1657,6 @@ object Robust {
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 1.96))
   }
 
-  def wilcoxonSignedRank(spark: SparkSession, dir: String): DataFrame =
-    wilcoxonSignedRankOf(Tables.events(spark, dir))
-
   /** Quantile treatment effect (QTE) per event type — the
     * DISTRIBUTIONAL A/B readout the mean-based tests compress away
     * (ab_test/welch read the average; a treatment that fattens the
@@ -1785,7 +1683,7 @@ object Robust {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val grid = events.select(col("event_type"),
         graft.operators.Behavior.arm2(col("user_id")).as("arm"),
-        floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vq"))
+        Behavior.micro(col("value")).as("vq"))
       .groupBy("event_type", "arm", "vq")
       .agg(count(lit(1)).as("c"))
       .withColumn("cum", sum("c").over(cumW))
@@ -1809,9 +1707,6 @@ object Robust {
         col("v0"), col("v1"), (col("v1") - col("v0")).as("lift_micro"))
       .orderBy("event_type", "q")
   }
-
-  def quantileLift(spark: SparkSession, dir: String): DataFrame =
-    quantileLiftOf(Tables.events(spark, dir))
 
   /** Sign test on the day-paired purchase/view daily revenues — the
     * DISTRIBUTION-FREE-est member of the paired family
@@ -1844,9 +1739,6 @@ object Robust {
       .withColumn("significant",
         when(col("z").isNull, lit(false)).otherwise(abs(col("z")) > 1.959964))
   }
-
-  def signTest(spark: SparkSession, dir: String): DataFrame =
-    signTestOf(Tables.events(spark, dir))
 
   /** Mood's median test per event type across the three-arm md5
     * assignment — the k-sample location test that survives what
@@ -1929,9 +1821,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def moodMedian(spark: SparkSession, dir: String): DataFrame =
-    moodMedianOf(Tables.events(spark, dir))
-
   /** Cox–Stuart trend test per event type on daily revenue — the
     * sign test bent into a trend detector (pair day i with day
     * i + ⌈n/2⌉ and ask which half is bigger; [[mannKendallOf]] reads
@@ -1982,9 +1871,6 @@ object Robust {
       .orderBy("event_type")
   }
 
-  def coxStuart(spark: SparkSession, dir: String): DataFrame =
-    coxStuartOf(Tables.events(spark, dir))
-
   /** Tukey median polish of the (event-type × weekday) revenue table
     * (Tukey '77 — the ROBUST twin of
     * [[EventAnalytics.seasonalDecomposeOf]]'s mean-based additive
@@ -2012,7 +1898,7 @@ object Robust {
       .select(col("event_type"),
         (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
           .as("weekday"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        Behavior.micro(col("value")).as("qv"))
       .groupBy("event_type", "weekday")
       .agg(sum("qv").as("v"))
       .select(col("event_type"), col("weekday").cast("long").as("weekday"),
@@ -2060,7 +1946,4 @@ object Robust {
         col("res").as("residual_micro"))
       .orderBy("event_type", "weekday")
   }
-
-  def medianPolish(spark: SparkSession, dir: String): DataFrame =
-    medianPolishOf(Tables.events(spark, dir))
 }

@@ -149,10 +149,6 @@ object Similarity {
     * harness's row hashing). `maxabs` is materialized in its own
     * projection — interpreted HOFs get no CSE, so an inline reference
     * would re-scan the array per use. */
-  def embedQuantize(spark: SparkSession, dir: String): DataFrame =
-    embedQuantizeOf(Tables.embeddings(spark, dir))
-
-  /** See [[embedQuantize]]; operates on any (vec_id, embedding) frame. */
   def embedQuantizeOf(embeddings: DataFrame): DataFrame = {
     val emb = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -178,11 +174,7 @@ object Similarity {
   /** Embedding-cosine near-dup: per vector, the nearest neighbor among
     * its LSH bucket plus the hamming-1 buckets (multiprobe on the
     * probe side only — a borderline near-dup flips the planes it sits
-    * closest to, and single-bucket probing misses it). */
-  def dedupCosine(spark: SparkSession, dir: String): DataFrame =
-    dedupCosineOf(Tables.embeddings(spark, dir))
-
-  /** See [[dedupCosine]]; operates on any (vec_id, embedding) frame.
+    * closest to, and single-bucket probing misses it).
     *
     * The plane count is sized to the DATA, not hardcoded: with
     * `nPlanes` planes, expected bucket occupancy is n/2^nPlanes and
@@ -235,17 +227,13 @@ object Similarity {
     * vector's code is set iff `embedding[i] > 0`, packed into two
     * 32-bit halves so the per-pair distance is two XOR+POPCNT ops —
     * the cheapest possible candidate metric (32× smaller than the
-    * float vector; cf. [[embedQuantize]]'s int8 path at 8×). The
+    * float vector; cf. [[embedQuantizeOf]]'s int8 path at 8×). The
     * packing is 64 static codegen'd expressions (no higher-order
     * function, so nothing is re-evaluated per element), distances rank
     * with the same broadcast + partition-local-top-k shape as
     * [[knnTopk]]: the packed table never shuffles, only the k rows per
     * query do. Ties break on neighbor id for a deterministic ranking.
     */
-  def annHamming(spark: SparkSession, dir: String): DataFrame =
-    annHammingOf(Tables.embeddings(spark, dir))
-
-  /** See [[annHamming]]; operates on any (vec_id, embedding) frame. */
   def annHammingOf(embeddings: DataFrame, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     def packBits(emb: Column, from: Int): Column =
@@ -384,7 +372,7 @@ object Similarity {
     embeddings
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
       .select(col("dim"),
-        floor(col("v").cast("double") * 1e6 + lit(0.5)).cast("long").as("q"))
+        Behavior.micro(col("v").cast("double")).as("q"))
       .groupBy("dim")
       .agg(count(lit(1)).as("n"), sum(col("q").cast(dec)).as("s"),
         sum(expr(s"CAST(q AS $dec) * q")).as("ss"),
@@ -399,9 +387,6 @@ object Similarity {
       .withColumn("dead", col("std") < 0.01)
       .orderBy("dim")
   }
-
-  def dimProfile(spark: SparkSession, dir: String): DataFrame =
-    dimProfileOf(Tables.embeddings(spark, dir))
 
   /** Hard positive/negative mining for contrastive training: per query
     * vector, the most DISTANT same-label neighbor (hardest positive —
@@ -440,9 +425,6 @@ object Similarity {
         col("g.n_id").as("neg_id"), col("g.cos").as("neg_cos"))
       .orderBy("q_id")
   }
-
-  def hardMining(spark: SparkSession, dir: String): DataFrame =
-    hardMiningOf(Tables.embeddings(spark, dir))
 
   /** Leave-one-out kNN label classification over the labeled embedding
     * table — the standard embedding-quality probe (if k nearest
@@ -486,9 +468,6 @@ object Similarity {
           .as("accuracy"))
       .orderBy("label")
   }
-
-  def knnClassify(spark: SparkSession, dir: String): DataFrame =
-    knnClassifyOf(Tables.embeddings(spark, dir))
 
   /** Retrieval MRR / hit-rate per label — the ranking-quality twin of
     * [[knnClassifyOf]]'s classification probe: for each query, the
@@ -557,9 +536,6 @@ object Similarity {
       .orderBy("label")
   }
 
-  def mrrEval(spark: SparkSession, dir: String): DataFrame =
-    mrrEvalOf(Tables.embeddings(spark, dir))
-
   /** Maximal-Marginal-Relevance diversified top-`k` (Carbonell &
     * Goldstein '98): greedy re-rank of each query's `pool` best cosine
     * candidates, each step picking argmax of λ·rel(c) − (1−λ)·max_{s∈S}
@@ -595,8 +571,7 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val q = broadcast(e.filter(col("vec_id") < queries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    val rel6 = floor(VectorF.cosineSim(col("q_emb"), col("embedding"))
-      * 1e6 + 0.5).cast("long")
+    val rel6 = Behavior.micro(VectorF.cosineSim(col("q_emb"), col("embedding")))
     val byQ = Window.partitionBy("q_id")
     val cand = q.join(e, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
@@ -639,9 +614,6 @@ object Similarity {
         (col("score").cast("double") / lit(1e7)).as("mmr"))
       .orderBy("q_id", "rank")
   }
-
-  def mmrRerank(spark: SparkSession, dir: String): DataFrame =
-    mmrRerankOf(Tables.embeddings(spark, dir))
 
   /** 1e6-scaled DCG position discounts ⌊1e6/log₂(i+1) + ½⌋ for ranks
     * 1..10, precomputed ONCE here and embedded as integer literals in
@@ -689,18 +661,15 @@ object Similarity {
       .groupBy("q_id").agg(count(lit(1)).as("n_rel"))
     dcg.join(nRel, "q_id") // inner: no relevant neighbor ⇒ excluded
       .select(col("q_id"), col("q_label"),
-        floor(col("dcg6").cast("double") /
+        Behavior.micro(col("dcg6").cast("double") /
           element_at(cumArr, least(col("n_rel"), lit(10L)).cast("int"))
-            .cast("double") * 1e6 + 0.5).cast("long").as("ndcg6"))
+            .cast("double")).as("ndcg6"))
       .groupBy(col("q_label").cast("int").as("label"))
       .agg(count(lit(1)).as("n_queries"),
         (floor(sum("ndcg6").cast("double") / count(lit(1)).cast("double")
           + 0.5) / lit(1e6)).as("ndcg"))
       .orderBy("label")
   }
-
-  def ndcgEval(spark: SparkSession, dir: String): DataFrame =
-    ndcgEvalOf(Tables.embeddings(spark, dir))
 
   /** Per-label squared-norm profile of the embedding column — the
     * degenerate-vector check an embedding pipeline runs before any
@@ -711,8 +680,8 @@ object Similarity {
     * are exact; the mean divides once, 4 dp half-up. Map-side
     * projection + one bounded label aggregate. */
   def embeddingNormStatsOf(embeddings: DataFrame): DataFrame = {
-    val qn2 = floor(aggregate(col("embedding").cast("array<double>"),
-      lit(0.0), (acc, x) => acc + x * x) * 1e6 + 0.5).cast("long")
+    val qn2 = Behavior.micro(aggregate(col("embedding").cast("array<double>"),
+      lit(0.0), (acc, x) => acc + x * x))
     embeddings
       .select(col("label").cast("int").as("label"), qn2.as("qn2"))
       .groupBy("label")
@@ -727,14 +696,11 @@ object Similarity {
       .orderBy("label")
   }
 
-  def embeddingNormStats(spark: SparkSession, dir: String): DataFrame =
-    embeddingNormStatsOf(Tables.embeddings(spark, dir))
-
   /** Alignment / separation report per label (the Wang-Isola '20
     * "alignment" read made EXACT and linear): mean pairwise cosine
     * WITHIN a label vs the mean cosine against the REST of the
     * corpus — the one-table answer to "do my labels form tight,
-    * separated clusters" that [[labelCentroids]] approximates
+    * separated clusters" that [[Cluster.labelCentroidsOf]] approximates
     * through a centroid and [[hardMiningOf]] samples. No pair is
     * ever materialized: for unit vectors, Σ_{a≠b} cos(a,b) =
     * ‖Σv‖² − Σ‖v‖², so per-label component sums S_l and the global
@@ -797,9 +763,6 @@ object Similarity {
       .orderBy("label")
   }
 
-  def embeddingAlignment(spark: SparkSession, dir: String): DataFrame =
-    embeddingAlignmentOf(Tables.embeddings(spark, dir))
-
   /** Label-noise suspects (confident-learning-lite): points whose k
     * nearest neighbors vote AGAINST their own label — the
     * training-data QA pass that catches mislabeled rows before they
@@ -858,13 +821,6 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  /** The registered audit bounds the query side to the first 512
-    * points (an audit SLICE — 22.6 s vs 5 s at sf0.1 for the full
-    * cross; a production sweep shards `auditLimit` ranges across
-    * runs or feeds candidate pairs, per the scaladoc above). */
-  def labelNoise(spark: SparkSession, dir: String): DataFrame =
-    labelNoiseOf(Tables.embeddings(spark, dir), auditLimit = 512L)
-
   /** Matryoshka prefix-energy profile — the truncation-feasibility
     * audit for dimension-reduced serving (Kusupati et al. '22 train
     * embeddings so prefixes carry most of the signal; this measures
@@ -899,8 +855,8 @@ object Similarity {
       // slice past the array end truncates: d ≥ dim ⇒ q_prefix = q_total
       .withColumn("frac_q", // per-vector fraction at 1e-6 grain
         when(col("q_total") === 0L, lit(0L)) // zero vector: define 0
-          .otherwise(floor(col("q_prefix").cast("double") /
-            col("q_total").cast("double") * 1e6 + 0.5).cast("long")))
+          .otherwise(Behavior.micro(col("q_prefix").cast("double") /
+            col("q_total").cast("double"))))
     rows.groupBy("d")
       .agg(count(lit(1)).as("n_vectors"),
         sum("q_prefix").as("sp"), sum("q_total").as("st"),
@@ -918,9 +874,6 @@ object Similarity {
           .as("mean_vector_frac"))
       .orderBy("d")
   }
-
-  def matryoshkaEnergy(spark: SparkSession, dir: String): DataFrame =
-    matryoshkaEnergyOf(Tables.embeddings(spark, dir))
 
   /** Hybrid retrieval: reciprocal-rank fusion (RRF, Cormack et al.
     * '09) of a sparse BM25 leg over `documents` and a dense cosine
@@ -974,10 +927,6 @@ object Similarity {
       .limit(k)
   }
 
-  def hybridSearch(spark: SparkSession, dir: String): DataFrame =
-    hybridSearchOf(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
-      Seq("spark", "merge", "window"))
-
   /** Semantic (embedding-cosine) benchmark decontamination — the
     * dense sibling of [[Corpus.decontaminateOf]]'s 8-gram overlap:
     * every corpus vector reports its maximum cosine against a FIXED
@@ -1007,9 +956,6 @@ object Similarity {
         (col("max_bench_sim") >= threshold).as("contaminated"))
       .orderBy("vec_id")
   }
-
-  def semDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    semDecontaminateOf(Tables.embeddings(spark, dir))
 
   /** Int8 quantization fidelity as retrieval recall — the eval
     * [[embedQuantizeOf]] never runs: per query, overlap@k between the
@@ -1058,9 +1004,6 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  def quantizeRecall(spark: SparkSession, dir: String): DataFrame =
-    quantizeRecallOf(Tables.embeddings(spark, dir))
-
   /** Deterministic ±1 Johnson-Lindenstrauss sign matrix (dims ×
     * outDims), derived from md5 so the Spark plan and the DuckDB
     * oracle can embed the SAME literals (the oracle string is built
@@ -1078,8 +1021,8 @@ object Similarity {
     * sign matrix (Achlioptas'01 — the database-friendly JL, no
     * gaussians, exact integer-weighted sums) and measure overlap@k
     * against exact top-k — the eval that prices a 4× index-memory cut
-    * BEFORE an index rebuilds. Projection is a per-row unrolled
-    * codegen'd sum (element_at × literal — no interpreted
+    * BEFORE an index rebuilds. Projection is one native mat-vec call
+    * per row ([[graft.plans.MatVecSigns]] — no interpreted
     * higher-order function on the fact path, the §6 round-11 lesson);
     * both searches are the [[knnTopk]] broadcast-query scan with
     * rounded-then-ranked scores; recall in exact ppm.
@@ -1125,9 +1068,6 @@ object Similarity {
         expr(s"(n_overlap * 1000000) div $k").as("recall_ppm"))
       .orderBy("q_id")
   }
-
-  def rpRecall(spark: SparkSession, dir: String): DataFrame =
-    rpRecallOf(Tables.embeddings(spark, dir))
 
   /** Margin-based cross-label pair mining (Artetxe & Schwenk '19's
     * ratio margin — the bitext-mining criterion, and the general
@@ -1189,9 +1129,6 @@ object Similarity {
       .orderBy("a_id")
   }
 
-  def marginMining(spark: SparkSession, dir: String): DataFrame =
-    marginMiningOf(Tables.embeddings(spark, dir))
-
   /** Linear-kernel MMD² between each label's embeddings and the rest
     * of the corpus (Gretton '12 two-sample read, linear kernel — for
     * which MMD² reduces EXACTLY to ‖μ_in − μ_out‖², the squared
@@ -1221,7 +1158,7 @@ object Similarity {
         posexplode(col("embedding").cast("array<double>"))
           .as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
-        floor(col("v") * 1e6 + lit(0.5)).cast("long").as("q"))
+        Behavior.micro(col("v")).as("q"))
       .groupBy("label", "pos")
       .agg(sum("q").as("s"), count(lit(1)).as("cnt"))
       .withColumn("st", sum("s").over(dimW))
@@ -1252,7 +1189,4 @@ object Similarity {
           .as("top_dim_share_ppm"))
       .orderBy("label")
   }
-
-  def embeddingMmd(spark: SparkSession, dir: String): DataFrame =
-    embeddingMmdOf(Tables.embeddings(spark, dir))
 }

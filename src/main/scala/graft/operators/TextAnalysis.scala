@@ -96,9 +96,6 @@ object TextAnalysis {
       .where(col("n_docs").isNotNull && col("n_docs") > 0)
   }
 
-  def blandAltman(spark: SparkSession, dir: String): DataFrame =
-    blandAltmanOf(Tables.documents(spark, dir))
-
   /** Per-language corpus stats. Ratios are single divisions of exact
     * integer sums — reproducible across engines and partitionings. */
   def textStats(spark: SparkSession, dir: String): DataFrame =
@@ -214,9 +211,6 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
-    winnowFingerprintsOf(Tables.documents(spark, dir))
-
   /** The composite corpus-cleaning pass an LLM-data pipeline runs
     * before training: quality threshold + length band + language
     * allowlist, composed from the primitives above so the whole
@@ -312,9 +306,6 @@ object TextAnalysis {
           .as("mean_purity_ppm"))
       .orderBy("source")
   }
-
-  def codeSwitch(spark: SparkSession, dir: String): DataFrame =
-    codeSwitchOf(Tables.documents(spark, dir))
 
   def langScores(text: Column): Column =
     graft.plans.ColumnBridge.column(graft.plans.PackedWordScore(
@@ -418,9 +409,6 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  def cohenKappa(spark: SparkSession, dir: String): DataFrame =
-    cohenKappaOf(Tables.documents(spark, dir))
-
   /** Keyword-in-context (KWIC) concordance: every occurrence of the
     * query token with its `ctx` tokens of left/right context — the
     * inspection surface a corpus curator greps before committing to a
@@ -448,9 +436,6 @@ object TextAnalysis {
           .as("right_ctx"))
       .orderBy("doc_id", "pos")
   }
-
-  def kwicSnippets(spark: SparkSession, dir: String): DataFrame =
-    kwicSnippetsOf(Tables.documents(spark, dir), "spark")
 
   // Markup patterns. No lookahead, no \s (the [[Corpus.EmailRe]]
   // rule: Java regex and DuckDB's RE2 must match identically).
@@ -491,9 +476,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  def stripMarkup(spark: SparkSession, dir: String): DataFrame =
-    stripMarkupOf(Tables.documents(spark, dir))
-
   // Mojibake signatures: UTF-8 bytes re-decoded as Latin-1 leave 'Ã'
   // followed by a continuation-byte character, and Windows-1252
   // round-trips leave 'â€¦'-family runs; U+FFFD is a decoder giving
@@ -533,9 +515,6 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  def mojibakeStats(spark: SparkSession, dir: String): DataFrame =
-    mojibakeStatsOf(Tables.documents(spark, dir))
-
   /** Unicode-script composition per language label: mean
     * parts-per-million of Latin / CJK / Cyrillic codepoints (explicit
     * codepoint RANGES, not named script classes — Java regex and RE2
@@ -572,9 +551,6 @@ object TextAnalysis {
       .orderBy("lang")
   }
 
-  def scriptMix(spark: SparkSession, dir: String): DataFrame =
-    scriptMixOf(Tables.documents(spark, dir))
-
   /** Per-document readability via the Coleman–Liau index — the
     * syllable-free member of the readability family (CLI = 0.0588·L −
     * 0.296·S − 15.8 with L = letters per 100 words, S = sentences per
@@ -608,9 +584,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  def readability(spark: SparkSession, dir: String): DataFrame =
-    readabilityOf(Tables.documents(spark, dir))
-
   /** Flesch-Kincaid grade level per doc — [[readabilityOf]]'s
     * Coleman-Liau deliberately avoids syllables (letters are safer
     * cross-engine); this is the OTHER classic, with the syllable
@@ -640,7 +613,4 @@ object TextAnalysis {
         col("n_syllables"), TextF.round4HalfUp(fk).as("fk_grade"))
       .orderBy("doc_id")
   }
-
-  def fleschKincaid(spark: SparkSession, dir: String): DataFrame =
-    fleschKincaidOf(Tables.documents(spark, dir))
 }

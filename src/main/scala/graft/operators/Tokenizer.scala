@@ -91,9 +91,6 @@ object Tokenizer {
       .orderBy("rank")
   }
 
-  def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesOf(Tables.documents(spark, dir))
-
   /** APPLY learned merge rules: segment every word of every document
     * by replaying the rules in rank order (exactly how a trained BPE
     * tokenizer runs), and report per-doc subword statistics — the

@@ -37,10 +37,6 @@ object Warehouse {
       .orderBy("event_type")
   }
 
-  def fkCoverage(spark: SparkSession, dir: String): DataFrame =
-    fkCoverageOf(Tables.events(spark, dir),
-      Tables.customer(spark, dir).select(col("c_custkey").as("key")))
-
   /** Changelog compaction (the upsert-view / SCD "current" snapshot):
     * the latest row per key by (event-time, event_id) — expressed as a
     * lexicographic max over a struct, NOT a per-key window: the
@@ -66,9 +62,6 @@ object Warehouse {
         col("m.event_id").as("event_id"), col("m.event_type").as("event_type"),
         col("m.value").as("value"))
       .orderBy("user_id")
-
-  def latestPerKey(spark: SparkSession, dir: String): DataFrame =
-    latestPerKeyOf(Tables.events(spark, dir))
 
   /** Classic star-schema revenue rollup (TPC-H Q5 shape): lineitem ⋈
     * orders ⋈ customer ⋈ nation for one order-date year, revenue by
@@ -106,10 +99,6 @@ object Warehouse {
       .orderBy(col("revenue").desc, col("nation"))
   }
 
-  def revenueByNation(spark: SparkSession, dir: String): DataFrame =
-    revenueByNationOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir))
-
   /** CDC between two as-of snapshots of the changelog: what changed
     * per key between "state as of `cutoff`" and "state now". Both
     * snapshots come out of ONE map-side-combinable aggregate — the
@@ -145,9 +134,6 @@ object Warehouse {
       .orderBy("user_id")
   }
 
-  def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    snapshotDiffOf(Tables.events(spark, dir), "2024-01-15")
-
   /** CDC MERGE / upsert — [[snapshotDiffOf]] DESCRIBES the delta,
     * this APPLIES it: the post-merge per-key snapshot with its merge
     * action, base = latest state before `splitDay`, changes = events
@@ -181,9 +167,6 @@ object Warehouse {
         coalesce(col("c.value"), col("b.value")).as("value"))
       .orderBy("user_id")
   }
-
-  def mergeUpsert(spark: SparkSession, dir: String): DataFrame =
-    mergeUpsertOf(Tables.events(spark, dir))
 
   /** Small-file compaction plan — the OPTIMIZE/bin-pack planner every
     * 100 TB lake runs nightly (Delta OPTIMIZE, Iceberg rewrite_data_
@@ -225,9 +208,6 @@ object Warehouse {
         max("hr").cast("long").as("last_hour"))
       .orderBy("event_type", "day", "bin_id")
   }
-
-  def compactionPlan(spark: SparkSession, dir: String): DataFrame =
-    compactionPlanOf(Tables.events(spark, dir))
 
   /** FIFO lot matching — the inventory-costing allocation join (match
     * each RETURNED unit of a part against the OLDEST shipped units of
@@ -288,9 +268,6 @@ object Warehouse {
     // value (the correctness compare is row-order-insensitive)
   }
 
-  def fifoMatch(spark: SparkSession, dir: String): DataFrame =
-    fifoMatchOf(Tables.lineitem(spark, dir))
-
   /** Right-to-erasure (GDPR delete) cost audit: given a deletion set
     * (here the deterministic user_id % 97 == 0 cohort standing in for
     * a request table — swap the predicate for a real one), report per
@@ -322,9 +299,6 @@ object Warehouse {
       .orderBy("day")
   }
 
-  def deletionAudit(spark: SparkSession, dir: String): DataFrame =
-    deletionAuditOf(Tables.events(spark, dir))
-
   /** SCD Type-2 dimension history from the changelog: per key, one row
     * per run of consecutive equal attribute values, with
     * [valid_from, valid_to) microsecond bounds (valid_to NULL = the
@@ -352,9 +326,6 @@ object Warehouse {
       .orderBy("user_id", "version")
   }
 
-  def scd2History(spark: SparkSession, dir: String): DataFrame =
-    scd2HistoryOf(Tables.events(spark, dir))
-
   /** k-anonymity audit over a quasi-identifier tuple (the privacy gate
     * a pipeline runs before releasing user-derived training data):
     * every QI group with fewer than `k` members is a re-identification
@@ -376,9 +347,6 @@ object Warehouse {
       .filter(col("group_size") < k)
       .orderBy("c_mktsegment", "c_nationkey", "bal_bucket")
   }
-
-  def kanonRisk(spark: SparkSession, dir: String): DataFrame =
-    kanonRiskOf(Tables.customer(spark, dir))
 
   /** l-diversity audit — [[kanonRiskOf]]'s second gate (Machanavajjhala
     * '07): a group can be k-anonymous yet still leak when everyone in
@@ -413,9 +381,6 @@ object Warehouse {
         (col("l_distinct") < l).as("risky"))
       .orderBy("c_mktsegment", "c_nationkey")
   }
-
-  def lDiversity(spark: SparkSession, dir: String): DataFrame =
-    lDiversityOf(Tables.customer(spark, dir))
 
   /** t-closeness audit — the third privacy gate (Li '07), closing the
     * [[kanonRiskOf]] → [[lDiversityOf]] chain: a group can be
@@ -467,9 +432,6 @@ object Warehouse {
       .orderBy("c_mktsegment", "c_nationkey")
   }
 
-  def tCloseness(spark: SparkSession, dir: String): DataFrame =
-    tClosenessOf(Tables.customer(spark, dir))
-
   /** Differential-privacy-style noised release of per-group counts: a
     * two-sided geometric perturbation (the discrete Laplace — the
     * standard integer mechanism for count queries) with α = 1/2,
@@ -509,9 +471,6 @@ object Warehouse {
         (col("n") + noise).as("noisy_n"))
       .orderBy("event_type")
   }
-
-  def dpCounts(spark: SparkSession, dir: String): DataFrame =
-    dpCountsOf(Tables.events(spark, dir))
 
   /** Zone-map pruning audit — the LAYOUT decision quantified: given a
     * fact table, a filter column (ship date), and a file count, what
@@ -588,9 +547,6 @@ object Warehouse {
       .orderBy("layout")
   }
 
-  def zonemapAudit(spark: SparkSession, dir: String): DataFrame =
-    zonemapAuditOf(Tables.lineitem(spark, dir))
-
   /** Incremental rollup maintenance (IVM for the daily revenue
     * report): a late-arriving delta — here the deterministic
     * `event_id % lateMod = 0` slice standing in for events that missed
@@ -614,7 +570,7 @@ object Warehouse {
   def incrementalRollupOf(events: DataFrame, lateMod: Int = 10): DataFrame = {
     require(lateMod > 1, s"lateMod must be > 1, got $lateMod")
     val base = events.select(to_date(col("ts")).as("day"),
-      floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
+      Behavior.micro(col("value")).as("qv"),
       (col("event_id") % lateMod === 0L).as("late"))
     val snapshot = base.filter(!col("late")).groupBy("day")
       .agg(count(lit(1)).as("n"), sum("qv").as("q"))
@@ -629,9 +585,6 @@ object Warehouse {
         TextF.microsTo4dp(col("q")).as("revenue"), col("n_late"))
       .orderBy("day")
   }
-
-  def incrementalRollup(spark: SparkSession, dir: String): DataFrame =
-    incrementalRollupOf(Tables.events(spark, dir))
 
   /** Column-level schema/content drift gate between two pipeline
     * vintages: the fact table splits at min_day + `splitDays` into
@@ -661,7 +614,7 @@ object Warehouse {
     val base = events.crossJoin(broadcast(minDay))
       .select(
         (datediff(to_date(col("ts")), col("d0")) >= splitDays).as("after"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"),
+        Behavior.micro(col("value")).as("qv"),
         col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"),
         col("event_type"))
@@ -730,9 +683,6 @@ object Warehouse {
       .orderBy("column")
   }
 
-  def schemaDrift(spark: SparkSession, dir: String): DataFrame =
-    schemaDriftOf(Tables.events(spark, dir))
-
   /** Benford first-significant-digit audit over order totals — the
     * classic fabricated-or-truncated-data screen (organically grown
     * magnitudes follow P(d) = log10(1+1/d); uniform generators, capped
@@ -767,9 +717,6 @@ object Warehouse {
       .orderBy("digit")
   }
 
-  def benfordAudit(spark: SparkSession, dir: String): DataFrame =
-    benfordAuditOf(Tables.orders(spark, dir))
-
   /** Join-cardinality estimation audit: EXACT self-join output size on
     * `l_partkey` (Σ c_k² over per-key counts — the pair mass every §6
     * dedup bound prices) against the uniform-keys independence
@@ -798,9 +745,6 @@ object Warehouse {
         expr("(exact_pairs * 10000) div ((n_rows * n_rows) div n_keys)")
           .as("err_ratio_bp"),
         col("max_key_rows"))
-
-  def joinSizeEstimate(spark: SparkSession, dir: String): DataFrame =
-    joinSizeEstimateOf(Tables.lineitem(spark, dir))
 
   /** Data-contract audit over the event stream: every ingest-side
     * invariant the downstream queries silently assume — event_type in
@@ -847,9 +791,6 @@ object Warehouse {
       .orderBy("rule")
   }
 
-  def contractAudit(spark: SparkSession, dir: String): DataFrame =
-    contractAuditOf(Tables.events(spark, dir))
-
   /** Return rate by part brand — the goods-quality report a retail
     * warehouse runs weekly (a brand whose lineitems come back as 'R'
     * at twice the fleet rate is a supplier conversation): per brand,
@@ -880,9 +821,6 @@ object Warehouse {
         TextF.microsTo4dp(col("qret")).as("returned_revenue"))
       .orderBy("p_brand")
   }
-
-  def returnRateByBrand(spark: SparkSession, dir: String): DataFrame =
-    returnRateByBrandOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 
   /** Supplier concentration per nation (procurement-risk HHI — the
     * [[graft.operators.CorpusStats]] lang_hhi machinery on the supply
@@ -928,10 +866,6 @@ object Warehouse {
           / col("tq").cast("double")).as("top_share"))
       .orderBy("nation")
   }
-
-  def supplierHhi(spark: SparkSession, dir: String): DataFrame =
-    supplierHhiOf(Tables.lineitem(spark, dir), Tables.supplier(spark, dir),
-      Tables.nation(spark, dir))
 
   /** Coordinated (consistent-hash) dev-slice sampling across the
     * customer→orders→lineitem star — the "carve a referentially-
@@ -980,10 +914,6 @@ object Warehouse {
       .unionByName(row("lineitem", lineitem, lKept, lOrphans))
       .orderBy("table")
   }
-
-  def consistentSample(spark: SparkSession, dir: String): DataFrame =
-    consistentSampleOf(Tables.customer(spark, dir),
-      Tables.orders(spark, dir), Tables.lineitem(spark, dir))
 
   /** Price/volume/mix decomposition of the revenue change between the
     * corpus's two date halves, per part type (the index-number read
@@ -1040,9 +970,6 @@ object Warehouse {
       .orderBy("p_type")
   }
 
-  def priceVolumeMix(spark: SparkSession, dir: String): DataFrame =
-    priceVolumeMixOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
-
   /** Order fill-rate by order month — the fulfillment operations read
     * beside row 166's ship-lag percentiles (lag says how FAST lines
     * ship; this says whether orders ship COMPLETE — a month of
@@ -1078,9 +1005,6 @@ object Warehouse {
         expr("CAST((n_filled * 1000000) div n_orders AS BIGINT)"))
       .orderBy("month")
   }
-
-  def orderFillRate(spark: SparkSession, dir: String): DataFrame =
-    orderFillRateOf(Tables.orders(spark, dir), Tables.lineitem(spark, dir))
 
   /** ABC (Pareto) inventory classification over part revenue — the
     * 80/95 cumulative-share cut behind every stocking policy (A-parts
@@ -1121,9 +1045,6 @@ object Warehouse {
           s" AS BIGINT)").as("revenue_share_ppm"))
       .orderBy("abc_class")
   }
-
-  def abcClassification(spark: SparkSession, dir: String): DataFrame =
-    abcClassificationOf(Tables.lineitem(spark, dir))
 
   /** XYZ demand-variability classification per part — [[abcClassificationOf]]'s
     * canonical companion axis (ABC says how much a part MATTERS, XYZ
@@ -1184,9 +1105,6 @@ object Warehouse {
       .orderBy("xyz_class")
   }
 
-  def xyzClassification(spark: SparkSession, dir: String): DataFrame =
-    xyzClassificationOf(Tables.lineitem(spark, dir))
-
   /** Monthly Laspeyres / Paasche / Fisher price indices vs the base
     * (earliest) month — the index-number read behind every "is
     * revenue up because of PRICES or because of volume" deflation
@@ -1245,9 +1163,6 @@ object Warehouse {
       .orderBy("month")
   }
 
-  def fisherPriceIndex(spark: SparkSession, dir: String): DataFrame =
-    fisherPriceIndexOf(Tables.lineitem(spark, dir))
-
   /** Order-total reconciliation audit — the VALUE-level integrity gate
     * beside [[fkCoverageOf]] (keys resolve) and [[contractAuditOf]]
     * (rows are well-shaped): does the header's `o_totalprice` equal
@@ -1300,9 +1215,6 @@ object Warehouse {
       .orderBy("o_orderstatus")
   }
 
-  def orderReconcile(spark: SparkSession, dir: String): DataFrame =
-    orderReconcileOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir))
-
   /** Small-quantity-order revenue per brand (the TPC-H Q17 shape —
     * "how much revenue is locked in orders below a fifth of the
     * part's typical quantity", the drop-small-orders what-if a
@@ -1340,9 +1252,6 @@ object Warehouse {
           .as("small_share_ppm"))
       .orderBy("p_brand")
   }
-
-  def smallOrderRevenue(spark: SparkSession, dir: String): DataFrame =
-    smallOrderRevenueOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 
   /** Idle high-balance customers per market segment (the TPC-H Q22
     * shape — "who holds above-average money with us and stopped
@@ -1384,9 +1293,6 @@ object Warehouse {
         col("balsum").cast("long").as("idle_balance_cents"))
       .orderBy("c_mktsegment")
   }
-
-  def idleCustomers(spark: SparkSession, dir: String): DataFrame =
-    idleCustomersOf(Tables.customer(spark, dir), Tables.orders(spark, dir))
 
   /** Pricing summary report — the literal TPC-H Q1 shape (per
     * returnflag × linestatus: quantity/price/discount/charge sums,
@@ -1431,9 +1337,6 @@ object Warehouse {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  def pricingSummary(spark: SparkSession, dir: String): DataFrame =
-    pricingSummaryOf(Tables.lineitem(spark, dir))
-
   /** Promotion revenue share by ship month — the TPC-H Q14 shape
     * ("what fraction of net revenue came from promotional parts"),
     * the marketing-spend justification read: net revenue
@@ -1467,9 +1370,6 @@ object Warehouse {
       .orderBy("month")
   }
 
-  def promotionEffect(spark: SparkSession, dir: String): DataFrame =
-    promotionEffectOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
-
   /** Customer order-count distribution — the TPC-H Q13 shape ("how
     * many customers placed 0, 1, 2, … orders", the engagement
     * histogram whose ZERO bucket is the whole point: an inner join
@@ -1491,10 +1391,6 @@ object Warehouse {
       .agg(count(lit(1)).as("n_customers"))
       .orderBy("n_orders")
   }
-
-  def ordersPerCustomerDist(spark: SparkSession, dir: String): DataFrame =
-    ordersPerCustomerDistOf(Tables.customer(spark, dir),
-      Tables.orders(spark, dir))
 
   /** Unshipped high-value orders — the TPC-H Q3 "shipping priority"
     * shape (orders a BUILDING-segment customer placed before the
@@ -1532,10 +1428,6 @@ object Warehouse {
         col("o_orderpriority"), col("n_lines"),
         TextF.microsTo4dp(col("qsum")).as("revenue"))
   }
-
-  def unshippedOrders(spark: SparkSession, dir: String): DataFrame =
-    unshippedOrdersOf(Tables.customer(spark, dir), Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir))
 
   /** National market share — the TPC-H Q8 shape: of the revenue that
     * MEDIUM-type parts earned from AMERICA-region customers, what
@@ -1597,12 +1489,6 @@ object Warehouse {
       .orderBy("o_year")
   }
 
-  def nationMarketShare(spark: SparkSession, dir: String): DataFrame =
-    nationMarketShareOf(Tables.lineitem(spark, dir),
-      Tables.orders(spark, dir), Tables.customer(spark, dir),
-      Tables.supplier(spark, dir), Tables.nation(spark, dir),
-      Tables.region(spark, dir), Tables.part(spark, dir))
-
   /** Discounted revenue under an OR-of-ANDs basket predicate — the
     * TPC-H Q19 shape (three brand × size × quantity "baskets" in one
     * disjunction; the query pattern every ad-hoc BI tool generates
@@ -1642,9 +1528,6 @@ object Warehouse {
         TextF.microsTo4dp(col("qsum")).as("revenue"))
       .orderBy("p_brand")
   }
-
-  def brandBasketRevenue(spark: SparkSession, dir: String): DataFrame =
-    brandBasketRevenueOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 
   /** Duplicate-payment audit — the classic AP double-pay screen
     * ([[benfordAuditOf]] hunts fabricated amounts, this hunts
@@ -1686,9 +1569,6 @@ object Warehouse {
       .orderBy("gap_days")
   }
 
-  def duplicatePayments(spark: SparkSession, dir: String): DataFrame =
-    duplicatePaymentsOf(Tables.orders(spark, dir))
-
   /** Late orders by priority — the TPC-H Q4 shape (how many orders per
     * priority had AT LEAST one line shipping more than `lateDays`
     * after the order date — the EXISTS pattern, and the one report
@@ -1724,10 +1604,6 @@ object Warehouse {
         expr("CAST((n_late * 1000000) div n_orders AS BIGINT)"))
       .orderBy("o_orderpriority")
   }
-
-  def lateOrdersByPriority(spark: SparkSession, dir: String): DataFrame =
-    lateOrdersByPriorityOf(Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir))
 
   /** Suppliers who kept orders waiting — the TPC-H Q21 shape, the one
     * query form still missing from the warehouse family: for FINISHED
@@ -1779,10 +1655,6 @@ object Warehouse {
       .limit(k)
   }
 
-  def blockingSuppliers(spark: SparkSession, dir: String): DataFrame =
-    blockingSuppliersOf(Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir))
-
   /** Bilateral trade flows — the TPC-H Q7 shape: revenue shipped
     * between two nations by year, BOTH directions published (supplier
     * nation → customer nation), the import/export ledger behind every
@@ -1822,11 +1694,6 @@ object Warehouse {
         col("n_lines"), TextF.microsTo4dp(col("qsum")).as("revenue"))
       .orderBy("supp_nation", "cust_nation", "o_year")
   }
-
-  def tradeFlows(spark: SparkSession, dir: String): DataFrame =
-    tradeFlowsOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.supplier(spark, dir),
-      Tables.nation(spark, dir))
 
   /** Returned-item revenue top-k — the TPC-H Q10 shape: which
     * customers returned the most money in a quarter-sized window
@@ -1868,11 +1735,6 @@ object Warehouse {
         col("c_acctbal"), col("n_lines"),
         TextF.microsTo4dp(col("qsum")).as("returned_revenue"))
   }
-
-  def returnedRevenueTopk(spark: SparkSession, dir: String): DataFrame =
-    returnedRevenueTopkOf(Tables.lineitem(spark, dir),
-      Tables.orders(spark, dir), Tables.customer(spark, dir),
-      Tables.nation(spark, dir))
 
   /** Unit-price dispersion per brand — the pricing-governance screen
     * ([[benfordAuditOf]] hunts fabricated totals, [[duplicatePaymentsOf]]
@@ -1923,9 +1785,6 @@ object Warehouse {
       .orderBy("p_brand")
   }
 
-  def priceDispersion(spark: SparkSession, dir: String): DataFrame =
-    priceDispersionOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
-
   /** Single-sourcing supply risk per brand ([[priceDispersionOf]]
     * polices a part's PRICE spread; this polices its SUPPLY spread —
     * a part whose volume rides one supplier is a disruption away
@@ -1968,9 +1827,6 @@ object Warehouse {
       .orderBy("p_brand")
   }
 
-  def singleSourcing(spark: SparkSession, dir: String): DataFrame =
-    singleSourcingOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
-
   /** Top supplier per quarter — the TPC-H Q15 shape ("which supplier
     * generated the most revenue last quarter", the vendor-award /
     * contract-renewal read), generalized to every quarter in the
@@ -2012,9 +1868,6 @@ object Warehouse {
       .orderBy("quarter", "s_suppkey")
   }
 
-  def topSupplierShare(spark: SparkSession, dir: String): DataFrame =
-    topSupplierShareOf(Tables.lineitem(spark, dir), Tables.supplier(spark, dir))
-
   /** Large-volume orders — the TPC-H Q18 shape ("which customers
     * placed orders above a quantity threshold", the bulk-buyer /
     * capacity-planning read): orders whose TOTAL line quantity
@@ -2048,10 +1901,6 @@ object Warehouse {
       .orderBy(col("total_qty").desc, col("o_orderkey"))
       .limit(100)
   }
-
-  def largeOrders(spark: SparkSession, dir: String): DataFrame =
-    largeOrdersOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir))
 
   /** Discount what-if — the TPC-H Q6 shape ("how much revenue would
     * we gain by eliminating mid-band discounts on small-quantity
@@ -2087,9 +1936,6 @@ object Warehouse {
           .as("forgone_share_bp"))
       .orderBy("ship_year")
   }
-
-  def discountWhatif(spark: SparkSession, dir: String): DataFrame =
-    discountWhatifOf(Tables.lineitem(spark, dir))
 
   /** Min-cost supplier per part — the TPC-H Q2 shape ("which supplier
     * should fulfil this part in this region", the sourcing decision),
@@ -2140,11 +1986,6 @@ object Warehouse {
       .limit(100)
   }
 
-  def minCostSupplier(spark: SparkSession, dir: String): DataFrame =
-    minCostSupplierOf(Tables.lineitem(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir), Tables.nation(spark, dir),
-      Tables.region(spark, dir))
-
   /** Realized-vs-list margin by supplier nation × ship year — the
     * TPC-H Q9 shape ("product-type profit", the sourcing-P&L read),
     * adapted to this schema's lack of ps_supplycost with the honest
@@ -2189,10 +2030,6 @@ object Warehouse {
       .orderBy("n_name", "ship_year")
   }
 
-  def nationProfit(spark: SparkSession, dir: String): DataFrame =
-    nationProfitOf(Tables.lineitem(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir), Tables.nation(spark, dir))
-
   /** Important parts for one nation's suppliers — the TPC-H Q11
     * shape ("which parts represent a significant share of the value
     * this nation supplies", the strategic-stock read), adapted to
@@ -2236,10 +2073,6 @@ object Warehouse {
       .orderBy(col("value_c100").desc, col("p_partkey"))
   }
 
-  def importantParts(spark: SparkSession, dir: String): DataFrame =
-    importantPartsOf(Tables.lineitem(spark, dir),
-      Tables.supplier(spark, dir), Tables.nation(spark, dir))
-
   /** Priority mix by shipping-speed class — the TPC-H Q12 shape
     * ("are critical-priority orders riding the slow ship modes", the
     * logistics-SLA read), adapted to this schema's lack of
@@ -2271,9 +2104,6 @@ object Warehouse {
         sum(lit(1L) - col("is_high")).as("low_line_count"))
       .orderBy("ship_year", "speed_class")
   }
-
-  def priorityShipMix(spark: SparkSession, dir: String): DataFrame =
-    priorityShipMixOf(Tables.lineitem(spark, dir), Tables.orders(spark, dir))
 
   /** Supplier variety per part group — the TPC-H Q16 shape ("how
     * many distinct suppliers can fulfil each (brand, type, size)
@@ -2312,10 +2142,6 @@ object Warehouse {
       .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
         col("p_size"))
   }
-
-  def partSupplierVariety(spark: SparkSession, dir: String): DataFrame =
-    partSupplierVarietyOf(Tables.lineitem(spark, dir),
-      Tables.part(spark, dir), Tables.supplier(spark, dir))
 
   /** Excess-volume shippers — the TPC-H Q20 shape ("which of this
     * region's suppliers hold surplus of the promotion-candidate
@@ -2357,11 +2183,6 @@ object Warehouse {
       .select(col("s_name"), col("s_acctbal"))
       .orderBy("s_name")
   }
-
-  def excessShippers(spark: SparkSession, dir: String): DataFrame =
-    excessShippersOf(Tables.lineitem(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir), Tables.nation(spark, dir),
-      Tables.region(spark, dir))
 
   /** Reorder-point / safety-stock plan per part brand (the textbook
     * continuous-review (μ·L + z·σ·√L) service-level calc — the
@@ -2420,7 +2241,4 @@ object Warehouse {
           / lit(100.0)).as("reorder_point"))
       .orderBy("p_brand")
   }
-
-  def reorderPoint(spark: SparkSession, dir: String): DataFrame =
-    reorderPointOf(Tables.lineitem(spark, dir), Tables.part(spark, dir))
 }

@@ -1,7 +1,9 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -17,11 +19,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * even the −0.0 edge matches the old left-fold.
   *
   * Mirrors the element_at tree's null semantics: a missing index
-  * (input shorter than the sign matrix) or a null element poisons
-  * every output lane (each lane reads every input index), so the
-  * whole output becomes an array of nulls; a NULL input array stays
-  * NULL. `signs` rides Seq-of-Seq for case-class structural equality
-  * (canonicalization/reuse); eval reads a flattened Array.
+  * (input shorter than the sign matrix), a null element or a NULL
+  * input array poisons every output lane (each lane reads every input
+  * index), so the output is an array of `cols` nulls and is itself
+  * never NULL — the tree's outer `array(...)` was not nullable either.
+  * KernelPropertySpec compares both on random, −0.0, short, null-
+  * element and NULL inputs. `signs` rides Seq-of-Seq for case-class
+  * structural equality (canonicalization/reuse); eval reads a
+  * flattened Array.
   */
 case class MatVecSigns(child: Expression,
                        signs: IndexedSeq[IndexedSeq[Double]])
@@ -46,12 +51,12 @@ case class MatVecSigns(child: Expression,
 
   override def inputTypes = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = false
   override def prettyName: String = "matvec_signs"
 
   /** Public so generated code can call it through the reference obj. */
   def project(in: ArrayData): GenericArrayData = {
-    val n = in.numElements()
-    var ok = n >= rows
+    var ok = in != null && in.numElements() >= rows
     var i = 0
     while (ok && i < rows) { if (in.isNullAt(i)) ok = false; i += 1 }
     if (!ok) return new GenericArrayData(new Array[Any](cols))
@@ -68,12 +73,17 @@ case class MatVecSigns(child: Expression,
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    project(input.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    project(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("matVecSigns", this, classOf[MatVecSigns].getName)
-    defineCodeGen(ctx, ev, c => s"$self.project($c)")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $self.project(${c.isNull} ? null : ${c.value});
+      |""".stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MatVecSigns =

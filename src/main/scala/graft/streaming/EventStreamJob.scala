@@ -139,7 +139,7 @@ object EventStreamJob {
     * vs shuffle exactly as in the batch engine. Left join: facts with
     * no dimension row survive with NULL attributes (an inner join
     * would silently drop late-created dimension keys — the FK-orphan
-    * problem Warehouse.fkCoverage audits in batch).
+    * problem Warehouse.fkCoverageOf audits in batch).
     */
   def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
     events.join(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming peak-concurrency gauge — the live twin of
-  * `EventAnalytics.peakConcurrency` (the capacity number ops watch on
+  * `EventAnalytics.peakConcurrencyOf` (the capacity number ops watch on
   * a wall: provision for the MAX, bill for the mean), fed by the
   * SESSION stream ([[StreamingSessionize]]'s output, or any source of
   * closed (user, start, end) spans).

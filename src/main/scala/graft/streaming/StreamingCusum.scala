@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CUSUM changepoint monitor: the stateful twin of the batch
-  * `EventAnalytics.cusumChangepoint` (SURVEY row 169) — per event
+  * `EventAnalytics.cusumChangepointOf` (SURVEY row 169) — per event
   * type, freeze μ₀ as the integer-micro mean of the first `baseline`
   * CLOSED days, run the exact integer statistic S = Σ(qrev − μ₀) over
   * every closed day (baseline days included, the batch contract), and

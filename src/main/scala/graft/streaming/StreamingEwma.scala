@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EWMA anomaly smoother: the stateful twin of the batch
-  * `EventAnalytics.ewmaSmooth` (λ = 1/2) over tumbling event-time
+  * `EventAnalytics.ewmaSmoothOf` (λ = 1/2) over tumbling event-time
   * windows, flagging a window whose total departs from the smoothed
   * history by more than `spikeFactor`×.
   *

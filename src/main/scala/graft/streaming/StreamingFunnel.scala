@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming conversion-window funnel: the stateful twin of the batch
-  * `Behavior.funnelWindowed` (view → click → purchase, each step
+  * `Behavior.funnelWindowedOf` (view → click → purchase, each step
   * within `windowMinutes` of the previous — the greedy
   * earliest-qualifying chain, SURVEY row 193). One state entry per
   * in-flight user, finalized and emitted when the event-time

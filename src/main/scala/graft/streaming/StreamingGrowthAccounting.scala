@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming growth-accounting gauge — the live twin of
-  * `Behavior.growthAccounting` (SURVEY row 316): every active
+  * `Behavior.growthAccountingOf` (SURVEY row 316): every active
   * user-day classifies new / retained / resurrected as it ARRIVES,
   * and churn rows materialize two ways — immediately when a returning
   * user reveals the gap (the batch-exact path: arrival at day d with

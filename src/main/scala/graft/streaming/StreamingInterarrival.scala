@@ -7,14 +7,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming inter-arrival monitor: the stateful twin of the batch
-  * gap-percentile report (`EventAnalytics.interarrivalPercentiles`,
+  * gap-percentile report (`EventAnalytics.interarrivalPercentilesOf`,
   * SURVEY row 225) — per event type, the live read of "how clumpy is
   * this feed", the number that sizes stream buffers and watermark
   * settings while the stream is running rather than after the fact.
   *
   * State per type is CONSTANT-size: the last seen event-time plus a
   * fixed 45-bucket power-of-two gap histogram (bucket b holds gaps in
-  * [2^(b−1), 2^b) µs — `Corpus.tokenLenHistogram`'s binning, time
+  * [2^(b−1), 2^b) µs — `Corpus.tokenLenHistogramOf`'s binning, time
   * domain). An exact-quantile twin would have to buffer every gap; the
   * histogram answers p50/p90/p99 to within its bucket's factor-of-two
   * resolution with state that never grows — the sketch trade row 67

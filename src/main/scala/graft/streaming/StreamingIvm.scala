@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import graft.functions.TextF
 
 /** Streaming incremental rollup maintenance — the foreachBatch form of
-  * the batch IVM merge (`Warehouse.incrementalRollup`, SURVEY row
+  * the batch IVM merge (`Warehouse.incrementalRollupOf`, SURVEY row
   * 194): every micro-batch is a late-arriving delta that merges into
   * the materialized daily snapshot by partial-aggregate algebra
   * (count and micro-sum are commutative monoids), so after ANY batch
@@ -108,7 +108,7 @@ object StreamingIvm {
       }
 
   /** Read the maintained snapshot in the batch report's shape
-    * (`day, n_events, revenue, n_late` — `Warehouse.incrementalRollup`'s
+    * (`day, n_events, revenue, n_late` — `Warehouse.incrementalRollupOf`'s
     * column contract). */
   def snapshot(spark: org.apache.spark.sql.SparkSession,
                path: String): DataFrame =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming gap sessionization: the stateful twin of the batch
-  * `EventAnalytics.sessionize` (30-minute inactivity gap), emitting a
+  * `EventAnalytics.sessionizeOf` (30-minute inactivity gap), emitting a
   * session row when the watermark certifies no more events can join it.
   *
   * State is ONE small entry per open session per user — bounded by the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sample-ratio-mismatch (SRM) monitor: the sequential twin
-  * of the batch `Behavior.srmCheck` — per event type, count arriving
+  * of the batch `Behavior.srmCheckOf` — per event type, count arriving
   * events by md5 arm (the SAME "ab:" parity `Behavior.arm2` and every
   * experiment op share) and latch ONE alarm the first time the 50/50
   * chi-square (n0 − n1)²/(n0 + n1) crosses 10.828 (χ²₁ at α = 10⁻³ —

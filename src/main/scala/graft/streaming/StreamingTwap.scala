@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming TWAP-concurrency gauge — the live twin of
-  * `EventAnalytics.twapConcurrency` (peak says provision, the time
+  * `EventAnalytics.twapConcurrencyOf` (peak says provision, the time
   * integral says bill): per closed day, sessions touching the day,
   * session-seconds inside it, and the time-weighted mean concurrency.
   *

@@ -47,7 +47,7 @@ class AlertsSpec extends AnyFunSuite with SparkFixture {
     // the real table: 9 rows, every |err_bp| inside the band that
     // justifies the sketch swap, and the estimate REPRODUCES under a
     // different partitioning (the pinned-oracle precondition)
-    val real = Report.quantileSketchErr(spark, Sf).collect()
+    val real = SparkEntry.queries("quantile_sketch_err")(spark, Sf).collect()
     assert(real.length == 9)
     assert(real.forall(r => math.abs(r.getLong(4)) <= 100),
       s"sf band: ${real.toSeq}")
@@ -162,7 +162,7 @@ class AlertsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("hll rollup: every level's estimate bands within 5% of exact, unions never rescan") {
-    val out = CtrAlerts.hllRollup(spark, Sf).collect()
+    val out = SparkEntry.queries("hll_rollup")(spark, Sf).collect()
       .map(r => (r.getString(0), Option(r.getString(1)),
         Option(r.getDate(2)).map(_.toString)) -> r.getLong(3)).toMap
     val ev = Tables.events(spark, Sf)

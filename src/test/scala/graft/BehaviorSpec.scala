@@ -1545,4 +1545,62 @@ class BehaviorSpec extends AnyFunSuite with SparkFixture {
     assert(graft.operators.Behavior.aaCalibrationOf(ev).isEmpty,
       "three users cannot fill a cell pair with n>1 on both sides")
   }
+
+  // ---- power_mde: the published cells recompute the chain exactly ----
+
+  private def purchaseEvents(n: Int, buyers: Long => Boolean): DataFrame =
+    (1L to n.toLong).map { u =>
+      val et = if (buyers(u)) "purchase" else "view"
+      (u, u, et, "2024-01-05 00:00:00", 1.0)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+
+  test("power_mde: the MDE chain recomputes exactly from the published cells") {
+    val out = Behavior.powerMdeOf(purchaseEvents(80, _ % 3 == 0)).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    val (n0, n1, c0, c1) = (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3))
+    assert(n0 + n1 == 80L && c0 + c1 > 0L)
+    val p = (c0 + c1).toDouble / (n0 + n1).toDouble
+    val raw = (1.959964 + 0.841621) *
+      math.sqrt(p * (1.0 - p) * (1.0 / n0 + 1.0 / n1))
+    val expected = math.floor(raw * 1e6 + 0.5) / 1e6
+    assert(r.getDouble(4) == expected, s"mde chain: $r vs $expected")
+    assert(r.getBoolean(6) == (r.getDouble(5) > r.getDouble(4)))
+  }
+
+  test("power_mde: a conversion-free corpus nulls the MDE, never claims power") {
+    val out = Behavior.powerMdeOf(purchaseEvents(40, _ => false)).collect()
+    assert(out(0).isNullAt(4), s"p=0 has no variance: ${out(0)}")
+    assert(!out(0).getBoolean(6))
+  }
+
+  test("tost_equivalence: same-mean arms read equivalent, a planted lift does not") {
+    // every user contributes 8.0 and 12.0 → each arm's mean is
+    // EXACTLY 10, within-arm variance 4 → se ~ 0.28 at ~100/arm,
+    // margin = 1.0 → both z ~ 3.5
+    val same = (1L to 100L).flatMap { u =>
+      Seq((u * 2, u, "buy", 8.0), (u * 2 + 1, u, "buy", 12.0))
+    }.toDF("event_id", "user_id", "event_type", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(lit("2024-01-01 00:00:00")).as("ts"), col("value"))
+    val eq = Behavior.tostEquivalenceOf(same).collect()(0)
+    assert(eq.getDouble(3) == 0.0, s"mean diff exactly 0: $eq")
+    assert(eq.getDouble(4) == 1.0, s"margin = 10% of control mean: $eq")
+    assert(eq.getBoolean(7), s"same-mean arms must read equivalent: $eq")
+    // resolve arms, plant +10 on arm 1: far outside the 1.0 margin
+    val arms = (1L to 100L).toDF("user_id")
+      .select(col("user_id"), Behavior.arm2(col("user_id")).as("arm"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val shifted = (1L to 100L).flatMap { u =>
+      val base = 10.0 * arms(u)
+      Seq((u * 2, u, "buy", base + 8.0), (u * 2 + 1, u, "buy", base + 12.0))
+    }.toDF("event_id", "user_id", "event_type", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(lit("2024-01-01 00:00:00")).as("ts"), col("value"))
+    val ne = Behavior.tostEquivalenceOf(shifted).collect()(0)
+    assert(!ne.getBoolean(7), s"a 10-unit lift is not equivalence: $ne")
+  }
 }

@@ -254,7 +254,8 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("length batching plans ONE shuffle: the batch-max window rides the bucket key") {
-    val p = Corpus.lengthBatching(spark, Sf).queryExecution.executedPlan.toString
+    val p = SparkEntry.queries("length_batching")(spark, Sf)
+      .queryExecution.executedPlan.toString
     val hashShuffles = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashShuffles == 1,
       s"(bucket, batch_id) must be satisfied by the bucket partitioning:\n$p")

@@ -484,7 +484,7 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("isotonic calibration is monotone end-to-end on the corpus") {
-    val out = CorpusStats.isotonicCalibration(spark, Sf)
+    val out = SparkEntry.queries("isotonic_calibration")(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(4)))
     assert(out.nonEmpty)
     assert(out.sortBy(_._1).map(_._2).sliding(2).forall(
@@ -729,8 +729,7 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
     // close to the published 6-dp grid, and every component is a
     // probability-scale non-negative (within_bin is the bin-variance
     // remainder, also ≥ 0 in the binned decomposition).
-    val Array(r) = graft.operators.CorpusStats
-      .brierDecomposition(spark, Sf).collect()
+    val Array(r) = SparkEntry.queries("brier_decomposition")(spark, Sf).collect()
     val (brier, rel, res, unc, wb) = (r.getDouble(2), r.getDouble(3),
       r.getDouble(4), r.getDouble(5), r.getDouble(6))
     assert(math.abs(brier - (rel - res + unc + wb)) < 5e-6,

@@ -390,8 +390,8 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     // (a) retain enough pairs to measure (power), and (b) estimate a
     // recall within a tolerance band of the exact audit's.
     val dir = "/root/testdata/sf0.01"
-    val exact = Dedup.lshRecall(spark, dir).collect().head
-    val sampled = Dedup.lshRecallSampled(spark, dir).collect().head
+    val exact = SparkEntry.queries("lsh_recall")(spark, dir).collect().head
+    val sampled = SparkEntry.queries("lsh_recall_sampled")(spark, dir).collect().head
     assert(sampled.getLong(1) > 0, "sample must retain measurable pairs")
     assert(sampled.getLong(2) <= sampled.getLong(1),
       "subset invariant survives sampling")

@@ -244,4 +244,48 @@ class KernelPropertySpec extends AnyFunSuite {
       packed == reference
     })
   }
+
+  test("MatVecSigns equals the element_at column tree it replaced, nulls and -0.0 included") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, CreateArray, ElementAt, Expression, Literal, Multiply, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val rows = 6
+    val cols = 4
+    val rnd = new scala.util.Random(7)
+    val signs = IndexedSeq.fill(rows, cols)(if (rnd.nextBoolean()) 1.0 else -1.0)
+    val emb = BoundReference(0, ArrayType(DoubleType, containsNull = true), nullable = true)
+    // array(Σ_i element_at(emb, i+1) * lit(signs(i)(j)) ...), left-folded
+    // from the first term; a missing index reads NULL (non-ANSI element_at).
+    val reference: Expression = CreateArray((0 until cols).map { j =>
+      (0 until rows).map { i =>
+        Multiply(ElementAt(emb, Literal(i + 1), None, failOnError = false),
+          Literal(signs(i)(j))): Expression
+      }.reduceLeft((a, b) => Add(a, b))
+    })
+    val native = graft.plans.MatVecSigns(emb, signs)
+    assert(native.nullable == reference.nullable, "a NULL array must not make the output NULL")
+    val compiled = UnsafeProjection.create(Seq(native, reference))
+    // raw bits, so -0.0 and 0.0 differ; None for a null lane
+    def lanes(a: ArrayData): Seq[Option[Long]] = (0 until a.numElements()).map { k =>
+      if (a.isNullAt(k)) None else Some(java.lang.Double.doubleToRawLongBits(a.getDouble(k)))
+    }
+    val elemGen: Gen[java.lang.Double] = Gen.frequency(
+      6 -> Gen.chooseNum(-1e3, 1e3).map(Double.box),
+      2 -> Gen.const(Double.box(-0.0)),
+      1 -> Gen.const(Double.box(0.0)),
+      1 -> Gen.const(null: java.lang.Double))
+    val inputGen: Gen[ArrayData] = Gen.frequency(
+      8 -> Gen.choose(0, rows + 2).flatMap(n => Gen.listOfN(n, elemGen))
+        .map(xs => new GenericArrayData(xs.toArray[Any])),
+      1 -> Gen.const(new GenericArrayData(Array.fill[Any](rows)(-0.0))),
+      1 -> Gen.const(null: ArrayData))
+    check("matvec-reference", Prop.forAll(inputGen) { in =>
+      val row = InternalRow(in)
+      val want = lanes(reference.eval(row).asInstanceOf[ArrayData])
+      val out = compiled(row)
+      lanes(native.eval(row).asInstanceOf[ArrayData]) == want &&
+        lanes(out.getArray(0)) == want && lanes(out.getArray(1)) == want
+    })
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Behavior, Cluster, Corpus, CorpusStats, CtrAlerts, Dedup, EventAnalytics, Graph, HeavyHitters, Similarity, TextAnalysis, Warehouse}
+import graft.operators.{Behavior, Cluster, Corpus, CtrAlerts, Dedup, EventAnalytics, Graph, Similarity, TextAnalysis}
 
 /** Plan-shape regression tests: the ExplainAudit invariants, asserted
   * on the planner output so a regression fails CI instead of waiting
@@ -17,6 +17,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   // Pre-AQE physical plan: a real tree (AdaptiveSparkPlanExec is a
   // leaf wrapper, so collect() on executedPlan would see nothing).
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.sparkPlan
+
+  // A registered query exactly as the driver builds it.
+  private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, Sf)
 
   // Nested-loop joins are allowed ONLY where a side is bounded by
   // construction: knnTopk/annHamming (fixed query set), annIvf/kmeans
@@ -49,15 +52,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // annIvf is excluded: its cell-assignment BNLJ is rows x a FIXED
     // 16-centroid broadcast — linear in rows by construction.
     val risky = Seq[DataFrame](
-      Dedup.dedupMinhash(spark, Sf),
+      q("dedup_minhash"),
       Dedup.dedupJaccard(spark, Sf),
       Dedup.jaccardPairs(spark, Sf),
-      Dedup.dedupSimhash(spark, Sf),
+      q("dedup_simhash"),
       Similarity.annLsh(spark, Sf),
-      EventAnalytics.sessionize(spark, Sf),
-      Corpus.decontaminate(spark, Sf),
-      CorpusStats.repetitionStats(spark, Sf),
-      CorpusStats.langQualityGate(spark, Sf))
+      q("sessionize"),
+      q("decontaminate"),
+      q("repetition_stats"),
+      q("lang_quality_gate"))
     risky.foreach { df =>
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
@@ -95,7 +98,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("chunkDocs is map-only up to the presentation sort") {
-    val p = plan(Corpus.chunkDocs(spark, Sf))
+    val p = plan(q("chunk_docs"))
     val shuffles = p.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
@@ -104,7 +107,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("packGreedy shuffles only for the per-source window and the sort") {
-    val p = plan(Corpus.packGreedy(spark, Sf))
+    val p = plan(q("pack_greedy"))
     val shuffles = p.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
@@ -113,7 +116,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("tfidf keeps its top-k partition-local and broadcasts only the 1-row count") {
-    val p = plan(CorpusStats.tfidfTopTerms(spark, Sf))
+    val p = plan(q("tfidf_top_terms"))
     assert(p.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "row_number()<=k must rewrite to WindowGroupLimit")
     // The only nested-loop join is the cross with the 1-row doc count.
@@ -121,14 +124,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("collocations' only nested-loop join is the 1-row totals cross") {
-    val p = plan(CorpusStats.collocations(spark, Sf))
+    val p = plan(q("collocations"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"token joins must stay equi-joins:\n$p")
     assert(p.collect { case j: CartesianProductExec => j }.isEmpty)
   }
 
   test("kmeans broadcasts only the k-row centroid set per assignment pass") {
-    val p = plan(Cluster.kmeansEmbed(spark, Sf))
+    val p = plan(q("kmeans_embed"))
     // One BNLJ per Lloyd iteration (vectors x k centroids) — linear in
     // rows because k is a constant; anything more is a regression.
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length ==
@@ -136,14 +139,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("zscoreOutliers carries no forced broadcast hint") {
-    val analyzed = EventAnalytics.zscoreOutliers(spark, Sf)
+    val analyzed = q("zscore_outliers")
       .queryExecution.analyzed.toString
     assert(!analyzed.contains("ResolvedHint"),
       "join strategy must stay AQE/size-decided — stats is one row per user, unbounded")
   }
 
   test("annHamming's only nested-loop is the fixed 8-query broadcast, top-k partition-local") {
-    val p = plan(Similarity.annHamming(spark, Sf))
+    val p = plan(q("ann_hamming"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length == 1,
       "queries x codes must broadcast the fixed 8-row query side only")
     assert(p.collect { case j: CartesianProductExec => j }.isEmpty)
@@ -152,7 +155,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("profileColumns reads at most one data column per scan (no Expand blow-up)") {
-    val p = plan(graft.operators.Robust.profileColumns(spark, Sf))
+    val p = plan(q("profile_columns"))
     val scans = p.collect { case f: FileSourceScanExec => f }
     assert(scans.nonEmpty)
     scans.foreach { s =>
@@ -164,7 +167,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bloom pre-filter is a literal scan-side predicate below the confirm join") {
-    val p = plan(graft.operators.BloomJoin.urgentRevenue(spark, Sf))
+    val p = plan(q("bloom_semi_join"))
     // The literal-bitset design must not join for the bitset at all —
     // a joined bitset lets ReorderJoin plan the exact semi-join first
     // and the "pre"-filter after it (the regression this test pins).
@@ -190,7 +193,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("scd2History's three window passes share one user-keyed exchange") {
-    val p = plan(graft.operators.Warehouse.scd2History(spark, Sf))
+    val p = plan(q("scd2_history"))
     val shuffles = p.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
@@ -200,7 +203,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("snapshotDiff is a single aggregate: one shuffle, no join") {
-    val p = plan(graft.operators.Warehouse.snapshotDiff(spark, Sf))
+    val p = plan(q("snapshot_diff"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       p.collect { case j: CartesianProductExec => j }.isEmpty)
     val shuffles = p.collect {
@@ -216,7 +219,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("oovRate broadcasts the k-bounded vocabulary, never shuffles the token join") {
-    val p = plan(CorpusStats.oovRate(spark, Sf))
+    val p = plan(q("oov_rate"))
     val smjOnToken = p.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }
@@ -228,11 +231,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // span_dedup, containment_pairs, sem_dedup, inverted_index and
     // weighted_sample must stay pure equi-join/aggregate plans.
     for (df <- Seq[DataFrame](
-      Corpus.spanDedup(spark, Sf),
-      Corpus.weightedSample(spark, Sf),
+      q("span_dedup"),
+      q("weighted_sample"),
       Dedup.containmentPairs(spark, Sf),
-      Cluster.semDedup(spark, Sf),
-      CorpusStats.invertedIndex(spark, Sf))) {
+      q("sem_dedup"),
+      q("inverted_index"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
@@ -241,8 +244,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // bm25/gopher are allowed exactly the 1-row totals cross
     // (collocations' pattern); knnClassify the bounded query-set BNLJ.
     for (df <- Seq[DataFrame](
-      CorpusStats.bm25Search(spark, Sf),
-      Similarity.knnClassify(spark, Sf))) {
+      q("bm25_search"),
+      q("knn_classify"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1)
       assert(p.collect { case j: CartesianProductExec => j }.isEmpty)
@@ -250,7 +253,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("weighted sample plans a global top-k, never a full sort") {
-    val p = plan(Corpus.weightedSample(spark, Sf))
+    val p = plan(q("weighted_sample"))
     assert(p.collect {
       case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t
     }.nonEmpty, s"top-k by key must be TakeOrderedAndProject:\n$p")
@@ -263,7 +266,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // partial combine below it) and the token window re-shuffle that
     // df, cf and rank ALL share; a third would mean a window stopped
     // riding the shared partitioning.
-    val s = CorpusStats.invertedIndex(spark, Sf)
+    val s = q("inverted_index")
       .queryExecution.executedPlan.toString
     val hashShuffles = "Exchange hashpartitioning".r.findAllIn(s).length
     assert(hashShuffles == 2,
@@ -275,7 +278,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("bm25 filters the token explode to the query before any aggregation") {
     // the IN-list filter must sit directly on the explode output, so
     // only query-term rows ever reach the tf aggregate's shuffle.
-    val p = plan(CorpusStats.bm25Search(spark, Sf))
+    val p = plan(q("bm25_search"))
     val filtersOnGenerate = p.collect {
       case f: org.apache.spark.sql.execution.FilterExec
         if f.condition.toString.contains("spark") &&
@@ -289,11 +292,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-8 tranche: rankers keep partition-local top-k and bounded nested loops") {
     // ndcg/mrr: the only nested loop is the fixed query-set broadcast
     // (knnTopk's contract); ndcg's top-10 must stay WindowGroupLimit.
-    val ndcg = plan(Similarity.ndcgEval(spark, Sf))
+    val ndcg = plan(q("ndcg_eval"))
     assert(ndcg.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "ndcg top-10 must rewrite to WindowGroupLimit")
     assert(ndcg.collect { case j: CartesianProductExec => j }.isEmpty)
-    val mmr = plan(Similarity.mmrRerank(spark, Sf))
+    val mmr = plan(q("mmr_rerank"))
     assert(mmr.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "mmr pool cut must rewrite to WindowGroupLimit")
     assert(mmr.collect { case j: CartesianProductExec => j }.isEmpty)
@@ -303,17 +306,17 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // 1-row totals crosses allowed (collocations' pattern): keyness,
     // shrinkage. Everything else must stay equi-join shaped.
     for ((df, allowed) <- Seq(
-      (CorpusStats.termKeyness(spark, Sf), 1),
-      (CtrAlerts.ctrShrunk(spark, Sf), 1),
-      (Dedup.dupMatrix(spark, Sf), 0),
-      (graft.operators.Linkage.fuzzyMatch(spark, Sf), 0),
-      (graft.operators.Graph.graphDegrees(spark, Sf), 0),
-      (Similarity.mrrEval(spark, Sf), 0),
-      (CorpusStats.aucQuality(spark, Sf), 0),
-      (CorpusStats.corpusCard(spark, Sf), 0),
-      (CorpusStats.calibrationCurve(spark, Sf), 0),
-      (graft.operators.Behavior.cupedAdjust(spark, Sf), 0),
-      (EventAnalytics.seasonalProfile(spark, Sf), 0))) {
+      (q("term_keyness"), 1),
+      (q("ctr_shrunk"), 1),
+      (q("dup_matrix"), 0),
+      (q("fuzzy_match"), 0),
+      (q("graph_degrees"), 0),
+      (q("mrr_eval"), 0),
+      (q("auc_quality"), 0),
+      (q("corpus_card"), 0),
+      (q("calibration_curve"), 0),
+      (q("cuped_adjust"), 0),
+      (q("seasonal_profile"), 0))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= allowed,
         s"unexpected nested loop (allowed $allowed):\n$p")
@@ -323,8 +326,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("corpusCard and calibrationCurve are one aggregate over one scan") {
-    for (df <- Seq(CorpusStats.corpusCard(spark, Sf),
-      CorpusStats.calibrationCurve(spark, Sf))) {
+    for (df <- Seq(q("corpus_card"),
+      q("calibration_curve"))) {
       val p = plan(df)
       val scans = p.collect { case f: FileSourceScanExec => f }
       assert(scans.length == 1, s"every per-doc measure must ride ONE scan:\n$p")
@@ -337,22 +340,22 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("round-8 second tranche: bounded crosses only, equijoins everywhere else") {
     for ((df, allowed) <- Seq(
-      (graft.operators.EventAnalytics.topPaths(spark, Sf), 0),
-      (graft.operators.EventAnalytics.targetEncode(spark, Sf), 1),  // 1-row μ
-      (graft.operators.EventAnalytics.seasonalOutliers(spark, Sf), 0),
-      (graft.operators.EventAnalytics.changeContrib(spark, Sf), 1), // 1-row rd
-      (graft.operators.EventAnalytics.giniConcentration(spark, Sf), 0),
-      (graft.operators.EventAnalytics.categoryCollapse(spark, Sf), 0),
-      (graft.operators.Corpus.mixturePlan(spark, Sf), 0),
-      (graft.operators.Corpus.tokenLenHistogram(spark, Sf), 0),
-      (Dedup.dupMatrix(spark, Sf), 0),
-      (Dedup.dedupRateBySource(spark, Sf), 0),
-      (CorpusStats.vocabOverlap(spark, Sf), 0),
-      (CorpusStats.termKeyness(spark, Sf), 1),                      // 1-row totals
-      (Similarity.embeddingNormStats(spark, Sf), 0),
-      (graft.operators.Robust.robustScaler(spark, Sf), 0),
-      (graft.operators.Report.shipLagPercentiles(spark, Sf), 0),
-      (CtrAlerts.hllRollup(spark, Sf), 0))) {
+      (q("top_paths"), 0),
+      (q("target_encode"), 1),  // 1-row μ
+      (q("seasonal_outliers"), 0),
+      (q("change_contrib"), 1), // 1-row rd
+      (q("gini_concentration"), 0),
+      (q("category_collapse"), 0),
+      (q("mixture_plan"), 0),
+      (q("token_len_histogram"), 0),
+      (q("dup_matrix"), 0),
+      (q("dedup_rate_by_source"), 0),
+      (q("vocab_overlap"), 0),
+      (q("term_keyness"), 1),                      // 1-row totals
+      (q("embedding_norm_stats"), 0),
+      (q("robust_scaler"), 0),
+      (q("ship_lag_percentiles"), 0),
+      (q("hll_rollup"), 0))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= allowed,
         s"unexpected nested loop (allowed $allowed):\n$p")
@@ -382,7 +385,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(lp.collect { case j: BroadcastNestedLoopJoinExec => j }.length == 1)
     assert(lp.collect { case w: WindowGroupLimitExec => w }.nonEmpty)
     // above the boundary nothing may grow a nested loop
-    val ln = plan(Similarity.labelNoise(spark, Sf))
+    val ln = plan(q("label_noise"))
     assert(ln.collect { case j: CartesianProductExec => j }.isEmpty)
   }
 
@@ -390,16 +393,16 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // funnelSteps and itemAffinity are each allowed exactly one BNLJ:
     // the cross with a 1-row totals frame (collocations' pattern).
     for (df <- Seq[DataFrame](
-      graft.operators.Behavior.funnelSteps(spark, Sf),
-      graft.operators.Behavior.itemAffinity(spark, Sf))) {
+      q("funnel_steps"),
+      q("item_affinity"))) {
       val pf = plan(df)
       assert(pf.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1)
       assert(pf.collect { case j: CartesianProductExec => j }.isEmpty)
     }
     for (df <- Seq[DataFrame](
-      graft.operators.Behavior.cohortRetention(spark, Sf),
-      graft.operators.Robust.madOutliers(spark, Sf),
-      graft.operators.Corpus.boilerplateStats(spark, Sf))) {
+      q("cohort_retention"),
+      q("mad_outliers"),
+      q("boilerplate_stats"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
@@ -410,8 +413,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // ngram_diversity is scans + one aggregate; centroid_outliers is
     // label-equijoined throughout: neither may plan a cross shape.
     for (df <- Seq[DataFrame](
-      CorpusStats.distinctNgramDiversity(spark, Sf),
-      Cluster.centroidOutliers(spark, Sf))) {
+      q("ngram_diversity"),
+      q("centroid_outliers"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
@@ -419,14 +422,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // quantile_normalize: exactly the 1-row percentile-grid cross; the
     // rank windows key on source, never a global order.
-    val qn = plan(CorpusStats.quantileNormalize(spark, Sf))
+    val qn = plan(q("quantile_normalize"))
     assert(qn.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1)
     assert(qn.collect { case j: CartesianProductExec => j }.isEmpty)
     // negative_samples: the user x catalog expansion is the one
     // catalog-bounded cross; the per-user top-k must stay
     // partition-local (WindowGroupLimit), so only k rows per user
     // reach the final exchange.
-    val ns = plan(Behavior.negativeSamples(spark, Sf))
+    val ns = plan(q("negative_samples"))
     assert(ns.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"only the bounded catalog cross is allowed:\n$ns")
     assert(ns.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
@@ -436,7 +439,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-10 approx twins: exact-mode shuffles absent from the sketch plans") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    def viaRegistry(name: String): DataFrame = SparkEntry.queries(name)(spark, Sf)
     // Exchanges are inserted by EnsureRequirements, so they exist only
     // in executedPlan; AQE off so the tree isn't an adaptive leaf.
     def exchanges(df: => DataFrame): Int = {
@@ -456,28 +458,28 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // dup_matrix_approx: the exact path's per-gram equi-self-join is
     // gone — no shuffled join anywhere; sketch pairing is hll_union
     // over a broadcast cross of the |sources|-row frame.
-    val dm = plan(viaRegistry("dup_matrix_approx"))
+    val dm = plan(q("dup_matrix_approx"))
     assert(dm.collect { case j: SortMergeJoinExec => j }.isEmpty &&
       dm.collect { case j: ShuffledHashJoinExec => j }.isEmpty,
       s"sketch dup matrix must not shuffle-join grams:\n$dm")
     assert(dm.toString.contains("hll_union"))
-    assert(exchanges(viaRegistry("dup_matrix_approx")) <
-      exchanges(Dedup.dupMatrix(spark, Sf)),
+    assert(exchanges(q("dup_matrix_approx")) <
+      exchanges(q("dup_matrix")),
       "sketch path must shuffle less than the per-gram self-join")
     // ngram_diversity_approx: HLL distinct folds in ONE aggregate pass
     // — the exact twin's second gram shuffle (distinct rewrite) is gone.
-    val nd = plan(viaRegistry("ngram_diversity_approx"))
+    val nd = plan(q("ngram_diversity_approx"))
     assert(nd.toString.contains("approx_count_distinct"))
-    assert(exchanges(viaRegistry("ngram_diversity_approx")) <
-      exchanges(CorpusStats.distinctNgramDiversity(spark, Sf)),
+    assert(exchanges(q("ngram_diversity_approx")) <
+      exchanges(q("ngram_diversity")),
       "HLL distinct must not re-shuffle the gram stream")
     // quantile_normalize_approx: same join/exchange SHAPE (the swap is
     // aggregation state, full buffer -> mergeable sketch), grid via
     // approx_percentile.
-    val qn = plan(viaRegistry("quantile_normalize_approx"))
+    val qn = plan(q("quantile_normalize_approx"))
     assert(qn.toString.contains("approx_percentile"))
-    assert(exchanges(viaRegistry("quantile_normalize_approx")) <=
-      exchanges(CorpusStats.quantileNormalize(spark, Sf)))
+    assert(exchanges(q("quantile_normalize_approx")) <=
+      exchanges(q("quantile_normalize")))
     // ADVICE r17: the ENSURE_REQUIREMENTS filter above would hide a
     // regression that smuggles EXPLICIT repartition/rebalance shuffles
     // into these plans — bound those separately (ngram_diversity_approx
@@ -493,36 +495,36 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
             .ENSURE_REQUIREMENTS => e }.length
       finally spark.conf.set(k, prev)
     }
-    assert(explicitExchanges(viaRegistry("dup_matrix_approx")) == 0 &&
-      explicitExchanges(Dedup.dupMatrix(spark, Sf)) == 0,
+    assert(explicitExchanges(q("dup_matrix_approx")) == 0 &&
+      explicitExchanges(q("dup_matrix")) == 0,
       "dup_matrix family must carry no explicit repartition")
-    assert(explicitExchanges(viaRegistry("ngram_diversity_approx")) <= 1 &&
-      explicitExchanges(CorpusStats.distinctNgramDiversity(spark, Sf)) <= 1,
+    assert(explicitExchanges(q("ngram_diversity_approx")) <= 1 &&
+      explicitExchanges(q("ngram_diversity")) <= 1,
       "ngram_diversity family: at most the one spreadInput repartition")
   }
 
   test("round-8 final tranche: only 1-row bounds broadcasts cross, everything else equijoins") {
     // (query, allowed 1-row-broadcast crosses by construction)
     val bounded = Seq[(DataFrame, Int, String)](
-      (Behavior.churnLifetable(spark, Sf), 1, "report-date frame"),
+      (q("churn_lifetable"), 1, "report-date frame"),
       // the report-date cross replans once per branch (tagged feeds
       // the train-user set AND the per-user aggregate; no cross-branch
       // CSE in Catalyst) — both instances are the same 1-row frame
-      (EventAnalytics.temporalSplit(spark, Sf), 2, "report-date frame x2 branches"),
+      (q("temporal_split"), 2, "report-date frame x2 branches"),
       // same branch-replan: the dense grid feeds num AND den
-      (EventAnalytics.acfDaily(spark, Sf), 2, "calendar-bounds frame x2 branches"),
-      (Warehouse.zonemapAudit(spark, Sf), 1, "zone-bounds frame"),
-      (HeavyHitters.countMinErr(spark, Sf), 1, "1-row sketch-cell frame"),
-      (Dedup.dedupCascade(spark, Sf), 2, "two 1-row count frames"),
-      (Graph.linkPredict(spark, Sf), 0, "equijoins only"),
-      (Warehouse.incrementalRollup(spark, Sf), 0, "filtered aggregates only"),
-      (Behavior.funnelWindowed(spark, Sf), 0, "user-keyed equijoins only"),
-      (Similarity.matryoshkaEnergy(spark, Sf), 0, "map-only"),
-      (Similarity.hybridSearch(spark, Sf), 2,
+      (q("acf_daily"), 2, "calendar-bounds frame x2 branches"),
+      (q("zonemap_audit"), 1, "zone-bounds frame"),
+      (q("countmin_err"), 1, "1-row sketch-cell frame"),
+      (q("dedup_cascade"), 2, "two 1-row count frames"),
+      (q("link_predict"), 0, "equijoins only"),
+      (q("incremental_rollup"), 0, "filtered aggregates only"),
+      (q("funnel_windowed"), 0, "user-keyed equijoins only"),
+      (q("matryoshka_energy"), 0, "map-only"),
+      (q("hybrid_search"), 2,
         "bm25's 1-row totals frame + the dense leg's 1-row query vector"),
-      (Similarity.semDecontaminate(spark, Sf), 1,
+      (q("sem_decontaminate"), 1,
         "rows x the constant broadcast bench set (knnTopk's bounded family)"),
-      (Corpus.dsirWeights(spark, Sf), 1, "1-row token-totals frame"))
+      (q("dsir_weights"), 1, "1-row token-totals frame"))
     for ((df, allowed, why) <- bounded) {
       val p = plan(df)
       val crosses =
@@ -533,7 +535,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // matryoshka is a pure projection: the scan must prune to the
     // embedding column alone
-    val me = plan(Similarity.matryoshkaEnergy(spark, Sf))
+    val me = plan(q("matryoshka_energy"))
     val scans = me.collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty &&
       scans.forall(_.requiredSchema.fieldNames.toSeq == Seq("embedding")),
@@ -543,7 +545,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   // ── round-9 tranche ──────────────────────────────────────────────
 
   test("exactSubstringSpans: no quadratic join, hot-key-proof gram stats, bounded shuffles") {
-    val p = plan(Dedup.exactSubstringSpans(spark, Sf))
+    val p = plan(q("substr_dup_spans"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       p.collect { case j: CartesianProductExec => j }.isEmpty,
       s"exact-substring must stay gram-keyed, never all-pairs:\n$p")
@@ -581,24 +583,24 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("hits/lpa: iteration joins stay equijoins; only hits' 1-row renorm totals cross") {
-    val ph = plan(Graph.hits(spark, Sf))
+    val ph = plan(q("hits"))
     // 2 iterations × 2 half-steps, each renormalizing via a 1-row
     // totals broadcast — 4 bounded crosses, nothing else
     assert(ph.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 4,
       s"only the four 1-row renorm totals may cross:\n$ph")
     assert(ph.collect { case j: CartesianProductExec => j }.isEmpty)
-    val pl = plan(Graph.lpaCommunities(spark, Sf))
+    val pl = plan(q("lpa_communities"))
     assert(pl.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pl.collect { case j: CartesianProductExec => j }.isEmpty,
       s"LPA is equijoin-only:\n$pl")
   }
 
   test("markup/mojibake cleaners: map-side passes over pruned scans") {
-    val pm = plan(TextAnalysis.stripMarkup(spark, Sf))
+    val pm = plan(q("strip_markup"))
     val scansM = pm.collect { case s: FileSourceScanExec => s }
     assert(scansM.map(_.requiredSchema.fieldNames.toSet) ==
       Seq(Set("doc_id", "text")), s"doc_id+text-only scan:\n$pm")
-    val pj = plan(TextAnalysis.mojibakeStats(spark, Sf))
+    val pj = plan(q("mojibake_stats"))
     val scansJ = pj.collect { case s: FileSourceScanExec => s }
     assert(scansJ.map(_.requiredSchema.fieldNames.toSet) ==
       Seq(Set("doc_id", "source", "text")), s"three-column scan:\n$pj")
@@ -610,7 +612,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("lshRecallSampled: sample filter reaches both sides, only the 1-row count join crosses") {
-    val p = plan(Dedup.lshRecallSampled(spark, Sf))
+    val p = plan(q("lsh_recall_sampled"))
     // the audit's only cross is n_exact × n_lsh — two 1-row aggregates
     val crosses = p.collect { case j: BroadcastNestedLoopJoinExec => j }.length +
       p.collect { case j: CartesianProductExec => j }.length
@@ -626,34 +628,34 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-10 tranche: graph/audit/drift plans stay equijoin + bounded-cross only") {
     // kcore & assortativity: equijoins on the bounded edge frame; the
     // assortativity moment fold may cross its 1-row aggregates only
-    val pk = plan(Graph.kcore(spark, Sf))
+    val pk = plan(q("kcore"))
     assert(pk.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pk.collect { case j: CartesianProductExec => j }.isEmpty,
       s"kcore peels with equijoins only:\n$pk")
-    val pa = plan(Graph.degreeAssortativity(spark, Sf))
+    val pa = plan(q("degree_assortativity"))
     assert(pa.collect { case j: CartesianProductExec => j }.isEmpty &&
       pa.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 2,
       s"only the two 1-row moment/count frames may cross:\n$pa")
     // lsh_precision inherits the recall audit's shape: one 1-row cross
-    val pp = plan(Dedup.lshPrecision(spark, Sf))
+    val pp = plan(q("lsh_precision"))
     val crosses = pp.collect { case j: BroadcastNestedLoopJoinExec => j }.length +
       pp.collect { case j: CartesianProductExec => j }.length
     assert(crosses <= 1, s"only the 1-row×1-row count join may cross:\n$pp")
     // schema_drift: the min-day broadcast is the only cross; the four
     // per-column sides reshape bounded frames
-    val pd = plan(Warehouse.schemaDrift(spark, Sf))
+    val pd = plan(q("schema_drift"))
     assert(pd.collect { case j: CartesianProductExec => j }.isEmpty &&
       pd.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"only the 1-row split-day broadcast may cross:\n$pd")
     // burstiness: one fact-sized shuffle (the (type, day) partial
     // aggregate) before the bounded per-type fold
-    val pb = plan(EventAnalytics.burstiness(spark, Sf))
+    val pb = plan(q("burstiness"))
     assert(pb.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pb.collect { case j: CartesianProductExec => j }.isEmpty, s"map-only:\n$pb")
   }
 
   test("silhouette broadcasts k centroids and never shuffles raw vectors on a join key") {
-    val p = plan(Cluster.silhouette(spark, Sf))
+    val p = plan(q("silhouette"))
     // the centroid scoring pass is rows × a k-row broadcast — the same
     // bounded nested-loop as the kmeans assignment (2 passes: the
     // final ranking + the inner assignment that built the centroids)
@@ -663,27 +665,27 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("mini-tranche: clustering/hhi/coverage stay equijoin-only with pruned scans") {
-    val pc = plan(Graph.clusteringCoeff(spark, Sf))
+    val pc = plan(q("clustering_coeff"))
     assert(pc.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pc.collect { case j: CartesianProductExec => j }.isEmpty,
       s"wedge/closure/degree joins are all equijoins:\n$pc")
-    val ph = plan(CorpusStats.langHhi(spark, Sf))
+    val ph = plan(q("lang_hhi"))
     val scansH = ph.collect { case s: FileSourceScanExec => s }
     assert(scansH.map(_.requiredSchema.fieldNames.toSet) ==
       Seq(Set("source", "lang")), s"two-column scan:\n$ph")
     // coverage: the vocab frame materializes once; only the 1-row
     // totals and the |ks|-row probe frame may cross
-    val pv = plan(CorpusStats.coverageCurve(spark, Sf))
+    val pv = plan(q("coverage_curve"))
     assert(pv.collect { case j: CartesianProductExec => j }.isEmpty &&
       pv.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"only the 1-row totals broadcast may cross:\n$pv")
   }
 
   test("interarrival/centroid-separation: one type-keyed window; only the k-row cross") {
-    val pi = plan(EventAnalytics.interarrivalPercentiles(spark, Sf))
+    val pi = plan(q("interarrival_percentiles"))
     assert(pi.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pi.collect { case j: CartesianProductExec => j }.isEmpty, s"map+window only:\n$pi")
-    val ps = plan(Cluster.centroidSeparation(spark, Sf))
+    val ps = plan(q("centroid_separation"))
     // the pair cross is k rows × k rows (bounded by construction);
     // building the centroids costs one more bounded assignment BNLJ
     assert(ps.collect { case j: CartesianProductExec => j }.isEmpty &&
@@ -692,7 +694,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("curriculumOrder ranks on ONE bucket-partitioned window over the narrow triple") {
-    val p = plan(Corpus.curriculumOrder(spark, Sf))
+    val p = plan(q("curriculum_order"))
     // The doc scan (doc_id+text pruning) lives inside the helper's
     // one-time localCheckpoint materialization; the final plan reads
     // the narrow (doc_id, quality, tie) triples from that
@@ -717,9 +719,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // benford/join-size/corr/burst-style aggregates: map-combinable
     // folds, no cross of any kind.
     for (df <- Seq[DataFrame](
-      Warehouse.benfordAudit(spark, Sf),
-      Warehouse.joinSizeEstimate(spark, Sf),
-      graft.operators.Robust.corrMatrix(spark, Sf))) {
+      q("benford_audit"),
+      q("join_size_estimate"),
+      q("corr_matrix"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
@@ -728,12 +730,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // cramers_v margins cross is bounded (types x 7 + the 1-row n);
     // modularity combines four 1-row/bounded frames.
     for ((df, maxCross) <- Seq(
-      (Behavior.cramersV(spark, Sf), 3),
-      (Graph.modularity(spark, Sf), 3),
+      (q("cramers_v"), 3),
+      (q("modularity"), 3),
       // the life table's 1-row report-date broadcast
-      (Behavior.nelsonAalen(spark, Sf), 1),
-      (EventAnalytics.conformalInterval(spark, Sf), 0),
-      (CorpusStats.bestSplit(spark, Sf), 0))) {
+      (q("nelson_aalen"), 1),
+      (q("conformal_interval"), 0),
+      (q("best_split"), 0))) {
       val p = plan(df)
       assert(p.collect { case j: CartesianProductExec => j }.isEmpty,
         s"no cartesian product:\n$p")
@@ -743,7 +745,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("corrMatrix scans the three measure columns once, nothing else") {
-    val p = plan(graft.operators.Robust.corrMatrix(spark, Sf))
+    val p = plan(q("corr_matrix"))
     val scans = p.collect { case s: FileSourceScanExec => s }
     assert(scans.map(_.requiredSchema.fieldNames.toSet) ==
       Seq(Set("l_quantity", "l_extendedprice", "l_discount")),
@@ -751,7 +753,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("cdcChunks: the lag window and the chunk regroup share one doc-keyed exchange") {
-    val df = Corpus.cdcChunks(spark, Sf)
+    val df = q("cdc_chunks")
     val p = df.queryExecution.executedPlan
     val exchanges = p.toString.split("\n").count(_.contains("Exchange hashpartitioning"))
     // doc-keyed window+regroup share one exchange; the source rollup
@@ -763,7 +765,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("khopReach frontier hops stay equijoin + left-anti, no all-pairs") {
-    val p = plan(Graph.khopReach(spark, Sf))
+    val p = plan(q("khop_reach"))
     assert(p.collect { case j: CartesianProductExec => j }.isEmpty,
       s"no cartesian:\n$p")
     // per-hop 1-row reached-count frames ride broadcasts; the only
@@ -775,9 +777,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-10 third wave: drift/skyline/audit plans are join-free or bounded") {
     // Pure map+window+aggregate pipelines: no join of any kind.
     for (df <- Seq[DataFrame](
-      graft.operators.Robust.ksTest(spark, Sf),
-      graft.operators.Robust.rollingCorr(spark, Sf),
-      EventAnalytics.disorderAudit(spark, Sf))) {
+      q("ks_test"),
+      q("rolling_corr"),
+      q("disorder_audit"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
@@ -786,7 +788,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // pareto: the bounded score-grid frame broadcasts back as an
     // EQUIJOIN on q4; the fact side must never window (the O(n^2)
     // UnboundedFollowing frame the x100 rehearsal caught).
-    val pf = plan(CorpusStats.paretoFrontier(spark, Sf))
+    val pf = plan(q("pareto_frontier"))
     assert(pf.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       pf.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(pf.collect {
@@ -794,7 +796,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }.length == 1, s"one window, on the bounded grid frame only:\n$pf")
     // cluster_topics: the kmeans assignment's bounded vec x centroid
     // crosses (2 iterations) + the 1-row totals cross.
-    val ct = plan(Cluster.clusterTopics(spark, Sf))
+    val ct = plan(q("cluster_topics"))
     assert(ct.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(ct.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 3,
       s"only the bounded kmeans/totals crosses:\n$ct")
@@ -802,20 +804,20 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("round-10 fourth wave: economics/audit/eval plans bounded as designed") {
     for (df <- Seq[DataFrame](
-      Warehouse.contractAudit(spark, Sf),
-      EventAnalytics.forecastBacktest(spark, Sf),
-      TextAnalysis.scriptMix(spark, Sf))) {
+      q("contract_audit"),
+      q("forecast_backtest"),
+      q("script_mix"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
         s"single-scan aggregate pipeline:\n$p")
     }
     // cohort_ltv: sizes broadcast is an EQUIJOIN on cohort_day.
-    val cl = plan(Behavior.cohortLtv(spark, Sf))
+    val cl = plan(q("cohort_ltv"))
     assert(cl.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       cl.collect { case j: CartesianProductExec => j }.isEmpty)
     // rich_club: three per-k pairs of 1-row count crosses.
-    val rc = plan(Graph.richClub(spark, Sf))
+    val rc = plan(q("rich_club"))
     assert(rc.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(rc.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 3,
       s"only the per-k 1-row count crosses:\n$rc")
@@ -824,23 +826,23 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-10 fifth wave: rec/cadence/sweep/curve plans bounded as designed") {
     // Join-free map+window+aggregate pipelines.
     for (df <- Seq[DataFrame](
-      EventAnalytics.returnTime(spark, Sf),
-      EventAnalytics.peakConcurrency(spark, Sf),
-      EventAnalytics.binarySegmentation(spark, Sf),
-      Behavior.lorenzCurve(spark, Sf))) {
+      q("return_time"),
+      q("peak_concurrency"),
+      q("binary_segmentation"),
+      q("lorenz_curve"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
         s"no join of any kind:\n$p")
     }
     // item_cosine: user-keyed equijoins only (the affinity shape).
-    val ic = plan(Behavior.itemCosine(spark, Sf))
+    val ic = plan(q("item_cosine"))
     assert(ic.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       ic.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(ic.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "rank <= k must rewrite to WindowGroupLimit")
     // heaps_curve: the 1-row bounds + 10-row threshold crosses only.
-    val hc = plan(CorpusStats.heapsCurve(spark, Sf))
+    val hc = plan(q("heaps_curve"))
     assert(hc.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(hc.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 2,
       s"only the bounds/threshold crosses:\n$hc")
@@ -849,20 +851,20 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("round-10 sixth wave: backtests and sweeps stay bounded") {
     // One-pass sweeps and the KS-style folds: no joins at all.
     for (df <- Seq[DataFrame](
-      EventAnalytics.sessionSweep(spark, Sf),
-      EventAnalytics.watermarkLoss(spark, Sf))) {
+      q("session_sweep"),
+      q("watermark_loss"))) {
       val p = plan(df)
       assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
         p.collect { case j: CartesianProductExec => j }.isEmpty,
         s"one window pass + fold only:\n$p")
     }
     // markov: |types|-row rule broadcast + 1-row baseline cross.
-    val ma = plan(Behavior.markovAccuracy(spark, Sf))
+    val ma = plan(q("markov_accuracy"))
     assert(ma.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(ma.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"only the 1-row global-top cross:\n$ma")
     // quantize_recall: two knn-shaped bounded query broadcasts.
-    val qr = plan(Similarity.quantizeRecall(spark, Sf))
+    val qr = plan(q("quantize_recall"))
     assert(qr.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(qr.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 2,
       s"one bounded query BNLJ per side:\n$qr")
@@ -870,7 +872,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("dupInflation: two aggregates, join- and window-free, text never shuffled") {
-    val p = plan(Dedup.dupInflation(spark, Sf))
+    val p = plan(q("dup_inflation"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       p.collect { case j: CartesianProductExec => j }.isEmpty &&
       p.collect {
@@ -887,7 +889,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bandingSweep: pair mass is counted, never enumerated — no join, one sig pass") {
-    val p = plan(Dedup.bandingSweep(spark, Sf))
+    val p = plan(q("banding_sweep"))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       p.collect { case j: CartesianProductExec => j }.isEmpty &&
       p.collect {
@@ -904,48 +906,48 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("round-12 tranche: stats plans are one fact aggregate + bounded-frame arithmetic") {
     // anova_f: ONE fact aggregate on (type, arm); no join at all.
-    val af = plan(Behavior.anovaF(spark, Sf))
+    val af = plan(q("anova_f"))
     assert(af.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       af.collect { case j: CartesianProductExec => j }.isEmpty,
       s"anova_f joins nothing:\n$af")
     // chi2_residuals: the margins are windows over the bounded cell
     // frame, like the parent contingency query — no join, no cross.
-    val cr = plan(Behavior.chi2Residuals(spark, Sf))
+    val cr = plan(q("chi2_residuals"))
     assert(cr.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       cr.collect { case j: CartesianProductExec => j }.isEmpty,
       s"chi2_residuals joins nothing:\n$cr")
     // cohen_kappa: every join (marginals full-outer, totals) rides
     // the bounded ≤ sources·langs² cell frame behind the checkpoint —
     // nothing fact-sized crosses.
-    val ck = plan(graft.operators.TextAnalysis.cohenKappa(spark, Sf))
+    val ck = plan(q("cohen_kappa"))
     assert(ck.collect { case j: CartesianProductExec => j }.isEmpty,
       s"cohen_kappa must not cross:\n$ck")
     // l_diversity / user_growth: aggregate-only (user_growth's one
     // join is the bounded daily-frame left join).
-    val ld = plan(Warehouse.lDiversity(spark, Sf))
+    val ld = plan(q("l_diversity"))
     assert(ld.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       ld.collect { case j: CartesianProductExec => j }.isEmpty,
       s"l_diversity joins nothing:\n$ld")
-    val ug = plan(Behavior.userGrowth(spark, Sf))
+    val ug = plan(q("user_growth"))
     assert(ug.collect { case j: CartesianProductExec => j }.isEmpty,
       s"user_growth must not cross:\n$ug")
     // margin_mining: the deliberate exact bipartite — exactly ONE
     // nested loop (the broadcast A×B score join), documented as the
     // verification contract; everything downstream is windows +
     // equijoins over the materialized score frame.
-    val mm = plan(Similarity.marginMining(spark, Sf))
+    val mm = plan(q("margin_mining"))
     assert(mm.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1 &&
       mm.collect { case j: CartesianProductExec => j }.isEmpty,
       s"margin_mining: one bipartite nested loop only:\n$mm")
     // apriori_triples: user-keyed equijoins + pair semi-joins only.
-    val at = plan(Behavior.aprioriTriples(spark, Sf))
+    val at = plan(q("apriori_triples"))
     assert(at.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       at.collect { case j: CartesianProductExec => j }.isEmpty,
       s"apriori_triples: equijoin/semi-join only:\n$at")
     // kcenter_select: the FINAL round's plan holds at most one 1-row
     // center broadcast (earlier rounds already materialized behind
     // their checkpoints); never a cartesian.
-    val kc = plan(graft.operators.Cluster.kCenterSelect(spark, Sf))
+    val kc = plan(q("kcenter_select"))
     assert(kc.collect { case j: CartesianProductExec => j }.isEmpty &&
       kc.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"kcenter_select: only the 1-row center broadcast crosses:\n$kc")
@@ -953,17 +955,17 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // aggregate each; only brier's 1-row totals broadcast crosses,
     // and qini's windows ride the bounded decile frame + __bkt.
     for ((name, df, maxBnlj) <- Seq(
-      ("did_readout", Behavior.didReadout(spark, Sf), 0),
-      ("qini_curve", Behavior.qiniCurve(spark, Sf), 0),
+      ("did_readout", q("did_readout"), 0),
+      ("qini_curve", q("qini_curve"), 0),
       ("brier_decomposition",
-        graft.operators.CorpusStats.brierDecomposition(spark, Sf), 1))) {
+        q("brier_decomposition"), 1))) {
       val p = plan(df)
       assert(p.collect { case j: CartesianProductExec => j }.isEmpty &&
         p.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= maxBnlj,
         s"$name bounded as designed:\n$p")
     }
     import org.apache.spark.sql.execution.window.WindowExec
-    val qn = plan(Behavior.qiniCurve(spark, Sf))
+    val qn = plan(q("qini_curve"))
     assert(qn.collect { case w: WindowExec => w }
       .forall(w => w.partitionSpec.nonEmpty ||
         w.child.toString.contains("decile")),
@@ -974,19 +976,19 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     // merge_upsert: ONE conditional-struct-max aggregate — no join of
     // any kind (the naive MERGE would full-outer-join two scans).
-    val mu = plan(Warehouse.mergeUpsert(spark, Sf))
+    val mu = plan(q("merge_upsert"))
     assert(mu.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       mu.collect { case j: CartesianProductExec => j }.isEmpty &&
       mu.collect { case j: SortMergeJoinExec => j }.isEmpty,
       s"one-aggregate MERGE:\n$mu")
     // mannwhitney: value-grid windows + bounded fold, join-free.
-    val mw = plan(graft.operators.Robust.mannWhitney(spark, Sf))
+    val mw = plan(q("mannwhitney_test"))
     assert(mw.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       mw.collect { case j: CartesianProductExec => j }.isEmpty,
       s"grid windows only:\n$mw")
     // spearman: rank frames re-enter as equijoins, nothing all-pairs,
     // and no single-partition window (the two-phase prefix sum).
-    val sm = plan(graft.operators.Robust.spearmanMatrix(spark, Sf))
+    val sm = plan(q("spearman_matrix"))
     assert(sm.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       sm.collect { case j: CartesianProductExec => j }.isEmpty,
       s"equijoin rank frames only:\n$sm")
@@ -996,7 +998,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"grid cumsums must ride the __bkt decomposition:\n$sm")
     // rp_recall: the two bounded 8-query BNLJs, rank pruned
     // partition-locally.
-    val rp = plan(Similarity.rpRecall(spark, Sf))
+    val rp = plan(q("rp_recall"))
     assert(rp.collect { case j: CartesianProductExec => j }.isEmpty)
     assert(rp.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 2,
       s"one bounded query BNLJ per space:\n$rp")
@@ -1004,13 +1006,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // linear_attribution: purchases ⋈ clicks is a user EQUIJOIN (the
     // range predicate rides it as a filter, never a cross), share
     // windows partition by purchase id.
-    val la = plan(Behavior.linearAttribution(spark, Sf))
+    val la = plan(q("linear_attribution"))
     assert(la.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       la.collect { case j: CartesianProductExec => j }.isEmpty,
       s"user-keyed equijoin only:\n$la")
     // seasonal_decompose: one fact aggregate, everything after rides
     // the bounded daily frame (windows + one bounded equijoin).
-    val sd = plan(EventAnalytics.seasonalDecompose(spark, Sf))
+    val sd = plan(q("seasonal_decompose"))
     assert(sd.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       sd.collect { case j: CartesianProductExec => j }.isEmpty,
       s"bounded-frame decomposition:\n$sd")
@@ -1048,7 +1050,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // Global rank / running sum (round-10 verdict's three global
     // windows): every window partitions by the range bucket — ZERO
     // empty-partitionSpec windows on the fact/user-scale side.
-    val co = plan(Corpus.curriculumOrder(spark, Sf))
+    val co = plan(q("curriculum_order"))
     assert(windows(co).forall(_.partitionSpec.nonEmpty),
       s"curriculum_order must have no single-partition window:\n$co")
     // r18: the rank window is gone entirely (partition-local sort +
@@ -1057,7 +1059,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       case s: org.apache.spark.sql.execution.SortExec if !s.global => s
     }.nonEmpty, s"rank must ride a partition-local sort:\n$co")
 
-    val pc = plan(EventAnalytics.peakConcurrency(spark, Sf))
+    val pc = plan(q("peak_concurrency"))
     assert(windows(pc).forall(_.partitionSpec.nonEmpty),
       s"peak_concurrency sweep must have no single-partition window:\n$pc")
     assert(windows(pc).exists(_.partitionSpec.exists(_.toString.contains("__bkt"))),
@@ -1066,7 +1068,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // lorenz: the user-scale rank is __bkt-partitioned; the only
     // global windows left (grand total + cumulative share) sit ABOVE
     // the 10-row decile aggregate — bounded by construction.
-    val lz = plan(Behavior.lorenzCurve(spark, Sf))
+    val lz = plan(q("lorenz_curve"))
     // r18: the user-scale rank is a partition-local sort (no window,
     // no re-shuffle); only the bounded decile-frame globals remain.
     assert(lz.collect {
@@ -1084,7 +1086,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // rfm_segments — ONE melted two-phase rank (r18: the three chained
     // axis ranks folded onto one range exchange); every window must
     // ride a __bkt partition (the user frame never single-tasks).
-    val rfm = plan(Behavior.rfmSegments(spark, Sf))
+    val rfm = plan(q("rfm_segments"))
     assert(windows(rfm).forall(_.partitionSpec.nonEmpty),
       s"rfm_segments must have no single-partition window:\n$rfm")
     // The melted rank rides the frozen bucketed checkpoint's
@@ -1096,7 +1098,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
     // coverage_curve — the vocabulary rank+cumsum share ONE frozen
     // range exchange; no global window over the type frame.
-    val cc = plan(graft.operators.CorpusStats.coverageCurve(spark, Sf))
+    val cc = plan(q("coverage_curve"))
     assert(windows(cc).forall(_.partitionSpec.nonEmpty),
       s"coverage_curve must have no single-partition window:\n$cc")
     assert(windows(cc).exists(_.partitionSpec.exists(_.toString.contains("__bkt"))),
@@ -1106,8 +1108,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // through (stratum, __bkt); any window WITHOUT __bkt must sit
     // above the bounded (stratum, __bkt) offsets aggregate.
     for ((name, df) <- Seq(
-      "stratified_sample" -> Corpus.stratifiedSample(spark, Sf),
-      "kfold_assign" -> Corpus.kfoldAssign(spark, Sf),
+      "stratified_sample" -> q("stratified_sample"),
+      "kfold_assign" -> q("kfold_assign"),
       "mix_sources" -> SparkEntry.queries("mix_sources")(spark, Sf))) {
       val p = plan(df)
       assert(windows(p).forall(_.partitionSpec.nonEmpty),
@@ -1126,9 +1128,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // partitioned WITHOUT __bkt must sit above the bounded
     // (type, __bkt) aggregate (the boundary-carry frame).
     for ((name, df) <- Seq(
-      "disorder_audit" -> EventAnalytics.disorderAudit(spark, Sf),
+      "disorder_audit" -> q("disorder_audit"),
       "interarrival_percentiles" ->
-        EventAnalytics.interarrivalPercentiles(spark, Sf))) {
+        q("interarrival_percentiles"))) {
       val p = plan(df)
       assert(windows(p).forall(_.partitionSpec.nonEmpty),
         s"$name: no single-partition window:\n$p")
@@ -1146,13 +1148,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // logrank: one user-keyed fact aggregate; the only crossing join
     // is the 1-row report_date broadcast; the global risk-set window
     // rides the bounded duration frame (post-aggregate child).
-    val lr = plan(graft.operators.Behavior.logrankTest(spark, Sf))
+    val lr = plan(q("logrank_test"))
     assert(lr.collect { case j: CartesianProductExec => j }.isEmpty &&
       lr.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"logrank: only the 1-row report_date broadcast crosses:\n$lr")
     // kendall: the grid self-join must be an EQUIJOIN on the pair key
     // (never a nested loop over the grid), and no window at all.
-    val km = plan(graft.operators.Robust.kendallMatrix(spark, Sf))
+    val km = plan(q("kendall_matrix"))
     assert(km.collect { case j: CartesianProductExec => j }.isEmpty &&
       km.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"kendall: grid self-join stays an equijoin:\n$km")
@@ -1160,7 +1162,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"kendall: concordance is pure aggregation, no windows:\n$km")
     // pr_auc: join-free; every window partitions by source and rides
     // the score-distinct frame (child aggregates on (source, score)).
-    val pa = plan(graft.operators.CorpusStats.prAuc(spark, Sf))
+    val pa = plan(q("pr_auc"))
     assert(pa.collect { case j: CartesianProductExec => j }.isEmpty &&
       pa.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"pr_auc joins nothing:\n$pa")
@@ -1174,7 +1176,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // quantile_sketch_err: ONE fact aggregate (exact + sketch legs in
     // the same group-by), then constant-size stack — no joins, no
     // windows anywhere.
-    val qs = plan(graft.operators.Report.quantileSketchErr(spark, Sf))
+    val qs = plan(q("quantile_sketch_err"))
     assert(qs.collect { case j: CartesianProductExec => j }.isEmpty &&
       qs.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       qs.collect { case w: WindowExec => w }.isEmpty,
@@ -1182,7 +1184,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // twap_concurrency: sessionize's per-user window, a ≤2× map-side
     // day explode, one day-keyed aggregate — join-free, every window
     // user-partitioned.
-    val tw = plan(graft.operators.EventAnalytics.twapConcurrency(spark, Sf))
+    val tw = plan(q("twap_concurrency"))
     assert(tw.collect { case j: CartesianProductExec => j }.isEmpty &&
       tw.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"twap joins nothing:\n$tw")
@@ -1192,7 +1194,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // stratified_ate: the decile rank rides the two-phase exchange
     // (__bkt) like qini; the only crossing join is the 1-row total
     // broadcast.
-    val sa = plan(graft.operators.Behavior.stratifiedAte(spark, Sf))
+    val sa = plan(q("stratified_ate"))
     assert(sa.collect { case j: CartesianProductExec => j }.isEmpty &&
       sa.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"stratified_ate: only the 1-row total broadcast crosses:\n$sa")
@@ -1208,8 +1210,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // vocabulary-bounded checkpointed frames — no nested loop, no
     // cartesian; the only window is undirectedEdges' per-user lag.
     for ((name, df) <- Seq(
-      "betweenness_sampled" -> graft.operators.Graph.betweennessSampled(spark, Sf),
-      "harmonic_centrality" -> graft.operators.Graph.harmonicCentrality(spark, Sf))) {
+      "betweenness_sampled" -> q("betweenness_sampled"),
+      "harmonic_centrality" -> q("harmonic_centrality"))) {
       val p = plan(df)
       assert(p.collect { case j: CartesianProductExec => j }.isEmpty &&
         p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
@@ -1222,7 +1224,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // crossings — the (types+1)-row variant knockout expansion and
     // the two 1-row base/total broadcasts; the absorption iteration
     // itself is equijoins on constant-size frames.
-    val ma = plan(graft.operators.Behavior.markovAttribution(spark, Sf))
+    val ma = plan(q("markov_attribution"))
     val crossings =
       ma.collect { case j: CartesianProductExec => j }.length +
         ma.collect { case j: BroadcastNestedLoopJoinExec => j }.length
@@ -1234,7 +1236,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.window.WindowExec
     // cliffs_delta: join-free, every window on the (type, value-grid)
     // frame is type-partitioned.
-    val cdp = plan(graft.operators.Robust.cliffsDelta(spark, Sf))
+    val cdp = plan(q("cliffs_delta"))
     assert(cdp.collect { case j: CartesianProductExec => j }.isEmpty &&
       cdp.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"cliffs_delta joins nothing:\n$cdp")
@@ -1243,14 +1245,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"cliffs_delta: no single-partition window:\n$cdp")
     // source_ablation: one scan + the 1-row global broadcast; no
     // windows at all.
-    val sab = plan(graft.operators.CorpusStats.sourceAblation(spark, Sf))
+    val sab = plan(q("source_ablation"))
     assert(sab.collect { case j: CartesianProductExec => j }.isEmpty &&
       sab.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"source_ablation: only the 1-row global broadcast crosses:\n$sab")
     assert(sab.collect { case w: WindowExec => w }.isEmpty,
       s"source_ablation is window-free:\n$sab")
     // decay_attribution: user-keyed equijoin, per-purchase windows.
-    val dat = plan(graft.operators.Behavior.decayAttribution(spark, Sf))
+    val dat = plan(q("decay_attribution"))
     assert(dat.collect { case j: CartesianProductExec => j }.isEmpty &&
       dat.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"decay_attribution: equijoin only:\n$dat")
@@ -1263,7 +1265,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // shapley: the coalition math crosses only the n-row channel
     // frame against the 2ⁿ-row v frame (twice: φ and touched); the
     // v(S∪c) lookup is an EQUIJOIN on umask = smask|bit.
-    val sh = plan(graft.operators.Behavior.shapleyAttribution(spark, Sf))
+    val sh = plan(q("shapley_attribution"))
     val shCross =
       sh.collect { case j: CartesianProductExec => j }.length +
         sh.collect { case j: BroadcastNestedLoopJoinExec => j }.length
@@ -1272,7 +1274,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // ktruss: every peel round is equijoins on the bounded edge
     // frame; the only window is undirectedEdges' per-user lag.
     import org.apache.spark.sql.execution.window.WindowExec
-    val kt = plan(graft.operators.Graph.ktruss(spark, Sf))
+    val kt = plan(q("ktruss"))
     assert(kt.collect { case j: CartesianProductExec => j }.isEmpty &&
       kt.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"ktruss: equijoins only:\n$kt")
@@ -1285,7 +1287,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.window.WindowExec
     // growth_accounting: one user-keyed dedup + lag/lead window;
     // only the 1-row max-day broadcast crosses.
-    val ga = plan(graft.operators.Behavior.growthAccounting(spark, Sf))
+    val ga = plan(q("growth_accounting"))
     assert(ga.collect { case j: CartesianProductExec => j }.isEmpty &&
       ga.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"growth_accounting: only the max-day broadcast crosses:\n$ga")
@@ -1295,7 +1297,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // ccnet_buckets: lm_quality's 1-row totals broadcast is the only
     // crossing; the cumulative windows ride the lang-partitioned
     // score GRID, never a document frame.
-    val cb = plan(graft.operators.CorpusStats.ccnetBuckets(spark, Sf))
+    val cb = plan(q("ccnet_buckets"))
     assert(cb.collect { case j: CartesianProductExec => j }.isEmpty &&
       cb.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"ccnet_buckets: only the grams-total broadcast crosses:\n$cb")
@@ -1304,7 +1306,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"ccnet_buckets: no single-partition window:\n$cb")
     // consistent_sample: two map-side filters, one semi-join, six
     // 1-row count broadcasts assembling the 3-row report.
-    val cs = plan(graft.operators.Warehouse.consistentSample(spark, Sf))
+    val cs = plan(q("consistent_sample"))
     assert(cs.collect { case j: CartesianProductExec => j }.isEmpty &&
       cs.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 6,
       s"consistent_sample: only 1-row count broadcasts cross:\n$cs")
@@ -1314,7 +1316,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.window.WindowExec
     // price_volume_mix: broadcast part dim (equijoin) + the 1-row
     // date-bounds broadcast; one fact aggregate, no windows.
-    val pv = plan(graft.operators.Warehouse.priceVolumeMix(spark, Sf))
+    val pv = plan(q("price_volume_mix"))
     assert(pv.collect { case j: CartesianProductExec => j }.isEmpty &&
       pv.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"price_volume_mix: only the 1-row bounds broadcast crosses:\n$pv")
@@ -1344,18 +1346,18 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // checkpointed profile subtree.
     // (the top-K TakeOrdered sits behind the profile frame's lazy
     // checkpoint leaf, so it is not visible in this plan tree)
-    val tv = plan(graft.operators.CorpusStats.sourceWordTvd(spark, Sf))
+    val tv = plan(q("source_word_tvd"))
     assert(tv.collect { case j: CartesianProductExec => j }.isEmpty &&
       tv.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"source_word_tvd: only the source-pair cross:\n$tv")
     // dim_profile: one map-side explode + aggregate — nothing else.
-    val dp = plan(graft.operators.Similarity.dimProfile(spark, Sf))
+    val dp = plan(q("dim_profile"))
     assert(dp.collect { case j: CartesianProductExec => j }.isEmpty &&
       dp.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       dp.collect { case w: WindowExec => w }.isEmpty,
       s"dim_profile is one exploded aggregate:\n$dp")
     // dormancy_spells: per-user lag + the 1-row total broadcast.
-    val ds = plan(graft.operators.Behavior.dormancySpells(spark, Sf))
+    val ds = plan(q("dormancy_spells"))
     assert(ds.collect { case j: CartesianProductExec => j }.isEmpty &&
       ds.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"dormancy_spells: only the 1-row total crosses:\n$ds")
@@ -1368,7 +1370,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.window.WindowExec
     // order_fill_rate: the line frame pre-aggregates to order grain,
     // then ONE orderkey equijoin — no crossings, no windows.
-    val fr = plan(graft.operators.Warehouse.orderFillRate(spark, Sf))
+    val fr = plan(q("order_fill_rate"))
     assert(fr.collect { case j: CartesianProductExec => j }.isEmpty &&
       fr.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty &&
       fr.collect { case w: WindowExec => w }.isEmpty,
@@ -1376,7 +1378,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // abc_classification: the part rank rides the two-phase exchange
     // (parts SCALE with the corpus in TPC-H) — every window __bkt-
     // partitioned, no crossings.
-    val abc = plan(graft.operators.Warehouse.abcClassification(spark, Sf))
+    val abc = plan(q("abc_classification"))
     assert(abc.collect { case j: CartesianProductExec => j }.isEmpty &&
       abc.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"abc: no crossings:\n$abc")
@@ -1395,25 +1397,25 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // fisher_price_index: two 1-row base-month crosses, the basket
     // join is a part-keyed equijoin.
-    val fp = plan(Warehouse.fisherPriceIndex(spark, Sf))
+    val fp = plan(q("fisher_price_index"))
     noCartesian("fisher", fp)
     assert(bnlj(fp).size <= 2, s"fisher: only the 1-row bounds cross:\n$fp")
     // order_reconcile: one line aggregate + ONE orderkey equijoin —
     // no crossings, no windows at all.
-    val or = plan(Warehouse.orderReconcile(spark, Sf))
+    val or = plan(q("order_reconcile"))
     noCartesian("order_reconcile", or)
     assert(bnlj(or).isEmpty &&
       or.collect { case w: WindowExec => w }.isEmpty,
       s"order_reconcile: equijoin only, window-free:\n$or")
     // hellinger: the term join is token-keyed; only the bounded
     // totals-scaffold crosses.
-    val hm = plan(CorpusStats.hellingerMatrix(spark, Sf))
+    val hm = plan(q("hellinger_matrix"))
     noCartesian("hellinger", hm)
     assert(bnlj(hm).size <= 1, s"hellinger: scaffold cross only:\n$hm")
     // zipf_slope: the within-source vocabulary rank rides the grouped
     // two-phase exchange — every window partitioned or __bkt-bucketed,
     // never a source-width single task.
-    val zs = plan(CorpusStats.zipfSlope(spark, Sf))
+    val zs = plan(q("zipf_slope"))
     noCartesian("zipf", zs)
     assert(zs.collect { case w: WindowExec => w }
       .forall(w => w.child.toString.contains("__bkt") ||
@@ -1421,8 +1423,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"zipf: the vocab rank rides __bkt:\n$zs")
     // holt/pinball: one 1-row bounds cross each (the day spine);
     // every window partitioned (bounded daily frames).
-    Seq("holt" -> plan(EventAnalytics.holtBacktest(spark, Sf)),
-      "pinball" -> plan(EventAnalytics.pinballLoss(spark, Sf))).foreach {
+    Seq("holt" -> plan(q("holt_backtest")),
+      "pinball" -> plan(q("pinball_loss"))).foreach {
       case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).size <= 1, s"$n: only the day-spine cross:\n$p")
@@ -1431,21 +1433,21 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // isotropy: map-only against the 1-row centroid — no equijoin
     // shuffle, no windows, one bounded cross.
-    val ia = plan(Cluster.isotropyAudit(spark, Sf))
+    val ia = plan(q("isotropy_audit"))
     noCartesian("isotropy", ia)
     assert(ia.collect { case w: WindowExec => w }.isEmpty,
       s"isotropy: window-free:\n$ia")
     // hubness: pairs ride the cluster equijoin (never cross-cell);
     // the only crosses are the k-row centroid broadcasts of the
     // assignment; the top-k window is per-point.
-    val ha = plan(Cluster.hubnessAudit(spark, Sf))
+    val ha = plan(q("hubness_audit"))
     noCartesian("hubness", ha)
     assert(ha.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty), s"hubness: per-point window:\n$ha")
     // rmst: the life-table risk window is arm-partitioned; the only
     // crosses are the 1-row report-date bound (planned once per
     // consumer subtree: the life table and the per-arm user count).
-    val rm = plan(Behavior.rmstArms(spark, Sf))
+    val rm = plan(q("rmst_arms"))
     noCartesian("rmst", rm)
     assert(bnlj(rm).size <= 2, s"rmst: 1-row crosses only:\n$rm")
   }
@@ -1460,13 +1462,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // pricing_summary: ONE aggregate behind the 1-row date bound — no
     // windows, no equijoin shuffles beyond the bound cross.
-    val ps = plan(Warehouse.pricingSummary(spark, Sf))
+    val ps = plan(q("pricing_summary"))
     noCartesian("pricing_summary", ps)
     assert(ps.collect { case w: WindowExec => w }.isEmpty &&
       bnlj(ps).size <= 1, s"pricing_summary: one cross, window-free:\n$ps")
     // idle_customers: the LEFT ANTI probe must actually plan as an
     // anti join (the row exists to exercise that shape).
-    val ic = plan(Warehouse.idleCustomers(spark, Sf))
+    val ic = plan(q("idle_customers"))
     noCartesian("idle_customers", ic)
     def antiJoins(p: SparkPlan) = p.collect {
       case j: BroadcastHashJoinExec if j.joinType.toString == "LeftAnti" => j
@@ -1475,19 +1477,19 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     assert(antiJoins(ic).nonEmpty, s"idle_customers: anti-join planned:\n$ic")
     // small_order_revenue / ltv_early_signal: pure equijoin shapes.
-    Seq("small_order_revenue" -> plan(Warehouse.smallOrderRevenue(spark, Sf)),
-      "ltv_early_signal" -> plan(Behavior.ltvEarlySignal(spark, Sf))).foreach {
+    Seq("small_order_revenue" -> plan(q("small_order_revenue")),
+      "ltv_early_signal" -> plan(q("ltv_early_signal"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
     }
     // skipgram: map-side pair explode + the 1-row totals cross only.
-    val sg = plan(CorpusStats.skipgramPairs(spark, Sf))
+    val sg = plan(q("skipgram_pairs"))
     noCartesian("skipgram", sg)
     assert(bnlj(sg).size <= 1, s"skipgram: totals cross only:\n$sg")
     // hodges_lehmann / median_ci: every window partitioned (bounded
     // daily/grid frames), no crossings.
-    Seq("hodges_lehmann" -> plan(graft.operators.Robust.hodgesLehmann(spark, Sf)),
-      "median_ci" -> plan(graft.operators.Robust.medianCi(spark, Sf))).foreach {
+    Seq("hodges_lehmann" -> plan(q("hodges_lehmann")),
+      "median_ci" -> plan(q("median_ci"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(p.collect { case w: WindowExec => w }
           .forall(_.partitionSpec.nonEmpty), s"$n: windows partitioned:\n$p")
@@ -1498,7 +1500,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "crossmodal" -> plan(graft.operators.Multimodal.crossmodalDedupAudit(spark, Sf)))
       .foreach { case (n, p) => noCartesian(n, p) }
     // cluster_stability_ari: k-row/1-row crosses only, no cartesian.
-    noCartesian("ari", plan(Cluster.clusterStabilityAri(spark, Sf)))
+    noCartesian("ari", plan(q("cluster_stability_ari")))
   }
 
   test("round-12 tranches 21-23: eval/growth/provenance plans bounded as designed") {
@@ -1509,20 +1511,20 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       assert(p.collect { case j: CartesianProductExec => j }.isEmpty,
         s"$name: no cartesian:\n$p")
     // promotion_effect / orders_per_customer_dist: equijoins only.
-    Seq("promotion_effect" -> plan(Warehouse.promotionEffect(spark, Sf)),
+    Seq("promotion_effect" -> plan(q("promotion_effect")),
       "orders_per_customer_dist" ->
-        plan(Warehouse.ordersPerCustomerDist(spark, Sf))).foreach {
+        plan(q("orders_per_customer_dist"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
     }
     // auc_delong_se: grid windows partitioned by source; no crossings.
-    val ad = plan(CorpusStats.aucDelongSe(spark, Sf))
+    val ad = plan(q("auc_delong_se"))
     noCartesian("auc_delong_se", ad)
     assert(ad.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty), s"delong: grid windows:\n$ad")
     // lift_table: the decile rank rides the two-phase exchange (__bkt
     // windows only besides the bounded 10-row cumsum).
-    val lt = plan(CorpusStats.liftTable(spark, Sf))
+    val lt = plan(q("lift_table"))
     noCartesian("lift_table", lt)
     assert(lt.collect { case w: WindowExec => w }
       .forall(w => w.partitionSpec.nonEmpty ||
@@ -1532,13 +1534,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // seasonal_strength / dau_stickiness / mutual_knn /
     // ahash_threshold_sweep / cross_source_dup_share: no cartesian.
     Seq(
-      "seasonal_strength" -> plan(EventAnalytics.seasonalStrength(spark, Sf)),
-      "dau_stickiness" -> plan(EventAnalytics.dauStickiness(spark, Sf)),
-      "mutual_knn_rate" -> plan(Cluster.mutualKnnRate(spark, Sf)),
+      "seasonal_strength" -> plan(q("seasonal_strength")),
+      "dau_stickiness" -> plan(q("dau_stickiness")),
+      "mutual_knn_rate" -> plan(q("mutual_knn_rate")),
       "ahash_threshold_sweep" ->
         plan(graft.operators.Multimodal.ahashThresholdSweep(spark, Sf)),
       "cross_source_dup_share" ->
-        plan(graft.operators.Components.crossSourceDupShare(spark, Sf)))
+        plan(q("cross_source_dup_share")))
       .foreach { case (n, p) => noCartesian(n, p) }
   }
 
@@ -1552,9 +1554,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Rank/stat tests: windows ride the (type, value) grid — always
     // partitioned; equijoins only.
-    Seq("kruskal_wallis" -> plan(graft.operators.Robust.kruskalWallis(spark, Sf)),
-      "welch_test" -> plan(Behavior.welchTest(spark, Sf)),
-      "ctr_wilson" -> plan(CtrAlerts.ctrWilson(spark, Sf))).foreach {
+    Seq("kruskal_wallis" -> plan(q("kruskal_wallis")),
+      "welch_test" -> plan(q("welch_test")),
+      "ctr_wilson" -> plan(q("ctr_wilson"))).foreach {
       case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
@@ -1564,9 +1566,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // Forecast family: the only non-equijoins are the 1-row bounds
     // broadcasts (dense spine / croston bounds / xyz W + totals).
     Seq("holt_winters_backtest" ->
-        plan(EventAnalytics.holtWintersBacktest(spark, Sf)),
-      "croston_backtest" -> plan(EventAnalytics.crostonBacktest(spark, Sf)),
-      "xyz_classification" -> plan(Warehouse.xyzClassification(spark, Sf)))
+        plan(q("holt_winters_backtest")),
+      "croston_backtest" -> plan(q("croston_backtest")),
+      "xyz_classification" -> plan(q("xyz_classification")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).length <= 3, s"$n: only 1-row bounds broadcasts:\n$p")
@@ -1575,7 +1577,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // global sort) with both date gates pushed to the scans; Q8/Q19
     // are pure equijoin trees with the Q19 disjunction pruning the
     // part scan.
-    val uo = plan(Warehouse.unshippedOrders(spark, Sf))
+    val uo = plan(q("unshipped_orders"))
     noCartesian("unshipped_orders", uo)
     assert(uo.collect { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
       s"unshipped_orders: top-k via TakeOrderedAndProject:\n$uo")
@@ -1583,10 +1585,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       .map(_.metadata("PushedFilters")).mkString
     assert(uoPushed.contains("l_shipdate") && uoPushed.contains("o_orderdate"),
       s"unshipped_orders: date gates pushed: $uoPushed")
-    val nms = plan(Warehouse.nationMarketShare(spark, Sf))
+    val nms = plan(q("nation_market_share"))
     noCartesian("nation_market_share", nms)
     assert(bnlj(nms).isEmpty, s"nation_market_share: equijoins only:\n$nms")
-    val bbr = plan(Warehouse.brandBasketRevenue(spark, Sf))
+    val bbr = plan(q("brand_basket_revenue"))
     noCartesian("brand_basket_revenue", bbr)
     assert(bnlj(bbr).isEmpty, s"brand_basket_revenue: equijoins only:\n$bbr")
     val bbrPushed = bbr.collect { case f: FileSourceScanExec => f }
@@ -1595,26 +1597,26 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"brand_basket_revenue: the disjunction prunes the part scan: $bbrPushed")
     // Behavior tranche: session windows are user-partitioned; the L28
     // curve and the payment audit stay equijoin/1-row-broadcast.
-    val sdc = plan(EventAnalytics.sessionDepthConversion(spark, Sf))
+    val sdc = plan(q("session_depth_conversion"))
     noCartesian("session_depth_conversion", sdc)
     assert(sdc.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"session_depth_conversion: user-partitioned windows:\n$sdc")
-    val puc = plan(EventAnalytics.powerUserCurve(spark, Sf))
+    val puc = plan(q("power_user_curve"))
     noCartesian("power_user_curve", puc)
     assert(bnlj(puc).length <= 2, s"power_user_curve: 1-row bounds only:\n$puc")
-    val dp = plan(Warehouse.duplicatePayments(spark, Sf))
+    val dp = plan(q("duplicate_payments"))
     noCartesian("duplicate_payments", dp)
     assert(bnlj(dp).isEmpty, s"duplicate_payments: custkey equijoin:\n$dp")
     // Graph tranche: textrank's only non-equijoins are the 1-row nn
     // broadcasts; its top-k is TakeOrderedAndProject. The diameter
     // assembly is 1-row broadcast crossJoins over checkpointed BFS
     // results.
-    val tk = plan(CorpusStats.textrankKeywords(spark, Sf))
+    val tk = plan(q("textrank_keywords"))
     noCartesian("textrank_keywords", tk)
     assert(tk.collect { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
       s"textrank: top-k via TakeOrderedAndProject:\n$tk")
-    noCartesian("diameter_estimate", plan(Graph.diameterEstimate(spark, Sf)))
+    noCartesian("diameter_estimate", plan(q("diameter_estimate")))
   }
 
   test("round-13 tranches 6-9: query-shape/stat/graph plans bounded as designed") {
@@ -1626,15 +1628,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Q4/Q7: equijoin/semi trees only.
     Seq("late_orders_by_priority" ->
-        plan(Warehouse.lateOrdersByPriority(spark, Sf)),
-      "trade_flows" -> plan(Warehouse.tradeFlows(spark, Sf)),
+        plan(q("late_orders_by_priority")),
+      "trade_flows" -> plan(q("trade_flows")),
       "repeat_purchase_latency" ->
-        plan(Behavior.repeatPurchaseLatency(spark, Sf))).foreach {
+        plan(q("repeat_purchase_latency"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
     }
     // Q10: TakeOrdered top-k with the returnflag + window pushed.
-    val rr = plan(Warehouse.returnedRevenueTopk(spark, Sf))
+    val rr = plan(q("returned_revenue_topk"))
     noCartesian("returned_revenue_topk", rr)
     assert(rr.collect { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
       s"returned_revenue_topk: top-k via TakeOrderedAndProject:\n$rr")
@@ -1644,13 +1646,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"returned_revenue_topk: gates pushed: $rrPushed")
     // Stat tranche: poisson's exposure is the one 1-row broadcast;
     // cochran/flesch/tokenizer are join-free.
-    val pr = plan(Behavior.poissonRateTest(spark, Sf))
+    val pr = plan(q("poisson_rate_test"))
     noCartesian("poisson_rate_test", pr)
     assert(bnlj(pr).length <= 1, s"poisson: 1-row exposure only:\n$pr")
-    Seq("cochran_armitage" -> plan(Behavior.cochranArmitage(spark, Sf)),
-      "flesch_kincaid" -> plan(TextAnalysis.fleschKincaid(spark, Sf)),
+    Seq("cochran_armitage" -> plan(q("cochran_armitage")),
+      "flesch_kincaid" -> plan(q("flesch_kincaid")),
       "tokenizer_efficiency" ->
-        plan(CorpusStats.tokenizerEfficiency(spark, Sf))).foreach {
+        plan(q("tokenizer_efficiency"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(bnlj(p).isEmpty &&
           p.collect { case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j }.isEmpty,
@@ -1658,7 +1660,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // pivot_scc: checkpointed BFS results assemble via 1-row
     // broadcasts only.
-    noCartesian("pivot_scc", plan(Graph.pivotScc(spark, Sf)))
+    noCartesian("pivot_scc", plan(q("pivot_scc")))
   }
 
   test("round-13 tranches 10-11: funnel/graph/heatmap plans bounded as designed") {
@@ -1670,24 +1672,24 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Funnel tranche: chained-min equijoins, user-partitioned
     // session windows, no nested loops.
-    Seq("funnel_stage_latency" -> plan(Behavior.funnelStageLatency(spark, Sf)),
-      "gateway_items" -> plan(Behavior.gatewayItems(spark, Sf))).foreach {
+    Seq("funnel_stage_latency" -> plan(q("funnel_stage_latency")),
+      "gateway_items" -> plan(q("gateway_items"))).foreach {
       case (n, p) => noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
     }
-    val sfp = plan(EventAnalytics.sessionFunnel(spark, Sf))
+    val sfp = plan(q("session_funnel"))
     noCartesian("session_funnel", sfp)
     assert(sfp.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"session_funnel: user-partitioned windows:\n$sfp")
     // padding_waste: one scan + bounded bucket frame, join-free
     // besides the union of the two readout legs.
-    val pw = plan(graft.operators.Corpus.paddingWaste(spark, Sf))
+    val pw = plan(q("padding_waste"))
     noCartesian("padding_waste", pw)
     assert(bnlj(pw).isEmpty, s"padding_waste: join-free:\n$pw")
     // reciprocity / hourly_heatmap: only 1-row readout broadcasts.
-    Seq("reciprocity" -> plan(Graph.reciprocity(spark, Sf)),
-      "hourly_heatmap" -> plan(EventAnalytics.hourlyHeatmap(spark, Sf)))
+    Seq("reciprocity" -> plan(q("reciprocity")),
+      "hourly_heatmap" -> plan(q("hourly_heatmap")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).length <= 1, s"$n: 1-row readout broadcast only:\n$p")
@@ -1695,14 +1697,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // kfold_balance rides the assignment's stratum windows
     // (partitioned); price_dispersion is an equijoin tree.
     Seq("kfold_balance" ->
-        plan(graft.operators.Corpus.kfoldBalance(spark, Sf)),
-      "price_dispersion" -> plan(Warehouse.priceDispersion(spark, Sf)))
+        plan(q("kfold_balance")),
+      "price_dispersion" -> plan(q("price_dispersion")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
       }
     // association_rules: the item_affinity equijoin tree + TakeOrdered.
-    val ar = plan(Behavior.associationRules(spark, Sf))
+    val ar = plan(q("association_rules"))
     noCartesian("association_rules", ar)
     assert(bnlj(ar).isEmpty, s"association_rules: equijoins only:\n$ar")
   }
@@ -1716,44 +1718,44 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // join-free map-side counting shapes (the only broadcast is a
     // 1-row readout where present)
-    Seq("simpson_diversity" -> plan(CorpusStats.simpsonDiversity(spark, Sf)),
-      "term_burstiness" -> plan(CorpusStats.termBurstiness(spark, Sf)),
+    Seq("simpson_diversity" -> plan(q("simpson_diversity")),
+      "term_burstiness" -> plan(q("term_burstiness")),
       "winnow_fingerprints" ->
-        plan(TextAnalysis.winnowFingerprints(spark, Sf)))
+        plan(q("winnow_fingerprints")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).length <= 1, s"$n: 1-row readout broadcast only:\n$p")
       }
     // equijoin trees
-    Seq("single_sourcing" -> plan(Warehouse.singleSourcing(spark, Sf)),
-      "rake_keywords" -> plan(CorpusStats.rakeKeywords(spark, Sf)))
+    Seq("single_sourcing" -> plan(q("single_sourcing")),
+      "rake_keywords" -> plan(q("rake_keywords")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(bnlj(p).isEmpty, s"$n: equijoins only:\n$p")
       }
     // rake's only window is the per-doc stopword cumsum — partitioned
-    val rk = plan(CorpusStats.rakeKeywords(spark, Sf))
+    val rk = plan(q("rake_keywords"))
     assert(rk.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"rake_keywords: doc-partitioned windows only:\n$rk")
     // eigenvector / alignment / pettitt: bounded-frame or 1-row
     // broadcasts only (edge frames, dim sums, day spans)
     Seq("eigenvector_centrality" ->
-        plan(Graph.eigenvectorCentrality(spark, Sf)),
-      "embedding_alignment" -> plan(Similarity.embeddingAlignment(spark, Sf)),
+        plan(q("eigenvector_centrality")),
+      "embedding_alignment" -> plan(q("embedding_alignment")),
       "pettitt_changepoint" ->
-        plan(EventAnalytics.pettittChangepoint(spark, Sf)))
+        plan(q("pettitt_changepoint")))
       .foreach { case (n, p) => noCartesian(n, p) }
     // tranches 5-8: every window partitioned (type/arm/token-keyed —
     // no single-task global sort), no cartesians anywhere
-    Seq("brown_forsythe" -> plan(Behavior.brownForsythe(spark, Sf)),
-      "mann_kendall" -> plan(graft.operators.Robust.mannKendall(spark, Sf)),
-      "demand_classes" -> plan(EventAnalytics.demandClasses(spark, Sf)),
+    Seq("brown_forsythe" -> plan(q("brown_forsythe")),
+      "mann_kendall" -> plan(q("mann_kendall")),
+      "demand_classes" -> plan(q("demand_classes")),
       "wasserstein_drift" ->
-        plan(graft.operators.Robust.wassersteinDrift(spark, Sf)),
-      "runs_test" -> plan(graft.operators.Robust.runsTest(spark, Sf)),
-      "burrows_delta" -> plan(CorpusStats.burrowsDelta(spark, Sf)),
-      "hub_ablation" -> plan(Graph.hubAblation(spark, Sf)))
+        plan(q("wasserstein_drift")),
+      "runs_test" -> plan(q("runs_test")),
+      "burrows_delta" -> plan(q("burrows_delta")),
+      "hub_ablation" -> plan(q("hub_ablation")))
       .foreach { case (n, p) =>
         noCartesian(n, p)
         assert(p.collect {
@@ -1774,17 +1776,17 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // single-scan single-aggregate shapes: both quality gates ride ONE
     // projection (mcnemar), the CMH user fold carries only the 1-row
     // report-date broadcast
-    val mc = plan(CorpusStats.mcnemarGates(spark, Sf))
+    val mc = plan(q("mcnemar_test"))
     noCartesian("mcnemar_test", mc)
     assert(mc.collect { case f: FileSourceScanExec => f }.length == 1,
       s"mcnemar: both gates must ride ONE scan:\n$mc")
     assert(bnlj(mc).isEmpty, s"mcnemar: join-free:\n$mc")
-    val mh = plan(Behavior.mantelHaenszel(spark, Sf))
+    val mh = plan(q("mantel_haenszel"))
     noCartesian("mantel_haenszel", mh)
     assert(bnlj(mh).length <= 1,
       s"mantel_haenszel: 1-row report-date broadcast only:\n$mh")
     // manifest-bounded planner: one window, partitioned, no join
-    val cp = plan(Warehouse.compactionPlan(spark, Sf))
+    val cp = plan(q("compaction_plan"))
     noCartesian("compaction_plan", cp)
     assert(bnlj(cp).isEmpty, s"compaction_plan: join-free:\n$cp")
     assert(cp.collect { case w: WindowExec => w }
@@ -1793,7 +1795,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // FIFO match: windows partitioned by part, the allocation join is
     // an equijoin (range predicate rides as post-filter, never a
     // nested loop)
-    val fm = plan(Warehouse.fifoMatch(spark, Sf))
+    val fm = plan(q("fifo_match"))
     noCartesian("fifo_match", fm)
     assert(bnlj(fm).isEmpty, s"fifo_match: equijoin only:\n$fm")
     assert(fm.collect { case w: WindowExec => w }
@@ -1804,16 +1806,16 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // on a fact side; windows partitioned where a fact could flow
     for ((n, p) <- Seq(
       "isotonic_calibration" ->
-        plan(CorpusStats.isotonicCalibration(spark, Sf)),
+        plan(q("isotonic_calibration")),
       "jonckheere_trend" ->
-        plan(graft.operators.Robust.jonckheereTrend(spark, Sf)),
-      "friedman_test" -> plan(graft.operators.Robust.friedmanTest(spark, Sf)))) {
+        plan(q("jonckheere_trend")),
+      "friedman_test" -> plan(q("friedman_test")))) {
       noCartesian(n, p)
       assert(p.collect { case f: FileSourceScanExec => f }.length <= 1,
         s"$n: the fact must ride ONE scan (bounded frames re-derive " +
           s"from the checkpoint, not the parquet):\n$p")
     }
-    val fr = plan(graft.operators.Robust.friedmanTest(spark, Sf))
+    val fr = plan(q("friedman_test"))
     assert(fr.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"friedman: day-partitioned rank windows only:\n$fr")
@@ -1831,7 +1833,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(mc.collect { case e: ShuffleExchangeExec => e }.length <= 1,
       s"mcnemar: single global aggregate:\n$mc")
     // yuen: the KW value-grid machinery — partitioned windows, no join
-    val yu = plan(graft.operators.Robust.yuenTest(spark, Sf))
+    val yu = plan(q("yuen_test"))
     noCartesian("yuen_test", yu)
     assert(bnlj(yu).isEmpty, s"yuen: join-free:\n$yu")
     assert(yu.collect { case w: WindowExec => w }
@@ -1839,11 +1841,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"yuen: (type, arm)-partitioned windows only:\n$yu")
     // capture-recapture: two registered detector pipelines + one
     // doc_id equijoin — nothing unbounded crosses
-    val cr = plan(Dedup.dedupCaptureRecapture(spark, Sf))
+    val cr = plan(q("dedup_capture_recapture"))
     noCartesian("dedup_capture_recapture", cr)
     // Q21: equijoin + order-keyed windows; status filter reaches the
     // orders scan; top-k is a global-limit, never a full sort
-    val bs = plan(Warehouse.blockingSuppliers(spark, Sf))
+    val bs = plan(q("blocking_suppliers"))
     noCartesian("blocking_suppliers", bs)
     assert(bs.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
@@ -1856,9 +1858,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }.nonEmpty, s"blocking: top-k must be TakeOrderedAndProject:\n$bs")
     // bland-altman / overdispersion: scan + bounded folds only
     for ((n, p) <- Seq(
-      "bland_altman" -> plan(TextAnalysis.blandAltman(spark, Sf)),
+      "bland_altman" -> plan(q("bland_altman")),
       "overdispersion_check" ->
-        plan(graft.operators.Robust.overdispersionCheck(spark, Sf)))) {
+        plan(q("overdispersion_check")))) {
       noCartesian(n, p)
       assert(bnlj(p).length <= 1, s"$n: 1-row limits broadcast only:\n$p")
     }
@@ -1876,7 +1878,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Q15: ONE fact aggregate, quarter-partitioned windows on the
     // bounded frame, supplier dim broadcast
-    val ts = plan(Warehouse.topSupplierShare(spark, Sf))
+    val ts = plan(q("top_supplier_share"))
     noCartesian("top_supplier_share", ts)
     assert(ts.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
@@ -1885,7 +1887,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"top_supplier: the supplier dim must broadcast:\n$ts")
     // Q18: the HAVING cut drives the joins, customer broadcast,
     // top-k as TakeOrderedAndProject — never a global sort
-    val lo = plan(Warehouse.largeOrders(spark, Sf))
+    val lo = plan(q("large_orders"))
     noCartesian("large_orders", lo)
     assert(lo.collect { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
       s"large_orders: top-100 must be TakeOrderedAndProject:\n$lo")
@@ -1893,7 +1895,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"large_orders: the customer dim must broadcast:\n$lo")
     // Q6: join-free scan-bound aggregate with BOTH band predicates
     // pushed into the parquet scan
-    val dw = plan(Warehouse.discountWhatif(spark, Sf))
+    val dw = plan(q("discount_whatif"))
     noCartesian("discount_whatif", dw)
     assert(bnlj(dw).isEmpty, s"discount_whatif: join-free:\n$dw")
     val scans = dw.collect { case f: FileSourceScanExec => f }
@@ -1904,8 +1906,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // rank/residual statistics: partitioned windows, no cartesian,
     // the fact on one scan
     for ((n, p) <- Seq(
-      "dunn_posthoc" -> plan(graft.operators.Robust.dunnPosthoc(spark, Sf)),
-      "durbin_watson" -> plan(EventAnalytics.durbinWatson(spark, Sf)))) {
+      "dunn_posthoc" -> plan(q("dunn_posthoc")),
+      "durbin_watson" -> plan(q("durbin_watson")))) {
       noCartesian(n, p)
       assert(bnlj(p).isEmpty, s"$n: equijoin/window only:\n$n")
       assert(p.collect { case w: WindowExec => w }
@@ -1916,8 +1918,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // gate agreement: ONE scan, join-free, a single global aggregate
     for ((n, p) <- Seq(
-      "cochran_q_gates" -> plan(CorpusStats.cochranQGates(spark, Sf)),
-      "fleiss_kappa_gates" -> plan(CorpusStats.fleissKappaGates(spark, Sf)))) {
+      "cochran_q_gates" -> plan(q("cochran_q_gates")),
+      "fleiss_kappa_gates" -> plan(q("fleiss_kappa_gates")))) {
       noCartesian(n, p)
       assert(bnlj(p).isEmpty, s"$n: join-free:\n$p")
       assert(p.collect { case f: FileSourceScanExec => f }.length == 1,
@@ -1926,12 +1928,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$n: single global aggregate:\n$p")
     }
     // power_mde: the ab_test fold — only the 1-row report-date cross
-    val pm = plan(Behavior.powerMde(spark, Sf))
+    val pm = plan(q("power_mde"))
     noCartesian("power_mde", pm)
     assert(bnlj(pm).length <= 1, s"power_mde: 1-row broadcast only:\n$pm")
     // embedding MMD: dim-partitioned windows on the bounded frame,
     // one embedding scan, no join at all
-    val em = plan(Similarity.embeddingMmd(spark, Sf))
+    val em = plan(q("embedding_mmd"))
     noCartesian("embedding_mmd", em)
     assert(bnlj(em).isEmpty, s"embedding_mmd: join-free:\n$em")
     assert(em.collect { case w: WindowExec => w }
@@ -1940,23 +1942,23 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(em.collect { case f: FileSourceScanExec => f }.length == 1,
       s"embedding_mmd: one embedding scan:\n$em")
     // audio clipping: map-only codec fold into one bounded aggregate
-    val ac = plan(graft.operators.Multimodal.audioClippingAudit(spark, Sf))
+    val ac = plan(q("audio_clipping_audit"))
     noCartesian("audio_clipping_audit", ac)
     assert(bnlj(ac).isEmpty, s"audio_clipping: join-free:\n$ac")
     // second tranche: paired test, QTE, sentence dedup, provenance
-    val wsr = plan(graft.operators.Robust.wilcoxonSignedRank(spark, Sf))
+    val wsr = plan(q("wilcoxon_signed_rank"))
     noCartesian("wilcoxon_signed_rank", wsr)
     assert(bnlj(wsr).isEmpty, s"wilcoxon: join-free:\n$wsr")
     assert(wsr.collect { case f: FileSourceScanExec => f }.length == 1,
       s"wilcoxon: one fact scan:\n$wsr")
-    val ql = plan(graft.operators.Robust.quantileLift(spark, Sf))
+    val ql = plan(q("quantile_lift"))
     noCartesian("quantile_lift", ql)
     assert(bnlj(ql).length <= 1,
       s"quantile_lift: only the 4-row quantile broadcast:\n$ql")
     assert(ql.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"quantile_lift: (type, arm)-partitioned windows only:\n$ql")
-    val sd = plan(graft.operators.Corpus.sentenceDedup(spark, Sf))
+    val sd = plan(q("sentence_dedup"))
     noCartesian("sentence_dedup", sd)
     assert(bnlj(sd).isEmpty, s"sentence_dedup: join-free:\n$sd")
     assert(sd.collect { case f: FileSourceScanExec => f }.length == 1,
@@ -1964,7 +1966,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(sd.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"sentence_dedup: hash-partitioned total window only:\n$sd")
-    val som = plan(graft.operators.Corpus.sourceOverlapMatrix(spark, Sf))
+    val som = plan(q("source_overlap_matrix"))
     noCartesian("source_overlap_matrix", som)
     assert(bnlj(som).isEmpty,
       s"source_overlap: pair mass explodes map-side, never a joins:\n$som")
@@ -1981,7 +1983,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Q2: dims broadcast, the min-cost window rides the bounded
     // (part × supplier) frame, top-100 is TakeOrderedAndProject
-    val mc = plan(Warehouse.minCostSupplier(spark, Sf))
+    val mc = plan(q("min_cost_supplier"))
     noCartesian("min_cost_supplier", mc)
     assert(mc.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
       s"min_cost: the region→nation→supplier chain must broadcast:\n$mc")
@@ -1992,7 +1994,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"min_cost: top-100 must be TakeOrderedAndProject:\n$mc")
     // Q9: no window at all — the profit expression folds into ONE
     // aggregate; the nation chain broadcasts
-    val np = plan(Warehouse.nationProfit(spark, Sf))
+    val np = plan(q("nation_profit"))
     noCartesian("nation_profit", np)
     assert(bnlj(np).isEmpty, s"nation_profit: equijoins only:\n$np")
     assert(np.collect { case w: WindowExec => w }.isEmpty,
@@ -2001,27 +2003,27 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"nation_profit: the supplier→nation chain must broadcast:\n$np")
     // Q11: the nation's supplier keys broadcast as a semi-join; the
     // total is a 1-row broadcast (never a single-partition window)
-    val ip = plan(Warehouse.importantParts(spark, Sf))
+    val ip = plan(q("important_parts"))
     noCartesian("important_parts", ip)
     assert(bnlj(ip).length <= 1,
       s"important_parts: only the 1-row total broadcast:\n$ip")
     assert(ip.collect { case w: WindowExec => w }.isEmpty,
       s"important_parts: no window — the total is a 1-row broadcast:\n$ip")
     // Q12: one fact⋈fact equijoin into one bounded aggregate
-    val pm2 = plan(Warehouse.priorityShipMix(spark, Sf))
+    val pm2 = plan(q("priority_ship_mix"))
     noCartesian("priority_ship_mix", pm2)
     assert(bnlj(pm2).isEmpty, s"priority_ship_mix: equijoin only:\n$pm2")
     assert(pm2.collect { case w: WindowExec => w }.isEmpty,
       s"priority_ship_mix: the CASE folds into the aggregate:\n$pm2")
     // Q16: the deficit-book anti-join broadcasts; distinct resolves
     // as an aggregate, never count(DISTINCT) over a wide shuffle
-    val psv = plan(Warehouse.partSupplierVariety(spark, Sf))
+    val psv = plan(q("part_supplier_variety"))
     noCartesian("part_supplier_variety", psv)
     assert(psv.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
       s"part_supplier_variety: broadcast anti-join:\n$psv")
     // Q20: year+prefix cuts reach the scans; the half-share window
     // rides the part-partitioned bounded frame
-    val ex = plan(Warehouse.excessShippers(spark, Sf))
+    val ex = plan(q("excess_shippers"))
     noCartesian("excess_shippers", ex)
     assert(ex.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
@@ -2041,9 +2043,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // sign test + TOST: join-free single folds off ONE fact scan
     for ((n, p) <- Seq(
-      "sign_test" -> plan(graft.operators.Robust.signTest(spark, Sf)),
+      "sign_test" -> plan(q("sign_test")),
       "tost_equivalence" ->
-        plan(Behavior.tostEquivalence(spark, Sf)))) {
+        plan(q("tost_equivalence")))) {
       noCartesian(n, p)
       assert(bnlj(p).isEmpty, s"$n: join-free:\n$p")
       assert(p.collect { case f: FileSourceScanExec => f }.length == 1,
@@ -2051,14 +2053,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // Mood median: type-partitioned cumulative window, the ≤|types|
     // median frame broadcast back — never a per-arm sort
-    val mm = plan(graft.operators.Robust.moodMedian(spark, Sf))
+    val mm = plan(q("mood_median"))
     noCartesian("mood_median", mm)
     assert(mm.collect { case w: WindowExec => w }
       .forall(_.partitionSpec.nonEmpty),
       s"mood_median: partitioned windows only:\n$mm")
     // Cox-Stuart: the half-pairing is POSITION ARITHMETIC on the daily
     // frame — one fact scan, no self-join of the aggregate
-    val cs = plan(graft.operators.Robust.coxStuart(spark, Sf))
+    val cs = plan(q("cox_stuart"))
     noCartesian("cox_stuart", cs)
     assert(bnlj(cs).isEmpty, s"cox_stuart: join-free:\n$cs")
     assert(cs.collect { case f: FileSourceScanExec => f }.length == 1,
@@ -2067,7 +2069,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       .forall(_.partitionSpec.nonEmpty),
       s"cox_stuart: type-partitioned windows only:\n$cs")
     // Ljung-Box: the acf shape — only the 1-row bounds broadcast
-    val lb = plan(EventAnalytics.ljungBox(spark, Sf))
+    val lb = plan(q("ljung_box"))
     noCartesian("ljung_box", lb)
     // the dev subtree feeds BOTH the num and den folds (the shipped
     // acf_daily shape), so the 1-row bounds broadcast plans twice
@@ -2087,7 +2089,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: no cartesian:\n$p")
     // Katz: the checkpointed-loop posture — the final plan reads
     // checkpoint RDDs, no fact re-scan, equijoins only
-    val kc = plan(graft.operators.Graph.katzCentrality(spark, Sf))
+    val kc = plan(q("katz_centrality"))
     noCartesian("katz_centrality", kc)
     assert(bnlj(kc).isEmpty, s"katz: equijoins only:\n$kc")
     // novelty (r17 hot-key-proof shape): the first-seen fold is a
@@ -2095,7 +2097,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // r16 gram-partitioned window MIN funnelled a viral boilerplate
     // gram's every occurrence through one task); the single pruned
     // scan rides inside the checkpointed (doc, hash[]) frame
-    val nn = plan(graft.operators.Dedup.ngramNovelty(spark, Sf))
+    val nn = plan(q("ngram_novelty"))
     noCartesian("ngram_novelty", nn)
     assert(bnlj(nn).isEmpty, s"ngram_novelty: equijoins only:\n$nn")
     assert(nn.collect { case f: FileSourceScanExec => f }.isEmpty,
@@ -2103,7 +2105,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(nn.collect { case w: WindowExec => w }.isEmpty,
       s"ngram_novelty: hot-key-proof = window-free:\n$nn")
     // curve: same machinery + only the 1-row id-bounds broadcast
-    val nc = plan(graft.operators.Dedup.noveltyCurve(spark, Sf))
+    val nc = plan(q("novelty_curve"))
     noCartesian("novelty_curve", nc)
     assert(bnlj(nc).length <= 1,
       s"novelty_curve: only the 1-row bounds broadcast:\n$nc")
@@ -2113,7 +2115,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // AT MOST one fact scan may survive into the final plan (the
     // uncheckpointed form planned six), and the only broadcasts are
     // the 1-row effect-median folds
-    val mp = plan(graft.operators.Robust.medianPolish(spark, Sf))
+    val mp = plan(q("median_polish"))
     noCartesian("median_polish", mp)
     assert(mp.collect { case f: FileSourceScanExec => f }.length <= 1,
       s"median_polish: the sweeps must not re-scan the fact:\n$mp")
@@ -2121,12 +2123,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"median_polish: only the 1-row effect-median broadcasts:\n$mp")
     // Breusch-Pagan: the durbin_watson posture — checkpointed daily
     // frame, weekday-mean broadcast back, bounded moment fold
-    val bp = plan(EventAnalytics.breuschPagan(spark, Sf))
+    val bp = plan(q("breusch_pagan"))
     noCartesian("breusch_pagan", bp)
     assert(bp.collect { case f: FileSourceScanExec => f }.length <= 1,
       s"breusch_pagan: the moments must not re-scan the fact:\n$bp")
     // arrival dashboard: one documents scan + the 1-row id bounds
-    val aq = plan(graft.operators.CorpusStats.arrivalQualityMix(spark, Sf))
+    val aq = plan(q("arrival_quality_mix"))
     noCartesian("arrival_quality_mix", aq)
     assert(aq.collect { case f: FileSourceScanExec => f }.length <= 2,
       s"arrival_quality_mix: one scan + the bounds scan at most:\n$aq")
@@ -2157,13 +2159,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"$name: pure aggregate chain, no windows:\n$p")
     }
     // one map-combinable fact aggregate each, everything after bounded
-    oneScanNoWindow("simpson_reversal", plan(Behavior.simpsonReversal(spark, Sf)))
+    oneScanNoWindow("simpson_reversal", plan(q("simpson_reversal")))
     oneScanNoWindow("jackknife_ratio_se",
-      plan(Behavior.jackknifeRatioSe(spark, Sf)), maxScans = 3)
-    oneScanNoWindow("aa_calibration", plan(Behavior.aaCalibration(spark, Sf)))
+      plan(q("jackknife_ratio_se")), maxScans = 3)
+    oneScanNoWindow("aa_calibration", plan(q("aa_calibration")))
     // ccf: the bounds broadcast is planned once per pair side (same
     // ReuseExchange argument); the best-lag window is pair-partitioned
-    val cc = plan(EventAnalytics.ccfLeadlag(spark, Sf))
+    val cc = plan(q("ccf_leadlag"))
     noCartesian("ccf_leadlag", cc)
     assert(bnlj(cc).length <= 2, s"ccf: 1-row bounds broadcasts only:\n$cc")
     assert(cc.collect { case w: WindowExec => w }
@@ -2171,7 +2173,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"ccf: pair-partitioned windows only:\n$cc")
     // reorder point: part dim broadcasts; the (brand, day) aggregate's
     // repeated references reuse its exchange at runtime
-    val rp = plan(Warehouse.reorderPoint(spark, Sf))
+    val rp = plan(q("reorder_point"))
     noCartesian("reorder_point", rp)
     assert(rp.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
       s"reorder_point: the part projection must broadcast:\n$rp")
@@ -2185,17 +2187,17 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val esw = eso.collect { case w: WindowExec => w }
     assert(esw.nonEmpty && esw.forall(_.partitionSpec.nonEmpty),
       s"epoch_shuffle: every window partitioned:\n$eso")
-    val es = plan(Corpus.epochShuffleAudit(spark, Sf))
+    val es = plan(q("epoch_shuffle"))
     noCartesian("epoch_shuffle", es)
     // split leakage: composes the pinned pair machinery — still no
     // quadratic join; the 1-row total broadcast is the only BNLJ
-    val sl = plan(Corpus.splitLeakage(spark, Sf))
+    val sl = plan(q("split_leakage"))
     noCartesian("split_leakage", sl)
     assert(bnlj(sl).length <= 1, s"split_leakage: 1-row total only:\n$sl")
     // bot score: the user-keyed lag window must stay partitioned
     // (high-card key — the scalable shape); two pruned fact scans
     // (gaps + type counts, the profile_columns posture)
-    val bs = plan(EventAnalytics.botScore(spark, Sf))
+    val bs = plan(q("bot_score"))
     noCartesian("bot_score", bs)
     val bsw = bs.collect { case w: WindowExec => w }
     assert(bsw.nonEmpty && bsw.forall(_.partitionSpec.nonEmpty),
@@ -2204,14 +2206,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"bot_score: gaps + type-count scans only:\n$bs")
     // gap report: the day lag rides boundaryCarryLag — every window
     // partitioned, never a |types|-parallelism type-keyed window
-    val gr = plan(EventAnalytics.gapReport(spark, Sf))
+    val gr = plan(q("gap_report"))
     noCartesian("gap_report", gr)
     val grw = gr.collect { case w: WindowExec => w }
     assert(grw.forall(_.partitionSpec.nonEmpty),
       s"gap_report: partitioned windows only:\n$gr")
     // trigger dilution: the two 1-row count frames broadcast; no
     // cartesian beyond them, no window at all
-    val td = plan(Behavior.triggerDilution(spark, Sf))
+    val td = plan(q("trigger_dilution"))
     noCartesian("trigger_dilution", td)
     assert(bnlj(td).length <= 2,
       s"trigger_dilution: two 1-row broadcasts only:\n$td")

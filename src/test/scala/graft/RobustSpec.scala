@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, to_timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Robust
+import graft.operators.{Behavior, Robust}
 
 class RobustSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -766,5 +766,117 @@ class RobustSpec extends AnyFunSuite with SparkFixture {
     val r = Robust.seasonalMkOf(valued(rows2: _*)).collect().head
     assert(r.getLong(1) == 14L && r.getLong(2) == 7L && r.getLong(3) == 7L,
       s"T=14, 7 strata, S = 7 concordant pairs: $r")
+  }
+
+  // ---- Dunn post-hoc: separation, ordering, and the all-tied null ----
+
+  private def armedEvents(n: Int): DataFrame = {
+    // Resolve each user's md5 arm with the ENGINE's own assignment,
+    // then plant fully separated values arm0 < arm1 < arm2.
+    val arms = (1L to n.toLong).toDF("user_id")
+      .select(col("user_id"), Behavior.arm3(col("user_id")).as("arm"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (1L to n.toLong).map { u =>
+      (u, u, "buy", "2024-01-01 00:00:00", 1.0 + arms(u).toDouble)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+  }
+
+  test("dunn_posthoc: planted arm separation is significant with ordered mean ranks") {
+    val out = Robust.dunnPosthocOf(armedEvents(60)).collect()
+    assert(out.length == 3, "three pairs for one type")
+    out.foreach { r =>
+      val (a, b) = (r.getLong(1), r.getLong(2))
+      val z = r.getDouble(7)
+      assert(z < 0.0, s"arm $a ranks below arm $b on planted values: $r")
+      assert(r.getBoolean(8), s"full separation must be significant: $r")
+      assert(r.getDouble(5) < r.getDouble(6),
+        s"mean_rank_a < mean_rank_b under planted ordering: $r")
+    }
+  }
+
+  test("dunn_posthoc: an all-tied type nulls z and reads not significant") {
+    val ev = (1L to 30L).map { u =>
+      (u, u, "buy", "2024-01-01 00:00:00", 7.0)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    val out = Robust.dunnPosthocOf(ev).collect()
+    assert(out.length == 3)
+    out.foreach { r =>
+      assert(r.isNullAt(7), s"tied variance must null z, not NaN: $r")
+      assert(!r.getBoolean(8))
+    }
+  }
+
+  // ---- Wilcoxon signed-rank: hand-computed doubled-rank pin ----
+
+  test("wilcoxon_signed_rank: the hand-computed tie-corrected z pin, zero diffs dropped") {
+    // Day diffs (cents): +10, -10, +20, +20, and one exact-zero day
+    // (dropped). |d| grid: 10 (t=2, 1 positive), 20 (t=2, 2 positive)
+    // → 2W+ = 1·3 + 2·7 = 17, n = 4, tcub = 12,
+    // z = (17 − 10)/√(4·5·9/6 − 1) = 7/√29.
+    val rows = Seq(
+      ("2024-01-01", "purchase", 1.10), ("2024-01-01", "view", 1.00),
+      ("2024-01-02", "purchase", 1.00), ("2024-01-02", "view", 1.10),
+      ("2024-01-03", "purchase", 1.20), ("2024-01-03", "view", 1.00),
+      ("2024-01-04", "purchase", 1.20), ("2024-01-04", "view", 1.00),
+      ("2024-01-05", "purchase", 1.00), ("2024-01-05", "view", 1.00))
+    val ev = rows.zipWithIndex.map { case ((d, et, v), i) =>
+      (i.toLong, i.toLong, et, d + " 12:00:00", v)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    val out = Robust.wilcoxonSignedRankOf(ev).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(0) == 4L, s"zero-diff day dropped: $r")
+    assert(r.getLong(1) == 17L, s"doubled W+: $r")
+    val z = math.floor(7.0 / math.sqrt(29.0) * 1e6 + 0.5) / 1e6
+    assert(r.getDouble(2) == z, s"z = 7/sqrt(29): $r")
+    assert(!r.getBoolean(3))
+  }
+
+  test("wilcoxon_signed_rank: an everywhere-tied pairing emits nothing") {
+    val ev = Seq(
+      (1L, 1L, "purchase", "2024-01-01 12:00:00", 2.0),
+      (2L, 2L, "view", "2024-01-01 12:00:00", 2.0))
+      .toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    assert(Robust.wilcoxonSignedRankOf(ev).collect().isEmpty)
+  }
+
+  // ---- sign test: hand-counted signs and the all-tie refusal ----
+
+  private def pvEvents(rows: (String, Double, Double)*): DataFrame =
+    // one purchase and one view row per day
+    rows.flatMap { case (d, p, v) =>
+      Seq((d, "purchase", p), (d, "view", v))
+    }.zipWithIndex.map { case ((d, t, x), i) => (i.toLong, i.toLong, t, d, x) }
+      .toDF("event_id", "user_id", "event_type", "d", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("d")).as("ts"), col("value"))
+
+  test("sign_test: hand-counted signs, tie mass published, z = 2/sqrt(4)") {
+    val e = pvEvents(
+      ("2024-01-01 00:00:00", 2.0, 1.0),  // +
+      ("2024-01-02 00:00:00", 3.0, 1.0),  // +
+      ("2024-01-03 00:00:00", 4.0, 1.0),  // +
+      ("2024-01-04 00:00:00", 1.0, 2.0),  // −
+      ("2024-01-05 00:00:00", 5.0, 5.0))  // tie: dropped, counted
+    val out = Robust.signTestOf(e).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(0) == 3L && r.getLong(1) == 1L && r.getLong(2) == 1L)
+    assert(r.getDouble(3) == 1.0, s"z = (3-1)/sqrt(4): $r")
+    assert(!r.getBoolean(4))
+  }
+
+  test("sign_test: every day tying emits nothing") {
+    val e = pvEvents(("2024-01-01 00:00:00", 2.0, 2.0),
+      ("2024-01-02 00:00:00", 3.0, 3.0))
+    assert(Robust.signTestOf(e).collect().isEmpty)
   }
 }

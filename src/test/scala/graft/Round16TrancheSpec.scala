@@ -89,48 +89,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     assert(r.getLong(4) == 600L, s"share bp: $r")
   }
 
-  // ---- Dunn post-hoc: separation, ordering, and the all-tied null ----
-
-  private def armedEvents(n: Int): DataFrame = {
-    // Resolve each user's md5 arm with the ENGINE's own assignment,
-    // then plant fully separated values arm0 < arm1 < arm2.
-    val arms = (1L to n.toLong).toDF("user_id")
-      .select(col("user_id"), Behavior.arm3(col("user_id")).as("arm"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to n.toLong).map { u =>
-      (u, u, "buy", "2024-01-01 00:00:00", 1.0 + arms(u).toDouble)
-    }.toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("value"))
-  }
-
-  test("dunn_posthoc: planted arm separation is significant with ordered mean ranks") {
-    val out = Robust.dunnPosthocOf(armedEvents(60)).collect()
-    assert(out.length == 3, "three pairs for one type")
-    out.foreach { r =>
-      val (a, b) = (r.getLong(1), r.getLong(2))
-      val z = r.getDouble(7)
-      assert(z < 0.0, s"arm $a ranks below arm $b on planted values: $r")
-      assert(r.getBoolean(8), s"full separation must be significant: $r")
-      assert(r.getDouble(5) < r.getDouble(6),
-        s"mean_rank_a < mean_rank_b under planted ordering: $r")
-    }
-  }
-
-  test("dunn_posthoc: an all-tied type nulls z and reads not significant") {
-    val ev = (1L to 30L).map { u =>
-      (u, u, "buy", "2024-01-01 00:00:00", 7.0)
-    }.toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("value"))
-    val out = Robust.dunnPosthocOf(ev).collect()
-    assert(out.length == 3)
-    out.foreach { r =>
-      assert(r.isNullAt(7), s"tied variance must null z, not NaN: $r")
-      assert(!r.getBoolean(8))
-    }
-  }
-
   // ---- Cochran's Q + Fleiss kappa: exact hand pins via the lang gate ----
 
   /** Docs whose ONLY passable gate is lang=='en': empty text fails the
@@ -211,37 +169,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     assert(out(0).getString(3) == "undefined")
   }
 
-  // ---- power_mde: the published cells recompute the chain exactly ----
-
-  private def purchaseEvents(n: Int, buyers: Long => Boolean): DataFrame =
-    (1L to n.toLong).map { u =>
-      val et = if (buyers(u)) "purchase" else "view"
-      (u, u, et, "2024-01-05 00:00:00", 1.0)
-    }.toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("value"))
-
-  test("power_mde: the MDE chain recomputes exactly from the published cells") {
-    val out = Behavior.powerMdeOf(purchaseEvents(80, _ % 3 == 0)).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    val (n0, n1, c0, c1) = (r.getLong(0), r.getLong(1), r.getLong(2),
-      r.getLong(3))
-    assert(n0 + n1 == 80L && c0 + c1 > 0L)
-    val p = (c0 + c1).toDouble / (n0 + n1).toDouble
-    val raw = (1.959964 + 0.841621) *
-      math.sqrt(p * (1.0 - p) * (1.0 / n0 + 1.0 / n1))
-    val expected = math.floor(raw * 1e6 + 0.5) / 1e6
-    assert(r.getDouble(4) == expected, s"mde chain: $r vs $expected")
-    assert(r.getBoolean(6) == (r.getDouble(5) > r.getDouble(4)))
-  }
-
-  test("power_mde: a conversion-free corpus nulls the MDE, never claims power") {
-    val out = Behavior.powerMdeOf(purchaseEvents(40, _ => false)).collect()
-    assert(out(0).isNullAt(4), s"p=0 has no variance: ${out(0)}")
-    assert(!out(0).getBoolean(6))
-  }
-
   // ---- embedding MMD: exact separation pin + single-label refusal ----
 
   private def embs(rows: (Long, Seq[Double], Long)*): DataFrame =
@@ -267,44 +194,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     val out = Similarity.embeddingMmdOf(embs(
       (1L, Seq(1.0, 0.0), 0L), (2L, Seq(0.5, 0.5), 0L))).collect()
     assert(out.isEmpty, s"no complement → no row: ${out.mkString(";")}")
-  }
-
-  // ---- Wilcoxon signed-rank: hand-computed doubled-rank pin ----
-
-  test("wilcoxon_signed_rank: the hand-computed tie-corrected z pin, zero diffs dropped") {
-    // Day diffs (cents): +10, -10, +20, +20, and one exact-zero day
-    // (dropped). |d| grid: 10 (t=2, 1 positive), 20 (t=2, 2 positive)
-    // → 2W+ = 1·3 + 2·7 = 17, n = 4, tcub = 12,
-    // z = (17 − 10)/√(4·5·9/6 − 1) = 7/√29.
-    val rows = Seq(
-      ("2024-01-01", "purchase", 1.10), ("2024-01-01", "view", 1.00),
-      ("2024-01-02", "purchase", 1.00), ("2024-01-02", "view", 1.10),
-      ("2024-01-03", "purchase", 1.20), ("2024-01-03", "view", 1.00),
-      ("2024-01-04", "purchase", 1.20), ("2024-01-04", "view", 1.00),
-      ("2024-01-05", "purchase", 1.00), ("2024-01-05", "view", 1.00))
-    val ev = rows.zipWithIndex.map { case ((d, et, v), i) =>
-      (i.toLong, i.toLong, et, d + " 12:00:00", v)
-    }.toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("value"))
-    val out = Robust.wilcoxonSignedRankOf(ev).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getLong(0) == 4L, s"zero-diff day dropped: $r")
-    assert(r.getLong(1) == 17L, s"doubled W+: $r")
-    val z = math.floor(7.0 / math.sqrt(29.0) * 1e6 + 0.5) / 1e6
-    assert(r.getDouble(2) == z, s"z = 7/sqrt(29): $r")
-    assert(!r.getBoolean(3))
-  }
-
-  test("wilcoxon_signed_rank: an everywhere-tied pairing emits nothing") {
-    val ev = Seq(
-      (1L, 1L, "purchase", "2024-01-01 12:00:00", 2.0),
-      (2L, 2L, "view", "2024-01-01 12:00:00", 2.0))
-      .toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("t")).as("ts"), col("value"))
-    assert(Robust.wilcoxonSignedRankOf(ev).collect().isEmpty)
   }
 
   // ---- quantile lift: planted separation pins every quantile ----
@@ -531,36 +420,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
 
   // ---- fourth tranche: the assumption-audit stats shelf ----
 
-  private def pvEvents(rows: (String, Double, Double)*): DataFrame =
-    // one purchase and one view row per day
-    rows.flatMap { case (d, p, v) =>
-      Seq((d, "purchase", p), (d, "view", v))
-    }.zipWithIndex.map { case ((d, t, x), i) => (i.toLong, i.toLong, t, d, x) }
-      .toDF("event_id", "user_id", "event_type", "d", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(col("d")).as("ts"), col("value"))
-
-  test("sign_test: hand-counted signs, tie mass published, z = 2/sqrt(4)") {
-    val e = pvEvents(
-      ("2024-01-01 00:00:00", 2.0, 1.0),  // +
-      ("2024-01-02 00:00:00", 3.0, 1.0),  // +
-      ("2024-01-03 00:00:00", 4.0, 1.0),  // +
-      ("2024-01-04 00:00:00", 1.0, 2.0),  // −
-      ("2024-01-05 00:00:00", 5.0, 5.0))  // tie: dropped, counted
-    val out = Robust.signTestOf(e).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getLong(0) == 3L && r.getLong(1) == 1L && r.getLong(2) == 1L)
-    assert(r.getDouble(3) == 1.0, s"z = (3-1)/sqrt(4): $r")
-    assert(!r.getBoolean(4))
-  }
-
-  test("sign_test: every day tying emits nothing") {
-    val e = pvEvents(("2024-01-01 00:00:00", 2.0, 2.0),
-      ("2024-01-02 00:00:00", 3.0, 3.0))
-    assert(Robust.signTestOf(e).collect().isEmpty)
-  }
-
   test("mood_median: planted arm separation is significant; all-equal type refuses") {
     // Resolve the engine's own arm assignment, plant arm-ordered
     // values for 'buy' and a constant for 'flat'.
@@ -630,33 +489,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     val const = mk((1 to 20).map(i => (f"2024-01-$i%02d 00:00:00", 3)))
     val c = EventAnalytics.ljungBoxOf(const).collect()(0)
     assert(c.isNullAt(3) && c.isNullAt(4), s"constant refuses: $c")
-  }
-
-  test("tost_equivalence: same-mean arms read equivalent, a planted lift does not") {
-    // every user contributes 8.0 and 12.0 → each arm's mean is
-    // EXACTLY 10, within-arm variance 4 → se ~ 0.28 at ~100/arm,
-    // margin = 1.0 → both z ~ 3.5
-    val same = (1L to 100L).flatMap { u =>
-      Seq((u * 2, u, "buy", 8.0), (u * 2 + 1, u, "buy", 12.0))
-    }.toDF("event_id", "user_id", "event_type", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(lit("2024-01-01 00:00:00")).as("ts"), col("value"))
-    val eq = Behavior.tostEquivalenceOf(same).collect()(0)
-    assert(eq.getDouble(3) == 0.0, s"mean diff exactly 0: $eq")
-    assert(eq.getDouble(4) == 1.0, s"margin = 10% of control mean: $eq")
-    assert(eq.getBoolean(7), s"same-mean arms must read equivalent: $eq")
-    // resolve arms, plant +10 on arm 1: far outside the 1.0 margin
-    val arms = (1L to 100L).toDF("user_id")
-      .select(col("user_id"), Behavior.arm2(col("user_id")).as("arm"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val shifted = (1L to 100L).flatMap { u =>
-      val base = 10.0 * arms(u)
-      Seq((u * 2, u, "buy", base + 8.0), (u * 2 + 1, u, "buy", base + 12.0))
-    }.toDF("event_id", "user_id", "event_type", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_timestamp(lit("2024-01-01 00:00:00")).as("ts"), col("value"))
-    val ne = Behavior.tostEquivalenceOf(shifted).collect()(0)
-    assert(!ne.getBoolean(7), s"a 10-unit lift is not equivalence: $ne")
   }
 
   // ---- fifth tranche: n-gram novelty, the acquisition curve ----

@@ -225,7 +225,7 @@ class ScaleApproxSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("default: the registered exact wrappers build the exact path") {
-    assert(!Dedup.dupMatrix(spark, Dir)
+    assert(!SparkEntry.queries("dup_matrix")(spark, Dir)
       .queryExecution.analyzed.toString.contains("hll_union"))
   }
 }
