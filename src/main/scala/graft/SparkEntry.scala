@@ -496,21 +496,25 @@ object SparkEntry {
     // image perceptual-hash dedup (rows 346-348)
     "cluster_stability_ari" -> on(embeddings)(Cluster.clusterStabilityAriOf(_)),
     "median_ci"         -> on(events)(Robust.medianCiOf),
-    "image_ahash_dedup" -> (Multimodal.imageAhashDedup(_, _)),
+    "image_ahash_dedup" ->
+      ((s, d) => Multimodal.imageAhashDedupOf(s, Tables.documents(s, d))),
     // Round-15 tranche: DCT perceptual-hash twin (SURVEY §2 row 423)
-    "image_phash_dedup" -> (Multimodal.imagePhashDedup(_, _)),
+    "image_phash_dedup" ->
+      ((s, d) => Multimodal.imagePhashDedupOf(s, Tables.documents(s, d))),
     // Round-12 twentieth tranche: TPC-H Q1 pricing summary, HL
     // pseudo-median, cross-modal dedup audit (rows 349-351)
     "pricing_summary"   -> on(lineitem)(Warehouse.pricingSummaryOf),
     "hodges_lehmann"    -> on(events)(Robust.hodgesLehmannOf),
-    "crossmodal_dedup_audit" -> (Multimodal.crossmodalDedupAudit(_, _)),
+    "crossmodal_dedup_audit" ->
+      ((s, d) => Multimodal.crossmodalDedupAuditOf(s, Tables.documents(s, d))),
     // Round-12 twenty-first tranche: Q14, DeLong SE, mutual-kNN,
     // aHash threshold sweep (rows 352-355)
     "promotion_effect" ->
       ((s, d) => Warehouse.promotionEffectOf(Tables.lineitem(s, d), Tables.part(s, d))),
     "auc_delong_se"     -> on(documents)(CorpusStats.aucDelongSeOf(_)),
     "mutual_knn_rate"   -> on(embeddings)(Cluster.mutualKnnRateOf(_)),
-    "ahash_threshold_sweep" -> (Multimodal.ahashThresholdSweep(_, _)),
+    "ahash_threshold_sweep" ->
+      ((s, d) => Multimodal.ahashThresholdSweepOf(s, Tables.documents(s, d))),
     // Round-12 twenty-second tranche: Q13 distribution, decile lift
     // table, weekday effect size (rows 356-358)
     "orders_per_customer_dist" ->

@@ -540,12 +540,6 @@ object Multimodal {
         (col("wpairs") + col("dpairs")).cast("long").as("n_dup_pairs"))
   }
 
-  def imageAhashDedup(spark: SparkSession, dir: String): DataFrame =
-    imageAhashDedupOf(spark, Tables.documents(spark, dir))
-
-  def imagePhashDedup(spark: SparkSession, dir: String): DataFrame =
-    imagePhashDedupOf(spark, Tables.documents(spark, dir))
-
   /** Cross-modal dedup agreement: exact TEXT duplicate pairs vs
     * [[imageAhashDedupOf]]'s image near-dup pairs over the same
     * corpus — identical text implies identical pixels, so text pairs
@@ -577,9 +571,6 @@ object Multimodal {
                 THEN (tpairs * 1000000) div n_dup_pairs
                 ELSE NULL END""").as("containment_ppm"))
   }
-
-  def crossmodalDedupAudit(spark: SparkSession, dir: String): DataFrame =
-    crossmodalDedupAuditOf(spark, Tables.documents(spark, dir))
 
   /** Hamming-threshold sensitivity sweep for the image near-dup
     * detector — row 348's knob curve (the `banding_sweep`/
@@ -614,7 +605,4 @@ object Multimodal {
         (col("wpairs") + col("cpairs")).cast("long").as("n_dup_pairs"))
       .orderBy("threshold")
   }
-
-  def ahashThresholdSweep(spark: SparkSession, dir: String): DataFrame =
-    ahashThresholdSweepOf(spark, Tables.documents(spark, dir))
 }

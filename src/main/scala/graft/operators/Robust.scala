@@ -315,7 +315,7 @@ object Robust {
     * sqrt, one division, identical text both engines; a fully-tied
     * series nulls z via try_divide (√0 denominator), while a 1-day
     * series has no pair at all — the inner pair-join drops the type
-    * row entirely (pinned by TrancheAuditSpec).
+    * row entirely (pinned by RobustSpec).
     *
     * Shape: the [[theilSenTrendOf]] (type, day) aggregate + its
     * calendar-bounded pair self-join (the shared `dailyRevenue` and
@@ -855,7 +855,7 @@ object Robust {
         // the variance's OWN denominator n²(n−1) is 0 on an n=1
         // series (one day off the median) — try_divide must wrap the
         // inner division too, or ANSI mode throws DIVIDE_BY_ZERO
-        // before the outer guard ever runs (caught by TrancheAuditSpec)
+        // before the outer guard ever runs (pinned by RobustSpec)
         TextF.round4HalfUp(expr(
           """try_divide(
             |  CAST(runs AS DOUBLE) - (1.0

@@ -537,4 +537,24 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
         s"mean displacement in the random-permutation band: $audit")
     }
   }
+
+  test("split leakage on a pair-free corpus is empty, not a 0/0 error") {
+    val docs = Seq(
+      (1L, "web", "alpha beta gamma delta epsilon"),
+      (2L, "web", "one two three four five"))
+      .toDF("doc_id", "source", "text")
+    assert(graft.operators.Corpus.splitLeakageOf(docs).isEmpty,
+      "no near-dup pairs -> no rows (the ppm division never runs)")
+  }
+
+  test("epoch shuffle survives a single-doc corpus") {
+    val docs = Seq((7L, "s", "only doc")).toDF("doc_id", "source", "text")
+    val pos = graft.operators.Corpus.epochShuffleOf(docs).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted
+    assert(pos.toSeq == Seq((0, 7L, 1L), (1, 7L, 1L), (2, 7L, 1L)), s"$pos")
+    val audit = graft.operators.Corpus.epochShuffleAuditOf(docs).collect()
+    assert(audit.length == 3 && audit.forall(r =>
+      r.getLong(2) == 1L && r.getLong(3) == 0L),
+      s"one doc: zero displacement in every epoch pair: ${audit.toSeq}")
+  }
 }

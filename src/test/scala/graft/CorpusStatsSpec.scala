@@ -991,4 +991,32 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
     assert(out == Map("x" -> ((3L, 1L, 2000000L)),
       "y" -> ((3L, 3L, 0L))), s"got $out")
   }
+
+  // ---- PRF retrieval: empty feedback set, all-banned expansion,
+  // ---- and the vocabulary-mismatch fix actually firing
+
+  test("prf: a corpus with zero query matches returns the empty ranking, no crash") {
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    assert(CorpusStats.prfSearchOf(docs).isEmpty)
+  }
+
+  test("prf: feedback docs with only stopword/query tokens expand nothing and degrade to pass-1") {
+    val docs = Seq((1L, "spark merge window the and"), (2L, "unrelated body here"))
+      .toDF("doc_id", "text")
+    val out = CorpusStats.prfSearchOf(docs).collect().map(_.getLong(0)).toSeq
+    assert(out == Seq(1L),
+      s"no expansion terms exist; only the query-matching doc ranks: $out")
+  }
+
+  test("prf: the expansion term retrieves a doc the raw query cannot") {
+    val docs = Seq(
+      (1L, "spark merge catalyst planner"),
+      (2L, "catalyst tungsten codegen"), // no query term at all
+      (3L, "completely different words")).toDF("doc_id", "text")
+    val got = CorpusStats.prfSearchOf(docs).collect().map(_.getLong(0)).toSet
+    assert(got.contains(2L),
+      s"doc 2 is reachable only through the mined expansion term: $got")
+    assert(!got.contains(3L), s"doc 3 shares no term with the expanded query: $got")
+  }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Corpus, Dedup}
+import graft.sources.Tables
 
 class DedupSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -537,5 +538,52 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     val pairsByBandsDesc = rows.map(_._2._2).toSeq
     assert(pairsByBandsDesc.zip(pairsByBandsDesc.tail).forall { case (a, b) => a >= b },
       s"pairs must be monotone in bands: $pairsByBandsDesc")
+  }
+
+  test("hot-key-proof gram passes survive a single-gram-dominant corpus unchanged") {
+    // the planted-skew semantics pin (the ×100 perf corner lives in
+    // SURVEY §6): appending ONE shared 16-token run to 30% of docs
+    // must (a) not disturb other docs' novelty, (b) count the planted
+    // 8-grams as boilerplate for every planted doc
+    val docs = Tables.documents(spark, Sf)
+    val planted = (1 to 16).map(i => s"plantedboiler$i").mkString(" ")
+    val skew = docs.withColumn("text",
+      when(pmod(xxhash64(col("doc_id")), lit(100)) < 30,
+        concat(col("text"), lit(" " + planted))).otherwise(col("text")))
+    val base = graft.operators.Dedup.ngramNoveltyOf(docs).collect()
+      .map(r => r.getLong(0) -> r.getLong(3)).toMap
+    val out = graft.operators.Dedup.ngramNoveltyOf(skew).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
+    val plantedIds = skew.filter(
+      pmod(xxhash64(col("doc_id")), lit(100)) < 30)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(plantedIds.nonEmpty, "fixture must plant something")
+    out.foreach { case (id, _, novel) =>
+      if (!plantedIds.contains(id))
+        assert(novel == base(id), s"unplanted doc $id novelty moved")
+    }
+    // exactly ONE planted doc (the min id) owns the 9 run-internal
+    // grams as novel; every planted doc may also gain up to 7 doc-
+    // unique JUNCTION grams (8-grams straddling its own tail and the
+    // planted run), but no more
+    val minPlanted = plantedIds.min
+    out.foreach { case (id, _, novel) =>
+      if (plantedIds.contains(id) && id != minPlanted)
+        assert(novel <= base(id) + 7,
+          s"planted doc $id claimed run-internal grams: $novel vs base ${base(id)}")
+    }
+    val minNovel = out.collectFirst { case (`minPlanted`, _, n) => n }.get
+    assert(minNovel >= base(minPlanted) + 9,
+      s"first planted doc must own the 9 run-internal grams: " +
+        s"$minNovel vs base ${base(minPlanted)}")
+    // boilerplate: every planted doc counts planted grams as dup mass
+    val bp = Corpus.boilerplateStatsOf(skew).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val bpBase = Corpus.boilerplateStatsOf(docs).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    plantedIds.foreach { id =>
+      assert(bp(id) >= bpBase.getOrElse(id, 0L) + 9,
+        s"planted doc $id must read its 9+ planted 8-grams as dup")
+    }
   }
 }

@@ -1108,4 +1108,119 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkFixture {
     assert(out("b") == ((1L, 1L, 0L, 1000000L, 0L)),
       s"a single day is complete by its own span: ${out("b")}")
   }
+
+  private def valued(rows: (String, String, Double)*): DataFrame =
+    rows.zipWithIndex.map { case ((et, t, v), i) =>
+      (i.toLong, i.toLong, et, t, v)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+
+  // ---- Pettitt: hand-computed level shift, tie-heavy, single-day
+
+  test("pettitt: a clean level shift lands K=16 at the boundary day, below significance") {
+    // 1 event/day Jan 1-4, 3/day Jan 5-8: U_t = -4(t+1) for t<=3 then
+    // -4(7-t); K = 16 at t = 3. 6K² = 1536 < 3.68888·(8³+8²) = 2124.8.
+    val rows = (1 to 4).map(d => ("click", f"2024-01-0$d%d 10:00:00", 1.0)) ++
+      (5 to 8).flatMap(d => (0 until 3).map(h =>
+        ("click", f"2024-01-0$d%d 1$h%d:00:00", 1.0)))
+    val out = EventAnalytics.pettittChangepointOf(valued(rows: _*)).collect()
+    assert(out.length == 1)
+    val r = out.head
+    assert(r.getLong(1) == 8L && r.getLong(2) == 16L && r.getLong(3) == 3L,
+      s"t_days=8, K=16, change at idx 3: $r")
+    assert(r.getDate(4).toString == "2024-01-04", s"boundary day: $r")
+    assert(!r.getBoolean(5), s"K=16 on T=8 is not significant: $r")
+  }
+
+  test("pettitt: an all-tied series reads K=0 at the earliest boundary, not significant") {
+    val rows = (1 to 5).map(d => ("click", f"2024-01-0$d%d 10:00:00", 1.0))
+    val r = EventAnalytics.pettittChangepointOf(valued(rows: _*)).collect().head
+    assert(r.getLong(2) == 0L && r.getLong(3) == 0L && !r.getBoolean(5),
+      s"ties everywhere → zero statistic, earliest argmax: $r")
+  }
+
+  test("pettitt: a single-day corpus has no boundary to test — empty output, no crash") {
+    val ev = valued(("click", "2024-01-05 10:00:00", 1.0),
+      ("click", "2024-01-05 11:00:00", 2.0))
+    assert(EventAnalytics.pettittChangepointOf(ev).isEmpty)
+  }
+
+  // ---- SBC demand classes: the single-demand-day CV²=0 convention
+
+  test("demand classes: single-demand-day and constant-size items read CV²=0 and class by ADI") {
+    val ev = Seq(
+      (1L, 1L, "purchase", "2024-01-01 10:00:00", """{"k": 1}"""),
+      (2L, 2L, "purchase", "2024-01-01 11:00:00", """{"k": 1}"""),
+      (3L, 3L, "purchase", "2024-01-01 10:00:00", """{"k": 2}"""),
+      (4L, 4L, "purchase", "2024-01-08 10:00:00", """{"k": 2}"""))
+      .toDF("event_id", "user_id", "event_type", "t", "props")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("props"))
+    val out = EventAnalytics.demandClassesOf(ev).collect()
+      .map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5))))
+      .toMap
+    // span Jan 1..8 → T=8; item 1: nd=1, ADI=8 ≥ 4/3 → intermittent,
+    // var = 1·4-4 = 0; item 2: nd=2 equal sizes → var = 2·2-4 = 0.
+    assert(out(1L) == ((8L, 1L, 8000000L, 0L, "intermittent")), s"$out")
+    assert(out(2L) == ((8L, 2L, 4000000L, 0L, "intermittent")), s"$out")
+  }
+
+  private def dayCounts(rows: Seq[(String, Int)]): DataFrame =
+    rows.flatMap { case (d, c) => (1 to c).map(j => (d, j)) }
+      .zipWithIndex.map { case ((d, _), i) => (i.toLong, i.toLong, "buy", d) }
+      .toDF("event_id", "user_id", "event_type", "d")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("d")).as("ts"), lit(1.0).as("value"))
+
+  test("ljung_box at maxLag=1 gates on the df=1 critical value, not the df=7 literal") {
+    // 10 days alternating 1/11 events: r1 = -0.9 exactly, so
+    // Q = n(n+2)·r1²/(n−1) = 10·12·0.81/9 = 10.8 — ABOVE the df=1
+    // 0.95 quantile (3.841) but BELOW the df=7 literal (14.067) the
+    // pre-r17 code compared every maxLag against: the fix flips this
+    // verdict from a wrong false to true.
+    val alt = dayCounts((1 to 10).map(i =>
+      (f"2024-01-$i%02d 00:00:00", if (i % 2 == 0) 11 else 1)))
+    val out = EventAnalytics.ljungBoxOf(alt, maxLag = 1).collect()(0)
+    assert(out.getLong(2) == 1L, s"lags_used: $out")
+    assert(math.abs(out.getDouble(3) - 10.8) < 1e-6, s"q_stat: $out")
+    assert(!out.isNullAt(4) && out.getBoolean(4),
+      s"10.8 > chi2(df=1, 0.95) = 3.84 must read significant: $out")
+    // control: the same series is NOT significant against df=12
+    // (21.03) when all 12 lags are in play and most r_k are small
+    val long = dayCounts((1 to 20).map(i =>
+      (f"2024-01-$i%02d 00:00:00", if (i % 2 == 0) 4 else 2)))
+    val o12 = EventAnalytics.ljungBoxOf(long, maxLag = 12).collect()(0)
+    assert(o12.getLong(2) == 12L && !o12.isNullAt(4), s"df=12 gates: $o12")
+  }
+
+  private def evFrame(rows: (Long, Long, String, String, Double)*): DataFrame =
+    rows.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+
+  test("ccf with a single event type emits nothing (no pair exists)") {
+    val ev = evFrame((1 to 5).map(d =>
+      (d.toLong, d.toLong, "only", f"2024-01-0$d 10:00:00", 1.0)): _*)
+    assert(graft.operators.EventAnalytics.ccfLeadlagOf(ev).isEmpty)
+  }
+
+  test("ccf parameter bounds and reorder/epoch/aa require-guards refuse") {
+    val ev = evFrame((1L, 1L, "a", "2024-01-01 10:00:00", 1.0))
+    val docs = Seq((1L, "s", "t")).toDF("doc_id", "source", "text")
+    intercept[IllegalArgumentException](
+      graft.operators.EventAnalytics.ccfLeadlagOf(ev, maxLag = 0))
+    intercept[IllegalArgumentException](
+      graft.operators.EventAnalytics.ccfLeadlagOf(ev, maxLag = 15))
+    intercept[IllegalArgumentException](
+      graft.operators.Warehouse.reorderPointOf(
+        Seq((1L, java.sql.Timestamp.valueOf("2020-01-01 00:00:00"), 1.0))
+          .toDF("l_partkey", "l_shipdate", "l_quantity"),
+        Seq((1L, "B")).toDF("p_partkey", "p_brand"), leadDays = 0))
+    intercept[IllegalArgumentException](
+      graft.operators.Corpus.epochShuffleOf(docs, epochs = 1))
+    intercept[IllegalArgumentException](
+      graft.operators.Behavior.aaCalibrationOf(ev, cells = 7))
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Behavior, Cluster, Corpus, CtrAlerts, Dedup, EventAnalytics, Graph, Similarity, TextAnalysis}
+import graft.operators.{Behavior, Cluster, Corpus, CtrAlerts, Dedup, EventAnalytics, Graph, Multimodal, Similarity, TextAnalysis}
 
 /** Plan-shape regression tests: the ExplainAudit invariants, asserted
   * on the planner output so a regression fails CI instead of waiting
@@ -20,6 +20,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   // A registered query exactly as the driver builds it.
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, Sf)
+
+  private def docs: DataFrame = graft.sources.Tables.documents(spark, Sf)
 
   // Nested-loop joins are allowed ONLY where a side is bounded by
   // construction: knnTopk/annHamming (fixed query set), annIvf/kmeans
@@ -1496,8 +1498,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // image/crossmodal dedup: the band join is an equijoin over
     // DISTINCT hashes; only bounded 1-row folds cross.
-    Seq("image_ahash" -> plan(graft.operators.Multimodal.imageAhashDedup(spark, Sf)),
-      "crossmodal" -> plan(graft.operators.Multimodal.crossmodalDedupAudit(spark, Sf)))
+    Seq("image_ahash" -> plan(Multimodal.imageAhashDedupOf(spark, docs)),
+      "crossmodal" -> plan(Multimodal.crossmodalDedupAuditOf(spark, docs)))
       .foreach { case (n, p) => noCartesian(n, p) }
     // cluster_stability_ari: k-row/1-row crosses only, no cartesian.
     noCartesian("ari", plan(q("cluster_stability_ari")))
@@ -1538,7 +1540,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "dau_stickiness" -> plan(q("dau_stickiness")),
       "mutual_knn_rate" -> plan(q("mutual_knn_rate")),
       "ahash_threshold_sweep" ->
-        plan(graft.operators.Multimodal.ahashThresholdSweep(spark, Sf)),
+        plan(Multimodal.ahashThresholdSweepOf(spark, docs)),
       "cross_source_dup_share" ->
         plan(q("cross_source_dup_share")))
       .foreach { case (n, p) => noCartesian(n, p) }
@@ -1823,9 +1825,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // nested loops are 1-row readout crosses
     for ((n, p) <- Seq(
       "image_phash_dedup" ->
-        plan(graft.operators.Multimodal.imagePhashDedup(spark, Sf)),
+        plan(Multimodal.imagePhashDedupOf(spark, docs)),
       "audio_tone_detect" ->
-        plan(graft.operators.Multimodal.audioToneDetect(spark, Sf)))) {
+        plan(Multimodal.audioToneDetect(spark, Sf)))) {
       noCartesian(n, p)
       assert(bnlj(p).length <= 1, s"$n: 1-row readout cross only:\n$p")
     }

@@ -8,7 +8,7 @@ import graft.operators.{Behavior, CorpusStats, EventAnalytics, Multimodal,
   Robust, Similarity, Warehouse}
 
 /** Adversarial edge-case audit of the round-16 operator tranche (the
-  * standing TrancheAuditSpec practice): every case pins either a
+  * standing hostile-input practice): every case pins either a
   * hand-computed exact value on a fixture built to stress the
   * argued-but-untested property (threshold boundaries, window-max
   * ties, denominator-zero refusals) or the DOCUMENTED degradation on

@@ -4,12 +4,14 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared run mechanics of the registry-driving mains, over a
   * registry of three tiny queries: `one` persists a block and
-  * succeeds, `boom` persists a block and throws, `two` succeeds. */
+  * succeeds, `boom` persists a block and throws, `two` succeeds; and
+  * the generated-code reuse of the session `Sessions` builds. */
 class RunnerSpec extends AnyFunSuite with SparkFixture {
 
   private def persistBlock(s: SparkSession): Unit =
@@ -69,6 +71,25 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     assert(seen.map(_._2).tail.forall(_ == 1), s"runs saw leftover blocks: $seen")
     assert(persisted == 0)
     assert(best >= 0.0)
+  }
+
+  test("a second rotation of a query panel compiles no generated code") {
+    // One query per large operator family. The eight compile more
+    // classes than Spark's default codegen cache of 100 holds (177 in
+    // a fresh JVM with stage ids in class names), so at that default
+    // every rotation evicted what the next one needed and recompiled
+    // about 170 of them.
+    val panel = Seq("event_transitions", "benford_audit", "weekday_envelope",
+      "hellinger_matrix", "theilsen_trend", "weighted_sample", "ann_hamming",
+      "reciprocity")
+    def compiledByRotation(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      panel.foreach(name => SparkEntry.queries(name)(spark, Sf).queryExecution.toRdd.count())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiledByRotation()
+    val warm = compiledByRotation()
+    assert(warm == 0, s"the warm rotation recompiled $warm classes")
   }
 
   test("ExplainAudit writes plans for the healthy queries and reports the number it wrote") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHash
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CorpusStats, Dedup}
+import graft.operators.{Corpus, CorpusStats, Dedup, TextAnalysis}
 import graft.sources.Tables
 
 /** The sketch-path (`approx = true`) contract: every sketch swap must
@@ -227,5 +227,16 @@ class ScaleApproxSpec extends AnyFunSuite with SparkFixture {
   test("default: the registered exact wrappers build the exact path") {
     assert(!SparkEntry.queries("dup_matrix")(spark, Dir)
       .queryExecution.analyzed.toString.contains("hll_union"))
+  }
+
+  test("sketch twins return empty frames on an empty corpus, never an error") {
+    val empty = Tables.documents(spark, Sf).filter(lit(false))
+    assert(Corpus.sourceOverlapMatrixOf(empty, approx = true).isEmpty)
+    assert(Corpus.sentenceDedupOf(empty, approx = true).isEmpty)
+    assert(TextAnalysis.winnowFingerprintsOf(empty, approx = true).isEmpty)
+    // and the exact twins agree on the degenerate contract
+    assert(Corpus.sourceOverlapMatrixOf(empty).isEmpty)
+    assert(Corpus.sentenceDedupOf(empty).isEmpty)
+    assert(TextAnalysis.winnowFingerprintsOf(empty).isEmpty)
   }
 }

@@ -256,4 +256,26 @@ class TextSpec extends AnyFunSuite with SparkFixture {
     assert(aPrints >= aDistinct && aDens <= 1000000L, s"got $out")
     assert(out("B") == ((1L, 1L, 1L, 1000000L, 1L, 0L)), s"got $out")
   }
+
+  // ---- code-switch: the minEvidence boundary and the unmatched source
+
+  test("code-switch: total-best == minEvidence is mixed; one foreign word is not") {
+    val docs = Seq(
+      ("a", "the of und"),      // en 2, de 1 → diff 1 < 2: pure enough
+      ("a", "the of und die"),  // en 2, de 2 → diff 2 = minEvidence: mixed
+      ("b", "zzz qqq"))         // no profile word at all
+      .toDF("source", "text")
+    val out = TextAnalysis.codeSwitchOf(docs).collect()
+      .map(r => r.getString(0) -> r).toMap
+    val a = out("a")
+    assert(a.getLong(1) == 2L && a.getLong(2) == 2L && a.getLong(3) == 1L,
+      s"both matched, exactly the boundary doc is mixed: $a")
+    assert(a.getLong(4) == 500000L, s"mixed share 1/2: $a")
+    // purities: 2e6 div 3 = 666666 and 2e6 div 4 = 500000 → mean 583333
+    assert(a.getLong(5) == 583333L, s"mean purity: $a")
+    val b = out("b")
+    assert(b.getLong(1) == 1L && b.getLong(2) == 0L && b.getLong(3) == 0L)
+    assert(b.isNullAt(4) && b.isNullAt(5),
+      s"an unmatched source reads NULL shares, never a 0-division: $b")
+  }
 }
