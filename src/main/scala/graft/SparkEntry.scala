@@ -70,13 +70,13 @@ object SparkEntry {
     // Round-15 tranche: Chapman capture-recapture undercount (row 426)
     "dedup_capture_recapture" -> on(documents)(Dedup.dedupCaptureRecaptureOf),
     "dedup_cosine"     -> on(embeddings)(Similarity.dedupCosineOf(_)),
-    "knn_topk"         -> (Similarity.knnTopk(_, _)),
-    "ann_lsh"          -> (Similarity.annLsh(_, _)),
+    "knn_topk"         -> on(embeddings)(Similarity.knnTopkOf),
+    "ann_lsh"          -> on(embeddings)(Similarity.annLshOf),
     "token_count"      -> (TextAnalysis.tokenCount(_, _)),
     "token_count_bpe"  -> (TextAnalysis.tokenCountBpe(_, _)),
     // Round-15 tranche: tokenizer Bland-Altman agreement (row 429)
     "bland_altman"     -> on(documents)(TextAnalysis.blandAltmanOf),
-    "ann_ivf"          -> (Similarity.annIvf(_, _)),
+    "ann_ivf"          -> on(embeddings)(Similarity.annIvfOf),
     "text_stats"       -> (TextAnalysis.textStats(_, _)),
     "quality_score"    -> (TextAnalysis.qualityScore(_, _)),
     "doc_fingerprint"  -> (TextAnalysis.docFingerprint(_, _)),
@@ -149,7 +149,7 @@ object SparkEntry {
     "latest_per_key"    -> on(events)(Warehouse.latestPerKeyOf),
     "source_temperature" -> on(documents)(Corpus.sourceTemperatureOf),
     "rolling_reach"     -> on(events)(EventAnalytics.rollingReachOf(_)),
-    "ann_recall"        -> (Similarity.annRecall(_, _)),
+    "ann_recall"        -> on(embeddings)(Similarity.annRecallOf),
     "range_window"      -> on(events)(EventAnalytics.rangeWindowOf(_)),
     // rows-only: PQ codebook internals are not SQL-expressible (cf. #16)
     "ann_pq"            -> (Pq.annPq(_, _)),
@@ -448,8 +448,8 @@ object SparkEntry {
     // audits (rows 319-321)
     "price_volume_mix" ->
       ((s, d) => Warehouse.priceVolumeMixOf(Tables.lineitem(s, d), Tables.part(s, d))),
-    "nprobe_sweep"      -> ((s, d) => Similarity.nprobeSweep(s, d)),
-    "ivf_balance"       -> (Similarity.ivfBalance(_, _)),
+    "nprobe_sweep"      -> on(embeddings)(Similarity.nprobeSweepOf(_)),
+    "ivf_balance"       -> on(embeddings)(Similarity.ivfBalanceOf),
     // Round-12 twelfth tranche: source-distribution distance,
     // embedding dim health, dormancy spells (rows 322-324)
     "source_word_tvd"   -> on(documents)(CorpusStats.sourceWordTvdOf(_)),

@@ -15,6 +15,11 @@ object VectorF {
       ColumnBridge.expression(a.cast("array<double>")),
       ColumnBridge.expression(b.cast("array<double>"))))
 
+  /** [[cosineSim]] rounded to 6 places: the score every ranking and
+    * threshold over embeddings compares, so rank order and flags are
+    * reproducible bit-for-bit across engines. */
+  def roundedCosine(a: Column, b: Column): Column = round(cosineSim(a, b), 6)
+
   /** Built-in-functions fallback (zip_with + aggregate). Same result,
     * slower (higher-order functions are interpreted); kept as the
     * cross-check for the codegen path. */

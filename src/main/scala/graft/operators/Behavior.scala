@@ -616,7 +616,7 @@ object Behavior {
   def arm2(userId: Column): Column = armOf(userId, 2L)
 
   /** A value on the exact micro grid: round-half-up to 1e-6, as a long. */
-  private[operators] def micro(v: Column): Column =
+  private[graft] def micro(v: Column): Column =
     floor(v * 1e6 + lit(0.5)).cast("long")
 
   /** The report day (the last event day) as a 1-row broadcastable

@@ -14,8 +14,8 @@ import graft.functions.VectorF
   * - assignment: every vector scores against the k centroids (a
   *   broadcast of k rows — BOUNDED by the k parameter, unlike a
   *   per-key aggregate, so the broadcast survives any corpus size) and
-  *   keeps its argmax-cosine cell via a partition-local
-  *   row_number() = 1 (WindowGroupLimit — no global sort);
+  *   keeps its argmax-cosine cell via [[Similarity.topK]] with k = 1
+  *   (WindowGroupLimit — no global sort);
   * - update: element-wise centroid means via posexplode →
   *   (cluster, dim) avg — a map-side-combinable aggregate that
   *   shuffles k·dim rows, independent of corpus size.
@@ -24,24 +24,28 @@ import graft.functions.VectorF
   * components round to 6 places before any comparison, ties break on
   * the lowest centroid id, and seeds are the first k vectors (not a
   * random init).
+  *
+  * One Lloyd loop ([[lloyd]]) returns the final centroids; every
+  * k-means query applies the assignment once on top of it.
   */
 object Cluster {
 
   val K = 8
   val Iterations = 2
 
+  /** (vec_id, emb): the embedding column widened to double — the
+    * frame every k-means step reads. */
+  private def vectors(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+
   /** One assignment pass: nearest centroid by rounded cosine, ties to
     * the lowest centroid id. `cents` must be (c_id, c_emb). */
-  private def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val byScore = Window.partitionBy("vec_id")
-      .orderBy(col("cs").desc, col("c_id"))
-    vecs.join(broadcast(cents)) // k rows — bounded by construction
-      .select(col("vec_id"), col("emb"), col("c_id"),
-        round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") === 1)
+  private def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    Similarity.topK(vecs.join(broadcast(cents)) // k rows — bounded by construction
+        .select(col("vec_id"), col("emb"), col("c_id"),
+          VectorF.roundedCosine(col("emb"), col("c_emb")).as("cs")),
+        "vec_id", col("cs").desc, "c_id", 1, "rn")
       .select(col("vec_id"), col("emb"), col("c_id").as("cluster"), col("cs"))
-  }
 
   /** Element-wise quantized-mean centroid per `keyCol` group — the ONE
     * implementation of the cross-engine centroid contract (shared by
@@ -72,19 +76,23 @@ object Cluster {
     quantizedCentroids(assigned, "cluster")
       .select(col("cluster").as("c_id"), col("c_emb"))
 
+  /** The Lloyd loop: seeds are the vectors `seeds` selects, then
+    * `iters` − 1 rounds of assign + recenter. Returns the centroids
+    * (c_id, c_emb) that the `iters`-th assignment scores against. */
+  private def lloyd(vecs: DataFrame, seeds: Column, iters: Int): DataFrame =
+    (1 until iters).foldLeft(vecs.filter(seeds)
+        .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))) { (c, _) =>
+      recenter(assign(vecs, c))
+    }
+
   /** The final Lloyd-iteration assignment frame (vec_id, emb, cluster,
     * cs) — shared by the clustering report and [[semDedupOf]], so the
     * two can never run on diverging assignments. */
   private[operators] def assignedOf(embeddings: DataFrame, k: Int,
                                     iters: Int): DataFrame = {
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0, got k=$k iters=$iters")
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val seeds = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    (1 until iters).foldLeft(assign(vecs, seeds)) { (a, _) =>
-      assign(vecs, recenter(a))
-    }
+    val vecs = vectors(embeddings)
+    assign(vecs, lloyd(vecs, col("vec_id") < k, iters))
   }
 
   /** `iters` Lloyd iterations of spherical k-means seeded on the first
@@ -110,7 +118,7 @@ object Cluster {
     val cents = quantizedCentroids(vecs, "label")
     vecs.join(cents, "label")
       .select(col("label"),
-        round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"))
+        VectorF.roundedCosine(col("emb"), col("c_emb")).as("cs"))
       // zero-norm member or centroid → cosine NULL; keep the stats over
       // SCORED members only, or `n` would divide a sum the NULL rows
       // never joined (the oracle filters the same rows via isnan)
@@ -145,12 +153,10 @@ object Cluster {
     * center, updates the running min-distance column map-side, and
     * takes a global top-1 (TakeOrderedAndProject, no full sort); the
     * state localCheckpoints per round so the plan stays flat (the
-    * eager-iteration pattern of [[assignedOf]]'s Lloyd loop and the
-    * BPE merge trainer). */
+    * eager-iteration pattern of the BPE merge trainer). */
   def kCenterSelectOf(embeddings: DataFrame, k: Int = 8): DataFrame = {
     require(k > 1 && k <= 64, s"k in (1, 64], got $k")
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    val vecs = vectors(embeddings)
     def d6(a: Column, b: Column): Column =
       lit(1000000L) - Behavior.micro(VectorF.cosineSim(a, b))
     val seedRow = vecs.orderBy("vec_id").limit(1)
@@ -205,7 +211,7 @@ object Cluster {
       col("emb").as("b_emb"))
     val dups = a.join(b, a("cluster") === b("cluster") &&
         col("b_id") < col("vec_id"))
-      .filter(round(VectorF.cosineSim(col("emb"), col("b_emb")), 6) >= tau)
+      .filter(VectorF.roundedCosine(col("emb"), col("b_emb")) >= tau)
       .groupBy("vec_id").agg(min("b_id").as("dup_of"))
     a.select(col("vec_id"), col("cluster"))
       .join(dups, Seq("vec_id"), "left")
@@ -235,8 +241,7 @@ object Cluster {
       col("embedding").cast("array<double>").as("emb"))
     val scored = vecs.join(quantizedCentroids(vecs, "label"), "label")
       .select(col("vec_id"), col("label"),
-        floor(VectorF.cosineSim(col("emb"), col("c_emb")) * 1e6 + 0.5)
-          .cast("long").as("cq"))
+        Behavior.micro(VectorF.cosineSim(col("emb"), col("c_emb"))).as("cq"))
       .filter(col("cq").isNotNull)
     val med = scored.groupBy("label")
       .agg(expr("percentile(cq, 0.5D)").as("med"))
@@ -275,18 +280,13 @@ object Cluster {
   def silhouetteOf(embeddings: DataFrame, k: Int = K,
                    iters: Int = Iterations): DataFrame = {
     require(k >= 2 && iters > 0, s"need k >= 2 and iters > 0, got k=$k iters=$iters")
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val seeds = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val cents = (1 until iters).foldLeft(seeds) { (c, _) =>
-      recenter(assign(vecs, c))
-    }
+    val vecs = vectors(embeddings)
+    val cents = lloyd(vecs, col("vec_id") < k, iters)
     val byScore = Window.partitionBy("vec_id")
       .orderBy(col("cs").desc, col("c_id"))
     val ranked = vecs.join(broadcast(cents)) // k rows — bounded
       .select(col("vec_id"), col("c_id"),
-        round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"))
+        VectorF.roundedCosine(col("emb"), col("c_emb")).as("cs"))
       .filter(col("cs").isNotNull) // zero-norm vectors never scored
       .withColumn("rn", row_number().over(byScore))
       .filter(col("rn") <= 2)
@@ -325,18 +325,14 @@ object Cluster {
   def centroidSeparationOf(embeddings: DataFrame, k: Int = K,
                            iters: Int = Iterations): DataFrame = {
     require(k >= 2 && iters > 0, s"need k >= 2 and iters > 0, got k=$k iters=$iters")
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val seeds = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val cents = (1 until iters).foldLeft(seeds) { (c, _) =>
-      recenter(assign(vecs, c))
-    }.localCheckpoint(false) // both sides of the bounded pair cross
+    val vecs = vectors(embeddings)
+    val cents = lloyd(vecs, col("vec_id") < k, iters)
+      .localCheckpoint(false) // both sides of the bounded pair cross
     cents.select(col("c_id").as("c_a"), col("c_emb").as("ea"))
       .join(broadcast(cents.select(col("c_id").as("c_b"), col("c_emb").as("eb"))))
       .filter(col("c_a") < col("c_b"))
       .select(col("c_a"), col("c_b"),
-        round(VectorF.cosineSim(col("ea"), col("eb")), 6).as("cosine"))
+        VectorF.roundedCosine(col("ea"), col("eb")).as("cosine"))
       .orderBy("c_a", "c_b")
   }
 
@@ -364,21 +360,14 @@ object Cluster {
   def daviesBouldinOf(embeddings: DataFrame, k: Int = K,
                       iters: Int = Iterations): DataFrame = {
     require(k >= 2 && iters > 0, s"need k >= 2 and iters > 0, got k=$k iters=$iters")
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val seeds = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val cents = (1 until iters).foldLeft(seeds) { (c, _) =>
-      recenter(assign(vecs, c))
-    }.localCheckpoint(false) // scored against AND pair-crossed
-    val byScore = Window.partitionBy("vec_id")
-      .orderBy(col("cs").desc, col("c_id"))
-    val own = vecs.join(broadcast(cents)) // k rows — bounded
-      .select(col("vec_id"), col("c_id"),
-        round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"))
-      .filter(col("cs").isNotNull)
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") === 1)
+    val vecs = vectors(embeddings)
+    val cents = lloyd(vecs, col("vec_id") < k, iters)
+      .localCheckpoint(false) // scored against AND pair-crossed
+    val own = Similarity.topK(vecs.join(broadcast(cents)) // k rows — bounded
+        .select(col("vec_id"), col("c_id"),
+          VectorF.roundedCosine(col("emb"), col("c_emb")).as("cs"))
+        .filter(col("cs").isNotNull),
+      "vec_id", col("cs").desc, "c_id", 1, "rn")
     val si = own.groupBy(col("c_id").as("cluster"))
       .agg(count(lit(1)).as("n"),
         sum(Behavior.micro(lit(1.0) - col("cs"))).as("ssum"))
@@ -388,7 +377,7 @@ object Cluster {
       .join(broadcast(cents.select(col("c_id").as("cj"), col("c_emb").as("ej"))))
       .filter(col("ci") =!= col("cj"))
       .select(col("ci"), col("cj"),
-        (lit(1.0) - round(VectorF.cosineSim(col("ei"), col("ej")), 6)).as("mij"))
+        (lit(1.0) - VectorF.roundedCosine(col("ei"), col("ej"))).as("mij"))
     val terms = pairs
       .join(broadcast(si.select(col("cluster").as("ci"),
         col("n").as("n_i"), col("s").as("s_i"))), Seq("ci"))
@@ -396,10 +385,7 @@ object Cluster {
         col("s").as("s_j"))), Seq("cj"))
       .select(col("ci"), col("cj"), col("n_i"), col("s_i"),
         ((col("s_i") + col("s_j")) / nullif(col("mij"), lit(0.0))).as("ratio"))
-    val byRatio = Window.partitionBy("ci")
-      .orderBy(col("ratio").desc_nulls_last, col("cj"))
-    terms.withColumn("rn", row_number().over(byRatio))
-      .filter(col("rn") === 1)
+    Similarity.topK(terms, "ci", col("ratio").desc_nulls_last, "cj", 1, "rn")
       .select(col("ci").as("cluster"), col("n_i").as("n"),
         graft.functions.TextF.round4HalfUp(col("s_i")).as("scatter"),
         col("cj").as("worst_other"),
@@ -444,14 +430,12 @@ object Cluster {
         * ((col("n") - col("n_c")) + col("v")).cast("double")) /
         (((col("f_all") - col("f")) + 1L).cast("double")
           * (col("n_c") + col("v")).cast("double")))
-    tf.filter(col("f") >= minCount)
+    val scored = tf.filter(col("f") >= minCount)
       .join(broadcast(clusterTotals), "cluster") // k rows
       .join(perToken, "token")                   // token-keyed equijoin
       .crossJoin(broadcast(totals))              // 1 row
       .select(col("cluster"), col("token"), col("f"), keyness.as("keyness"))
-      .withColumn("rank", row_number().over(Window.partitionBy("cluster")
-        .orderBy(col("keyness").desc, col("token"))))
-      .filter(col("rank") <= topN)
+    Similarity.topK(scored, "cluster", col("keyness").desc, "token", topN)
       .orderBy("cluster", "rank")
   }
 
@@ -493,8 +477,7 @@ object Cluster {
       .select(col("label"), col("n").as("n_new"), col("c").as("c_new"))
     o.join(nw, Seq("label"))
       .select(col("label"), col("n_old"), col("n_new"),
-        round(VectorF.cosineSim(col("c_old"), col("c_new")), 6)
-          .as("drift_cos"))
+        VectorF.roundedCosine(col("c_old"), col("c_new")).as("drift_cos"))
       .orderBy("label")
   }
 
@@ -518,8 +501,7 @@ object Cluster {
     * Shape: one posexplode centroid aggregate + one map-only scoring
     * scan against the 1-row broadcast μ — linear, no pair mass. */
   def isotropyAuditOf(embeddings: DataFrame): DataFrame = {
-    val vecs = embeddings.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb"))
+    val vecs = vectors(embeddings)
     val mu = quantizedCentroids(vecs.withColumn("g", lit(0)), "g")
       .select(col("c_emb")) // 1 row
     val sq = aggregate(col("emb"), lit(0L),
@@ -529,7 +511,7 @@ object Cluster {
     def d(c: Column) = c.cast("double")
     val scored = vecs.crossJoin(broadcast(mu)) // 1 row by construction
       .select(
-        round(VectorF.cosineSim(col("emb"), col("c_emb")), 6).as("cs"),
+        VectorF.roundedCosine(col("emb"), col("c_emb")).as("cs"),
         Behavior.micro(sqrt(d(sq) / 1e9)).as("normq"),
         muSq.as("mu_sq"))
     scored.agg(
@@ -555,6 +537,28 @@ object Cluster {
           .as("anisotropy"))
   }
 
+  /** The per-point `nn`-NN edge frame within k-means cells (cluster,
+    * vec_id → b_id) under the rounded-cosine total order — shared by
+    * the hubness audit and the mutual-kNN rate so the two always read
+    * the SAME graph. Pairwise only within cells (the [[semDedupOf]]
+    * bound). */
+  private def knnEdges(embeddings: DataFrame, k: Int, iters: Int,
+                       nn: Int): DataFrame = {
+    require(nn > 0, s"nn must be positive, got $nn")
+    val a = assignedOf(embeddings, k, iters)
+      .select(col("vec_id"), col("emb"), col("cluster"))
+      .localCheckpoint(false) // joined with itself
+    val b = a.select(col("cluster").as("b_cluster"),
+      col("vec_id").as("b_id"), col("emb").as("b_emb"))
+    Similarity.topK(a.join(b, col("cluster") === col("b_cluster") &&
+          col("b_id") =!= col("vec_id"))
+        .select(col("cluster"), col("vec_id"), col("b_id"),
+          VectorF.roundedCosine(col("emb"), col("b_emb")).as("cs"))
+        .filter(col("cs").isNotNull),
+      "vec_id", col("cs").desc, "b_id", nn, "rn")
+      .select(col("cluster"), col("vec_id"), col("b_id"))
+  }
+
   /** Hubness audit over the k-means cells (Radovanović '10): in high
     * dimensions a few points ("hubs") appear in a disproportionate
     * share of other points' k-NN lists while "antihubs" appear in
@@ -569,43 +573,13 @@ object Cluster {
     * [[semDedupOf]] bound and its documented scale posture: cells
     * grow with k ∝ n); the top-k pick is a per-POINT window
     * (parallelism = points), in-degree one bounded-key aggregate. */
-  /** The per-point `nn`-NN edge frame within k-means cells (cluster,
-    * vec_id → b_id) under the rounded-cosine total order — shared by
-    * the hubness audit and the mutual-kNN rate so the two always read
-    * the SAME graph. Pairwise only within cells (the [[semDedupOf]]
-    * bound). */
-  private def knnEdges(embeddings: DataFrame, k: Int, iters: Int,
-                       nn: Int): DataFrame = {
-    require(nn > 0, s"nn must be positive, got $nn")
-    val a = assignedOf(embeddings, k, iters)
-      .select(col("vec_id"), col("emb"), col("cluster"))
-      .localCheckpoint(false) // joined with itself
-    val b = a.select(col("cluster").as("b_cluster"),
-      col("vec_id").as("b_id"), col("emb").as("b_emb"))
-    val byPoint = Window.partitionBy("vec_id")
-      .orderBy(col("cs").desc, col("b_id"))
-    a.join(b, col("cluster") === col("b_cluster") &&
-        col("b_id") =!= col("vec_id"))
-      .select(col("cluster"), col("vec_id"), col("b_id"),
-        round(VectorF.cosineSim(col("emb"), col("b_emb")), 6).as("cs"))
-      .filter(col("cs").isNotNull)
-      .withColumn("rn", row_number().over(byPoint))
-      .filter(col("rn") <= nn)
-      .select(col("cluster"), col("vec_id"), col("b_id"))
-  }
-
-  /** The membership frame matching [[knnEdges]]' assignment. */
-  private def memberFrame(embeddings: DataFrame, k: Int,
-                          iters: Int): DataFrame =
-    assignedOf(embeddings, k, iters).select(col("cluster"), col("vec_id"))
-
   def hubnessAuditOf(embeddings: DataFrame, k: Int = K,
                      iters: Int = Iterations, nn: Int = 3): DataFrame = {
-    val a = memberFrame(embeddings, k, iters)
-    val edges = knnEdges(embeddings, k, iters, nn)
-    val indeg = edges.groupBy(col("cluster"), col("b_id").as("vec_id"))
+    val members = assignedOf(embeddings, k, iters).select(col("cluster"), col("vec_id"))
+    val indeg = knnEdges(embeddings, k, iters, nn)
+      .groupBy(col("cluster"), col("b_id").as("vec_id"))
       .agg(count(lit(1)).as("indeg"))
-    a.select(col("cluster"), col("vec_id"))
+    members
       .join(indeg, Seq("cluster", "vec_id"), "left")
       .select(col("cluster"), coalesce(col("indeg"), lit(0L)).as("indeg"))
       .groupBy("cluster")
@@ -671,18 +645,11 @@ object Cluster {
                             iters: Int = Iterations): DataFrame = {
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0, got k=$k iters=$iters")
     val dec = "decimal(38,0)"
-    val vecs = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    val vecs = vectors(embeddings)
       .localCheckpoint(false) // two assignment chains share it
-    def chain(seeds: DataFrame): DataFrame =
-      (1 until iters).foldLeft(assign(vecs, seeds)) { (a, _) =>
-        assign(vecs, recenter(a))
-      }
-    val a = chain(vecs.filter(col("vec_id") < k)
-        .select(col("vec_id").as("c_id"), col("emb").as("c_emb")))
+    val a = assign(vecs, lloyd(vecs, col("vec_id") < k, iters))
       .select(col("vec_id"), col("cluster").as("ca"))
-    val b = chain(vecs.filter(col("vec_id") >= k && col("vec_id") < 2L * k)
-        .select(col("vec_id").as("c_id"), col("emb").as("c_emb")))
+    val b = assign(vecs, lloyd(vecs, col("vec_id") >= k && col("vec_id") < 2L * k, iters))
       .select(col("vec_id"), col("cluster").as("cb"))
     val cont = a.join(b, Seq("vec_id"))
       .groupBy("ca", "cb").agg(count(lit(1)).as("nij")) // ≤ k² cells
@@ -730,10 +697,7 @@ object Cluster {
       .join(embeddings.select(col("vec_id"),
         col("label").cast("long").as("label")), Seq("vec_id"))
       .groupBy("cluster", "label").agg(count(lit(1)).as("c"))
-    val byCell = Window.partitionBy("cluster")
-      .orderBy(col("c").desc, col("label"))
-    val major = cells.withColumn("rn", row_number().over(byCell))
-      .filter(col("rn") === 1)
+    val major = Similarity.topK(cells, "cluster", col("c").desc, "label", 1, "rn")
       .select(col("cluster"), col("label").as("majority_label"),
         col("c").as("n_majority"))
     cells.groupBy("cluster")

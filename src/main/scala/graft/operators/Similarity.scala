@@ -1,21 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorF
-import graft.sources.Tables
 
-/** Similarity search over the `embeddings` table (array<float>[64]).
-  *
-  * Scale design: the brute-force path broadcasts the (small) query set
-  * and relies on Catalyst's WindowGroupLimit rewrite of
-  * `row_number() <= k` — partition-local top-k before the shuffle, so
-  * no executor ever materializes the full score matrix and nothing is
-  * collected to the driver. The LSH path prunes candidates to one
-  * hyperplane bucket before scoring.
-  */
 /** Scalar twin of [[graft.plans.CosineSimilarity]] for in-group use:
   * the SAME sequential fused loop (dot/norms accumulated index 0..n−1)
   * so results are bit-identical to the codegen expression, then the
@@ -33,109 +23,139 @@ private[graft] object MmrKernel extends Serializable {
   }
 }
 
+/** Similarity search over the `embeddings` table (array<float>[64]).
+  *
+  * Scale design: the brute-force path broadcasts the (small) query set
+  * and relies on Catalyst's WindowGroupLimit rewrite of
+  * `row_number() <= k` — partition-local top-k before the shuffle, so
+  * no executor ever materializes the full score matrix and nothing is
+  * collected to the driver. The LSH path prunes candidates to one
+  * hyperplane bucket before scoring.
+  *
+  * Every ranking here is one of two derivations: [[topK]] cuts a scored
+  * frame per key, and [[nearest]] scores (query, neighbor) pairs by
+  * [[graft.functions.VectorF.roundedCosine]] before cutting them.
+  */
 object Similarity {
 
   val TopK = 10
   val QuerySetSize = 8
 
-  private def queriesDf(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < QuerySetSize)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+  /** The `k` best rows per `key` under (`score`, `id` ascending),
+    * numbered 1..k in `rank`. Catalyst plans the `row_number() <= k`
+    * cut as a WindowGroupLimit before the shuffle, so only k rows per
+    * key move, and the id tiebreak makes the ranking deterministic. */
+  private[operators] def topK(scored: DataFrame, key: String, score: Column,
+                              id: String, k: Int, rank: String = "rank"): DataFrame =
+    scored.withColumn(rank,
+        row_number().over(Window.partitionBy(key).orderBy(score, col(id))))
+      .filter(col(rank) <= k)
+
+  /** (q_id, n_id, score, rank): the `k` nearest neighbors per query
+    * among `pairs`, which carries q_id, n_id, q_emb and the neighbor
+    * embedding `nEmb`. Scores are rounded before ranking so rank order
+    * is reproducible bit-for-bit across engines; ties break on
+    * neighbor id. */
+  private def nearest(pairs: DataFrame, nEmb: String, k: Int): DataFrame =
+    topK(pairs.select(col("q_id"), col("n_id"),
+        VectorF.roundedCosine(col("q_emb"), col(nEmb)).as("score")),
+      "q_id", col("score").desc, "n_id", k)
+
+  /** [[nearest]] over every (query, other vector) pair: the query set
+    * `q` (q_id, q_emb) broadcasts against `corpus` (n_id, `nEmb`). */
+  private def bruteForce(q: DataFrame, corpus: DataFrame, nEmb: String,
+                         k: Int): DataFrame =
+    nearest(broadcast(q).join(corpus, col("q_id") =!= col("n_id")), nEmb, k)
 
   /** Brute-force cosine top-k per query vector, via the native codegen
-    * [[graft.plans.CosineSimilarity]] expression. Scores are rounded
-    * before ranking so rank order is reproducible bit-for-bit across
-    * engines; ties break on neighbor id. */
-  def knnTopk(spark: SparkSession, dir: String): DataFrame = {
-    val neighbors = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val scored = broadcast(queriesDf(spark, dir))
-      .join(neighbors, col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(VectorF.cosineSim(col("q_emb"), col("n_emb")), 6).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    * [[graft.plans.CosineSimilarity]] expression (see [[nearest]]). */
+  def knnTopkOf(embeddings: DataFrame): DataFrame =
+    bruteForce(
+      embeddings.filter(col("vec_id") < QuerySetSize)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+      embeddings.select(col("vec_id").as("n_id"), col("embedding").as("n_emb")),
+      "n_emb", TopK)
       .orderBy("q_id", "rank")
-  }
 
   val LshPlanes = 6 // 64 buckets
 
+  /** (vec_id, embedding, bucket): each vector's sign bucket under
+    * `nPlanes` fixed hyperplanes, materialized once because both join
+    * sides read it and the bucket is the expensive part. */
+  private def lshBuckets(embeddings: DataFrame, nPlanes: Int): DataFrame =
+    embeddings.select(col("vec_id"), col("embedding"),
+        VectorF.lshBucket(col("embedding"), VectorF.hyperplanes(64, nPlanes))
+          .as("bucket"))
+      .localCheckpoint(false)
+
+  /** Hamming-1 multiprobe: one row for `bucket` and one for each of the
+    * `nPlanes` buckets one bit away (a borderline neighbor flips
+    * exactly the planes it sits closest to). */
+  private def multiprobe(bucket: Column, nPlanes: Int): Column =
+    explode(array((0 +: (0 until nPlanes).map(1 << _)).map(m =>
+      bucket.bitwiseXOR(lit(m))): _*))
+
   /** LSH-bucketed approximate NN with hamming-1 multiprobe: each query
     * scores candidates in its own sign bucket plus the LshPlanes
-    * buckets one bit away (a borderline neighbor flips exactly the
-    * planes it sits closest to). Single-bucket probing measured 2.5%
+    * buckets one bit away. Single-bucket probing measured 2.5%
     * recall@10 vs brute force on the test embeddings; multiprobe takes
     * the candidate set to (planes+1)/2^planes of the data per query —
     * still ~11% of rows, not O(n) — while recovering useful recall. */
-  def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    val planes = VectorF.hyperplanes(64, LshPlanes)
-    // Materialized once for the query and neighbor sides
-    // (cf. dedupCosine — the bucket assignment is the expensive part).
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        VectorF.lshBucket(col("embedding"), planes).as("bucket"))
-      .localCheckpoint(false)
-    val probeMasks = 0 +: (0 until LshPlanes).map(1 << _)
+  def annLshOf(embeddings: DataFrame): DataFrame = {
+    val emb = lshBuckets(embeddings, LshPlanes)
     val q = broadcast(emb.filter(col("vec_id") < QuerySetSize)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(array(probeMasks.map(m =>
-          col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket")))
-    val scored = q.join(
+        multiprobe(col("bucket"), LshPlanes).as("bucket")))
+    nearest(q.join(
         emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("bucket")),
         Seq("bucket"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(VectorF.cosineSim(col("q_emb"), col("n_emb")), 6).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+      .filter(col("q_id") =!= col("n_id")), "n_emb", TopK)
       .orderBy("q_id", "rank")
   }
 
   val IvfCells = 16
   val IvfProbes = 2
 
-  /** IVF-style approximate NN: vectors are assigned to the nearest of
-    * `IvfCells` coarse centroids (deterministically the first IvfCells
-    * vectors — a k-means stand-in with identical plumbing), queries
-    * probe their `IvfProbes` nearest cells and score only those cells'
-    * members. The 100 TB shape: the centroid set broadcasts, cell
-    * assignment is one map-side pass, and the probe join shuffles on
-    * cell id only — candidates are nprobe/cells of the data, never
-    * O(n) per query. Scores round to 6 places before ranking with id
-    * tie-breaks so rank order is engine-reproducible. */
-  def annIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvfAt(spark, dir, IvfProbes)
-
-  /** [[annIvf]] with the probe count as a parameter — the registered
-    * query pins nprobe = [[IvfProbes]]; [[nprobeSweep]] walks it. */
-  def annIvfAt(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
+  /** (vec_id, embedding, c_id, cscore): every vector beside the rounded
+    * cosine to each of the `IvfCells` coarse centroids (deterministically
+    * the first IvfCells vectors — a k-means stand-in with identical
+    * plumbing), which broadcast. */
+  private def ivfScores(embeddings: DataFrame): DataFrame = {
+    val emb = embeddings.select(col("vec_id"), col("embedding"))
     val cents = broadcast(emb.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb")))
-    val scoredC = emb.join(cents)
+    emb.join(cents)
       .select(col("vec_id"), col("embedding"), col("c_id"),
-        round(VectorF.cosineSim(col("embedding"), col("c_emb")), 6).as("cscore"))
-    val wCell = Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("c_id"))
-    val cells = scoredC.withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
+        VectorF.roundedCosine(col("embedding"), col("c_emb")).as("cscore"))
+  }
+
+  /** The IVF cell assignment: each vector's `nprobe` nearest cells of
+    * [[ivfScores]], ties to the lowest cell id. */
+  private def ivfCells(scores: DataFrame, nprobe: Int): DataFrame =
+    topK(scores, "vec_id", col("cscore").desc, "c_id", nprobe, "rn")
+
+  /** IVF-style approximate NN: vectors are assigned to their nearest
+    * coarse cell ([[ivfCells]]), queries probe their `IvfProbes`
+    * nearest cells and score only those cells' members. The 100 TB
+    * shape: the centroid set broadcasts, cell assignment is one
+    * map-side pass, and the probe join shuffles on cell id only —
+    * candidates are nprobe/cells of the data, never O(n) per query.
+    * Ranked as [[nearest]] ranks. */
+  def annIvfOf(embeddings: DataFrame): DataFrame =
+    annIvfAt(embeddings, IvfProbes)
+
+  /** [[annIvfOf]] with the probe count as a parameter — the registered
+    * query pins nprobe = [[IvfProbes]]; [[nprobeSweepOf]] walks it. */
+  def annIvfAt(embeddings: DataFrame, nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val scores = ivfScores(embeddings)
+    val cells = ivfCells(scores, 1)
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("c_id"))
     val probes = broadcast(
-      scoredC.filter(col("vec_id") < QuerySetSize)
-        .withColumn("rn", row_number().over(wCell))
-        .filter(col("rn") <= nprobe)
+      ivfCells(scores.filter(col("vec_id") < QuerySetSize), nprobe)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("c_id")))
-    val scored = probes.join(cells, Seq("c_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(VectorF.cosineSim(col("q_emb"), col("n_emb")), 6).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    nearest(probes.join(cells, Seq("c_id")).filter(col("q_id") =!= col("n_id")),
+        "n_emb", TopK)
       .select(col("q_id"), col("n_id"), col("score"), col("rank"))
       .orderBy("q_id", "rank")
   }
@@ -199,27 +219,19 @@ object Similarity {
     // job, and the ONLY driver-side value the plan needs.
     val n = embeddings.count()
     val nPlanes = cosinePlanesFor(n, targetBucket)
-    val planes = VectorF.hyperplanes(64, nPlanes)
-    // Materialized once: both join sides consume it (keyed on probe
-    // vs home bucket, so ReuseExchange can't dedupe), and the bucket
+    // Both join sides consume the buckets (keyed on probe vs home
+    // bucket, so ReuseExchange can't dedupe), and the bucket
     // assignment is nPlanes interpreted-HOF dot products per row —
     // compute-dense, so spreadInput guards the 1-partition bench scan.
-    val emb = graft.Scale.spreadInput(embeddings, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        VectorF.lshBucket(col("embedding"), planes).as("bucket"))
-      .localCheckpoint(false)
-    val probeMasks = 0 +: (0 until nPlanes).map(1 << _)
+    val emb = lshBuckets(graft.Scale.spreadInput(embeddings, col("vec_id")), nPlanes)
     val a = emb.select(col("vec_id"), col("embedding").as("a_emb"),
-      explode(array(probeMasks.map(m =>
-        col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
+      multiprobe(col("bucket"), nPlanes).as("bucket"))
     val b = emb.select(col("bucket"), col("vec_id").as("nn_id"), col("embedding").as("b_emb"))
     val scored = a.join(b, Seq("bucket"))
       .filter(col("vec_id") =!= col("nn_id"))
       .select(col("vec_id"), col("nn_id"),
-        round(VectorF.cosineSim(col("a_emb"), col("b_emb")), 6).as("cosine"))
-    val w = Window.partitionBy("vec_id").orderBy(col("cosine").desc, col("nn_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+        VectorF.roundedCosine(col("a_emb"), col("b_emb")).as("cosine"))
+    topK(scored, "vec_id", col("cosine").desc, "nn_id", 1, "rn").drop("rn")
       .orderBy("vec_id")
   }
 
@@ -230,8 +242,8 @@ object Similarity {
     * float vector; cf. [[embedQuantizeOf]]'s int8 path at 8×). The
     * packing is 64 static codegen'd expressions (no higher-order
     * function, so nothing is re-evaluated per element), distances rank
-    * with the same broadcast + partition-local-top-k shape as
-    * [[knnTopk]]: the packed table never shuffles, only the k rows per
+    * with the same broadcast + partition-local [[topK]] shape as
+    * [[knnTopkOf]]: the packed table never shuffles, only the k rows per
     * query do. Ties break on neighbor id for a deterministic ranking.
     */
   def annHammingOf(embeddings: DataFrame, k: Int = TopK): DataFrame = {
@@ -255,10 +267,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"),
         (bit_count(col("q0").bitwiseXOR(col("n0"))) +
           bit_count(col("q1").bitwiseXOR(col("n1")))).as("hamming"))
-    val w = Window.partitionBy("q_id").orderBy(col("hamming"), col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy("q_id", "rank")
+    topK(scored, "q_id", col("hamming"), "n_id", k).orderBy("q_id", "rank")
   }
 
   /** Recall@k of the IVF index against the brute-force ground truth —
@@ -267,9 +276,9 @@ object Similarity {
     * existing pipelines; per query: |approx ∩ exact| / k. Both sides
     * are k rows per query, so everything after them is negligible.
     */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = knnTopk(spark, dir).select(col("q_id"), col("n_id"))
-    val approx = annIvf(spark, dir).select(col("q_id"), col("n_id"))
+  def annRecallOf(embeddings: DataFrame): DataFrame = {
+    val exact = knnTopkOf(embeddings).select(col("q_id"), col("n_id"))
+    val approx = annIvfOf(embeddings).select(col("q_id"), col("n_id"))
       .withColumn("hit", lit(1L))
     exact.join(approx, Seq("q_id", "n_id"), "left")
       .groupBy("q_id")
@@ -281,28 +290,28 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  /** IVF nprobe sweep — the knob curve behind [[annIvf]], completing
+  /** IVF nprobe sweep — the knob curve behind [[annIvfOf]], completing
     * the ANN audit family (row 262 sweeps LSH's banding, row 92 reads
     * ONE recall point; this prices the whole probe-vs-recall trade a
     * deployment tunes): for nprobe 1..4, micro-averaged recall@k of
-    * the IVF result against [[knnTopk]]'s brute-force truth, in exact
+    * the IVF result against [[knnTopkOf]]'s brute-force truth, in exact
     * ppm ((Σhits·10⁶) div Σk — integer, order-free). The ground truth
     * computes ONCE; each sweep point reuses [[annIvfAt]] unchanged,
     * so the curve can never drift from the operator it audits.
     * Monotonicity in nprobe is structural (more cells ⊇ fewer) and
     * spec-pinned.
     *
-    * Shape: Q = [[QuerySetSize]] bounds every leg (the knnTopk
+    * Shape: Q = [[QuerySetSize]] bounds every leg (the knnTopkOf
     * broadcast contract); 4 IVF passes over the bucketed frame —
     * audit-priced like every sweep in the family. */
-  def nprobeSweep(spark: SparkSession, dir: String,
-                  probes: Seq[Int] = Seq(1, 2, 3, 4)): DataFrame = {
+  def nprobeSweepOf(embeddings: DataFrame,
+                    probes: Seq[Int] = Seq(1, 2, 3, 4)): DataFrame = {
     require(probes.nonEmpty && probes.forall(p => p >= 1 && p <= IvfCells),
       s"probes must be within 1..$IvfCells: $probes")
-    val exact = knnTopk(spark, dir).select(col("q_id"), col("n_id"))
+    val exact = knnTopkOf(embeddings).select(col("q_id"), col("n_id"))
       .localCheckpoint(false) // one truth, four consumers
     probes.map { np =>
-      val approx = annIvfAt(spark, dir, np)
+      val approx = annIvfAt(embeddings, np)
         .select(col("q_id"), col("n_id")).withColumn("hit", lit(1L))
       exact.join(approx, Seq("q_id", "n_id"), "left")
         .agg(count(lit(1)).as("k_total"),
@@ -314,30 +323,19 @@ object Similarity {
   }
 
   /** IVF cell-balance audit — the occupancy read that SIZES
-    * [[annIvf]]'s probe count (a balanced index scans ≈ n·nprobe/C
+    * [[annIvfOf]]'s probe count (a balanced index scans ≈ n·nprobe/C
     * vectors per query; a skewed one scans whatever its fattest
-    * probed cell holds): per-cell occupancies of the same rn = 1
-    * assignment the index uses (reused verbatim — the audit cannot
-    * drift), imbalance factor λ = C·Σn²/(Σn)² in exact ppm (λ = 1e6
-    * is perfect balance; expected per-probe scan cost multiplies by
-    * λ), plus max/median cell sizes on the C-row frame.
+    * probed cell holds): per-cell occupancies of the same
+    * [[ivfCells]] assignment the index uses (the audit cannot drift),
+    * imbalance factor λ = C·Σn²/(Σn)² in exact ppm (λ = 1e6 is perfect
+    * balance; expected per-probe scan cost multiplies by λ), plus
+    * max/median cell sizes on the C-row frame.
     *
     * Shape: one corpus × C-centroid broadcast scoring pass (the
-    * [[annIvf]] assignment), a C-row aggregate after. */
-  def ivfBalance(spark: SparkSession, dir: String): DataFrame = {
+    * [[annIvfOf]] assignment), a C-row aggregate after. */
+  def ivfBalanceOf(embeddings: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val cents = broadcast(emb.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb")))
-    val wCell = Window.partitionBy("vec_id")
-      .orderBy(col("cscore").desc, col("c_id"))
-    val assigned = emb.join(cents)
-      .select(col("vec_id"), col("c_id"),
-        round(VectorF.cosineSim(col("embedding"), col("c_emb")), 6)
-          .as("cscore"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
+    val assigned = ivfCells(ivfScores(embeddings).drop("embedding"), 1)
     assigned.groupBy("c_id").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells_used"),
         sum("n").as("n_vectors"),
@@ -388,6 +386,21 @@ object Similarity {
       .orderBy("dim")
   }
 
+  /** (q_id, q_label, n_id, n_label, cos): the first `queries` labeled
+    * vectors scored against every other one by rounded cosine. The
+    * bounded query set broadcasts ([[knnTopkOf]]'s contract), so the
+    * corpus side never shuffles. */
+  private def labeledScores(embeddings: DataFrame, queries: Int): DataFrame = {
+    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
+    val q = broadcast(e.filter(col("vec_id") < queries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("label").as("q_label")))
+    q.join(e, col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("q_label"),
+        col("vec_id").as("n_id"), col("label").as("n_label"),
+        VectorF.roundedCosine(col("q_emb"), col("embedding")).as("cos"))
+  }
+
   /** Hard positive/negative mining for contrastive training: per query
     * vector, the most DISTANT same-label neighbor (hardest positive —
     * the in-class pair the model must still pull together) and the
@@ -395,7 +408,7 @@ object Similarity {
     * confusable out-of-class pair it must push apart). The classic
     * triplet-mining pass over a labeled embedding table.
     *
-    * Shape: the bounded query set broadcasts ([[knnTopk]]'s contract —
+    * Shape: the bounded query set broadcasts ([[knnTopkOf]]'s contract —
     * the corpus side never shuffles); argmin/argmax are lexicographic
     * struct extremes (map-side combinable, deterministic tiebreak on
     * neighbor id: min-struct breaks ties low, max-struct high, and the
@@ -405,15 +418,7 @@ object Similarity {
     */
   def hardMiningOf(embeddings: DataFrame, queries: Int = QuerySetSize): DataFrame = {
     require(queries > 0, s"queries must be positive, got $queries")
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val q = broadcast(e.filter(col("vec_id") < queries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label")))
-    val scored = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"),
-        col("vec_id").as("n_id"), col("label").as("n_label"),
-        round(VectorF.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
-    scored.groupBy("q_id", "q_label")
+    labeledScores(embeddings, queries).groupBy("q_id", "q_label")
       .agg(
         min(when(col("n_label") === col("q_label"),
           struct(col("cos"), col("n_id")))).as("p"),
@@ -430,7 +435,7 @@ object Similarity {
     * table — the standard embedding-quality probe (if k nearest
     * neighbors can't vote the right label, the space won't rank
     * retrieval candidates either). Per query: top-`k` cosine neighbors
-    * (rounded-then-ranked, id tiebreak — [[knnTopk]]'s contract),
+    * (rounded-then-ranked, id tiebreak — [[knnTopkOf]]'s contract),
     * majority label with ties to the SMALLEST label, scored against
     * the query's own label; output is per-label accuracy.
     *
@@ -442,17 +447,8 @@ object Similarity {
   def knnClassifyOf(embeddings: DataFrame, queries: Int = 64,
                     k: Int = 5): DataFrame = {
     require(k > 0 && queries > 0, s"need positive k/queries, got $k/$queries")
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val q = broadcast(e.filter(col("vec_id") < queries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label")))
-    val scored = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"), col("vec_id").as("n_id"),
-        col("label").as("n_label"),
-        round(VectorF.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val votes = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    val votes = topK(labeledScores(embeddings, queries),
+        "q_id", col("cos").desc, "n_id", k, "rn")
       .groupBy("q_id", "q_label", "n_label")
       .agg(count(lit(1)).as("cnt"))
     val pred = votes.groupBy("q_id", "q_label")
@@ -472,7 +468,7 @@ object Similarity {
   /** Retrieval MRR / hit-rate per label — the ranking-quality twin of
     * [[knnClassifyOf]]'s classification probe: for each query, the
     * rank of the FIRST same-label neighbor under the full cosine
-    * ordering (rounded-then-ranked, id tiebreak — [[knnTopk]]'s
+    * ordering (rounded-then-ranked, id tiebreak — [[knnTopkOf]]'s
     * contract); per label, mean reciprocal rank plus hit@1 / hit@10.
     *
     * Determinism: each reciprocal rank is quantized to the 1e-6 grid
@@ -490,20 +486,13 @@ object Similarity {
     */
   def mrrEvalOf(embeddings: DataFrame, queries: Int = 64): DataFrame = {
     require(queries > 0, s"queries must be positive, got $queries")
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val q = broadcast(e.filter(col("vec_id") < queries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label")))
     // Rank of the first same-label neighbor without ranking everything:
     // rank = 1 + |neighbors strictly better than the best match|, where
     // "better" is the (score DESC, n_id ASC) total order. The best
     // match per query is a struct-MIN over matches only; counting
     // better neighbors is one conditional sum over the same scored
     // stream — both map-side combinable aggregates on q_id.
-    val scored = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"),
-        col("vec_id").as("n_id"), col("label").as("n_label"),
-        round(VectorF.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
+    val scored = labeledScores(embeddings, queries)
       .localCheckpoint(false) // best-match frame + count frame share it
     val best = scored.filter(col("n_label") === col("q_label"))
       .groupBy("q_id", "q_label")
@@ -554,7 +543,7 @@ object Similarity {
     * correctly-rounded IEEE ops), so in-group and codegen scores are
     * bit-identical — pinned by the oracle hash.
     *
-    * Scale: the fact-scale work is exactly [[knnTopk]]'s broadcast
+    * Scale: the fact-scale work is exactly [[knnTopkOf]]'s broadcast
     * scan (corpus never shuffles; WindowGroupLimit cuts to `pool` rows
     * per query before the group shuffle). The greedy then runs INSIDE
     * one `flatMapGroups` per query — pool² work on ≤pool rows, no
@@ -572,13 +561,10 @@ object Similarity {
     val q = broadcast(e.filter(col("vec_id") < queries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
     val rel6 = Behavior.micro(VectorF.cosineSim(col("q_emb"), col("embedding")))
-    val byQ = Window.partitionBy("q_id")
-    val cand = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        col("embedding").cast("array<double>").as("emb"), rel6.as("rel6"))
-      .withColumn("rn", row_number().over(
-        byQ.orderBy(col("rel6").desc, col("n_id"))))
-      .filter(col("rn") <= pool)
+    val cand = topK(q.join(e, col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          col("embedding").cast("array<double>").as("emb"), rel6.as("rel6")),
+        "q_id", col("rel6").desc, "n_id", pool, "rn")
       .select(col("q_id"), col("n_id"), col("emb"), col("rel6"))
       .as[(Long, Long, Seq[Double], Long)]
     val picked = cand.groupByKey(_._1).flatMapGroups { (qId, rows) =>
@@ -633,27 +619,16 @@ object Similarity {
     * per-label mean (order-independent). Queries with no same-label
     * neighbor are excluded ([[mrrEvalOf]]'s contract).
     *
-    * Shape: the [[knnTopk]] broadcast scan with WindowGroupLimit's
+    * Shape: the [[knnTopkOf]] broadcast scan with WindowGroupLimit's
     * partition-local top-10; the relevant-count aggregate shuffles one
     * row per (query, label-match) group. */
   def ndcgEvalOf(embeddings: DataFrame, queries: Int = 64): DataFrame = {
     require(queries > 0, s"queries must be positive, got $queries")
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val q = broadcast(e.filter(col("vec_id") < queries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label")))
-    val scored = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"),
-        col("vec_id").as("n_id"), col("label").as("n_label"),
-        round(VectorF.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
+    val scored = labeledScores(embeddings, queries)
       .localCheckpoint(false) // top-10 frame + relevant-count share it
     val wArr = array(NdcgW6.map(lit): _*)
     val cumArr = array(NdcgW6.scanLeft(0L)(_ + _).tail.map(lit): _*)
-    val byQ = Window.partitionBy("q_id")
-    val dcg = scored
-      .withColumn("rnk", row_number().over(
-        byQ.orderBy(col("cos").desc, col("n_id"))))
-      .filter(col("rnk") <= 10)
+    val dcg = topK(scored, "q_id", col("cos").desc, "n_id", 10, "rnk")
       .groupBy("q_id", "q_label")
       .agg(sum(when(col("n_label") === col("q_label"),
         element_at(wArr, col("rnk"))).otherwise(0L)).as("dcg6"))
@@ -777,7 +752,7 @@ object Similarity {
     * ([[mrrEvalOf]]'s contract, WindowGroupLimit top-k); everything
     * after the k-cut is k rows per point. This pass is O(n²) BY
     * DESIGN (exact audit); past ~10⁶ labeled points, feed it the
-    * LSH/IVF candidate pairs ([[annLsh]]/[[annIvf]]) instead of the
+    * LSH/IVF candidate pairs ([[annLshOf]]/[[annIvfOf]]) instead of the
     * full cross — the vote logic is unchanged. */
   def labelNoiseOf(embeddings: DataFrame, k: Int = 5, maxAgree: Int = 1,
                    auditLimit: Long = Long.MaxValue): DataFrame = {
@@ -791,13 +766,11 @@ object Similarity {
     val q = e.filter(col("vec_id") < auditLimit)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("label").as("q_label"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val votes = q.join(e, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"), col("vec_id").as("n_id"),
-        col("label").as("n_label"),
-        round(VectorF.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    val votes = topK(q.join(e, col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("q_label"), col("vec_id").as("n_id"),
+          col("label").as("n_label"),
+          VectorF.roundedCosine(col("q_emb"), col("embedding")).as("cos")),
+        "q_id", col("cos").desc, "n_id", k, "rn")
       .groupBy("q_id", "q_label", "n_label")
       .agg(count(lit(1)).as("cnt"))
       // agree + challenger both read it — unmaterialized, the O(n²)
@@ -908,7 +881,7 @@ object Similarity {
     val dense = embeddings.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q)) // 1 row by construction
       .select(col("vec_id").as("id"),
-        round(VectorF.cosineSim(col("embedding"), col("q_emb")), 6).as("score"))
+        VectorF.roundedCosine(col("embedding"), col("q_emb")).as("score"))
       // top-legK via sort-limit (TakeOrderedAndProject — partition-
       // local heads, no global window over the corpus), THEN rank the
       // bounded ≤legK frame; same order key so ranks are 1..legK.
@@ -938,7 +911,7 @@ object Similarity {
     * Scale: the bench set is constant-bounded → broadcast; the
     * corpus side is one map-side pass (rows × benchSize comparisons,
     * linear in rows), aggregated per vector with no shuffle of raw
-    * vectors — the same bounded-BNLJ family as knnTopk. Scores
+    * vectors — the same bounded-BNLJ family as knnTopkOf. Scores
     * quantize to 1e-6 before the max so the flag is engine-exact.
     */
   def semDecontaminateOf(embeddings: DataFrame, benchSize: Int = 16,
@@ -949,7 +922,7 @@ object Similarity {
     embeddings.filter(col("vec_id") >= benchSize)
       .join(broadcast(bench)) // rows × fixed bench set, linear in rows
       .select(col("vec_id"),
-        round(VectorF.cosineSim(col("embedding"), col("b_emb")), 6).as("s"))
+        VectorF.roundedCosine(col("embedding"), col("b_emb")).as("s"))
       .groupBy("vec_id")
       .agg(max("s").as("max_bench_sim"))
       .select(col("vec_id"), col("max_bench_sim"),
@@ -968,7 +941,7 @@ object Similarity {
     * before ranking, n_id tiebreak; the reconstruction arithmetic is
     * two IEEE ops per component, engine-identical.
     *
-    * Shape: both sides are the [[knnTopk]] broadcast-query scan (the
+    * Shape: both sides are the [[knnTopkOf]] broadcast-query scan (the
     * corpus never shuffles); the overlap join runs on two
     * (queries × k)-bounded frames. */
   def quantizeRecallOf(embeddings: DataFrame, k: Int = TopK): DataFrame = {
@@ -984,19 +957,12 @@ object Similarity {
           x => round(x * (lit(127.0) / col("maxabs")))
             * (col("maxabs") / lit(127.0))))
           .otherwise(col("emb")).as("remb"))
-    val q = broadcast(emb.filter(col("vec_id") < QuerySetSize)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb")))
-    def topk(corpus: DataFrame, embCol: String) = {
-      val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-      q.join(corpus, col("q_id") =!= col("n_id"))
-        .select(col("q_id"), col("n_id"),
-          round(VectorF.cosineSim(col("q_emb"), col(embCol)), 6).as("score"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("n_id"))
-    }
-    val exact = topk(emb.select(col("vec_id").as("n_id"), col("emb")), "emb")
-    val int8 = topk(recon.select(col("vec_id").as("n_id"), col("remb")), "remb")
+    val q = emb.filter(col("vec_id") < QuerySetSize)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+    val exact = bruteForce(q, emb.select(col("vec_id").as("n_id"), col("emb")), "emb", k)
+      .select(col("q_id"), col("n_id"))
+    val int8 = bruteForce(q, recon.select(col("vec_id").as("n_id"), col("remb")), "remb", k)
+      .select(col("q_id"), col("n_id"))
     exact.join(int8, Seq("q_id", "n_id"), "left_semi")
       .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
       .select(col("q_id"), col("n_overlap"),
@@ -1024,7 +990,7 @@ object Similarity {
     * BEFORE an index rebuilds. Projection is one native mat-vec call
     * per row ([[graft.plans.MatVecSigns]] — no interpreted
     * higher-order function on the fact path, the §6 round-11 lesson);
-    * both searches are the [[knnTopk]] broadcast-query scan with
+    * both searches are the [[knnTopkOf]] broadcast-query scan with
     * rounded-then-ranked scores; recall in exact ppm.
     * Queries with ZERO surviving overlap drop out (the
     * [[quantizeRecallOf]] contract). */
@@ -1045,23 +1011,16 @@ object Similarity {
       graft.plans.ColumnBridge.expression(col("emb")),
       signs.map(_.toIndexedSeq).toIndexedSeq))
     val pemb = emb.select(col("vec_id"), proj.as("pemb"))
-    def topk(qs: DataFrame, corpus: DataFrame, embCol: String) = {
-      val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-      broadcast(qs).join(corpus, col("q_id") =!= col("n_id"))
-        .select(col("q_id"), col("n_id"),
-          round(VectorF.cosineSim(col("q_emb"), col(embCol)), 6).as("score"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("n_id"))
-    }
-    val exact = topk(
+    val exact = bruteForce(
       emb.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("q_id"), col("emb").as("q_emb")),
-      emb.select(col("vec_id").as("n_id"), col("emb")), "emb")
-    val approx = topk(
+      emb.select(col("vec_id").as("n_id"), col("emb")), "emb", k)
+      .select(col("q_id"), col("n_id"))
+    val approx = bruteForce(
       pemb.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("q_id"), col("pemb").as("q_emb")),
-      pemb.select(col("vec_id").as("n_id"), col("pemb")), "pemb")
+      pemb.select(col("vec_id").as("n_id"), col("pemb")), "pemb", k)
+      .select(col("q_id"), col("n_id"))
     exact.join(approx, Seq("q_id", "n_id"), "left_semi")
       .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
       .select(col("q_id"), col("n_overlap"),
@@ -1080,7 +1039,7 @@ object Similarity {
     * conventional 1.05 threshold.
     *
     * Determinism: cosines quantize to the 1e-6 integer grid FIRST
-    * (floor-form — the [[knnTopk]] rounding convention), so the
+    * (floor-form — the [[knnTopkOf]] rounding convention), so the
     * top-k averages are exact integer sums in any order and the
     * margin is arithmetic over integer operands with one fixed-order
     * double combination; the flag compares the same double on both
@@ -1092,7 +1051,7 @@ object Similarity {
     * both top-k windows and the best-pair filter. Pair generation
     * here is the exact |A|×|B| broadcast join (the verification
     * query's contract); at corpus scale the candidate set comes from
-    * [[annLsh]]'s sign-bucket + multiprobe join on BOTH sides — same
+    * [[annLshOf]]'s sign-bucket + multiprobe join on BOTH sides — same
     * margin arithmetic over bucket-bounded candidates, the
     * documented trade being recall of cross-bucket borderline
     * pairs. */
@@ -1105,8 +1064,7 @@ object Similarity {
       .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
     val scored = a.join(broadcast(b), col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"),
-        floor(VectorF.cosineSim(col("a_emb"), col("b_emb")) * 1e6 + lit(0.5))
-          .cast("long").as("c6"))
+        Behavior.micro(VectorF.cosineSim(col("a_emb"), col("b_emb"))).as("c6"))
       .localCheckpoint(false) // three consumers: two top-k sides + best
     val wA = Window.partitionBy("a_id").orderBy(col("c6").desc, col("b_id"))
     val wB = Window.partitionBy("b_id").orderBy(col("c6").desc, col("a_id"))

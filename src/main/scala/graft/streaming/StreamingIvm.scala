@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.functions.TextF
+import graft.operators.Behavior
 
 /** Streaming incremental rollup maintenance — the foreachBatch form of
   * the batch IVM merge (`Warehouse.incrementalRollupOf`, SURVEY row
@@ -60,7 +61,7 @@ object StreamingIvm {
     val spark = batch.sparkSession
     val delta = batch
       .select(to_date(col("ts")).cast("string").as("day"),
-        floor(col("value") * 1e6 + 0.5).cast("long").as("qv"))
+        Behavior.micro(col("value")).as("qv"))
       .groupBy("day")
       .agg(count(lit(1)).as("d_n"), sum("qv").as("d_q"))
     val fs = new org.apache.hadoop.fs.Path(path)

@@ -338,4 +338,24 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
     assert(got(0L) == ((3L, 2L, 0L, 666666L, 444444L)), s"${got(0L)}")
     assert(got(1L) == ((1L, 1L, 1L, 1000000L, 0L)), s"${got(1L)}")
   }
+
+  test("kmeansEmbedOf: the second Lloyd step moves the one vector its recentred cell wins") {
+    // Seeds are vecs 0 (x axis) and 1 (y axis). The first assignment
+    // puts vec 2 = (1, 0.9) with seed 0 (cos 0.743294 vs 0.669). The
+    // recentred cells are (1, 0.45) and (0.675, 1.025), and vec 2 then
+    // sits closer to cell 1 (0.9675 vs 0.9525); no other vector moves.
+    val emb = Seq(
+      (0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)), (2L, Array(1.0, 0.9)),
+      (3L, Array(0.8, 1.0)), (4L, Array(1.0, 1.1)), (5L, Array(0.9, 1.0)))
+      .toDF("vec_id", "embedding")
+    def run(iters: Int) = Cluster.kmeansEmbedOf(emb, k = 2, iters = iters)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val one = run(1)
+    val two = run(2)
+    assert(one.map { case (v, (c, _)) => v -> c } ==
+      Map(0L -> 0L, 1L -> 1L, 2L -> 0L, 3L -> 1L, 4L -> 1L, 5L -> 1L), s"$one")
+    assert(one(2L)._2 == 0.743294, s"${one(2L)}")
+    assert(two.map { case (v, (c, _)) => v -> c } ==
+      Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L), s"$two")
+  }
 }

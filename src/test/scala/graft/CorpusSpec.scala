@@ -557,4 +557,38 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
       r.getLong(2) == 1L && r.getLong(3) == 0L),
       s"one doc: zero displacement in every epoch pair: ${audit.toSeq}")
   }
+
+  // ---- sentence dedup: exact per-source duplication accounting ----
+
+  test("sentence_dedup: cross-source duplicate sentences count per instance; fragments filter") {
+    val docs = Seq(
+      (1L, "The quick brown fox jumps over the dog. Alpha beta gamma delta epsilon zeta eta.", "a"),
+      (2L, "The quick brown fox jumps over the dog. Short.", "a"),
+      (3L, "The quick brown fox jumps over the dog.", "b"))
+      .toDF("doc_id", "text", "source")
+    val out = graft.operators.Corpus.sentenceDedupOf(docs).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toMap
+    assert(out("a") == ((3L, 2L, 2L, 666666L)),
+      s"src a: 3 sentences, 2 distinct, 2 dup instances: $out")
+    assert(out("b") == ((1L, 1L, 1L, 1000000L)),
+      s"src b: its one sentence is a corpus-wide dup: $out")
+  }
+
+  // ---- source overlap: exact gram pair + absent-pair contract ----
+
+  test("source_overlap_matrix: one shared 8-gram pins the pair; disjoint pairs emit no row") {
+    val docs = Seq(
+      (1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9", "a"),  // grams: [w1..w8], [w2..w9]
+      (2L, "w1 w2 w3 w4 w5 w6 w7 w8 x9", "b"),  // shares [w1..w8] only
+      (3L, "z1 z2 z3 z4 z5 z6 z7 z8", "c"))     // disjoint
+      .toDF("doc_id", "text", "source")
+    val out = graft.operators.Corpus.sourceOverlapMatrixOf(docs).collect()
+    assert(out.length == 1, s"only (a,b) overlaps: ${out.mkString(";")}")
+    val r = out(0)
+    assert(r.getString(0) == "a" && r.getString(1) == "b")
+    assert(r.getLong(2) == 1L && r.getLong(3) == 2L && r.getLong(4) == 2L,
+      s"shared/totals: $r")
+    assert(r.getLong(5) == 333333L, s"jaccard 1/3 ppm: $r")
+  }
 }

@@ -318,4 +318,19 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
     assert(curve.zip(curve.tail).forall { case (a, b) => a <= b },
       s"monotone: $curve")
   }
+
+  // ---- audio clipping: the hot-threshold boundary on exact bytes ----
+
+  test("audio_clipping_audit: the 15000 boundary splits 'u' (15040) from 't' (14976)") {
+    // byte b → |sample| = (b<<7)+64: 'u'=117 → 15040 (hot), 't'=116 →
+    // 14976 (cold); "uuut" → 3 hot of 4, ppm = 750000.
+    val docs = Seq((1L, "uuut", "xsrc")).toDF("doc_id", "text", "source")
+    val out = Multimodal.audioClippingAuditOf(docs).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(2) == 4L && r.getLong(3) == 3L, s"hot count: $r")
+    assert(r.getLong(4) == 1L, "one hot doc")
+    assert(r.getLong(5) == 15040L, s"peak: $r")
+    assert(r.getLong(6) == 750000L, s"ppm: $r")
+  }
 }

@@ -23,13 +23,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   private def docs: DataFrame = graft.sources.Tables.documents(spark, Sf)
 
+  private def embeddings: DataFrame = graft.sources.Tables.embeddings(spark, Sf)
+
   // Nested-loop joins are allowed ONLY where a side is bounded by
-  // construction: knnTopk/annHamming (fixed query set), annIvf/kmeans
+  // construction: knnTopkOf/annHammingOf (fixed query set), annIvfOf/kmeans
   // (fixed centroid set), tfidf/collocations/funnelSteps (1-row
-  // totals), and annRecall (composes knn + ivf). Everything else is
+  // totals), and annRecallOf (composes knn + ivf). Everything else is
   // swept by the all-pairs test below.
   test("knnTopk keeps one query-set nested-loop and a partition-local top-k") {
-    val p = plan(Similarity.knnTopk(spark, Sf))
+    val p = plan(Similarity.knnTopkOf(embeddings))
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.length == 1,
       "brute-force knn is by design one broadcast nested-loop of queries x neighbors")
     assert(p.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
@@ -39,9 +41,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("annRecall adds no nested-loop beyond its parents' bounded ones") {
     def bnlj(p: SparkPlan) =
       p.collect { case j: BroadcastNestedLoopJoinExec => j }.length
-    val parents = bnlj(plan(Similarity.knnTopk(spark, Sf))) +
-      bnlj(plan(Similarity.annIvf(spark, Sf)))
-    val p = plan(Similarity.annRecall(spark, Sf))
+    val parents = bnlj(plan(Similarity.knnTopkOf(embeddings))) +
+      bnlj(plan(Similarity.annIvfOf(embeddings)))
+    val p = plan(Similarity.annRecallOf(embeddings))
     // ivf's centroid-assignment subtree is planned once per branch it
     // feeds, so the composition may repeat a parent's bounded BNLJ —
     // but the recall join itself must stay an equijoin.
@@ -51,14 +53,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("no dedup/ANN query plans an all-pairs join") {
-    // annIvf is excluded: its cell-assignment BNLJ is rows x a FIXED
+    // annIvfOf is excluded: its cell-assignment BNLJ is rows x a FIXED
     // 16-centroid broadcast — linear in rows by construction.
     val risky = Seq[DataFrame](
       q("dedup_minhash"),
       Dedup.dedupJaccard(spark, Sf),
       Dedup.jaccardPairs(spark, Sf),
       q("dedup_simhash"),
-      Similarity.annLsh(spark, Sf),
+      Similarity.annLshOf(embeddings),
       q("sessionize"),
       q("decontaminate"),
       q("repetition_stats"),
@@ -293,7 +295,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("round-8 tranche: rankers keep partition-local top-k and bounded nested loops") {
     // ndcg/mrr: the only nested loop is the fixed query-set broadcast
-    // (knnTopk's contract); ndcg's top-10 must stay WindowGroupLimit.
+    // (knnTopkOf's contract); ndcg's top-10 must stay WindowGroupLimit.
     val ndcg = plan(q("ndcg_eval"))
     assert(ndcg.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "ndcg top-10 must rewrite to WindowGroupLimit")
@@ -1325,8 +1327,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(pv.collect { case w: WindowExec => w }.isEmpty,
       s"price_volume_mix is window-free:\n$pv")
     // ivf_balance: the one corpus × 16-centroid assignment broadcast
-    // (the annIvf-exempted shape); per-vector windows partitioned.
-    val ib = plan(graft.operators.Similarity.ivfBalance(spark, Sf))
+    // (the annIvfOf-exempted shape); per-vector windows partitioned.
+    val ib = plan(graft.operators.Similarity.ivfBalanceOf(embeddings))
     assert(ib.collect { case j: CartesianProductExec => j }.isEmpty &&
       ib.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 1,
       s"ivf_balance: only the centroid broadcast crosses:\n$ib")
@@ -1335,7 +1337,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"ivf_balance: no single-partition window:\n$ib")
     // nprobe_sweep: five Q-or-centroid-bounded broadcast legs (the
     // knn query set + four IVF assignments), nothing unbounded.
-    val ns = plan(graft.operators.Similarity.nprobeSweep(spark, Sf))
+    val ns = plan(graft.operators.Similarity.nprobeSweepOf(embeddings))
     assert(ns.collect { case j: CartesianProductExec => j }.isEmpty &&
       ns.collect { case j: BroadcastNestedLoopJoinExec => j }.length <= 16,
       s"nprobe_sweep: only bounded audit legs cross:\n$ns")

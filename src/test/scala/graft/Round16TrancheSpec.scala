@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Behavior, CorpusStats, EventAnalytics, Multimodal,
-  Robust, Similarity, Warehouse}
+import graft.operators.{Behavior, CorpusStats, EventAnalytics, Robust}
 
 /** Adversarial edge-case audit of the round-16 operator tranche (the
   * standing hostile-input practice): every case pins either a
@@ -15,79 +14,6 @@ import graft.operators.{Behavior, CorpusStats, EventAnalytics, Multimodal,
   * degenerate input — never an exception. */
 class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
-
-  // ---- TPC-H Q15 shape: window-max tie keeps BOTH suppliers ----
-
-  private def li(rows: (String, Long, Double, Double)*): DataFrame =
-    rows.map { case (d, sk, ep, disc) => (d, sk, ep, disc) }
-      .toDF("d", "l_suppkey", "l_extendedprice", "l_discount")
-      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_suppkey"),
-        col("l_extendedprice"), col("l_discount"))
-
-  private def supp(rows: (Long, String)*): DataFrame =
-    rows.toDF("s_suppkey", "s_name")
-
-  test("top_supplier_share: a revenue tie keeps both suppliers, share is exact ppm") {
-    // Q1-1995: s1 and s2 tie at net 100.00 with zero discount
-    // (rev_c100 = 10000*100 = 1000000), s3 trails at 50.00; total =
-    // 2500.00 → share = 1000000*1e6 div 2500000 = 400000 ppm each.
-    val l = li(
-      ("1995-01-10 00:00:00", 1L, 100.0, 0.0),
-      ("1995-02-11 00:00:00", 2L, 100.0, 0.0),
-      ("1995-03-12 00:00:00", 3L, 50.0, 0.0))
-    val out = Warehouse.topSupplierShareOf(l,
-      supp(1L -> "alpha", 2L -> "beta", 3L -> "gamma")).collect()
-    assert(out.length == 2, s"tie must keep both: ${out.mkString(";")}")
-    assert(out.map(_.getString(2)).toSet == Set("alpha", "beta"))
-    assert(out.forall(_.getLong(4) == 400000L),
-      s"share 1000000/2500000 = 400000 ppm: ${out.mkString(";")}")
-    assert(out.forall(_.getString(0) == "1995-Q1"))
-  }
-
-  // ---- TPC-H Q18 shape: the strict > threshold boundary ----
-
-  test("large_orders: total quantity exactly at the threshold is excluded") {
-    val lines = Seq(
-      (1L, 75L), (1L, 75L),        // order 1: 150 — boundary, OUT
-      (2L, 75L), (2L, 76L))        // order 2: 151 — IN
-      .toDF("l_orderkey", "l_quantity")
-    val orders = Seq((1L, 10L, "1995-01-01", 100.0),
-        (2L, 20L, "1995-01-02", 200.0))
-      .toDF("o_orderkey", "o_custkey", "d", "o_totalprice")
-      .withColumn("o_orderdate", to_timestamp(col("d"))).drop("d")
-    val cust = Seq((10L, "c-ten"), (20L, "c-twenty"))
-      .toDF("c_custkey", "c_name")
-    val out = Warehouse.largeOrdersOf(lines, orders, cust).collect()
-    assert(out.length == 1, s"only 151 passes >150: ${out.mkString(";")}")
-    assert(out(0).getString(1) == "c-twenty")
-    assert(out(0).getLong(5) == 151L)
-    assert(out(0).getLong(4) == 20000L, "totalprice 200.00 → 20000 cents")
-  }
-
-  // ---- TPC-H Q6 shape: band boundaries and the exact what-if sum ----
-
-  test("discount_whatif: band/quantity boundaries and hand-computed forgone revenue") {
-    def line(d: String, qty: Long, ep: Double, disc: Double) =
-      (d, qty, ep, disc)
-    val rows = Seq(
-      line("1997-03-01 00:00:00", 23L, 100.0, 0.05), // IN: forgone 5.00
-      line("1997-04-01 00:00:00", 23L, 100.0, 0.07), // IN: forgone 7.00
-      line("1997-05-01 00:00:00", 24L, 100.0, 0.06), // qty 24: OUT (<24)
-      line("1997-06-01 00:00:00", 23L, 100.0, 0.04), // below band: OUT
-      line("1997-07-01 00:00:00", 23L, 100.0, 0.08)) // above band: OUT
-      .toDF("d", "l_quantity", "l_extendedprice", "l_discount")
-      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_quantity"),
-        col("l_extendedprice"), col("l_discount"))
-    val out = Warehouse.discountWhatifOf(rows).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getLong(0) == 1997L && r.getLong(1) == 2L)
-    // forgone: 10000c*5 + 10000c*7 = 120000 c100-units = $12.00
-    assert(r.getLong(2) == 120000L, s"forgone: $r")
-    assert(r.getLong(3) == 20000L, s"gross cents of the two IN lines: $r")
-    // bp = forgone*100 div gross = 12000000 div 20000 = 600 (6%)
-    assert(r.getLong(4) == 600L, s"share bp: $r")
-  }
 
   // ---- Cochran's Q + Fleiss kappa: exact hand pins via the lang gate ----
 
@@ -169,33 +95,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
     assert(out(0).getString(3) == "undefined")
   }
 
-  // ---- embedding MMD: exact separation pin + single-label refusal ----
-
-  private def embs(rows: (Long, Seq[Double], Long)*): DataFrame =
-    rows.toDF("vec_id", "embedding", "label")
-
-  test("embedding_mmd: orthogonal one-hot labels pin MMD^2 = 2.0 exactly") {
-    // label 0 mean (1,0), complement mean (0,1): per-dim gaps ±1e12,
-    // MMD^2 = 2e24/1e24 = 2.0; top_dim ties on gap^2 → smallest pos.
-    val out = Similarity.embeddingMmdOf(embs(
-      (1L, Seq(1.0, 0.0), 0L), (2L, Seq(1.0, 0.0), 0L),
-      (3L, Seq(0.0, 1.0), 1L))).collect()
-    assert(out.length == 2)
-    out.foreach { r =>
-      assert(r.getDouble(3) == 2.0, s"mmd2: $r")
-      assert(r.getInt(4) == 0, s"tie → smallest dim: $r")
-      assert(r.getLong(5) == 500000L, s"even split: $r")
-    }
-    val byLabel = out.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(byLabel(0L) == (2L, 1L) && byLabel(1L) == (1L, 2L))
-  }
-
-  test("embedding_mmd: a single-label corpus has no complement and emits nothing") {
-    val out = Similarity.embeddingMmdOf(embs(
-      (1L, Seq(1.0, 0.0), 0L), (2L, Seq(0.5, 0.5), 0L))).collect()
-    assert(out.isEmpty, s"no complement → no row: ${out.mkString(";")}")
-  }
-
   // ---- quantile lift: planted separation pins every quantile ----
 
   test("quantile_lift: planted arm values pin v0/v1/lift at every quantile") {
@@ -228,194 +127,6 @@ class Round16TrancheSpec extends AnyFunSuite with SparkFixture {
       .select(col("event_id"), col("user_id"), col("event_type"),
         to_timestamp(col("t")).as("ts"), col("value"))
     assert(Robust.quantileLiftOf(ev).collect().isEmpty)
-  }
-
-  // ---- sentence dedup: exact per-source duplication accounting ----
-
-  test("sentence_dedup: cross-source duplicate sentences count per instance; fragments filter") {
-    val docs = Seq(
-      (1L, "The quick brown fox jumps over the dog. Alpha beta gamma delta epsilon zeta eta.", "a"),
-      (2L, "The quick brown fox jumps over the dog. Short.", "a"),
-      (3L, "The quick brown fox jumps over the dog.", "b"))
-      .toDF("doc_id", "text", "source")
-    val out = graft.operators.Corpus.sentenceDedupOf(docs).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toMap
-    assert(out("a") == ((3L, 2L, 2L, 666666L)),
-      s"src a: 3 sentences, 2 distinct, 2 dup instances: $out")
-    assert(out("b") == ((1L, 1L, 1L, 1000000L)),
-      s"src b: its one sentence is a corpus-wide dup: $out")
-  }
-
-  // ---- source overlap: exact gram pair + absent-pair contract ----
-
-  test("source_overlap_matrix: one shared 8-gram pins the pair; disjoint pairs emit no row") {
-    val docs = Seq(
-      (1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9", "a"),  // grams: [w1..w8], [w2..w9]
-      (2L, "w1 w2 w3 w4 w5 w6 w7 w8 x9", "b"),  // shares [w1..w8] only
-      (3L, "z1 z2 z3 z4 z5 z6 z7 z8", "c"))     // disjoint
-      .toDF("doc_id", "text", "source")
-    val out = graft.operators.Corpus.sourceOverlapMatrixOf(docs).collect()
-    assert(out.length == 1, s"only (a,b) overlaps: ${out.mkString(";")}")
-    val r = out(0)
-    assert(r.getString(0) == "a" && r.getString(1) == "b")
-    assert(r.getLong(2) == 1L && r.getLong(3) == 2L && r.getLong(4) == 2L,
-      s"shared/totals: $r")
-    assert(r.getLong(5) == 333333L, s"jaccard 1/3 ppm: $r")
-  }
-
-  // ---- audio clipping: the hot-threshold boundary on exact bytes ----
-
-  test("audio_clipping_audit: the 15000 boundary splits 'u' (15040) from 't' (14976)") {
-    // byte b → |sample| = (b<<7)+64: 'u'=117 → 15040 (hot), 't'=116 →
-    // 14976 (cold); "uuut" → 3 hot of 4, ppm = 750000.
-    val docs = Seq((1L, "uuut", "xsrc")).toDF("doc_id", "text", "source")
-    val out = Multimodal.audioClippingAuditOf(docs).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getLong(2) == 4L && r.getLong(3) == 3L, s"hot count: $r")
-    assert(r.getLong(4) == 1L, "one hot doc")
-    assert(r.getLong(5) == 15040L, s"peak: $r")
-    assert(r.getLong(6) == 750000L, s"ppm: $r")
-  }
-
-  // ---- third tranche: the six remaining TPC-H shapes ----
-
-  private def dimChain: (DataFrame, DataFrame) = {
-    // nation 0 in EUROPE (region 3), nation 1 in ASIA (region 2)
-    val nation = Seq((0, "NATION_A", 3), (1, "NATION_B", 2))
-      .toDF("n_nationkey", "n_name", "n_regionkey")
-    val region = Seq((3, "EUROPE"), (2, "ASIA"))
-      .toDF("r_regionkey", "r_name")
-    (nation, region)
-  }
-
-  test("min_cost_supplier: min is over EUROPE suppliers only; a cost tie keeps both") {
-    val (nation, region) = dimChain
-    // s1/s2 EUROPE tie at unit cost 100c; s3 ASIA is cheaper at 50c
-    // but out of scope — the Q2 region clause scopes the MIN itself.
-    val supplier = Seq((1L, "s-one", 0, 10.0), (2L, "s-two", 0, 20.0),
-        (3L, "s-three", 1, 30.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val part = Seq((7L, "STANDARD", 15), (8L, "PROMO", 15))
-      .toDF("p_partkey", "p_type", "p_size")
-    val li = Seq(
-      (7L, 1L, 2.0, 2.0),   // unit 100c
-      (7L, 2L, 3.0, 3.0),   // unit 100c — tie
-      (7L, 3L, 2.0, 1.0),   // ASIA: unit 50c, must not mask the tie
-      (8L, 1L, 1.0, 1.0))   // non-STANDARD part: out
-      .toDF("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
-    val out = Warehouse.minCostSupplierOf(li, part, supplier, nation, region)
-      .collect()
-    assert(out.length == 2, s"EUROPE tie keeps both: ${out.mkString(";")}")
-    assert(out.map(_.getString(1)).toSet == Set("s-one", "s-two"))
-    assert(out.forall(_.getLong(5) == 100L),
-      s"unit cost = cents div units: ${out.mkString(";")}")
-    // ordered by acctbal DESC: s-two (20.0) first
-    assert(out(0).getString(1) == "s-two")
-  }
-
-  test("nation_profit: under-list selling yields a negative margin with toward-zero bp") {
-    val (nation, _) = dimChain
-    val supplier = Seq((1L, "s-one", 0, 10.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val part = Seq((7L, 3.0)).toDF("p_partkey", "p_retailprice")
-    // 2 units sold at ep=5.00 gross, 10% discount → net_c100 = 500*90
-    // = 45000; list_c100 = 2*300*100 = 60000 → margin −15000,
-    // bp = −15000*10000 div 45000 = −3333 (truncation toward zero).
-    val li = Seq(("1997-03-01 00:00:00", 7L, 1L, 2.0, 5.0, 0.10))
-      .toDF("d", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount")
-      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"), col("l_extendedprice"),
-        col("l_discount"))
-    val out = Warehouse.nationProfitOf(li, part, supplier, nation).collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getLong(2) == 45000L && r.getLong(3) == 60000L, s"legs: $r")
-    assert(r.getLong(4) == -15000L, s"margin: $r")
-    assert(r.getLong(5) == -3333L,
-      s"bp truncates toward zero on the negative leg: $r")
-  }
-
-  test("important_parts: a part exactly AT the 0.05% threshold is excluded") {
-    val supplier = Seq((1L, "s-one", 7, 10.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val nation7 = Seq((7, "NATION_7", 2))
-      .toDF("n_nationkey", "n_name", "n_regionkey")
-    // part 1 value 1 of total 2000 → value*2000 == total: OUT (strict >)
-    // part 2 value 1999 → IN
-    def line(pk: Long, cents: Double) = ("1997-01-01 00:00:00", pk, 1L,
-      1.0, cents, 0.0)
-    val li = Seq(line(1L, 0.01), line(2L, 19.99))
-      .toDF("d", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount")
-      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"), col("l_extendedprice"),
-        col("l_discount"))
-    val out = Warehouse.importantPartsOf(li, supplier, nation7).collect()
-    assert(out.length == 1, s"strict threshold: ${out.mkString(";")}")
-    assert(out(0).getLong(0) == 2L)
-    assert(out(0).getLong(1) == 199900L, s"value on the c100 grid: ${out(0)}")
-  }
-
-  test("priority_ship_mix: a 30-day lag is FAST, 31 is SLOW; priorities split 2/3") {
-    val orders = Seq(
-      (1L, "1997-01-01 00:00:00", "1-URGENT"),
-      (2L, "1997-01-01 00:00:00", "3-MEDIUM"))
-      .toDF("o_orderkey", "d", "o_orderpriority")
-      .withColumn("o_orderdate", to_timestamp(col("d"))).drop("d")
-    val li = Seq(
-      (1L, "1997-01-31 00:00:00"),  // 30 days → FAST, high
-      (2L, "1997-02-01 00:00:00"))  // 31 days → SLOW, low
-      .toDF("l_orderkey", "d")
-      .withColumn("l_shipdate", to_timestamp(col("d"))).drop("d")
-    val out = Warehouse.priorityShipMixOf(li, orders)
-      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3)))
-    assert(out.toSet == Set(("FAST", 1L, 0L), ("SLOW", 0L, 1L)),
-      s"boundary: ${out.mkString(";")}")
-  }
-
-  test("part_supplier_variety: deficit suppliers and the excluded brand drop out") {
-    val supplier = Seq((1L, 5.0), (2L, -1.0))
-      .toDF("s_suppkey", "s_acctbal")
-    val part = Seq(
-      (7L, "Brand#1", "SMALL", 9),
-      (8L, "Brand#13", "SMALL", 9),   // excluded brand
-      (9L, "Brand#1", "SMALL", 10))   // size outside the IN list
-      .toDF("p_partkey", "p_brand", "p_type", "p_size")
-    val li = Seq((7L, 1L), (7L, 1L), (7L, 2L), (8L, 1L), (9L, 1L))
-      .toDF("l_partkey", "l_suppkey")
-    val out = Warehouse.partSupplierVarietyOf(li, part, supplier).collect()
-    assert(out.length == 1, s"one surviving group: ${out.mkString(";")}")
-    val r = out(0)
-    assert(r.getString(0) == "Brand#1" && r.getLong(2) == 9L)
-    assert(r.getLong(3) == 1L,
-      s"s2 is deficit-book, duplicate lines collapse: $r")
-  }
-
-  test("excess_shippers: exactly half the part volume is excluded, majority is kept") {
-    val (nation, region) = dimChain
-    // both suppliers in ASIA (nation 1)
-    val supplier = Seq((1L, "s-one", 1, 10.0), (2L, "s-two", 1, 20.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val part = Seq((7L, "small bolt"), (8L, "small nut"), (9L, "red gear"))
-      .toDF("p_partkey", "p_name")
-    def line(pk: Long, sk: Long, q: Double, d: String) = (d, pk, sk, q)
-    val li = Seq(
-      line(7L, 1L, 5.0, "1997-03-01 00:00:00"),  // exactly half of 10
-      line(7L, 2L, 5.0, "1997-03-01 00:00:00"),  // exactly half of 10
-      line(8L, 2L, 3.0, "1997-03-01 00:00:00"),  // 3 of 4 → majority
-      line(8L, 1L, 1.0, "1997-03-01 00:00:00"),
-      line(9L, 1L, 9.0, "1997-03-01 00:00:00"),  // non-small part: out
-      line(8L, 1L, 9.0, "1998-03-01 00:00:00"))  // wrong year: out
-      .toDF("d", "l_partkey", "l_suppkey", "l_quantity")
-      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"))
-    val out = Warehouse.excessShippersOf(li, part, supplier, nation, region)
-      .collect()
-    assert(out.length == 1, s"only the >half shipper: ${out.mkString(";")}")
-    assert(out(0).getString(0) == "s-two")
   }
 
   // ---- fourth tranche: the assumption-audit stats shelf ----

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,8 @@ import graft.sources.Tables
 
 class SimilaritySpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
+
+  private def embeddings = Tables.embeddings(spark, Sf)
 
   test("codegen CosineSimilarity agrees with the HOF cross-check on real embeddings") {
     val e = Tables.embeddings(spark, Sf).limit(50)
@@ -36,7 +39,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("knnTopk returns exactly k ranked neighbors per query, scores non-increasing") {
-    val out = Similarity.knnTopk(spark, Sf).collect()
+    val out = Similarity.knnTopkOf(embeddings).collect()
     val byQ = out.groupBy(_.getLong(0))
     assert(byQ.size == Similarity.QuerySetSize)
     byQ.foreach { case (q, rows) =>
@@ -46,6 +49,22 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
         s"query $q scores not non-increasing")
       assert(rows.forall(r => r.getLong(1) != q), "self-match leaked")
     }
+  }
+
+  test("knnTopkOf: neighbors whose rounded scores tie rank by smaller n_id and cut at exactly k") {
+    // Query 0 points along x; queries 1..7 point along y (score 0 to it).
+    // Ids 8..22 lean 1e-4 off x: raw cosine 1 - 5e-9, rounded 1.0, so
+    // all fifteen tie. Id 23 lies exactly on x, a raw cosine of 1.0 that
+    // the tie hides: the cut must keep ids 8..17 and drop 18..23.
+    val rows = (0L, Array(1f, 0f)) +: ((1L to 7L).map(i => (i, Array(0f, 1f))) ++
+      (8L to 22L).map(i => (i, Array(1f, 1e-4f))) :+ (23L, Array(1f, 0f)))
+    val out = Similarity.knnTopkOf(rows.toDF("vec_id", "embedding"))
+      .filter(col("q_id") === 0L).collect()
+      .map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
+    assert(out.length == Similarity.TopK, s"cut at k: ${out.mkString(";")}")
+    assert(out.forall(_._2 == 1.0), s"every kept score is the tied 1.0: ${out.mkString(";")}")
+    assert(out.sortBy(_._3).map(_._1).toSeq == (8L to 17L),
+      s"ties rank by smaller n_id: ${out.mkString(";")}")
   }
 
   test("cosinePlanesFor keeps bucket occupancy flat as the corpus grows") {
@@ -79,10 +98,10 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("annIvf returns ranked per-query results whose scores the brute-force path confirms") {
-    val ivf = Similarity.annIvf(spark, Sf).collect()
+    val ivf = Similarity.annIvfOf(embeddings).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(ivf.nonEmpty)
-    val exactScores = Similarity.knnTopk(spark, Sf)
+    val exactScores = Similarity.knnTopkOf(embeddings)
       .select("q_id", "n_id", "score").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // Every IVF hit that brute-force also ranked must carry the same score
@@ -99,7 +118,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("annLsh scores are exact for the pairs it returns, with nonzero recall vs brute force") {
-    val ann = Similarity.annLsh(spark, Sf)
+    val ann = Similarity.annLshOf(embeddings)
       .select("q_id", "n_id", "score").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(ann.nonEmpty)
@@ -118,7 +137,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     }
     // recall floor: every ANN hit must be a real neighbor; overlap with
     // exact top-k should be well above zero even with 6 planes
-    val exact = Similarity.knnTopk(spark, Sf).select("q_id", "n_id").collect()
+    val exact = Similarity.knnTopkOf(embeddings).select("q_id", "n_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = ann.keySet.count(exact.contains).toDouble / exact.size
     assert(recall > 0.05, s"ANN recall $recall vs brute force")
@@ -497,7 +516,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("nprobe sweep: recall is monotone in nprobe and consistent with the registered point") {
     import graft.operators.Similarity
-    val sweep = Similarity.nprobeSweep(spark, Sf).collect()
+    val sweep = Similarity.nprobeSweepOf(embeddings).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(sweep.keySet == Set(1, 2, 3, 4))
@@ -507,7 +526,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       s"monotone: $sweep")
     // the nprobe = 2 leg IS the registered ann_recall compare,
     // micro-averaged: hits must agree exactly
-    val recallHits = Similarity.annRecall(spark, Sf).collect()
+    val recallHits = Similarity.annRecallOf(embeddings).collect()
       .map(_.getLong(2)).sum
     assert(sweep(2)._2 == recallHits,
       s"sweep(2) hits vs ann_recall: $sweep vs $recallHits")
@@ -516,7 +535,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   test("ivf balance: every vector lands in one cell and the imbalance factor is >= 1") {
     import graft.operators.Similarity
     import graft.sources.Tables
-    val r = Similarity.ivfBalance(spark, Sf).collect().head
+    val r = Similarity.ivfBalanceOf(embeddings).collect().head
     val nVec = Tables.embeddings(spark, Sf).count()
     assert(r.getLong(1) == nVec, "the assignment partitions the corpus")
     assert(r.getLong(0) <= 16L && r.getLong(0) >= 1L)
@@ -545,5 +564,32 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(out(0) == ((2L, 1.0, 0.0)), s"got $out")
     assert(out(1) == ((2L, 0.0, 0.0)), s"got $out")
     assert(out(2) == ((1L, null, 0.0)), s"got $out")
+  }
+
+  // ---- embedding MMD: exact separation pin + single-label refusal ----
+
+  private def embs(rows: (Long, Seq[Double], Long)*): DataFrame =
+    rows.toDF("vec_id", "embedding", "label")
+
+  test("embedding_mmd: orthogonal one-hot labels pin MMD^2 = 2.0 exactly") {
+    // label 0 mean (1,0), complement mean (0,1): per-dim gaps ±1e12,
+    // MMD^2 = 2e24/1e24 = 2.0; top_dim ties on gap^2 → smallest pos.
+    val out = Similarity.embeddingMmdOf(embs(
+      (1L, Seq(1.0, 0.0), 0L), (2L, Seq(1.0, 0.0), 0L),
+      (3L, Seq(0.0, 1.0), 1L))).collect()
+    assert(out.length == 2)
+    out.foreach { r =>
+      assert(r.getDouble(3) == 2.0, s"mmd2: $r")
+      assert(r.getInt(4) == 0, s"tie → smallest dim: $r")
+      assert(r.getLong(5) == 500000L, s"even split: $r")
+    }
+    val byLabel = out.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(byLabel(0L) == (2L, 1L) && byLabel(1L) == (1L, 2L))
+  }
+
+  test("embedding_mmd: a single-label corpus has no complement and emits nothing") {
+    val out = Similarity.embeddingMmdOf(embs(
+      (1L, Seq(1.0, 0.0), 0L), (2L, Seq(0.5, 0.5), 0L))).collect()
+    assert(out.isEmpty, s"no complement → no row: ${out.mkString(";")}")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -969,5 +970,217 @@ class WarehouseSpec extends AnyFunSuite with SparkFixture {
     val part = Seq((1L, "Brand#A")).toDF("p_partkey", "p_brand")
     assert(Warehouse.reorderPointOf(li, part).isEmpty,
       "n_days = 1 cannot estimate sigma -> no row, not a 0-sd plan")
+  }
+
+  // ---- TPC-H Q15 shape: window-max tie keeps BOTH suppliers ----
+
+  private def li(rows: (String, Long, Double, Double)*): DataFrame =
+    rows.map { case (d, sk, ep, disc) => (d, sk, ep, disc) }
+      .toDF("d", "l_suppkey", "l_extendedprice", "l_discount")
+      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_suppkey"),
+        col("l_extendedprice"), col("l_discount"))
+
+  private def supp(rows: (Long, String)*): DataFrame =
+    rows.toDF("s_suppkey", "s_name")
+
+  test("top_supplier_share: a revenue tie keeps both suppliers, share is exact ppm") {
+    // Q1-1995: s1 and s2 tie at net 100.00 with zero discount
+    // (rev_c100 = 10000*100 = 1000000), s3 trails at 50.00; total =
+    // 2500.00 → share = 1000000*1e6 div 2500000 = 400000 ppm each.
+    val l = li(
+      ("1995-01-10 00:00:00", 1L, 100.0, 0.0),
+      ("1995-02-11 00:00:00", 2L, 100.0, 0.0),
+      ("1995-03-12 00:00:00", 3L, 50.0, 0.0))
+    val out = Warehouse.topSupplierShareOf(l,
+      supp(1L -> "alpha", 2L -> "beta", 3L -> "gamma")).collect()
+    assert(out.length == 2, s"tie must keep both: ${out.mkString(";")}")
+    assert(out.map(_.getString(2)).toSet == Set("alpha", "beta"))
+    assert(out.forall(_.getLong(4) == 400000L),
+      s"share 1000000/2500000 = 400000 ppm: ${out.mkString(";")}")
+    assert(out.forall(_.getString(0) == "1995-Q1"))
+  }
+
+  // ---- TPC-H Q18 shape: the strict > threshold boundary ----
+
+  test("large_orders: total quantity exactly at the threshold is excluded") {
+    val lines = Seq(
+      (1L, 75L), (1L, 75L),        // order 1: 150 — boundary, OUT
+      (2L, 75L), (2L, 76L))        // order 2: 151 — IN
+      .toDF("l_orderkey", "l_quantity")
+    val orders = Seq((1L, 10L, "1995-01-01", 100.0),
+        (2L, 20L, "1995-01-02", 200.0))
+      .toDF("o_orderkey", "o_custkey", "d", "o_totalprice")
+      .withColumn("o_orderdate", to_timestamp(col("d"))).drop("d")
+    val cust = Seq((10L, "c-ten"), (20L, "c-twenty"))
+      .toDF("c_custkey", "c_name")
+    val out = Warehouse.largeOrdersOf(lines, orders, cust).collect()
+    assert(out.length == 1, s"only 151 passes >150: ${out.mkString(";")}")
+    assert(out(0).getString(1) == "c-twenty")
+    assert(out(0).getLong(5) == 151L)
+    assert(out(0).getLong(4) == 20000L, "totalprice 200.00 → 20000 cents")
+  }
+
+  // ---- TPC-H Q6 shape: band boundaries and the exact what-if sum ----
+
+  test("discount_whatif: band/quantity boundaries and hand-computed forgone revenue") {
+    def line(d: String, qty: Long, ep: Double, disc: Double) =
+      (d, qty, ep, disc)
+    val rows = Seq(
+      line("1997-03-01 00:00:00", 23L, 100.0, 0.05), // IN: forgone 5.00
+      line("1997-04-01 00:00:00", 23L, 100.0, 0.07), // IN: forgone 7.00
+      line("1997-05-01 00:00:00", 24L, 100.0, 0.06), // qty 24: OUT (<24)
+      line("1997-06-01 00:00:00", 23L, 100.0, 0.04), // below band: OUT
+      line("1997-07-01 00:00:00", 23L, 100.0, 0.08)) // above band: OUT
+      .toDF("d", "l_quantity", "l_extendedprice", "l_discount")
+      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_quantity"),
+        col("l_extendedprice"), col("l_discount"))
+    val out = Warehouse.discountWhatifOf(rows).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(0) == 1997L && r.getLong(1) == 2L)
+    // forgone: 10000c*5 + 10000c*7 = 120000 c100-units = $12.00
+    assert(r.getLong(2) == 120000L, s"forgone: $r")
+    assert(r.getLong(3) == 20000L, s"gross cents of the two IN lines: $r")
+    // bp = forgone*100 div gross = 12000000 div 20000 = 600 (6%)
+    assert(r.getLong(4) == 600L, s"share bp: $r")
+  }
+
+  // ---- third tranche: the six remaining TPC-H shapes ----
+
+  private def dimChain: (DataFrame, DataFrame) = {
+    // nation 0 in EUROPE (region 3), nation 1 in ASIA (region 2)
+    val nation = Seq((0, "NATION_A", 3), (1, "NATION_B", 2))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val region = Seq((3, "EUROPE"), (2, "ASIA"))
+      .toDF("r_regionkey", "r_name")
+    (nation, region)
+  }
+
+  test("min_cost_supplier: min is over EUROPE suppliers only; a cost tie keeps both") {
+    val (nation, region) = dimChain
+    // s1/s2 EUROPE tie at unit cost 100c; s3 ASIA is cheaper at 50c
+    // but out of scope — the Q2 region clause scopes the MIN itself.
+    val supplier = Seq((1L, "s-one", 0, 10.0), (2L, "s-two", 0, 20.0),
+        (3L, "s-three", 1, 30.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    val part = Seq((7L, "STANDARD", 15), (8L, "PROMO", 15))
+      .toDF("p_partkey", "p_type", "p_size")
+    val li = Seq(
+      (7L, 1L, 2.0, 2.0),   // unit 100c
+      (7L, 2L, 3.0, 3.0),   // unit 100c — tie
+      (7L, 3L, 2.0, 1.0),   // ASIA: unit 50c, must not mask the tie
+      (8L, 1L, 1.0, 1.0))   // non-STANDARD part: out
+      .toDF("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
+    val out = Warehouse.minCostSupplierOf(li, part, supplier, nation, region)
+      .collect()
+    assert(out.length == 2, s"EUROPE tie keeps both: ${out.mkString(";")}")
+    assert(out.map(_.getString(1)).toSet == Set("s-one", "s-two"))
+    assert(out.forall(_.getLong(5) == 100L),
+      s"unit cost = cents div units: ${out.mkString(";")}")
+    // ordered by acctbal DESC: s-two (20.0) first
+    assert(out(0).getString(1) == "s-two")
+  }
+
+  test("nation_profit: under-list selling yields a negative margin with toward-zero bp") {
+    val (nation, _) = dimChain
+    val supplier = Seq((1L, "s-one", 0, 10.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    val part = Seq((7L, 3.0)).toDF("p_partkey", "p_retailprice")
+    // 2 units sold at ep=5.00 gross, 10% discount → net_c100 = 500*90
+    // = 45000; list_c100 = 2*300*100 = 60000 → margin −15000,
+    // bp = −15000*10000 div 45000 = −3333 (truncation toward zero).
+    val li = Seq(("1997-03-01 00:00:00", 7L, 1L, 2.0, 5.0, 0.10))
+      .toDF("d", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_discount")
+      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
+        col("l_suppkey"), col("l_quantity"), col("l_extendedprice"),
+        col("l_discount"))
+    val out = Warehouse.nationProfitOf(li, part, supplier, nation).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(2) == 45000L && r.getLong(3) == 60000L, s"legs: $r")
+    assert(r.getLong(4) == -15000L, s"margin: $r")
+    assert(r.getLong(5) == -3333L,
+      s"bp truncates toward zero on the negative leg: $r")
+  }
+
+  test("important_parts: a part exactly AT the 0.05% threshold is excluded") {
+    val supplier = Seq((1L, "s-one", 7, 10.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    val nation7 = Seq((7, "NATION_7", 2))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    // part 1 value 1 of total 2000 → value*2000 == total: OUT (strict >)
+    // part 2 value 1999 → IN
+    def line(pk: Long, cents: Double) = ("1997-01-01 00:00:00", pk, 1L,
+      1.0, cents, 0.0)
+    val li = Seq(line(1L, 0.01), line(2L, 19.99))
+      .toDF("d", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_discount")
+      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
+        col("l_suppkey"), col("l_quantity"), col("l_extendedprice"),
+        col("l_discount"))
+    val out = Warehouse.importantPartsOf(li, supplier, nation7).collect()
+    assert(out.length == 1, s"strict threshold: ${out.mkString(";")}")
+    assert(out(0).getLong(0) == 2L)
+    assert(out(0).getLong(1) == 199900L, s"value on the c100 grid: ${out(0)}")
+  }
+
+  test("priority_ship_mix: a 30-day lag is FAST, 31 is SLOW; priorities split 2/3") {
+    val orders = Seq(
+      (1L, "1997-01-01 00:00:00", "1-URGENT"),
+      (2L, "1997-01-01 00:00:00", "3-MEDIUM"))
+      .toDF("o_orderkey", "d", "o_orderpriority")
+      .withColumn("o_orderdate", to_timestamp(col("d"))).drop("d")
+    val li = Seq(
+      (1L, "1997-01-31 00:00:00"),  // 30 days → FAST, high
+      (2L, "1997-02-01 00:00:00"))  // 31 days → SLOW, low
+      .toDF("l_orderkey", "d")
+      .withColumn("l_shipdate", to_timestamp(col("d"))).drop("d")
+    val out = Warehouse.priorityShipMixOf(li, orders)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(out.toSet == Set(("FAST", 1L, 0L), ("SLOW", 0L, 1L)),
+      s"boundary: ${out.mkString(";")}")
+  }
+
+  test("part_supplier_variety: deficit suppliers and the excluded brand drop out") {
+    val supplier = Seq((1L, 5.0), (2L, -1.0))
+      .toDF("s_suppkey", "s_acctbal")
+    val part = Seq(
+      (7L, "Brand#1", "SMALL", 9),
+      (8L, "Brand#13", "SMALL", 9),   // excluded brand
+      (9L, "Brand#1", "SMALL", 10))   // size outside the IN list
+      .toDF("p_partkey", "p_brand", "p_type", "p_size")
+    val li = Seq((7L, 1L), (7L, 1L), (7L, 2L), (8L, 1L), (9L, 1L))
+      .toDF("l_partkey", "l_suppkey")
+    val out = Warehouse.partSupplierVarietyOf(li, part, supplier).collect()
+    assert(out.length == 1, s"one surviving group: ${out.mkString(";")}")
+    val r = out(0)
+    assert(r.getString(0) == "Brand#1" && r.getLong(2) == 9L)
+    assert(r.getLong(3) == 1L,
+      s"s2 is deficit-book, duplicate lines collapse: $r")
+  }
+
+  test("excess_shippers: exactly half the part volume is excluded, majority is kept") {
+    val (nation, region) = dimChain
+    // both suppliers in ASIA (nation 1)
+    val supplier = Seq((1L, "s-one", 1, 10.0), (2L, "s-two", 1, 20.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    val part = Seq((7L, "small bolt"), (8L, "small nut"), (9L, "red gear"))
+      .toDF("p_partkey", "p_name")
+    def line(pk: Long, sk: Long, q: Double, d: String) = (d, pk, sk, q)
+    val li = Seq(
+      line(7L, 1L, 5.0, "1997-03-01 00:00:00"),  // exactly half of 10
+      line(7L, 2L, 5.0, "1997-03-01 00:00:00"),  // exactly half of 10
+      line(8L, 2L, 3.0, "1997-03-01 00:00:00"),  // 3 of 4 → majority
+      line(8L, 1L, 1.0, "1997-03-01 00:00:00"),
+      line(9L, 1L, 9.0, "1997-03-01 00:00:00"),  // non-small part: out
+      line(8L, 1L, 9.0, "1998-03-01 00:00:00"))  // wrong year: out
+      .toDF("d", "l_partkey", "l_suppkey", "l_quantity")
+      .select(to_timestamp(col("d")).as("l_shipdate"), col("l_partkey"),
+        col("l_suppkey"), col("l_quantity"))
+    val out = Warehouse.excessShippersOf(li, part, supplier, nation, region)
+      .collect()
+    assert(out.length == 1, s"only the >half shipper: ${out.mkString(";")}")
+    assert(out(0).getString(0) == "s-two")
   }
 }
