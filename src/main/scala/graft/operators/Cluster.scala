@@ -537,17 +537,21 @@ object Cluster {
           .as("anisotropy"))
   }
 
-  /** The per-point `nn`-NN edge frame within k-means cells (cluster,
-    * vec_id → b_id) under the rounded-cosine total order — shared by
-    * the hubness audit and the mutual-kNN rate so the two always read
-    * the SAME graph. Pairwise only within cells (the [[semDedupOf]]
-    * bound). */
-  private def knnEdges(embeddings: DataFrame, k: Int, iters: Int,
-                       nn: Int): DataFrame = {
-    require(nn > 0, s"nn must be positive, got $nn")
-    val a = assignedOf(embeddings, k, iters)
+  /** The final k-means assignment (vec_id, emb, cluster), materialized:
+    * [[knnEdges]] joins it with itself and the hubness audit also reads
+    * its membership, so the Lloyd chain runs once. */
+  private def cells(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
+    assignedOf(embeddings, k, iters)
       .select(col("vec_id"), col("emb"), col("cluster"))
-      .localCheckpoint(false) // joined with itself
+      .localCheckpoint(false)
+
+  /** The per-point `nn`-NN edge frame within [[cells]]' k-means cells
+    * (cluster, vec_id → b_id) under the rounded-cosine total order —
+    * shared by the hubness audit and the mutual-kNN rate so the two
+    * always read the SAME graph. Pairwise only within cells (the
+    * [[semDedupOf]] bound). */
+  private def knnEdges(a: DataFrame, nn: Int): DataFrame = {
+    require(nn > 0, s"nn must be positive, got $nn")
     val b = a.select(col("cluster").as("b_cluster"),
       col("vec_id").as("b_id"), col("emb").as("b_emb"))
     Similarity.topK(a.join(b, col("cluster") === col("b_cluster") &&
@@ -575,11 +579,11 @@ object Cluster {
     * (parallelism = points), in-degree one bounded-key aggregate. */
   def hubnessAuditOf(embeddings: DataFrame, k: Int = K,
                      iters: Int = Iterations, nn: Int = 3): DataFrame = {
-    val members = assignedOf(embeddings, k, iters).select(col("cluster"), col("vec_id"))
-    val indeg = knnEdges(embeddings, k, iters, nn)
+    val a = cells(embeddings, k, iters)
+    val indeg = knnEdges(a, nn)
       .groupBy(col("cluster"), col("b_id").as("vec_id"))
       .agg(count(lit(1)).as("indeg"))
-    members
+    a.select(col("cluster"), col("vec_id"))
       .join(indeg, Seq("cluster", "vec_id"), "left")
       .select(col("cluster"), coalesce(col("indeg"), lit(0L)).as("indeg"))
       .groupBy("cluster")
@@ -605,7 +609,7 @@ object Cluster {
     * the reversed edge key, bounded per-cluster fold. */
   def mutualKnnRateOf(embeddings: DataFrame, k: Int = K,
                       iters: Int = Iterations, nn: Int = 3): DataFrame = {
-    val e = knnEdges(embeddings, k, iters, nn)
+    val e = knnEdges(cells(embeddings, k, iters), nn)
       .select(col("cluster"), col("vec_id").as("u"), col("b_id").as("v"))
       .localCheckpoint(false) // both sides of the reciprocity join
     val rev = e.select(col("cluster"), col("v").as("u"), col("u").as("v"))

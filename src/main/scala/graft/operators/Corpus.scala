@@ -34,35 +34,36 @@ object Corpus {
         PhoneRe, "[PHONE]"),
       IpRe, "[IP]")
 
-  /** PII scrub over documents. The synthetic corpus carries no real
-    * contact strings, so the query plants deterministic ones first
-    * (doc_id-keyed, same construction in the DuckDB oracle — the
-    * pattern `variant_extract` established) and then counts + redacts
-    * them. Output carries md5 of the redacted text so the full
+  /** The text with deterministic contact strings planted (doc_id-keyed,
+    * same construction in the DuckDB oracle — the pattern
+    * `variant_extract` established): the synthetic corpus carries no
+    * real ones. */
+  private def plantedPii: Column = concat(
+    col("text"),
+    when(col("doc_id") % 3 > 0,
+      concat(lit(" contact user"), col("doc_id").cast("string"),
+        lit("@mail.example.com")))
+      .otherwise(lit("")),
+    when(col("doc_id") % 2 === 0,
+      concat(lit(" call +1-555-"),
+        lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
+      .otherwise(lit("")),
+    when(col("doc_id") % 5 === 0,
+      concat(lit(" from 10."), (col("doc_id") % 256).cast("string"),
+        lit(".0.1")))
+      .otherwise(lit("")))
+
+  /** PII scrub over documents: counts and redacts the [[plantedPii]]
+    * strings. Output carries md5 of the redacted text so the full
     * transformation is hash-compared, not just the counts. */
-  def piiRedactOf(docs: DataFrame): DataFrame = {
-    val synth = concat(
-      col("text"),
-      when(col("doc_id") % 3 > 0,
-        concat(lit(" contact user"), col("doc_id").cast("string"),
-          lit("@mail.example.com")))
-        .otherwise(lit("")),
-      when(col("doc_id") % 2 === 0,
-        concat(lit(" call +1-555-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-        .otherwise(lit("")),
-      when(col("doc_id") % 5 === 0,
-        concat(lit(" from 10."), (col("doc_id") % 256).cast("string"),
-          lit(".0.1")))
-        .otherwise(lit("")))
-    docs.select(col("doc_id"), synth.as("synth"))
+  def piiRedactOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), plantedPii.as("synth"))
       .select(col("doc_id"),
         size(regexp_extract_all(col("synth"), lit(EmailRe), lit(0))).as("n_emails"),
         size(regexp_extract_all(col("synth"), lit(PhoneRe), lit(0))).as("n_phones"),
         size(regexp_extract_all(col("synth"), lit(IpRe), lit(0))).as("n_ips"),
         md5(redactPii(col("synth"))).as("redacted_md5"))
       .orderBy("doc_id")
-  }
 
   /** Per-source PII incidence report — the governance DASHBOARD over
     * [[piiRedactOf]]'s per-doc transform: how many documents in each
@@ -74,25 +75,11 @@ object Corpus {
     * one bounded source aggregate; rates divide once, 4 dp half-up.
     */
   def piiBySourceOf(docs: DataFrame): DataFrame = {
-    val synth = concat(
-      col("text"),
-      when(col("doc_id") % 3 > 0,
-        concat(lit(" contact user"), col("doc_id").cast("string"),
-          lit("@mail.example.com")))
-        .otherwise(lit("")),
-      when(col("doc_id") % 2 === 0,
-        concat(lit(" call +1-555-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-        .otherwise(lit("")),
-      when(col("doc_id") % 5 === 0,
-        concat(lit(" from 10."), (col("doc_id") % 256).cast("string"),
-          lit(".0.1")))
-        .otherwise(lit("")))
     docs
       .select(col("source"),
-        size(regexp_extract_all(synth, lit(EmailRe), lit(0))).as("e"),
-        size(regexp_extract_all(synth, lit(PhoneRe), lit(0))).as("p"),
-        size(regexp_extract_all(synth, lit(IpRe), lit(0))).as("i"))
+        size(regexp_extract_all(plantedPii, lit(EmailRe), lit(0))).as("e"),
+        size(regexp_extract_all(plantedPii, lit(PhoneRe), lit(0))).as("p"),
+        size(regexp_extract_all(plantedPii, lit(IpRe), lit(0))).as("i"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("e") > 0, 1L).otherwise(0L)).as("docs_with_email"),
@@ -105,6 +92,14 @@ object Corpus {
           / col("n_docs").cast("double")).as("hits_per_doc"))
       .orderBy("source")
   }
+
+  /** The per-doc SET of strict token `n`-gram hashes (63-bit xxhash64,
+    * one native [[graft.plans.ShingleHashes]] pass): the gram every
+    * span operator here shares. A doc shorter than `n` tokens has none. */
+  private def strictGrams(n: Int): Column =
+    graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
+      graft.plans.ColumnBridge.expression(col("text")), n, Long.MaxValue,
+      strict = true))
 
   /** Benchmark decontamination: a corpus document is contaminated if it
     * shares any token `n`-gram with a benchmark document (here: the
@@ -127,9 +122,7 @@ object Corpus {
     // also shrinks the broadcast + join keys ~6×. Collision risk at
     // |bench|·|corpus| gram pairs is ~|B||C|/2⁶³ — nil at any corpus
     // size that fits a cluster.
-    val grams = explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-      graft.plans.ColumnBridge.expression(col("text")), n, Long.MaxValue,
-      strict = true))).as("g")
+    val grams = explode(strictGrams(n)).as("g")
     val bench = broadcast(
       docs.filter(col("source") === benchSource).select(grams).distinct())
     val corpus = docs.filter(col("source") =!= benchSource)
@@ -167,10 +160,7 @@ object Corpus {
   def boilerplateStatsOf(docs: DataFrame, n: Int = 8, minDocs: Int = 3): DataFrame = {
     require(n > 1, s"n-gram order must be > 1, got $n")
     require(minDocs > 1, s"minDocs must be > 1, got $minDocs")
-    val hs = graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-      graft.plans.ColumnBridge.expression(col("text")), n, Long.MaxValue,
-      strict = true))
-    val hg = docs.select(col("doc_id"), hs.as("hs"))
+    val hg = docs.select(col("doc_id"), strictGrams(n).as("hs"))
       .filter(size(col("hs")) > 0)
       .localCheckpoint(false) // feeds the per-doc totals AND the df fold
     val dg = hg.select(col("doc_id"), explode(col("hs")).as("g"))
@@ -189,11 +179,35 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  /** The (doc_id, token, tf) frame both vocabulary consumers build on
-    * (map-side combinable). */
-  def tokenTfOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+  /** The (`key`, token, `tf`) whitespace-token count frame every
+    * vocabulary and term-statistics operator builds on (map-side
+    * combinable). `keep` filters the token stream before it shuffles
+    * (BM25's query terms). Empty and whitespace-only texts count one
+    * "" token ([[TextF.tokens]]' convention). */
+  def tokenTfOf(docs: DataFrame, key: String = "doc_id", tf: String = "tf",
+                keep: DataFrame => DataFrame = identity): DataFrame =
+    keep(docs.select(col(key), explode(TextF.tokens(col("text"))).as("token")))
+      .groupBy(key, "token").agg(count(lit(1)).as(tf))
+
+  /** (doc_id, pos, tok): one row per whitespace-token position. */
+  private[operators] def tokenPositions(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(TextF.tokens(col("text"))))
+      .toDF("doc_id", "pos", "tok")
+
+  /** Positional `n`-grams over a [[tokenPositions]] frame: (doc_id, pos,
+    * g, full), g the xxhash64 of the `n` tokens from pos on — hashed
+    * straight from `n − 1` `lead()`s over the (doc, pos) window (native
+    * codegen, no per-position interpreted slice lambda; no gram-string
+    * concat, so "ab c" and "a bc" hash differently). Only full grams
+    * survive. */
+  private[operators] def leadGrams(tp: DataFrame, n: Int): DataFrame = {
+    val byPos = Window.partitionBy("doc_id").orderBy("pos")
+    val tail = (1 until n).map(i => lead(col("tok"), i).over(byPos))
+    tp.select(col("doc_id"), col("pos"),
+        xxhash64((col("tok") +: tail): _*).as("g"),
+        tail.last.isNotNull.as("full"))
+      .filter(col("full"))
+  }
 
   /** Top-`k` vocabulary ranking over a [[tokenTfOf]] frame — ONE
     * definition, so the OOV-rate evaluator can never drift from the
@@ -501,9 +515,9 @@ object Corpus {
     *
     * Positional grams can't come from [[graft.plans.ShingleHashes]]
     * (it de-duplicates into a SET); instead ONE posexploded token frame
-    * is materialized and grams form as 7 `lead()`s over the (doc, pos)
-    * window — native codegen, no per-position interpreted slice lambda
-    * (the 7× trap [[graft.functions.TextF.bigramPairs]] documents).
+    * is materialized and grams form as [[leadGrams]] — no per-position
+    * interpreted slice lambda (the 7× trap
+    * [[graft.functions.TextF.bigramPairs]] documents).
     *
     * 100 TB shape: the token frame shuffles once on doc_id (the window)
     * and once on the gram hash (the df aggregate); covered positions
@@ -517,22 +531,11 @@ object Corpus {
     require(minDocs > 1, s"minDocs must be > 1, got $minDocs")
     // (doc_id, pos, tok): two consumers (gram build, reassembly) —
     // materialize once (no cross-branch CSE in Catalyst).
-    val tp = docs
-      .select(col("doc_id"), posexplode(TextF.tokens(col("text"))))
-      .toDF("doc_id", "pos", "tok")
-      .localCheckpoint(false)
-    val byPos = Window.partitionBy("doc_id").orderBy("pos")
-    val tail = (1 until n).map(i => lead(col("tok"), i).over(byPos))
-    // Hash the n token columns directly (no gram-string concat — and
-    // no boundary ambiguity: "ab c" vs "a bc" hash differently).
+    val tp = tokenPositions(docs).localCheckpoint(false)
     // Materialized: the window is the expensive pass and BOTH the df
     // aggregate and the candidate join consume it, keyed differently
     // (distinct on (g, doc) vs join on g — ReuseExchange can't help).
-    val grams = tp
-      .select(col("doc_id"), col("pos"),
-        xxhash64((col("tok") +: tail): _*).as("g"),
-        tail.last.isNotNull.as("full"))
-      .filter(col("full"))
+    val grams = leadGrams(tp, n)
       .select("doc_id", "pos", "g")
       .localCheckpoint(false)
     val common = grams.select("g", "doc_id").distinct()
@@ -796,19 +799,16 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"), sum("t").as("total_tokens"),
         max("t").as("max_tokens"))
       .localCheckpoint(false) // per-bucket rows + the global fold
+    val wastePpm = expr(s"CAST((CAST(n_docs AS $dec) * max_tokens - total_tokens)" +
+      s" * 1000000 div NULLIF(CAST(n_docs AS $dec) * max_tokens, 0)" +
+      s" AS BIGINT)").as("pad_waste_ppm")
     val perBucket = buckets.select(col("bucket").cast("long").as("bucket"),
-      col("n_docs"), col("max_tokens"), col("total_tokens"),
-      expr(s"CAST((CAST(n_docs AS $dec) * max_tokens - total_tokens)" +
-        s" * 1000000 div NULLIF(CAST(n_docs AS $dec) * max_tokens, 0)" +
-        s" AS BIGINT)").as("pad_waste_ppm"))
+      col("n_docs"), col("max_tokens"), col("total_tokens"), wastePpm)
     val global = buckets.agg(sum("n_docs").as("n_docs"),
         sum("total_tokens").as("total_tokens"),
         max("max_tokens").as("max_tokens"))
       .select(lit(-1L).as("bucket"), col("n_docs"), col("max_tokens"),
-        col("total_tokens"),
-        expr(s"CAST((CAST(n_docs AS $dec) * max_tokens - total_tokens)" +
-          s" * 1000000 div NULLIF(CAST(n_docs AS $dec) * max_tokens, 0)" +
-          s" AS BIGINT)").as("pad_waste_ppm"))
+        col("total_tokens"), wastePpm)
     perBucket.unionByName(global).orderBy("bucket")
   }
 
@@ -997,34 +997,21 @@ object Corpus {
     * strict 8-grams present in BOTH, with the exact-ppm Jaccard
     * shared/(|A|+|B|−shared).
     *
-    * Shape: the [[boilerplateStatsOf]] gram machinery — one distinct
+    * Shape: [[strictGrams]] as a (source, g) frame, one distinct
     * (gram, source) aggregate (the fact's only heavy shuffle), then
-    * collect_set(source) per gram (≤|sources| entries, bounded) and a
-    * map-side ordered-pair explode whose mass is ≤ C(|sources|,2)
-    * per gram — never a gram-keyed self-join; per-source totals ride
-    * the SAME frame as a ≤|sources|-row broadcast. Output is
+    * [[Dedup.sourcePairs]]' per-gram sorted source set and map-side
+    * pair explode — never a gram-keyed self-join; per-source totals
+    * ride the SAME frame as a ≤|sources|-row broadcast. Output is
     * ≤ C(|sources|,2) rows. */
   def sourceOverlapMatrixOf(docs: DataFrame, n: Int = 8,
                             approx: Boolean = false): DataFrame = {
     require(n > 1, s"n-gram order must be > 1, got $n")
     if (approx) return sourceOverlapSketchOf(docs, n)
-    val grams = explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-      graft.plans.ColumnBridge.expression(col("text")), n, Long.MaxValue,
-      strict = true))).as("g")
-    val gs = docs.select(col("source"), grams)
+    val gs = sourceGrams(docs, n)
       .groupBy("g", "source").agg(count(lit(1)).as("_c")).drop("_c")
       .localCheckpoint(false) // feeds the pair explode AND the totals
     val totals = gs.groupBy("source").agg(count(lit(1)).as("tot"))
-    val pairs = gs.groupBy("g")
-      .agg(sort_array(collect_set(col("source"))).as("ss"))
-      .filter(size(col("ss")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(ss, (a, i) ->
-          |  transform(slice(ss, i + 2, size(ss)), b -> struct(a, b))))"""
-          .stripMargin)).as("p"))
-      .groupBy(col("p.a").as("source_a"), col("p.b").as("source_b"))
-      .agg(count(lit(1)).as("shared_grams"))
-    pairs
+    Dedup.sourcePairs(gs, "shared_grams")
       .join(broadcast(totals.select(col("source").as("source_a"),
         col("tot").as("tot_a"))), "source_a")
       .join(broadcast(totals.select(col("source").as("source_b"),
@@ -1037,14 +1024,16 @@ object Corpus {
       .orderBy("source_a", "source_b")
   }
 
+  /** (source, g): every [[strictGrams]] hash of every document. */
+  private def sourceGrams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("source"), explode(strictGrams(n)).as("g"))
+
   /** The `approx = true` path of [[sourceOverlapMatrixOf]] — the
     * r16 ×100 rehearsal's 51× leader, because the exact path's
     * distinct (gram, source) aggregate shuffles every distinct gram
-    * of a 100 TB corpus. The sketch twin is [[graft.operators.Dedup]]
-    * dupMatrixSketchOf's machinery with the matrix's own output
-    * contract: each source folds its gram stream into ONE
-    * Datasketches HLL (map-side combinable, 256 KB at lgK=18), totals
-    * are per-source estimates and shared mass comes from pairwise
+    * of a 100 TB corpus. The sketch twin runs [[Dedup.sketchPairs]]
+    * with the matrix's own output contract: totals are per-source
+    * HLL estimates and shared mass is [[Dedup.sketchShared]]'s
     * inclusion-exclusion over the |sources|-row sketch frame. The
     * distinct shuffle AND the per-gram collect_set/pair explode are
     * GONE — the only pairwise work is |sources|² arithmetic on
@@ -1054,27 +1043,12 @@ object Corpus {
     * above it; non-positive estimates are clamped out, mirroring the
     * exact path's shared ≥ 1 row contract. ScaleApproxSpec bands
     * every cell union-relative against the exact matrix. */
-  private def sourceOverlapSketchOf(docs: DataFrame, n: Int): DataFrame = {
-    val grams = explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-      graft.plans.ColumnBridge.expression(col("text")), n, Long.MaxValue,
-      strict = true))).as("g")
-    val sk = docs.select(col("source"), grams)
-      .groupBy("source")
-      .agg(expr("hll_sketch_agg(g, 18)").as("sk"))
-      .localCheckpoint(false) // both pair sides
-    val pairs = sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
-      .crossJoin(broadcast(
-        sk.select(col("source").as("source_b"), col("sk").as("sk_b"))))
-      .filter(col("source_a") < col("source_b")) // |sources|² bounded
-    pairs
+  private def sourceOverlapSketchOf(docs: DataFrame, n: Int): DataFrame =
+    Dedup.sketchPairs(sourceGrams(docs, n))
       .select(col("source_a"), col("source_b"),
         round(expr("hll_sketch_estimate(sk_a)")).cast("long").as("tot_a"),
         round(expr("hll_sketch_estimate(sk_b)")).cast("long").as("tot_b"),
-        greatest(lit(0L),
-          round(expr("hll_sketch_estimate(sk_a)")
-            + expr("hll_sketch_estimate(sk_b)")
-            - expr("hll_sketch_estimate(hll_union(sk_a, sk_b))"))
-            .cast("long")).as("shared_grams"))
+        Dedup.sketchShared.as("shared_grams"))
       .filter(col("shared_grams") > 0L)
       .select(col("source_a"), col("source_b"), col("shared_grams"),
         col("tot_a"), col("tot_b"),
@@ -1082,7 +1056,6 @@ object Corpus {
                | div (tot_a + tot_b - shared_grams)""".stripMargin)
           .as("jaccard_ppm"))
       .orderBy("source_a", "source_b")
-  }
 
   /** Train/val/test split leakage audit — the MEASUREMENT of what
     * [[trainSplitOf]]'s doc-keyed hash deliberately permits and

@@ -34,9 +34,7 @@ object CorpusStats {
     * scored set). */
   def tfidfTopTermsOf(docs: DataFrame, k: Int = 5): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val tf = docs
-      .select(col("doc_id"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    val tf = Corpus.tokenTfOf(docs)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val score = round(
       col("tf").cast("double") *
@@ -100,24 +98,37 @@ object CorpusStats {
   /** Bigram collocation mining by lift: lift(w1,w2) =
     * P(w1 w2) / (P(w1)·P(w2)) over corpus token/bigram totals — the
     * log-free PMI variant (see object scaladoc). Bigrams with count >=
-    * minCount, top-k by (count, lift, bigram).
-    *
-    * Two shuffled aggregates (bigram counts, unigram counts) + two
-    * token-keyed joins; the 1-row totals frame broadcasts. The
-    * tokenized frame and the unigram table each feed multiple
-    * consumers, so both materialize once (no cross-branch CSE in
-    * Catalyst — re-planning would tokenize the corpus three times). */
+    * minCount, top-k by (count, lift, bigram). The [[pairLift]] frame
+    * over adjacent pairs. */
   def collocationsOf(docs: DataFrame, minCount: Long = 5,
                      k: Int = 50): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    // Both shared frames materialize once: without the checkpoints,
-    // uni's two join consumers and the big/totals branches re-planned
-    // the tokenize under every consumer — four corpus tokenizations
-    // (measured: re-tokenizing beats materializing only if the
-    // interpreted-HOF tokenize were cheap; it is the dominant cost, so
-    // paying it once wins both locally and at scale — a 100 TB caller
-    // whose executors can't hold the token frame should persist the
-    // uni/big AGGREGATES to a table and drop the toks checkpoint).
+    pairLift(docs, TextF.bigramPairs(col("toks"), col("n")),
+        greatest(col("n") - 1, lit(0)), "c12", minCount)
+      .orderBy(col("c12").desc, col("lift").desc, col("w1"), col("w2"))
+      .limit(k)
+  }
+
+  /** The (w1, w2, `cnt`, lift) frame both co-occurrence miners share.
+    * `pairs` is a per-doc array<struct<w1, w2>> over the tokenized
+    * (toks, n) row and `pairTotal` its per-doc pair count; pairs
+    * counted at least `minCount` times keep lift = P(pair) /
+    * (P(w1)·P(w2)), rounded 4 dp, normalized by the corpus pair and
+    * unigram totals (a 1-row broadcast).
+    *
+    * Two shuffled aggregates (pair counts, unigram counts) + two
+    * token-keyed joins. The tokenized frame and the unigram table
+    * each feed several consumers, so both materialize once: without
+    * the checkpoints, uni's two join consumers and the pair/totals
+    * branches re-planned the tokenize under every consumer — four
+    * corpus tokenizations (measured: re-tokenizing beats
+    * materializing only if the interpreted-HOF tokenize were cheap; it
+    * is the dominant cost, so paying it once wins both locally and at
+    * scale — a 100 TB caller whose executors can't hold the token
+    * frame should persist the uni/pair AGGREGATES to a table and drop
+    * the toks checkpoint). */
+  private def pairLift(docs: DataFrame, pairs: Column, pairTotal: Column,
+                       cnt: String, minCount: Long): DataFrame = {
     val toks = docs
       .select(col("doc_id"), TextF.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
@@ -125,29 +136,38 @@ object CorpusStats {
     val uni = toks.select(explode(col("toks")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c1"))
       .localCheckpoint(false)
-    val big = toks
-      .select(explode(TextF.bigramPairs(col("toks"), col("n"))).as("p"))
+    val counted = toks
+      .select(explode(pairs).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minCount)
+      .groupBy("w1", "w2").agg(count(lit(1)).as(cnt))
+      .filter(col(cnt) >= minCount)
     val totals = toks.agg(
       sum(col("n")).as("n_uni"),
-      sum(greatest(col("n") - 1, lit(0))).as("n_big"))
+      sum(pairTotal).as("n_pairs"))
     // lift parenthesization mirrors the oracle SQL exactly — IEEE ops
     // are correctly rounded, so same shape ⇒ same bits.
     val lift = round(
-      (col("c12").cast("double") / col("n_big").cast("double")) /
+      (col(cnt).cast("double") / col("n_pairs").cast("double")) /
         ((col("c1a").cast("double") / col("n_uni").cast("double")) *
           (col("c1b").cast("double") / col("n_uni").cast("double"))),
       4)
-    big
+    counted
       .join(uni.select(col("token").as("w1"), col("c1").as("c1a")), "w1")
       .join(uni.select(col("token").as("w2"), col("c1").as("c1b")), "w2")
       .crossJoin(broadcast(totals)) // 1 row by construction
-      .select(col("w1"), col("w2"), col("c12"), lift.as("lift"))
-      .orderBy(col("c12").desc, col("lift").desc, col("w1"), col("w2"))
-      .limit(k)
+      .select(col("w1"), col("w2"), col(cnt), lift.as("lift"))
   }
+
+  /** The unordered token pairs `off` positions apart in a (toks, n)
+    * row, as array<struct<w1 = least, w2 = greatest>>: one zip_with of
+    * two slices of the token array (map-side, no per-doc window
+    * function, no positional self-join — the span-dedup lesson). */
+  private def pairsAt(off: Int): Column =
+    when(col("n") >= off + 1, zip_with(
+      slice(col("toks"), lit(1), col("n") - off),
+      slice(col("toks"), lit(off + 1), col("n") - off),
+      (a, b) => struct(least(a, b).as("w1"), greatest(a, b).as("w2"))))
+      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
 
   /** Per-language quality gate: keep documents at or above their
     * language's p75 quality score. Exact `percentile` (matches DuckDB
@@ -360,15 +380,26 @@ object CorpusStats {
                    k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(query.nonEmpty, "empty query")
     require(k > 0, s"k must be positive, got $k")
-    val lens = docs.select(col("doc_id"),
-      TextF.tokenCount(col("text")).cast("long").as("len"))
-      .localCheckpoint(false) // two consumers: totals and the score join
-    val totals = lens.agg(count(lit(1)).as("n_docs"),
-      sum("len").as("total_tokens"))
-    val tf = docs
-      .select(col("doc_id"), explode(TextF.tokens(col("text"))).as("token"))
-      .filter(col("token").isin(query: _*))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    val lens = docLengths(docs)
+    bm25SearchOf(docs, _.filter(col("token").isin(query: _*)), lens,
+      lens.agg(count(lit(1)).as("n_docs"), sum("len").as("total_tokens")),
+      k, k1, b)
+  }
+
+  /** (doc_id, len): whitespace-token length per doc, materialized — every
+    * BM25 pass joins it and its 1-row totals fold reads it. */
+  private def docLengths(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        TextF.tokenCount(col("text")).cast("long").as("len"))
+      .localCheckpoint(false)
+
+  /** The one BM25 pass: the query terms are whatever `terms` keeps of
+    * the (doc_id, token) stream; `lens` is [[docLengths]] and `totals`
+    * its 1-row (n_docs, total_tokens) fold. */
+  private def bm25SearchOf(docs: DataFrame, terms: DataFrame => DataFrame,
+                           lens: DataFrame, totals: DataFrame, k: Int,
+                           k1: Double, b: Double): DataFrame = {
+    val tf = Corpus.tokenTfOf(docs, keep = terms)
       .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
     val lenNorm = col("len").cast("double") * col("n_docs").cast("double") /
       col("total_tokens").cast("double")
@@ -401,8 +432,9 @@ object CorpusStats {
     * ((N·10⁶) div df) on decimal(38,0) (ratio-idf on the ppm grid;
     * N·10⁶ crosses int64 at ~9·10⁹ docs) — ranked (weight DESC,
     * token); seed terms, [[graft.operators.TextAnalysis.Stopwords]]
-    * and 1-char tokens are excluded from expansion; both BM25
-    * passes share [[bm25SearchOf]]'s quantized-term-weight contract.
+    * and 1-char tokens are excluded from expansion; both passes are
+    * [[bm25SearchOf]]'s one BM25 pass (default k1/b), over one shared
+    * doc-length frame.
     *
     * Shape: pass 1 is [[bm25SearchOf]]; the candidate mine joins
     * the corpus against a BROADCAST fDocs-row feedback set; the
@@ -417,32 +449,11 @@ object CorpusStats {
       s"need nonempty query and positive fDocs/mTerms/k")
     val dec = "decimal(38,0)"
     val stop = graft.operators.TextAnalysis.Stopwords
-    val lens = docs.select(col("doc_id"),
-      TextF.tokenCount(col("text")).cast("long").as("len"))
-      .localCheckpoint(false) // both scoring passes read it
+    val lens = docLengths(docs)
     val totals = lens.agg(count(lit(1)).as("n_docs"),
       sum("len").as("total_tokens")).localCheckpoint(false)
-    def bm25Pass(termFilter: DataFrame => DataFrame,
-                 topK: Int): DataFrame = {
-      val tf = termFilter(docs
-        .select(col("doc_id"), explode(TextF.tokens(col("text"))).as("token")))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
-      val lenNorm = col("len").cast("double") * col("n_docs").cast("double") /
-        col("total_tokens").cast("double")
-      val w = (col("tf").cast("double") * 2.2 /
-        (col("tf").cast("double") + lit(1.2) * (lit(0.25) + lit(0.75) * lenNorm))) *
-        ((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-          (col("df").cast("double") + 0.5))
-      tf.join(lens, "doc_id")
-        .crossJoin(broadcast(totals)) // 1 row by construction
-        .select(col("doc_id"), Behavior.micro(w).as("qw"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_terms"),
-          TextF.round4HalfUp(sum("qw").cast("double") / 1e6).as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(topK)
-    }
+    def bm25Pass(terms: DataFrame => DataFrame, topK: Int): DataFrame =
+      bm25SearchOf(docs, terms, lens, totals, topK, 1.2, 0.75)
     val fb = bm25Pass(_.filter(col("token").isin(query: _*)), fDocs)
       .select(col("doc_id")).localCheckpoint(false)
     val banned = (stop ++ query).map(_.asInstanceOf[Any])
@@ -1016,10 +1027,9 @@ object CorpusStats {
     * distributional view). Exact integers until one division, rounded
     * half-up 4 dp.
     *
-    * Shape: [[Dedup.dupMatrixOf]]'s: DISTINCT (token-hash, source)
-    * partial-aggregate first, per-source sizes from that bounded
-    * frame, per-token self-join bounded by sources-per-token,
-    * |sources|²-bounded output. */
+    * Shape: DISTINCT (token-hash, source) partial-aggregate first,
+    * per-source sizes from that bounded frame, per-token self-join
+    * bounded by sources-per-token, |sources|²-bounded output. */
   def vocabOverlapOf(docs: DataFrame): DataFrame = {
     val vs = docs
       .select(col("source"),
@@ -1257,8 +1267,8 @@ object CorpusStats {
     * the bounded language vocabulary; Simpson's λ = Σc(c−1)/(N(N−1))
     * is literally "the probability two token occurrences drawn
     * WITHOUT replacement are the same type", over the unbounded
-    * TOKEN vocabulary) and [[ngramDiversityOf]] (distinct-n counts
-    * types; λ weights them by mass — a corpus can keep a huge
+    * TOKEN vocabulary) and [[distinctNgramDiversityOf]] (distinct-n
+    * counts types; λ weights them by mass — a corpus can keep a huge
     * vocabulary and still be dominated by ten boilerplate tokens,
     * which distinct-n misses and λ nails). The published inverse
     * 1/λ is the "effective vocabulary size" a language model
@@ -1277,9 +1287,7 @@ object CorpusStats {
     * the only fact-sized shuffle — then a bounded source fold. */
   def simpsonDiversityOf(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    docs.select(col("source"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("source", "token")
-      .agg(count(lit(1)).as("c"))
+    Corpus.tokenTfOf(docs, "source", "c")
       .groupBy("source")
       .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
         sum(expr(s"CAST(c AS $dec) * (c - 1)")).as("rep2"))
@@ -1383,10 +1391,7 @@ object CorpusStats {
   def termBurstinessOf(docs: DataFrame, k: Int = 50): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val dec = "decimal(38,0)"
-    val perDoc = docs
-      .select(col("doc_id"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("c"))
+    val perDoc = Corpus.tokenTfOf(docs, tf = "c")
     val nDocs = docs.agg(count(lit(1)).as("n_docs")) // 1 row
     perDoc.groupBy("token")
       .agg(count(lit(1)).as("df"), sum("c").as("cf"),
@@ -1427,10 +1432,7 @@ object CorpusStats {
   def burrowsDeltaOf(docs: DataFrame, k: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val dec = "decimal(38,0)"
-    val counts = docs
-      .select(col("source"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("source", "token")
-      .agg(count(lit(1)).as("c"))
+    val counts = Corpus.tokenTfOf(docs, "source", "c")
       .localCheckpoint(false) // totals, top-k and the dense join read it
     val totals = counts.groupBy("source").agg(sum("c").as("total"))
       .localCheckpoint(false)
@@ -1703,9 +1705,7 @@ object CorpusStats {
     * back; output is |sources|²/2 rows. */
   def hellingerMatrixOf(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = docs
-      .select(col("source"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("source", "token").agg(count(lit(1)).as("c"))
+    val counts = Corpus.tokenTfOf(docs, "source", "c")
     val totals = counts.groupBy("source").agg(sum("c").as("n")) // bounded
     val pairs = counts
       .select(col("source").as("source_a"), col("token"), col("c").as("ca"))
@@ -1762,9 +1762,7 @@ object CorpusStats {
     * a per-source aggregate. */
   def zipfSlopeOf(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = docs
-      .select(col("source"), explode(TextF.tokens(col("text"))).as("token"))
-      .groupBy("source", "token").agg(count(lit(1)).as("f"))
+    val counts = Corpus.tokenTfOf(docs, "source", "f")
     val ranked = graft.Scale.groupedTwoPhaseRank(counts, "source",
       Seq(col("f").desc, col("token")), snapshotInput = false)
     val xy = ranked.select(col("source"),
@@ -1800,47 +1798,15 @@ object CorpusStats {
     * rounded IEEE ops ⇒ same bits), 4 dp, min-count floor, top-k by
     * (lift DESC, count DESC, pair) so ties break deterministically.
     *
-    * Shape: pairs materialize as `window` zip_with slices of the
-    * per-doc token array (map-side, no per-doc window function, no
-    * positional self-join — the span-dedup lesson), one (w1, w2)
-    * map-combinable aggregate; unigrams and the 1-row totals ride
-    * [[collocationsOf]]'s exact checkpoint discipline. Pair-explode
+    * Shape: the [[pairLift]] frame over `window` [[pairsAt]] slices
+    * per doc, normalized by the total window-pair mass. Pair-explode
     * mass is `window`·tokens — linear with a small constant. */
   def skipgramPairsOf(docs: DataFrame, window: Int = 3,
                       minCount: Long = 5, k: Int = 20): DataFrame = {
     require(window >= 1 && k > 0, s"need window >= 1 and k > 0, got $window/$k")
-    val toks = docs
-      .select(col("doc_id"), TextF.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
-      .localCheckpoint(false)
-    val uni = toks.select(explode(col("toks")).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(false)
-    def pairsAt(off: Int): Column =
-      when(col("n") >= off + 1, zip_with(
-        slice(col("toks"), lit(1), col("n") - off),
-        slice(col("toks"), lit(off + 1), col("n") - off),
-        (a, b) => struct(least(a, b).as("w1"), greatest(a, b).as("w2"))))
-        .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    val pairs = toks
-      .select(explode(concat((1 to window).map(pairsAt): _*)).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("cp"))
-      .filter(col("cp") >= minCount)
-    val totals = toks.agg(
-      sum(col("n")).as("n_uni"),
-      sum((1 to window).map(off => greatest(col("n") - off, lit(0)))
-        .reduce(_ + _)).as("n_pairs"))
-    val lift = round(
-      (col("cp").cast("double") / col("n_pairs").cast("double")) /
-        ((col("c1a").cast("double") / col("n_uni").cast("double")) *
-          (col("c1b").cast("double") / col("n_uni").cast("double"))),
-      4)
-    pairs
-      .join(uni.select(col("token").as("w1"), col("c1").as("c1a")), "w1")
-      .join(uni.select(col("token").as("w2"), col("c1").as("c1b")), "w2")
-      .crossJoin(broadcast(totals)) // 1 row by construction
-      .select(col("w1"), col("w2"), col("cp"), lift.as("lift"))
+    pairLift(docs, concat((1 to window).map(pairsAt): _*),
+        (1 to window).map(off => greatest(col("n") - off, lit(0))).reduce(_ + _),
+        "cp", minCount)
       .orderBy(col("lift").desc, col("cp").desc, col("w1"), col("w2"))
       .limit(k)
   }
@@ -1863,8 +1829,8 @@ object CorpusStats {
     * symmetric (undirected co-occurrence), self-pairs dropped,
     * cp ≥ `minCount` prunes hapax noise map-side.
     *
-    * Shape: pair explode is map-side zip_with slices (window·tokens
-    * mass, the [[skipgramPairsOf]] lesson — no positional
+    * Shape: pair explode is [[skipgramPairsOf]]' map-side
+    * [[pairsAt]] slices (window·tokens mass — no positional
     * self-join); every iteration shuffles the VOCABULARY-bounded
     * edge frame only. */
   def textrankKeywordsOf(docs: DataFrame, window: Int = 2,
@@ -1879,12 +1845,6 @@ object CorpusStats {
         .as("toks"))
       .select(col("toks"), size(col("toks")).as("n"))
       .localCheckpoint(false)
-    def pairsAt(off: Int): Column =
-      when(col("n") >= off + 1, zip_with(
-        slice(col("toks"), lit(1), col("n") - off),
-        slice(col("toks"), lit(off + 1), col("n") - off),
-        (a, b) => struct(least(a, b).as("w1"), greatest(a, b).as("w2"))))
-        .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
     val pairs = toks
       .select(explode(concat((1 to window).map(pairsAt): _*)).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))

@@ -98,23 +98,39 @@ object Dedup {
       graft.plans.ColumnBridge.expression(hashes),
       perm.map(_._1), perm.map(_._2), P))
 
-  /** (doc_id, band, band_hash) — one row per band per doc, over any
-    * frame with (doc_id, text). Short docs fall back to whole-token
-    * shingles, so only null-text docs yield a NULL signature — those
-    * are EXCLUDED here: xxhash64 over a NULL slice degrades to the
-    * hash seed, which would give every no-content doc identical band
-    * hashes and cluster unrelated docs together. Callers route
-    * unbanded docs to singleton clusters. */
-  def bandedSignaturesOf(docs0: DataFrame): DataFrame = {
-    val docs = docs0
-      .select(col("doc_id"), shingleHashes(col("text")).as("hashes"))
+  /** (doc_id, sig) over any frame with (doc_id, text). Short docs fall
+    * back to whole-token shingles, so only null-text docs yield a NULL
+    * signature — those are EXCLUDED here: xxhash64 over a NULL slice
+    * degrades to the hash seed, which would give every no-content doc
+    * identical band hashes and cluster unrelated docs together. Callers
+    * route unbanded docs to singleton clusters. */
+  private def signaturesOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingleHashes(col("text")).as("hashes"))
       .select(col("doc_id"), minhashSignature(col("hashes")).as("sig"))
       .filter(col("sig").isNotNull)
+
+  /** (doc_id, band, band_hash) — one row per band per doc of
+    * [[signaturesOf]]. */
+  def bandedSignaturesOf(docs: DataFrame): DataFrame = {
     val bands = transform(sequence(lit(0), lit(Bands - 1)), i =>
       struct(i.as("band"),
         xxhash64(slice(col("sig"), i * RowsPerBand + 1, lit(RowsPerBand))).as("band_hash")))
-    docs.select(col("doc_id"), explode(bands).as("b"))
+    signaturesOf(docs).select(col("doc_id"), explode(bands).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
+  }
+
+  /** Distinct (a_id, b_id), a < b: the doc pairs sharing any LSH band
+    * bucket. The self-join runs per-bucket (tiny groups), not
+    * all-pairs. The two banded sides are identical subplans shuffled
+    * on the same keys, so Spark's ReuseExchange computes the signature
+    * pipeline once and replays the shuffle for the other side. */
+  private def lshCandidates(docs: DataFrame): DataFrame = {
+    val banded = bandedSignaturesOf(docs)
+    val a = banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
+    val b = banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id"))
+    a.join(b, Seq("band", "band_hash"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
   }
 
   /** One-pass LSH clustering: docs sharing any band bucket take the
@@ -138,18 +154,10 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Candidate pairs from LSH buckets verified with exact token-3-gram
-    * Jaccard >= threshold. The self-join runs per-bucket (tiny groups),
-    * not all-pairs. The two banded sides are identical subplans shuffled
-    * on the same keys, so Spark's ReuseExchange computes the signature
-    * pipeline once and replays the shuffle for the other side. */
+  /** [[lshCandidates]] verified with exact token-3-gram Jaccard >=
+    * threshold. */
   def dedupJaccardOf(docs: DataFrame, threshold: Double): DataFrame = {
-    val banded = bandedSignaturesOf(docs)
-    val a = banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-    val b = banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id"))
-    val cand = a.join(b, Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    val cand = lshCandidates(docs)
     // Exact Jaccard over the 31-bit shingle hash sets instead of the
     // shingle strings: collision odds per doc are ~|shingles|²/2³² —
     // negligible at document scale. Materialized once: the verify
@@ -211,20 +219,10 @@ object Dedup {
     // boundary pair like J = 0.49995 rounds up to 0.5 and must not be
     // length- or prefix-pruned first).
     val tEff = threshold - 5e-5
-    // Materialized once — three consumers (the prefix index and both
-    // verify join sides), each keyed differently (cf. dedupJaccardOf).
-    val sh = docs
-      .select(col("doc_id"), array_sort(shingleHashes(col("text"))).as("sh"))
-      .filter(col("sh").isNotNull)
-      .localCheckpoint(false)
-    // ceil(x - 1e-6) guards double noise: 0.7 * 10 evaluating to
-    // 7.000000001 must ceil to 7, not 8 (an overshoot would shorten
-    // the prefix and silently drop valid pairs).
-    val prefixLen = (size(col("sh")) -
-      ceil(lit(tEff) * size(col("sh")) - lit(1e-6)) + 1).cast("int")
+    val sh = sortedShingles(docs)
     val prefixes = sh
       .select(col("doc_id"), size(col("sh")).as("sz"),
-        explode(slice(col("sh"), lit(1), prefixLen)).as("h"))
+        explode(slice(col("sh"), lit(1), prefixLen(tEff))).as("h"))
     // PPJoin length filter: J(x,y) >= t forces min(|x|,|y|) >= t·max —
     // |x∩y| <= min and |x∪y| >= max — so size-mismatched candidates are
     // dropped IN the join, before the distinct and the verify joins.
@@ -241,6 +239,24 @@ object Dedup {
       .distinct()
     verifyJaccard(cand, sh, threshold)
   }
+
+  /** (doc_id, sh): each doc's sorted shingle-hash set, null-text docs
+    * dropped. Materialized once — the prefix-filter joins read it three
+    * times (the prefix index and both verify join sides), each keyed
+    * differently (cf. dedupJaccardOf). */
+  private def sortedShingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_sort(shingleHashes(col("text"))).as("sh"))
+      .filter(col("sh").isNotNull)
+      .localCheckpoint(false)
+
+  /** |sh| − ⌈tEff·|sh|⌉ + 1: the prefix of a sorted set that must hold
+    * a shared element when the overlap reaches tEff·|sh|. ceil(x −
+    * 1e-6) guards double noise: 0.7 * 10 evaluating to 7.000000001 must
+    * ceil to 7, not 8 (an overshoot would shorten the prefix and
+    * silently drop valid pairs). */
+  private def prefixLen(tEff: Double): Column =
+    (size(col("sh")) - ceil(lit(tEff) * size(col("sh")) - lit(1e-6)) + 1)
+      .cast("int")
 
   /** Intersection cardinality of two SORTED long arrays via the native
     * merge-count [[graft.plans.SortedIntersectSize]]. */
@@ -271,15 +287,9 @@ object Dedup {
   def containmentPairsOf(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     val tEff = threshold - 5e-5
-    // Three consumers, keyed differently (cf. jaccardPairsOf).
-    val sh = docs
-      .select(col("doc_id"), array_sort(shingleHashes(col("text"))).as("sh"))
-      .filter(col("sh").isNotNull)
-      .localCheckpoint(false)
-    val prefixLen = (size(col("sh")) -
-      ceil(lit(tEff) * size(col("sh")) - lit(1e-6)) + 1).cast("int")
+    val sh = sortedShingles(docs)
     val aSide = sh.select(col("doc_id").as("a_id"),
-      explode(slice(col("sh"), lit(1), prefixLen)).as("h"))
+      explode(slice(col("sh"), lit(1), prefixLen(tEff))).as("h"))
     val bSide = sh.select(col("doc_id").as("b_id"), explode(col("sh")).as("h"))
     val cand = aSide.join(bSide,
         aSide("h") === bSide("h") && col("a_id") =!= col("b_id"))
@@ -458,88 +468,95 @@ object Dedup {
     * keys it; spans catch the partial-copy mass documents miss.)
     *
     * Shape (r17 optimization round): gram hashing is the native
-    * one-pass [[graft.plans.ShingleHashes]] scan (per-doc-deduped
-    * 64-bit hashes, no intermediate shingle strings — the same scan
-    * [[graft.operators.Corpus.sourceOverlapMatrixOf]] uses; the old
-    * `explode(strictShingles) → xxhash64(string)` map stage was the
-    * query's dominant cost, 3.5 s vs the overlap matrix's 1.0 s on the
-    * identical gram pass). One (h → sorted source-set) aggregate
-    * replaces the old distinct + per-gram self-join — the pair mass is
-    * a map-side ≤ C(|sources|,2)-per-gram explode, and the gram stream
-    * crosses the wire exactly once. (The 2019-shape footnote about
-    * collect_set measuring no faster predates the native scan: with
-    * string grams the map side dominated either way; with 8-byte
-    * hashes the one-shuffle form wins.) */
+    * one-pass [[graft.plans.ShingleHashes]] scan ([[spanGrams]]:
+    * per-doc-deduped 64-bit hashes, no intermediate shingle strings;
+    * the old `explode(strictShingles) → xxhash64(string)` map stage was
+    * the query's dominant cost, 3.5 s vs the overlap matrix's 1.0 s on
+    * the identical gram pass), and the pair count is [[sourcePairs]]:
+    * the gram stream crosses the wire exactly once. */
   def dupMatrixOf(docs: DataFrame, n: Int = 8,
                   approx: Boolean = false): DataFrame = {
     require(n > 1, s"span length must be > 1, got $n")
     if (approx) return dupMatrixSketchOf(docs, n)
-    docs
-      .select(col("source"),
-        // splitCompat: this oracle tokenizes with split(trim(text))
-        // — phantom empty tokens on tab/newline-edged text included
-        // (r18; output-neutral on corpora without such docs).
-        explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-          graft.plans.ColumnBridge.expression(col("text")), n, 0L,
-          strict = true, splitCompat = true))).as("h"))
-      .groupBy("h").agg(sort_array(collect_set(col("source"))).as("ss"))
+    sourcePairs(spanGrams(docs, n), "n_shared")
+      .orderBy("source_a", "source_b")
+  }
+
+  /** (source, g): every strict span `n`-gram of every doc as the RAW
+    * xxhash64 (seed 42, prime 0) of its shingle string — byte-identical
+    * to the old `xxhash64(explode(strictShingles))` values, so the HLL
+    * sketches and their oracle-pinned estimates are unchanged; the
+    * per-doc dedup is transparent to both twins (a set per pair, an
+    * idempotent sketch insert). splitCompat: the dup_matrix oracles
+    * tokenize with split(trim(text)), phantom empty tokens on
+    * tab/newline-edged text included (r18; output-neutral on corpora
+    * without such docs). */
+  private def spanGrams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("source"),
+      explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
+        graft.plans.ColumnBridge.expression(col("text")), n, 0L,
+        strict = true, splitCompat = true))).as("g"))
+
+  /** (source_a, source_b, `shared`) over a (source, g) gram frame: per
+    * unordered source pair (a < b), the number of distinct grams both
+    * hold — a gram repeated inside one source counts once. One (g →
+    * sorted source set) aggregate, then a map-side ordered-pair explode
+    * whose mass is ≤ C(|sources|,2) per gram — never a gram-keyed
+    * self-join. Shared by [[dupMatrixOf]] and
+    * [[Corpus.sourceOverlapMatrixOf]]. */
+  private[operators] def sourcePairs(gs: DataFrame, shared: String): DataFrame =
+    gs.groupBy("g").agg(sort_array(collect_set(col("source"))).as("ss"))
       .filter(size(col("ss")) >= 2)
       .select(explode(expr(
         """flatten(transform(ss, (a, i) ->
           |  transform(slice(ss, i + 2, size(ss)), b -> struct(a, b))))"""
           .stripMargin)).as("p"))
       .groupBy(col("p.a").as("source_a"), col("p.b").as("source_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy("source_a", "source_b")
-  }
+      .agg(count(lit(1)).as(shared))
 
-  /** The `approx = true` path of [[dupMatrixOf]] — and the shape
-    * that actually changes the 100 TB plan, not just a buffer size:
-    * each source folds its gram-hash stream into ONE Datasketches HLL
-    * sketch (map-side combinable, kilobytes per source), and shared
-    * mass comes from pairwise inclusion-exclusion |A∩B| = |A| + |B| −
-    * |A∪B| over the |sources|-row sketch frame. The exact path's
-    * distinct (gram, source) shuffle AND per-gram self-join are GONE —
-    * the only pairwise work is |sources|² arithmetic on kilobyte
-    * blobs. Trade documented: inclusion-exclusion error scales with
-    * the UNION size (rsd ≈ 1.04/√2¹⁸ ≈ 0.2% at lgK=18 — a 256 KB
-    * sketch per source, still nothing against a 100 TB gram stream),
-    * so intersections far below 0.2% of the union drown in noise —
-    * the governance signal this matrix exists for (one source heavily
-    * quoting another) sits far above that floor; near-zero estimates
-    * are clamped, not emitted. ScaleApproxSpec bands every estimate
-    * union-relative against the exact matrix. */
-  private def dupMatrixSketchOf(docs: DataFrame, n: Int): DataFrame = {
-    // ShingleHashes with prime=0 emits the RAW xxhash64 (seed 42) of
-    // each shingle string — byte-identical to the old
-    // `xxhash64(explode(strictShingles))` values, so the HLL sketches
-    // and their oracle-pinned estimates are unchanged; the per-doc
-    // dedup is transparent to HLL (duplicate insertion is idempotent).
-    val sk = docs
-      .select(col("source"),
-        // splitCompat keeps the gram definition identical to the
-        // exact twin's (r18) — inserted values unchanged on corpora
-        // without whitespace-edged docs, so the pinned estimates hold.
-        explode(graft.plans.ColumnBridge.column(graft.plans.ShingleHashes(
-          graft.plans.ColumnBridge.expression(col("text")), n, 0L,
-          strict = true, splitCompat = true))).as("h"))
-      .groupBy("source")
-      .agg(expr("hll_sketch_agg(h, 18)").as("sk"))
+  /** (source_a, sk_a, source_b, sk_b) over a (source, g) gram frame:
+    * each source folds its grams into ONE Datasketches HLL sketch
+    * (lgK = 18: 256 KB, map-side combinable), and the |sources|-row
+    * sketch frame crosses itself as a broadcast, a < b. The sketch
+    * twins of [[dupMatrixOf]] and [[Corpus.sourceOverlapMatrixOf]]
+    * read [[sketchShared]] off it. */
+  private[operators] def sketchPairs(gs: DataFrame): DataFrame = {
+    val sk = gs.groupBy("source")
+      .agg(expr("hll_sketch_agg(g, 18)").as("sk"))
       .localCheckpoint(false) // both pair sides
-    val pairs = sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
+    sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
       .crossJoin(broadcast(
         sk.select(col("source").as("source_b"), col("sk").as("sk_b"))))
       .filter(col("source_a") < col("source_b")) // |sources|² bounded
-    pairs
-      .select(col("source_a"), col("source_b"),
-        greatest(lit(0L),
-          round(expr("hll_sketch_estimate(sk_a)")
-            + expr("hll_sketch_estimate(sk_b)")
-            - expr("hll_sketch_estimate(hll_union(sk_a, sk_b))"))
-            .cast("long")).as("n_shared"))
+  }
+
+  /** The shared-gram estimate of a [[sketchPairs]] row by
+    * inclusion-exclusion |A∩B| = |A| + |B| − |A∪B|, clamped at 0. */
+  private[operators] def sketchShared: Column =
+    greatest(lit(0L),
+      round(expr("hll_sketch_estimate(sk_a)")
+        + expr("hll_sketch_estimate(sk_b)")
+        - expr("hll_sketch_estimate(hll_union(sk_a, sk_b))"))
+        .cast("long"))
+
+  /** The `approx = true` path of [[dupMatrixOf]] — and the shape
+    * that actually changes the 100 TB plan, not just a buffer size:
+    * [[sketchPairs]] over the same [[spanGrams]]. The exact path's
+    * per-gram source-set shuffle is GONE — the only pairwise work is
+    * |sources|² arithmetic on kilobyte blobs. Trade documented:
+    * inclusion-exclusion error scales with the UNION size (rsd ≈
+    * 1.04/√2¹⁸ ≈ 0.2% at lgK=18 — a 256 KB sketch per source, still
+    * nothing against a 100 TB gram stream), so intersections far below
+    * 0.2% of the union drown in noise — the governance signal this
+    * matrix exists for (one source heavily quoting another) sits far
+    * above that floor; near-zero estimates are clamped, not emitted.
+    * ScaleApproxSpec bands every estimate union-relative against the
+    * exact matrix. */
+  private def dupMatrixSketchOf(docs: DataFrame, n: Int): DataFrame =
+    sketchPairs(spanGrams(docs, n))
+      .select(col("source_a"), col("source_b"), sketchShared.as("n_shared"))
       .filter(col("n_shared") > 0L)
       .orderBy("source_a", "source_b")
-  }
 
   /** LSH recall audit: what fraction of the TRUE (exact-Jaccard ≥ t)
     * near-dup pairs does the banded-MinHash candidate path recover —
@@ -601,13 +618,7 @@ object Dedup {
     require(sampleOneIn >= 1, s"sampleOneIn must be >= 1, got $sampleOneIn")
     val base = if (sampleOneIn == 1) docs
       else docs.filter(pmod(xxhash64(col("doc_id")), lit(sampleOneIn.toLong)) === 0L)
-    val banded = bandedSignaturesOf(base)
-    val a = banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-    val b = banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id"))
-    val nCand = a.join(b, Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-      .agg(count(lit(1)).as("n_candidates"))
+    val nCand = lshCandidates(base).agg(count(lit(1)).as("n_candidates"))
     val nKept = dedupJaccardOf(base, threshold)
       .agg(count(lit(1)).as("n_verified"))
     nCand.crossJoin(nKept) // 1 row × 1 row
@@ -700,7 +711,7 @@ object Dedup {
     * before deciding the cut length.
     *
     * Shape, suffix-array-free: positional `minLen`-grams from
-    * minLen−1 `lead()`s on ONE doc-keyed window pass (no per-position
+    * [[Corpus.leadGrams]] on ONE doc-keyed window pass (no per-position
     * slice lambda — spanDedup's lesson). Hot-key-proof (r17): the
     * per-gram occurrence count and canonical first occurrence come
     * from a map-side-combinable `groupBy(g).agg(count,
@@ -720,18 +731,10 @@ object Dedup {
   /** The pre-checkpoint positional `minLen`-gram frame of
     * [[exactSubstringSpansOf]] — exposed so PlanSpec can pin the
     * scan pruning the checkpoint boundary hides from the outer plan. */
-  private[graft] def substrGramFrame(docs: DataFrame, minLen: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tp = docs
-      .select(col("doc_id"), posexplode(graft.functions.TextF.tokens(col("text"))))
-      .toDF("doc_id", "pos", "tok")
-    val byPos = Window.partitionBy("doc_id").orderBy("pos")
-    val tail = (1 until minLen).map(i => lead(col("tok"), i).over(byPos))
-    tp.select(col("doc_id"), col("pos").cast("long").as("pos"),
-        xxhash64((col("tok") +: tail): _*).as("g"),
-        tail.last.isNotNull.as("full"))
-      .filter(col("full"))
-  }
+  private[graft] def substrGramFrame(docs: DataFrame, minLen: Int): DataFrame =
+    Corpus.leadGrams(Corpus.tokenPositions(docs), minLen)
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("g"),
+        col("full"))
 
   def exactSubstringSpansOf(docs: DataFrame, minLen: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -813,16 +816,12 @@ object Dedup {
 
   def bandingSweepOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sigs = docs
-      .select(col("doc_id"), shingleHashes(col("text")).as("hashes"))
-      .select(col("doc_id"), minhashSignature(col("hashes")).as("sig"))
-      .filter(col("sig").isNotNull)
     val allBands = SweepConfigs.map { case (b, r) =>
       transform(sequence(lit(0), lit(b - 1)), i =>
         struct(lit(b).as("bands"), lit(r).as("rpb"), i.as("band"),
           xxhash64(slice(col("sig"), i * r + 1, lit(r))).as("band_hash")))
     }.reduce(concat(_, _))
-    val member = sigs
+    val member = signaturesOf(docs)
       .select(col("doc_id"), explode(allBands).as("e"))
       .select(col("e.bands").as("bands"), col("e.rpb").as("rows_per_band"),
         col("e.band").as("band"), col("e.band_hash").as("band_hash"),

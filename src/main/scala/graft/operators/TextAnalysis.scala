@@ -519,7 +519,7 @@ object TextAnalysis {
     * parts-per-million of Latin / CJK / Cyrillic codepoints (explicit
     * codepoint RANGES, not named script classes — Java regex and RE2
     * spell those differently; ranges are engine-identical) — the
-    * script-level cross-check on [[langIdOf]] (a "zh"-labeled doc
+    * script-level cross-check on [[langId]] (a "zh"-labeled doc
     * that is 95% Latin is mislabeled or transliterated; a Latin-heavy
     * "ru" shard is mojibake row 204 didn't catch). Counting is
     * subtractive — length(text) − length(strip(text)) — so it runs in

@@ -591,4 +591,22 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
       s"shared/totals: $r")
     assert(r.getLong(5) == 333333L, s"jaccard 1/3 ppm: $r")
   }
+
+  test("source_overlap_matrix and dup_matrix count a three-source gram once per pair and a repeated gram once") {
+    val g = "g1 g2 g3 g4 g5 g6 g7 g8"  // held by a, b and c
+    val h = "h1 h2 h3 h4 h5 h6 h7 h8"  // twice in a, once in b
+    val docs = Seq((1L, "a", g), (2L, "b", g), (3L, "c", g),
+      (4L, "a", h), (5L, "a", h), (6L, "b", h))
+      .toDF("doc_id", "source", "text")
+    val want = Map(("a", "b") -> 2L, ("a", "c") -> 1L, ("b", "c") -> 1L)
+    val overlap = Corpus.sourceOverlapMatrixOf(docs).collect()
+      .map(r => (r.getString(0), r.getString(1)) ->
+        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    assert(overlap.map { case (k, v) => k -> v._1 } == want, s"$overlap")
+    assert(overlap(("a", "b")) == ((2L, 2L, 2L, 1000000L)), s"$overlap")
+    assert(overlap(("a", "c")) == ((1L, 2L, 1L, 500000L)), s"$overlap")
+    val dup = Dedup.dupMatrixOf(docs).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(dup == want, s"$dup")
+  }
 }

@@ -799,6 +799,32 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
     assert(s2.getDouble(3) == 0.0 && s2.getDouble(4) == 0.0, s"s2: $s2")
   }
 
+  test("empty and whitespace-only texts count one empty token in zipf_slope and hellinger_matrix") {
+    // TextF.tokens gives "" and "   " one "" token each, so s1 counts
+    // {a:2, b:1, "":1} and s2 {b:4, a:1, "":1}.
+    val docs = Seq(
+      (1L, "s1", "a a b"), (2L, "s1", ""),
+      (3L, "s2", "a b b b b"), (4L, "s2", "   "))
+      .toDF("doc_id", "source", "text")
+    // ranks (f DESC, token): s1 a,"",b → x = 0,1,1, y = 1,0,0 →
+    // slope (0 − 2·1)/(3·2 − 4) = −1, intercept (1 + 2)/3 = 1;
+    // s2 b,"",a → y = 2,0,0 → slope −2, intercept (2 + 4)/3 = 2.
+    val zipf = CorpusStats.zipfSlopeOf(docs).collect()
+      .map(r => r.getString(0) ->
+        ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
+    assert(zipf == Map("s1" -> ((3L, 2L, -1.0, 1.0)),
+      "s2" -> ((3L, 2L, -2.0, 2.0))), s"$zipf")
+    val Array(h) = CorpusStats.hellingerMatrixOf(docs).collect()
+    def q9(x: Double) = math.floor(math.sqrt(x) * 1e9 + 0.5)
+    val bc = (q9(2.0 * 1.0 / 24.0) + q9(1.0 * 4.0 / 24.0) +
+      q9(1.0 * 1.0 / 24.0)) / 1e9
+    def f6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
+    assert((h.getString(0), h.getString(1), h.getLong(2)) == (("s1", "s2", 3L)),
+      s"a, b and the empty token are shared: $h")
+    assert(h.getDouble(3) == f6(bc) && h.getDouble(4) == f6(math.sqrt(1.0 - bc)),
+      s"$h")
+  }
+
   test("skipgram pairs match an independent window-3 brute force, lift ordering and floor included") {
     val text = Seq.fill(8)("x y z w").mkString(" ") // 32 tokens, period 4
     val docs = docsDf(1L -> text)
@@ -1018,5 +1044,68 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
     assert(got.contains(2L),
       s"doc 2 is reachable only through the mined expansion term: $got")
     assert(!got.contains(3L), s"doc 3 shares no term with the expanded query: $got")
+  }
+
+  // ---- quality-gate agreement (Cochran's Q, Fleiss kappa) and the arrival mix ----
+
+  /** Docs whose ONLY passable gate is lang=='en': empty text fails the
+    * gopher conjunction and the quality threshold via the coalesce
+    * contract, so each doc's pass count is 1 (en) or 0 (other). */
+  private def langOnlyDocs(en: Int, other: Int): DataFrame =
+    ((1 to en).map(i => (i.toLong, "", "en")) ++
+      (1 to other).map(i => ((en + i).toLong, "", "de")))
+      .toDF("doc_id", "text", "lang")
+
+  test("cochran_q_gates: lang-only passes give the exact Q = 2c pin") {
+    // c_gopher = c_quality = 0, c_lang = c, T = c, sum R^2 = c →
+    // Q = 2*(3c^2 - c^2)/(3c - c) = 2c. c = 10 → Q = 20, significant.
+    val out = CorpusStats.cochranQGatesOf(langOnlyDocs(10, 5)).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(0) == 15L && r.getLong(1) == 0L &&
+      r.getLong(2) == 0L && r.getLong(3) == 10L, s"cells: $r")
+    assert(r.getDouble(4) == 20.0, s"Q = 2c exactly: $r")
+    assert(r.getBoolean(5))
+  }
+
+  test("cochran_q_gates: unanimous docs zero the denominator and refuse the verdict") {
+    val out = CorpusStats.cochranQGatesOf(langOnlyDocs(0, 8)).collect()
+    assert(out.length == 1)
+    assert(out(0).isNullAt(4), s"all-R=0 → Q undefined: ${out(0)}")
+    assert(!out(0).getBoolean(5))
+  }
+
+  test("fleiss_kappa_gates: the hand-computed kappa = -0.2 'poor' pin") {
+    // n = 4, 2 en + 2 other: P(R=1) = 1/3, P(R=0) = 1 → Pbar = 2/3;
+    // p = 2/12 → Pe = 13/18; kappa = (2/3 - 13/18)/(5/18) = -0.2.
+    val out = CorpusStats.fleissKappaGatesOf(langOnlyDocs(2, 2)).collect()
+    assert(out.length == 1)
+    assert(out(0).getDouble(2) == -0.2, s"kappa: ${out(0)}")
+    assert(out(0).getString(3) == "poor")
+  }
+
+  test("fleiss_kappa_gates: all-R-equal chance agreement 1 reads 'undefined'") {
+    val out = CorpusStats.fleissKappaGatesOf(langOnlyDocs(0, 6)).collect()
+    assert(out(0).isNullAt(2) && out(0).getString(3) == "undefined")
+  }
+
+  test("arrival_quality_mix: exact token masses, decile arithmetic, quality consistency") {
+    val text = "the cat sat on a mat with the hat"   // 9 ws tokens
+    val docs = (1L to 10L).map { id =>
+      (id, text, if (id <= 5) "early-src" else "late-src")
+    }.toDF("doc_id", "text", "source")
+    val out = graft.operators.CorpusStats.arrivalQualityMixOf(docs).collect()
+    assert(out.length == 10, s"one (decile, source) row per doc here")
+    assert(out.map(_.getLong(0)).toSeq == (0L to 9L))
+    out.foreach { r =>
+      assert(r.getLong(2) == 1L && r.getLong(4) == 9L,
+        s"ws tokens exact: $r")
+      assert(r.getString(1) == (if (r.getLong(0) <= 4) "early-src"
+        else "late-src"), s"source mix follows arrival: $r")
+    }
+    // identical text ⇒ identical quality in every decile
+    assert(out.map(_.getDouble(3)).distinct.length == 1)
+    val q = out.head.getDouble(3)
+    assert(q > 0.0 && q <= 1.0, s"quality in (0,1]: $q")
   }
 }

@@ -586,4 +586,38 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
         s"planted doc $id must read its 9+ planted 8-grams as dup")
     }
   }
+
+  // ---- n-gram novelty and the acquisition curve ----
+
+  test("ngram_novelty: the first holder claims the gram, repeats claim nothing") {
+    val docs = Seq(
+      (1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9", "a"),  // both grams novel
+      (2L, "w1 w2 w3 w4 w5 w6 w7 w8 w9", "a"),  // exact repeat: 0
+      (3L, "w2 w3 w4 w5 w6 w7 w8 w9 x1", "b"),  // shares [w2..w9]: 1/2
+      (4L, "too short", "b"))                   // <8 tokens: absent
+      .toDF("doc_id", "text", "source")
+    val out = graft.operators.Dedup.ngramNoveltyOf(docs).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    assert(out.size == 3 && !out.contains(4L))
+    assert(out(1L).getLong(3) == 2L && out(1L).getLong(4) == 1000000L)
+    assert(out(2L).getLong(3) == 0L && out(2L).getLong(4) == 0L)
+    assert(out(3L).getLong(2) == 2L && out(3L).getLong(3) == 1L &&
+      out(3L).getLong(4) == 500000L, s"${out(3L)}")
+  }
+
+  test("novelty_curve: dense ids 1..10 land one per decile; repeats sink late deciles") {
+    val text = (1 to 9).map(i => s"w$i").mkString(" ")
+    val docs = (1L to 10L).map { id =>
+      // first five docs novel texts, last five repeat doc 1
+      val t = if (id <= 5) text.replace("w1", s"u$id") else text
+      (id, t, "a")
+    }.toDF("doc_id", "text", "source")
+    val out = graft.operators.Dedup.noveltyCurveOf(docs).collect()
+    assert(out.length == 10, s"${out.mkString(";")}")
+    assert(out.map(_.getLong(0)).toSeq == (0L to 9L), s"one per decile")
+    val ppm = out.map(r => r.getLong(0) -> r.getLong(4)).toMap
+    assert(ppm(0L) == 1000000L, "decile 0 is all-novel")
+    assert((6L to 9L).forall(ppm(_) == 0L),
+      s"the repeated tail adds nothing: $ppm")
+  }
 }

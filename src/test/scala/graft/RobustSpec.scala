@@ -879,4 +879,115 @@ class RobustSpec extends AnyFunSuite with SparkFixture {
       ("2024-01-02 00:00:00", 3.0, 3.0))
     assert(Robust.signTestOf(e).collect().isEmpty)
   }
+
+  // ---- quantile lift, Mood's median, Cox-Stuart, median polish ----
+
+  test("quantile_lift: planted arm values pin v0/v1/lift at every quantile") {
+    val arms = (1L to 40L).toDF("user_id")
+      .select(col("user_id"), Behavior.arm2(col("user_id")).as("arm"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ev = (1L to 40L).map { u =>
+      (u, u, "buy", "2024-01-01 00:00:00", 1.0 + arms(u).toDouble)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    val out = Robust.quantileLiftOf(ev).collect()
+    assert(out.length == 4, s"p25/p50/p75/p90: ${out.mkString(";")}")
+    val n0 = arms.values.count(_ == 0L).toLong
+    out.foreach { r =>
+      assert(r.getLong(2) == n0 && r.getLong(3) == 40L - n0, s"$r")
+      assert(r.getLong(4) == 1000000L && r.getLong(5) == 2000000L, s"$r")
+      assert(r.getLong(6) == 1000000L, s"constant unit lift: $r")
+    }
+  }
+
+  test("quantile_lift: a type missing an arm drops instead of publishing a half-read") {
+    val arms = (1L to 60L).toDF("user_id")
+      .select(col("user_id"), Behavior.arm2(col("user_id")).as("arm"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val arm0 = (1L to 60L).filter(arms(_) == 0L).take(5)
+    val ev = arm0.map { u =>
+      (u, u, "buy", "2024-01-01 00:00:00", 1.0)
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    assert(Robust.quantileLiftOf(ev).collect().isEmpty)
+  }
+
+  test("mood_median: planted arm separation is significant; all-equal type refuses") {
+    // Resolve the engine's own arm assignment, plant arm-ordered
+    // values for 'buy' and a constant for 'flat'.
+    val arms = (1L to 90L).toDF("user_id")
+      .select(col("user_id"), Behavior.arm3(col("user_id")).as("arm"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val e = (1L to 90L).flatMap { u =>
+      Seq((u, u, "buy", "2024-01-01 00:00:00", 1.0 + arms(u) * 100.0),
+        (u, u, "flat", "2024-01-01 00:00:00", 7.0))
+    }.toDF("event_id", "user_id", "event_type", "t", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("value"))
+    val out = Robust.moodMedianOf(e).collect()
+      .map(r => r.getString(0) -> r).toMap
+    val buy = out("buy")
+    assert(buy.getLong(3) == 3L, s"three arms present: $buy")
+    assert(!buy.isNullAt(4) && buy.getDouble(4) > 5.991465, s"chi2: $buy")
+    assert(buy.getBoolean(5), s"full separation significant: $buy")
+    val flat = out("flat")
+    assert(flat.isNullAt(4) && flat.isNullAt(5),
+      s"all-equal type refuses (atot = 0): $flat")
+    assert(flat.getLong(2) == 700L, "median on the cent grid")
+  }
+
+  test("cox_stuart: a monotone series reads increasing; the odd middle drops; tied pair counted") {
+    def days(vals: Double*) = vals.zipWithIndex.map { case (v, i) =>
+      (i.toLong, i.toLong, "buy", f"2024-01-${i + 1}%02d 00:00:00", v)
+    }.toDF("event_id", "user_id", "event_type", "d", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("d")).as("ts"), col("value"))
+    // 9 days strictly increasing: c = 5, middle (rn=5) drops, 4 pairs
+    // all positive → z = 4/sqrt(4) = 2.0 > 1.959964
+    val out = Robust.coxStuartOf(
+      days(1, 2, 3, 4, 5, 6, 7, 8, 9)).collect()
+    assert(out.length == 1)
+    val r = out(0)
+    assert(r.getLong(1) == 4L && r.getLong(2) == 0L && r.getLong(3) == 0L)
+    assert(r.getDouble(4) == 2.0 && r.getString(5) == "increasing", s"$r")
+    // one tied pair (day1 = day5 under c = 4, n = 8): dropped + counted
+    val out2 = Robust.coxStuartOf(
+      days(5, 2, 3, 4, 5, 6, 7, 8)).collect()(0)
+    assert(out2.getLong(3) == 1L, s"tie mass published: $out2")
+    assert(out2.getLong(1) == 3L && out2.getLong(2) == 0L, s"$out2")
+  }
+
+  test("median_polish: a planted whale stays in the residual, identity exact") {
+    // 3 types × 3 weekdays (2024-01-01/02/03 → dow 4/5/6):
+    //   a: 1 2 3 / b: 2 3 4 / c: 3 4 100 (whale)
+    // hand polish: overall 3, type effects (−1,0,1), weekday effects
+    // (−1,0,1), sole residual 95 at (c, dow6) — the whale never
+    // contaminates an effect (the mean decomposition would smear it).
+    val cells = Seq(
+      ("a", "01", 1.0), ("a", "02", 2.0), ("a", "03", 3.0),
+      ("b", "01", 2.0), ("b", "02", 3.0), ("b", "03", 4.0),
+      ("c", "01", 3.0), ("c", "02", 4.0), ("c", "03", 100.0))
+    val e = cells.zipWithIndex.map { case ((t, d, v), i) =>
+      (i.toLong, i.toLong, t, s"2024-01-$d 00:00:00", v)
+    }.toDF("event_id", "user_id", "event_type", "d", "value")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("d")).as("ts"), col("value"))
+    val out = Robust.medianPolishOf(e).collect()
+    assert(out.length == 9)
+    out.foreach { r =>
+      assert(r.getLong(2) ==
+        r.getLong(3) + r.getLong(4) + r.getLong(5) + r.getLong(6),
+        s"identity must be exact: $r")
+      assert(r.getLong(3) == 3000000L, s"overall: $r")
+    }
+    val eff = out.map(r => (r.getString(0), r.getLong(1)) ->
+      (r.getLong(4), r.getLong(5), r.getLong(6))).toMap
+    assert(eff(("a", 4L)) == ((-1000000L, -1000000L, 0L)))
+    assert(eff(("c", 6L)) == ((1000000L, 1000000L, 95000000L)),
+      s"the whale is pure residual: ${eff(("c", 6L))}")
+    assert(out.map(_.getLong(6)).count(_ != 0L) == 1,
+      "exactly one nonzero residual")
+  }
 }
