@@ -65,7 +65,7 @@ object SparkEntry {
     // LLM-data-pipeline operators (#15-26)
     "dedup_exact"      -> (Dedup.dedupExact(_, _)),
     "dedup_minhash"    -> on(documents)(Dedup.dedupMinhashOf),
-    "dedup_jaccard"    -> (Dedup.dedupJaccard(_, _)),
+    "dedup_jaccard"    -> on(documents)(Dedup.dedupJaccardOf(_)),
     "dedup_simhash"    -> on(documents)(Dedup.dedupSimhashOf),
     // Round-15 tranche: Chapman capture-recapture undercount (row 426)
     "dedup_capture_recapture" -> on(documents)(Dedup.dedupCaptureRecaptureOf),
@@ -101,7 +101,7 @@ object SparkEntry {
     "decontaminate"     -> on(documents)(Corpus.decontaminateOf(_)),
     "vocab_df"          -> on(documents)(Corpus.vocabDfOf(_)),
     "stratified_sample" -> on(documents)(Corpus.stratifiedSampleOf(_)),
-    "jaccard_pairs"     -> (Dedup.jaccardPairs(_, _)),
+    "jaccard_pairs"     -> on(documents)(Dedup.jaccardPairsOf(_)),
     "embed_quantize"    -> on(embeddings)(Similarity.embedQuantizeOf),
     // Round-6 tranche: corpus statistics, training-shard prep,
     // embedding clustering (#55-62)
@@ -124,8 +124,11 @@ object SparkEntry {
     "key_skew"          -> (Skew.keySkew(_, _)),
     "value_histogram"   -> (Report.valueHistogram(_, _)),
     "daily_fill"        -> on(events)(EventAnalytics.dailyFillOf),
-    // rows-only: MinHash banding is not SQL-expressible (cf. #16)
-    "dedup_incremental" -> (Dedup.dedupIncremental(_, _)),
+    // rows-only: MinHash banding is not SQL-expressible (cf. #16). The
+    // src0 slice, the one decontaminate holds out as its benchmark, is
+    // the new batch; the other sources are the standing corpus.
+    "dedup_incremental" -> on(documents)(docs => Dedup.dedupIncrementalOf(
+      docs.filter(col("source") =!= "src0"), docs.filter(col("source") === "src0"))),
     // Round-7 tranche: behavioral analytics, robust statistics,
     // boilerplate spans, sketch-confirmed heavy hitters, 1-bit ANN
     // (#73-82)
@@ -210,7 +213,7 @@ object SparkEntry {
     "gopher_rules"      -> on(documents)(CorpusStats.gopherRulesOf(_)),
     "inverted_index"    -> on(documents)(CorpusStats.invertedIndexOf(_)),
     "kanon_risk"        -> on(customer)(Warehouse.kanonRiskOf(_)),
-    "containment_pairs" -> (Dedup.containmentPairs(_, _)),
+    "containment_pairs" -> on(documents)(Dedup.containmentPairsOf(_)),
     "knn_classify"      -> on(embeddings)(Similarity.knnClassifyOf(_)),
     "sem_dedup"         -> on(embeddings)(Cluster.semDedupOf(_)),
     // rows-only: the iterative eigensolve is not SQL-expressible

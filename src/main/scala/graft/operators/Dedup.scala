@@ -156,7 +156,7 @@ object Dedup {
 
   /** [[lshCandidates]] verified with exact token-3-gram Jaccard >=
     * threshold. */
-  def dedupJaccardOf(docs: DataFrame, threshold: Double): DataFrame = {
+  def dedupJaccardOf(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val cand = lshCandidates(docs)
     // Exact Jaccard over the 31-bit shingle hash sets instead of the
     // shingle strings: collision odds per doc are ~|shingles|²/2³² —
@@ -191,9 +191,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .orderBy("a_id", "b_id")
 
-  def dedupJaccard(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    dedupJaccardOf(Tables.documents(spark, dir), threshold)
-
   /** EXACT Jaccard similarity self-join (J >= threshold) via prefix
     * filtering (Bayardo et al., WWW'07; PPJoin family) — complete, no
     * LSH recall loss, so it oracle-checks against a brute-force DuckDB
@@ -211,7 +208,7 @@ object Dedup {
     * on the full shingle-hash sets (31-bit hashes: pairwise collision
     * odds ~|union|²/2³² — negligible, and deterministic per dataset).
     */
-  def jaccardPairsOf(docs: DataFrame, threshold: Double): DataFrame = {
+  def jaccardPairsOf(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     // The verify stage accepts round(J, 4) >= t, i.e. J >= t - 5e-5 —
     // so every PRUNING bound below uses tEff = t - 5e-5, keeping the
@@ -265,9 +262,6 @@ object Dedup {
       graft.plans.ColumnBridge.expression(a),
       graft.plans.ColumnBridge.expression(b)))
 
-  def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    jaccardPairsOf(Tables.documents(spark, dir), threshold)
-
   /** EXACT containment self-join: ordered pairs where C(a→b) =
     * |Sa∩Sb| / |Sa| >= threshold — the ASYMMETRIC near-dup measure
     * that catches quotes, excerpts, and subset duplication Jaccard
@@ -284,7 +278,7 @@ object Dedup {
     * merge-count as [[jaccardPairsOf]], and the rounding bound tEff
     * keeps pruning a strict superset of what verify accepts.
     */
-  def containmentPairsOf(docs: DataFrame, threshold: Double): DataFrame = {
+  def containmentPairsOf(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     val tEff = threshold - 5e-5
     val sh = sortedShingles(docs)
@@ -305,10 +299,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .orderBy("a_id", "b_id")
   }
-
-  def containmentPairs(spark: SparkSession, dir: String,
-                       threshold: Double = 0.8): DataFrame =
-    containmentPairsOf(Tables.documents(spark, dir), threshold)
 
   /** Incremental (batch-vs-corpus) near-dup — the daily-ingest shape:
     * band only the new batch and probe the standing corpus's banded
@@ -342,19 +332,6 @@ object Dedup {
       .select(col("doc_id"), col("dup_of"),
         coalesce(col("n_shared_bands"), lit(0L)).as("n_shared_bands"))
       .orderBy("doc_id")
-  }
-
-  /** [[dedupIncrementalOf]] with the `benchSource` slice as the new
-    * batch and the rest as the standing corpus (one source of truth
-    * with [[Corpus.decontaminateOf]]'s parameter of the same name).
-    * Rows-only check (MinHash banding is not SQL-expressible) +
-    * DedupSpec coverage. */
-  def dedupIncremental(spark: SparkSession, dir: String,
-                       benchSource: String = "src0"): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    dedupIncrementalOf(
-      docs.filter(col("source") =!= benchSource),
-      docs.filter(col("source") === benchSource))
   }
 
   // ---- SimHash ----------------------------------------------------------

@@ -61,13 +61,15 @@ object BqStyleWriter {
         s"partition decorator $tableSpec requires partitionField"))
       val iso = isoOf(day)
       // BQ rejects a decorated load containing out-of-partition rows;
-      // a silent filter would hide a pipeline bug, so count-and-throw.
+      // a silent filter would hide a pipeline bug, so check-and-throw.
       // Null-safe compare: a NULL partition value must be rejected
       // too (BQ refuses NULL partition keys in a decorated load),
-      // and `=!=` would let it slip through as NULL.
-      val stray = df.filter(!(col(field).cast("string") <=> lit(iso)))
-        .limit(1).count()
-      if (stray > 0) throw new IllegalArgumentException(
+      // and `=!=` would let it slip through as NULL. `isEmpty`, not
+      // `limit(1).count()`: the count's limit stages name their
+      // generated counter field by a global id, so each load would
+      // compile the check anew.
+      val stray = !df.filter(!(col(field).cast("string") <=> lit(iso))).isEmpty
+      if (stray) throw new IllegalArgumentException(
         s"rows outside decorated partition $iso in load to $tableSpec")
       val partDir = s"$warehouse/$name/$field=$iso"
       disposition match {

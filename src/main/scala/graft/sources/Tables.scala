@@ -1,19 +1,79 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader over a scale-factor directory. Reads are plain
   * `spark.read.parquet` so Catalyst handles column pruning and filter
   * pushdown against the scan.
+  *
+  * == Schema memo ==
+  *
+  * A parquet read without a schema infers one: Spark runs a one-task
+  * job on a new footer-reading thread pool to read a file footer,
+  * about 70 ms of driver wall time and one job per read (events at
+  * sf0.01 on a 4-core VM; the schema-given read of the same path
+  * plans in 7 ms and starts no job). Every build of a registered
+  * query would pay it once per table it reads, so the loader
+  * remembers each path's schema:
+  *
+  *  - the first read of a path is `spark.read.parquet(path)`, and its
+  *    schema is stored with a digest of the files it was read from
+  *    (each leaf file's path, length and modification time, taken
+  *    from the file index the read builds anyway) and the session's
+  *    SQL settings, several of which change the parquet → Spark type
+  *    mapping (`nanosAsLong`, `binaryAsString`, `int96AsTimestamp`,
+  *    `mergeSchema`, partition-type inference, ...);
+  *  - a later read of the path passes the stored schema,
+  *    `spark.read.schema(s).parquet(path)`, which plans the same
+  *    relation without a job. Its file index lists the path afresh,
+  *    and the stored schema stands only while that listing has the
+  *    stored digest and the session the stored settings; otherwise
+  *    the read infers again and replaces the entry.
+  *
+  * One entry per path, a fixed size whatever the file count.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val conf = spark.conf.getAll
+    val remembered = Option(schemas.get(path)).filter(_.conf == conf).flatMap { m =>
+      val df = spark.read.schema(m.schema).parquet(path)
+      if (filesDigest(df).contains(m.files)) Some(df) else None
+    }
+    remembered.getOrElse {
+      val df = spark.read.parquet(path)
+      filesDigest(df).foreach(d => schemas.put(path, Inferred(conf, d, df.schema)))
+      df
+    }
+  }
+
+  /** A path's inferred schema, under the settings and files it came from. */
+  private final case class Inferred(conf: Map[String, String], files: String,
+                                    schema: StructType)
+  private val schemas = new ConcurrentHashMap[String, Inferred]()
+
+  /** SHA-256 over the leaf files of a parquet read's file index. */
+  private def filesDigest(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation
+    }.collect { case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+      val md = MessageDigest.getInstance("SHA-256")
+      index.allFiles().map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+        .sorted.foreach(line => md.update(line.getBytes(UTF_8)))
+      md.digest().map("%02x".format(_)).mkString
+    }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

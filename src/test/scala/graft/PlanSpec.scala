@@ -57,8 +57,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // 16-centroid broadcast — linear in rows by construction.
     val risky = Seq[DataFrame](
       q("dedup_minhash"),
-      Dedup.dedupJaccard(spark, Sf),
-      Dedup.jaccardPairs(spark, Sf),
+      q("dedup_jaccard"),
+      q("jaccard_pairs"),
       q("dedup_simhash"),
       Similarity.annLshOf(embeddings),
       q("sessionize"),
@@ -237,7 +237,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     for (df <- Seq[DataFrame](
       q("span_dedup"),
       q("weighted_sample"),
-      Dedup.containmentPairs(spark, Sf),
+      q("containment_pairs"),
       q("sem_dedup"),
       q("inverted_index"))) {
       val p = plan(df)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
@@ -23,6 +23,12 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     "two" -> ((s, _) => s.range(2).toDF()))
 
   private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+
+  /** The perfbench interactive panel: one query per large operator
+    * family, as `perfbench/panel.json` records the draw. */
+  private lazy val panel: Seq[String] = """"name": "(\w+)"""".r
+    .findAllMatchIn(Files.readString(Paths.get("perfbench/panel.json")))
+    .map(_.group(1)).toSeq
 
   test("SPARK_GRAFT_ONLY: unset or blank selects all, names filter in registry order, unknown names warn") {
     val warnings = mutable.Buffer[String]()
@@ -74,14 +80,11 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a second rotation of a query panel compiles no generated code") {
-    // One query per large operator family. The eight compile more
-    // classes than Spark's default codegen cache of 100 holds (177 in
-    // a fresh JVM with stage ids in class names), so at that default
-    // every rotation evicted what the next one needed and recompiled
-    // about 170 of them.
-    val panel = Seq("event_transitions", "benford_audit", "weekday_envelope",
-      "hellinger_matrix", "theilsen_trend", "weighted_sample", "ann_hamming",
-      "reciprocity")
+    // The eight compile more classes than Spark's default codegen
+    // cache of 100 holds (177 in a fresh JVM with stage ids in class
+    // names), so at that default every rotation evicted what the next
+    // one needed and recompiled about 170 of them.
+    assert(panel.size == 8)
     def compiledByRotation(): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       panel.foreach(name => SparkEntry.queries(name)(spark, Sf).queryExecution.toRdd.count())
@@ -90,6 +93,21 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     compiledByRotation()
     val warm = compiledByRotation()
     assert(warm == 0, s"the warm rotation recompiled $warm classes")
+  }
+
+  test("rebuilding a panel query starts no job beyond its eager checkpoints") {
+    // Tables remembers each table's parquet schema, so only a query's
+    // first build infers it, one job per table read. A rebuild starts
+    // only the localCheckpoint materialisations its operators cut
+    // their plans with.
+    val checkpoints = Map("theilsen_trend" -> 1, "reciprocity" -> 2).withDefaultValue(0)
+    assert(panel.size == 8)
+    for (name <- panel) {
+      SparkEntry.queries(name)(spark, Sf)
+      val (_, jobs) = jobsStartedBy(SparkEntry.queries(name)(spark, Sf))
+      assert(jobs == checkpoints(name), s"rebuilding $name started $jobs jobs")
+    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
   }
 
   test("ExplainAudit writes plans for the healthy queries and reports the number it wrote") {

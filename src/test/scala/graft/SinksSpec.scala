@@ -209,6 +209,27 @@ class SinksSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(s"$wh/daily").count() == 1)
   }
 
+  test("BqStyleWriter: a decorated load of another day compiles no generated code") {
+    // A stray-row check by `limit(1).count()` compiles 4 classes per
+    // load: its limit stages name their counter field by a global id.
+    import graft.sources.BqStyleWriter
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = tmp("graft-bq-codegen")
+    val days = Seq("2024-02-01", "2024-02-02")
+    for (d <- days) Seq((1L, d)).toDF("v", "day")
+      .select(col("v"), to_date(col("day")).as("day")).write.parquet(s"$base/in/$d")
+    def compiledByLoad(d: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      BqStyleWriter.load(spark.read.parquet(s"$base/in/$d"), s"$base/wh",
+        s"daily$$${d.replace("-", "")}", BqStyleWriter.WriteTruncate, Some("day"))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiledByLoad(days.head)
+    val second = compiledByLoad(days.last)
+    assert(second == 0, s"the second day's load compiled $second classes")
+    assert(spark.read.parquet(s"$base/wh/daily").count() == 2)
+  }
+
   // ── AlertSink: the reference's webhook delivery, sandbox-honest ──
   // (a loopback JDK HttpServer stands in for the chat endpoint; the
   // semantics under test are the reference's: JSON {"text": ...}
