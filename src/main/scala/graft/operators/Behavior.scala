@@ -619,6 +619,29 @@ object Behavior {
   private[graft] def micro(v: Column): Column =
     floor(v * 1e6 + lit(0.5)).cast("long")
 
+  /** A value on the exact cent grid: round-half-up to 0.01, as a long. */
+  private[graft] def cents(v: Column): Column =
+    floor(v * 100 + lit(0.5)).cast("long")
+
+  /** The event's item id: `props.$.k` as a long, NULL when absent. */
+  private[graft] def itemOrNull: Column =
+    get_json_object(col("props"), "$.k").cast("long")
+
+  /** The event's item id, 0 when absent. */
+  private[graft] def itemKey: Column = coalesce(itemOrNull, lit(0L))
+
+  /** The per-(event_type, day) series: each event's `measure` columns
+    * beside its type and calendar day, folded by `agg`/`aggs` per
+    * (event_type, day). One map-combinable aggregate; the frame is
+    * bounded by types × calendar days. The caller picks the grid
+    * (a count, `cents` or `micro`) through its measure and aggregate. */
+  private[graft] def daily(events: DataFrame, measure: Column*)(
+      agg: Column, aggs: Column*): DataFrame =
+    events
+      .select(Seq(col("event_type"), to_date(col("ts")).as("day")) ++
+        measure: _*)
+      .groupBy("event_type", "day").agg(agg, aggs: _*)
+
   /** The report day (the last event day) as a 1-row broadcastable
     * frame, so no driver collect is needed. */
   private[operators] def reportDate(events: DataFrame): DataFrame =
@@ -788,8 +811,7 @@ object Behavior {
   /** Distinct (user, item) baskets, item = props.k (0 when absent). */
   private def baskets(events: DataFrame): DataFrame =
     events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
+      itemKey.as("item"))
       .distinct()
 
   /** Unordered item pairs (item_a < item_b) co-occurring in at least
@@ -972,8 +994,7 @@ object Behavior {
     // fractional (s - 0.5) / n FPGrowth support negative.
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     val baskets = events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
+      itemKey.as("item"))
       .groupBy("user_id")
       .agg(collect_set(col("item")).as("basket"))
       .localCheckpoint(false) // count + fit read it once
@@ -1097,8 +1118,7 @@ object Behavior {
     require(k > 0, s"k must be positive, got $k")
     require(oversample > 0, s"oversample must be positive, got $oversample")
     val interactions = events.select(col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
+      itemKey.as("item"))
       .distinct()
       .localCheckpoint(false) // consumers: catalog + anti-join (×2 paths)
     val catalog = interactions.select(col("item")).distinct()
@@ -1622,8 +1642,7 @@ object Behavior {
   def gatewayItemsOf(events: DataFrame): DataFrame = {
     val touches = events
       .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        itemKey.as("item"),
         unix_micros(col("ts")).as("us"), col("event_id"))
     val first = touches
       .groupBy("user_id")
@@ -2381,8 +2400,7 @@ object Behavior {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), unix_micros(col("ts")).as("tc"),
         col("event_id").as("click_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
+        itemKey.as("item"))
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), unix_micros(col("ts")).as("tp"),
         col("event_id").as("pid"), micro(col("value")).as("qv"))
@@ -2574,8 +2592,7 @@ object Behavior {
     val maxDay = reportDate(events)
     val top = events
       .select(to_date(col("ts")).as("day"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
+        itemKey.as("item"))
       .crossJoin(broadcast(maxDay)) // 1 row by construction
       .withColumn("age", datediff(col("report_date"), col("day")))
       .filter(col("age") <= horizon)

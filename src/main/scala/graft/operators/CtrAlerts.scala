@@ -54,8 +54,7 @@ object CtrAlerts {
     val ev = events
       .filter(col("event_type").isin("click", "view"))
       .select(
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        Behavior.itemKey.as("item"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
         when(col("event_type") === "view", 1L).otherwise(0L).as("is_view"))
     val items = ev.groupBy("item")
@@ -101,8 +100,7 @@ object CtrAlerts {
     val items = events
       .filter(col("event_type").isin("click", "view"))
       .select(
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        Behavior.itemKey.as("item"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
         when(col("event_type") === "view", 1L).otherwise(0L).as("is_view"))
       .groupBy("item")
@@ -237,10 +235,8 @@ object CtrAlerts {
     * AlertsSpec ±5%-of-exact bands at every level.
     */
   def hllRollupOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
-      .groupBy("event_type", "day")
-      .agg(expr("hll_sketch_agg(user_id)").as("sk"))
+    val daily = Behavior.daily(events, col("user_id"))(
+        expr("hll_sketch_agg(user_id)").as("sk"))
       .localCheckpoint(false) // leaves + both rollup levels read it
     val leafEst = daily.select(lit("type_day").as("level"), col("event_type"),
       col("day"), expr("hll_sketch_estimate(sk)").as("approx_users"))

@@ -25,22 +25,10 @@ object EventAnalytics {
     * exact integer microseconds (`unix_micros`) so session boundaries
     * are bit-reproducible across engines and partitionings.
     */
-  def sessionizeOf(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val ev = events.select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("us"))
-    // Total order within a user: (us, event_id) — equal timestamps are
-    // possible and would otherwise make lag() nondeterministic.
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val flagged = ev
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-          .otherwise(0L))
-    val sessions = flagged.withColumn("session_idx",
-      sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    sessions.groupBy("user_id", "session_idx")
+  def sessionizeOf(events: DataFrame, gapMinutes: Int = 30): DataFrame =
+    sessionTagged(events.select(col("event_id"), col("user_id"),
+      unix_micros(col("ts")).as("us")), gapMinutes)
+      .groupBy("user_id", "session_idx")
       .agg(count(lit(1)).as("n_events"),
         min("us").as("start_us"), max("us").as("end_us"))
       .select(col("user_id"), col("session_idx"), col("n_events"),
@@ -48,6 +36,27 @@ object EventAnalytics {
         round((col("end_us") - col("start_us")).cast("double") / 1e6, 3)
           .as("duration_sec"))
       .orderBy("user_id", "session_idx")
+
+  /** The one gap-session tag: `ev` — an event frame carrying user_id,
+    * event_id and `us` (exact `unix_micros`), plus whatever the caller
+    * keeps — gains `session_idx`, the running count of session starts
+    * in the user's (us, event_id) order. An event starts a session when
+    * it is the user's first or follows the previous one by more than
+    * `gapMinutes`. Both windows declare the same user-keyed spec, so
+    * EnsureRequirements plans ONE user_id hash exchange for the tag and
+    * for any user-prefixed aggregate or window the caller adds on top. */
+  private def sessionTagged(ev: DataFrame, gapMinutes: Int): DataFrame = {
+    require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
+    val gapUs = gapMinutes.toLong * 60L * 1000000L
+    // Total order within a user: (us, event_id) — equal timestamps are
+    // possible and would otherwise make lag() nondeterministic.
+    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
+    ev.withColumn("prev_us", lag("us", 1).over(w))
+      .withColumn("is_new",
+        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
+          .otherwise(0L))
+      .withColumn("session_idx", sum("is_new").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
   /** Per-user z-score outliers: events whose value deviates more than
@@ -227,7 +236,8 @@ object EventAnalytics {
     */
   def ewmaSmoothOf(events: DataFrame, horizon: Int = 14): DataFrame = {
     require(horizon > 0 && horizon < 32, s"horizon in (0,32), got $horizon")
-    val daily = Robust.dailyRevenue(events, "qrev")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       // |types × days| rows, two consumers (fan-out + join-back):
       // materialize once or the fact aggregate re-plans per branch
       .localCheckpoint(false)
@@ -269,7 +279,8 @@ object EventAnalytics {
     */
   def seasonalProfileOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type")
-    Robust.dailyRevenue(events, "qrev")
+    Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       .select(col("event_type"),
         (datediff(col("day"), lit("1970-01-01").cast("date")) % 7).as("dow"),
         col("qrev"))
@@ -290,31 +301,22 @@ object EventAnalytics {
 
   /** Top event-type 3-step paths within sessions (the sequence-mining
     * report behind "how do users actually navigate"): sessions are
-    * [[sessionizeOf]]'s 30-minute-gap runs, a path is three
+    * [[sessionTagged]]'s 30-minute-gap runs, a path is three
     * CONSECUTIVE event types inside one session, counted corpus-wide
     * with a deterministic (count DESC, path) top-`k`.
     *
     * ONE user-keyed shuffle carries everything: the gap flag, the
     * running session index, and both lag()s all declare user-prefixed
     * window keys, so EnsureRequirements reuses the same hash
-    * partitioning (the [[sessionizeOf]] contract); the path aggregate
+    * partitioning (the [[sessionTagged]] contract); the path aggregate
     * is |event types|³-bounded and map-side combinable; the top-k is
     * TakeOrderedAndProject. */
   def topPathsOf(events: DataFrame, gapMinutes: Int = 30,
                  k: Int = 20): DataFrame = {
-    require(gapMinutes > 0 && k > 0, s"need positive gap/k, got $gapMinutes/$k")
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val sessioned = events
+    require(k > 0, s"k must be positive, got $k")
+    val sessioned = sessionTagged(events
       .select(col("event_id"), col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx",
-        sum("is_new").over(w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+        unix_micros(col("ts")).as("us")), gapMinutes)
     val ws = Window.partitionBy("user_id", "session_idx")
       .orderBy(col("us"), col("event_id"))
     sessioned
@@ -350,7 +352,8 @@ object EventAnalytics {
       col("qrev").cast("double") /
         ((col("dow_sum") - col("qrev")).cast("double")
           / (col("n_dow") - 1L).cast("double")))
-    Robust.dailyRevenue(events, "qrev")
+    Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       .withColumn("dow",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .withColumn("dow_sum", sum("qrev").over(byDow))
@@ -449,8 +452,7 @@ object EventAnalytics {
     val byFreq = Window.partitionBy(lit(1))
       .orderBy(col("n").desc, col("item"))
     events
-      .select(coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"))
+      .select(Behavior.itemKey.as("item"))
       .groupBy("item")
       .agg(count(lit(1)).as("n"))
       .withColumn("rank", row_number().over(byFreq))
@@ -478,7 +480,8 @@ object EventAnalytics {
     require(baseline > 0 && h > 0, s"need positive baseline/h, got $baseline/$h")
     val byType = Window.partitionBy("event_type").orderBy("day")
     val cum = byType.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val daily = Robust.dailyRevenue(events, "qrev")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       .withColumn("rn", row_number().over(byType))
       .withColumn("mu0", floor(
         sum(when(col("rn") <= baseline, col("qrev"))).over(
@@ -514,8 +517,7 @@ object EventAnalytics {
   def targetEncodeOf(events: DataFrame, alpha: Int = 50): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
     val ev = events.select(col("event_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-        .as("item"),
+      Behavior.itemKey.as("item"),
       Behavior.micro(col("value")).as("qv"))
     val items = ev.groupBy("item")
       .agg(count(lit(1)).as("n"), sum("qv").as("s"))
@@ -576,9 +578,7 @@ object EventAnalytics {
     */
   def acfDailyOf(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 30, s"maxLag in [1,30], got $maxLag")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("x"))
     // Dense calendar grid per type: day-span sequence exploded from the
     // 1-row bounds frame, cross-joined with the distinct types.
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
@@ -637,9 +637,7 @@ object EventAnalytics {
     * ([[acfDailyOf]]'s exact shape — same shuffle posture). */
   def ljungBoxOf(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 30, s"maxLag in [1,30], got $maxLag")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("x"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
     val grid = daily.select("event_type").distinct()
       .crossJoin(broadcast(bounds))
@@ -760,10 +758,7 @@ object EventAnalytics {
     * only fact-sized shuffle; the per-type fold runs on the bounded
     * (types × span) frame. */
   def burstinessOf(events: DataFrame): DataFrame =
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day")
-      .agg(count(lit(1)).as("c"))
+    Behavior.daily(events)(count(lit(1)).as("c"))
       .groupBy("event_type")
       .agg((datediff(max("day"), min("day")) + 1).cast("long").as("n_days"),
         sum("c").as("n_events"),
@@ -929,10 +924,7 @@ object EventAnalytics {
     * bounded daily frame, bounded fold. */
   def forecastBacktestOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type").orderBy("day")
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day")
-      .agg(count(lit(1)).as("c"))
+    Behavior.daily(events)(count(lit(1)).as("c"))
       .withColumn("p7", lag("c", 7).over(byType))
       .withColumn("p1", lag("c", 1).over(byType))
       .filter(col("p7").isNotNull && col("p1").isNotNull)
@@ -1080,11 +1072,8 @@ object EventAnalytics {
     val byDay = Window.partitionBy("event_type").orderBy("day")
     val cum = byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val byType = Window.partitionBy("event_type")
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("qc"))
-      .groupBy("event_type", "day")
-      .agg(sum("qc").as("x"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("qc"))(sum("qc").as("x"))
       // Squares ride the DOLLAR grid (cent squares overflow int64 at
       // the ×1000 rehearsal scale); means keep full cent precision.
       .withColumn("xd", expr("(x + 50) div 100"))
@@ -1238,10 +1227,8 @@ object EventAnalytics {
     val r4 = graft.functions.TextF.round4HalfUp _
     val ma = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(-3, 3)
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("qc"))
-      .groupBy("event_type", "day").agg(sum("qc").as("x"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("qc"))(sum("qc").as("x"))
     val trended = daily
       .withColumn("w7", count(lit(1)).over(ma))
       .withColumn("t7", when(col("w7") === 7, sum("x").over(ma)))
@@ -1276,10 +1263,8 @@ object EventAnalytics {
     * the envelope aggregate runs on ≤ types × days rows. */
   def weekdayEnvelopeOf(events: DataFrame): DataFrame = {
     val r4 = graft.functions.TextF.round4HalfUp _
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("qc"))
-      .groupBy("event_type", "day").agg(sum("qc").as("x"))
+    Behavior.daily(events,
+      Behavior.cents(col("value")).as("qc"))(sum("qc").as("x"))
       .withColumn("dow",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .groupBy("event_type", "dow")
@@ -1296,30 +1281,18 @@ object EventAnalytics {
     * grouped by their FIRST event's item, with the share that convert
     * (contain a purchase) — the "which entry earns the session" read
     * product teams pair with [[Behavior.funnelStepsOf]]'s global
-    * funnel. Session assignment is [[sessionizeOf]]'s exact lag/cumsum
-    * machinery (same gap, same (us, event_id) total order) kept at
-    * event grain; the entry event is the lexicographic struct MIN over
+    * funnel. Session assignment is [[sessionTagged]], the tag
+    * [[sessionizeOf]] folds, kept at event grain; the entry event is the lexicographic struct MIN over
     * (us, event_id) — map-combinable, no second window; conversion in
     * exact ppm.
     *
     * Shape: one user-keyed sort window (sessionize's shuffle), one
     * (user, session) aggregate, one bounded item rollup. */
-  def entryConversionOf(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    events
+  def entryConversionOf(events: DataFrame, gapMinutes: Int = 30): DataFrame =
+    sessionTagged(events
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"))
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-          .otherwise(0L))
-      .withColumn("sid", sum("is_new").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "sid")
+        col("event_type"), Behavior.itemKey.as("item")), gapMinutes)
+      .groupBy("user_id", "session_idx")
       .agg(min(struct(col("us"), col("event_id"), col("item"))).as("first"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
@@ -1328,7 +1301,6 @@ object EventAnalytics {
       .select(col("entry_item"), col("n_sessions"), col("n_converted"),
         expr("(n_converted * 1000000) div n_sessions").as("conv_ppm"))
       .orderBy("entry_item")
-  }
 
   /** Interval-OVERLAP join: sessions × campaign windows weighted by
     * the overlap DURATION — [[intervalJoinOf]] answers "which events
@@ -1409,9 +1381,7 @@ object EventAnalytics {
     * Shape: one (type, day) fact aggregate; the sign pairs and the
     * boundary sums all ride the bounded types × span² day frame. */
   def pettittChangepointOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("c"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1")) // 1 row
     val dense = daily.select("event_type").distinct() // bounded
       .crossJoin(broadcast(bounds))
@@ -1488,8 +1458,7 @@ object EventAnalytics {
     val dec = "decimal(38,0)"
     val daily = events.filter(col("event_type") === "purchase")
       .select(
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        Behavior.itemKey.as("item"),
         to_date(col("ts")).as("day"))
       .groupBy("item", "day").agg(count(lit(1)).as("s"))
     val bounds = daily.agg(
@@ -1518,9 +1487,7 @@ object EventAnalytics {
   }
 
   private def denseDaily(events: DataFrame, testDays: Int): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("c"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1")) // 1 row
     val spine = daily.select("event_type").distinct() // bounded
       .crossJoin(broadcast(bounds))
@@ -1710,8 +1677,7 @@ object EventAnalytics {
     require(testDays > 0, s"testDays must be positive, got $testDays")
     val daily = events.filter(col("event_type") === "purchase")
       .select(
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        Behavior.itemKey.as("item"),
         to_date(col("ts")).as("day"))
       .groupBy("item", "day").agg((count(lit(1)) * 1000L).as("ym"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1")) // 1 row
@@ -1834,9 +1800,8 @@ object EventAnalytics {
     * engine-specific dayofweek). */
   def seasonalStrengthOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day").agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .localCheckpoint(false) // feeds both mean frames and the residuals
@@ -1910,9 +1875,8 @@ object EventAnalytics {
     * run fold all ride the bounded daily frame. */
   def streakStatsOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type").orderBy("day")
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day").agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("prev", lag("v", 1).over(byType))
       .filter(col("prev").isNotNull)
       .withColumn("dir",
@@ -1943,24 +1907,15 @@ object EventAnalytics {
     * 10 (`10+`) so the tail vocabulary stays bounded; conversion =
     * the session contains ≥ 1 purchase.
     *
-    * Shape: the [[sessionizeOf]] window pass (one user-keyed
+    * Shape: the [[sessionTagged]] window pass (one user-keyed
     * shuffle, total (us, event_id) order) with the purchase flag
     * folded into the same per-session aggregate, then a ≤ 10-row
     * bucket rollup with exact-ppm conversion. */
   def sessionDepthConversionOf(events: DataFrame,
                                gapMinutes: Int = 30): DataFrame = {
-    require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val ev = events.select(col("event_id"), col("user_id"),
-      col("event_type"), unix_micros(col("ts")).as("us"))
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val sessions = ev
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx", sum("is_new").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sessions = sessionTagged(events.select(col("event_id"),
+      col("user_id"), col("event_type"), unix_micros(col("ts")).as("us")),
+      gapMinutes)
       .groupBy("user_id", "session_idx")
       .agg(count(lit(1)).as("depth"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -2016,23 +1971,14 @@ object EventAnalytics {
     * the companion denominator to [[sessionDepthConversionOf]]'s
     * depth curve.
     *
-    * Shape: the [[sessionizeOf]] window pass; per-session first-click
+    * Shape: the [[sessionTagged]] window pass; per-session first-click
     * min and last-purchase max fold in ONE aggregate (exists
     * purchase-after-first-click ⟺ max purchase time > first click —
     * no second pass); a 1-row fold after. */
   def sessionFunnelOf(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val ev = events.select(col("event_id"), col("user_id"),
-      col("event_type"), unix_micros(col("ts")).as("us"))
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val sessions = ev
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx", sum("is_new").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sessions = sessionTagged(events.select(col("event_id"),
+      col("user_id"), col("event_type"), unix_micros(col("ts")).as("us")),
+      gapMinutes)
       .groupBy("user_id", "session_idx")
       .agg(min(when(col("event_type") === "click", col("us"))).as("fc"),
         max(when(col("event_type") === "purchase", col("us"))).as("lp"))
@@ -2064,7 +2010,7 @@ object EventAnalytics {
         (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
           .as("weekday"),
         hour(col("ts")).as("hour_of_day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("vc"))
+        Behavior.cents(col("value")).as("vc"))
       .groupBy("weekday", "hour_of_day")
       .agg(count(lit(1)).as("n_events"), sum("vc").as("cents"))
       .localCheckpoint(false) // grid rows + the 1-row total
@@ -2101,9 +2047,8 @@ object EventAnalytics {
     * daily frame — nothing fact-scale past the first shuffle. */
   def durbinWatsonOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day").agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .localCheckpoint(false) // feeds the weekday means AND the residuals
@@ -2159,9 +2104,8 @@ object EventAnalytics {
     * back, one bounded moment fold. */
   def breuschPaganOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day").agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .localCheckpoint(false) // feeds the weekday means AND the residuals
@@ -2221,9 +2165,7 @@ object EventAnalytics {
   def ccfLeadlagOf(events: DataFrame, maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1 && maxLag <= 14, s"maxLag in [1,14], got $maxLag")
     val dec = "decimal(38,0)"
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("x"))
     // NO checkpoint despite the multi-reference ([[acfDailyOf]]'s
     // shape): daily ends at an exchange (ReuseExchange dedupes it at
     // runtime) and dense's grid join is calendar-bounded arithmetic —

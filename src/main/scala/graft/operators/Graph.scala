@@ -60,8 +60,7 @@ object Graph {
     val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     events
       .select(col("user_id"),
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        Behavior.itemKey.as("item"),
         unix_micros(col("ts")).as("us"), col("event_id"))
       .withColumn("src", lag("item", 1).over(byUser))
       .filter(col("src").isNotNull)

@@ -33,7 +33,7 @@ object Report {
       date_format(col("ts"), "yyyy-MM-dd").as("date"),
       col("event_type"),
       col("user_id"),
-      coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L)).as("k"),
+      Behavior.itemKey.as("k"),
       col("value")
     )
 

@@ -22,16 +22,6 @@ object Robust {
 
   private def round4(c: Column): Column = TextF.round4HalfUp(c)
 
-  /** The daily micro-revenue series per event type: Σ of each event's
-    * value on the micro grid (`Behavior.micro`), per (event_type, day),
-    * published as column `as`. One map-combinable aggregate; the frame
-    * is bounded by types × calendar days. */
-  private[operators] def dailyRevenue(events: DataFrame, as: String): DataFrame =
-    events
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        Behavior.micro(col("value")).as("qv"))
-      .groupBy("event_type", "day").agg(sum("qv").as(as))
-
   /** Every ordered pair of days (day < bday) of one event type's daily
     * series `v`, restricted to days sharing each `stratum` column; the
     * later day's columns carry a `b` prefix (bt, bday, bv, b‹stratum›).
@@ -119,7 +109,7 @@ object Robust {
       .agg(count(lit(1)).as("n"),
         sum(when(col("o_totalprice") < col("lo"), 1L).otherwise(0L)).as("n_clipped_lo"),
         sum(when(col("o_totalprice") > col("hi"), 1L).otherwise(0L)).as("n_clipped_hi"),
-        sum(floor(col("clipped") * 100 + 0.5).cast("long")).as("qsum"))
+        sum(Behavior.cents(col("clipped"))).as("qsum"))
       .select(col("o_orderpriority"), col("lo"), col("hi"), col("n"),
         col("n_clipped_lo"), col("n_clipped_hi"),
         round4(col("qsum").cast("double") / col("n").cast("double") / 100.0)
@@ -163,7 +153,8 @@ object Robust {
     */
   def rollingMedianOf(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val daily = dailyRevenue(events, "qrev")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       .withColumn("dayi", datediff(col("day"), lit("1970-01-01").cast("date")))
     val w = Window.partitionBy("event_type").orderBy(col("dayi"))
       .rangeBetween(-(windowDays - 1).toLong, Window.currentRow)
@@ -285,7 +276,8 @@ object Robust {
     * ≤ ~6.7M pairs per group), never by row count; the fact scan
     * collapses to (group, day) first, map-side combinable. */
   def theilSenTrendOf(events: DataFrame): DataFrame = {
-    val daily = dailyRevenue(events, "v")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("v"))
       .localCheckpoint(false) // both self-join sides (keyed differently)
     seriesPairs(daily)
       .select(col("event_type"),
@@ -318,11 +310,12 @@ object Robust {
     * row entirely (pinned by RobustSpec).
     *
     * Shape: the [[theilSenTrendOf]] (type, day) aggregate + its
-    * calendar-bounded pair self-join (the shared `dailyRevenue` and
-    * `seriesPairs`); ties come off a (type, value) fold of the SAME
-    * daily frame. */
+    * calendar-bounded pair self-join (the micro-grid `Behavior.daily`
+    * series and `seriesPairs`); ties come off a (type, value) fold of
+    * the SAME daily frame. */
   def mannKendallOf(events: DataFrame): DataFrame = {
-    val daily = dailyRevenue(events, "v")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("v"))
       .localCheckpoint(false) // pair join (both sides), T count, tie fold
     val sAgg = pairSigns(seriesPairs(daily))
     val tAgg = daily.groupBy("event_type").agg(count(lit(1)).as("t_days"))
@@ -365,7 +358,8 @@ object Robust {
     * weekday) — ≤ 1/7 of plain MK's pair mass — everything
     * calendar-bounded. */
   def seasonalMkOf(events: DataFrame): DataFrame = {
-    val daily = dailyRevenue(events, "v")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("v"))
       .select(col("event_type"), col("day"), col("v"),
         pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(7))
           .as("dow"))
@@ -829,7 +823,8 @@ object Robust {
     * Shape: one (type, day) fact aggregate; median, signs, the lag
     * pass and the fold all ride the bounded daily frame. */
   def runsTestOf(events: DataFrame): DataFrame = {
-    val daily = dailyRevenue(events, "v")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("v"))
       .localCheckpoint(false) // median pass + sign pass both read it
     val cumW = Window.partitionBy("event_type").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1288,9 +1283,7 @@ object Robust {
     * calendar-bounded (type, day) frame, one bounded fold. */
   def overdispersionCheckOf(events: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+    val daily = Behavior.daily(events)(count(lit(1)).as("c"))
     val agg = daily.groupBy("event_type")
       .agg(count(lit(1)).as("t_days"),
         sum(col("c").cast(dec)).as("s1"),
@@ -1407,7 +1400,7 @@ object Robust {
     * value grid. */
   def medianCiOf(events: DataFrame): DataFrame = {
     val g = events.select(col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("c"))
+        Behavior.cents(col("value")).as("c"))
       .groupBy("event_type", "c").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(false) // grid feeds the cumsum and the totals
     val byType = Window.partitionBy("event_type").orderBy("c")
@@ -1453,10 +1446,8 @@ object Robust {
     * and its rank window ride the bounded daily frame (≤ day-span²/2
     * pairs per type — the theilsen_trend pair discipline). */
   def hodgesLehmannOf(events: DataFrame): DataFrame = {
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day")
-      .agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("i", row_number().over(
         Window.partitionBy("event_type").orderBy("day")).cast("long"))
       .localCheckpoint(false) // both Walsh-join sides
@@ -1497,9 +1488,8 @@ object Robust {
   def revenueVarOf(events: DataFrame, pct: Int = 5): DataFrame = {
     require(pct >= 1 && pct <= 50, s"pct in [1,50], got $pct")
     val dec = "decimal(38,0)"
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      .groupBy("event_type", "day").agg(sum("vc").as("v"))
+    val daily = Behavior.daily(events,
+      Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("v"), col("day"))))
       .localCheckpoint(false) // rank probe + tail fold share it
@@ -1590,7 +1580,7 @@ object Robust {
     events
       .filter(col("event_type").isin(typeA, typeB))
       .select(to_date(col("ts")).as("day"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        Behavior.cents(col("value")).as("vc"))
       .groupBy("day")
       .agg(sum(when(col("event_type") === typeA, col("vc"))
         .otherwise(0L)).as("ra"),
@@ -1764,7 +1754,7 @@ object Robust {
   def moodMedianOf(events: DataFrame): DataFrame = {
     val grid = events
       .select(col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("vc"),
+        Behavior.cents(col("value")).as("vc"),
         Behavior.arm3(col("user_id")).as("arm"))
       .groupBy("event_type", "vc", "arm")
       .agg(count(lit(1)).as("c"))
@@ -1837,7 +1827,8 @@ object Robust {
     * scans twice), one bounded per-type fold. */
   def coxStuartOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type").orderBy("day")
-    val daily = dailyRevenue(events, "qrev")
+    val daily = Behavior.daily(events,
+      Behavior.micro(col("value")).as("qv"))(sum("qv").as("qrev"))
       .withColumn("rn", row_number().over(byType))
       .withColumn("nn", count(lit(1)).over(Window.partitionBy("event_type")))
       // c = ⌈n/2⌉ = (n+1) div 2: first half rn ≤ n div 2 (odd middle

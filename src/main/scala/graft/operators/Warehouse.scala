@@ -616,7 +616,7 @@ object Warehouse {
         (datediff(to_date(col("ts")), col("d0")) >= splitDays).as("after"),
         Behavior.micro(col("value")).as("qv"),
         col("user_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"),
+        Behavior.itemOrNull.as("item"),
         col("event_type"))
     // ONE aggregate per period computes every column's stats in a
     // single fact pass (the four countDistincts plan as one Expand —

@@ -75,8 +75,7 @@ object StreamingCroston {
 
     events.filter(col("event_type") === "purchase")
       .select(
-        coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L))
-          .as("item"),
+        graft.operators.Behavior.itemKey.as("item"),
         col("ts"))
       .as[Ev]
       .withWatermark("ts", "1 day")

@@ -57,7 +57,7 @@ object StreamingTost {
     events
       .select(col("event_type"), col("ts"), col("user_id"),
         graft.operators.Behavior.arm2(col("user_id")).cast("int").as("arm"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("vc"))
+        graft.operators.Behavior.cents(col("value")).as("vc"))
       .as[Ev]
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[St, Gauge](

@@ -45,6 +45,29 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkFixture {
     assert(out.toSeq == Seq((1L, 2L), (2L, 2L)))
   }
 
+  test("session consumers agree on the session count at the gap boundary and on tied ts") {
+    // The boundary frame above, plus a user with two events at the same
+    // ts: the (us, event_id) order keeps them in one session.
+    val ev = Seq(
+      (1L, 7L, "2026-01-01 00:00:00", "view"),
+      (2L, 7L, "2026-01-01 00:30:00", "click"),
+      (3L, 7L, "2026-01-01 01:00:01", "view"),
+      (4L, 7L, "2026-01-01 01:10:00", "purchase"),
+      (5L, 8L, "2026-01-02 09:00:00", "click"),
+      (6L, 8L, "2026-01-02 09:00:00", "purchase"))
+      .toDF("event_id", "user_id", "s", "event_type")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("s")).as("ts"), lit("{\"k\":1}").as("props"))
+    val n = EventAnalytics.sessionizeOf(ev).count()
+    assert(n == 3L)
+    val funnel = EventAnalytics.sessionFunnelOf(ev).collect().head
+    assert(funnel.getAs[Long]("n_sessions") == n)
+    def total(df: DataFrame): Long =
+      df.agg(sum("n_sessions")).collect().head.getLong(0)
+    assert(total(EventAnalytics.sessionDepthConversionOf(ev)) == n)
+    assert(total(EventAnalytics.entryConversionOf(ev)) == n)
+  }
+
   test("sessionize: a single-event user yields one session of duration 0") {
     val ev = eventsDf((1L, 9L, "2026-03-05 12:00:00"))
     val out = EventAnalytics.sessionizeOf(ev).collect()

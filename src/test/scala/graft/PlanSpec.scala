@@ -1549,7 +1549,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("round-13 tranches: stat/forecast/TPC-H/behavior/graph plans bounded as designed") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
     def bnlj(p: SparkPlan) =
       p.collect { case j: BroadcastNestedLoopJoinExec => j }
@@ -1599,13 +1602,32 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       .map(_.metadata("PushedFilters")).mkString
     assert(bbrPushed.contains("p_brand"),
       s"brand_basket_revenue: the disjunction prunes the part scan: $bbrPushed")
-    // Behavior tranche: session windows are user-partitioned; the L28
+    // Behavior tranche: every consumer of the one gap-session tag keeps
+    // user-partitioned windows over exactly ONE user_id hash exchange
+    // (exchanges exist only after EnsureRequirements: AQE off); the L28
     // curve and the payment audit stay equijoin/1-row-broadcast.
-    val sdc = plan(q("session_depth_conversion"))
-    noCartesian("session_depth_conversion", sdc)
-    assert(sdc.collect { case w: WindowExec => w }
-      .forall(_.partitionSpec.nonEmpty),
-      s"session_depth_conversion: user-partitioned windows:\n$sdc")
+    def exchangesBelowWindows(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      val k = "spark.sql.adaptive.enabled"
+      val prev = spark.conf.get(k)
+      spark.conf.set(k, "false")
+      try df.queryExecution.executedPlan.collect { case w: WindowExec => w }
+        .flatMap(_.collect { case e: ShuffleExchangeExec => e }).distinct
+      finally spark.conf.set(k, prev)
+    }
+    Seq("sessionize", "top_paths", "entry_conversion",
+      "session_depth_conversion", "session_funnel").foreach { n =>
+      val p = plan(q(n))
+      noCartesian(n, p)
+      assert(p.collect { case w: WindowExec => w }
+        .forall(_.partitionSpec.nonEmpty), s"$n: user-partitioned windows:\n$p")
+      val keys = exchangesBelowWindows(q(n)).map(_.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect {
+          case a: Attribute => a.name }
+        case other => Seq(other.toString)
+      })
+      assert(keys == Seq(Seq("user_id")),
+        s"$n: one user_id hash exchange below the windows, got $keys")
+    }
     val puc = plan(q("power_user_curve"))
     noCartesian("power_user_curve", puc)
     assert(bnlj(puc).length <= 2, s"power_user_curve: 1-row bounds only:\n$puc")
