@@ -623,11 +623,14 @@ object Behavior {
   private[graft] def cents(v: Column): Column =
     floor(v * 100 + lit(0.5)).cast("long")
 
-  /** The event's item id: `props.$.k` as a long, NULL when absent. */
+  /** The event's item id: `props.$.k` as a long, NULL when absent or
+    * not an integer. `try_cast`, because outside input can carry any
+    * JSON there and an ANSI cast would fail the whole query on one
+    * `{"k":"abc"}` (the oracles read it with TRY_CAST). */
   private[graft] def itemOrNull: Column =
-    get_json_object(col("props"), "$.k").cast("long")
+    get_json_object(col("props"), "$.k").try_cast("long")
 
-  /** The event's item id, 0 when absent. */
+  /** The event's item id, 0 when absent or not an integer. */
   private[graft] def itemKey: Column = coalesce(itemOrNull, lit(0L))
 
   /** The per-(event_type, day) series: each event's `measure` columns

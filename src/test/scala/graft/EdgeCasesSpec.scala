@@ -174,6 +174,27 @@ class EdgeCasesSpec extends AnyFunSuite with SparkFixture {
     assert(graft.operators.Graph.lpaCommunitiesOf(ev).count() == 0L)
   }
 
+  test("item key: a non-integer, absent or NULL props.k reads as item 0, never an exception") {
+    val ev = Seq(
+      (1L, 1L, "view", "2024-01-01 10:00:00", Some("""{"k":3}""")),
+      (2L, 1L, "click", "2024-01-01 10:01:00", Some("""{"k":"abc"}""")),
+      (3L, 1L, "view", "2024-01-01 10:02:00", Some("""{"k":3}""")),
+      (4L, 1L, "view", "2024-01-01 10:03:00", Some("{}")),
+      (5L, 2L, "view", "2024-01-01 11:00:00", Some("""{"k":7}""")),
+      (6L, 2L, "view", "2024-01-01 11:01:00", Option.empty[String]))
+      .toDF("event_id", "user_id", "event_type", "t", "props")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("props"), lit(1.0).as("value"))
+    // user 1 walks 3 → 0 → 3 → 0 and user 2 walks 7 → 0: the distinct
+    // edges are (3,0), (0,3) and (7,0), of which two are reciprocal.
+    val r = graft.operators.Graph.reciprocityOf(ev).collect().head
+    assert((r.getLong(0), r.getLong(1)) == ((3L, 2L)))
+    val ctr = graft.operators.CtrAlerts.ctrShrunkOf(ev).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(ctr == Map(0L -> ((1L, 2L)), 3L -> ((0L, 2L)), 7L -> ((0L, 1L))),
+      s"(clicks, impressions) per item: $ctr")
+  }
+
   test("hybrid search: a missing query vector leaves the sparse leg standing alone") {
     val docs = Seq((10L, "spark merge"), (11L, "window")).toDF("doc_id", "text")
     val embs = Seq((5L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
