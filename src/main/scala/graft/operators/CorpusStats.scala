@@ -1028,21 +1028,18 @@ object CorpusStats {
     * half-up 4 dp.
     *
     * Shape: DISTINCT (token-hash, source) partial-aggregate first,
-    * per-source sizes from that bounded frame, per-token self-join
-    * bounded by sources-per-token, |sources|²-bounded output. */
+    * per-source sizes from that bounded frame, shared tokens from
+    * [[Dedup.sourcePairs]] (dup_matrix's source-pair overlap, no
+    * token-keyed self-join), |sources|²-bounded output. */
   def vocabOverlapOf(docs: DataFrame): DataFrame = {
     val vs = docs
       .select(col("source"),
         explode(TextF.tokens(col("text"))).as("token"))
-      .select(xxhash64(col("token")).as("h"), col("source"))
+      .select(xxhash64(col("token")).as("g"), col("source"))
       .distinct()
-      .localCheckpoint(false) // sizes + both self-join sides
+      .localCheckpoint(false) // sizes + the source-pair fold
     val sizes = vs.groupBy("source").agg(count(lit(1)).as("n"))
-    vs.select(col("h"), col("source").as("source_a"))
-      .join(vs.select(col("h"), col("source").as("source_b")), Seq("h"))
-      .filter(col("source_a") < col("source_b"))
-      .groupBy("source_a", "source_b")
-      .agg(count(lit(1)).as("n_shared"))
+    Dedup.sourcePairs(vs, "n_shared")
       .join(sizes.select(col("source").as("source_a"), col("n").as("n_a")),
         "source_a")
       .join(sizes.select(col("source").as("source_b"), col("n").as("n_b")),
@@ -1700,8 +1697,8 @@ object CorpusStats {
     *
     * Shape: one token-explode count is the fact-sized shuffle; the
     * pair cross is a token-keyed equijoin of the per-source vocab
-    * frame with itself (vocab-sized, never doc-sized — the
-    * `vocab_overlap` shape) with bounded per-source totals broadcast
+    * frame with itself (vocab-sized, never doc-sized: each pair needs
+    * both sides' counts) with bounded per-source totals broadcast
     * back; output is |sources|²/2 rows. */
   def hellingerMatrixOf(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"

@@ -479,8 +479,8 @@ object Dedup {
     * hold — a gram repeated inside one source counts once. One (g →
     * sorted source set) aggregate, then a map-side ordered-pair explode
     * whose mass is ≤ C(|sources|,2) per gram — never a gram-keyed
-    * self-join. Shared by [[dupMatrixOf]] and
-    * [[Corpus.sourceOverlapMatrixOf]]. */
+    * self-join. Shared by [[dupMatrixOf]],
+    * [[Corpus.sourceOverlapMatrixOf]] and [[CorpusStats.vocabOverlapOf]]. */
   private[operators] def sourcePairs(gs: DataFrame, shared: String): DataFrame =
     gs.groupBy("g").agg(sort_array(collect_set(col("source"))).as("ss"))
       .filter(size(col("ss")) >= 2)

@@ -566,6 +566,20 @@ class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
     assert(r.getDouble(5) == 0.5, "J = 2 / (3 + 3 - 2)")
   }
 
+  test("vocab overlap: three sources report each sharing pair once; a disjoint source none") {
+    val docs = Seq(
+      (1L, "A", "a b c"),
+      (2L, "B", "b c d"),
+      (3L, "C", "c d e"),
+      (4L, "C", "c"),
+      (5L, "D", "z"))
+      .toDF("doc_id", "source", "text")
+    val out = CorpusStats.vocabOverlapOf(docs).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(4), r.getDouble(5))))
+    assert(out.toSeq == Seq(
+      ("A", "B") -> ((2L, 0.5)), ("A", "C") -> ((1L, 0.2)), ("B", "C") -> ((2L, 0.5))))
+  }
+
   test("auc matches the pairwise definition on a mixed case") {
     // Scores by construction: longer text → higher score. One inversion.
     val docs = cardDocs(
