@@ -1282,9 +1282,9 @@ object EventAnalytics {
     * (contain a purchase) — the "which entry earns the session" read
     * product teams pair with [[Behavior.funnelStepsOf]]'s global
     * funnel. Session assignment is [[sessionTagged]], the tag
-    * [[sessionizeOf]] folds, kept at event grain; the entry event is the lexicographic struct MIN over
-    * (us, event_id) — map-combinable, no second window; conversion in
-    * exact ppm.
+    * [[sessionizeOf]] folds, kept at event grain; the entry event is
+    * the lexicographic struct MIN over (us, event_id) — map-combinable,
+    * no second window; conversion in exact ppm.
     *
     * Shape: one user-keyed sort window (sessionize's shuffle), one
     * (user, session) aggregate, one bounded item rollup. */
