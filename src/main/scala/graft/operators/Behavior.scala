@@ -274,7 +274,6 @@ object Behavior {
   def markovAttributionOf(events: DataFrame,
                           iterations: Int = 12): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val dec = "decimal(38,0)"
     val byU = Window.partitionBy("user_id")
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val kept = events
@@ -328,8 +327,8 @@ object Behavior {
         .join(p.select(col("removed"), col("state").as("to"), col("pq")),
           Seq("removed", "to"))
         .groupBy("removed", "from")
-        .agg(expr(s"CAST(SUM(CAST(n AS $dec) * pq)" +
-          s" div MAX(CAST(n_from AS $dec)) AS BIGINT)").as("pq"))
+        .agg(expr(s"CAST(SUM(CAST(n AS $Dec) * pq)" +
+          s" div MAX(CAST(n_from AS $Dec)) AS BIGINT)").as("pq"))
         .select(col("removed"), col("from").as("state"), col("pq"))
         .union(absorbing)
         .localCheckpoint(false)
@@ -623,6 +622,17 @@ object Behavior {
   private[graft] def cents(v: Column): Column =
     floor(v * 100 + lit(0.5)).cast("long")
 
+  /** A value rounded down (floor, not half-up) onto the micro grid, as
+    * a long — the grid of [[Report.earningsMicros]] and the TPC-H
+    * moment reads, whose oracles floor the same way. */
+  private[graft] def microDown(v: Column): Column =
+    floor(v * 1e6).cast("long")
+
+  /** A value rounded down (floor, not half-up) onto the cent grid, as
+    * a long. */
+  private[graft] def centsDown(v: Column): Column =
+    floor(v * 100).cast("long")
+
   /** The event's item id: `props.$.k` as a long, NULL when absent or
     * not an integer. `try_cast`, because outside input can carry any
     * JSON there and an ANSI cast would fail the whole query on one
@@ -656,7 +666,9 @@ object Behavior {
     events.select(col("event_type"), micro(col("value")).as("vq"),
       armOf(col("user_id"), arms).as("arm"))
 
-  private val Dec = "decimal(38,0)"
+  /** The exact-sum type: sums that can cross int64 widen to it (DuckDB
+    * widens the same sums to HUGEINT). */
+  private[graft] val Dec = "decimal(38,0)"
 
   /** n, Σv and Σv² of column `v` per `keys` group. The sums ride
     * decimal(38,0): v² on the micro grid crosses int64 the way
@@ -1084,9 +1096,9 @@ object Behavior {
         // decimal(38,0), not int64: decile micro-revenue × 1e6
         // overflows 2⁶³ at the ×100 rehearsal scale (caught there as
         // a SparkArithmeticException; DuckDB side rides HUGEINT)
-        expr("CAST((CAST(rev_q AS DECIMAL(38,0)) * 1000000) div total AS BIGINT)")
+        expr(s"CAST((CAST(rev_q AS $Dec) * 1000000) div total AS BIGINT)")
           .as("share_ppm"),
-        expr("CAST((CAST(cum_q AS DECIMAL(38,0)) * 1000000) div total AS BIGINT)")
+        expr(s"CAST((CAST(cum_q AS $Dec) * 1000000) div total AS BIGINT)")
           .as("cum_share_ppm"))
       .orderBy("decile")
   }
@@ -1317,29 +1329,29 @@ object Behavior {
       // narrows to BIGINT and the next ×n would overflow at extreme
       // stratum sizes; the staged form stays exact to ~10⁹ users/stratum
       .withColumn("e_nano",
-        expr("(CAST(a + b AS DECIMAL(38,0)) * (a + c) * 1000000000) div t"))
+        expr(s"(CAST(a + b AS $Dec) * (a + c) * 1000000000) div t"))
       .withColumn("v1",
-        expr("(CAST(e_nano AS DECIMAL(38,0)) * (c + d)) div t"))
+        expr(s"(CAST(e_nano AS $Dec) * (c + d)) div t"))
       .withColumn("v_nano",
-        expr("(CAST(v1 AS DECIMAL(38,0)) * (b + d)) div (t - 1)"))
+        expr(s"(CAST(v1 AS $Dec) * (b + d)) div (t - 1)"))
       .withColumn("ad_nano",
-        expr("(CAST(a AS DECIMAL(38,0)) * d * 1000000000) div t"))
+        expr(s"(CAST(a AS $Dec) * d * 1000000000) div t"))
       .withColumn("bc_nano",
-        expr("(CAST(b AS DECIMAL(38,0)) * c * 1000000000) div t"))
+        expr(s"(CAST(b AS $Dec) * c * 1000000000) div t"))
     val r6 = graft.functions.TextF.round6HalfUp _
     terms.agg(count(lit(1)).as("n_strata"), sum("a").as("sum_a"),
-        sum(col("e_nano").cast("decimal(38,0)")).as("es"),
-        sum(col("v_nano").cast("decimal(38,0)")).as("vs"),
-        sum(col("ad_nano").cast("decimal(38,0)")).as("ads"),
-        sum(col("bc_nano").cast("decimal(38,0)")).as("bcs"))
+        sum(col("e_nano").cast(Dec)).as("es"),
+        sum(col("v_nano").cast(Dec)).as("vs"),
+        sum(col("ad_nano").cast(Dec)).as("ads"),
+        sum(col("bc_nano").cast(Dec)).as("bcs"))
       .select(col("n_strata"), col("sum_a"),
         col("es").cast("long").as("e_nano"),
         col("vs").cast("long").as("v_nano"),
         r6(col("ads").cast("double") /
           nullif(col("bcs").cast("double"), lit(0.0))).as("or_mh"),
-        r6(expr("""CAST(greatest(abs(CAST(sum_a AS DECIMAL(38,0))
+        r6(expr(s"""CAST(greatest(abs(CAST(sum_a AS $Dec)
                |  * 1000000000 - es) - 500000000, 0) AS DOUBLE)""".stripMargin)
-          * expr("""CAST(greatest(abs(CAST(sum_a AS DECIMAL(38,0))
+          * expr(s"""CAST(greatest(abs(CAST(sum_a AS $Dec)
                |  * 1000000000 - es) - 500000000, 0) AS DOUBLE)""".stripMargin)
           / nullif(col("vs").cast("double") * lit(1e9), lit(0.0)))
           .as("chi2_mh"))
@@ -1525,7 +1537,6 @@ object Behavior {
     * Shape: ONE user-dedup fact aggregate (user, arm, converted) →
     * a 3-row frame; everything after is constant-size arithmetic. */
   def cochranArmitageOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val perArm = events.select(col("user_id"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("p"))
       .groupBy("user_id").agg(max("p").as("conv"))
@@ -1539,13 +1550,13 @@ object Behavior {
     wide.select(col("n0"), col("n1"), col("n2"),
         col("r0"), col("r1"), col("r2"),
         graft.functions.TextF.round6HalfUp(expr(
-          s"""CAST(CAST(r1 AS $dec) * nn - CAST(n1 AS $dec) * rr
-             |  + 2 * (CAST(r2 AS $dec) * nn - CAST(n2 AS $dec) * rr)
+          s"""CAST(CAST(r1 AS $Dec) * nn - CAST(n1 AS $Dec) * rr
+             |  + 2 * (CAST(r2 AS $Dec) * nn - CAST(n2 AS $Dec) * rr)
              |  AS DOUBLE)
              |/ NULLIF(sqrt(CAST(
-             |    CAST(rr AS $dec) * (nn - rr)
-             |      * (CAST(nn AS $dec) * (n1 + 4 * n2)
-             |         - CAST(n1 + 2 * n2 AS $dec) * (n1 + 2 * n2))
+             |    CAST(rr AS $Dec) * (nn - rr)
+             |      * (CAST(nn AS $Dec) * (n1 + 4 * n2)
+             |         - CAST(n1 + 2 * n2 AS $Dec) * (n1 + 2 * n2))
              |    AS DOUBLE) / CAST(nn AS DOUBLE)), 0.0)""".stripMargin))
           .as("z"))
       .withColumn("significant",
@@ -1862,7 +1873,6 @@ object Behavior {
   def stratifiedAteOf(events: DataFrame, splitDay: String,
                       strata: Int = 10): DataFrame = {
     require(strata >= 2, s"strata must be >= 2, got $strata")
-    val dec = "decimal(38,0)"
     val perUser = prePostUsers(events, splitDay)
       .select(col("user_id"), milliMean("pre_sum", "pre_n").as("score"),
         milliMean("post_sum", "post_n").as("y"), arm2(col("user_id")).as("arm"))
@@ -1875,10 +1885,10 @@ object Behavior {
       .agg(
         sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n_ctrl"),
         sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_treat"),
-        sum(when(col("arm") === 0L, col("y").cast(dec))
-          .otherwise(lit(0).cast(dec))).as("s_ctrl"),
-        sum(when(col("arm") === 1L, col("y").cast(dec))
-          .otherwise(lit(0).cast(dec))).as("s_treat"))
+        sum(when(col("arm") === 0L, col("y").cast(Dec))
+          .otherwise(lit(0).cast(Dec))).as("s_ctrl"),
+        sum(when(col("arm") === 1L, col("y").cast(Dec))
+          .otherwise(lit(0).cast(Dec))).as("s_treat"))
     val tot = cells.agg(
       sum(col("n_ctrl") + col("n_treat")).as("n_all"))
     def d(c: Column) = c.cast("double")
@@ -1891,8 +1901,8 @@ object Behavior {
         r4(d(col("s_ctrl")) / d(col("n_ctrl")) / lit(1000.0)).as("mean_ctrl"),
         r4(d(col("s_treat")) / d(col("n_treat")) / lit(1000.0)).as("mean_treat"),
         r4(diff).as("diff"),
-        expr(s"CAST((CAST(n_ctrl + n_treat AS $dec) * 1000000)" +
-          s" div CAST(n_all AS $dec) AS BIGINT)").as("weight_ppm"),
+        expr(s"CAST((CAST(n_ctrl + n_treat AS $Dec) * 1000000)" +
+          s" div CAST(n_all AS $Dec) AS BIGINT)").as("weight_ppm"),
         graft.functions.TextF.round6HalfUp(
           diff * (d(col("n_ctrl") + col("n_treat")) / d(col("n_all"))))
           .as("contrib"))
@@ -2274,20 +2284,20 @@ object Behavior {
       .withColumn("rmst_q", expr(
         s"""aggregate(arr2,
            |  named_struct('s', CAST(1.0 AS DOUBLE), 'tp', 0L,
-           |    'tot', CAST(0 AS DECIMAL(38,0))),
+           |    'tot', CAST(0 AS $Dec)),
            |  (acc, x) -> named_struct(
            |    's', acc.s * x.f,
            |    'tp', x.duration,
            |    'tot', acc.tot
            |      + CAST(CAST(floor(acc.s * 1e9 + 0.5) AS BIGINT)
-           |          AS DECIMAL(38,0))
+           |          AS $Dec)
            |      * CAST(least(x.duration, ${horizonDays}L)
-           |          - least(acc.tp, ${horizonDays}L) AS DECIMAL(38,0))),
+           |          - least(acc.tp, ${horizonDays}L) AS $Dec)),
            |  acc -> acc.tot
            |    + CAST(CAST(floor(acc.s * 1e9 + 0.5) AS BIGINT)
-           |        AS DECIMAL(38,0))
+           |        AS $Dec)
            |    * CAST(${horizonDays}L - least(acc.tp, ${horizonDays}L)
-           |        AS DECIMAL(38,0)))""".stripMargin))
+           |        AS $Dec))""".stripMargin))
       .select(col("arm"), col("n_users"),
         coalesce(size(col("arr")), lit(0)).cast("long").as("n_steps"),
         graft.functions.TextF.round6HalfUp(
@@ -2312,7 +2322,6 @@ object Behavior {
     * moment fold. */
   def ltvEarlySignalOf(events: DataFrame, earlyDays: Int = 7): DataFrame = {
     require(earlyDays > 0, s"earlyDays must be positive, got $earlyDays")
-    val dec = "decimal(38,0)"
     val e = events.select(col("user_id"), to_date(col("ts")).as("day"),
       micro(col("value")).as("vq"))
     val firstDay = e.groupBy("user_id").agg(min("day").as("first_day"))
@@ -2324,14 +2333,14 @@ object Behavior {
         sum(when(datediff(col("day"), col("first_day")) >= earlyDays,
           col("vq")).otherwise(0L)).as("y"))
     val m = per.agg(count(lit(1)).as("n"),
-      sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-      sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-      sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-      sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+      sum(col("x").cast(Dec)).as("sx"), sum(col("y").cast(Dec)).as("sy"),
+      sum(col("x").cast(Dec) * col("y").cast(Dec)).as("sxy"),
+      sum(col("x").cast(Dec) * col("x").cast(Dec)).as("sxx"),
+      sum(col("y").cast(Dec) * col("y").cast(Dec)).as("syy"))
     def d(c: Column) = c.cast("double")
-    val num = col("n").cast(dec) * col("sxy") - col("sx") * col("sy")
-    val dx = col("n").cast(dec) * col("sxx") - col("sx") * col("sx")
-    val dy = col("n").cast(dec) * col("syy") - col("sy") * col("sy")
+    val num = col("n").cast(Dec) * col("sxy") - col("sx") * col("sy")
+    val dx = col("n").cast(Dec) * col("sxx") - col("sx") * col("sx")
+    val dy = col("n").cast(Dec) * col("syy") - col("sy") * col("sy")
     m.select(col("n").as("n_users"),
       expr("CAST((sx * 1000000) div (sx + sy) AS BIGINT)")
         .as("early_share_ppm"),
@@ -2764,7 +2773,6 @@ object Behavior {
     * that bounded frame. Weekday is plain truncating % (the repo-wide
     * convention both engines share). */
   def simpsonReversalOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val cell = events
       .select(col("event_type"),
         (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
@@ -2772,13 +2780,13 @@ object Behavior {
         arm2(col("user_id")).as("arm"),
         micro(col("value")).as("vq"))
       .groupBy("event_type", "dow", "arm")
-      .agg(count(lit(1)).as("n"), sum(col("vq").cast(dec)).as("s"))
+      .agg(count(lit(1)).as("n"), sum(col("vq").cast(Dec)).as("s"))
     val Seq(a0, a1) = levels("arm", 2).map(_._2)
     val strata = cell.groupBy("event_type", "dow")
       .agg(coalesce(cellMax("n", a0), lit(0L)).as("n0"),
         coalesce(cellMax("n", a1), lit(0L)).as("n1"),
-        coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("s0"),
-        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("s1"))
+        coalesce(cellMax("s", a0), lit(0L).cast(Dec)).as("s0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(Dec)).as("s1"))
       .withColumn("cmp", col("n0") > 0 && col("n1") > 0)
       // integer-exact mean-difference sign: m1 > m0 ⇔ s1·n0 > s0·n1
       .withColumn("sgn", expr(
@@ -2839,7 +2847,6 @@ object Behavior {
   def jackknifeRatioSeOf(events: DataFrame, buckets: Int = 32): DataFrame = {
     require(buckets >= 2 && buckets <= 1024,
       s"buckets in [2,1024], got $buckets")
-    val dec = "decimal(38,0)"
     val per = events
       .select(col("event_type"), col("user_id"),
         (conv(substring(md5(concat(lit("jk:"),
@@ -2847,7 +2854,7 @@ object Behavior {
           % buckets).as("b"),
         micro(col("value")).as("vq"))
       .groupBy("event_type", "b")
-      .agg(countDistinct("user_id").as("u"), sum(col("vq").cast(dec)).as("s"))
+      .agg(countDistinct("user_id").as("u"), sum(col("vq").cast(Dec)).as("s"))
     // NO checkpoint although three consumers reference this frame:
     // it ends at an exchange, so AQE's ReuseExchange dedupes the
     // heavy aggregate at runtime (the pre-AQE plan's 3 scans are
@@ -2864,8 +2871,8 @@ object Behavior {
           / nullif(expr("CAST(uu - u AS DOUBLE)"), lit(0.0)) + lit(0.5))
           .cast("long").as("t"))
     val fold = reps.groupBy("event_type")
-      .agg(sum(col("t").cast(dec)).as("st"),
-        sum(expr(s"CAST(t AS $dec) * t")).as("stt"))
+      .agg(sum(col("t").cast(Dec)).as("st"),
+        sum(expr(s"CAST(t AS $Dec) * t")).as("stt"))
     tot.join(fold, "event_type")
       .select(col("event_type"), col("uu").as("n_users"),
         col("nb").as("n_buckets"),
@@ -2968,7 +2975,6 @@ object Behavior {
     * fact-wide checkpoint). */
   def triggerDilutionOf(events: DataFrame,
                         triggerType: String = "view"): DataFrame = {
-    val dec = "decimal(38,0)"
     val base = events.select(col("event_type"), col("user_id"),
       arm2(col("user_id")).as("arm"),
       micro(col("value")).as("vq"))
@@ -2982,16 +2988,16 @@ object Behavior {
       .agg(count(lit(1)).as("nt")), Nil, arms, "nt") // 1 row
     val Seq(a0, a1) = arms.map(_._2)
     val sums = base.groupBy("event_type", "arm")
-      .agg(sum(col("vq").cast(dec)).as("s"))
+      .agg(sum(col("vq").cast(Dec)).as("s"))
       .groupBy("event_type")
-      .agg(coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("s0"),
-        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("s1"))
+      .agg(coalesce(cellMax("s", a0), lit(0L).cast(Dec)).as("s0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(Dec)).as("s1"))
     val trigSums = base.join(trig, "user_id")
       .groupBy("event_type", "arm")
-      .agg(sum(col("vq").cast(dec)).as("s"))
+      .agg(sum(col("vq").cast(Dec)).as("s"))
       .groupBy("event_type")
-      .agg(coalesce(cellMax("s", a0), lit(0L).cast(dec)).as("st0"),
-        coalesce(cellMax("s", a1), lit(0L).cast(dec)).as("st1"))
+      .agg(coalesce(cellMax("s", a0), lit(0L).cast(Dec)).as("st0"),
+        coalesce(cellMax("s", a1), lit(0L).cast(Dec)).as("st1"))
     val r6 = graft.functions.TextF.round6HalfUp _
     sums.join(trigSums, Seq("event_type"), "left")
       .crossJoin(broadcast(popW)).crossJoin(broadcast(trigW))

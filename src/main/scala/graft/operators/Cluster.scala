@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorF
+import Behavior.Dec
 
 /** Embedding clustering — the semantic-grouping pass a training-data
   * pipeline runs for topic balancing, semantic dedup cells, and
@@ -648,7 +649,6 @@ object Cluster {
   def clusterStabilityAriOf(embeddings: DataFrame, k: Int = K,
                             iters: Int = Iterations): DataFrame = {
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0, got k=$k iters=$iters")
-    val dec = "decimal(38,0)"
     val vecs = vectors(embeddings)
       .localCheckpoint(false) // two assignment chains share it
     val a = assign(vecs, lloyd(vecs, col("vec_id") < k, iters))
@@ -658,27 +658,27 @@ object Cluster {
     val cont = a.join(b, Seq("vec_id"))
       .groupBy("ca", "cb").agg(count(lit(1)).as("nij")) // ≤ k² cells
       .localCheckpoint(false) // marginals + cells share it
-    val sij = cont.agg(sum(expr("((nij * (nij - 1)) div 2)").cast(dec))
-      .as("sij"), sum(col("nij").cast(dec)).as("n"),
+    val sij = cont.agg(sum(expr("((nij * (nij - 1)) div 2)").cast(Dec))
+      .as("sij"), sum(col("nij").cast(Dec)).as("n"),
       countDistinct("ca").as("ka"), countDistinct("cb").as("kb"))
     val sa = cont.groupBy("ca").agg(sum("nij").as("ai"))
-      .agg(sum(expr("((ai * (ai - 1)) div 2)").cast(dec)).as("sa"))
+      .agg(sum(expr("((ai * (ai - 1)) div 2)").cast(Dec)).as("sa"))
     val sb = cont.groupBy("cb").agg(sum("nij").as("bi"))
-      .agg(sum(expr("((bi * (bi - 1)) div 2)").cast(dec)).as("sb"))
+      .agg(sum(expr("((bi * (bi - 1)) div 2)").cast(Dec)).as("sb"))
     def d(c: Column) = c.cast("double")
     sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb)) // 1-row frames
-      .withColumn("t", expr("CAST((n * (n - 1)) div 2 AS DECIMAL(38,0))"))
+      .withColumn("t", expr(s"CAST((n * (n - 1)) div 2 AS $Dec)"))
       .select(col("n").cast("long").as("n_vectors"),
         col("ka"), col("kb"),
         // Rand index = 1 − (Σa + Σb − 2Σij)/T
         graft.functions.TextF.round6HalfUp(
-          lit(1.0) - d(col("sa") + col("sb") - lit(2).cast(dec) * col("sij"))
+          lit(1.0) - d(col("sa") + col("sb") - lit(2).cast(Dec) * col("sij"))
             / nullif(d(col("t")), lit(0.0))).as("rand_index"),
         graft.functions.TextF.round6HalfUp(
-          d(lit(2).cast(dec) * col("t") * col("sij")
-            - lit(2).cast(dec) * col("sa") * col("sb"))
+          d(lit(2).cast(Dec) * col("t") * col("sij")
+            - lit(2).cast(Dec) * col("sa") * col("sb"))
             / nullif(d(col("t") * (col("sa") + col("sb"))
-              - lit(2).cast(dec) * col("sa") * col("sb")), lit(0.0)))
+              - lit(2).cast(Dec) * col("sa") * col("sb")), lit(0.0)))
           .as("ari"))
   }
 
@@ -695,7 +695,6 @@ object Cluster {
     * bounded aggregate, a k-bounded ranker. */
   def clusterPurityOf(embeddings: DataFrame, k: Int = K,
                       iters: Int = Iterations): DataFrame = {
-    val dec = "decimal(38,0)"
     val cells = assignedOf(embeddings, k, iters)
       .select(col("vec_id"), col("cluster"))
       .join(embeddings.select(col("vec_id"),
@@ -706,14 +705,14 @@ object Cluster {
         col("c").as("n_majority"))
     cells.groupBy("cluster")
       .agg(sum("c").as("n"),
-        sum((col("c") * col("c")).cast(dec)).as("sq"),
+        sum((col("c") * col("c")).cast(Dec)).as("sq"),
         countDistinct("label").as("n_labels"))
       .join(major, Seq("cluster"))
       .select(col("cluster"), col("n"), col("n_labels"),
         col("majority_label"),
         expr("(n_majority * 1000000) div n").as("purity_ppm"),
-        expr("""CAST(((CAST(n AS DECIMAL(38,0)) * n - sq) * 1000000)
-                div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)""")
+        expr(s"""CAST(((CAST(n AS $Dec) * n - sq) * 1000000)
+                div (CAST(n AS $Dec) * n) AS BIGINT)""")
           .as("gini_ppm"))
       .orderBy("cluster")
   }

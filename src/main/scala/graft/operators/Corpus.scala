@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import Behavior.Dec
 
 /** Corpus-preparation operators a training-data pipeline runs beyond
   * dedup: PII redaction, benchmark decontamination, vocabulary stats,
@@ -790,7 +791,6 @@ object Corpus {
     * a 1-row global fold (global max via the bounded bucket frame,
     * not a second scan). */
   def paddingWasteOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val n = TextF.tokenCount(col("text")).cast("long")
     val buckets = docs
       .select(when(n > 0, length(bin(n))).otherwise(0).as("bucket"),
@@ -799,8 +799,8 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"), sum("t").as("total_tokens"),
         max("t").as("max_tokens"))
       .localCheckpoint(false) // per-bucket rows + the global fold
-    val wastePpm = expr(s"CAST((CAST(n_docs AS $dec) * max_tokens - total_tokens)" +
-      s" * 1000000 div NULLIF(CAST(n_docs AS $dec) * max_tokens, 0)" +
+    val wastePpm = expr(s"CAST((CAST(n_docs AS $Dec) * max_tokens - total_tokens)" +
+      s" * 1000000 div NULLIF(CAST(n_docs AS $Dec) * max_tokens, 0)" +
       s" AS BIGINT)").as("pad_waste_ppm")
     val perBucket = buckets.select(col("bucket").cast("long").as("bucket"),
       col("n_docs"), col("max_tokens"), col("total_tokens"), wastePpm)
@@ -1129,7 +1129,6 @@ object Corpus {
     * corpus: n²·1e6/3 ≈ 8·10¹⁸ at 5M docs); the ppm is one exact
     * integer division. */
   def epochShuffleAuditOf(docs: DataFrame, epochs: Int = 3): DataFrame = {
-    val dec = "decimal(38,0)"
     // referenced as BOTH pair sides — uncheckpointed, the whole
     // two-phase rank would run twice
     val pos = epochShuffleOf(docs, epochs).localCheckpoint(false)
@@ -1141,9 +1140,9 @@ object Corpus {
       .filter(col("epoch_a") < col("epoch_b"))
       .groupBy("epoch_a", "epoch_b")
       .agg(count(lit(1)).as("n_docs"),
-        sum(abs(col("pa") - col("pb")).cast(dec)).as("sd"))
+        sum(abs(col("pa") - col("pb")).cast(Dec)).as("sd"))
       .select(col("epoch_a"), col("epoch_b"), col("n_docs"),
-        expr("CAST((sd * 1000000) div (CAST(n_docs AS decimal(38,0)) * n_docs) AS BIGINT)")
+        expr(s"CAST((sd * 1000000) div (CAST(n_docs AS $Dec) * n_docs) AS BIGINT)")
           .as("mean_disp_ppm"))
       .orderBy("epoch_a", "epoch_b")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import Behavior.Dec
 
 /** Corpus-statistics operators a training-data pipeline runs when
   * weighing and filtering documents: TF-IDF term salience, Gopher-style
@@ -447,7 +448,6 @@ object CorpusStats {
                   k: Int = 20): DataFrame = {
     require(query.nonEmpty && fDocs > 0 && mTerms > 0 && k > 0,
       s"need nonempty query and positive fDocs/mTerms/k")
-    val dec = "decimal(38,0)"
     val stop = graft.operators.TextAnalysis.Stopwords
     val lens = docLengths(docs)
     val totals = lens.agg(count(lit(1)).as("n_docs"),
@@ -470,8 +470,8 @@ object CorpusStats {
     val expTerms = cand.join(dfc, "token")
       .crossJoin(broadcast(totals))
       .select(col("token"),
-        expr(s"""CAST(tfb AS $dec)
-                |  * ((CAST(n_docs AS $dec) * 1000000) div df)"""
+        expr(s"""CAST(tfb AS $Dec)
+                |  * ((CAST(n_docs AS $Dec) * 1000000) div df)"""
           .stripMargin).as("wq"))
       .orderBy(col("wq").desc, col("token")).limit(mTerms)
       .select(col("token"))
@@ -576,7 +576,6 @@ object CorpusStats {
     * by corpus size. Sources with zero positives drop (AP undefined);
     * zero negatives keeps AP = 1 (unlike ROC AUC, PR handles it). */
   def prAucOf(docs: DataFrame, posLang: String = "en"): DataFrame = {
-    val dec = "decimal(38,0)"
     val cum = Window.partitionBy("source").orderBy(col("score").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
@@ -588,8 +587,8 @@ object CorpusStats {
       .withColumn("cum_tp", sum("np").over(cum))
       .withColumn("cum_all", sum("nb").over(cum))
       .withColumn("tq", expr(
-        s"""CAST(np AS $dec) *
-           |  ((CAST(cum_tp AS $dec) * 1000000000) div CAST(cum_all AS $dec))
+        s"""CAST(np AS $Dec) *
+           |  ((CAST(cum_tp AS $Dec) * 1000000000) div CAST(cum_all AS $Dec))
            |""".stripMargin))
       .groupBy("source")
       .agg(sum("np").as("n_pos"), sum(col("nb") - col("np")).as("n_neg"),
@@ -622,7 +621,6 @@ object CorpusStats {
     * Shape: ONE document scan → per-source sums (vocabulary-bounded),
     * a 1-row global broadcast, map-side algebra after. */
   def sourceAblationOf(docs: DataFrame, posLang: String = "en"): DataFrame = {
-    val dec = "decimal(38,0)"
     val perSource = docs
       .select(col("source"),
         floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
@@ -630,10 +628,10 @@ object CorpusStats {
         TextF.tokenCount(col("text")).cast("long").as("tok"),
         when(col("lang") === posLang, 1L).otherwise(0L).as("en"))
       .groupBy("source")
-      .agg(count(lit(1)).cast(dec).as("n"),
-        sum(col("qq").cast(dec)).as("q"),
-        sum(col("tok").cast(dec)).as("t"),
-        sum(col("en").cast(dec)).as("e"))
+      .agg(count(lit(1)).cast(Dec).as("n"),
+        sum(col("qq").cast(Dec)).as("q"),
+        sum(col("tok").cast(Dec)).as("t"),
+        sum(col("en").cast(Dec)).as("e"))
     val global = perSource.agg(
       sum("n").as("gn"), sum("q").as("gq"),
       sum("t").as("gt"), sum("e").as("ge"))
@@ -643,15 +641,15 @@ object CorpusStats {
       .select(col("source"), col("n").cast("long").as("n_docs"),
         r4(d(col("gq")) / d(col("gn")) / lit(1e4)).as("mean_quality_all"),
         r4(d(col("gq") - col("q")) / d(nullif(col("gn") - col("n"),
-          lit(0).cast(dec))) / lit(1e4)).as("mean_quality_loo"),
+          lit(0).cast(Dec))) / lit(1e4)).as("mean_quality_loo"),
         TextF.round6HalfUp(
           d(col("gq") - col("q")) / d(nullif(col("gn") - col("n"),
-            lit(0).cast(dec))) / lit(1e4) -
+            lit(0).cast(Dec))) / lit(1e4) -
           d(col("gq")) / d(col("gn")) / lit(1e4)).as("quality_delta"),
         r4(d(col("gt") - col("t")) / d(nullif(col("gn") - col("n"),
-          lit(0).cast(dec)))).as("mean_tokens_loo"),
+          lit(0).cast(Dec)))).as("mean_tokens_loo"),
         expr(s"CAST(((ge - e) * 1000000) div nullif(gn - n," +
-          s" CAST(0 AS $dec)) AS BIGINT)").as("en_share_loo_ppm"))
+          s" CAST(0 AS $Dec)) AS BIGINT)").as("en_share_loo_ppm"))
       .orderBy("source")
   }
 
@@ -673,7 +671,6 @@ object CorpusStats {
     * scores; one (lang, score)-grid aggregate absorbs the doc frame;
     * cutpoints, assignment, and bucket stats all ride the grid. */
   def ccnetBucketsOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val scored = lmQualityOf(docs)
       .join(docs.select(col("doc_id"), col("lang"),
         TextF.tokenCount(col("text")).cast("long").as("tok")), "doc_id")
@@ -682,7 +679,7 @@ object CorpusStats {
         floor(col("score_ppm") * 1e4 + lit(0.5)).cast("long").as("sq"),
         col("tok"))
       .groupBy("lang", "sq")
-      .agg(count(lit(1)).as("c"), sum(col("tok").cast(dec)).as("tokc"))
+      .agg(count(lit(1)).as("c"), sum(col("tok").cast(Dec)).as("tokc"))
       .localCheckpoint(false) // bounded by the 4-dp score vocabulary
     val byLang = Window.partitionBy("lang")
     val cum = byLang.orderBy("sq")
@@ -703,8 +700,8 @@ object CorpusStats {
           .otherwise("head"))
       .groupBy("lang", "bucket")
       .agg(sum("c").as("n_docs"),
-        sum("tokc").cast(dec).as("tokens"),
-        sum(expr(s"CAST(sq AS $dec) * c")).as("sqs"))
+        sum("tokc").cast(Dec).as("tokens"),
+        sum(expr(s"CAST(sq AS $Dec) * c")).as("sqs"))
       .select(col("lang"), col("bucket"), col("n_docs"),
         col("tokens").cast("long").as("tokens"),
         (floor(col("sqs").cast("double") / col("n_docs").cast("double")
@@ -827,7 +824,6 @@ object CorpusStats {
   def brierDecompositionOf(docs: DataFrame, posLang: String = "en",
                            bins: Int = 20): DataFrame = {
     require(bins > 1, s"bins must be > 1, got $bins")
-    val dec = "decimal(38,0)"
     val score = TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
     val perDoc = docs
       .select(least(floor(score * bins), lit(bins - 1L)).cast("long").as("bin"),
@@ -836,10 +832,10 @@ object CorpusStats {
     val cells = perDoc.groupBy("bin")
       .agg(count(lit(1)).as("n"), sum("qq").as("qsum"),
         sum("pos").as("npos"),
-        sum(expr(s"CAST(qq - pos * 10000 AS $dec) * (qq - pos * 10000)"))
+        sum(expr(s"CAST(qq - pos * 10000 AS $Dec) * (qq - pos * 10000)"))
           .as("sqerr"))
     val totals = cells.agg(sum("n").as("nn"), sum("npos").as("tpos"),
-      sum(col("sqerr").cast(dec)).as("tsqerr")) // 1 row
+      sum(col("sqerr").cast(Dec)).as("tsqerr")) // 1 row
     def d(c: Column) = c.cast("double")
     // a = qsum − npos·10⁴ → bin reliability term a²/(n·10⁸);
     // b = npos·N − Npos·n → bin resolution term b²/(n·N²).
@@ -919,7 +915,7 @@ object CorpusStats {
       col("cr").as("cr1"))
     val intervals = lo.join(hi, col("j") <= col("k"))
       .select(col("j"), col("k"),
-        expr("""CAST((CAST(cr1 - cr0 AS DECIMAL(38,0)) * 1000000000000)
+        expr(s"""CAST((CAST(cr1 - cr0 AS $Dec) * 1000000000000)
                |  div (cn1 - cn0) AS BIGINT)""".stripMargin).as("re12"))
     val fitted = intervals
       .join(cells.select(col("bin").as("i")),
@@ -1283,18 +1279,17 @@ object CorpusStats {
     * Shape: one (source, token) map-combinable count aggregate —
     * the only fact-sized shuffle — then a bounded source fold. */
   def simpsonDiversityOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     Corpus.tokenTfOf(docs, "source", "c")
       .groupBy("source")
       .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
-        sum(expr(s"CAST(c AS $dec) * (c - 1)")).as("rep2"))
+        sum(expr(s"CAST(c AS $Dec) * (c - 1)")).as("rep2"))
       .select(col("source"), col("n_tokens"), col("n_types"),
         expr(s"""CAST((rep2 * 1000000) div
-                |  NULLIF(CAST(n_tokens AS $dec) * (n_tokens - 1), 0)
+                |  NULLIF(CAST(n_tokens AS $Dec) * (n_tokens - 1), 0)
                 |  AS BIGINT)""".stripMargin).as("simpson_ppm"),
         TextF.round4HalfUp(expr(
           s"""try_divide(
-             |  CAST(CAST(n_tokens AS $dec) * (n_tokens - 1) AS DOUBLE),
+             |  CAST(CAST(n_tokens AS $Dec) * (n_tokens - 1) AS DOUBLE),
              |  CAST(rep2 AS DOUBLE))""".stripMargin)).as("effective_types"))
       .orderBy("source")
   }
@@ -1346,7 +1341,7 @@ object CorpusStats {
       .select(explode(split(col("phrase"), " ")).as("tok"), col("plen"))
       .groupBy("tok")
       .agg(count(lit(1)).as("freq"),
-        sum(col("plen").cast("decimal(38,0)")).as("degree"))
+        sum(col("plen").cast(Dec)).as("degree"))
       .select(col("tok"),
         expr("CAST((degree * 1000000) div freq AS BIGINT)").as("wscore"))
     val support = phrases.groupBy("phrase")
@@ -1387,16 +1382,15 @@ object CorpusStats {
     * top-K. */
   def termBurstinessOf(docs: DataFrame, k: Int = 50): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val dec = "decimal(38,0)"
     val perDoc = Corpus.tokenTfOf(docs, tf = "c")
     val nDocs = docs.agg(count(lit(1)).as("n_docs")) // 1 row
     perDoc.groupBy("token")
       .agg(count(lit(1)).as("df"), sum("c").as("cf"),
-        sum(expr(s"CAST(c AS $dec) * c")).as("c2"))
+        sum(expr(s"CAST(c AS $Dec) * c")).as("c2"))
       .crossJoin(broadcast(nDocs))
       .select(col("token"), col("cf"), col("df"),
-        expr(s"""CAST(((n_docs * c2 - CAST(cf AS $dec) * cf) * 1000000)
-                |  div (CAST(n_docs AS $dec) * cf) AS BIGINT)"""
+        expr(s"""CAST(((n_docs * c2 - CAST(cf AS $Dec) * cf) * 1000000)
+                |  div (CAST(n_docs AS $Dec) * cf) AS BIGINT)"""
           .stripMargin).as("dispersion_ppm"))
       .orderBy(col("cf").desc, col("token"))
       .limit(k)
@@ -1428,7 +1422,6 @@ object CorpusStats {
     * then sources×k / pair-frame algebra. */
   def burrowsDeltaOf(docs: DataFrame, k: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val dec = "decimal(38,0)"
     val counts = Corpus.tokenTfOf(docs, "source", "c")
       .localCheckpoint(false) // totals, top-k and the dense join read it
     val totals = counts.groupBy("source").agg(sum("c").as("total"))
@@ -1439,13 +1432,13 @@ object CorpusStats {
     val dense = totals.crossJoin(broadcast(topk)) // bounded: S × k
       .join(counts, Seq("source", "token"), "left")
       .select(col("source"), col("token"),
-        expr(s"""CAST((CAST(COALESCE(c, 0) AS $dec) * 1000000000)
+        expr(s"""CAST((CAST(COALESCE(c, 0) AS $Dec) * 1000000000)
                 |  div total AS BIGINT)""".stripMargin).as("f"))
     val byWord = Window.partitionBy("token")
     val z = dense
       .withColumn("s_src", count(lit(1)).over(byWord))
-      .withColumn("sw", sum(col("f").cast(dec)).over(byWord))
-      .withColumn("sww", sum(expr(s"CAST(f AS $dec) * f")).over(byWord))
+      .withColumn("sw", sum(col("f").cast(Dec)).over(byWord))
+      .withColumn("sww", sum(expr(s"CAST(f AS $Dec) * f")).over(byWord))
       .filter(expr("s_src * sww - sw * sw > 0")) // zero-variance words drop
       .select(col("source"), col("token"),
         expr("""CAST(floor(
@@ -1701,7 +1694,6 @@ object CorpusStats {
     * both sides' counts) with bounded per-source totals broadcast
     * back; output is |sources|²/2 rows. */
   def hellingerMatrixOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val counts = Corpus.tokenTfOf(docs, "source", "c")
     val totals = counts.groupBy("source").agg(sum("c").as("n")) // bounded
     val pairs = counts
@@ -1717,7 +1709,7 @@ object CorpusStats {
     val termQ = floor(sqrt(d(col("ca")) * d(col("cb"))
       / (d(col("na")) * d(col("nb")))) * 1e9 + 0.5).cast("long")
     val sums = pairs.groupBy("source_a", "source_b")
-      .agg(count(lit(1)).as("n_shared"), sum(termQ.cast(dec)).as("bcq"))
+      .agg(count(lit(1)).as("n_shared"), sum(termQ.cast(Dec)).as("bcq"))
     // Dense pair scaffold off the bounded totals frame: a fully
     // DISJOINT pair must still publish (n_shared = 0, H = 1) — the
     // inner term join alone would silently drop exactly the most
@@ -1758,7 +1750,6 @@ object CorpusStats {
     * through one task (the contentRanked lesson); everything after is
     * a per-source aggregate. */
   def zipfSlopeOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val counts = Corpus.tokenTfOf(docs, "source", "f")
     val ranked = graft.Scale.groupedTwoPhaseRank(counts, "source",
       Seq(col("f").desc, col("token")), snapshotInput = false)
@@ -1769,11 +1760,11 @@ object CorpusStats {
     val agg = xy.groupBy("source").agg(
       count(lit(1)).as("n_types"),
       countDistinct(col("x")).as("n_buckets"),
-      sum(col("x").cast(dec)).as("sx"),
-      sum(col("y").cast(dec)).as("sy"),
-      sum((col("x") * col("y")).cast(dec)).as("sxy"),
-      sum((col("x") * col("x")).cast(dec)).as("sxx"))
-    val w = col("n_types").cast(dec)
+      sum(col("x").cast(Dec)).as("sx"),
+      sum(col("y").cast(Dec)).as("sy"),
+      sum((col("x") * col("y")).cast(Dec)).as("sxy"),
+      sum((col("x") * col("x")).cast(Dec)).as("sxx"))
+    val w = col("n_types").cast(Dec)
     val den = w * col("sxx") - col("sx") * col("sx")
     val slope = d(w * col("sxy") - col("sx") * col("sy")) /
       nullif(d(den), lit(0.0))
@@ -1913,7 +1904,6 @@ object CorpusStats {
     * map-combinable aggregate absorbs the fact mass; the grid windows
     * are value-vocabulary-bounded. */
   def aucDelongSeOf(docs: DataFrame, posLang: String = "en"): DataFrame = {
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy("source").orderBy("score")
     val below = w.rowsBetween(Window.unboundedPreceding, -1)
     val above = w.rowsBetween(1, Window.unboundedFollowing)
@@ -1930,16 +1920,16 @@ object CorpusStats {
         sum(col("np") * (lit(2L) * col("nn_below") + col("nn"))).as("u2"))
     val dev = grid.join(broadcast(tot), Seq("source")) // bounded: 1 row/source
       .select(col("source"),
-        (col("np").cast(dec) *
+        (col("np").cast(Dec) *
           (((lit(2L) * col("nn_below") + col("nn")) * col("tp") - col("u2"))
-            .cast(dec) *
+            .cast(Dec) *
            ((lit(2L) * col("nn_below") + col("nn")) * col("tp") - col("u2"))
-            .cast(dec))).as("d10"),
-        (col("nn").cast(dec) *
+            .cast(Dec))).as("d10"),
+        (col("nn").cast(Dec) *
           (((lit(2L) * col("np_above") + col("np")) * col("tn") - col("u2"))
-            .cast(dec) *
+            .cast(Dec) *
            ((lit(2L) * col("np_above") + col("np")) * col("tn") - col("u2"))
-            .cast(dec))).as("d01"))
+            .cast(Dec))).as("d01"))
       .groupBy("source")
       .agg(sum("d10").as("s10"), sum("d01").as("s01"))
     def d(c: Column) = c.cast("double")
@@ -1996,9 +1986,9 @@ object CorpusStats {
       .crossJoin(broadcast(tot)) // 1 row by construction
       .select(col("decile"), col("n_docs"), col("n_pos"),
         expr("(n_pos * 1000000) div n_docs").as("pos_rate_ppm"),
-        expr("""CASE WHEN np > 0 THEN
-                (CAST(n_pos AS DECIMAL(38,0)) * nn * 1000000)
-                  div (CAST(n_docs AS DECIMAL(38,0)) * np)
+        expr(s"""CASE WHEN np > 0 THEN
+                (CAST(n_pos AS $Dec) * nn * 1000000)
+                  div (CAST(n_docs AS $Dec) * np)
                 ELSE NULL END""").as("lift_ppm"),
         expr("""CASE WHEN np > 0
                 THEN (cum_pos * 1000000) div np ELSE NULL END""")
@@ -2036,7 +2026,6 @@ object CorpusStats {
     * division. All-unanimous docs (every R_i ∈ {0, k}) zero the
     * denominator → Q NULL via try_divide → not significant. */
   def cochranQGatesOf(docs: DataFrame, minQuality: Double = 0.9): DataFrame = {
-    val dec = "decimal(38,0)"
     val r6 = TextF.round6HalfUp _
     threeGates(minQuality)(docs)
       .select((when(col("g1"), 1L).otherwise(0L)
@@ -2053,10 +2042,10 @@ object CorpusStats {
         col("c_lang"),
         r6(expr(
           s"""try_divide(
-             |  2.0D * CAST(3 * (CAST(c_gopher AS $dec) * c_gopher
-             |      + CAST(c_quality AS $dec) * c_quality
-             |      + CAST(c_lang AS $dec) * c_lang)
-             |    - CAST(t AS $dec) * t AS DOUBLE),
+             |  2.0D * CAST(3 * (CAST(c_gopher AS $Dec) * c_gopher
+             |      + CAST(c_quality AS $Dec) * c_quality
+             |      + CAST(c_lang AS $Dec) * c_lang)
+             |    - CAST(t AS $Dec) * t AS DOUBLE),
              |  CAST(3 * t - r2 AS DOUBLE))""".stripMargin)).as("q_cochran"))
       .withColumn("significant",
         when(col("q_cochran").isNull, lit(false))
@@ -2079,7 +2068,6 @@ object CorpusStats {
     * T = 0 or T = 3n (chance agreement 1) nulls κ via try_divide →
     * 'undefined'. */
   def fleissKappaGatesOf(docs: DataFrame, minQuality: Double = 0.9): DataFrame = {
-    val dec = "decimal(38,0)"
     val r6 = TextF.round6HalfUp _
     threeGates(minQuality)(docs)
       .select((when(col("g1"), 1L).otherwise(0L)
@@ -2090,14 +2078,14 @@ object CorpusStats {
       .select(col("n_docs"), col("t"),
         r6(expr(
           s"""try_divide(
-             |  CAST(3 * CAST(n_docs AS $dec) * (r2 - 3 * t + 3 * n_docs)
-             |    - (CAST(t AS $dec) * t
-             |       + CAST(3 * CAST(n_docs AS $dec) - t AS $dec)
-             |         * (3 * CAST(n_docs AS $dec) - t)) AS DOUBLE),
-             |  CAST(9 * CAST(n_docs AS $dec) * n_docs
-             |    - (CAST(t AS $dec) * t
-             |       + CAST(3 * CAST(n_docs AS $dec) - t AS $dec)
-             |         * (3 * CAST(n_docs AS $dec) - t)) AS DOUBLE))"""
+             |  CAST(3 * CAST(n_docs AS $Dec) * (r2 - 3 * t + 3 * n_docs)
+             |    - (CAST(t AS $Dec) * t
+             |       + CAST(3 * CAST(n_docs AS $Dec) - t AS $Dec)
+             |         * (3 * CAST(n_docs AS $Dec) - t)) AS DOUBLE),
+             |  CAST(9 * CAST(n_docs AS $Dec) * n_docs
+             |    - (CAST(t AS $Dec) * t
+             |       + CAST(3 * CAST(n_docs AS $Dec) - t AS $Dec)
+             |         * (3 * CAST(n_docs AS $Dec) - t)) AS DOUBLE))"""
             .stripMargin)).as("kappa"))
       .withColumn("agreement",
         when(col("kappa").isNull, lit("undefined"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
 import graft.sources.Tables
+import Behavior.Dec
 
 /** Deduplication family over the `documents` table.
   *
@@ -392,7 +393,7 @@ object Dedup {
         sum(when(col("f2"), 1L).otherwise(0L)).as("n2"),
         sum(when(col("f1") && col("f2"), 1L).otherwise(0L)).as("m"))
       .select(col("n1"), col("n2"), col("m"),
-        expr("""(CAST(n1 + 1 AS DECIMAL(38,0)) * (n2 + 1)) div (m + 1) - 1""")
+        expr(s"""(CAST(n1 + 1 AS $Dec) * (n2 + 1)) div (m + 1) - 1""")
           .cast("long").as("n_hat"))
       .select(col("n1"), col("n2"), col("m"), col("n_hat"),
         expr("(n1 * 1000000) div greatest(n_hat, 1)")

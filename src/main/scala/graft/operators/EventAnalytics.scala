@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import Behavior.Dec
 
 /** Event-stream analytics beyond the reference's daily CTR detector
   * (native_CTR_alerts.py:226-268): sessionization, per-group anomaly
@@ -1031,7 +1032,6 @@ object EventAnalytics {
     * aggregate. No window beyond sessionize's per-user lag, nothing
     * driver-side. */
   def twapConcurrencyOf(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val dec = "decimal(38,0)"
     sessionizeOf(events, gapMinutes)
       .select(col("start_us"), col("end_us"),
         explode(sequence(timestamp_micros(col("start_us")).cast("date"),
@@ -1043,7 +1043,7 @@ object EventAnalytics {
           unix_micros(date_add(col("day"), 1).cast("timestamp"))).as("e"))
       .groupBy("day")
       .agg(count(lit(1)).as("n_sessions"),
-        sum((col("e") - col("s")).cast(dec)).as("us"))
+        sum((col("e") - col("s")).cast(Dec)).as("us"))
       .select(col("day"), col("n_sessions"),
         (floor(col("us").cast("double") / lit(1e3) + lit(0.5)) / lit(1e3))
           .as("session_seconds"),
@@ -1455,7 +1455,6 @@ object EventAnalytics {
     * item fold on the vocabulary-bounded frame, a 1-row bounds
     * broadcast. */
   def demandClassesOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = events.filter(col("event_type") === "purchase")
       .select(
         Behavior.itemKey.as("item"),
@@ -1464,8 +1463,8 @@ object EventAnalytics {
     val bounds = daily.agg(
       (datediff(max("day"), min("day")) + 1).cast("long").as("t_days")) // 1 row
     daily.groupBy("item")
-      .agg(count(lit(1)).as("nd"), sum(col("s").cast(dec)).as("ssum"),
-        sum(expr(s"CAST(s AS $dec) * s")).as("ssq"))
+      .agg(count(lit(1)).as("nd"), sum(col("s").cast(Dec)).as("ssum"),
+        sum(expr(s"CAST(s AS $Dec) * s")).as("ssq"))
       .crossJoin(broadcast(bounds))
       .select(col("item"), col("t_days"), col("nd"),
         expr("CAST((t_days * 1000000) div nd AS BIGINT)").as("adi_ppm"),
@@ -1799,25 +1798,24 @@ object EventAnalytics {
     * mod-7 bucket (the `chi2_contingency` convention — no
     * engine-specific dayofweek). */
   def seasonalStrengthOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events,
       Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .localCheckpoint(false) // feeds both mean frames and the residuals
     val gm = daily.groupBy("event_type").agg(count(lit(1)).as("n"),
-      expr("(CAST(sum(v) AS DECIMAL(38,0)) * 1000000) div count(1)")
+      expr(s"(CAST(sum(v) AS $Dec) * 1000000) div count(1)")
         .as("gmq"))
     val wm = daily.groupBy("event_type", "w").agg(
-      expr("(CAST(sum(v) AS DECIMAL(38,0)) * 1000000) div count(1)")
+      expr(s"(CAST(sum(v) AS $Dec) * 1000000) div count(1)")
         .as("wmq"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     daily.join(broadcast(gm), "event_type")
       .join(broadcast(wm), Seq("event_type", "w")) // bounded: types × 7
       .select(col("event_type"), col("n"),
-        ((col("v") * lit(1000000L)).cast(dec) - col("gmq").cast(dec))
+        ((col("v") * lit(1000000L)).cast(Dec) - col("gmq").cast(Dec))
           .as("dt"),
-        ((col("v") * lit(1000000L)).cast(dec) - col("wmq").cast(dec))
+        ((col("v") * lit(1000000L)).cast(Dec) - col("wmq").cast(Dec))
           .as("dr"))
       .groupBy("event_type")
       .agg(max("n").as("n_days"),
@@ -2046,19 +2044,18 @@ object EventAnalytics {
     * the day-ordered lag window, and the fold all ride the bounded
     * daily frame — nothing fact-scale past the first shuffle. */
   def durbinWatsonOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events,
       Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
         datediff(col("day"), lit("1970-01-01").cast("date")) % 7)
       .localCheckpoint(false) // feeds the weekday means AND the residuals
     val wm = daily.groupBy("event_type", "w").agg(
-      expr("(CAST(sum(v) AS DECIMAL(38,0)) * 1000000) div count(1)")
+      expr(s"(CAST(sum(v) AS $Dec) * 1000000) div count(1)")
         .as("wmq"))
     val lagW = Window.partitionBy("event_type").orderBy("day")
     val res = daily.join(broadcast(wm), Seq("event_type", "w"))
       .select(col("event_type"), col("day"),
-        ((col("v") * lit(1000000L)).cast(dec) - col("wmq").cast(dec))
+        ((col("v") * lit(1000000L)).cast(Dec) - col("wmq").cast(Dec))
           .as("e"))
       .withColumn("ep", lag("e", 1).over(lagW))
     res.groupBy("event_type")
@@ -2066,7 +2063,7 @@ object EventAnalytics {
         sum(col("e") * col("e")).as("se2"),
         sum(when(col("ep").isNotNull,
           (col("e") - col("ep")) * (col("e") - col("ep")))
-          .otherwise(lit(0L).cast(dec))).as("sd2"))
+          .otherwise(lit(0L).cast(Dec))).as("sd2"))
       .filter(col("n_days") > 1)
       .select(col("event_type"), col("n_days"),
         graft.functions.TextF.round6HalfUp(expr(
@@ -2103,7 +2100,6 @@ object EventAnalytics {
     * fact aggregate checkpointed, the ≤35-row weekday-mean broadcast
     * back, one bounded moment fold. */
   def breuschPaganOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events,
       Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("w",
@@ -2116,11 +2112,11 @@ object EventAnalytics {
         (col("v") - col("f")).as("e"))
     res.groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
-        sum(col("f").cast(dec)).as("sf"),
-        sum(expr(s"CAST(f AS $dec) * f")).as("sff"),
-        sum(expr(s"CAST(e AS $dec) * e")).as("sg"),
-        sum(expr(s"CAST(e AS $dec) * e * e * e")).as("sgg"),
-        sum(expr(s"CAST(f AS $dec) * e * e")).as("sfg"))
+        sum(col("f").cast(Dec)).as("sf"),
+        sum(expr(s"CAST(f AS $Dec) * f")).as("sff"),
+        sum(expr(s"CAST(e AS $Dec) * e")).as("sg"),
+        sum(expr(s"CAST(e AS $Dec) * e * e * e")).as("sgg"),
+        sum(expr(s"CAST(f AS $Dec) * e * e")).as("sfg"))
       .filter(col("n_days") > 2)
       .select(col("event_type"), col("n_days"),
         graft.functions.TextF.round6HalfUp(expr(
@@ -2164,7 +2160,6 @@ object EventAnalytics {
     * any corpus size; the fact scan dominates). */
   def ccfLeadlagOf(events: DataFrame, maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1 && maxLag <= 14, s"maxLag in [1,14], got $maxLag")
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events)(count(lit(1)).as("x"))
     // NO checkpoint despite the multi-reference ([[acfDailyOf]]'s
     // shape): daily ends at an exchange (ReuseExchange dedupes it at
@@ -2190,10 +2185,10 @@ object EventAnalytics {
       .filter(col("type_a") < col("type_b"))
       .groupBy("type_a", "type_b", "lag")
       .agg(count(lit(1)).as("n"),
-        sum(col("xa").cast(dec)).as("sx"), sum(col("xb").cast(dec)).as("sy"),
-        sum(expr(s"CAST(xa AS $dec) * xb")).as("sxy"),
-        sum(expr(s"CAST(xa AS $dec) * xa")).as("sxx"),
-        sum(expr(s"CAST(xb AS $dec) * xb")).as("syy"))
+        sum(col("xa").cast(Dec)).as("sx"), sum(col("xb").cast(Dec)).as("sy"),
+        sum(expr(s"CAST(xa AS $Dec) * xb")).as("sxy"),
+        sum(expr(s"CAST(xa AS $Dec) * xa")).as("sxx"),
+        sum(expr(s"CAST(xb AS $Dec) * xb")).as("syy"))
     val withR = m.withColumn("r", expr(
       """CAST(n * sxy - sx * sy AS DOUBLE)
         | / NULLIF(sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
@@ -2239,7 +2234,6 @@ object EventAnalytics {
   def botScoreOf(events: DataFrame, minEvents: Int = 20): DataFrame = {
     require(minEvents >= 2 && minEvents <= 100000,
       s"minEvents in [2,100000], got $minEvents")
-    val dec = "decimal(38,0)"
     val byUser = Window.partitionBy("user_id")
       .orderBy(col("us"), col("event_id"))
     val gaps = events
@@ -2248,8 +2242,8 @@ object EventAnalytics {
       .withColumn("gap", col("us") - lag("us", 1).over(byUser))
       .groupBy("user_id")
       .agg(count("gap").as("n_gaps"),
-        sum(col("gap").cast(dec)).as("sg"),
-        sum(expr(s"CAST(gap AS $dec) * gap")).as("sgg"))
+        sum(col("gap").cast(Dec)).as("sg"),
+        sum(expr(s"CAST(gap AS $Dec) * gap")).as("sgg"))
     val types = events.groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("c"))
       .groupBy("user_id")

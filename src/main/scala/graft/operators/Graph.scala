@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import Behavior.Dec
 
 /** Graph analytics over the item-transition graph mined from the event
   * stream (which item do users touch after which — the navigation
@@ -99,7 +100,7 @@ object Graph {
     (1 to iterations).foldLeft(base.select(col(key), col("rq"))) { (rank, _) =>
       val inflow = rank
         .join(edgeOut, rank(key) === edgeOut("src"))
-        .select(col("dst"), expr("CAST((CAST(rq AS DECIMAL(38,0)) * w) div ow AS BIGINT)")
+        .select(col("dst"), expr(s"CAST((CAST(rq AS $Dec) * w) div ow AS BIGINT)")
           .as("contrib"))
         .groupBy("dst")
         .agg(sum("contrib").as("inflow"))
@@ -477,7 +478,7 @@ object Graph {
     for (_ <- 1 to iterations) {
       val inflow = rank
         .join(adj, rank("item") === adj("v"))
-        .select(col("u"), expr("CAST(w AS DECIMAL(38,0)) * rq").as("contrib"))
+        .select(col("u"), expr(s"CAST(w AS $Dec) * rq").as("contrib"))
         .groupBy("u")
         .agg(sum("contrib").as("s"))
       val smax = inflow.agg(max("s").as("smax")) // 1 row by construction
@@ -829,10 +830,9 @@ object Graph {
     * the audit knob (double K, compare ranks). */
   def betweennessSampledOf(events: DataFrame, sources: Int = 4,
                            depth: Int = 4): DataFrame = {
-    val dec = "decimal(38,0)"
     val (adj, all) = boundedBfs(events, sources, depth)
-    val term = s"CAST((CAST(sigma AS $dec) * (1000000000 + dq_w))" +
-      s" div CAST(sigma_w AS $dec) AS BIGINT)"
+    val term = s"CAST((CAST(sigma AS $Dec) * (1000000000 + dq_w))" +
+      s" div CAST(sigma_w AS $Dec) AS BIGINT)"
     var delta = all.filter(col("dist") === depth)
       .select(col("s"), col("item"), lit(0L).as("dq"))
       .localCheckpoint(false)
@@ -1181,7 +1181,6 @@ object Graph {
   def katzCentralityOf(events: DataFrame, iterations: Int = 6): DataFrame = {
     require(iterations >= 1 && iterations <= 12,
       s"iterations in [1,12], got $iterations")
-    val dec = "decimal(38,0)"
     val edges = transitions(events)
       .select(col("src"), col("item").as("dst"))
       .distinct()
@@ -1197,8 +1196,8 @@ object Graph {
     // state frame's item set is exactly `nodes` every round (left
     // join preserves it), so acc_new = acc + coalesce(pin,0)·w is the
     // same integers in the same order.
-    var state = nodes.select(col("item"), lit(1L).cast(dec).as("p"),
-      lit(0L).cast(dec).as("acc"))
+    var state = nodes.select(col("item"), lit(1L).cast(Dec).as("p"),
+      lit(0L).cast(Dec).as("acc"))
       .localCheckpoint(false)
     for (k <- 1 to iterations) {
       val inflow = state.join(edges, state("item") === edges("src"))
@@ -1207,8 +1206,8 @@ object Graph {
       state = state
         .join(inflow, state("item") === col("dst"), "left")
         .select(state("item"),
-          coalesce(col("pin"), lit(0L).cast(dec)).as("p"),
-          (col("acc") + coalesce(col("pin"), lit(0L).cast(dec)) * w).as("acc"))
+          coalesce(col("pin"), lit(0L).cast(Dec)).as("p"),
+          (col("acc") + coalesce(col("pin"), lit(0L).cast(Dec)) * w).as("acc"))
         .localCheckpoint(false)
     }
     val acc = state

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{PpmCodec, WavCodec}
 import graft.sources.Tables
+import Behavior.Dec
 
 /** Multimodal-column handling: media payloads as opaque `binary`
   * columns with typed metadata alongside. The image decode step is a
@@ -207,7 +208,6 @@ object Multimodal {
     * Pinned-frame oracle (byte-level DSP has no SQL counterpart). */
   def audioToneDetect(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dec = "decimal(38,0)"
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         encode(col("text"), "UTF-8").as("bytes"))
@@ -231,8 +231,8 @@ object Multimodal {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("nb").as("n_blocks"),
-        sum(col("tone").cast(dec)).as("tq"),
-        sum(col("total").cast(dec)).as("wq"))
+        sum(col("tone").cast(Dec)).as("tq"),
+        sum(col("total").cast(Dec)).as("wq"))
       .select(col("source"), col("n_docs"), col("n_blocks"),
         col("tq").cast("long").as("tone_q"),
         col("wq").cast("long").as("total_q"),
@@ -521,18 +521,17 @@ object Multimodal {
   private def imageHashDedupFold(groups: DataFrame,
                                  maxHamming: Int): DataFrame = {
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    val dec = "decimal(38,0)"
     val within = groups.agg(
-      sum(col("m").cast(dec)).as("n_images"),
-      coalesce(sum(expr("((m * (m - 1)) div 2)").cast(dec)),
-        lit(0L).cast(dec)).as("wpairs"))
+      sum(col("m").cast(Dec)).as("n_images"),
+      coalesce(sum(expr("((m * (m - 1)) div 2)").cast(Dec)),
+        lit(0L).cast(Dec)).as("wpairs"))
     val cross = ahashCross(groups)
       .agg(
-        coalesce(sum((col("a_m") * col("b_m")).cast(dec)),
-          lit(0L).cast(dec)).as("cpairs"),
+        coalesce(sum((col("a_m") * col("b_m")).cast(Dec)),
+          lit(0L).cast(Dec)).as("cpairs"),
         coalesce(sum(when(col("h") <= maxHamming,
-          col("a_m") * col("b_m")).otherwise(0L).cast(dec)),
-          lit(0L).cast(dec)).as("dpairs"))
+          col("a_m") * col("b_m")).otherwise(0L).cast(Dec)),
+          lit(0L).cast(Dec)).as("dpairs"))
     within.crossJoin(cross) // 1-row frames
       .select(col("n_images").cast("long").as("n_images"),
         (col("wpairs") + col("cpairs")).cast("long")
@@ -555,11 +554,10 @@ object Multimodal {
     * collapsed band join; both fold to 1-row frames. */
   def crossmodalDedupAuditOf(spark: SparkSession, docs: DataFrame,
                              maxHamming: Int = 6): DataFrame = {
-    val dec = "decimal(38,0)"
     val txt = docs.groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("m"))
-      .agg(coalesce(sum(expr("((m * (m - 1)) div 2)").cast(dec)),
-        lit(0L).cast(dec)).as("tpairs"))
+      .agg(coalesce(sum(expr("((m * (m - 1)) div 2)").cast(Dec)),
+        lit(0L).cast(Dec)).as("tpairs"))
     imageAhashDedupOf(spark, docs, maxHamming)
       .crossJoin(txt) // 1-row frames
       .select(col("n_images"),
@@ -589,17 +587,16 @@ object Multimodal {
   def ahashThresholdSweepOf(spark: SparkSession, docs: DataFrame,
                             maxThreshold: Int = 10): DataFrame = {
     require(maxThreshold >= 0, s"maxThreshold must be >= 0, got $maxThreshold")
-    val dec = "decimal(38,0)"
     val groups = ahashGroups(spark, docs)
     val within = groups.agg(
-      coalesce(sum(expr("((m * (m - 1)) div 2)").cast(dec)),
-        lit(0L).cast(dec)).as("wpairs")) // Hamming 0 by construction
+      coalesce(sum(expr("((m * (m - 1)) div 2)").cast(Dec)),
+        lit(0L).cast(Dec)).as("wpairs")) // Hamming 0 by construction
     val hist = ahashCross(groups)
-      .groupBy("h").agg(sum((col("a_m") * col("b_m")).cast(dec)).as("w"))
+      .groupBy("h").agg(sum((col("a_m") * col("b_m")).cast(Dec)).as("w"))
     spark.range(0L, maxThreshold + 1L).toDF("threshold")
       .join(hist, col("h") <= col("threshold"), "left") // ≤ 65×11 rows
       .groupBy("threshold")
-      .agg(coalesce(sum("w"), lit(0L).cast(dec)).as("cpairs"))
+      .agg(coalesce(sum("w"), lit(0L).cast(Dec)).as("cpairs"))
       .crossJoin(broadcast(within)) // 1 row by construction
       .select(col("threshold"),
         (col("wpairs") + col("cpairs")).cast("long").as("n_dup_pairs"))

@@ -22,8 +22,7 @@ object Report {
 
   /** Earnings expression in exact integer micros. */
   def earningsMicros = // FLOOR then cast: deterministic across engines
-    floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * lit(1000000.0))
-      .cast("long")
+    Behavior.microDown(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
 
   /** Report-row ingest + flatten (main.py:58-87): nested variant payload
     * -> typed flat columns, date dim -> ISO string. */

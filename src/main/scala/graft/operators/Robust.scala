@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import Behavior.Dec
 
 /** Robust (order-statistic) analytics: MAD-based outlier flagging,
   * per-group decile profiles, winsorized means, and a per-column data
@@ -470,14 +471,13 @@ object Robust {
     * Shape: one map-side-combinable whole-table aggregate (no keys, no
     * shuffle beyond the 1-row combine), then a bounded 3-row stack. */
   def corrMatrixOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val m = lineitem
       .select(col("l_quantity").cast("long").as("q"),
-        floor(col("l_extendedprice") * lit(100)).cast("long").as("p"),
-        floor(col("l_discount") * lit(1e6)).cast("long").as("d"))
-      .selectExpr(s"CAST(q AS $dec) q", s"CAST(p AS $dec) p",
-        s"CAST(d AS $dec) d")
-      .agg(count(lit(1)).cast(dec).as("n"),
+        Behavior.centsDown(col("l_extendedprice")).as("p"),
+        Behavior.microDown(col("l_discount")).as("d"))
+      .selectExpr(s"CAST(q AS $Dec) q", s"CAST(p AS $Dec) p",
+        s"CAST(d AS $Dec) d")
+      .agg(count(lit(1)).cast(Dec).as("n"),
         sum("q").as("sq"), sum("p").as("sp"), sum("d").as("sd"),
         sum(expr("q * q")).as("sqq"), sum(expr("p * p")).as("spp"),
         sum(expr("d * d")).as("sdd"), sum(expr("q * p")).as("sqp"),
@@ -527,11 +527,10 @@ object Robust {
     * checkpointed projection ([[graft.operators.Behavior
     * .negativeSamplesOf]]'s bounded-action precedent). */
   def spearmanMatrixOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val li = lineitem
       .select(col("l_quantity").cast("long").as("q"),
-        floor(col("l_extendedprice") * lit(100)).cast("long").as("p"),
-        floor(col("l_discount") * lit(1e6)).cast("long").as("d"))
+        Behavior.centsDown(col("l_extendedprice")).as("p"),
+        Behavior.microDown(col("l_discount")).as("d"))
       .localCheckpoint(false) // 3 rank frames + the fact join share it
     val n = li.count() // 1-row action
     def centeredRanks(c: String): DataFrame = {
@@ -545,8 +544,8 @@ object Robust {
       .join(centeredRanks("q"), "q")
       .join(centeredRanks("p"), "p")
       .join(centeredRanks("d"), "d")
-      .selectExpr(s"CAST(cq AS $dec) cq", s"CAST(cp AS $dec) cp",
-        s"CAST(cd AS $dec) cd")
+      .selectExpr(s"CAST(cq AS $Dec) cq", s"CAST(cp AS $Dec) cp",
+        s"CAST(cd AS $Dec) cd")
       .agg(sum(expr("cq * cq")).as("sqq"), sum(expr("cp * cp")).as("spp"),
         sum(expr("cd * cd")).as("sdd"), sum(expr("cq * cp")).as("sqp"),
         sum(expr("cq * cd")).as("sqd"), sum(expr("cp * cd")).as("spd"))
@@ -598,11 +597,10 @@ object Robust {
     * make the grid self-join quadratic in the vocabulary — Pearson/
     * Spearman cover it on moment/rank machinery that stays linear. */
   def kendallMatrixOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val cube3 = lineitem
       .select(col("l_quantity").cast("long").as("q"),
-        floor(col("l_discount") * lit(1e6)).cast("long").as("d"),
-        floor(col("l_tax") * lit(1e6)).cast("long").as("t"))
+        Behavior.microDown(col("l_discount")).as("d"),
+        Behavior.microDown(col("l_tax")).as("t"))
       .groupBy("q", "d", "t").agg(count(lit(1)).as("c3"))
     val grid = cube3
       .select(explode(array(
@@ -621,20 +619,20 @@ object Robust {
           col("a.x") < col("b.x"))
       .select(col("a.xc").as("xc"), col("a.yc").as("yc"),
         when(col("a.y") < col("b.y"),
-          expr(s"CAST(a.c AS $dec) * b.c"))
-          .otherwise(lit(0).cast(dec)).as("conc"),
+          expr(s"CAST(a.c AS $Dec) * b.c"))
+          .otherwise(lit(0).cast(Dec)).as("conc"),
         when(col("a.y") > col("b.y"),
-          expr(s"CAST(a.c AS $dec) * b.c"))
-          .otherwise(lit(0).cast(dec)).as("disc"))
+          expr(s"CAST(a.c AS $Dec) * b.c"))
+          .otherwise(lit(0).cast(Dec)).as("disc"))
       .groupBy("xc", "yc")
       .agg(sum("conc").as("concordant"), sum("disc").as("discordant"))
     val xm = grid.groupBy("xc", "yc", "x").agg(sum("c").as("tx"))
       .groupBy("xc", "yc")
-      .agg(sum(expr(s"CAST(tx AS $dec) * (tx - 1)")).as("n1x2"),
-        sum(col("tx").cast(dec)).as("n"))
+      .agg(sum(expr(s"CAST(tx AS $Dec) * (tx - 1)")).as("n1x2"),
+        sum(col("tx").cast(Dec)).as("n"))
     val ym = grid.groupBy("xc", "yc", "y").agg(sum("c").as("ty"))
       .groupBy("xc", "yc")
-      .agg(sum(expr(s"CAST(ty AS $dec) * (ty - 1)")).as("n2x2"))
+      .agg(sum(expr(s"CAST(ty AS $Dec) * (ty - 1)")).as("n2x2"))
     cd.join(xm, Seq("xc", "yc")).join(ym, Seq("xc", "yc"))
       .select(col("xc").as("x_col"), col("yc").as("y_col"),
         col("n").cast("long").as("n"),
@@ -669,20 +667,19 @@ object Robust {
     * as signal); zero-variance groups read NULL via try_divide. */
   def discountElasticityOf(lineitem: DataFrame, part: DataFrame,
                            minItems: Long = 30): DataFrame = {
-    val dec = "decimal(38,0)"
     lineitem
       .select(col("l_partkey"),
-        floor(col("l_discount") * 1e6).cast("long").as("d"),
+        Behavior.microDown(col("l_discount")).as("d"),
         col("l_quantity").cast("long").as("q"))
       .join(broadcast(part.select(col("p_partkey").as("l_partkey"),
         col("p_type"))), Seq("l_partkey"))
-      .selectExpr("p_type", s"CAST(d AS $dec) d", s"CAST(q AS $dec) q")
+      .selectExpr("p_type", s"CAST(d AS $Dec) d", s"CAST(q AS $Dec) q")
       .groupBy("p_type")
-      .agg(count(lit(1)).cast(dec).as("n"),
+      .agg(count(lit(1)).cast(Dec).as("n"),
         sum("d").as("sd"), sum("q").as("sq"),
         sum(expr("d * d")).as("sdd"), sum(expr("q * q")).as("sqq"),
         sum(expr("d * q")).as("sdq"))
-      .filter(col("n") >= lit(minItems).cast(dec))
+      .filter(col("n") >= lit(minItems).cast(Dec))
       .select(col("p_type"), col("n").cast("long").as("n_items"),
         TextF.round6HalfUp(expr(
           """try_divide(
@@ -739,8 +736,8 @@ object Robust {
       // once both sides reach ~3e9 rows for one type — below the
       // 100 TB target. Two int64 products fit 38 digits with room
       // (8.5e37 < 1e38), the corr_matrix/lorenz_curve convention.
-      .withColumn("dq", abs(col("ca").cast("decimal(38,0)") * col("nb")
-        - col("cb").cast("decimal(38,0)") * col("na")))
+      .withColumn("dq", abs(col("ca").cast(Dec) * col("nb")
+        - col("cb").cast(Dec) * col("na")))
       .groupBy("event_type", "na", "nb")
       .agg(max("dq").as("dmax"))
       .select(col("event_type"), col("na"), col("nb"),
@@ -782,7 +779,6 @@ object Robust {
     * distinct-value frame; one bounded per-type fold. */
   def wassersteinDriftOf(events: DataFrame,
                          splitDay: String = "2024-01-16"): DataFrame = {
-    val dec = "decimal(38,0)"
     val leadW = Window.partitionBy("event_type").orderBy("vq")
     val byType = Window.partitionBy("event_type")
     splitDayEcdf(events, splitDay)
@@ -791,7 +787,7 @@ object Robust {
       .withColumn("nb", sum("cb_bin").over(byType))
       .filter(col("na") > 0 && col("nb") > 0)
       .withColumn("mass",
-        expr(s"""abs(CAST(ca AS $dec) * nb - CAST(cb AS $dec) * na)
+        expr(s"""abs(CAST(ca AS $Dec) * nb - CAST(cb AS $Dec) * na)
                 |  * COALESCE(gap, 0)""".stripMargin))
       .groupBy("event_type", "na", "nb")
       .agg(sum("mass").as("m"))
@@ -918,12 +914,11 @@ object Robust {
     * ([[ksTestOf]]'s vocabulary argument); one bounded per-type fold.
     */
   def mannWhitneyOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     twoArmRanks(events)
       .groupBy("event_type", "n0", "n1")
       .agg(
-        sum(expr(s"CAST(c1 AS $dec) * (2 * below0 + c0)")).as("u2"),
-        sum(expr(s"CAST(c0 + c1 AS $dec) * (c0 + c1) * (c0 + c1) - (c0 + c1)"))
+        sum(expr(s"CAST(c1 AS $Dec) * (2 * below0 + c0)")).as("u2"),
+        sum(expr(s"CAST(c0 + c1 AS $Dec) * (c0 + c1) * (c0 + c1) - (c0 + c1)"))
           .as("tcub"))
       .select(col("event_type"), col("n0"), col("n1"),
         TextF.round6HalfUp(expr(
@@ -950,7 +945,6 @@ object Robust {
     * the arm sizes n0..n2, N = nn and the tie term Σ(t³−t) = tcub.
     * Types missing an arm, or with N ≤ 3, drop. */
   private def threeArmRankSums(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val cumW = Window.partitionBy("event_type").orderBy("vq")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Behavior.armValues(events, 3L)
@@ -962,10 +956,10 @@ object Robust {
       .withColumn("below", sum("ct").over(cumW) - col("ct"))
       .groupBy("event_type")
       .agg(sum("c0").as("n0"), sum("c1").as("n1"), sum("c2").as("n2"),
-        sum(expr(s"CAST(c0 AS $dec) * (2 * below + ct + 1)")).as("r0"),
-        sum(expr(s"CAST(c1 AS $dec) * (2 * below + ct + 1)")).as("r1"),
-        sum(expr(s"CAST(c2 AS $dec) * (2 * below + ct + 1)")).as("r2"),
-        sum(expr(s"CAST(ct AS $dec) * ct * ct - ct")).as("tcub"))
+        sum(expr(s"CAST(c0 AS $Dec) * (2 * below + ct + 1)")).as("r0"),
+        sum(expr(s"CAST(c1 AS $Dec) * (2 * below + ct + 1)")).as("r1"),
+        sum(expr(s"CAST(c2 AS $Dec) * (2 * below + ct + 1)")).as("r2"),
+        sum(expr(s"CAST(ct AS $Dec) * ct * ct - ct")).as("tcub"))
       .filter(col("n0") > 0 && col("n1") > 0 && col("n2") > 0)
       .withColumn("nn", col("n0") + col("n1") + col("n2"))
       .filter(col("nn") > 3)
@@ -1038,9 +1032,8 @@ object Robust {
     * folds all on bounded frames (11 discounts × 50 quantities). The
     * dense (group × value) cross is the bounded-frame idiom. */
   def jonckheereTrendOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val hist = lineitem
-      .select(floor(col("l_discount") * 100 + lit(0.5)).cast("long").as("g"),
+      .select(Behavior.cents(col("l_discount")).as("g"),
         col("l_quantity").cast("long").as("q"))
       .groupBy("g", "q").agg(count(lit(1)).as("c"))
       .localCheckpoint(false) // bounded; dense frame + both moment folds
@@ -1054,32 +1047,32 @@ object Robust {
       col("c").as("cl"), col("below").as("bl"))
     val hi = dense.select(col("g").as("gh"), col("q"), col("c").as("ch"))
     val j2 = hi.join(lo, Seq("q")).filter(col("gl") < col("gh"))
-      .agg(coalesce(sum(expr(s"CAST(ch AS $dec) * (2 * bl + cl)")),
-        lit(0L).cast(dec)).as("j2"))
+      .agg(coalesce(sum(expr(s"CAST(ch AS $Dec) * (2 * bl + cl)")),
+        lit(0L).cast(Dec)).as("j2"))
     val gm = hist.groupBy("g").agg(sum("c").as("n"))
       .agg(count(lit(1)).as("n_groups"), sum("n").as("nn"),
-        sum(expr(s"CAST(n AS $dec) * n")).as("sn2"),
-        sum(expr(s"CAST(n AS $dec) * (n - 1) * (2 * n + 5)")).as("p2"),
-        sum(expr(s"CAST(n AS $dec) * (n - 1) * (n - 2)")).as("a3"),
-        sum(expr(s"CAST(n AS $dec) * (n - 1)")).as("a2"))
+        sum(expr(s"CAST(n AS $Dec) * n")).as("sn2"),
+        sum(expr(s"CAST(n AS $Dec) * (n - 1) * (2 * n + 5)")).as("p2"),
+        sum(expr(s"CAST(n AS $Dec) * (n - 1) * (n - 2)")).as("a3"),
+        sum(expr(s"CAST(n AS $Dec) * (n - 1)")).as("a2"))
     val tm = hist.groupBy("q").agg(sum("c").as("t"))
-      .agg(sum(expr(s"CAST(t AS $dec) * (t - 1) * (2 * t + 5)")).as("p3"),
-        sum(expr(s"CAST(t AS $dec) * (t - 1) * (t - 2)")).as("b3"),
-        sum(expr(s"CAST(t AS $dec) * (t - 1)")).as("b2"))
+      .agg(sum(expr(s"CAST(t AS $Dec) * (t - 1) * (2 * t + 5)")).as("p3"),
+        sum(expr(s"CAST(t AS $Dec) * (t - 1) * (t - 2)")).as("b3"),
+        sum(expr(s"CAST(t AS $Dec) * (t - 1)")).as("b2"))
     j2.crossJoin(gm).crossJoin(tm) // 1-row frames
-      .withColumn("e2", expr(s"(CAST(nn AS $dec) * nn - sn2) div 2"))
+      .withColumn("e2", expr(s"(CAST(nn AS $Dec) * nn - sn2) div 2"))
       .select(col("nn").cast("long").as("n"), col("n_groups"),
         col("j2").cast("double").as("j2"), col("e2").cast("double").as("e2"),
         TextF.round4HalfUp(expr(
           s"""try_divide(CAST(j2 - e2 AS DOUBLE),
              |  2.0 * sqrt(
-             |    CAST(CAST(nn AS $dec) * (nn - 1) * (2 * nn + 5)
+             |    CAST(CAST(nn AS $Dec) * (nn - 1) * (2 * nn + 5)
              |         - p2 - p3 AS DOUBLE) / 72.0
              |    + CAST(a3 AS DOUBLE) * CAST(b3 AS DOUBLE)
-             |      / NULLIF(CAST(36 * CAST(nn AS $dec) * (nn - 1) * (nn - 2)
+             |      / NULLIF(CAST(36 * CAST(nn AS $Dec) * (nn - 1) * (nn - 2)
              |               AS DOUBLE), 0.0)
              |    + CAST(a2 AS DOUBLE) * CAST(b2 AS DOUBLE)
-             |      / NULLIF(CAST(8 * CAST(nn AS $dec) * (nn - 1)
+             |      / NULLIF(CAST(8 * CAST(nn AS $Dec) * (nn - 1)
              |               AS DOUBLE), 0.0)))"""
             .stripMargin)).as("z"))
       .withColumn("trending",
@@ -1107,7 +1100,6 @@ object Robust {
     * frame; dense cross, within-day rank window, and both folds all
     * run on that bounded frame. */
   def friedmanTestOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = events
       .select(to_date(col("ts")).as("day"), col("event_type"),
         Behavior.micro(col("value")).as("vq"))
@@ -1126,21 +1118,21 @@ object Robust {
       .withColumn("r2", lit(2L) * (col("rk") - 1) + col("t") + 1)
     val blocks = ranked2.agg(
       countDistinct("day").as("b"), countDistinct("event_type").as("k"),
-      sum(expr(s"CAST(r2 AS $dec) * r2")).as("a4"))
+      sum(expr(s"CAST(r2 AS $Dec) * r2")).as("a4"))
     val perType = ranked2.groupBy("event_type")
       .agg(sum("r2").as("r2sum"))
     val r6 = TextF.round6HalfUp _
     perType.crossJoin(blocks) // bounded k rows × 1
       .select(col("event_type"), col("r2sum"), col("b"), col("k"),
         col("a4"),
-        expr(s"""CAST(r2sum AS $dec) - CAST(b AS $dec) * (k + 1)""")
+        expr(s"""CAST(r2sum AS $Dec) - CAST(b AS $Dec) * (k + 1)""")
           .as("dev"))
       .agg(max("b").as("b"), max("k").as("k"), max("a4").as("a4"),
-        sum(expr(s"CAST(dev AS $dec) * dev")).as("devsq"))
+        sum(expr(s"CAST(dev AS $Dec) * dev")).as("devsq"))
       .select(col("b"), col("k"),
         r6(expr(s"""try_divide(
              |  CAST((k - 1) * devsq AS DOUBLE),
-             |  CAST(a4 - CAST(b AS $dec) * k * (k + 1) * (k + 1)
+             |  CAST(a4 - CAST(b AS $Dec) * k * (k + 1) * (k + 1)
              |       AS DOUBLE))""".stripMargin)).as("q"))
       // α=0.05 χ² critical values, df = k−1 for k ∈ [2, 11]; outside
       // the ladder the verdict is NULL (refused), never a df=4 guess
@@ -1208,7 +1200,6 @@ object Robust {
     * verdict at 1.96 (documented — at warehouse n the t quantile is
     * indistinguishable). */
   def yuenTestOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val byGroup = Window.partitionBy("event_type", "arm")
     val grid = Behavior.armValues(events, 2L)
       .groupBy("event_type", "arm", "vq").agg(count(lit(1)).as("c"))
@@ -1223,13 +1214,13 @@ object Robust {
         min(when(col("b") + col("c") >= col("g") + 1, col("vq"))).as("lo"),
         min(when(col("b") + col("c") >= col("n") - col("g"), col("vq")))
           .as("hi"),
-        sum(expr(s"CAST(cmid AS $dec) * vq")).as("ts"),
-        sum(expr(s"CAST(cmid AS $dec) * vq * vq")).as("ts2"))
+        sum(expr(s"CAST(cmid AS $Dec) * vq")).as("ts"),
+        sum(expr(s"CAST(cmid AS $Dec) * vq * vq")).as("ts2"))
       .withColumn("h", col("n") - lit(2L) * col("g"))
       .withColumn("sw",
-        expr(s"ts + CAST(g AS $dec) * lo + CAST(g AS $dec) * hi"))
+        expr(s"ts + CAST(g AS $Dec) * lo + CAST(g AS $Dec) * hi"))
       .withColumn("sw2",
-        expr(s"ts2 + CAST(g AS $dec) * lo * lo + CAST(g AS $dec) * hi * hi"))
+        expr(s"ts2 + CAST(g AS $Dec) * lo * lo + CAST(g AS $Dec) * hi * hi"))
     // arm-major column order, unlike `Behavior.pivot`'s value-major
     val picks = for ((a, arm) <- Behavior.levels("arm", 2);
                      c <- Seq("n", "h", "ts", "sw", "sw2"))
@@ -1282,12 +1273,11 @@ object Robust {
     * because events happened). Shape: one fact aggregate to the
     * calendar-bounded (type, day) frame, one bounded fold. */
   def overdispersionCheckOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events)(count(lit(1)).as("c"))
     val agg = daily.groupBy("event_type")
       .agg(count(lit(1)).as("t_days"),
-        sum(col("c").cast(dec)).as("s1"),
-        sum(expr(s"CAST(c AS $dec) * c")).as("s2"))
+        sum(col("c").cast(Dec)).as("s1"),
+        sum(expr(s"CAST(c AS $Dec) * c")).as("s2"))
       .filter(col("t_days") > 1)
     val r4 = TextF.round4HalfUp _
     val disp = """((CAST(s2 AS DOUBLE)
@@ -1324,13 +1314,12 @@ object Robust {
     * `twoArmRanks`) — the (type, vq) grid aggregate absorbs fact mass
     * map-side; windows ride the bounded value-grid frame. */
   def cliffsDeltaOf(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     twoArmRanks(events)
       .groupBy("event_type", "n0", "n1")
-      .agg(sum(expr(s"CAST(c1 AS $dec) * (2 * below0 + c0)")).as("u2"))
+      .agg(sum(expr(s"CAST(c1 AS $Dec) * (2 * below0 + c0)")).as("u2"))
       .select(col("event_type"), col("n0"), col("n1"),
         TextF.round6HalfUp(expr(s"""
-          |CAST(u2 - CAST(n0 AS $dec) * n1 AS DOUBLE)
+          |CAST(u2 - CAST(n0 AS $Dec) * n1 AS DOUBLE)
           |  / (CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE))""".stripMargin))
           .as("delta"))
       .withColumn("magnitude",
@@ -1487,7 +1476,6 @@ object Robust {
     * bounded daily frame. */
   def revenueVarOf(events: DataFrame, pct: Int = 5): DataFrame = {
     require(pct >= 1 && pct <= 50, s"pct in [1,50], got $pct")
-    val dec = "decimal(38,0)"
     val daily = Behavior.daily(events,
       Behavior.cents(col("value")).as("vc"))(sum("vc").as("v"))
       .withColumn("rn", row_number().over(
@@ -1503,7 +1491,7 @@ object Robust {
         col("k").as("kk"))), Seq("event_type"))
       .filter(col("rn") <= col("kk"))
       .groupBy("event_type")
-      .agg(sum(col("v").cast(dec)).as("tail_sum"),
+      .agg(sum(col("v").cast(Dec)).as("tail_sum"),
         count(lit(1)).as("n_tail"))
       .join(varRow, Seq("event_type"))
       .select(col("event_type"), col("n").as("n_days"), col("var_cents"),
@@ -1614,7 +1602,6 @@ object Robust {
     * the calendar-bounded daily frame. */
   def wilcoxonSignedRankOf(events: DataFrame, typeA: String = "purchase",
       typeB: String = "view"): DataFrame = {
-    val dec = "decimal(38,0)"
     val daily = dayPairedDiffs(events, typeA, typeB)
       .filter(col("d") =!= 0L)
     val cumW = Window.orderBy("ad")
@@ -1630,8 +1617,8 @@ object Robust {
     val r6 = TextF.round6HalfUp _
     grid.agg(
         sum("t").as("n"),
-        sum(expr(s"CAST(np AS $dec) * (2 * below + t + 1)")).as("w2"),
-        sum(expr(s"CAST(t AS $dec) * t * t - t")).as("tcub"))
+        sum(expr(s"CAST(np AS $Dec) * (2 * below + t + 1)")).as("w2"),
+        sum(expr(s"CAST(t AS $Dec) * t * t - t")).as("tcub"))
       .filter(col("n") > 0)
       .select(col("n").as("n_pairs"),
         col("w2").cast("long").as("w_plus_x2"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorF
+import Behavior.Dec
 
 /** Scalar twin of [[graft.plans.CosineSimilarity]] for in-group use:
   * the SAME sequential fused loop (dot/norms accumulated index 0..n−1)
@@ -334,17 +335,16 @@ object Similarity {
     * Shape: one corpus × C-centroid broadcast scoring pass (the
     * [[annIvfOf]] assignment), a C-row aggregate after. */
   def ivfBalanceOf(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val assigned = ivfCells(ivfScores(embeddings).drop("embedding"), 1)
     assigned.groupBy("c_id").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells_used"),
         sum("n").as("n_vectors"),
-        sum(expr(s"CAST(n AS $dec) * n")).as("ssq"),
+        sum(expr(s"CAST(n AS $Dec) * n")).as("ssq"),
         max("n").as("max_cell"),
         expr("CAST(percentile(n, 0.5D) AS DOUBLE)").as("p50_cell"))
       .select(col("n_cells_used"), col("n_vectors"),
         expr(s"CAST((ssq * ${IvfCells} * 1000000)" +
-          s" div (CAST(n_vectors AS $dec) * n_vectors) AS BIGINT)")
+          s" div (CAST(n_vectors AS $Dec) * n_vectors) AS BIGINT)")
           .as("imbalance_ppm"),
         col("max_cell"), col("p50_cell"))
   }
@@ -365,15 +365,14 @@ object Similarity {
     * it) into a d-row map-combinable aggregate; the output frame is
     * the embedding width. */
   def dimProfileOf(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     def d(c: Column) = c.cast("double")
     embeddings
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
       .select(col("dim"),
         Behavior.micro(col("v").cast("double")).as("q"))
       .groupBy("dim")
-      .agg(count(lit(1)).as("n"), sum(col("q").cast(dec)).as("s"),
-        sum(expr(s"CAST(q AS $dec) * q")).as("ss"),
+      .agg(count(lit(1)).as("n"), sum(col("q").cast(Dec)).as("s"),
+        sum(expr(s"CAST(q AS $Dec) * q")).as("ss"),
         min("q").as("mn"), max("q").as("mx"))
       .select(col("dim"), col("n"),
         graft.functions.TextF.round6HalfUp(d(col("s")) / d(col("n")) / lit(1e6)).as("mean"),
@@ -696,7 +695,6 @@ object Similarity {
     * (label, dim) sums — the only fact-scale shuffle, keyed by a
     * labels×dims-bounded frame — then label-frame algebra. */
   def embeddingAlignmentOf(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val q = embeddings
       .select(col("label").cast("int").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -712,11 +710,11 @@ object Similarity {
       .select(col("label"),
         expr("aggregate(q, CAST(0 AS BIGINT), (a, x) -> a + x * x)").as("tq"))
       .groupBy("label")
-      .agg(count(lit(1)).as("n"), sum(col("tq").cast(dec)).as("tt"))
+      .agg(count(lit(1)).as("n"), sum(col("tq").cast(Dec)).as("tt"))
     val dimSums = q
       .select(col("label"), posexplode(col("q")).as(Seq("d", "qd")))
       .groupBy("label", "d")
-      .agg(sum(col("qd").cast(dec)).as("s"))
+      .agg(sum(col("qd").cast(Dec)).as("s"))
       .localCheckpoint(false) // label norms + global sums both read it
     val sl = dimSums.groupBy("label").agg(sum(expr("s * s")).as("s2"))
     val sg = dimSums.groupBy("d").agg(sum("s").as("gs"))
@@ -728,12 +726,12 @@ object Similarity {
       .crossJoin(broadcast(nTotal))
       .select(col("label"), col("n"),
         graft.functions.TextF.round6HalfUp(expr(
-          """CAST(s2 - tt AS DOUBLE)
-            |  / CAST(NULLIF(CAST(n AS DECIMAL(38,0)) * (n - 1), 0) AS DOUBLE)
+          s"""CAST(s2 - tt AS DOUBLE)
+            |  / CAST(NULLIF(CAST(n AS $Dec) * (n - 1), 0) AS DOUBLE)
             |  / 1e12""".stripMargin)).as("within_cos"),
         graft.functions.TextF.round6HalfUp(expr(
-          """CAST(xd AS DOUBLE)
-            |  / CAST(NULLIF(CAST(n AS DECIMAL(38,0)) * (nt - n), 0) AS DOUBLE)
+          s"""CAST(xd AS DOUBLE)
+            |  / CAST(NULLIF(CAST(n AS $Dec) * (nt - n), 0) AS DOUBLE)
             |  / 1e12""".stripMargin)).as("cross_cos"))
       .orderBy("label")
   }
@@ -1109,7 +1107,6 @@ object Similarity {
     * × dim frame (~10 × 64); the total window, gap fold, and argmax
     * all ride that bounded frame. */
   def embeddingMmdOf(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val dimW = Window.partitionBy("pos")
     val perDim = embeddings
       .select(col("label"),
@@ -1126,14 +1123,14 @@ object Similarity {
       .select(col("label"), col("pos"), col("cnt"),
         (col("nt") - col("cnt")).as("cnt_out"),
         // own and complement means on the exact 1e-12 grid
-        expr(s"(CAST(s AS $dec) * 1000000) div cnt").as("mq_in"),
-        expr(s"(CAST(st - s AS $dec) * 1000000) div (nt - cnt)")
+        expr(s"(CAST(s AS $Dec) * 1000000) div cnt").as("mq_in"),
+        expr(s"(CAST(st - s AS $Dec) * 1000000) div (nt - cnt)")
           .as("mq_out"))
       .select(col("label"), col("pos"), col("cnt"), col("cnt_out"),
         // div narrows to BIGINT: the 1e-12-grid gap squares past 2^63
         // — lift to decimal BEFORE the product
-        ((col("mq_in") - col("mq_out")).cast(dec)
-          * (col("mq_in") - col("mq_out")).cast(dec)).as("gap2"))
+        ((col("mq_in") - col("mq_out")).cast(Dec)
+          * (col("mq_in") - col("mq_out")).cast(Dec)).as("gap2"))
     gaps.groupBy("label")
       .agg(max("cnt").as("n_in"), max("cnt_out").as("n_out"),
         sum("gap2").as("tg2"),

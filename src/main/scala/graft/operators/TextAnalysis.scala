@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
 import graft.sources.Tables
+import Behavior.Dec
 
 /** Text-analysis family over `documents`: token counting, per-group
   * stats, quality scoring, fingerprinting, language ID. All map-side
@@ -61,14 +62,13 @@ object TextAnalysis {
     * global aggregate, a second conditional 1-row aggregate against
     * the broadcast limits; no shuffle beyond the two folds. */
   def blandAltmanOf(docs: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = docs.select(
       (expr("length(text) div 4")
         - TextF.bpeTokenCount(col("text")).cast("long")).as("d"))
       .localCheckpoint(false) // moment fold + outside fold share it
     val mom = d.agg(count(lit(1)).as("n"),
-      sum(col("d").cast(dec)).as("sd1"),
-      sum(expr(s"CAST(d AS $dec) * d")).as("sd2"))
+      sum(col("d").cast(Dec)).as("sd1"),
+      sum(expr(s"CAST(d AS $Dec) * d")).as("sd2"))
     val lim = mom.select(col("n"), col("sd1"), col("sd2"),
       expr("CAST(sd1 AS DOUBLE) / CAST(n AS DOUBLE)").as("mean_d"),
       expr("""sqrt((CAST(sd2 AS DOUBLE)
@@ -154,7 +154,6 @@ object TextAnalysis {
   def winnowFingerprintsOf(docs: DataFrame, k: Int = 5,
                            w: Int = 4, approx: Boolean = false): DataFrame = {
     require(k >= 1 && w >= 1, s"need k/w positive, got $k/$w")
-    val dec = "decimal(38,0)"
     val perDoc = docs
       .select(col("source"), col("doc_id"), TextF.tokens(col("text")).as("toks"))
       .select(col("source"), col("doc_id"),
@@ -203,8 +202,8 @@ object TextAnalysis {
       }
     bySource.join(printStats, Seq("source"), "left")
       .select(col("source"), col("n_docs"), col("n_grams"), col("n_prints"),
-        expr(s"""CAST((CAST(n_prints AS $dec) * 1000000)
-                |  div NULLIF(CAST(n_grams AS $dec), 0) AS BIGINT)"""
+        expr(s"""CAST((CAST(n_prints AS $Dec) * 1000000)
+                |  div NULLIF(CAST(n_grams AS $Dec), 0) AS BIGINT)"""
           .stripMargin).as("density_ppm"),
         coalesce(col("n_distinct_prints"), lit(0L)).as("n_distinct_prints"),
         coalesce(col("n_shared_prints"), lit(0L)).as("n_shared_prints"))
@@ -390,7 +389,7 @@ object TextAnalysis {
       .agg(sum("n").as("ct"))
     val peNum = rows.join(cols, Seq("source", "cls"), "full_outer")
       .select(col("source"),
-        (coalesce(col("rt"), lit(0L)).cast("decimal(38,0)") *
+        (coalesce(col("rt"), lit(0L)).cast(Dec) *
           coalesce(col("ct"), lit(0L))).as("rc"))
       .groupBy("source").agg(sum("rc").as("pe_num"))
     val totals = cells.groupBy("source")

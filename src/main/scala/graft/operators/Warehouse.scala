@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
 import graft.sources.Tables
+import Behavior.{cents, centsDown, microDown, Dec}
 
 /** Warehouse-maintenance operators: referential-integrity audit and
   * changelog compaction — the recurring jobs that keep a lake usable
@@ -13,6 +14,11 @@ import graft.sources.Tables
   * audits its own joins).
   */
 object Warehouse {
+
+  /** A line's net value on the 10⁻²-cent grid: its price in cents
+    * times (100 − its discount in cents), exact in a long. */
+  private def netC100: Column =
+    cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))
 
   /** Foreign-key coverage audit: for each event type, how many rows
     * resolve against the customer dimension and how many are orphans.
@@ -402,7 +408,6 @@ object Warehouse {
     * frames (groups × buckets — QI vocabularies by construction). */
   def tClosenessOf(customer: DataFrame, t: Double = 0.2): DataFrame = {
     require(t > 0 && t < 1, s"t must be in (0,1), got $t")
-    val dec = "decimal(38,0)"
     val cells = customer
       .groupBy(col("c_mktsegment"),
         col("c_nationkey").cast("int").as("c_nationkey"),
@@ -420,8 +425,8 @@ object Warehouse {
     dense
       .groupBy(col("c_mktsegment"), col("c_nationkey"),
         col("ng").as("group_size"), col("n_total"))
-      .agg(sum(expr(s"abs(CAST(c_here AS $dec) * n_total" +
-        s" - CAST(cs AS $dec) * ng)")).as("tsum"))
+      .agg(sum(expr(s"abs(CAST(c_here AS $Dec) * n_total" +
+        s" - CAST(cs AS $Dec) * ng)")).as("tsum"))
       .select(col("c_mktsegment"), col("c_nationkey"), col("group_size"),
         TextF.round6HalfUp(col("tsum").cast("double") /
           (lit(2.0) * col("group_size").cast("double") *
@@ -704,8 +709,8 @@ object Warehouse {
       4 -> 96910L, 5 -> 79181L, 6 -> 66947L, 7 -> 57992L, 8 -> 51153L,
       9 -> 45757L))
     orders
-      .select(substring(floor(col("o_totalprice") * lit(1e6))
-        .cast("long").cast("string"), 1, 1).cast("int").as("digit"))
+      .select(substring(microDown(col("o_totalprice")).cast("string"), 1, 1)
+        .cast("int").as("digit"))
       .groupBy("digit")
       .agg(count(lit(1)).as("n_orders"))
       .withColumn("n_total", sum("n_orders").over(Window.partitionBy()))
@@ -803,8 +808,7 @@ object Warehouse {
   def returnRateByBrandOf(lineitem: DataFrame, part: DataFrame): DataFrame = {
     val li = lineitem.select(col("l_partkey"),
       (col("l_returnflag") === "R").as("ret"),
-      floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1e6)
-        .cast("long").as("qrev"))
+      Report.earningsMicros.as("qrev"))
     li.join(broadcast(part.select(col("p_partkey").as("l_partkey"),
         col("p_brand"))), Seq("l_partkey"))
       .groupBy("p_brand")
@@ -814,8 +818,8 @@ object Warehouse {
         // funnels ~1/25th of the corpus through one group — at 10¹⁰
         // fact rows that crosses 2⁶³ (the lorenz_curve headroom
         // class; DuckDB already sums into HUGEINT)
-        sum(when(col("ret"), col("qrev").cast("decimal(38,0)"))
-          .otherwise(lit(0L).cast("decimal(38,0)"))).as("qret"))
+        sum(when(col("ret"), col("qrev").cast(Dec))
+          .otherwise(lit(0L).cast(Dec))).as("qret"))
       .select(col("p_brand"), col("n_items"), col("n_returned"),
         expr("(n_returned * 10000) div n_items").as("return_bp"),
         TextF.microsTo4dp(col("qret")).as("returned_revenue"))
@@ -835,11 +839,9 @@ object Warehouse {
     */
   def supplierHhiOf(lineitem: DataFrame, supplier: DataFrame,
                     nation: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val perSupp = lineitem
       .select(col("l_suppkey").as("s_suppkey"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1e6)
-          .cast("long").as("qrev"))
+        Report.earningsMicros.as("qrev"))
       .groupBy("s_suppkey").agg(sum("qrev").as("q"))
       .join(supplier.select(col("s_suppkey"), col("s_nationkey")),
         Seq("s_suppkey"))
@@ -851,16 +853,16 @@ object Warehouse {
       // of corpus micro-revenue — crosses 2⁶³ at 10¹⁰ fact rows
       // (same headroom class as lorenz_curve / qret above); the
       // per-SUPPLIER q stays comfortably long.
-      .withColumn("tq", sum(col("q").cast(dec)).over(byNation))
+      .withColumn("tq", sum(col("q").cast(Dec)).over(byNation))
       .withColumn("rn", row_number().over(
         byNation.orderBy(col("q").desc, col("s_suppkey"))))
       .groupBy(col("n_name").as("nation"))
       .agg(count(lit(1)).as("n_suppliers"),
         max("tq").as("tq"),
-        sum(expr(s"CAST(q AS $dec) * q")).as("ssq"),
+        sum(expr(s"CAST(q AS $Dec) * q")).as("ssq"),
         max(when(col("rn") === 1, col("q"))).as("top_q"))
       .select(col("nation"), col("n_suppliers"),
-        expr(s"CAST((ssq * 1000000) div (CAST(tq AS $dec) * tq) AS BIGINT)")
+        expr(s"CAST((ssq * 1000000) div (CAST(tq AS $Dec) * tq) AS BIGINT)")
           .as("hhi_ppm"),
         TextF.round4HalfUp(col("top_q").cast("double")
           / col("tq").cast("double")).as("top_share"))
@@ -936,7 +938,6 @@ object Warehouse {
     * Shape: one broadcast-dim fact aggregate to the (type, period)
     * grain; everything after rides the part-type frame. */
   def priceVolumeMixOf(lineitem: DataFrame, part: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val bounds = lineitem.agg(min("l_shipdate").as("mn"),
       max("l_shipdate").as("mx"))
     val base = lineitem
@@ -948,21 +949,21 @@ object Warehouse {
           expr("date_add(mn, CAST(datediff(mx, mn) div 2 AS INT))"), 0)
           .otherwise(1).as("period"),
         col("l_quantity").cast("long").as("q"),
-        floor(col("l_extendedprice") * 100).cast("long").as("r"))
+        centsDown(col("l_extendedprice")).as("r"))
     base.groupBy("p_type")
       .agg(
         sum(when(col("period") === 0, col("q")).otherwise(0L)).as("q0"),
         sum(when(col("period") === 1, col("q")).otherwise(0L)).as("q1"),
-        sum(when(col("period") === 0, col("r").cast(dec))
-          .otherwise(lit(0).cast(dec))).as("r0"),
-        sum(when(col("period") === 1, col("r").cast(dec))
-          .otherwise(lit(0).cast(dec))).as("r1"))
+        sum(when(col("period") === 0, col("r").cast(Dec))
+          .otherwise(lit(0).cast(Dec))).as("r0"),
+        sum(when(col("period") === 1, col("r").cast(Dec))
+          .otherwise(lit(0).cast(Dec))).as("r1"))
       .filter(col("q0") > 0 && col("q1") > 0)
       .select(col("p_type"), col("q0"), col("q1"),
         expr("CAST(r1 - r0 AS BIGINT)").as("delta_cents"),
-        expr(s"CAST((r1 * q0) div CAST(q1 AS $dec) AS BIGINT)" +
+        expr(s"CAST((r1 * q0) div CAST(q1 AS $Dec) AS BIGINT)" +
           s" - CAST(r0 AS BIGINT)").as("price_effect_cents"),
-        expr(s"CAST((r0 * q1) div CAST(q0 AS $dec) AS BIGINT)" +
+        expr(s"CAST((r0 * q1) div CAST(q0 AS $Dec) AS BIGINT)" +
           s" - CAST(r0 AS BIGINT)").as("volume_effect_cents"))
       .withColumn("joint_cents",
         col("delta_cents") - col("price_effect_cents") -
@@ -1022,26 +1023,25 @@ object Warehouse {
     * argument; the two-phase value offsets are int64 — cents hold to
     * ~$10¹⁷ corpus revenue where micros would not). */
   def abcClassificationOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val perPart = lineitem.groupBy(col("l_partkey"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-        * 100).cast("long")).as("rev"))
+      .agg(sum(centsDown(col("l_extendedprice")
+        * (lit(1.0) - col("l_discount")))).as("rev"))
     val (ranked, nParts, totalRev) = graft.Scale.twoPhaseRankAndRunningSum(
       perPart, Seq(col("rev").desc, col("l_partkey")), col("rev"))
     ranked
       .withColumn("abc_class",
-        when(expr(s"CAST(__running AS $dec) * 100" +
-          s" <= CAST(${totalRev} AS $dec) * 80"), "A")
-          .when(expr(s"CAST(__running AS $dec) * 100" +
-            s" <= CAST(${totalRev} AS $dec) * 95"), "B")
+        when(expr(s"CAST(__running AS $Dec) * 100" +
+          s" <= CAST(${totalRev} AS $Dec) * 80"), "A")
+          .when(expr(s"CAST(__running AS $Dec) * 100" +
+            s" <= CAST(${totalRev} AS $Dec) * 95"), "B")
           .otherwise("C"))
       .groupBy("abc_class")
       .agg(count(lit(1)).as("n_parts"),
-        sum(col("rev").cast(dec)).as("crev"))
+        sum(col("rev").cast(Dec)).as("crev"))
       .select(col("abc_class"), col("n_parts"),
         expr(s"CAST((n_parts * 1000000) div ${nParts}L AS BIGINT)")
           .as("part_share_ppm"),
-        expr(s"CAST((crev * 1000000) div CAST(${totalRev} AS $dec)" +
+        expr(s"CAST((crev * 1000000) div CAST(${totalRev} AS $Dec)" +
           s" AS BIGINT)").as("revenue_share_ppm"))
       .orderBy("abc_class")
   }
@@ -1070,7 +1070,6 @@ object Warehouse {
     * exact-ppm part shares. Parts scale with the corpus; every
     * frame here is part- or class-keyed. */
   def xyzClassificationOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val bounds = lineitem
       .agg(min(col("l_shipdate")).as("d0"), max(col("l_shipdate")).as("d1"))
       .select(col("d0"),
@@ -1083,9 +1082,9 @@ object Warehouse {
       .agg(max("nw").as("nw"), sum("q").as("qw"))
     val perPart = weekly.groupBy("l_partkey")
       .agg(max("nw").as("nw"), count(lit(1)).as("nzw"),
-        sum(col("qw").cast(dec)).as("s"),
-        sum(expr(s"CAST(qw AS $dec) * qw")).as("qq"))
-      .withColumn("vr", expr(s"CAST(nw AS $dec) * qq - s * s"))
+        sum(col("qw").cast(Dec)).as("s"),
+        sum(expr(s"CAST(qw AS $Dec) * qw")).as("qq"))
+      .withColumn("vr", expr(s"CAST(nw AS $Dec) * qq - s * s"))
       .withColumn("xyz_class",
         when(col("s") === 0, "Z")
           .when(expr("4 * vr <= s * s"), "X")
@@ -1129,11 +1128,10 @@ object Warehouse {
     * with the corpus, AQE-planned); the index algebra rides the
     * bounded |months| frame. */
   def fisherPriceIndexOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val per = lineitem
       .select(col("l_partkey"),
         date_format(col("l_shipdate"), "yyyy-MM").as("month"),
-        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("ec"),
+        cents(col("l_extendedprice")).as("ec"),
         col("l_quantity").cast("long").as("q"))
       .groupBy("l_partkey", "month")
       .agg(sum("ec").as("ec"), sum("q").as("q"))
@@ -1150,10 +1148,10 @@ object Warehouse {
     val pterm = floor(d(col("ec0")) / d(col("q0")) * d(col("q")) * 1e4 + 0.5)
     val agg = j.groupBy("month")
       .agg(count(lit(1)).as("n_parts"),
-        sum(lterm.cast(dec)).as("lnum"),
-        sum(col("ec0").cast(dec)).as("lden"),
-        sum(col("ec").cast(dec)).as("pnum"),
-        sum(pterm.cast(dec)).as("pden"))
+        sum(lterm.cast(Dec)).as("lnum"),
+        sum(col("ec0").cast(Dec)).as("lden"),
+        sum(col("ec").cast(Dec)).as("pnum"),
+        sum(pterm.cast(Dec)).as("pden"))
     val lIdx = (d(col("lnum")) / 1e4) / d(col("lden"))
     val pIdx = d(col("pnum")) / (d(col("pden")) / 1e4)
     agg.select(col("month"), col("n_parts"),
@@ -1185,19 +1183,15 @@ object Warehouse {
     * status frame. Headerless lines and lineless orders fall out of
     * the inner join by design — key coverage is row 88's job. */
   def orderReconcileOf(lineitem: DataFrame, orders: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val perOrder = lineitem
       .select(col("l_orderkey").as("o_orderkey"),
-        (floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-          * (lit(100L) - floor(col("l_discount") * 100 + 0.5).cast("long"))
-          * (lit(100L) + floor(col("l_tax") * 100 + 0.5).cast("long")))
-          .cast(dec).as("net_q"))
+        (netC100 * (lit(100L) + cents(col("l_tax")))).cast(Dec).as("net_q"))
       .groupBy("o_orderkey")
       .agg(sum("net_q").as("recomp_q"))
     val audited = orders
       .select(col("o_orderkey"), col("o_orderstatus"),
-        (floor(col("o_totalprice") * 100 + 0.5).cast("long").cast(dec)
-          * lit(10000L).cast(dec)).as("stated_q"))
+        (cents(col("o_totalprice")).cast(Dec)
+          * lit(10000L).cast(Dec)).as("stated_q"))
       .join(perOrder, Seq("o_orderkey"))
       .withColumn("div_ppm", expr(
         """CASE WHEN stated_q > 0
@@ -1207,7 +1201,7 @@ object Warehouse {
       .agg(count(lit(1)).as("n_orders"),
         sum(when(col("div_ppm") > 10000L, 1L).otherwise(0L))
           .as("n_over_1pct"),
-        sum(col("div_ppm").cast(dec)).as("dsum"),
+        sum(col("div_ppm").cast(Dec)).as("dsum"),
         count(col("div_ppm")).as("dn"),
         max("div_ppm").as("max_div_ppm"))
       .select(col("o_orderstatus"), col("n_orders"), col("n_over_1pct"),
@@ -1229,10 +1223,9 @@ object Warehouse {
     * the fact (AQE-planned), the brand dim broadcast; everything
     * after on the bounded brand frame. */
   def smallOrderRevenueOf(lineitem: DataFrame, part: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val l = lineitem.select(col("l_partkey"),
       col("l_quantity").cast("long").as("q"),
-      floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("ec"))
+      cents(col("l_extendedprice")).as("ec"))
     val perPart = l.groupBy("l_partkey")
       .agg(sum("q").as("sumq"), count(lit(1)).as("nq"))
     l.join(perPart, Seq("l_partkey"))
@@ -1243,9 +1236,9 @@ object Warehouse {
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_lines"),
         sum(when(col("small"), 1L).otherwise(0L)).as("n_small"),
-        sum(when(col("small"), col("ec")).otherwise(0L).cast(dec))
+        sum(when(col("small"), col("ec")).otherwise(0L).cast(Dec))
           .as("small_rev"),
-        sum(col("ec").cast(dec)).as("total_rev"))
+        sum(col("ec").cast(Dec)).as("total_rev"))
       .select(col("p_brand"), col("n_lines"), col("n_small"),
         col("small_rev").cast("long").as("small_revenue_cents"),
         expr("CAST((small_rev * 1000000) div total_rev AS BIGINT)")
@@ -1272,23 +1265,22 @@ object Warehouse {
   def idleCustomersOf(customer: DataFrame, orders: DataFrame,
                       dormantDays: Int = 30): DataFrame = {
     require(dormantDays > 0, s"dormantDays must be positive, got $dormantDays")
-    val dec = "decimal(38,0)"
     val c = customer.select(col("c_custkey"), col("c_mktsegment"),
-      floor(col("c_acctbal") * 100 + 0.5).cast("long").as("bal_c"))
+      cents(col("c_acctbal")).as("bal_c"))
     val posStats = c.filter(col("bal_c") > 0L)
-      .agg(sum(col("bal_c").cast(dec)).as("pos_sum"),
+      .agg(sum(col("bal_c").cast(Dec)).as("pos_sum"),
         count(lit(1)).as("pos_n")) // 1 row
     val bounds = orders.agg(max(to_date(col("o_orderdate"))).as("md"))
     val recent = orders.crossJoin(broadcast(bounds)) // 1 row by construction
       .filter(to_date(col("o_orderdate")) >= date_sub(col("md"), dormantDays))
       .select(col("o_custkey").as("c_custkey")).distinct()
     c.crossJoin(broadcast(posStats)) // 1 row by construction
-      .filter(col("bal_c").cast(dec) * col("pos_n").cast(dec)
+      .filter(col("bal_c").cast(Dec) * col("pos_n").cast(Dec)
         > col("pos_sum"))
       .join(recent, Seq("c_custkey"), "left_anti")
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_idle"),
-        sum(col("bal_c").cast(dec)).as("balsum"))
+        sum(col("bal_c").cast(Dec)).as("balsum"))
       .select(col("c_mktsegment"), col("n_idle"),
         col("balsum").cast("long").as("idle_balance_cents"))
       .orderBy("c_mktsegment")
@@ -1308,22 +1300,21 @@ object Warehouse {
     * (six columns read) behind a 1-row date-bound broadcast —
     * whole-stage-codegen end to end; the canonical scan-bound query. */
   def pricingSummaryOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val bounds = lineitem.agg(max(to_date(col("l_shipdate"))).as("md"))
     val l = lineitem.crossJoin(broadcast(bounds)) // 1 row by construction
       .filter(to_date(col("l_shipdate")) <= date_sub(col("md"), 90))
       .select(col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast("long").as("q"),
-        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("ep_c"),
-        floor(col("l_discount") * 100 + 0.5).cast("long").as("d_pct"),
-        floor(col("l_tax") * 100 + 0.5).cast("long").as("t_pct"))
+        cents(col("l_extendedprice")).as("ep_c"),
+        cents(col("l_discount")).as("d_pct"),
+        cents(col("l_tax")).as("t_pct"))
     l.groupBy("l_returnflag", "l_linestatus")
       .agg(
         sum("q").as("sum_qty"),
-        sum(col("ep_c").cast(dec)).as("spc"),
-        sum((col("ep_c") * (lit(100L) - col("d_pct"))).cast(dec)).as("sdc"),
+        sum(col("ep_c").cast(Dec)).as("spc"),
+        sum((col("ep_c") * (lit(100L) - col("d_pct"))).cast(Dec)).as("sdc"),
         sum((col("ep_c") * (lit(100L) - col("d_pct"))
-          * (lit(100L) + col("t_pct"))).cast(dec)).as("scc"),
+          * (lit(100L) + col("t_pct"))).cast(Dec)).as("scc"),
         sum("d_pct").as("sd"),
         count(lit(1)).as("count_order"))
       .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
@@ -1348,20 +1339,17 @@ object Warehouse {
     * month aggregate — the Q5/row-282 join discipline; bounded month
     * frame after. */
   def promotionEffectOf(lineitem: DataFrame, part: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     lineitem
       .select(col("l_partkey").as("p_partkey"),
         date_format(col("l_shipdate"), "yyyy-MM").as("month"),
-        (floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-          * (lit(100L) - floor(col("l_discount") * 100 + 0.5).cast("long")))
-          .as("net_q"))
+        netC100.as("net_q"))
       .join(broadcast(part.select(col("p_partkey"),
         (col("p_type") === "PROMO").as("is_promo"))), Seq("p_partkey"))
       .groupBy("month")
       .agg(count(lit(1)).as("n_lines"),
-        sum(when(col("is_promo"), col("net_q")).otherwise(0L).cast(dec))
+        sum(when(col("is_promo"), col("net_q")).otherwise(0L).cast(Dec))
           .as("promo_q"),
-        sum(col("net_q").cast(dec)).as("total_q"))
+        sum(col("net_q").cast(Dec)).as("total_q"))
       .select(col("month"), col("n_lines"),
         col("promo_q").cast("long").as("promo_rev_c100"),
         col("total_q").cast("long").as("total_rev_c100"),
@@ -1450,7 +1438,6 @@ object Warehouse {
                           targetNation: String = "NATION_3",
                           targetRegion: String = "AMERICA",
                           partType: String = "MEDIUM"): DataFrame = {
-    val dec = "decimal(38,0)"
     val okPart = part.filter(col("p_type") === partType)
       .select(col("p_partkey"))
     val okNation = nation
@@ -1484,7 +1471,7 @@ object Warehouse {
       .select(col("o_year"), col("n_lines"),
         TextF.microsTo4dp(col("trev")).as("revenue_total"),
         TextF.microsTo4dp(col("nrev")).as("revenue_nation"),
-        expr(s"CAST((CAST(nrev AS $dec) * 1000000) div CAST(trev AS $dec)" +
+        expr(s"CAST((CAST(nrev AS $Dec) * 1000000) div CAST(trev AS $Dec)" +
           s" AS BIGINT)").as("share_ppm"))
       .orderBy("o_year")
   }
@@ -1550,7 +1537,7 @@ object Warehouse {
   def duplicatePaymentsOf(orders: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
     val o = orders.select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
+      cents(col("o_totalprice")).as("cents"),
       to_date(col("o_orderdate")).as("day"))
     o.as("a")
       .join(o.as("b"),
@@ -1758,8 +1745,7 @@ object Warehouse {
     val perPart = lineitem
       .filter(col("l_quantity") > 0)
       .select(col("l_partkey"),
-        floor(col("l_extendedprice") / col("l_quantity") * 100 + lit(0.5))
-          .cast("long").as("uc"))
+        cents(col("l_extendedprice") / col("l_quantity")).as("uc"))
       .groupBy("l_partkey")
       .agg(count(lit(1)).as("n_lines"), min("uc").as("min_uc"),
         max("uc").as("max_uc"))
@@ -1843,18 +1829,15 @@ object Warehouse {
     * dim, quarters are calendar-bounded); both windows and the name
     * join ride that bounded frame, the supplier dim broadcasts. */
   def topSupplierShareOf(lineitem: DataFrame, supplier: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val qw = Window.partitionBy("quarter")
     val perSupp = lineitem
       .select(
         concat(year(col("l_shipdate")).cast("string"), lit("-Q"),
           quarter(col("l_shipdate")).cast("string")).as("quarter"),
         col("l_suppkey"),
-        (floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-          * (lit(100L) - floor(col("l_discount") * 100 + 0.5).cast("long")))
-          .as("net_q"))
+        netC100.as("net_q"))
       .groupBy("quarter", "l_suppkey")
-      .agg(sum(col("net_q").cast(dec)).as("rev"))
+      .agg(sum(col("net_q").cast(Dec)).as("rev"))
     perSupp
       .withColumn("max_rev", max("rev").over(qw))
       .withColumn("total_rev", sum("rev").over(qw))
@@ -1891,7 +1874,7 @@ object Warehouse {
     big
       .join(orders.select(col("o_orderkey"), col("o_custkey"),
         to_date(col("o_orderdate")).as("o_orderdate"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long")
+        cents(col("o_totalprice"))
           .as("totalprice_cents")),
         col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(customer.select(col("c_custkey"), col("c_name"))),
@@ -1916,17 +1899,16 @@ object Warehouse {
     * min/max envelopes), then ONE map-combinable year aggregate;
     * no join, no window, nothing post-shuffle beyond ≤|years| rows. */
   def discountWhatifOf(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     lineitem
       .filter(col("l_discount") >= 0.045 && col("l_discount") <= 0.075 &&
         col("l_quantity") < 24)
       .select(year(col("l_shipdate")).cast("long").as("ship_year"),
-        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("ep_c"),
-        floor(col("l_discount") * 100 + 0.5).cast("long").as("d_pct"))
+        cents(col("l_extendedprice")).as("ep_c"),
+        cents(col("l_discount")).as("d_pct"))
       .groupBy("ship_year")
       .agg(count(lit(1)).as("n_lines"),
-        sum((col("ep_c") * col("d_pct")).cast(dec)).as("forgone"),
-        sum(col("ep_c").cast(dec)).as("gross"))
+        sum((col("ep_c") * col("d_pct")).cast(Dec)).as("forgone"),
+        sum(col("ep_c").cast(Dec)).as("gross"))
       .select(col("ship_year"), col("n_lines"),
         col("forgone").cast("long").as("forgone_rev_c100"),
         col("gross").cast("long").as("gross_rev_cents"),
@@ -1967,7 +1949,7 @@ object Warehouse {
       .select(col("p_partkey"), col("p_size"))
     val unitCost = lineitem
       .select(col("l_partkey"), col("l_suppkey"),
-        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"),
+        cents(col("l_extendedprice")).as("cents"),
         col("l_quantity").cast("long").as("units"))
       .groupBy("l_partkey", "l_suppkey")
       .agg(sum("cents").as("c"), sum("units").as("u"))
@@ -2003,7 +1985,6 @@ object Warehouse {
     * correlated profit expression folds into the aggregate. */
   def nationProfitOf(lineitem: DataFrame, part: DataFrame,
       supplier: DataFrame, nation: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val suppNation = supplier
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"))
@@ -2011,16 +1992,14 @@ object Warehouse {
       .select(col("l_partkey"), col("l_suppkey"),
         year(col("l_shipdate")).cast("long").as("ship_year"),
         col("l_quantity").cast("long").as("units"),
-        (floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-          * (lit(100L) - floor(col("l_discount") * 100 + 0.5).cast("long")))
-          .as("net_c100"))
+        netC100.as("net_c100"))
       .join(part.select(col("p_partkey"),
-          floor(col("p_retailprice") * 100 + 0.5).cast("long").as("list_c")),
+          cents(col("p_retailprice")).as("list_c")),
         col("l_partkey") === col("p_partkey"))
       .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
       .groupBy("n_name", "ship_year")
-      .agg(sum(col("net_c100").cast(dec)).as("rev"),
-        sum((col("units") * col("list_c") * 100L).cast(dec)).as("list"))
+      .agg(sum(col("net_c100").cast(Dec)).as("rev"),
+        sum((col("units") * col("list_c") * 100L).cast(Dec)).as("list"))
       .select(col("n_name"), col("ship_year"),
         col("rev").cast("long").as("revenue_c100"),
         col("list").cast("long").as("list_c100"),
@@ -2048,7 +2027,6 @@ object Warehouse {
     * deterministic without a LIMIT. */
   def importantPartsOf(lineitem: DataFrame, supplier: DataFrame,
       nation: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val suppKeys = supplier
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .filter(col("n_name") === "NATION_7")
@@ -2057,11 +2035,9 @@ object Warehouse {
       .join(broadcast(suppKeys), col("l_suppkey") === col("s_suppkey"),
         "left_semi")
       .select(col("l_partkey"),
-        (floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-          * (lit(100L) - floor(col("l_discount") * 100 + 0.5).cast("long")))
-          .as("net_c100"))
+        netC100.as("net_c100"))
       .groupBy("l_partkey")
-      .agg(sum(col("net_c100").cast(dec)).as("value"))
+      .agg(sum(col("net_c100").cast(Dec)).as("value"))
     val total = perPart.agg(sum("value").as("total"))
     perPart
       .crossJoin(broadcast(total))
@@ -2204,12 +2180,11 @@ object Warehouse {
                      leadDays: Int = 7): DataFrame = {
     require(leadDays >= 1 && leadDays <= 60,
       s"leadDays in [1,60], got $leadDays")
-    val dec = "decimal(38,0)"
     val daily = lineitem
       .join(broadcast(part.select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("p_brand"), to_date(col("l_shipdate")).as("day"),
-        floor(col("l_quantity") * 100 + lit(0.5)).cast("long").as("qc"))
+        cents(col("l_quantity")).as("qc"))
       .groupBy("p_brand", "day").agg(sum("qc").as("d"))
     // NO checkpoint despite three consumers: the frame ends at an
     // exchange — ReuseExchange dedupes the fact aggregate at runtime;
@@ -2223,8 +2198,8 @@ object Warehouse {
       .select(col("p_brand"), coalesce(col("d"), lit(0L)).as("d"))
     dense.groupBy("p_brand")
       .agg(count(lit(1)).as("n_days"),
-        sum(col("d").cast(dec)).as("s"),
-        sum(expr(s"CAST(d AS $dec) * d")).as("ss"))
+        sum(col("d").cast(Dec)).as("s"),
+        sum(expr(s"CAST(d AS $Dec) * d")).as("ss"))
       .filter(col("n_days") > 1)
       .withColumn("mean_c", expr("CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE)"))
       .withColumn("sd_c", expr(

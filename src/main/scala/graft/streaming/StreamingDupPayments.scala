@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Behavior
+
 /** Streaming duplicate-payment fence: the stateful twin of the batch
   * `Warehouse.duplicatePaymentsOf` (SURVEY row 376) that fires the
   * suspect pair WHILE the second payment is still voidable, instead
@@ -43,7 +45,7 @@ object StreamingDupPayments {
       math.floor(cents * 10000L / 100.0 + 0.5) / 1e4
 
     orders.select(col("o_custkey"), col("o_orderkey"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
+        Behavior.cents(col("o_totalprice")).as("cents"),
         col("o_orderdate").as("ts"))
       .as[Ord]
       .withWatermark("ts", "1 day")
