@@ -63,11 +63,17 @@ object Behavior {
     rows
       .withColumn("base", max(when(col("ord") === 1, col("users"))).over(whole))
       .select(col("step"), col("ord"), col("users"),
-        when(col("base") === 0, lit(0.0)).otherwise(
-          floor(col("users").cast("double") / col("base").cast("double") * 100 * 100 + 0.5) / 100)
-          .as("conv_pct"))
+        convPct(col("users"), col("base")).as("conv_pct"))
       .orderBy("ord")
   }
+
+  /** A funnel step's conversion vs step 1: users / base in percent,
+    * floor-form rounded to 2 dp, and 0.0 when base is 0 (see
+    * [[funnelOf]]). */
+  private[graft] def convPct(users: Column, base: Column): Column =
+    when(base === 0, lit(0.0)).otherwise(
+      floor(users.cast("double") / base.cast("double") * 100 * 100 + 0.5)
+        / 100)
 
   /** Conversion-window funnel — [[funnelStepsOf]] with a deadline:
     * step k counts only when it lands strictly after step k−1 AND
@@ -2656,18 +2662,14 @@ object Behavior {
       }.reduce(_.unionAll(_))
     val whole = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
-    def pct(users: Column, base: Column): Column =
-      when(base === 0, lit(0.0)).otherwise(
-        floor(users.cast("double") / base.cast("double") * 100 * 100 + 0.5)
-          / 100)
     rows
       .withColumn("base_0",
         max(when(col("ord") === 1, col("users_0"))).over(whole))
       .withColumn("base_1",
         max(when(col("ord") === 1, col("users_1"))).over(whole))
       .select(col("step"), col("ord"), col("users_0"), col("users_1"),
-        pct(col("users_0"), col("base_0")).as("conv_pct_0"),
-        pct(col("users_1"), col("base_1")).as("conv_pct_1"))
+        convPct(col("users_0"), col("base_0")).as("conv_pct_0"),
+        convPct(col("users_1"), col("base_1")).as("conv_pct_1"))
       .withColumn("lift_pp",
         floor((col("conv_pct_1") - col("conv_pct_0")) * 100 + 0.5) / 100)
       .orderBy("ord")

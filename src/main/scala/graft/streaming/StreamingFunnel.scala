@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Behavior
+
 /** Streaming conversion-window funnel: the stateful twin of the batch
   * `Behavior.funnelWindowedOf` (view → click → purchase, each step
   * within `windowMinutes` of the previous — the greedy
@@ -156,9 +158,7 @@ object StreamingFunnel {
         col("r.users").as("users"))
       .withColumn("base", max(when(col("ord") === 1, col("users"))).over(whole))
       .select(col("step"), col("ord"), col("users"),
-        when(col("base") === 0, lit(0.0)).otherwise(
-          floor(col("users").cast("double") / col("base").cast("double")
-            * 100 * 100 + 0.5) / 100).as("conv_pct"))
+        Behavior.convPct(col("users"), col("base")).as("conv_pct"))
       .orderBy("ord")
   }
 }
