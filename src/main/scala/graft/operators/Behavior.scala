@@ -639,14 +639,18 @@ object Behavior {
   private[graft] def centsDown(v: Column): Column =
     floor(v * 100).cast("long")
 
-  /** The event's item id: `props.$.k` as a long, NULL when absent or
-    * not an integer. `try_cast`, because outside input can carry any
-    * JSON there and an ANSI cast would fail the whole query on one
-    * `{"k":"abc"}` (the oracles read it with TRY_CAST). */
+  /** The event's item id: `props.$.k` as a long, rounded half away
+    * from zero when fractional (`1.5` → 2, `1e3` → 1000), NULL when
+    * absent, not a number or out of range. This is how the oracles'
+    * `TRY_CAST(… AS BIGINT)` reads it; a bare cast to long would read
+    * `1.5` and `1e3` as NULL. `try_cast`, because outside input can
+    * carry any JSON there and an ANSI cast would fail the whole query
+    * on one `{"k":"abc"}`. */
   private[graft] def itemOrNull: Column =
-    get_json_object(col("props"), "$.k").try_cast("long")
+    round(get_json_object(col("props"), "$.k").try_cast("decimal(38,18)"))
+      .try_cast("long")
 
-  /** The event's item id, 0 when absent or not an integer. */
+  /** The event's item id, 0 when absent or not a number. */
   private[graft] def itemKey: Column = coalesce(itemOrNull, lit(0L))
 
   /** The per-(event_type, day) series: each event's `measure` columns

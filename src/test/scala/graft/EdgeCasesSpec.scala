@@ -193,6 +193,20 @@ class EdgeCasesSpec extends AnyFunSuite with SparkFixture {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(ctr == Map(0L -> ((1L, 2L)), 3L -> ((0L, 2L)), 7L -> ((0L, 1L))),
       s"(clicks, impressions) per item: $ctr")
+    // A fractional or exponent k rounds half away from zero, as the
+    // oracles' TRY_CAST(... AS BIGINT) reads it, instead of item 0.
+    val frac = Seq(
+      (7L, 3L, "view", "2024-01-01 12:00:00", """{"k":1.5}"""),
+      (8L, 3L, "click", "2024-01-01 12:01:00", """{"k":"1.5"}"""),
+      (9L, 3L, "view", "2024-01-01 12:02:00", """{"k":-2.5}"""),
+      (10L, 3L, "view", "2024-01-01 12:03:00", """{"k":1e3}"""))
+      .toDF("event_id", "user_id", "event_type", "t", "props")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        to_timestamp(col("t")).as("ts"), col("props"), lit(1.0).as("value"))
+    val fracCtr = graft.operators.CtrAlerts.ctrShrunkOf(frac).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(fracCtr == Map(2L -> ((1L, 1L)), -3L -> ((0L, 1L)),
+      1000L -> ((0L, 1L))), s"(clicks, impressions) per item: $fracCtr")
   }
 
   test("hybrid search: a missing query vector leaves the sparse leg standing alone") {
