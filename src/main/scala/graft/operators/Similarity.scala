@@ -42,25 +42,28 @@ object Similarity {
   val TopK = 10
   val QuerySetSize = 8
 
-  /** The `k` best rows per `key` under (`score`, `id` ascending),
-    * numbered 1..k in `rank`. Catalyst plans the `row_number() <= k`
-    * cut as a WindowGroupLimit before the shuffle, so only k rows per
-    * key move, and the id tiebreak makes the ranking deterministic. */
+  /** The `k` best rows per (`by`…, `key`) under (`score`, `id`
+    * ascending), numbered 1..k in `rank`. Catalyst plans the
+    * `row_number() <= k` cut as a WindowGroupLimit before the shuffle,
+    * so only k rows per key move, and the id tiebreak makes the
+    * ranking deterministic. */
   private[operators] def topK(scored: DataFrame, key: String, score: Column,
-                              id: String, k: Int, rank: String = "rank"): DataFrame =
-    scored.withColumn(rank,
-        row_number().over(Window.partitionBy(key).orderBy(score, col(id))))
+                              id: String, k: Int, rank: String = "rank",
+                              by: Seq[String] = Nil): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy((by :+ key).map(col): _*).orderBy(score, col(id))))
       .filter(col(rank) <= k)
 
-  /** (q_id, n_id, score, rank): the `k` nearest neighbors per query
-    * among `pairs`, which carries q_id, n_id, q_emb and the neighbor
-    * embedding `nEmb`. Scores are rounded before ranking so rank order
-    * is reproducible bit-for-bit across engines; ties break on
-    * neighbor id. */
-  private def nearest(pairs: DataFrame, nEmb: String, k: Int): DataFrame =
-    topK(pairs.select(col("q_id"), col("n_id"),
-        VectorF.roundedCosine(col("q_emb"), col(nEmb)).as("score")),
-      "q_id", col("score").desc, "n_id", k)
+  /** (by…, q_id, n_id, score, rank): the `k` nearest neighbors per
+    * query (and per `by` group) among `pairs`, which carries q_id,
+    * n_id, q_emb, the neighbor embedding `nEmb` and the `by` columns.
+    * Scores are rounded before ranking so rank order is reproducible
+    * bit-for-bit across engines; ties break on neighbor id. */
+  private def nearest(pairs: DataFrame, nEmb: String, k: Int,
+                      by: Seq[String] = Nil): DataFrame =
+    topK(pairs.select(by.map(col) ++ Seq(col("q_id"), col("n_id"),
+        VectorF.roundedCosine(col("q_emb"), col(nEmb)).as("score")): _*),
+      "q_id", col("score").desc, "n_id", k, by = by)
 
   /** [[nearest]] over every (query, other vector) pair: the query set
     * `q` (q_id, q_emb) broadcasts against `corpus` (n_id, `nEmb`). */
@@ -147,18 +150,29 @@ object Similarity {
 
   /** [[annIvfOf]] with the probe count as a parameter — the registered
     * query pins nprobe = [[IvfProbes]]; [[nprobeSweepOf]] walks it. */
-  def annIvfAt(embeddings: DataFrame, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+  def annIvfAt(embeddings: DataFrame, nprobe: Int): DataFrame =
+    nearest(ivfPairs(embeddings, Seq(nprobe)), "n_emb", TopK)
+      .select(col("q_id"), col("n_id"), col("score"), col("rank"))
+      .orderBy("q_id", "rank")
+
+  /** (c_id, q_id, q_emb, rn, nprobe, n_id, n_emb): the candidate pairs
+    * of every probe count in `probes` at once. The corpus is scored
+    * against the centroids once for its cells and the query set once
+    * for its probes; the query set ranks its max(probes) nearest cells
+    * and each probe count keeps the first `nprobe` of them. The cut
+    * compares `rn` with the `nprobe` column, not a literal, so the
+    * ranking below it is the same for every count. */
+  private def ivfPairs(embeddings: DataFrame, probes: Seq[Int]): DataFrame = {
+    probes.foreach(np => require(np >= 1, s"nprobe must be >= 1, got $np"))
     val scores = ivfScores(embeddings)
     val cells = ivfCells(scores, 1)
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("c_id"))
-    val probes = broadcast(
-      ivfCells(scores.filter(col("vec_id") < QuerySetSize), nprobe)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("c_id")))
-    nearest(probes.join(cells, Seq("c_id")).filter(col("q_id") =!= col("n_id")),
-        "n_emb", TopK)
-      .select(col("q_id"), col("n_id"), col("score"), col("rank"))
-      .orderBy("q_id", "rank")
+    val legs = broadcast(
+      ivfCells(scores.filter(col("vec_id") < QuerySetSize), probes.max)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+          col("c_id"), col("rn"), explode(array(probes.map(lit): _*)).as("nprobe"))
+        .filter(col("rn") <= col("nprobe")))
+    legs.join(cells, Seq("c_id")).filter(col("q_id") =!= col("n_id"))
   }
 
   /** Int8 scalar quantization of the embedding column — the compression
@@ -297,30 +311,33 @@ object Similarity {
     * deployment tunes): for nprobe 1..4, micro-averaged recall@k of
     * the IVF result against [[knnTopkOf]]'s brute-force truth, in exact
     * ppm ((Σhits·10⁶) div Σk — integer, order-free). The ground truth
-    * computes ONCE; each sweep point reuses [[annIvfAt]] unchanged,
-    * so the curve can never drift from the operator it audits.
-    * Monotonicity in nprobe is structural (more cells ⊇ fewer) and
-    * spec-pinned.
+    * computes ONCE; every sweep point ranks the [[ivfPairs]] frame
+    * [[annIvfAt]] ranks, per (nprobe, query), so the curve can never
+    * drift from the operator it audits and the corpus is scored once
+    * for all points. Monotonicity in nprobe is structural (more cells
+    * ⊇ fewer) and spec-pinned. An empty truth (fewer than two
+    * vectors) gives no rows.
     *
     * Shape: Q = [[QuerySetSize]] bounds every leg (the knnTopkOf
-    * broadcast contract); 4 IVF passes over the bucketed frame —
-    * audit-priced like every sweep in the family. */
+    * broadcast contract); one IVF scoring pass and one top-k over all
+    * points — audit-priced like every sweep in the family. */
   def nprobeSweepOf(embeddings: DataFrame,
                     probes: Seq[Int] = Seq(1, 2, 3, 4)): DataFrame = {
     require(probes.nonEmpty && probes.forall(p => p >= 1 && p <= IvfCells),
       s"probes must be within 1..$IvfCells: $probes")
     val exact = knnTopkOf(embeddings).select(col("q_id"), col("n_id"))
-      .localCheckpoint(false) // one truth, four consumers
-    probes.map { np =>
-      val approx = annIvfAt(embeddings, np)
-        .select(col("q_id"), col("n_id")).withColumn("hit", lit(1L))
-      exact.join(approx, Seq("q_id", "n_id"), "left")
-        .agg(count(lit(1)).as("k_total"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .select(lit(np).as("nprobe"), col("k_total"), col("hits"),
-          expr("CAST((hits * 1000000) div nullif(k_total, 0) AS BIGINT)")
-            .as("recall_ppm"))
-    }.reduce(_.unionByName(_)).orderBy("nprobe")
+    val approx = nearest(ivfPairs(embeddings, probes), "n_emb", TopK, Seq("nprobe"))
+      .select(col("nprobe"), col("q_id"), col("n_id")).withColumn("hit", lit(1L))
+    exact.select(col("q_id"), col("n_id"),
+        explode(array(probes.map(lit): _*)).as("nprobe"))
+      .join(approx, Seq("nprobe", "q_id", "n_id"), "left")
+      .groupBy("nprobe")
+      .agg(count(lit(1)).as("k_total"),
+        sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      .select(col("nprobe"), col("k_total"), col("hits"),
+        expr("CAST((hits * 1000000) div nullif(k_total, 0) AS BIGINT)")
+          .as("recall_ppm"))
+      .orderBy("nprobe")
   }
 
   /** IVF cell-balance audit — the occupancy read that SIZES
