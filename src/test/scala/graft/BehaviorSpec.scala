@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1602,5 +1602,20 @@ class BehaviorSpec extends AnyFunSuite with SparkFixture {
         to_timestamp(lit("2024-01-01 00:00:00")).as("ts"), col("value"))
     val ne = Behavior.tostEquivalenceOf(shifted).collect()(0)
     assert(!ne.getBoolean(7), s"a 10-unit lift is not equivalence: $ne")
+  }
+
+  test("money grids: cents, micro and the floor grids on boundary doubles") {
+    // Expected values are IEEE-double arithmetic, as DuckDB's
+    // FLOOR(x * 100 + 0.5) and FLOOR(x * 1e6) compute them.
+    val xs = Seq(0.125, -0.125, 2.675, 1.005, -999.995, 0.005).toDF("x")
+    def grid(f: Column => Column) =
+      xs.select(f(col("x"))).collect().map(_.getLong(0)).toSeq
+    assert(grid(Behavior.cents) == Seq(13L, -12L, 268L, 100L, -99999L, 1L))
+    assert(grid(Behavior.centsDown) ==
+      Seq(12L, -13L, 267L, 100L, -100000L, 0L))
+    assert(grid(Behavior.micro) ==
+      Seq(125000L, -125000L, 2675000L, 1005000L, -999995000L, 5000L))
+    assert(grid(Behavior.microDown) ==
+      Seq(125000L, -125000L, 2675000L, 1004999L, -999995000L, 5000L))
   }
 }
