@@ -11,6 +11,7 @@ the same plan compare equal:
 
     expression ids   name#123 / name#123L      -> name#
     lambda variables lambda x_194              -> lambda x_N
+    CSE aliases      _common_expr_152          -> _common_expr_N
     plan ids         [plan_id=123]             -> [plan_id=N]
     RDD ids          MapPartitionsRDD[123]     -> MapPartitionsRDD[N]
     lambda objects   X$$$Lambda$46/0x7fd6a1@1f -> X$$$Lambda
@@ -51,6 +52,8 @@ RULES = [
     # Spark numbers lambda variables from one JVM-wide counter, so the
     # names shift with every lambda an earlier query built.
     (re.compile(r"\blambda ([a-z]+)_\d+"), r"lambda \1_N"),
+    # Common-subexpression aliases come from a JVM-wide counter too.
+    (re.compile(r"\b_common_expr_\d+"), "_common_expr_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\$Lambda\$?\d*/0x[0-9a-f]+(?:@[0-9a-f]+)?"), "$Lambda"),
