@@ -97,6 +97,12 @@ object TextF {
   def round4HalfUp(c: Column): Column =
     floor(c * lit(1e4) + lit(0.5)).cast("double") / lit(1e4)
 
+  /** [[round4HalfUp]]'s scalar twin, for JVM-side state machines. It
+    * equals the Column form on every finite double whose 1e4 multiple
+    * fits a long; the Column form's long step saturates beyond that
+    * and reads NaN as 0. */
+  def round4HalfUp(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
+
   /** [[round4HalfUp]] at 6 dp, for signed values in [−1, 1] (rank
     * correlations, modularity): `floor` makes halves round toward +∞
     * regardless of sign — a DIRECTED half-up, identical in both
@@ -104,12 +110,18 @@ object TextF {
   def round6HalfUp(c: Column): Column =
     floor(c * lit(1e6) + lit(0.5)).cast("double") / lit(1e6)
 
+  /** [[round6HalfUp]]'s scalar twin, with [[round4HalfUp]]'s range. */
+  def round6HalfUp(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
   /** Integer micro-unit sum → value at 4 dp: `floor(q/100 + 0.5)/1e4`
     * is the same double in every engine (cf. [[round4HalfUp]]). The
     * ONE implementation of the micros→4dp contract — operators whose
     * oracles mirror it must call this, not inline a copy. */
   def microsTo4dp(q: Column): Column =
     floor(q.cast("double") / lit(100.0) + lit(0.5)) / lit(1e4)
+
+  /** [[microsTo4dp]]'s scalar twin; equal to it on every long. */
+  def microsTo4dp(q: Long): Double = math.floor(q / 100.0 + 0.5) / 1e4
 
   /** Heuristic quality score in [0,1]: favors mid-length docs with low
     * punctuation noise and a sane stopword ratio. Deterministic and

@@ -17,6 +17,10 @@ import graft.sources.Sinks
   */
 object EventStreamJob {
 
+  /** The watermark delay of every windowed operator here: events later
+    * than this are dropped, and window and join state is reclaimed. */
+  private val Lateness = "2 hours"
+
   /** Windowed distinct-user reach per event type: 1-hour tumbling
     * windows, approx_count_distinct so the per-window state is a
     * fixed-size HLL sketch (merged incrementally across micro-batches)
@@ -25,7 +29,7 @@ object EventStreamJob {
     * (CtrAlerts.approxDistinctUsers). */
   def windowedReach(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(approx_count_distinct("user_id", 0.02).as("approx_users"))
       .select(col("window.start").as("window_start"),
@@ -45,7 +49,7 @@ object EventStreamJob {
                           gapMinutes: Int = 30): DataFrame = {
     require(gapMinutes > 0, s"gapMinutes must be positive, got $gapMinutes")
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .groupBy(session_window(col("ts"), s"$gapMinutes minutes"),
         col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -64,7 +68,7 @@ object EventStreamJob {
     * watermark bounds window state exactly like [[windowedReach]]. */
   def windowedPercentiles(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         expr("approx_percentile(value, array(0.5D, 0.9D, 0.99D), 10000)")
@@ -96,10 +100,10 @@ object EventStreamJob {
         "or matches near the horizon are silently dropped")
     val v = views
       .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "2 hours")
+      .withWatermark("view_ts", Lateness)
     val c = clicks
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
+      .withWatermark("click_ts", Lateness)
     c.join(v,
       expr(s"""c_user = v_user AND
                click_ts >= view_ts AND
@@ -165,7 +169,7 @@ object EventStreamJob {
   def qualityMonitor(docs: DataFrame,
                      lowBar: Double = 0.5): DataFrame =
     docs
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .select(col("ts"), col("source"),
         floor(graft.functions.TextF.qualityScore(
           col("text"), graft.operators.TextAnalysis.Stopwords) * 1e4 + 0.5)
@@ -231,7 +235,7 @@ object EventStreamJob {
         - c.cast("double") / col("n_events").cast("double")) * 1e9 + 0.5)
         .cast("long"))
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .join(ref, Seq("event_type")) // stream-static: stateless per batch
       .select(col("ts"), col("event_type"), bucket(clamp = true).as("b"),
         col("n_ref"), col("ref_cnts"))
@@ -250,7 +254,7 @@ object EventStreamJob {
     * reclaimed — unbounded state would OOM a 100 TB stream). */
   def windowedCtr(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "1 hour"), col("user_id"))
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("clicks"),

@@ -26,6 +26,14 @@ package graft.streaming
   *     keys' progress and can close a day the key still owes late
   *     events inside the watermark (the bug StreamingSpec caught on
   *     the EWMA-family monitor before this contract existed).
+  *  4. '''The day clock and the grids.''' A day is [[DayMs]] of
+  *     event time (UTC epoch days, [[epochDay]] / [[epochDayOfMicros]]),
+  *     and a monitor's numbers leave it on the batch family's named
+  *     grids: `Behavior.micro` for values folded as integer micros,
+  *     `TextF.round4HalfUp` / `round6HalfUp` / `microsTo4dp` for the
+  *     rounded outputs, `Behavior.arm2` for an experiment arm. Each is
+  *     the scalar twin of the Column a batch twin rounds through, so
+  *     a stream and its batch twin agree by construction.
   *
   * State codecs stay case classes of longs/doubles/flags (constant
   * size per key — product encoders, no Kryo), which is what keeps
@@ -67,6 +75,17 @@ object SequentialMonitor {
     * never a watermark-relative offset (see object doc). Pass to
     * `GroupState.setTimeoutTimestamp` with the stream's watermark
     * delay as the additional duration. */
-  def dayCloseTs(openDay: Long, dayMs: Long = 86400000L): Long =
-    (openDay + 1L) * dayMs - 1L
+  def dayCloseTs(openDay: Long): Long = (openDay + 1L) * DayMs - 1L
+
+  /** Contract leg 4: one day of event time, in milliseconds. */
+  val DayMs: Long = 86400000L
+
+  /** [[DayMs]] in microseconds, for µs-grain session sweeps. */
+  val DayUs: Long = DayMs * 1000L
+
+  /** The UTC epoch day of an event-time millisecond. */
+  def epochDay(ms: Long): Long = Math.floorDiv(ms, DayMs)
+
+  /** The UTC epoch day of an event-time microsecond. */
+  def epochDayOfMicros(us: Long): Long = Math.floorDiv(us, DayUs)
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import SequentialMonitor.{DayUs, epochDayOfMicros}
+
 /** Streaming peak-concurrency gauge — the live twin of
   * `EventAnalytics.peakConcurrencyOf` (the capacity number ops watch on
   * a wall: provision for the MAX, bill for the mean), fed by the
@@ -47,8 +49,6 @@ object StreamingConcurrency {
   case class DayPeak(day: java.sql.Date, n_sessions_started: Long,
                      peak_concurrent: Long)
 
-  private val DayUs = 86400000000L
-
   /** @param lateness watermark delay on the session END time; must be
     *                 ≥ the max session span for exact day attribution */
   def dayPeaks(sessions: DataFrame, lateness: String = "30 minutes"): Dataset[DayPeak] = {
@@ -70,8 +70,8 @@ object StreamingConcurrency {
               (s.start_ts.getNanos % 1000000) / 1000
             val eu = s.end_ts.getTime * 1000L +
               (s.end_ts.getNanos % 1000000) / 1000 + 1L
-            Seq(Pending(Math.floorDiv(su, DayUs), su, 1),
-              Pending(Math.floorDiv(eu, DayUs), eu, -1))
+            Seq(Pending(epochDayOfMicros(su), su, 1),
+              Pending(epochDayOfMicros(eu), eu, -1))
           }.toVector
           val all = prev.pending ++ fresh
           // Close every day whose midnight the watermark has passed,

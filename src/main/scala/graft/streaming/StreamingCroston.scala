@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import SequentialMonitor.{DayMs, epochDay}
+
 /** Streaming Croston demand-rate monitor: the stateful twin of the
   * batch `EventAnalytics.crostonBacktestOf` FOLD (SURVEY row 369) —
   * per item, the z/p intermittent-demand recursion updated as demand
@@ -54,12 +56,9 @@ object StreamingCroston {
   case class Rate(item: Long, day: Date, n_demand: Long, z_m: Long,
                   p_m: Long, rate_mpd: Long)
 
-  private val DayMs = 86400000L
-
   /** `events` needs (event_type, ts, props); only purchases count. */
   def rates(events: DataFrame): Dataset[Rate] = {
     import events.sparkSession.implicits._
-    val dayMs = DayMs
 
     // Fold the oldest bucket into z/p, emit its rate, shift d1 down.
     def closeOldest(item: Long, st: St, nd: Long): (St, Long, Rate) = {
@@ -69,7 +68,7 @@ object StreamingCroston {
         else ((ym + st.z) >> 1, ((st.d0 - st.last) * 1000L + st.p) >> 1)
       val st2 = St(st.d1, st.c1, -1L, 0L, z2, p2, st.d0, first = false)
       val nd2 = nd + 1L
-      (st2, nd2, Rate(item, new Date(st.d0 * dayMs), nd2, z2, p2,
+      (st2, nd2, Rate(item, new Date(st.d0 * DayMs), nd2, z2, p2,
         (z2 * 1000L) / p2))
     }
 
@@ -93,8 +92,8 @@ object StreamingCroston {
             cur = st2; nd = nd2; out += rate
           }
           if (!state.hasTimedOut) {
-            val days = evs.map(e => Math.floorDiv(e.ts.getTime, dayMs))
-              .toArray.sorted
+            val days = SequentialMonitor.ordered(evs.map(_.ts.getTime))(
+              t => (t, 0L)).map(epochDay)
             days.foreach { d =>
               if (cur.d0 == -1L) cur = cur.copy(d0 = d, c0 = 1L)
               else if (d == cur.d0) cur = cur.copy(c0 = cur.c0 + 1L)
@@ -123,10 +122,10 @@ object StreamingCroston {
           // Watermark-gated ordered closes: a bucket is final once
           // the watermark passes its day end (1-day delay already
           // inside the watermark itself).
-          while (cur.d0 >= 0L && (cur.d0 + 1L) * dayMs <= wm) close()
+          while (cur.d0 >= 0L && (cur.d0 + 1L) * DayMs <= wm) close()
           state.update((cur, nd))
           if (cur.d0 >= 0L)
-            state.setTimeoutTimestamp((cur.d0 + 1L) * dayMs)
+            state.setTimeoutTimestamp((cur.d0 + 1L) * DayMs)
           out.result().iterator
       }
   }

@@ -6,6 +6,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.microsTo4dp
+import graft.operators.Behavior
+import SequentialMonitor.{DayMs, epochDay}
+
 /** Streaming CUSUM changepoint monitor: the stateful twin of the batch
   * `EventAnalytics.cusumChangepointOf` (SURVEY row 169) — per event
   * type, freeze μ₀ as the integer-micro mean of the first `baseline`
@@ -46,16 +50,10 @@ object StreamingCusum {
   case class Alarm(event_type: String, changepoint_day: Date,
                    revenue: Double, baseline_mean: Double, cusum: Double)
 
-  private val DayMs = 86400000L
-
   def alarms(events: DataFrame, baseline: Int = 7,
              h: Long = 1L): Dataset[Alarm] = {
     require(baseline > 0 && h > 0, s"need positive baseline/h, got $baseline/$h")
     import events.sparkSession.implicits._
-    // local (not object-level): the state closure must not capture the
-    // enclosing object — Scala objects are not Serializable
-    def to4dp(q: Long): Double = math.floor(q / 100.0 + 0.5) / 1e4
-    val dayMs = DayMs
 
     /** Fold one closed (day, qrev) into the state; emit at most one
       * alarm (the first crossing). Buffered baseline days replay in
@@ -66,7 +64,8 @@ object StreamingCusum {
           val s2 = st.s + (qrev - mu)
           if (!st.fired && math.abs(s2) > h * mu)
             (st.copy(s = s2, fired = true), Some(Alarm("", // keyed later
-              new Date(day * dayMs), to4dp(qrev), to4dp(mu), to4dp(s2))))
+              new Date(day * DayMs), microsTo4dp(qrev), microsTo4dp(mu),
+              microsTo4dp(s2))))
           else (st.copy(s = s2), None)
         case None =>
           val buf = ((day, qrev) :: st.buffered).sortBy(_._1)
@@ -108,8 +107,8 @@ object StreamingCusum {
             var cur = state.getOption.getOrElse(S(-1L, 0L, Nil, None, 0L, false))
             val out = Vector.newBuilder[Alarm]
             sorted.foreach { case (t, v) =>
-              val day = Math.floorDiv(t, dayMs)
-              val qv = math.floor(v * 1e6 + 0.5).toLong
+              val day = epochDay(t)
+              val qv = Behavior.micro(v)
               if (cur.openDay == -1L) cur = cur.copy(openDay = day, openPartial = qv)
               else if (day == cur.openDay)
                 cur = cur.copy(openPartial = cur.openPartial + qv)
@@ -128,7 +127,7 @@ object StreamingCusum {
               // event-time-anchored close (SequentialMonitor leg 3):
               // the open day's own end, never a watermark offset
               state.setTimeoutTimestamp(
-                SequentialMonitor.dayCloseTs(cur.openDay, dayMs), "1 day")
+                SequentialMonitor.dayCloseTs(cur.openDay), "1 day")
             out.result().iterator
           }
       }

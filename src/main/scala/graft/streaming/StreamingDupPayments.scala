@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.microsTo4dp
 import graft.operators.Behavior
+import SequentialMonitor.{DayMs, epochDay}
 
 /** Streaming duplicate-payment fence: the stateful twin of the batch
   * `Warehouse.duplicatePaymentsOf` (SURVEY row 376) that fires the
@@ -34,15 +36,10 @@ object StreamingDupPayments {
   case class Pair(o_custkey: Long, orderkey_a: Long, orderkey_b: Long,
                   gap_days: Long, risk_usd: Double)
 
-  private val DayMs = 86400000L
-
   def pairs(orders: DataFrame, windowDays: Int = 7): Dataset[Pair] = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
     import orders.sparkSession.implicits._
-    val dayMs = DayMs
     val w = windowDays.toLong
-    def to4dp(cents: Long): Double =
-      math.floor(cents * 10000L / 100.0 + 0.5) / 1e4
 
     orders.select(col("o_custkey"), col("o_orderkey"),
         Behavior.cents(col("o_totalprice")).as("cents"),
@@ -58,9 +55,9 @@ object StreamingDupPayments {
             Iterator.empty
           } else {
             // (orderkey, cents, day); process in (day, orderkey) order
-            val arriving = evs.map(o =>
-              (o.o_orderkey, o.cents, Math.floorDiv(o.ts.getTime, dayMs)))
-              .toArray.sortBy(t => (t._3, t._1))
+            val arriving = SequentialMonitor.ordered(evs.map(o =>
+              (o.o_orderkey, o.cents, epochDay(o.ts.getTime))))(
+              t => (t._3, t._1))
             var live = state.getOption.getOrElse(Nil)
             val out = Vector.newBuilder[Pair]
             arriving.foreach { case (ok, c, d) =>
@@ -70,7 +67,7 @@ object StreamingDupPayments {
                 val risk = math.min(c, c2)
                 if (ok2 != ok && gap <= w && dc * 100L <= risk)
                   out += Pair(cust, math.min(ok, ok2), math.max(ok, ok2),
-                    gap, to4dp(risk))
+                    gap, microsTo4dp(risk * 10000L))
               }
               live = (ok, c, d) :: live
               val newest = live.map(_._3).max
@@ -81,7 +78,7 @@ object StreamingDupPayments {
             }
             state.update(live)
             val newest = live.map(_._3).max
-            state.setTimeoutTimestamp((newest + w + 1L) * dayMs, "1 day")
+            state.setTimeoutTimestamp((newest + w + 1L) * DayMs, "1 day")
             out.result().iterator
           }
       }

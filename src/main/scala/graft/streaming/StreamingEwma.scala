@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Behavior
+
 /** Streaming EWMA anomaly smoother: the stateful twin of the batch
   * `EventAnalytics.ewmaSmoothOf` (λ = 1/2) over tumbling event-time
   * windows, flagging a window whose total departs from the smoothed
@@ -60,13 +62,14 @@ object StreamingEwma {
             state.remove()
             Iterator.single(emit(et, s.windowStart, s.partialMicros, s.ewmaMicros))
           } else {
-            // shuffle-ordered batch → fold in event-time order
-            val sorted = evs.map(e => (e.ts.getTime, e.value)).toArray.sortBy(_._1)
+            // shared fold-order contract (SequentialMonitor leg 1)
+            val sorted = SequentialMonitor.ordered(
+              evs.map(e => (e.ts.getTime, e.value)))(p => (p._1, 0L))
             var cur = state.getOption
             val out = Vector.newBuilder[Smoothed]
             sorted.foreach { case (t, v) =>
               val ws = t - java.lang.Math.floorMod(t, winMs)
-              val qv = math.floor(v * 1e6 + 0.5).toLong
+              val qv = Behavior.micro(v)
               cur match {
                 case Some(s) if ws == s.windowStart =>
                   cur = Some(s.copy(partialMicros = s.partialMicros + qv))

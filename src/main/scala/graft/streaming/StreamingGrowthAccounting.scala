@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import SequentialMonitor.{DayMs, epochDay}
+
 /** Streaming growth-accounting gauge — the live twin of
   * `Behavior.growthAccountingOf` (SURVEY row 316): every active
   * user-day classifies new / retained / resurrected as it ARRIVES,
@@ -32,8 +34,6 @@ object StreamingGrowthAccounting {
   case class Cls(day: Timestamp, cls: String)
   case class St(last: Long, churned: Boolean)
 
-  private val DayMs = 86400000L
-
   /** The classified user-day stream (exposed for tests — the
     * [[StreamingGrowth.firstSeenUsers]] pattern). Emits one row per
     * (user, active day) plus the churn rows; event time = the day's
@@ -56,7 +56,7 @@ object StreamingGrowthAccounting {
             state.update(St(st.last, churned = true))
             Iterator.single(Cls(midnight(st.last + 1), "churned"))
           } else {
-            val days = evs.map(e => Math.floorDiv(e.ts.getTime, DayMs))
+            val days = evs.map(e => epochDay(e.ts.getTime))
               .toVector.distinct.sorted
             var st = state.getOption.getOrElse(St(Long.MinValue, churned = true))
             val out = Vector.newBuilder[Cls]

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.round4HalfUp
+
 /** Streaming inter-arrival monitor: the stateful twin of the batch
   * gap-percentile report (`EventAnalytics.interarrivalPercentilesOf`,
   * SURVEY row 225) — per event type, the live read of "how clumpy is
@@ -45,6 +47,10 @@ object StreamingInterarrival {
 
   private val Buckets = 45
 
+  /** Allowed lateness: the watermark delay, and how long past a type's
+    * last event its state lives. */
+  private val LatenessMs = 7200000L // 2 hours
+
   /** floor(log2(gap))+1 clamped to the table; gap 0 → bucket 0. */
   private def bucketOf(gapUs: Long): Int =
     if (gapUs <= 0L) 0
@@ -53,6 +59,7 @@ object StreamingInterarrival {
   def snapshots(events: DataFrame): Dataset[Snapshot] = {
     import events.sparkSession.implicits._
     val buckets = Buckets
+    val latenessMs = LatenessMs
 
     // Bucket upper bound 2^b µs → seconds on the 4-dp half-up grid.
     def quantile(hist: Array[Long], n: Long, q: Double): Double = {
@@ -61,7 +68,7 @@ object StreamingInterarrival {
       var b = 0
       while (b < buckets && cum + hist(b) < need) { cum += hist(b); b += 1 }
       val boundUs = if (b == 0) 1L else 1L << math.min(b, 62)
-      math.floor(boundUs / 1e6 * 1e4 + 0.5) / 1e4
+      round4HalfUp(boundUs / 1e6)
     }
     def snap(et: String, st: S): Snapshot =
       Snapshot(et, st.nGaps, st.nLate,
@@ -70,7 +77,7 @@ object StreamingInterarrival {
         quantile(st.hist, st.nGaps, 0.99))
 
     events.select(col("event_type"), col("ts")).as[Ev]
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", s"$LatenessMs milliseconds")
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[S, Snapshot](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -80,7 +87,8 @@ object StreamingInterarrival {
             state.remove() // final snapshot; a reactivated type restarts
             if (st.nGaps > 0) Iterator(snap(et, st)) else Iterator.empty
           } else {
-            val sorted = evs.map(_.ts.getTime * 1000L).toArray.sorted
+            val sorted = SequentialMonitor.ordered(evs.map(_.ts.getTime))(
+              t => (t, 0L)).map(_ * 1000L)
             var st = state.getOption.getOrElse(
               S(Long.MinValue, 0L, 0L, new Array[Long](buckets)))
             val hist = st.hist.clone()
@@ -101,7 +109,7 @@ object StreamingInterarrival {
             // (caught by StreamingSpec: gaps reset between batches).
             if (last != Long.MinValue)
               state.setTimeoutTimestamp(
-                math.max(last / 1000L + 7200000L,
+                math.max(last / 1000L + latenessMs,
                   state.getCurrentWatermarkMs() + 1L))
             if (gaps > 0 || late > 0) Iterator(snap(et, st))
             else Iterator.empty

@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.microsTo4dp
+import graft.operators.Behavior
+
 /** Streaming Page–Hinkley mean-shift detector (Page '54, the Hinkley
   * sequential form) — the PER-OBSERVATION drift monitor beside
   * [[StreamingCusum]]'s day-granular changepoint alarm: CUSUM needs a
@@ -50,9 +53,8 @@ object StreamingPageHinkley {
     import events.sparkSession.implicits._
     // local vals: the state closure must not capture the enclosing
     // object (Scala objects are not Serializable)
-    val dq = math.floor(delta * 1e6 + 0.5).toLong
-    val lq = math.floor(lambda * 1e6 + 0.5).toLong
-    def r4(q: Long): Double = math.floor(q / 100.0 + 0.5) / 1e4
+    val dq = Behavior.micro(delta)
+    val lq = Behavior.micro(lambda)
 
     events.select(col("event_type"), col("ts"), col("event_id"),
         col("value"))
@@ -65,7 +67,7 @@ object StreamingPageHinkley {
           val (cur, out) = SequentialMonitor.latchedFold[Obs, St, Alarm](
             obs, state.getOption.getOrElse(St(0L, 0L, 0L, 0L, 0L, false)))(
             o => (o.ts.getTime, o.event_id))(_.fired) { (st, o) =>
-            val q = math.floor(o.value * 1e6 + 0.5).toLong
+            val q = Behavior.micro(o.value)
             val n = st.n + 1
             val sum = st.sum + q
             val mean = sum / n // trunc-toward-zero running mean
@@ -75,10 +77,12 @@ object StreamingPageHinkley {
             val nxt = St(n, sum, m, minM, maxM, false)
             if (m - minM > lq)
               (nxt.copy(fired = true),
-                Some(Alarm(et, "up", n, r4(mean), r4(m - minM))))
+                Some(Alarm(et, "up", n, microsTo4dp(mean),
+                  microsTo4dp(m - minM))))
             else if (maxM - m > lq)
               (nxt.copy(fired = true),
-                Some(Alarm(et, "down", n, r4(mean), r4(maxM - m))))
+                Some(Alarm(et, "down", n, microsTo4dp(mean),
+                  microsTo4dp(maxM - m))))
             else (nxt, None)
           }
           state.update(cur)

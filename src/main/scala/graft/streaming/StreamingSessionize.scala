@@ -39,7 +39,7 @@ object StreamingSessionize {
     val gapMs = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
     val gapMillis =
-      gapMs.days * 86400000L + gapMs.microseconds / 1000L
+      gapMs.days * SequentialMonitor.DayMs + gapMs.microseconds / 1000L
     require(gapMs.months == 0 && gapMillis > 0,
       s"gap must be a positive sub-month duration, got '$gap'")
 

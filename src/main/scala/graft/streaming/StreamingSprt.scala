@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.round4HalfUp
+
 /** Streaming SPRT (Wald '45) two-arm volume monitor — the LIVE
   * sequential decision the batch experiment family (ab_test,
   * mantel_haenszel, cochran_armitage) can only render nightly: each
@@ -54,7 +56,6 @@ object StreamingSprt {
     val bndB = math.log(beta / (1 - alpha))
     val up = math.log(p1 / p0)
     val dn = math.log((1 - p1) / (1 - p0))
-    def r4(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
 
     events.filter(col("event_type") === monitored)
       .select(col("event_type"), col("ts"),
@@ -75,11 +76,11 @@ object StreamingSprt {
             if (nxt.llr >= bndA)
               (nxt.copy(decided = true),
                 Some(Decision(et, "accept_h1", nxt.n, nxt.nTreated,
-                  r4(nxt.llr))))
+                  round4HalfUp(nxt.llr))))
             else if (nxt.llr <= bndB)
               (nxt.copy(decided = true),
                 Some(Decision(et, "accept_h0", nxt.n, nxt.nTreated,
-                  r4(nxt.llr))))
+                  round4HalfUp(nxt.llr))))
             else (nxt, None)
           }
           state.update(cur)

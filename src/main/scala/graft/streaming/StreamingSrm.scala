@@ -1,16 +1,18 @@
 package graft.streaming
 
-import java.security.MessageDigest
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.round6HalfUp
+import graft.operators.Behavior
+
 /** Streaming sample-ratio-mismatch (SRM) monitor: the sequential twin
   * of the batch `Behavior.srmCheckOf` — per event type, count arriving
-  * events by md5 arm (the SAME "ab:" parity `Behavior.arm2` and every
-  * experiment op share) and latch ONE alarm the first time the 50/50
+  * events by `Behavior.arm2` (the md5 arm every experiment op
+  * shares) and latch ONE alarm the first time the 50/50
   * chi-square (n0 − n1)²/(n0 + n1) crosses 10.828 (χ²₁ at α = 10⁻³ —
   * the industry SRM alpha: an SRM alarm invalidates the whole
   * experiment, so it must be an order of magnitude stricter than the
@@ -38,22 +40,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingSrm {
 
   case class Ev(event_type: String, ts: Timestamp, event_id: Long,
-                user_id: Long)
+                arm: Int)
 
   case class S(n0: Long, n1: Long, fired: Boolean)
 
   case class Alarm(event_type: String, ts: Timestamp, n0: Long, n1: Long,
                    chi2: Double)
-
-  /** `Behavior.arm2`'s md5 parity, computed JVM-side: first 8 hex
-    * chars of md5("ab:" + user) as a long, mod 2 — bit-identical to
-    * the SQL `conv(substring(md5(..), 1, 8), 16, 10) % 2`. */
-  def arm(userId: Long): Long = {
-    val hex = MessageDigest.getInstance("MD5")
-      .digest(s"ab:$userId".getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex, 16) % 2L
-  }
 
   def alarms(events: DataFrame, minN: Long = 200L,
              threshold: Double = 10.828): Dataset[Alarm] = {
@@ -61,10 +53,9 @@ object StreamingSrm {
     import events.sparkSession.implicits._
     val minN0 = minN
     val thr = threshold
-    val armF = (u: Long) => arm(u)
 
     events.select(col("event_type"), col("ts"), col("event_id"),
-        col("user_id")).as[Ev]
+        Behavior.arm2(col("user_id")).cast("int").as("arm")).as[Ev]
       .withWatermark("ts", "1 day")
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[S, Alarm](
@@ -73,7 +64,7 @@ object StreamingSrm {
           val init = state.getOption.getOrElse(S(0L, 0L, fired = false))
           val (nxt, out) = SequentialMonitor.latchedFold[Ev, S, Alarm](
             evs, init)(e => (e.ts.getTime, e.event_id))(_.fired) { (st, e) =>
-            val st2 = if (armF(e.user_id) == 0L) st.copy(n0 = st.n0 + 1)
+            val st2 = if (e.arm == 0) st.copy(n0 = st.n0 + 1)
                       else st.copy(n1 = st.n1 + 1)
             val n = st2.n0 + st2.n1
             val d = (st2.n0 - st2.n1).toDouble
@@ -81,7 +72,7 @@ object StreamingSrm {
             if (n >= minN0 && chi2 > thr)
               (st2.copy(fired = true),
                 Some(Alarm(et, e.ts, st2.n0, st2.n1,
-                  math.floor(chi2 * 1e6 + 0.5) / 1e6)))
+                  round6HalfUp(chi2))))
             else (st2, None)
           }
           state.update(nxt)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.round6HalfUp
+
 /** Streaming TOST equivalence gauge — the LIVE twin of
   * [[graft.operators.Behavior.tostEquivalenceOf]] (row 459), and the
   * read a progressive rollout actually wants DURING the ramp: not
@@ -52,7 +54,6 @@ object StreamingTost {
     import events.sparkSession.implicits._
     // local: the state closure must not capture the enclosing object
     val mf = marginFrac
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
     events
       .select(col("event_type"), col("ts"), col("user_id"),
@@ -93,9 +94,9 @@ object StreamingTost {
             val ok = !zl.isNaN && !zu.isNaN &&
               zl > 1.644854 && zu > 1.644854
             Iterator.single(Gauge(et, st.n0, st.n1,
-              r6((m1 - m0) / 100), r6(delta / 100),
-              if (zl.isNaN) Double.NaN else r6(zl),
-              if (zu.isNaN) Double.NaN else r6(zu), ok))
+              round6HalfUp((m1 - m0) / 100), round6HalfUp(delta / 100),
+              if (zl.isNaN) Double.NaN else round6HalfUp(zl),
+              if (zu.isNaN) Double.NaN else round6HalfUp(zu), ok))
           }
       }
   }

@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextF.round4HalfUp
+import SequentialMonitor.DayUs
+
 /** Streaming TWAP-concurrency gauge — the live twin of
   * `EventAnalytics.twapConcurrencyOf` (peak says provision, the time
   * integral says bill): per closed day, sessions touching the day,
@@ -32,8 +35,6 @@ object StreamingTwap {
   case class DaySt(n: Long, us: Long)
   case class DayTwap(day: java.sql.Date, n_sessions: Long,
                      session_seconds: Double, twap_concurrent: Double)
-
-  private val DayUs = 86400000000L
 
   /** @param lateness watermark delay on the session END time; must be
     *                 ≥ the max session span for exact day attribution */
@@ -67,7 +68,7 @@ object StreamingTwap {
               java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day)),
               st.n,
               math.floor(st.us.toDouble / 1e3 + 0.5) / 1e3,
-              math.floor(st.us.toDouble / 86400e6 * 1e4 + 0.5) / 1e4))
+              round4HalfUp(st.us.toDouble / DayUs)))
           } else {
             val st0 = state.getOption.getOrElse(DaySt(0L, 0L))
             var n = st0.n

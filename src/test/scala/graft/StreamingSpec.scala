@@ -1699,16 +1699,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally { query.stop(); server.stop(0) }
   }
 
-  test("streaming srm: arm parity matches Behavior.arm2 bit-for-bit") {
-    val fromSql = spark.range(1, 101)
-      .select(col("id"), graft.operators.Behavior.arm2(col("id")).as("arm"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to 100L).foreach { u =>
-      assert(graft.streaming.StreamingSrm.arm(u) == fromSql(u),
-        s"JVM-side md5 parity must equal the SQL arm2 for user $u")
-    }
-  }
-
   test("streaming srm: an all-one-arm stream latches at the minN crossing") {
     implicit val sqlCtx = spark.sqlContext
     val pool = (0L until 600L)
