@@ -25,7 +25,7 @@ class GramMoments(d: Int) extends Aggregator[Seq[Double], Array[Long], Array[Lon
     require(x.length == d, s"expected dim $d, got ${x.length}")
     val q = new Array[Long](d)
     var i = 0
-    while (i < d) { q(i) = math.floor(x(i) * 1e6 + 0.5).toLong; i += 1 }
+    while (i < d) { q(i) = Behavior.micro(x(i)); i += 1 }
     b(0) += 1
     i = 0
     while (i < d) {

@@ -20,7 +20,7 @@ private[graft] object MmrKernel extends Serializable {
       dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
     }
     val denom = math.sqrt(nx) * math.sqrt(ny)
-    math.floor(dot / denom * 1e6 + 0.5).toLong
+    Behavior.micro(dot / denom)
   }
 }
 
