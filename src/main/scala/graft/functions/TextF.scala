@@ -94,14 +94,18 @@ object TextF {
     * while DuckDB rounds the decimal rendering (→ up); at sf0.1 three
     * documents' quality sums landed exactly on such points. Intended
     * for non-negative scores. */
-  def round4HalfUp(c: Column): Column =
-    floor(c * lit(1e4) + lit(0.5)).cast("double") / lit(1e4)
+  def round4HalfUp(c: Column): Column = grid4(c).cast("double") / lit(1e4)
 
   /** [[round4HalfUp]]'s scalar twin, for JVM-side state machines. It
     * equals the Column form on every finite double whose 1e4 multiple
     * fits a long; the Column form's long step saturates beyond that
     * and reads NaN as 0. */
   def round4HalfUp(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
+
+  /** The 1e-4 integer grid: `x` half-up to whole 1e-4 units, a long
+    * (Spark's `floor` of a double is a long) — [[round4HalfUp]]
+    * before its division, for sums that must stay exact. */
+  def grid4(c: Column): Column = floor(c * lit(1e4) + lit(0.5))
 
   /** [[round4HalfUp]] at 6 dp, for signed values in [−1, 1] (rank
     * correlations, modularity): `floor` makes halves round toward +∞

@@ -2074,9 +2074,9 @@ object Behavior {
       .withColumn("tsxx", sum("sxx").over(all))
       .withColumn("tsxy", sum("sxy").over(all))
     val d = (c: String) => col(c).cast("double")
-    val theta = floor(
+    val theta = graft.functions.TextF.round6HalfUp(
       (d("tn") * d("tsxy") - d("tsx") * d("tsy")) /
-        (d("tn") * d("tsxx") - d("tsx") * d("tsx")) * 1e6 + 0.5) / 1e6
+        (d("tn") * d("tsxx") - d("tsx") * d("tsx")))
     val meanY = d("sy") / d("n") / 1000.0
     val meanXArm = d("sx") / d("n") / 1000.0
     val meanXAll = d("tsx") / d("tn") / 1000.0
@@ -2396,11 +2396,11 @@ object Behavior {
       .join(cells, Seq("event_type", "tow"), "left")
       .withColumn("o", coalesce(col("o"), lit(0L)))
       .crossJoin(broadcast(cells.agg(sum("o").as("n")))) // 1 row
-      .withColumn("contrib_q", floor(
+      .withColumn("contrib_q", micro(
         (col("o") * col("n") - col("rt") * col("ct")).cast("double") *
           (col("o") * col("n") - col("rt") * col("ct")).cast("double") /
           (col("n").cast("double") * col("rt").cast("double") *
-            col("ct").cast("double")) * lit(1e6) + lit(0.5)).cast("long"))
+            col("ct").cast("double"))))
       .agg(max("n").as("n"),
         countDistinct("event_type").as("n_types"),
         countDistinct("tow").as("n_tows"),

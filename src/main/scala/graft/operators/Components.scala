@@ -161,8 +161,8 @@ object Components {
     val comp = dedupComponentsOf(docs, threshold)
       .select(col("doc_id"), col("component"))
     docs.select(col("doc_id"), col("source"),
-        floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords) * 1e4
-          + lit(0.5)).cast("long").as("qk"),
+        TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+          .as("qk"),
         TextF.tokenCount(col("text")).cast("long").as("tok"))
       .join(comp, "doc_id")
       .withColumn("kept", col("doc_id") === col("component"))

@@ -502,8 +502,8 @@ object CorpusStats {
       .select(col("lang"), col("source"),
         TextF.tokenCount(col("text")).cast("long").as("t_ws"),
         TextF.bpeTokenCount(col("text")).cast("long").as("t_bpe"),
-        floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords) * 1e4
-          + 0.5).cast("long").as("qq"),
+        TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+          .as("qq"),
         when(gopherKeep(50, 100000), 1L).otherwise(0L).as("keep"))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
@@ -548,9 +548,9 @@ object CorpusStats {
         sum(col("np") * (lit(2L) * col("nn_below") + col("nn"))).as("u2"))
       .filter(col("n_pos") > 0 && col("n_neg") > 0)
       .select(col("source"), col("n_pos"), col("n_neg"),
-        (floor(col("u2").cast("double") /
-          (lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double"))
-          * 1e6 + 0.5) / 1e6).as("auc"))
+        TextF.round6HalfUp(col("u2").cast("double") /
+          (lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double")))
+          .as("auc"))
       .orderBy("source")
   }
 
@@ -623,8 +623,8 @@ object CorpusStats {
   def sourceAblationOf(docs: DataFrame, posLang: String = "en"): DataFrame = {
     val perSource = docs
       .select(col("source"),
-        floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
-          * 1e4 + lit(0.5)).cast("long").as("qq"),
+        TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+          .as("qq"),
         TextF.tokenCount(col("text")).cast("long").as("tok"),
         when(col("lang") === posLang, 1L).otherwise(0L).as("en"))
       .groupBy("source")
@@ -676,7 +676,7 @@ object CorpusStats {
         TextF.tokenCount(col("text")).cast("long").as("tok")), "doc_id")
     val grid = scored
       .select(col("lang"),
-        floor(col("score_ppm") * 1e4 + lit(0.5)).cast("long").as("sq"),
+        TextF.grid4(col("score_ppm")).as("sq"),
         col("tok"))
       .groupBy("lang", "sq")
       .agg(count(lit(1)).as("c"), sum(col("tok").cast(Dec)).as("tokc"))
@@ -788,7 +788,7 @@ object CorpusStats {
     val score = TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
     docs
       .select(least(floor(score * bins), lit(bins - 1L)).cast("long").as("bin"),
-        floor(score * 1e4 + 0.5).cast("long").as("qq"),
+        TextF.grid4(score).as("qq"),
         when(col("lang") === posLang, 1L).otherwise(0L).as("pos"))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"), sum("qq").as("qsum"),
@@ -827,7 +827,7 @@ object CorpusStats {
     val score = TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
     val perDoc = docs
       .select(least(floor(score * bins), lit(bins - 1L)).cast("long").as("bin"),
-        floor(score * 1e4 + 0.5).cast("long").as("qq"),
+        TextF.grid4(score).as("qq"),
         when(col("lang") === posLang, 1L).otherwise(0L).as("pos"))
     val cells = perDoc.groupBy("bin")
       .agg(count(lit(1)).as("n"), sum("qq").as("qsum"),
@@ -1113,7 +1113,7 @@ object CorpusStats {
                           approx: Boolean = false): DataFrame = {
     val q = TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
     val scored = docs.select(col("doc_id"), col("source"),
-      floor(q * 1e4 + 0.5).cast("long").as("qq"))
+      TextF.grid4(q).as("qq"))
     val fractions = (0 to 100).map(_ / 100.0)
     // The `approx = true` swap: the full-buffer exact percentile
     // (Θ(rows) on one reducer) becomes the fixed-size mergeable
@@ -1441,10 +1441,9 @@ object CorpusStats {
       .withColumn("sww", sum(expr(s"CAST(f AS $Dec) * f")).over(byWord))
       .filter(expr("s_src * sww - sw * sw > 0")) // zero-variance words drop
       .select(col("source"), col("token"),
-        expr("""CAST(floor(
-               |  CAST(s_src * f - sw AS DOUBLE)
-               |    / sqrt(CAST(s_src * sww - sw * sw AS DOUBLE))
-               |  * 1e6 + 0.5) AS BIGINT)""".stripMargin).as("zq"))
+        Behavior.micro(expr("""CAST(s_src * f - sw AS DOUBLE)
+          |  / sqrt(CAST(s_src * sww - sw * sw AS DOUBLE))""".stripMargin))
+          .as("zq"))
       .localCheckpoint(false) // both pair legs read it
     z.select(col("source").as("source_a"), col("token"), col("zq").as("za"))
       .join(z.select(col("source").as("source_b"), col("token"),
@@ -1520,8 +1519,9 @@ object CorpusStats {
   def bestSplitOf(docs: DataFrame, targetLang: String = "en",
                   gridStep: Int = 500): DataFrame =
     bestSplitBinned(docs
-      .select(floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
-        * 1e4 + 0.5).cast("long").as("q4"),
+      .select(
+        TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+          .as("q4"),
         when(col("lang") === targetLang, 1L).otherwise(0L).as("y")),
       gridStep)
 
@@ -1596,8 +1596,8 @@ object CorpusStats {
     * documented there; the declarative form is identical per range. */
   def paretoFrontierOf(docs: DataFrame): DataFrame =
     skylineOf(docs.select(col("doc_id"),
-      floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
-        * 1e4 + 0.5).cast("long").as("q4"),
+      TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+        .as("q4"),
       col("n_chars").cast("long").as("n_chars")))
 
   /** [[paretoFrontierOf]]'s dominance pass on an already-scored
@@ -1945,7 +1945,7 @@ object CorpusStats {
         * d(col("tn")) * d(col("tn"))
         * nullif(d(col("tn")) - 1.0, lit(0.0)) * d(col("tn"))))
     out.select(col("source"), col("tp").as("n_pos"), col("tn").as("n_neg"),
-        (floor(auc * 1e6 + 0.5) / 1e6).as("auc"),
+        TextF.round6HalfUp(auc).as("auc"),
         TextF.round6HalfUp(se).as("delong_se"),
         TextF.round6HalfUp(auc - lit(1.959964) * se).as("ci_lo"),
         TextF.round6HalfUp(auc + lit(1.959964) * se).as("ci_hi"))
@@ -2118,8 +2118,8 @@ object CorpusStats {
       .select(least(lit(9L),
           expr("((doc_id - id0) * 10) div (id1 - id0 + 1)")).as("decile"),
         col("source"),
-        floor(TextF.qualityScore(col("text"), TextAnalysis.Stopwords)
-          * 1e4 + 0.5).cast("long").as("q4"),
+        TextF.grid4(TextF.qualityScore(col("text"), TextAnalysis.Stopwords))
+          .as("q4"),
         TextF.tokenCount(col("text")).cast("long").as("ws_toks"),
         TextF.bpeTokenCount(col("text")).cast("long").as("bpe_toks"))
       .groupBy("decile", "source")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextF
 import graft.functions.VariantF.safeDivide
 import graft.sources.Tables
 
@@ -62,15 +63,16 @@ object CtrAlerts {
     val totals = ev.agg(sum("is_click").as("tc"), sum("is_view").as("ti"))
     // NULLIF on the view total: an all-click slice must degrade to a
     // NULL prior (and NULL shrunk CTRs), not poison every row with NaN.
-    val p0 = floor(col("tc").cast("double")
-      / nullif(col("ti").cast("double"), lit(0.0)) * 1e6 + 0.5) / 1e6
+    val p0 = TextF.round6HalfUp(col("tc").cast("double")
+      / nullif(col("ti").cast("double"), lit(0.0)))
     items.crossJoin(broadcast(totals))
       .withColumn("p0", p0)
       .select(col("item"), col("clicks"), col("impressions"),
         round(safeDivide(col("clicks"), col("impressions")), 6).as("ctr_raw"),
-        (floor((col("clicks").cast("double") + lit(alpha.toDouble) * col("p0"))
-          / (col("impressions").cast("double") + lit(alpha.toDouble))
-          * 1e6 + 0.5) / 1e6).as("ctr_shrunk"),
+        TextF.round6HalfUp(
+          (col("clicks").cast("double") + lit(alpha.toDouble) * col("p0"))
+          / (col("impressions").cast("double") + lit(alpha.toDouble)))
+          .as("ctr_shrunk"),
         col("p0"))
       .orderBy("item")
   }

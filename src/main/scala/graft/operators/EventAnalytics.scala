@@ -149,7 +149,7 @@ object EventAnalytics {
   def dailyFillOf(events: DataFrame): DataFrame = {
     val daily = events
       .select(col("user_id"), to_date(col("ts")).as("day"),
-        floor(col("value") * 1e4 + 0.5).cast("long").as("qv"))
+        graft.functions.TextF.grid4(col("value")).as("qv"))
       .groupBy("user_id", "day")
       .agg((sum("qv").cast("double") / 1e4).as("day_total"),
         count(lit(1)).as("n_events"))
@@ -611,8 +611,8 @@ object EventAnalytics {
       .select(col("event_type"), col("lag"), col("n_days"),
         // den = 0 ⇔ constant series: ACF undefined, pinned NULL
         when(col("den") === 0L, lit(null).cast("double")).otherwise(
-          floor(col("num").cast("double") / col("den").cast("double")
-            * 1e4 + 0.5) / 1e4).as("acf"))
+          graft.functions.TextF.round4HalfUp(
+            col("num").cast("double") / col("den").cast("double"))).as("acf"))
       .orderBy("event_type", "lag")
   }
 

@@ -119,7 +119,7 @@ object Graph {
 
   /** Integer rank mass rq rendered as rq/1e12 rounded half-up to 6 dp. */
   private[operators] def massShare(rq: Column): Column =
-    floor(rq.cast("double") / lit(1e12) * lit(1e6) + lit(0.5)) / lit(1e6)
+    TextF.round6HalfUp(rq.cast("double") / lit(1e12))
 
   /** [[integerPagerank]] over the weighted item-transition graph from
     * the base frame `base(nodes)`; returns (item, rq, pr). */
@@ -586,9 +586,10 @@ object Graph {
         when(col("n") * col("sxx") - col("sx") * col("sx") === 0L,
           lit(null).cast("double"))
           .otherwise(
-            floor(((col("n") * col("sxy") - col("sx") * col("sx")).cast("double")
-              / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-              * lit(1e6) + lit(0.5)) / lit(1e6)).as("assortativity"))
+            TextF.round6HalfUp(
+              (col("n") * col("sxy") - col("sx") * col("sx")).cast("double")
+              / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")))
+          .as("assortativity"))
   }
 
   /** Local clustering coefficient (Watts-Strogatz '98) per node:
@@ -1217,8 +1218,7 @@ object Graph {
     val scale = (1L << iterations).toDouble
     acc.select(col("item"),
         col("acc").cast("long").as(s"katz_x${1L << iterations}"),
-        (floor(col("acc").cast("double") / lit(scale) * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("katz"))
+        TextF.round6HalfUp(col("acc").cast("double") / lit(scale)).as("katz"))
       .orderBy("item")
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextF
 import graft.functions.VariantF._
 import graft.sources.Tables
 
@@ -298,12 +299,12 @@ object Report {
       .agg(count(lit(1)).as("n"),
         // 1e-4-quantized integer sum: independent of partition/
         // summation order on every engine (a float SUM is not)
-        (sum(floor(col("value") * 1e4 + 0.5).cast("long")).cast("double") / 1e4)
+        (sum(TextF.grid4(col("value"))).cast("double") / 1e4)
           .as("total_value"),
         first("mn").as("mn"), first("mx").as("mx"))
       .select(col("bucket"),
-        (floor((col("mn") + col("bucket") * ((col("mx") - col("mn")) / bins))
-          * 1e6 + 0.5).cast("double") / 1e6).as("bucket_lo"),
+        TextF.round6HalfUp(col("mn") + col("bucket") * ((col("mx") - col("mn"))
+          / bins)).as("bucket_lo"),
         col("n"), col("total_value"))
       .orderBy("bucket")
   }

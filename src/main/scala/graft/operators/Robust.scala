@@ -244,8 +244,8 @@ object Robust {
     require(reps >= 3, s"reps must be >= 3, got $reps")
     val weights = graft.plans.ColumnBridge.column(graft.plans.BootstrapWeights(
       graft.plans.ColumnBridge.expression(col("event_id")), reps))
-    val mean6 = floor(col("swq").cast("double") / col("sw").cast("double")
-      / lit(1e6) * lit(1e6) + lit(0.5)) / lit(1e6)
+    val mean6 = TextF.round6HalfUp(
+      col("swq").cast("double") / col("sw").cast("double") / lit(1e6))
     events
       .select(col("event_type"),
         Behavior.micro(col("value")).as("qv"),

@@ -532,8 +532,8 @@ object Similarity {
         sum(when(col("rank") === 1L, 1L).otherwise(0L)).as("h1"),
         sum(when(col("rank") <= 10L, 1L).otherwise(0L)).as("h10"))
       .select(col("label"), col("n_queries"),
-        (floor(col("qrr").cast("double") / col("n_queries").cast("double")
-          / lit(1e6) * lit(1e6) + 0.5) / lit(1e6)).as("mrr"),
+        graft.functions.TextF.round6HalfUp(col("qrr").cast("double")
+          / col("n_queries").cast("double") / lit(1e6)).as("mrr"),
         graft.functions.TextF.round4HalfUp(
           col("h1").cast("double") / col("n_queries").cast("double")).as("hit1"),
         graft.functions.TextF.round4HalfUp(
@@ -720,8 +720,7 @@ object Similarity {
           .as("nrm"))
       .filter(col("nrm") > 0)
       .select(col("label"),
-        expr("transform(v, x -> CAST(floor(x / nrm * 1e6 + 0.5) AS BIGINT))")
-          .as("q"))
+        transform(col("v"), x => Behavior.micro(x / col("nrm"))).as("q"))
       .localCheckpoint(false) // the T fold and the dim sums both read it
     val t = q
       .select(col("label"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextF
+
 /** Skew mitigation for hot keys. A shuffled equi-join sends every row
   * of a key to one reducer; at 100 TB a handful of hot keys (the empty
   * document, a bot user id) straggle or OOM that reducer. Salting
@@ -54,11 +56,11 @@ object Skew {
         col("top.key").cast("string").as("heaviest_key"),
         // floor-form rounding (cf. TextF.round4HalfUp): engine-agnostic
         // at half-way doubles, the policy for new oracle-checked scores
-        (floor(col("max_rows").cast("double") / col("n_rows").cast("double")
-          * 1e6 + 0.5).cast("double") / 1e6).as("top_share"),
-        (floor(col("max_rows").cast("double") /
-          (col("n_rows").cast("double") / col("n_keys").cast("double"))
-          * 1e4 + 0.5).cast("double") / 1e4).as("skew_factor"))
+        TextF.round6HalfUp(col("max_rows").cast("double")
+          / col("n_rows").cast("double")).as("top_share"),
+        TextF.round4HalfUp(col("max_rows").cast("double") /
+          (col("n_rows").cast("double") / col("n_keys").cast("double")))
+          .as("skew_factor"))
       .filter(col("n_keys") > 0)
   }
 

@@ -1144,8 +1144,8 @@ object Warehouse {
       .filter(col("month") =!= col("bm")).drop("bm")
     val j = cur.join(b, Seq("l_partkey"))
     def d(c: Column) = c.cast("double")
-    val lterm = floor(d(col("ec")) / d(col("q")) * d(col("q0")) * 1e4 + 0.5)
-    val pterm = floor(d(col("ec0")) / d(col("q0")) * d(col("q")) * 1e4 + 0.5)
+    val lterm = TextF.grid4(d(col("ec")) / d(col("q")) * d(col("q0")))
+    val pterm = TextF.grid4(d(col("ec0")) / d(col("q0")) * d(col("q")))
     val agg = j.groupBy("month")
       .agg(count(lit(1)).as("n_parts"),
         sum(lterm.cast(Dec)).as("lnum"),

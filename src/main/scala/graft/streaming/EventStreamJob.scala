@@ -171,9 +171,8 @@ object EventStreamJob {
     docs
       .withWatermark("ts", Lateness)
       .select(col("ts"), col("source"),
-        floor(graft.functions.TextF.qualityScore(
-          col("text"), graft.operators.TextAnalysis.Stopwords) * 1e4 + 0.5)
-          .cast("long").as("q4"),
+        graft.functions.TextF.grid4(graft.functions.TextF.qualityScore(
+          col("text"), graft.operators.TextAnalysis.Stopwords)).as("q4"),
         size(regexp_extract_all(col("text"),
           lit(graft.operators.TextAnalysis.MojibakeRe), lit(0)))
           .cast("long").as("moji"))
