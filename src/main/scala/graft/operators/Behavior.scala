@@ -669,6 +669,21 @@ object Behavior {
         measure: _*)
       .groupBy("event_type", "day").agg(agg, aggs: _*)
 
+  /** A `(key, day, value)` daily series zero-filled on the dense
+    * calendar: every key gets every day from the first to the last day
+    * of any key, an absent day reading `value` 0 (a quiet day is a real
+    * observation of 0). The grid is the distinct keys × the 1-row
+    * bounds frame's day sequence, so it is bounded by keys × span. */
+  private[graft] def calendarFilled(daily: DataFrame, key: String,
+                                    value: String): DataFrame = {
+    val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
+    daily.select(key).distinct()
+      .crossJoin(broadcast(bounds))
+      .select(col(key), explode(sequence(col("d0"), col("d1"))).as("day"))
+      .join(daily, Seq(key, "day"), "left")
+      .select(col(key), col("day"), coalesce(col(value), lit(0L)).as(value))
+  }
+
   /** The report day (the last event day) as a 1-row broadcastable
     * frame, so no driver collect is needed. */
   private[operators] def reportDate(events: DataFrame): DataFrame =

@@ -579,29 +579,7 @@ object EventAnalytics {
     */
   def acfDailyOf(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 30, s"maxLag in [1,30], got $maxLag")
-    val daily = Behavior.daily(events)(count(lit(1)).as("x"))
-    // Dense calendar grid per type: day-span sequence exploded from the
-    // 1-row bounds frame, cross-joined with the distinct types.
-    val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"),
-        explode(sequence(col("d0"), col("d1"))).as("day"))
-    val dense = grid.join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("x"), lit(0L)).as("x"))
-    val byType = Window.partitionBy("event_type")
-    val ordered = byType.orderBy("day")
-    val dev = dense
-      .withColumn("n", count(lit(1)).over(byType))
-      .withColumn("s", sum("x").over(byType))
-      .withColumn("d", col("n") * col("x") - col("s")) // n·x − S
-    val leads = (1 to maxLag).foldLeft(dev) { (df, k) =>
-      df.withColumn(s"d$k", lead(col("d"), k).over(ordered))
-    }
-    val stacked = leads.select(col("event_type"), explode(map(
-      (1 to maxLag).flatMap(k =>
-        Seq(lit(k), col("d") * col(s"d$k"))): _*)).as(Seq("lag", "prod")))
+    val (dev, stacked) = lagProducts(events, maxLag)
     stacked
       .groupBy("event_type", "lag")
       .agg(sum("prod").as("num")) // lead null past series end drops out
@@ -614,6 +592,30 @@ object EventAnalytics {
           graft.functions.TextF.round4HalfUp(
             col("num").cast("double") / col("den").cast("double"))).as("acf"))
       .orderBy("event_type", "lag")
+  }
+
+  /** The daily count series of [[acfDailyOf]] and [[ljungBoxOf]] as
+    * (dev, stacked): `dev` holds each type's zero-filled days with n
+    * (days), s (total) and the integer deviation d = n·x − S;
+    * `stacked` holds (event_type, lag, prod = d_t · d_{t+lag}) for
+    * lags 1..maxLag, NULL past the series end. */
+  private def lagProducts(events: DataFrame,
+                          maxLag: Int): (DataFrame, DataFrame) = {
+    val dense = Behavior.calendarFilled(
+      Behavior.daily(events)(count(lit(1)).as("x")), "event_type", "x")
+    val byType = Window.partitionBy("event_type")
+    val ordered = byType.orderBy("day")
+    val dev = dense
+      .withColumn("n", count(lit(1)).over(byType))
+      .withColumn("s", sum("x").over(byType))
+      .withColumn("d", col("n") * col("x") - col("s")) // n·x − S
+    val leads = (1 to maxLag).foldLeft(dev) { (df, k) =>
+      df.withColumn(s"d$k", lead(col("d"), k).over(ordered))
+    }
+    val stacked = leads.select(col("event_type"), explode(map(
+      (1 to maxLag).flatMap(k =>
+        Seq(lit(k), col("d") * col(s"d$k"))): _*)).as(Seq("lag", "prod")))
+    (dev, stacked)
   }
 
   /** Ljung–Box portmanteau test per event type over lags 1..7 —
@@ -638,27 +640,7 @@ object EventAnalytics {
     * ([[acfDailyOf]]'s exact shape — same shuffle posture). */
   def ljungBoxOf(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 30, s"maxLag in [1,30], got $maxLag")
-    val daily = Behavior.daily(events)(count(lit(1)).as("x"))
-    val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"),
-        explode(sequence(col("d0"), col("d1"))).as("day"))
-    val dense = grid.join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("x"), lit(0L)).as("x"))
-    val byType = Window.partitionBy("event_type")
-    val ordered = byType.orderBy("day")
-    val dev = dense
-      .withColumn("n", count(lit(1)).over(byType))
-      .withColumn("s", sum("x").over(byType))
-      .withColumn("d", col("n") * col("x") - col("s"))
-    val leads = (1 to maxLag).foldLeft(dev) { (df, k) =>
-      df.withColumn(s"d$k", lead(col("d"), k).over(ordered))
-    }
-    val stacked = leads.select(col("event_type"), explode(map(
-      (1 to maxLag).flatMap(k =>
-        Seq(lit(k), col("d") * col(s"d$k"))): _*)).as(Seq("lag", "prod")))
+    val (dev, stacked) = lagProducts(events, maxLag)
     stacked
       .filter(col("prod").isNotNull)
       .groupBy("event_type", "lag")
@@ -2166,14 +2148,7 @@ object EventAnalytics {
     // runtime) and dense's grid join is calendar-bounded arithmetic —
     // paired ×100 runs read checkpointing NEUTRAL (±10% ambient band;
     // §6 r17), so the family keeps its uncheckpointed shape
-    val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
-    val grid = daily.select("event_type").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"),
-        explode(sequence(col("d0"), col("d1"))).as("day"))
-    val dense = grid.join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("x"), lit(0L)).as("x"))
+    val dense = Behavior.calendarFilled(daily, "event_type", "x")
     val lags = (-maxLag to maxLag).map(lit(_))
     val a = dense.select(col("event_type").as("type_a"), col("day"),
         col("x").as("xa"))

@@ -2189,14 +2189,8 @@ object Warehouse {
     // NO checkpoint despite three consumers: the frame ends at an
     // exchange — ReuseExchange dedupes the fact aggregate at runtime;
     // paired ×100 runs read a checkpoint NEUTRAL here (§6 r17)
-    val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
-    val grid = daily.select("p_brand").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("p_brand"),
-        explode(sequence(col("d0"), col("d1"))).as("day"))
-    val dense = grid.join(daily, Seq("p_brand", "day"), "left")
-      .select(col("p_brand"), coalesce(col("d"), lit(0L)).as("d"))
-    dense.groupBy("p_brand")
+    Behavior.calendarFilled(daily, "p_brand", "d")
+      .groupBy("p_brand")
       .agg(count(lit(1)).as("n_days"),
         sum(col("d").cast(Dec)).as("s"),
         sum(expr(s"CAST(d AS $Dec) * d")).as("ss"))
