@@ -380,22 +380,16 @@ object Graph {
     * shuffles keyed on node ids, never all-pairs; plan growth is cut
     * per iteration (the PageRank loop's contract).
     */
-  def lpaCommunitiesOf(events: DataFrame, iterations: Int = 2): DataFrame = {
-    val und = transitions(events)
-      .filter(col("src") =!= col("item"))
-      .groupBy(least(col("src"), col("item")).as("a"),
-        greatest(col("src"), col("item")).as("b"))
-      .agg(count(lit(1)).as("w"))
-    lpaCommunitiesFromEdges(und, iterations)
-  }
+  def lpaCommunitiesOf(events: DataFrame, iterations: Int = 2): DataFrame =
+    lpaCommunitiesFromEdges(weightedEdges(events), iterations)
 
   /** [[lpaCommunitiesOf]] from a pre-built weighted undirected edge
     * frame (a, b, w) — so a caller that already derived that frame
     * ([[modularityOf]], which needs it for the Q arithmetic anyway)
     * shares ONE fact scan instead of rebuilding the lag pass (r18
     * optimization round; within-one-query reuse, not cross-run
-    * caching). Identical label walk: both callers derive `und` the
-    * same way from [[transitions]]. */
+    * caching). Identical label walk: both callers read `und` from
+    * [[weightedEdges]]. */
   private[operators] def lpaCommunitiesFromEdges(und: DataFrame,
                                                  iterations: Int): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
@@ -455,11 +449,7 @@ object Graph {
   def eigenvectorCentralityOf(events: DataFrame,
                               iterations: Int = 12): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
-    val und = transitions(events)
-      .filter(col("src") =!= col("item"))
-      .groupBy(least(col("src"), col("item")).as("a"),
-        greatest(col("src"), col("item")).as("b"))
-      .agg(count(lit(1)).as("w"))
+    val und = weightedEdges(events)
       .localCheckpoint(false) // both adjacency halves + the node set
     val bothDirs = und.select(col("a").as("u"), col("b").as("v"), col("w"))
       .union(und.select(col("b").as("u"), col("a").as("v"), col("w")))
@@ -502,6 +492,15 @@ object Graph {
       .select(least(col("src"), col("item")).as("a"),
         greatest(col("src"), col("item")).as("b"))
       .distinct()
+
+  /** [[undirectedEdges]] weighted: (a, b, w) with w the number of
+    * transitions between a and b in either direction. */
+  private def weightedEdges(events: DataFrame): DataFrame =
+    transitions(events)
+      .filter(col("src") =!= col("item"))
+      .groupBy(least(col("src"), col("item")).as("a"),
+        greatest(col("src"), col("item")).as("b"))
+      .agg(count(lit(1)).as("w"))
 
   /** k-core decomposition (Seidman '83) at a fixed `k`: the maximal
     * subgraph where every surviving node keeps ≥ k distinct surviving
@@ -650,16 +649,11 @@ object Graph {
     * LPA itself re-runs inside (2 bounded iterations); at 100 TB the
     * label frame would be cached from the row-205 run instead. */
   def modularityOf(events: DataFrame, iterations: Int = 2): DataFrame = {
-    val und = transitions(events)
-      .filter(col("src") =!= col("item"))
-      .groupBy(least(col("src"), col("item")).as("a"),
-        greatest(col("src"), col("item")).as("b"))
-      .agg(count(lit(1)).as("w"))
-      .localCheckpoint(false)
+    val und = weightedEdges(events).localCheckpoint(false)
     // LPA walks the SAME weighted edge frame Q's arithmetic reads —
     // share the checkpoint instead of re-running the fact scan + lag
-    // window inside [[lpaCommunitiesOf]] (r18; both derive it the same
-    // way from [[transitions]], so the labels cannot differ).
+    // window inside [[lpaCommunitiesOf]] (r18; both read
+    // [[weightedEdges]], so the labels cannot differ).
     val labels = lpaCommunitiesFromEdges(und, iterations)
     val m = und.agg(sum("w").as("m")) // 1 row
     val wIn = und
