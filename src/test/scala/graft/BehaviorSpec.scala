@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.TextF
 import graft.operators.Behavior
 
 class BehaviorSpec extends AnyFunSuite with SparkFixture {
@@ -1617,5 +1618,21 @@ class BehaviorSpec extends AnyFunSuite with SparkFixture {
       Seq(125000L, -125000L, 2675000L, 1005000L, -999995000L, 5000L))
     assert(grid(Behavior.microDown) ==
       Seq(125000L, -125000L, 2675000L, 1004999L, -999995000L, 5000L))
+    // The scalar twins the streaming monitors and JVM kernels call must
+    // give what Spark gives for their Column homes, or a monitor and
+    // its batch twin round one value two ways. 0.93625 is the half-way
+    // double round4HalfUp's doc names.
+    val ds = Seq(0.125, -0.125, 2.675, 1.005, -999.995, 0.005, 0.93625)
+    val byColumn = ds.toDF("x")
+      .select(Behavior.micro(col("x")), TextF.round4HalfUp(col("x")),
+        TextF.round6HalfUp(col("x")))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    assert(byColumn.toSeq == ds.map(x =>
+      (Behavior.micro(x), TextF.round4HalfUp(x), TextF.round6HalfUp(x))))
+    val qs = Seq(12345650L, -12345650L, 50L, -50L)
+    val qByColumn = qs.toDF("q").select(TextF.microsTo4dp(col("q")))
+      .collect().map(_.getDouble(0))
+    assert(qByColumn.toSeq == qs.map(q => TextF.microsTo4dp(q)))
+    assert(qByColumn.toSeq == Seq(12.3457, -12.3456, 1.0e-4, 0.0))
   }
 }
