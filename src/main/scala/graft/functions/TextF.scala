@@ -96,15 +96,8 @@ object TextF {
     * for non-negative scores. */
   def round4HalfUp(c: Column): Column = grid4(c).cast("double") / lit(1e4)
 
-  /** [[round4HalfUp]]'s scalar twin, for JVM-side state machines. It
-    * equals the Column form on every finite double whose 1e4 multiple
-    * fits a long; the Column form's long step saturates beyond that
-    * and reads NaN as 0. */
-  def round4HalfUp(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
-
-  /** The 1e-4 integer grid: `x` half-up to whole 1e-4 units, a long
-    * (Spark's `floor` of a double is a long) — [[round4HalfUp]]
-    * before its division, for sums that must stay exact. */
+  /** The 1e-4 integer grid: x half-up to whole 1e-4 units, a long (the
+    * `floor` of a double), for sums that must stay exact. */
   def grid4(c: Column): Column = floor(c * lit(1e4) + lit(0.5))
 
   /** [[round4HalfUp]] at 6 dp, for signed values in [−1, 1] (rank
@@ -114,9 +107,6 @@ object TextF {
   def round6HalfUp(c: Column): Column =
     floor(c * lit(1e6) + lit(0.5)).cast("double") / lit(1e6)
 
-  /** [[round6HalfUp]]'s scalar twin, with [[round4HalfUp]]'s range. */
-  def round6HalfUp(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
   /** Integer micro-unit sum → value at 4 dp: `floor(q/100 + 0.5)/1e4`
     * is the same double in every engine (cf. [[round4HalfUp]]). The
     * ONE implementation of the micros→4dp contract — operators whose
@@ -124,7 +114,13 @@ object TextF {
   def microsTo4dp(q: Column): Column =
     floor(q.cast("double") / lit(100.0) + lit(0.5)) / lit(1e4)
 
-  /** [[microsTo4dp]]'s scalar twin; equal to it on every long. */
+  /** The scalar twins of [[round4HalfUp]], [[round6HalfUp]] and
+    * [[microsTo4dp]], for JVM-side state machines. Each equals its
+    * Column form wherever x·1e4 (x·1e6) is finite and fits a long, and
+    * on every q; beyond that the Column form's long step saturates
+    * (and reads NaN as 0). */
+  def round4HalfUp(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
+  def round6HalfUp(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
   def microsTo4dp(q: Long): Double = math.floor(q / 100.0 + 0.5) / 1e4
 
   /** Heuristic quality score in [0,1]: favors mid-length docs with low

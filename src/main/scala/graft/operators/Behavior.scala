@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextF.{round4HalfUp => r4, round6HalfUp => r6}
 import graft.sources.Tables
 
 /** User-behavior analytics over the event stream: ordered-step funnel
@@ -494,7 +495,6 @@ object Behavior {
       .crossJoin(broadcast(maxDay)) // 1 row by construction
       .filter(col("day") <= col("max_day"))
       .groupBy("day").agg(count(lit(1)).as("churned"))
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     classes.join(churn, Seq("day"), "full_outer")
       .select(col("day"),
         coalesce(col("dau"), lit(0L)).as("dau"),
@@ -669,16 +669,14 @@ object Behavior {
         measure: _*)
       .groupBy("event_type", "day").agg(agg, aggs: _*)
 
-  /** A `(key, day, value)` daily series zero-filled on the dense
-    * calendar: every key gets every day from the first to the last day
-    * of any key, an absent day reading `value` 0 (a quiet day is a real
-    * observation of 0). The grid is the distinct keys × the 1-row
-    * bounds frame's day sequence, so it is bounded by keys × span. */
+  /** A `(key, day, value)` daily series on the dense calendar: every
+    * key gets every day from the first to the last day of any key, an
+    * absent day reading `value` 0 (a quiet day is an observation of 0).
+    * Bounded by keys × day span. */
   private[graft] def calendarFilled(daily: DataFrame, key: String,
                                     value: String): DataFrame = {
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
-    daily.select(key).distinct()
-      .crossJoin(broadcast(bounds))
+    daily.select(key).distinct().crossJoin(broadcast(bounds))
       .select(col(key), explode(sequence(col("d0"), col("d1"))).as("day"))
       .join(daily, Seq(key, "day"), "left")
       .select(col(key), col("day"), coalesce(col(value), lit(0L)).as(value))
@@ -1243,7 +1241,6 @@ object Behavior {
     * conversion), ONE conditional 1-row aggregate over both arms —
     * no other join anywhere. */
   def abTestOf(events: DataFrame): DataFrame = {
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     val pPool = (col("conv0") + col("conv1")).cast("double") /
       (col("n0") + col("n1")).cast("double")
     reportDayArms(events)
@@ -1282,7 +1279,6 @@ object Behavior {
     * conditional aggregate; the MDE chain is map-side arithmetic on
     * that single row. */
   def powerMdeOf(events: DataFrame): DataFrame = {
-    val r6: Column => Column = graft.functions.TextF.round6HalfUp
     reportDayArms(events)
       .filter(col("n0") > 0 && col("n1") > 0)
       .select(col("n0"), col("n1"), col("conv0"), col("conv1"),
@@ -1367,7 +1363,6 @@ object Behavior {
         expr(s"(CAST(a AS $Dec) * d * 1000000000) div t"))
       .withColumn("bc_nano",
         expr(s"(CAST(b AS $Dec) * c * 1000000000) div t"))
-    val r6: Column => Column = graft.functions.TextF.round6HalfUp
     terms.agg(count(lit(1)).as("n_strata"), sum("a").as("sum_a"),
         sum(col("e_nano").cast(Dec)).as("es"),
         sum(col("v_nano").cast(Dec)).as("vs"),
@@ -1486,7 +1481,6 @@ object Behavior {
       .withColumn("se", expr(
         "sqrt(v0 / CAST(n0 AS DOUBLE) + v1 / CAST(n1 AS DOUBLE))"))
       .withColumn("delta", expr("abs(m0) * 0.1"))
-    val r6: Column => Column = graft.functions.TextF.round6HalfUp
     calc.select(col("event_type"), col("n0"), col("n1"),
         r6(expr("(m1 - m0) / 1e6")).as("mean_diff"),
         r6(expr("delta / 1e6")).as("margin"),
@@ -1784,7 +1778,6 @@ object Behavior {
     val se = sqrt(varOverN("ss11", "s11", "n11") +
       varOverN("ss10", "s10", "n10") +
       varOverN("ss01", "s01", "n01") + varOverN("ss00", "s00", "n00"))
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     wide
       .filter(col("n00") > 1 && col("n01") > 1 &&
         col("n10") > 1 && col("n11") > 1)
@@ -1859,7 +1852,6 @@ object Behavior {
         sum(when(col("arm") === 0L, col("converted")).otherwise(0L)).as("conv_ctrl"))
     val cum = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     deciles
       .withColumn("ct", sum("conv_treat").over(cum))
       .withColumn("cc", sum("conv_ctrl").over(cum))
@@ -1921,7 +1913,6 @@ object Behavior {
     val tot = cells.agg(
       sum(col("n_ctrl") + col("n_treat")).as("n_all"))
     def d(c: Column) = c.cast("double")
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     val diff = d(col("s_treat")) / d(col("n_treat")) / lit(1000.0) -
       d(col("s_ctrl")) / d(col("n_ctrl")) / lit(1000.0)
     cells.crossJoin(broadcast(tot)) // 1 row by construction
@@ -2248,7 +2239,6 @@ object Behavior {
           * (dd(col("nt")) - dd(col("dt")))
           / nullif(dd(col("nt")) - lit(1.0), lit(0.0))
           * lit(1e9) + lit(0.5)).cast("long").as("v_q"))
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     perDur.agg(
         count(lit(1)).as("n_durations"),
         sum("d1").as("obs_treat"),
@@ -2766,7 +2756,6 @@ object Behavior {
       greatest((d(ss) - d(s) * d(s) / d(n)) / (d(n) - lit(1.0)), lit(0.0))
     val se = sqrt(variance(col("s0"), col("ss0"), col("n0")) / d(col("n0")) +
       variance(col("s1"), col("ss1"), col("n1")) / d(col("n1")))
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     wide.select(col("event_type"), col("n0"), col("n1"),
         r4(d(col("s0")) / d(col("n0")) / 1e6).as("mean0"),
         r4(lit(2.801585) * se / 1e6).as("mde_abs"),
@@ -3023,7 +3012,6 @@ object Behavior {
       .groupBy("event_type")
       .agg(coalesce(cellMax("s", a0), lit(0L).cast(Dec)).as("st0"),
         coalesce(cellMax("s", a1), lit(0L).cast(Dec)).as("st1"))
-    val r6: Column => Column = graft.functions.TextF.round6HalfUp
     sums.join(trigSums, Seq("event_type"), "left")
       .crossJoin(broadcast(popW)).crossJoin(broadcast(trigW))
       .filter(col("np0") > 0 && col("np1") > 0)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import graft.functions.TextF.{round4HalfUp => r4, round6HalfUp => r6}
 import Behavior.Dec
 
 /** Corpus-statistics operators a training-data pipeline runs when
@@ -497,7 +498,6 @@ object CorpusStats {
     * half-up at the end.
     */
   def corpusCardOf(docs: DataFrame): DataFrame = {
-    val round4: Column => Column = TextF.round4HalfUp
     docs
       .select(col("lang"), col("source"),
         TextF.tokenCount(col("text")).cast("long").as("t_ws"),
@@ -511,9 +511,9 @@ object CorpusStats {
         sum("qq").as("qsum"), sum("keep").as("n_keep"))
       .select(col("lang"), col("source"), col("n_docs"),
         col("tokens_ws"), col("tokens_bpe"),
-        round4(col("qsum").cast("double") / col("n_docs").cast("double")
+        r4(col("qsum").cast("double") / col("n_docs").cast("double")
           / lit(1e4)).as("mean_quality"),
-        round4(col("n_keep").cast("double") / col("n_docs").cast("double"))
+        r4(col("n_keep").cast("double") / col("n_docs").cast("double"))
           .as("gopher_keep_frac"))
       .orderBy("lang", "source")
   }
@@ -636,7 +636,6 @@ object CorpusStats {
       sum("n").as("gn"), sum("q").as("gq"),
       sum("t").as("gt"), sum("e").as("ge"))
     def d(c: Column) = c.cast("double")
-    val r4: Column => Column = TextF.round4HalfUp
     perSource.crossJoin(broadcast(global)) // 1 row by construction
       .select(col("source"), col("n").cast("long").as("n_docs"),
         r4(d(col("gq")) / d(col("gn")) / lit(1e4)).as("mean_quality_all"),
@@ -849,7 +848,6 @@ object CorpusStats {
         relT.as("rel_t"), resT.as("res_t"))
       .groupBy("nn", "tpos", "tsqerr")
       .agg(sum("rel_t").as("rel_sum"), sum("res_t").as("res_sum"))
-    val r6: Column => Column = TextF.round6HalfUp
     val rel = d(col("rel_sum")) / 1e6 / d(col("nn"))
     val res = d(col("res_sum")) / 1e6 / d(col("nn"))
     val unc = d(col("tpos")) * (d(col("nn")) - d(col("tpos"))) /
@@ -946,7 +944,6 @@ object CorpusStats {
     * aggregate); χ² is one fixed double chain; b+c = 0 (gates agree
     * everywhere) nulls χ² via try_divide → not significant. */
   def mcnemarGatesOf(docs: DataFrame, minQuality: Double = 0.9): DataFrame = {
-    val r6: Column => Column = TextF.round6HalfUp
     // coalesce: an empty/whitespace-only doc nulls both measures
     // (0-token divisions) — a null gate must read "rejected", or the
     // doc counts in n_docs yet falls in NO 2×2 cell
@@ -2026,7 +2023,6 @@ object CorpusStats {
     * division. All-unanimous docs (every R_i ∈ {0, k}) zero the
     * denominator → Q NULL via try_divide → not significant. */
   def cochranQGatesOf(docs: DataFrame, minQuality: Double = 0.9): DataFrame = {
-    val r6: Column => Column = TextF.round6HalfUp
     threeGates(minQuality)(docs)
       .select((when(col("g1"), 1L).otherwise(0L)
         + when(col("g2"), 1L).otherwise(0L)
@@ -2068,7 +2064,6 @@ object CorpusStats {
     * T = 0 or T = 3n (chance agreement 1) nulls κ via try_divide →
     * 'undefined'. */
   def fleissKappaGatesOf(docs: DataFrame, minQuality: Double = 0.9): DataFrame = {
-    val r6: Column => Column = TextF.round6HalfUp
     threeGates(minQuality)(docs)
       .select((when(col("g1"), 1L).otherwise(0L)
         + when(col("g2"), 1L).otherwise(0L)

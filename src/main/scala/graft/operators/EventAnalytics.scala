@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextF.{round4HalfUp => r4}
 import graft.sources.Tables
 import Behavior.Dec
 
@@ -1206,7 +1207,6 @@ object EventAnalytics {
     * Shape: one (type, day) map-combinable aggregate at fact scale;
     * every window/join after it rides the bounded daily frame. */
   def seasonalDecomposeOf(events: DataFrame): DataFrame = {
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     val ma = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(-3, 3)
     val daily = Behavior.daily(events,
@@ -1244,7 +1244,6 @@ object EventAnalytics {
     * Shape: one (type, day) map-combinable aggregate at fact scale;
     * the envelope aggregate runs on ≤ types × days rows. */
   def weekdayEnvelopeOf(events: DataFrame): DataFrame = {
-    val r4: Column => Column = graft.functions.TextF.round4HalfUp
     Behavior.daily(events,
       Behavior.cents(col("value")).as("qc"))(sum("qc").as("x"))
       .withColumn("dow",

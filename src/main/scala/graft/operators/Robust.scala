@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import graft.functions.TextF.{round4HalfUp => r4, round6HalfUp => r6}
 import Behavior.Dec
 
 /** Robust (order-statistic) analytics: MAD-based outlier flagging,
@@ -1121,7 +1122,6 @@ object Robust {
       sum(expr(s"CAST(r2 AS $Dec) * r2")).as("a4"))
     val perType = ranked2.groupBy("event_type")
       .agg(sum("r2").as("r2sum"))
-    val r6: Column => Column = TextF.round6HalfUp
     perType.crossJoin(blocks) // bounded k rows × 1
       .select(col("event_type"), col("r2sum"), col("b"), col("k"),
         col("a4"),
@@ -1168,7 +1168,6 @@ object Robust {
     * re-rounds to 6 dp identically in both engines); a fully-tied
     * corpus nulls Q hence W. */
   def kendallWOf(events: DataFrame): DataFrame = {
-    val r6: Column => Column = TextF.round6HalfUp
     friedmanTestOf(events)
       .select(col("b"), col("k"),
         r6(col("q") / (col("b") * (col("k") - 1)).cast("double")).as("w"))
@@ -1233,7 +1232,6 @@ object Robust {
     val d1 = """(CAST(sw21 AS DOUBLE)
         | - CAST(sw1 AS DOUBLE) * CAST(sw1 AS DOUBLE) / CAST(n1 AS DOUBLE))
         | / (CAST(h1 AS DOUBLE) * CAST(h1 - 1 AS DOUBLE))""".stripMargin
-    val r4: Column => Column = TextF.round4HalfUp
     wide.select(col("event_type"), col("n0"), col("n1"),
         r4(expr("CAST(ts0 AS DOUBLE) / CAST(h0 AS DOUBLE) / 1e6"))
           .as("tmean0"),
@@ -1279,7 +1277,6 @@ object Robust {
         sum(col("c").cast(Dec)).as("s1"),
         sum(expr(s"CAST(c AS $Dec) * c")).as("s2"))
       .filter(col("t_days") > 1)
-    val r4: Column => Column = TextF.round4HalfUp
     val disp = """((CAST(s2 AS DOUBLE)
         | - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(t_days AS DOUBLE))
         | / CAST(t_days - 1 AS DOUBLE))
@@ -1520,7 +1517,6 @@ object Robust {
     * z chains — rides bounded frames. */
   def dunnPosthocOf(events: DataFrame): DataFrame = {
     val agg = threeArmRankSums(events)
-    val r6: Column => Column = TextF.round6HalfUp
     val r4: Column => Column = TextF.round4HalfUp
     // 3-pair fan-out on the ≤|types| frame: (a, b) ∈ {01, 02, 12}
     val pairs = agg
@@ -1614,7 +1610,6 @@ object Robust {
       // single-task window is FINE here: the |d| grid is bounded by
       // the calendar (≤ days rows), never fact-scale
       .withColumn("below", sum("t").over(cumW) - col("t"))
-    val r6: Column => Column = TextF.round6HalfUp
     grid.agg(
         sum("t").as("n"),
         sum(expr(s"CAST(np AS $Dec) * (2 * below + t + 1)")).as("w2"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
+import graft.functions.TextF.{round4HalfUp => r4}
 import graft.sources.Tables
 import Behavior.Dec
 
@@ -79,7 +80,6 @@ object TextAnalysis {
       .select(col("n"), col("mean_d"), col("sd_d"),
         (col("mean_d") - lit(1.96) * col("sd_d")).as("lo"),
         (col("mean_d") + lit(1.96) * col("sd_d")).as("hi"))
-    val r4: Column => Column = TextF.round4HalfUp
     d.crossJoin(broadcast(lim)) // 1 row by construction
       .agg(max("n").as("n_docs"), max("mean_d").as("m"),
         max("sd_d").as("s"), max("lo").as("l"), max("hi").as("h"),

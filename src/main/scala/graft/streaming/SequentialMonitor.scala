@@ -27,13 +27,10 @@ package graft.streaming
   *     events inside the watermark (the bug StreamingSpec caught on
   *     the EWMA-family monitor before this contract existed).
   *  4. '''The day clock and the grids.''' A day is [[DayMs]] of
-  *     event time (UTC epoch days, [[epochDay]] / [[epochDayOfMicros]]),
-  *     and a monitor's numbers leave it on the batch family's named
-  *     grids: `Behavior.micro` for values folded as integer micros,
-  *     `TextF.round4HalfUp` / `round6HalfUp` / `microsTo4dp` for the
-  *     rounded outputs, `Behavior.arm2` for an experiment arm. Each is
-  *     the scalar twin of the Column a batch twin rounds through, so
-  *     a stream and its batch twin agree by construction.
+  *     event time ([[epochDay]]). Values fold as `Behavior.micro`
+  *     integers, outputs round through `TextF.round4HalfUp` /
+  *     `round6HalfUp` / `microsTo4dp` and arms come from
+  *     `Behavior.arm2`: the batch twins' grids, as scalar twins.
   *
   * State codecs stay case classes of longs/doubles/flags (constant
   * size per key — product encoders, no Kryo), which is what keeps
@@ -77,15 +74,10 @@ object SequentialMonitor {
     * delay as the additional duration. */
   def dayCloseTs(openDay: Long): Long = (openDay + 1L) * DayMs - 1L
 
-  /** Contract leg 4: one day of event time, in milliseconds. */
+  /** Contract leg 4: one day of event time in ms and in µs, and the
+    * UTC epoch day of an event-time ms or µs. */
   val DayMs: Long = 86400000L
-
-  /** [[DayMs]] in microseconds, for µs-grain session sweeps. */
   val DayUs: Long = DayMs * 1000L
-
-  /** The UTC epoch day of an event-time millisecond. */
   def epochDay(ms: Long): Long = Math.floorDiv(ms, DayMs)
-
-  /** The UTC epoch day of an event-time microsecond. */
   def epochDayOfMicros(us: Long): Long = Math.floorDiv(us, DayUs)
 }

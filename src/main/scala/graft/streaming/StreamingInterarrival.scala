@@ -47,10 +47,6 @@ object StreamingInterarrival {
 
   private val Buckets = 45
 
-  /** Allowed lateness: the watermark delay, and how long past a type's
-    * last event its state lives. */
-  private val LatenessMs = 7200000L // 2 hours
-
   /** floor(log2(gap))+1 clamped to the table; gap 0 → bucket 0. */
   private def bucketOf(gapUs: Long): Int =
     if (gapUs <= 0L) 0
@@ -59,7 +55,9 @@ object StreamingInterarrival {
   def snapshots(events: DataFrame): Dataset[Snapshot] = {
     import events.sparkSession.implicits._
     val buckets = Buckets
-    val latenessMs = LatenessMs
+    // 2 hours: the watermark delay, and the state's life past the
+    // type's last event
+    val latenessMs = 7200000L
 
     // Bucket upper bound 2^b µs → seconds on the 4-dp half-up grid.
     def quantile(hist: Array[Long], n: Long, q: Double): Double = {
@@ -77,7 +75,7 @@ object StreamingInterarrival {
         quantile(st.hist, st.nGaps, 0.99))
 
     events.select(col("event_type"), col("ts")).as[Ev]
-      .withWatermark("ts", s"$LatenessMs milliseconds")
+      .withWatermark("ts", s"$latenessMs milliseconds")
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[S, Snapshot](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
